@@ -134,7 +134,7 @@ def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
-def _scan_width_estimate(df: DataFrame, par: int) -> int | None:
+def _scan_width_estimate(df: DataFrame) -> int | None:
     """Cheap scan-width estimate for ``spread_scan`` — the number of
     tasks the frame's scan will run with, WITHOUT converting the plan
     to an RDD (``df.rdd.getNumPartitions()`` plans the whole query a
@@ -215,7 +215,7 @@ def spread_scan(
             )
         except Exception:
             return df
-    width = _scan_width_estimate(df, par)
+    width = _scan_width_estimate(df)
     if width is None:
         if not default_narrow:
             return df

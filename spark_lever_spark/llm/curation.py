@@ -103,7 +103,6 @@ SELECT doc_id, n_grams, n_hits, n_hits > 0 AS contaminated
 FROM hits ORDER BY doc_id
 """,
     category="llm_curation",
-    bench=True,
 )
 def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
@@ -807,7 +806,6 @@ _PII_IP = "([0-9]{1,3}\\.){3}[0-9]{1,3}"
 
 @register(
     "text_pii_redact",
-    bench=True,
     oracle=f"""
 WITH raw AS (
   SELECT doc_id, source,
@@ -1018,7 +1016,6 @@ SELECT source, n_tokens,
 FROM per, ext ORDER BY source
 """,
     category="llm_curation",
-    tags=("defer-window",),
 )
 def temperature_sampling_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based mixture sampling at alpha = 0.5 (the
@@ -1081,7 +1078,6 @@ SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars,
 FROM ranked ORDER BY doc_id
 """,
     category="llm_curation",
-    tags=("defer-window",),
 )
 def quality_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source quality-score normalization: each document's score
@@ -1177,7 +1173,6 @@ SELECT doc_id, CAST(rank_a AS BIGINT) AS rank_a,
 FROM fused ORDER BY rrf_score DESC, doc_id LIMIT 20
 """,
     category="llm_curation",
-    tags=("defer-window",),
 )
 def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. '09, k = 60) of two
@@ -1279,7 +1274,6 @@ GROUP BY a.split, l.n_leaky_users
 ORDER BY split
 """,
     category="llm_curation",
-    tags=("defer-window",),
 )
 def grouped_split_no_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP-consistent train/val/test split + leakage audit — the
@@ -1352,7 +1346,6 @@ FROM g, tot t
 ORDER BY source, lang
 """,
     category="llm_curation",
-    tags=("defer-window",),
 )
 def stratified_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratification balance telemetry — the mix report every corpus
@@ -1412,7 +1405,6 @@ ORDER BY ticket, o_orderkey
 LIMIT 100
 """,
     category="llm_curation",
-    tags=("defer-window",),
 )
 def weighted_sample_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic WEIGHTED sampling without replacement by unit-hash
@@ -1494,7 +1486,6 @@ SELECT stratum, CAST(fold AS BIGINT) AS fold,
 FROM assign GROUP BY stratum, fold ORDER BY stratum, fold
 """,
     category="llm_curation",
-    tags=("defer-window",),
 )
 def stratified_kfold_assignment(
     spark: SparkSession, sf_dir: str
@@ -1554,7 +1545,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_docs,
 FROM flags
 """,
     category="llm_curation",
-    tags=("defer-window",),
 )
 def epoch_sample_overlap_audit(
     spark: SparkSession, sf_dir: str
@@ -1632,7 +1622,6 @@ SELECT g.segment, g.n AS n_orders,
 FROM g CROSS JOIN tot ORDER BY g.segment
 """,
     category="llm_curation",
-    tags=("defer-window",),
 )
 def target_encode_mktsegment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SMOOTHED TARGET ENCODING (m-estimate, m=100) of the customer
@@ -1725,7 +1714,6 @@ def _fs_weight_exprs() -> tuple[str, str]:
 
 @register(
     "fellegi_sunter_weight_table",
-    bench=True,
     oracle=f"""
 WITH d AS (
   SELECT doc_id, source, lang, n_chars,
@@ -1764,7 +1752,6 @@ FROM pat
 ORDER BY weight_milli DESC, f_source, f_nchars, f_tokband, f_md5char
 """,
     category="llm_curation",
-    tags=("defer-window2",),
 )
 def fellegi_sunter_weight_table(
     spark: SparkSession, sf_dir: str

@@ -327,7 +327,6 @@ GROUP BY md5(text)
 ORDER BY keep_id
 """,
     category="llm_dedup",
-    bench=True,
 )
 def dedup_exact_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on md5 content fingerprint — shuffles digests, not text."""
@@ -698,7 +697,6 @@ ORDER BY id_a, id_b
     "dedup_minhash_lsh_tuned",
     oracle=_TUNED_LSH_SQL,
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def dedup_minhash_lsh_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs under the ADAPTIVE banding chosen by
@@ -1076,7 +1074,6 @@ _PARA_N = 16  # tokens per "paragraph" chunk
 
 @register(
     "dedup_paragraph_rebuild",
-    bench=True,
     oracle=f"""
 WITH base AS (
   SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -1177,7 +1174,6 @@ def dedup_paragraph_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_shingle_containment",
-    bench=True,
     oracle="""
 WITH tok AS (
   SELECT doc_id, lang,
@@ -1359,7 +1355,6 @@ FROM clusters c JOIN pick k ON k.p_name = c.p_name
 ORDER BY c.golden_id
 """,
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def golden_record_survivorship(
     spark: SparkSession, sf_dir: str
@@ -1454,7 +1449,6 @@ SELECT tp, fp, fn,
 FROM conf
 """,
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def lsh_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline OBSERVABILITY for approximate dedup: the confusion
@@ -1581,7 +1575,6 @@ SELECT est_bucket,
 FROM pairs GROUP BY est_bucket ORDER BY est_bucket
 """,
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def lsh_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CALIBRATION (reliability) curve for the MinHash estimator: for
@@ -1701,7 +1694,6 @@ SELECT n AS n_docs, n11, n10, n01, n00,
 FROM cells
 """,
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def cohens_kappa_dedup_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COHEN'S KAPPA between two near-dup detection methods — does
@@ -1878,7 +1870,6 @@ FROM (SELECT max(n) AS n FROM ranked) r
 CROSS JOIN sums s CROSS JOIN truth t
 """,
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def blocking_quality_sorted_neighborhood(
     spark: SparkSession, sf_dir: str

@@ -84,7 +84,6 @@ def cell_centroids(emb: DataFrame, cell_col: str = "label") -> DataFrame:
 
 @register(
     "ann_ivf",
-    bench=True,
     # The cell structure is the label column, so the whole IVF search —
     # centroids, probe selection, in-cell exact top-k — is reproducible
     # in SQL; recall vs brute force additionally in tests/test_llm_ann.py.
@@ -530,7 +529,6 @@ SELECT vec_id, label, dot_q FROM dots
 ORDER BY dot_q DESC, vec_id LIMIT 10
 """,
     category="llm_similarity",
-    tags=("defer-window",),
 )
 def ann_int8_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k retrieval over INT8-quantized embeddings — the layout a
@@ -631,7 +629,6 @@ SELECT vec_id, bench_id, dot_q, score, contaminated
 FROM scored WHERE rn = 1 ORDER BY vec_id
 """,
     category="llm_similarity",
-    tags=("defer-window",),
 )
 def embedding_decontaminate_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination in EMBEDDING space: every corpus
@@ -866,7 +863,6 @@ SELECT k, inertia, n_points FROM (
 ) ORDER BY k
 """,
     category="llm_similarity",
-    tags=("defer-window",),
 )
 def kmeans_inertia_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-MEANS model-selection ELBOW curve — within-cluster inertia at
@@ -943,7 +939,6 @@ def kmeans_inertia_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mutual_nn_int8_ivf",
-    bench=True,
     oracle="""
 WITH
 """ + _GLOBAL_INT8_CTES + """,
@@ -1000,7 +995,6 @@ WHERE m1.va < m1.vb
 ORDER BY vec_a
 """,
     category="llm_similarity",
-    tags=("defer-window",),
 )
 def mutual_nn_int8_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MUTUAL (reciprocal) nearest neighbors over int8 embeddings with
@@ -1135,7 +1129,6 @@ def mutual_nn_int8_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_pq_adc_topk",
-    bench=True,
     oracle="""
 WITH
 """ + _GLOBAL_INT8_CTES + """,
@@ -1189,7 +1182,6 @@ SELECT * FROM (
 ) WHERE rnk <= 20 ORDER BY rnk
 """,
     category="llm_similarity",
-    tags=("defer-window",),
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCT-QUANTIZATION ANN with ASYMMETRIC DISTANCE COMPUTATION
@@ -1289,7 +1281,6 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_top_pc_power_iteration",
-    bench=True,
     oracle="""
 WITH
 """ + _GLOBAL_INT8_CTES + """,
@@ -1342,7 +1333,6 @@ FROM v3 CROSS JOIN ray CROSS JOIN den
 ORDER BY dim
 """,
     category="llm_embeddings",
-    tags=("defer-window",),
 )
 def embedding_top_pc_power_iteration(
     spark: SparkSession, sf_dir: str
@@ -1531,7 +1521,6 @@ SELECT dup AS dup_id, CAST(min(ca) AS BIGINT) AS canonical_id,
 FROM pr GROUP BY dup ORDER BY dup_id
 """,
     category="llm_dedup",
-    tags=("defer-window2",),
 )
 def semdedup_int8_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023 — SEMANTIC deduplication by
@@ -1654,7 +1643,6 @@ def semdedup_int8_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lof_outliers_int8_cells",
-    bench=True,
     oracle="""
 WITH
 """ + _GLOBAL_INT8_CTES + """,
@@ -1734,7 +1722,6 @@ FROM lof
 ORDER BY lof_milli DESC, vec_id LIMIT 20
 """,
     category="llm_similarity",
-    tags=("defer-window2",),
 )
 def lof_outliers_int8_cells(
     spark: SparkSession, sf_dir: str

@@ -478,7 +478,6 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "triangle_count_copurchase",
-    bench=True,
     oracle="""
 WITH items AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -591,7 +590,6 @@ GROUP BY lbl ORDER BY size DESC, community
 
 @register(
     "lpa_communities_copurchase",
-    bench=True,
     oracle=_lpa_oracle(),
     category="llm_dedup",
 )
@@ -1199,10 +1197,8 @@ r0 AS MATERIALIZED (
 
 @register(
     "pagerank_copurchase",
-    bench=True,
     oracle=_pagerank_oracle(),
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the co-purchase part graph — the fifth graph
@@ -1337,8 +1333,6 @@ SELECT component,
 FROM ranked GROUP BY component ORDER BY component
 """,
     category="llm_dedup",
-    bench=True,  # v2.4 gate (round 8) — heaviest unbenched dedup path
-    tags=("defer-window",),
 )
 def dedup_cluster_quality_election(
     spark: SparkSession, sf_dir: str
@@ -1366,11 +1360,11 @@ def dedup_cluster_quality_election(
     decision + banding + CC + election in SQL, so the hash certifies
     the tuned pipeline end-to-end.
 
-    Phase boundaries are factored (`_election_candidate_pairs` /
-    `_election_from_components`) so bench.py can time candidate-gen,
-    CC and election in isolation against the per-phase gates frozen in
-    BASELINE.md v3.4 (the r14 round-over-round drift crossed the 1.1×
-    bar the v3.0 note set, triggering the documented phase split)."""
+    Candidate generation and election are separate helpers
+    (`_election_candidate_pairs` / `_election_from_components`) so the
+    LSH signature persist taken during candidate generation can be
+    released between the phases, once `connected_components` has
+    materialized its edge input."""
     rel: list = []
     pairs = _election_candidate_pairs(spark, sf_dir, releases=rel)
     comp = connected_components(pairs, src="id_a", dst="id_b")
@@ -1434,51 +1428,8 @@ def _election_from_components(
     )
 
 
-def election_phase_timings(
-    spark: SparkSession, sf_dir: str
-) -> dict[str, float]:
-    """Time the election query's three phases in ISOLATION (BASELINE.md
-    v3.4 phase gates): each phase boundary is persisted and counted so
-    a phase's wall-clock excludes its upstream — this is what makes
-    "host drift" vs "plan regression" decidable per-phase when the
-    end-to-end number moves (the r12-r14 reads could not attribute the
-    1.2× drift to any one stage).  Returns phase seconds + the
-    surviving candidate-pair count (the cost driver — a pair-count
-    change means the tuner or corpus moved, not the plan)."""
-    import time as _time
-
-    rel: list = []
-    t0 = _time.perf_counter()
-    pairs = _election_candidate_pairs(spark, sf_dir, releases=rel).persist()
-    n_pairs = pairs.count()
-    # the pair table is pinned by the persist+count above, so the LSH
-    # signature persist releases before the CC phase is timed
-    for cached in rel:
-        cached.unpersist()
-    t_cand = _time.perf_counter() - t0
-
-    t0 = _time.perf_counter()
-    comp = connected_components(pairs, src="id_a", dst="id_b").persist()
-    comp.count()
-    t_cc = _time.perf_counter() - t0
-
-    t0 = _time.perf_counter()
-    _election_from_components(spark, sf_dir, comp).collect()
-    t_el = _time.perf_counter() - t0
-
-    pairs.unpersist()
-    comp.unpersist()
-    return {
-        "candidates_sec": round(t_cand, 3),
-        "cc_sec": round(t_cc, 3),
-        "election_sec": round(t_el, 3),
-        "n_candidate_pairs": n_pairs,
-    }
-
-
 @register(
     "bfs_hops_copurchase",
-    bench=True,
     oracle="""
 WITH RECURSIVE items AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -1709,7 +1660,6 @@ FROM hist h CROSS JOIN tot t
 ORDER BY h.degree
 """,
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the co-purchase graph with the
@@ -1786,7 +1736,6 @@ SELECT n,
 FROM m
 """,
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def degree_assortativity_copurchase(
     spark: SparkSession, sf_dir: str
@@ -1886,7 +1835,6 @@ FROM comp c JOIN names n ON n.nid = c.node
 GROUP BY c.component ORDER BY c.component
 """,
     category="llm_dedup",
-    tags=("defer-window",),
 )
 def entity_resolution_clusters(
     spark: SparkSession, sf_dir: str
@@ -1994,7 +1942,6 @@ FROM scored
 ORDER BY cn DESC, jaccard_ppm DESC, a, b LIMIT 20
 """,
     category="llm_graph",
-    tags=("defer-window",),
 )
 def link_prediction_common_neighbors(
     spark: SparkSession, sf_dir: str
@@ -2057,7 +2004,6 @@ def link_prediction_common_neighbors(
 
 @register(
     "dbscan_box_clusters_errors",
-    bench=True,
     oracle="""
 WITH RECURSIVE e AS (
   SELECT event_id, ts, value FROM events WHERE event_type = 'error'
@@ -2100,7 +2046,6 @@ FROM (
 GROUP BY cluster_id ORDER BY cluster_id
 """,
     category="llm_graph",
-    tags=("defer-window",),
 )
 def dbscan_box_clusters_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN density clustering (Ester et al. 1996) of error events in
@@ -2226,7 +2171,6 @@ def dbscan_box_clusters_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "edge_triangle_support_copurchase",
-    bench=True,
     oracle="""
 WITH items AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -2257,7 +2201,6 @@ FROM e LEFT JOIN sup ON sup.pa = e.pa AND sup.pb = e.pb
 ORDER BY e.pa, e.pb
 """,
     category="llm_graph",
-    tags=("defer-window",),
 )
 def edge_triangle_support_copurchase(
     spark: SparkSession, sf_dir: str
@@ -2357,7 +2300,6 @@ SELECT m.m AS n_edges, dd.nc AS n_communities, intra.li AS intra_edges,
 FROM m CROSS JOIN intra CROSS JOIN dd
 """,
     category="llm_graph",
-    tags=("defer-window",),
 )
 def modularity_brand_partition_copurchase(
     spark: SparkSession, sf_dir: str
@@ -2426,7 +2368,6 @@ def modularity_brand_partition_copurchase(
 
 @register(
     "link_prediction_resource_allocation",
-    bench=True,
     oracle="""
 WITH items AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -2460,7 +2401,6 @@ FROM open_w
 ORDER BY ra_micro DESC, cn DESC, a, b LIMIT 20
 """,
     category="llm_graph",
-    tags=("defer-window",),
 )
 def link_prediction_resource_allocation(
     spark: SparkSession, sf_dir: str
@@ -2517,7 +2457,6 @@ def link_prediction_resource_allocation(
 
 @register(
     "harmonic_closeness_sampled_bfs",
-    bench=True,
     oracle="""
 WITH RECURSIVE items AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -2548,7 +2487,6 @@ SELECT s AS seed,
 FROM dist GROUP BY s ORDER BY seed
 """,
     category="llm_graph",
-    tags=("defer-window",),
 )
 def harmonic_closeness_sampled_bfs(
     spark: SparkSession, sf_dir: str
@@ -2692,10 +2630,8 @@ r0 AS MATERIALIZED (
 
 @register(
     "personalized_pagerank_copurchase",
-    bench=True,
     oracle=_ppr_oracle(),
     category="llm_graph",
-    tags=("defer-window2",),
 )
 def personalized_pagerank_copurchase(
     spark: SparkSession, sf_dir: str
@@ -2850,10 +2786,8 @@ ORDER BY kind, score_micro DESC, node"""
 
 @register(
     "hits_hubs_authorities_purchases",
-    bench=True,
     oracle=_hits_oracle(),
     category="llm_graph",
-    tags=("defer-window2",),
 )
 def hits_hubs_authorities_purchases(
     spark: SparkSession, sf_dir: str

@@ -566,7 +566,6 @@ SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
 FROM px ORDER BY doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window",),
 )
 def multimodal_bmp_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second REAL image format next to NetPBM: 24-bit uncompressed
@@ -678,7 +677,6 @@ SELECT doc_id, CAST(8000 AS INT) AS sample_rate, CAST(cnt AS INT) AS n_samples,
 FROM s ORDER BY doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window",),
 )
 def multimodal_au_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second REAL audio format next to RIFF/WAVE: Sun/NeXT .au, whose
@@ -791,7 +789,6 @@ SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
 FROM px ORDER BY doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window",),
 )
 def multimodal_ppm_rgb_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL COLOR image decode (the 3-channel upgrade over
@@ -906,7 +903,6 @@ FROM n LEFT JOIN agg a ON a.doc_id = n.doc_id
 ORDER BY n.doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window",),
 )
 def audio_silence_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Silence-run detection over REAL decoded PCM (the curation
@@ -1008,7 +1004,6 @@ SELECT doc_id, CAST(pw AS INT) AS pool_w, CAST(ph AS INT) AS pool_h,
 FROM pooled GROUP BY doc_id, pw, ph ORDER BY doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window",),
 )
 def image_mean_pool_2x(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image RESIZE (2x2 mean pooling, odd edges cropped) over
@@ -1097,7 +1092,6 @@ SELECT doc_id, CAST(bin AS BIGINT) AS bin,
 FROM px GROUP BY doc_id, bin ORDER BY doc_id, bin
 """,
     category="llm_multimodal",
-    tags=("defer-window2",),
 )
 def multimodal_pgm_histogram(
     spark: SparkSession, sf_dir: str
@@ -1210,7 +1204,6 @@ FROM sq JOIN zc ON zc.doc_id = sq.doc_id
 ORDER BY sq.doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window2",),
 )
 def multimodal_wav_rms_energy(
     spark: SparkSession, sf_dir: str

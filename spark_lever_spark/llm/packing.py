@@ -164,7 +164,6 @@ def pack_documents(
 
 @register(
     "pack_documents_2048",
-    bench=True,
     # bin IDS depend on partitioning, but the packing INVARIANTS do
     # not — so the hash-checked output is the invariant summary (the
     # oracle recomputes doc/token totals; a packer bug flips a boolean
@@ -223,7 +222,6 @@ _CONCAT_SEQ = 2048  # tokens per training sequence (incl. 1 EOD/doc)
 
 @register(
     "pack_concat_2048",
-    bench=True,
     oracle=f"""
 WITH d AS (
   SELECT source, doc_id,

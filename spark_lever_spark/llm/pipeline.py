@@ -74,7 +74,6 @@ GROUP BY lang, source
 ORDER BY lang, source
 """,
     category="llm_pipeline",
-    bench=True,
 )
 def pipeline_quality_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """quality gate -> dedup-keep-first -> per-(lang, source) corpus

@@ -43,7 +43,6 @@ _DSIR_BUCKETS = 256  # hashed bigram feature space (DSIR uses 10k; the
 
 @register(
     "dsir_importance_weights",
-    bench=True,
     oracle=f"""
 WITH base AS (
   SELECT doc_id, lang, string_split(text, ' ') AS toks
@@ -212,7 +211,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_boilerplate_strip",
-    bench=True,
     oracle=f"""
 WITH base AS (
   SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -423,8 +421,6 @@ s{r} AS MATERIALIZED (
     "bpe_learn_merges",
     oracle=_bpe_oracle(),
     category="llm_text",
-    bench=True,  # v2.4 gate (round 8) — heaviest unbenched text path
-    tags=("defer-window",),
 )
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE vocabulary learning (Sennrich et al. 2016) —
@@ -533,7 +529,6 @@ FROM documents d JOIN hits h ON h.doc_id = d.doc_id
 ORDER BY d.doc_id
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def text_boolean_and_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive boolean retrieval over an inverted index: documents
@@ -633,7 +628,6 @@ GROUP BY d.doc_id ORDER BY d.doc_id
     "bpe_apply_encode",
     oracle=_bpe_apply_oracle(),
     category="llm_text",
-    tags=("defer-window",),
 )
 def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKENIZER APPLICATION — the companion to bpe_learn_merges'

@@ -84,7 +84,6 @@ ORDER BY cos_sim DESC, vec_id
 LIMIT 10
 """,
     category="llm_similarity",
-    bench=True,
 )
 def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 neighbors of vector 0 (exact ANN baseline).
@@ -216,7 +215,6 @@ def hyperplane_signs(nbits: int, dim: int) -> list[list[float]]:
 
 @register(
     "ann_lsh_hyperplane",
-    bench=True,
     # The hyperplane family is md5-parity-derived, so the bucket
     # assignment is fully deterministic and DuckDB can recompute the
     # identical histogram (instr over the hex alphabet = the parity of

@@ -59,7 +59,6 @@ FROM documents
 ORDER BY doc_id
 """,
     category="llm_text",
-    bench=True,
 )
 def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + regex (BPE-proxy) tokens."""
@@ -262,7 +261,6 @@ def _max_run(arr: Column) -> Column:
 
 @register(
     "text_repetition_signals",
-    bench=True,
     oracle="""
 WITH tok AS (
   SELECT doc_id, string_split(text, ' ') AS l FROM documents
@@ -545,7 +543,6 @@ SELECT doc_id,
 FROM m ORDER BY doc_id
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality rule battery (Rae et al. '21 §A1.1, the
@@ -626,7 +623,6 @@ JOIN uni u2 ON u2.w = b.w2, tot t
 ORDER BY pmi_ratio DESC, w1, w2 LIMIT 20
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def collocation_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining: top-20 adjacent-token bigrams by PMI over
@@ -706,7 +702,6 @@ SELECT source,
 FROM wc GROUP BY source ORDER BY source
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def vocab_growth_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source vocabulary statistics: total tokens, distinct types,
@@ -774,7 +769,6 @@ WHERE ts[i] = 'merge' AND ts[i + 1] = 'sort'
 GROUP BY doc_id ORDER BY doc_id
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def text_phrase_search_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phrase retrieval ("merge sort") via a POSITIONAL postings
@@ -843,7 +837,6 @@ FROM r WHERE rk <= 3
 ORDER BY head, rk
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def bigram_next_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Next-token prediction table from a bigram language model: for
@@ -937,7 +930,6 @@ ORDER BY mean_rank, doc_id
 LIMIT 25
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def doc_mean_token_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rarity-based document quality scoring WITHOUT a language model:
@@ -1117,7 +1109,6 @@ FROM cells c JOIN per_actual p ON p.lang_actual = c.lang_actual
 ORDER BY c.lang_actual, c.lang_pred
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def langid_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MODEL-EVALUATION confusion matrix for the stopword language-ID
@@ -1183,7 +1174,6 @@ SELECT source, n_tokens, n_types, n_hapax,
 FROM agg ORDER BY source
 """,
     category="llm_textstats",
-    tags=("defer-window",),
 )
 def yule_k_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """YULE'S characteristic K per corpus source — the classic
@@ -1242,7 +1232,6 @@ SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
 FROM h GROUP BY 1, 2 ORDER BY doc_id, bucket
 """,
     category="llm_textstats",
-    tags=("defer-window",),
 )
 def feature_hash_bow_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HASHING TRICK (Weinberger et al. 2009) — fixed-width
@@ -1318,7 +1307,6 @@ SELECT source, d AS vocab_size, n AS total_tokens, f1, f2,
 FROM m ORDER BY source
 """,
     category="llm_textstats",
-    tags=("defer-window",),
 )
 def vocab_coverage_estimators_by_source(
     spark: SparkSession, sf_dir: str
@@ -1403,7 +1391,6 @@ FROM scored
 ORDER BY fano DESC, w LIMIT 25
 """,
     category="llm_textstats",
-    tags=("defer-window",),
 )
 def token_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKEN BURSTINESS via the FANO FACTOR — var/mean of a token's
@@ -1494,7 +1481,6 @@ SELECT source, n_docs, n_chars_alnum, n_words, n_sentences,
 FROM agg ORDER BY source
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def readability_ari_by_source(
     spark: SparkSession, sf_dir: str
@@ -1593,7 +1579,6 @@ SELECT source, n_docs, n_words, n_sentences, n_vowel_runs,
 FROM agg ORDER BY source
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def flesch_vowel_proxy_by_source(
     spark: SparkSession, sf_dir: str
@@ -1703,7 +1688,6 @@ SELECT b.n AS n_docs, b.s AS sum_diff,
 FROM b
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def bland_altman_token_counters(
     spark: SparkSession, sf_dir: str
@@ -1831,7 +1815,6 @@ FROM scored GROUP BY phrase
 ORDER BY score_micro DESC, phrase LIMIT 20
 """,
     category="llm_text",
-    tags=("defer-window",),
 )
 def rake_keyword_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010 — Rapid Automatic

@@ -61,7 +61,6 @@ ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey
 LIMIT 64
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def take_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """takeSample(withReplacement=false, num=64) (reference
@@ -101,7 +100,6 @@ WHERE o_custkey = 7
 ORDER BY o_orderkey
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def lookup_orders_by_custkey(
     spark: SparkSession, sf_dir: str
@@ -138,7 +136,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
 FROM lineitem
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def count_approx_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """countApprox(timeout, confidence) (reference
@@ -180,7 +177,6 @@ SELECT n, sum_cents,
 FROM s
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def mean_sum_approx_prices(
     spark: SparkSession, sf_dir: str

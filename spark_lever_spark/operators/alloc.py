@@ -117,7 +117,6 @@ FROM ranked
 ORDER BY l_orderkey, l_linenumber
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def prorate_fee_largest_remainder(
     spark: SparkSession, sf_dir: str
@@ -195,7 +194,6 @@ SELECT nation,
 FROM cum GROUP BY nation ORDER BY nation
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def weighted_median_order_value(
     spark: SparkSession, sf_dir: str

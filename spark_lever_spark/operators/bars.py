@@ -24,7 +24,6 @@ from spark_lever_spark.registry import register
 
 @register(
     "ohlc_hourly_bars",
-    bench=True,
     oracle="""
 WITH e AS (
   SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h,
@@ -52,7 +51,6 @@ FROM w GROUP BY event_type, h
 ORDER BY event_type, h
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def ohlc_hourly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC bars per event_type: open/close = first/last value
@@ -125,7 +123,6 @@ SELECT o_orderpriority,
 FROM bd GROUP BY o_orderpriority ORDER BY o_orderpriority
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def ship_latency_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship latency in BUSINESS days (weekends excluded) per
@@ -205,7 +202,6 @@ FROM monthly
 ORDER BY nation, month
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def mom_revenue_growth_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue growth per nation — the

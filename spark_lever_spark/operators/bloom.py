@@ -106,7 +106,6 @@ GROUP BY l_returnflag
 ORDER BY l_returnflag
 """,
     category="joins",
-    bench=True,
 )
 def bloom_semi_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lineitem revenue for urgent orders, with an explicit Bloom

@@ -101,7 +101,6 @@ FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus
 
 @register(
     "merge_apply_cdc_orders",
-    bench=True,
     oracle=f"""
 WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
 batch AS (
@@ -237,7 +236,6 @@ def merge_cdc_sequence_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "matview_incremental_orders_by_status",
-    bench=True,
     oracle=f"""
 WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
 batch AS (
@@ -344,7 +342,6 @@ def matview_incremental_orders_by_status(
 
 @register(
     "backfill_dirty_partitions",
-    bench=True,
     oracle="""
 SELECT event_type, CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
        count(*) AS n,
@@ -499,7 +496,6 @@ SELECT o_orderstatus,
 FROM d GROUP BY o_orderstatus ORDER BY o_orderstatus
 """,
     category="cdc",
-    tags=("defer-window",),
 )
 def orders_integrity_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent per-group table fingerprint — the
@@ -583,7 +579,6 @@ SELECT 'supplier.s_nationkey->nation',
 ORDER BY relationship
 """,
     category="cdc",
-    tags=("defer-window",),
 )
 def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit across the schema's FK graph: for
@@ -658,7 +653,6 @@ FROM state GROUP BY asof_seq, o_orderstatus
 ORDER BY asof_seq, o_orderstatus
 """,
     category="cdc",
-    tags=("defer-window",),
 )
 def cdc_state_asof_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME TRAVEL over a change log: reconstruct the table state AS OF
@@ -757,7 +751,6 @@ JOIN nation n ON n.n_nationkey = c.c_nationkey
 GROUP BY n.n_name ORDER BY n.n_name
 """,
     category="cdc",
-    tags=("defer-window",),
 )
 def matview_join_ivm_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of a JOIN view — revenue-by-nation over

@@ -40,7 +40,6 @@ GROUP BY user_id, session_no
 ORDER BY user_id, session_no
 """,
     category="events",
-    bench=True,
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity): lag -> new-session
@@ -841,7 +840,6 @@ def time_in_state_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sessionize_capped_events",
-    bench=True,
     oracle="""
 WITH RECURSIVE e AS (
   SELECT user_id, ts,
@@ -1215,7 +1213,6 @@ FROM w WHERE event_type = 'purchase'
 GROUP BY 1 ORDER BY channel
 """,
     category="events",
-    tags=("defer-window",),
 )
 def attribution_last_touch_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch marketing attribution: each purchase credits the
@@ -1295,7 +1292,6 @@ FROM seqs s CROSS JOIN pats p
 GROUP BY p.pattern ORDER BY p.pattern
 """,
     category="events",
-    tags=("defer-window",),
 )
 def funnel_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATCH_RECOGNIZE-style sequence-pattern funnels: each user's
@@ -1403,7 +1399,6 @@ SELECT purchase_id, user_id, touch_id, CAST(pos AS BIGINT) AS pos,
 FROM credit ORDER BY purchase_id, pos
 """,
     category="events",
-    tags=("defer-window",),
 )
 def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     """POSITION-BASED (U-shaped) multi-touch attribution — the
@@ -1499,7 +1494,6 @@ SELECT day, n, x,
 FROM agg ORDER BY day
 """,
     category="events",
-    tags=("defer-window",),
 )
 def wilson_ci_conversion_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily click->purchase conversion rate with the WILSON 95 %
@@ -1591,7 +1585,6 @@ FROM trigrams
 ORDER BY from_1, from_2, to_type
 """,
     category="events",
-    tags=("defer-window",),
 )
 def markov_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SECOND-order Markov transition matrix: the state is the last
@@ -1671,7 +1664,6 @@ SELECT CAST(max(n) AS BIGINT) AS n_converted,
 FROM r
 """,
     category="events",
-    tags=("defer-window",),
 )
 def time_to_convert_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact conversion-delay quantiles: per user, the gap between
@@ -1781,7 +1773,6 @@ SELECT purchase_id, user_id, touch_id, CAST(pos AS BIGINT) AS pos,
 FROM ranked ORDER BY purchase_id, pos
 """,
     category="events",
-    tags=("defer-window",),
 )
 def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-DECAY multi-touch attribution — the third classic credit
@@ -1865,7 +1856,6 @@ SELECT user_id, n_events, n_types,
 FROM per_user ORDER BY user_id
 """,
     category="events",
-    tags=("defer-window",),
 )
 def event_type_diversity_impurity(
     spark: SparkSession, sf_dir: str
@@ -1974,7 +1964,6 @@ SELECT n1, x1, n2, x2,
 FROM agg
 """,
     category="events",
-    tags=("defer-window",),
 )
 def newcombe_diff_ci_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B difference-of-proportions CI by NEWCOMBE's hybrid score
@@ -2062,7 +2051,6 @@ ORDER BY n_sessions DESC, pattern
 LIMIT 50
 """,
     category="events",
-    tags=("defer-window",),
 )
 def session_path_rle_patterns(
     spark: SparkSession, sf_dir: str
@@ -2176,7 +2164,6 @@ FROM monthly m LEFT JOIN churn c ON c.mi = m.mi
 ORDER BY m.mi
 """,
     category="events",
-    tags=("defer-window",),
 )
 def growth_accounting_monthly(
     spark: SparkSession, sf_dir: str
@@ -2304,7 +2291,6 @@ FROM firsts CROSS JOIN base b
 GROUP BY b.n_clicks
 """,
     category="events",
-    tags=("defer-window",),
 )
 def conversion_window_sensitivity(
     spark: SparkSession, sf_dir: str
@@ -2396,7 +2382,6 @@ SELECT CAST(x AS BIGINT) AS x, n_events, n_errors,
 FROM win ORDER BY x
 """,
     category="events",
-    tags=("defer-window",),
 )
 def slo_burn_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SLO ERROR-BUDGET BURN RATE with multi-window paging (the SRE
@@ -2512,7 +2497,6 @@ FROM arms a CROSS JOIN theta t
 ORDER BY a.arm
 """,
     category="events",
-    tags=("defer-window",),
 )
 def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance reduction (Deng et al. WSDM'13) — the
@@ -2663,7 +2647,6 @@ SELECT n0, n1, s_pre0, s_post0, s_pre1, s_post1,
 FROM cells
 """,
     category="events",
-    tags=("defer-window",),
 )
 def diff_in_diff_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIFFERENCE-IN-DIFFERENCES — the quasi-experimental workhorse
@@ -2772,7 +2755,6 @@ SELECT n_up, n_down, n_tie,
 FROM cells
 """,
     category="events",
-    tags=("defer-window",),
 )
 def mcnemar_paired_conversion(
     spark: SparkSession, sf_dir: str
@@ -2878,7 +2860,6 @@ SELECT bucket, n_risk, n_events, n_censored,
 FROM risk ORDER BY bucket
 """,
     category="events",
-    tags=("defer-window",),
 )
 def km_life_table_customer_tenure(
     spark: SparkSession, sf_dir: str
@@ -2962,7 +2943,6 @@ SELECT from_band, to_band, CAST(count(*) AS BIGINT) AS n_transitions
 FROM moves GROUP BY 1, 2 ORDER BY from_band, to_band
 """,
     category="events",
-    tags=("defer-window",),
 )
 def segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer SEGMENT-MIGRATION matrix — month-over-month flows
@@ -3074,7 +3054,6 @@ SELECT n, w2_plus, tie_term,
 FROM s
 """,
     category="events",
-    tags=("defer-window",),
 )
 def wilcoxon_signed_rank_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WILCOXON signed-rank test on PAIRED daily view-vs-click revenue
@@ -3189,7 +3168,6 @@ SELECT event_type, day AS change_day, CAST(au AS BIGINT) AS k_stat
 FROM k WHERE rn = 1 ORDER BY event_type
 """,
     category="events",
-    tags=("defer-window",),
 )
 def pettitt_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PETTITT changepoint test (Pettitt 1979) per event type — the
@@ -3300,7 +3278,6 @@ FROM dau d JOIN wau w ON w.x = d.x JOIN mau m ON m.x = d.x
 ORDER BY day
 """,
     category="events",
-    tags=("defer-window",),
 )
 def dau_wau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT DAU / WAU / MAU and the DAU/MAU 'stickiness' ratio per
@@ -3388,7 +3365,6 @@ SELECT day,
 FROM per_sess GROUP BY day ORDER BY day
 """,
     category="events",
-    tags=("defer-window",),
 )
 def bounce_rate_daily_sessions(
     spark: SparkSession, sf_dir: str
@@ -3477,7 +3453,6 @@ SELECT entry_type, exit_type, n_sessions,
 FROM m ORDER BY entry_type, exit_type
 """,
     category="events",
-    tags=("defer-window",),
 )
 def entry_exit_matrix_sessions(
     spark: SparkSession, sf_dir: str
@@ -3587,7 +3562,6 @@ FROM arrivals a LEFT JOIN occupancy o ON o.day = a.day
 ORDER BY a.day
 """,
     category="events",
-    tags=("defer-window",),
 )
 def littles_law_daily_events(
     spark: SparkSession, sf_dir: str
@@ -3717,7 +3691,6 @@ SELECT bucket, n_risk, n_events, hazard_ppm,
 FROM hz ORDER BY bucket
 """,
     category="events",
-    tags=("defer-window",),
 )
 def nelson_aalen_tenure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NELSON-AALEN cumulative-hazard estimator over customer tenure —
@@ -3824,7 +3797,6 @@ SELECT cj.k_types, dd.n_days, cj.n_succ,
 FROM cj CROSS JOIN dd CROSS JOIN ri
 """,
     category="events",
-    tags=("defer-window",),
 )
 def cochran_q_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COCHRAN'S Q TEST over the day × event-type binary design — 'do
@@ -3962,7 +3934,6 @@ FROM contrib c LEFT JOIN touch t ON t.i = c.i
 GROUP BY c.channel ORDER BY c.channel
 """,
     category="events",
-    tags=("defer-window",),
 )
 def attribution_shapley_channels(
     spark: SparkSession, sf_dir: str
@@ -4189,7 +4160,6 @@ ORDER BY state
     "absorbing_markov_sessions",
     oracle=_absorbing_oracle(),
     category="events",
-    tags=("defer-window2",),
 )
 def absorbing_markov_sessions(
     spark: SparkSession, sf_dir: str
@@ -4296,7 +4266,6 @@ SELECT bucket, n_risk, ev_purchase, ev_error, censored,
 FROM risk ORDER BY bucket
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def competing_risks_daily_events(
     spark: SparkSession, sf_dir: str

@@ -292,7 +292,6 @@ ORDER BY cnt DESC, word
 LIMIT 25
 """,
     category="expressions",
-    bench=True,
 )
 def expr_explode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generate/explode (reference execution/Generate.scala:35, Explode
@@ -921,7 +920,6 @@ JOIN r b ON a.l_orderkey = b.l_orderkey AND b.rn = a.n + 1 - a.rn
 GROUP BY a.l_orderkey ORDER BY a.l_orderkey
 """,
     category="expressions",
-    tags=("defer-window",),
 )
 def hof_reduce_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array aggregation HOF chain — ``aggregate`` (SQL ``reduce``),
@@ -995,7 +993,6 @@ SELECT user_id, event_type, weekday_n, weekend_n,
 FROM g ORDER BY user_id, event_type
 """,
     category="expressions",
-    tags=("defer-window",),
 )
 def map_hof_weekend_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-typed aggregation HOF chain — ``map_from_entries`` ->
@@ -1080,7 +1077,6 @@ SELECT o_orderkey,
 FROM s ORDER BY o_orderkey
 """,
     category="expressions",
-    tags=("defer-window",),
 )
 def luhn_reference_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LUHN check-digit issuance (ISO/IEC 7812 mod-10 — the checksum

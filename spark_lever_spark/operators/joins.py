@@ -33,7 +33,6 @@ GROUP BY o_orderpriority, c_mktsegment
 ORDER BY o_orderpriority, c_mktsegment
 """,
     category="joins",
-    bench=True,
 )
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner equi-join (reference ShuffledHashJoin/BroadcastHashJoin)."""
@@ -190,7 +189,6 @@ GROUP BY r_name, n_name
 ORDER BY r_name, n_name
 """,
     category="joins",
-    bench=True,
 )
 def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit broadcast-hash join (reference BroadcastHashJoin.scala;
@@ -381,7 +379,6 @@ def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "basket_part_pairs_top",
-    bench=True,
     oracle="""
 WITH items AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -473,7 +470,6 @@ SELECT part_a, part_b, part_c, n_orders
 FROM tri ORDER BY n_orders DESC, part_a, part_b, part_c
 """,
     category="joins",
-    tags=("defer-window",),
 )
 def frequent_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent 3-itemsets with A-PRIORI pruning (Agrawal & Srikant
@@ -550,7 +546,6 @@ FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
 GROUP BY o.o_orderstatus ORDER BY o.o_orderstatus
 """,
     category="joins",
-    tags=("defer-window",),
 )
 def hybrid_skew_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID (differential) skew join — the production answer when a
@@ -626,7 +621,6 @@ FROM e a JOIN e b
  AND abs(b.value - a.value) <= 1.0
 """,
     category="joins",
-    tags=("defer-window",),
 )
 def grid_join_value_time_neighbors(
     spark: SparkSession, sf_dir: str
@@ -717,7 +711,6 @@ WHERE NOT EXISTS (
 ORDER BY p_partkey
 """,
     category="joins",
-    tags=("defer-window",),
 )
 def skyline_parts_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline (Pareto-frontier) query: parts not dominated on
@@ -828,7 +821,6 @@ WHERE levenshtein(a.p_name, b.p_name) <= 3
 ORDER BY name_a, name_b
 """,
     category="joins",
-    tags=("defer-window",),
 )
 def fuzzy_join_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy (edit-distance) self-join — the entity-resolution
@@ -887,7 +879,6 @@ WHERE b.o_orderdate >= a.o_orderdate - INTERVAL 7 DAY
 ORDER BY custkey, orderkey_1, orderkey_2
 """,
     category="joins",
-    tags=("defer-window",),
 )
 def duplicate_payment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-payment detection — the classic finance audit: same
@@ -980,7 +971,6 @@ ORDER BY r.n_ab DESC, r.antecedent, r.consequent
 LIMIT 20
 """,
     category="joins",
-    tags=("defer-window",),
 )
 def association_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIRECTIONAL association rules over market baskets — the step
@@ -1089,7 +1079,6 @@ GROUP BY t.tier, o.o_orderpriority
 ORDER BY tier, o_orderpriority
 """,
     category="joins",
-    tags=("defer-window",),
 )
 def tiered_rate_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tiered-rate RANGE-LOOKUP join — the tax-bracket/commission
@@ -1158,7 +1147,6 @@ WHERE levenshtein(a.p_name, b.p_name) <= 4
 ORDER BY name_a, name_b
 """,
     category="joins",
-    tags=("defer-window",),
 )
 def sorted_neighborhood_pairs(
     spark: SparkSession, sf_dir: str

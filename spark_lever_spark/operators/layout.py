@@ -100,7 +100,6 @@ SELECT month, n_rows, min_cents, max_cents,
 FROM part ORDER BY month
 """,
     category="sources",
-    tags=("defer-window",),
 )
 def partition_stats_prune_report(
     spark: SparkSession, sf_dir: str
@@ -195,7 +194,6 @@ def _hilbert_oracle() -> str:
     "layout_hilbert_events",
     oracle=_hilbert_oracle(),
     category="layout",
-    tags=("defer-window2",),
 )
 def layout_hilbert_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HILBERT-CURVE clustering value per event over (user_id,

@@ -42,7 +42,6 @@ WHERE l_quantity > 45 AND l_returnflag = 'R'
 ORDER BY l_orderkey, l_linenumber
 """,
     category="relational",
-    bench=True,
 )
 def scan_project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Project + Filter (reference basicOperators.scala:35,:50).
@@ -155,7 +154,6 @@ GROUP BY l_returnflag
 ORDER BY l_returnflag
 """,
     category="relational",
-    bench=True,
 )
 def agg_stats_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate function surface (reference
@@ -1439,7 +1437,6 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sketch_rolling_distinct_3d",
-    bench=True,
     oracle="""
 WITH du AS (
   SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events
@@ -1508,7 +1505,6 @@ def sketch_rolling_distinct_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sketch_cms_heavy_hitters",
-    bench=True,
     oracle="""
 WITH rows_ AS (SELECT CAST(unnest(range(4)) AS VARCHAR) AS r),
 cells AS (
@@ -1722,7 +1718,6 @@ def sketch_hll_intersection_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "secondary_sort_first_last_delta",
-    bench=True,
     oracle="""
 WITH e AS (
   SELECT user_id, value,
@@ -2380,7 +2375,6 @@ JOIN ex eb ON eb.event_type = p.type_b
 ORDER BY 1, 2
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def sketch_theta_fixed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch distinct counting with a FIXED sampling threshold
@@ -2513,7 +2507,6 @@ SELECT exact_rows, est_rows,
 FROM exact, est
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JOIN-SIZE ESTIMATION from mergeable key histograms — the
@@ -2604,7 +2597,6 @@ FROM best b JOIN tot t ON t.event_type = b.event_type
 WHERE b.rn = 1 ORDER BY b.event_type
 """,
     category="events",
-    tags=("defer-window",),
 )
 def cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point detection on daily event volumes: per type,
@@ -2688,7 +2680,6 @@ FROM v, mm
 GROUP BY 1, 2 ORDER BY bucket
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def histogram_equi_width_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 20-bucket equal-WIDTH histogram of order value: bucket =
@@ -2747,7 +2738,6 @@ SELECT CAST(((rk - 1) * 10) // n AS INT) AS bucket,
 FROM r GROUP BY 1 ORDER BY bucket
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def equal_frequency_buckets_orders(
     spark: SparkSession, sf_dir: str
@@ -2781,7 +2771,6 @@ def equal_frequency_buckets_orders(
 
 @register(
     "mad_outlier_order_values",
-    bench=True,  # v2.6 gate (round 10): two grank passes + broadcast
     oracle="""
 WITH v AS (
   SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS c
@@ -2814,7 +2803,6 @@ SELECT CAST(max(d.m) AS BIGINT) AS median_cents,
 FROM dev d, mad
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def mad_outlier_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier detection via Median Absolute Deviation — the
@@ -2887,7 +2875,6 @@ SELECT o_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
 FROM r WHERE (rk - 1) % 500 = 0 ORDER BY rk
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def systematic_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Systematic (every k-th) sampling on the exact global
@@ -2948,7 +2935,6 @@ SELECT o_orderpriority,
 FROM r GROUP BY o_orderpriority ORDER BY o_orderpriority
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def percentile_disc_order_priority(
     spark: SparkSession, sf_dir: str
@@ -3024,7 +3010,6 @@ FROM events
 ORDER BY month
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def bitmap_rollup_daily_to_monthly(
     spark: SparkSession, sf_dir: str
@@ -3106,7 +3091,6 @@ FROM scored GROUP BY 1, 2, 3
 ORDER BY r_score, f_score, m_score
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation — the marketing-analytics workhorse: every
@@ -3169,7 +3153,6 @@ FROM nation JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name ORDER BY r_name
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def listagg_nations_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered LISTAGG / string_agg — the report-formatting aggregate
@@ -3217,7 +3200,6 @@ base AS (
 SELECT base.n_customers, ni.n_not_in, ne.n_not_exists FROM base, ni, ne
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-valued-logic parity: ``NOT IN`` against a set CONTAINING
@@ -3272,7 +3254,6 @@ GROUP BY v.o_orderpriority
 ORDER BY v.o_orderpriority
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-subquery filter — rows above the GLOBAL average — with
@@ -3314,7 +3295,6 @@ SELECT o_orderpriority,
 FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def multi_distinct_one_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTIPLE count(DISTINCT ...) over different columns in ONE
@@ -3369,7 +3349,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_orders,
 FROM v, cuts
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def winsorize_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorization — the ML-feature-prep clamp: values below the
@@ -3451,7 +3430,6 @@ SELECT n AS n_values,
 FROM picked
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def percentile_cont_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``percentile_cont`` — the INTERPOLATING ordered-set aggregate
@@ -3527,7 +3505,6 @@ FROM gaps WHERE gap_days IS NOT NULL
 GROUP BY 1 ORDER BY gap_bucket_months
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def customer_order_gap_distribution(
     spark: SparkSession, sf_dir: str
@@ -3581,7 +3558,6 @@ FROM per_cust p, tot t
 GROUP BY p.n_orders ORDER BY n_orders
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def repeat_purchase_distribution(
     spark: SparkSession, sf_dir: str
@@ -3629,7 +3605,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
 FROM events
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def id_contiguity_audit_events(
     spark: SparkSession, sf_dir: str
@@ -3683,7 +3658,6 @@ SELECT fd,
 FROM fd GROUP BY fd ORDER BY fd
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def functional_dependency_audit(
     spark: SparkSession, sf_dir: str
@@ -3768,7 +3742,6 @@ SELECT priority, CAST(v_cents AS BIGINT) AS v_cents,
 FROM agg ORDER BY priority, v_cents
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def hypothetical_rank_order_value(
     spark: SparkSession, sf_dir: str
@@ -3852,7 +3825,6 @@ WHERE NOT EXISTS (
 ORDER BY p_partkey
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def relational_division_priorities(
     spark: SparkSession, sf_dir: str
@@ -3922,7 +3894,6 @@ SELECT CAST(SUM(grp_size) AS BIGINT) AS n_rows,
 FROM groups
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def k_anonymity_audit_customers(
     spark: SparkSession, sf_dir: str
@@ -3993,7 +3964,6 @@ FROM bands b CROSS JOIN base
 ORDER BY b.disc_pct
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def discount_response_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISCOUNT RESPONSE CURVE: per discount percentage band, the
@@ -4068,7 +4038,6 @@ ORDER BY CAST(10 * sg + sq * ng AS DOUBLE) / CAST(ng * (10 + n) AS DOUBLE)
 LIMIT 20
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def bayesian_avg_part_quantity(
     spark: SparkSession, sf_dir: str
@@ -4143,7 +4112,6 @@ SELECT n, sx, min_items, max_items,
 FROM m
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def basket_dispersion_index(
     spark: SparkSession, sf_dir: str
@@ -4232,7 +4200,6 @@ UNION ALL SELECT 'nation->region', n_rows, n_orphans FROM n
 ORDER BY link
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def referential_cascade_audit(
     spark: SparkSession, sf_dir: str
@@ -4316,7 +4283,6 @@ SELECT CAST(yyyymm AS BIGINT) AS yyyymm,
 FROM ranked GROUP BY yyyymm ORDER BY yyyymm
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def monthly_concentration_top_decile(
     spark: SparkSession, sf_dir: str
@@ -4410,7 +4376,6 @@ SELECT n,
 FROM m
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def spearman_rank_revenue_orders(
     spark: SparkSession, sf_dir: str
@@ -4504,7 +4469,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_orders,
 FROM j
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def order_total_reconciliation(
     spark: SparkSession, sf_dir: str
@@ -4586,7 +4550,6 @@ SELECT event_type, n,
 FROM m ORDER BY event_type
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def autocorr_lag1_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAG-1 AUTOCORRELATION of daily value per event type — the
@@ -4678,7 +4641,6 @@ SELECT 'lineitem', (SELECT CAST(n AS BIGINT) FROM li),
 ORDER BY tbl
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def erasure_footprint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ERASURE-FOOTPRINT audit (GDPR right-to-be-forgotten planning):
@@ -4747,7 +4709,6 @@ SELECT c.n AS n_rows, c.k AS n_distinct_endings,
 FROM chi c
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def cents_ending_uniformity_audit(
     spark: SparkSession, sf_dir: str
@@ -4839,7 +4800,6 @@ SELECT n0, concordant, discordant, ties_x, ties_y,
 FROM s
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def kendall_tau_monthly_rev_orders(
     spark: SparkSession, sf_dir: str
@@ -4953,7 +4913,6 @@ GROUP BY c_nationkey, n_g
 ORDER BY c_nationkey
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def t_closeness_ordered_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-CLOSENESS audit (Li, Li & Venkatasubramanian 2007) — the
@@ -5055,7 +5014,6 @@ SELECT yyyymm,
 FROM shares GROUP BY yyyymm ORDER BY yyyymm
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def hhi_concentration_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HERFINDAHL–HIRSCHMAN INDEX of monthly revenue across nations —
@@ -5158,7 +5116,6 @@ SELECT n_pos, n_neg,
 FROM agg
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def roc_auc_price_predicts_return(
     spark: SparkSession, sf_dir: str
@@ -5265,7 +5222,6 @@ SELECT abc_class,
 FROM cls GROUP BY abc_class ORDER BY abc_class
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def abc_classification_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC INVENTORY CLASSIFICATION of parts by revenue — the 80/95
@@ -5363,7 +5319,6 @@ SELECT segment, CAST(rn AS BIGINT) AS rnk, o_orderkey,
 FROM top WHERE rn <= 3 ORDER BY segment, rnk
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def mahalanobis_outliers_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTIVARIATE (2-D Mahalanobis) outliers per market segment —
@@ -5530,7 +5485,6 @@ GROUP BY base.priority, base.n_orders, base.s
 ORDER BY base.priority
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def poisson_bootstrap_ci_priority(
     spark: SparkSession, sf_dir: str
@@ -5658,7 +5612,6 @@ SELECT g.decile, g.n AS n_orders, g.np AS n_returned,
 FROM g CROSS JOIN tot ORDER BY g.decile
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def decile_lift_table_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DECILE LIFT / CUMULATIVE-GAINS TABLE for 'order value predicts
@@ -5751,7 +5704,6 @@ SELECT segment, priority, o AS observed,
 FROM marg ORDER BY segment, priority
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def contingency_residuals_segment_priority(
     spark: SparkSession, sf_dir: str
@@ -5847,7 +5799,6 @@ SELECT n1 AS n_building, n2 AS n_machinery,
 FROM t
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def welch_t_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WELCH'S UNEQUAL-VARIANCE t-TEST for mean order value, BUILDING
@@ -5957,7 +5908,6 @@ SELECT segment, max(n) AS n_total,
 FROM kept GROUP BY segment ORDER BY segment
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def trimmed_mean_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10% TRIMMED MEAN of order value per market segment — the
@@ -6055,7 +6005,6 @@ FROM per JOIN m ON m.yyyymm = per.yyyymm
 ORDER BY per.yyyymm, per.n_name
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def zscore_nation_monthly_peers(
     spark: SparkSession, sf_dir: str
@@ -6177,7 +6126,6 @@ SELECT nm.n_nations, nm.m_months, d.sum_d2_x4,
 FROM nm CROSS JOIN d
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def kendall_w_nation_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KENDALL'S W (coefficient of concordance) over the monthly
@@ -6275,7 +6223,6 @@ WHERE (c.cum - p.off + p.j) // p.j
 ORDER BY c.o_orderkey
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def monetary_unit_sampling_orders(
     spark: SparkSession, sf_dir: str
@@ -6376,7 +6323,6 @@ GROUP BY f.priority, f.n, f.q1_cents, f.q2_cents, f.q3_cents,
 ORDER BY f.priority
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def robust_quartile_shape_by_priority(
     spark: SparkSession, sf_dir: str
@@ -6538,7 +6484,6 @@ FROM contrib c CROSS JOIN tot CROSS JOIN h
 ORDER BY c.priority
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def kruskal_wallis_priorities(
     spark: SparkSession, sf_dir: str
@@ -6659,7 +6604,6 @@ SELECT n.n1, n.n2,
 FROM n CROSS JOIN u
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def cramer_von_mises_sources(
     spark: SparkSession, sf_dir: str
@@ -6781,7 +6725,6 @@ FROM eff
 ORDER BY n_name, p_brand
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def shift_share_nation_brandmix(
     spark: SparkSession, sf_dir: str
@@ -6930,7 +6873,6 @@ SELECT n AS n_total, r AS n_returned, swn AS sum_w_n, swr AS sum_w_r,
 FROM s
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def cochran_armitage_trend_returns(
     spark: SparkSession, sf_dir: str
@@ -7031,7 +6973,6 @@ SELECT n.n1, n.n2,
 FROM n CROSS JOIN s
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def cliffs_delta_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLIFF'S DELTA between src0's and src1's document lengths — the
@@ -7122,7 +7063,6 @@ SELECT m AS n_blocks, l AS page_l,
 FROM s
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def page_trend_test_priorities(
     spark: SparkSession, sf_dir: str
@@ -7229,7 +7169,6 @@ SELECT n1, n2,
 FROM w
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def effect_size_cohens_d_segments(
     spark: SparkSession, sf_dir: str
@@ -7347,7 +7286,6 @@ SELECT segment, n_h, sd_milli_cents,
 FROM ranked ORDER BY segment
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def neyman_allocation_segments(
     spark: SparkSession, sf_dir: str
@@ -7504,7 +7442,6 @@ FROM scored s CROSS JOIN n
 GROUP BY n.n1, n.n2, n.nt
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def ansari_bradley_sources(
     spark: SparkSession, sf_dir: str
@@ -7669,7 +7606,6 @@ FROM abc a JOIN xyz x ON x.l_partkey = a.l_partkey
 GROUP BY 1, 2 ORDER BY 1, 2
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def abc_xyz_matrix_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC-XYZ INVENTORY MATRIX — the 9-cell planning grid supply
@@ -7791,7 +7727,6 @@ SELECT segment, priority, n_pop, n_sample,
 FROM w2 ORDER BY segment, priority
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def raking_calibration_segment_priority(
     spark: SparkSession, sf_dir: str
@@ -7916,7 +7851,6 @@ SELECT segment, n_orders, n_above,
 FROM marg ORDER BY segment
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def moods_median_test_segments(
     spark: SparkSession, sf_dir: str
@@ -8015,7 +7949,6 @@ FROM ranked
 GROUP BY 1 ORDER BY decile
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def lorenz_curve_customer_deciles(
     spark: SparkSession, sf_dir: str
@@ -8090,7 +8023,6 @@ SELECT yyyymm,
 FROM per_order GROUP BY yyyymm ORDER BY yyyymm
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def on_time_in_full_monthly(
     spark: SparkSession, sf_dir: str
@@ -8177,7 +8109,6 @@ SELECT bucket_lo,
 FROM bucketed GROUP BY bucket_lo ORDER BY bucket_lo
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def backlog_aging_snapshot(
     spark: SparkSession, sf_dir: str
@@ -8253,7 +8184,6 @@ SELECT p_brand,
 FROM flagged GROUP BY p_brand ORDER BY p_brand
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def slow_moving_parts_by_brand(
     spark: SparkSession, sf_dir: str
@@ -8348,7 +8278,6 @@ SELECT n.n1, n.n2,
 FROM n CROSS JOIN terms
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def anderson_darling_sources(
     spark: SparkSession, sf_dir: str
@@ -8444,7 +8373,6 @@ SELECT CAST(c_nationkey AS INT) AS c_nationkey, c_mktsegment, k_size,
 FROM g ORDER BY c_nationkey, c_mktsegment
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def l_diversity_audit_customers(
     spark: SparkSession, sf_dir: str
@@ -8520,7 +8448,6 @@ WHERE h.h > 0
 ORDER BY d.p_brand
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def eoq_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ECONOMIC ORDER QUANTITY (Harris-Wilson 1913, the square-root
@@ -8611,7 +8538,6 @@ SELECT o_orderpriority, n,
 FROM m ORDER BY o_orderpriority
 """,
     category="relational",
-    tags=("defer-window",),
 )
 def process_capability_cpk_latency(
     spark: SparkSession, sf_dir: str
@@ -8697,7 +8623,6 @@ SELECT kth.k, kth.hk AS kth_hash,
 FROM kth CROSS JOIN tru
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def sketch_kmv_distinct_orders(
     spark: SparkSession, sf_dir: str
@@ -8782,7 +8707,6 @@ GROUP BY s.p_brand, s.n_days, s.q_star
 ORDER BY s.p_brand
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def newsvendor_quantile_brands(
     spark: SparkSession, sf_dir: str
@@ -8898,7 +8822,6 @@ SELECT n, k,
 FROM ss
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def anova_f_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-WAY ANOVA F statistic of order value across priority
@@ -9051,7 +8974,6 @@ SELECT n, k,
 FROM ss
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def brown_forsythe_priorities(
     spark: SparkSession, sf_dir: str
@@ -9146,7 +9068,6 @@ def brown_forsythe_priorities(
 
 @register(
     "decision_stump_returns",
-    bench=True,
     oracle="""
 WITH lab AS (
   SELECT o.o_orderkey,
@@ -9208,7 +9129,6 @@ row0 AS (
 SELECT * FROM row0
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def decision_stump_returns(
     spark: SparkSession, sf_dir: str
@@ -9338,7 +9258,6 @@ def decision_stump_returns(
 
 @register(
     "isotonic_return_rate_by_price",
-    bench=True,
     oracle="""
 WITH lab AS (
   SELECT o.o_orderkey,
@@ -9390,7 +9309,6 @@ FROM cum JOIN iso ON iso.i = cum.b
 ORDER BY bucket
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def isotonic_return_rate_by_price(
     spark: SparkSession, sf_dir: str
@@ -9592,7 +9510,6 @@ FROM r3 JOIN cm2 ON cm2.cm = r3.cm
 ORDER BY n_name, yyyymm
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def median_polish_nation_month(
     spark: SparkSession, sf_dir: str
@@ -9710,7 +9627,6 @@ SELECT n.n1, n.n2,
 FROM n CROSS JOIN area
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def wasserstein_distance_sources(
     spark: SparkSession, sf_dir: str
@@ -9826,7 +9742,6 @@ SELECT n, s AS total_cents,
 FROM tot
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def ge2_inequality_decomposition_nations(
     spark: SparkSession, sf_dir: str

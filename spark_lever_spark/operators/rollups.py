@@ -321,7 +321,6 @@ GROUP BY nation, brand_bucket
 ORDER BY nation, cents DESC, brand_bucket
 """,
     category="rollups",
-    tags=("defer-window",),
 )
 def topn_plus_other_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N-plus-OTHER rollup: per nation, the top-3 part brands by

@@ -100,7 +100,6 @@ SELECT top.x AS outlier_x, top.n, CAST(abs(top.yd) AS BIGINT) AS dev_n,
 FROM top CROSS JOIN ss
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def grubbs_outlier_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRUBBS single-outlier test on daily order revenue — the
@@ -172,7 +171,6 @@ SELECT CAST(max(n) AS BIGINT) AS n_days,
 FROM pairs CROSS JOIN (SELECT max(n) AS n FROM idx)
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def cox_stuart_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COX-STUART trend test on daily order revenue — the sign-test
@@ -233,7 +231,6 @@ SELECT x, v, hh, ll,
 FROM w WHERE cnt = 14 ORDER BY x
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def williams_r_14_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WILLIAMS %R (14-period) over daily order revenue — the
@@ -302,7 +299,6 @@ SELECT x, psum AS pos_flow_cents, nsum AS neg_flow_cents,
 FROM w WHERE nvalid = 14 ORDER BY x
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def mfi_14_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MONEY FLOW INDEX (14-period) over daily order revenue — the
@@ -387,7 +383,6 @@ SELECT mx.n, mz.m,
 FROM mx CROSS JOIN mz
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def variance_ratio_5d_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LO-MACKINLAY VARIANCE RATIO test statistic (q = 5, overlapping
@@ -498,7 +493,6 @@ SELECT lag_k, n, r_micro,
 FROM r ORDER BY lag_k
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LJUNG-BOX portmanteau autocorrelation diagnostic (lags 1..7)
@@ -577,7 +571,6 @@ def ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cci_20_daily",
-    bench=True,
     oracle="""
 WITH
 """ + _DAILY_ORDERS_CTE + """,
@@ -612,7 +605,6 @@ SELECT x, v,
 FROM md ORDER BY x
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def cci_20_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMMODITY CHANNEL INDEX (20-period, Lambert 1980) over daily
@@ -749,7 +741,6 @@ SELECT b.b_months, agg.k AS k_groups,
 FROM b CROSS JOIN agg
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def friedman_test_priorities_monthly(
     spark: SparkSession, sf_dir: str
@@ -835,7 +826,6 @@ SELECT bb.b AS b_months, dsum.k AS k_items,
 FROM bb CROSS JOIN dsum CROSS JOIN dtot
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def cronbach_alpha_priorities_monthly(
     spark: SparkSession, sf_dir: str
@@ -969,7 +959,6 @@ SELECT gn.n AS n_total,
 FROM gn CROSS JOIN jt
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def jonckheere_terpstra_priorities(
     spark: SparkSession, sf_dir: str
@@ -1092,7 +1081,6 @@ FROM hourly CROSS JOIN days CROSS JOIN mu
 ORDER BY hourly.h
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def mm1_queue_metrics_hourly(
     spark: SparkSession, sf_dir: str
@@ -1208,7 +1196,6 @@ SELECT n_buckets, oe_milli, v_micro,
 FROM agg
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def logrank_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO-GROUP LOG-RANK TEST on customer tenure — the standard
@@ -1358,7 +1345,6 @@ SELECT CAST(digit AS BIGINT) AS digit, n, expected_ppm,
 FROM j ORDER BY digit
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def benford_second_digit_audit(
     spark: SparkSession, sf_dir: str
@@ -1454,7 +1440,6 @@ SELECT bucket, n, cum,
 FROM c ORDER BY bucket
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def sketch_log2_histogram_quantiles(
     spark: SparkSession, sf_dir: str
@@ -1512,7 +1497,6 @@ def sketch_log2_histogram_quantiles(
 
 @register(
     "clustering_coefficient_copurchase",
-    bench=True,
     oracle="""
 WITH items AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -1544,7 +1528,6 @@ WHERE deg.d >= 2
 ORDER BY cc_ppm DESC, degree DESC, part LIMIT 20
 """,
     category="llm_graph",
-    tags=("defer-window2",),
 )
 def clustering_coefficient_copurchase(
     spark: SparkSession, sf_dir: str
@@ -1639,7 +1622,6 @@ SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
 FROM g GROUP BY doc_id, w, h ORDER BY doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window2",),
 )
 def multimodal_pgm_sobel_energy(
     spark: SparkSession, sf_dir: str
@@ -1763,7 +1745,6 @@ SELECT n, low_x, high_x,
 FROM pick
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def dixon_q_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIXON'S Q TEST on daily order revenue — the small-sample
@@ -1888,7 +1869,6 @@ SELECT lag_k, n, score_micro,
 FROM scored ORDER BY lag_k
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def dominant_cycle_acf_daily(
     spark: SparkSession, sf_dir: str
@@ -2003,7 +1983,6 @@ SELECT d, round(x * 1000000) / 1000000 AS daily_value,
 FROM rec ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def keltner_channel_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KELTNER CHANNELS over daily revenue — the EMA-centered,
@@ -2119,7 +2098,6 @@ _LP_N = 16  # tokens per chunk/shingle — cohens_kappa_dedup_methods' unit
 
 @register(
     "lincoln_petersen_dedup_estimate",
-    bench=True,
     oracle=f"""
 WITH base AS (
   SELECT doc_id, string_split(text, ' ') AS ptoks,
@@ -2181,7 +2159,6 @@ SELECT n_docs, n1, n2, m_both, union_flagged,
 FROM cells
 """,
     category="llm_dedup",
-    tags=("defer-window2",),
 )
 def lincoln_petersen_dedup_estimate(
     spark: SparkSession, sf_dir: str

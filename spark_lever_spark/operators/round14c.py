@@ -119,7 +119,6 @@ SELECT n, s AS sum_ret_cents, n_down,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def sortino_ratio_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SORTINO RATIO (zero MAR) of daily revenue changes — the
@@ -184,7 +183,6 @@ SELECT n, k, var95 AS var95_cents, ts AS tail_sum_cents, tn AS n_tail,
 FROM t
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def var_cvar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HISTORICAL VaR(95) / CVaR(95) of daily revenue changes — the
@@ -246,7 +244,6 @@ SELECT n, gains AS gains_cents, losses AS losses_cents,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def omega_ratio_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OMEGA RATIO (threshold 0) of daily revenue changes — the
@@ -307,7 +304,6 @@ SELECT n, vn - v1 AS total_gain_cents, mdd AS max_drawdown_cents,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def calmar_ratio_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CALMAR RATIO of the daily revenue level series — total gain
@@ -368,7 +364,6 @@ SELECT w AS n_wins, l AS n_losses,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def kelly_criterion_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KELLY FRACTION of daily revenue changes — the optimal bet
@@ -512,7 +507,6 @@ SELECT n, sp AS sum_port_cents, sm AS sum_mkt_cents,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def beta_information_ratio_daily(
     spark: SparkSession, sf_dir: str
@@ -585,7 +579,6 @@ SELECT n_up, n_down,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def capture_ratios_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UP/DOWN CAPTURE RATIOS of the orders series against the
@@ -682,7 +675,6 @@ SELECT ym, ni AS n_lines, di AS n_returned, phat_ppm, ucl_ppm, lcl_ppm,
 FROM lim ORDER BY ym
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def p_chart_monthly_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p-CHART (attribute control chart) of the monthly lineitem
@@ -778,7 +770,6 @@ SELECT grid.x, grid.c,
 FROM grid, g ORDER BY grid.x
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def c_chart_daily_error_events(
     spark: SparkSession, sf_dir: str
@@ -884,7 +875,6 @@ SELECT x, v, side, zone, rule1, rule2, rule3, rule4
 FROM r WHERE rule1 + rule2 + rule3 + rule4 > 0 ORDER BY x
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def western_electric_rules_daily(
     spark: SparkSession, sf_dir: str
@@ -1030,7 +1020,6 @@ SELECT nation, richness, n,
 FROM m ORDER BY nation
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def ecological_diversity_brands_by_nation(
     spark: SparkSession, sf_dir: str
@@ -1112,7 +1101,6 @@ SELECT n, t AS total_cents, CAST(rsum AS BIGINT) AS recip_sum_pico,
 FROM m
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def atkinson_index_customers(
     spark: SparkSession, sf_dir: str
@@ -1196,7 +1184,6 @@ SELECT n, t AS total_cents, n10, n40,
 FROM parts
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def palma_hoover_customers(
     spark: SparkSession, sf_dir: str
@@ -1296,7 +1283,6 @@ SELECT n_brands, t AS total_cents,
 FROM m
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def cr_concentration_brands(
     spark: SparkSession, sf_dir: str
@@ -1426,7 +1412,6 @@ SELECT n_pos, n_neg, n_scores,
 FROM agg
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def pr_auc_price_predicts_return(
     spark: SparkSession, sf_dir: str
@@ -1530,7 +1515,6 @@ SELECT thr AS threshold_cents, tp, fp, fn, tn,
 FROM conf
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def mcc_youden_price_median(
     spark: SparkSession, sf_dir: str
@@ -1660,7 +1644,6 @@ SELECT agg.n_bands, agg.n_test, tot.n_test_all,
 FROM agg, tot
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def brier_score_band_forecast(
     spark: SparkSession, sf_dir: str
@@ -1762,7 +1745,6 @@ SELECT a, b, c, d,
 FROM conf
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def odds_risk_ratio_building_returns(
     spark: SparkSession, sf_dir: str
@@ -1876,7 +1858,6 @@ SELECT period, ip AS inphase_sum, qd AS quadrature_sum,
 FROM terms ORDER BY period
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def square_wave_periodogram_daily(
     spark: SparkSession, sf_dir: str
@@ -1943,7 +1924,6 @@ def square_wave_periodogram_daily(
 
 @register(
     "sample_entropy_kernel_daily",
-    bench=True,  # v3.3 gate (round 14): new bench shape
     oracle="""
 WITH
 """ + _DAILY_ORDERS_CTE + """,
@@ -1989,7 +1969,6 @@ SELECT n_pairs, b AS template_matches_m2, a AS template_matches_m3,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def sample_entropy_kernel_daily(
     spark: SparkSession, sf_dir: str
@@ -2115,7 +2094,6 @@ SELECT n, CAST(floor(CAST(sp2 AS DOUBLE) * 1000000
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def kpss_level_stat_daily(
     spark: SparkSession, sf_dir: str
@@ -2192,7 +2170,6 @@ SELECT c.pattern, c.cnt,
 FROM c, g ORDER BY c.pattern
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def permutation_pattern_census_daily(
     spark: SparkSession, sf_dir: str
@@ -2271,7 +2248,6 @@ SELECT x, v,
 FROM win WHERE cnt = 20 AND vlag IS NOT NULL ORDER BY x
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def dpo_20_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DETRENDED PRICE OSCILLATOR (20-period) of daily revenue —
@@ -2331,7 +2307,6 @@ SELECT x, su AS up_sum_cents, sd AS down_sum_cents,
 FROM win WHERE cnt = 20 ORDER BY x
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def chande_momentum_20_daily(
     spark: SparkSession, sf_dir: str
@@ -2432,7 +2407,6 @@ FROM club c LEFT JOIN ek e ON e.k = c.k
 ORDER BY c.k
 """,
     category="llm_graph",
-    tags=("defer-window2",),
 )
 def rich_club_coefficient_copurchase(
     spark: SparkSession, sf_dir: str
@@ -2523,7 +2497,6 @@ UNION ALL SELECT 3, (SELECT CAST(count(*) AS BIGINT) FROM e3)
 ORDER BY round
 """,
     category="llm_graph",
-    tags=("defer-window2",),
 )
 def ktruss_3_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-TRUSS PEELING of the co-purchase graph — the EDGE analog of
@@ -2598,7 +2571,6 @@ JOIN deg db ON db.u = o.b
 ORDER BY pa_score DESC, part_a, part_b LIMIT 20
 """,
     category="llm_graph",
-    tags=("defer-window2",),
 )
 def link_prediction_pref_attachment(
     spark: SparkSession, sf_dir: str
@@ -2718,7 +2690,6 @@ SELECT source, nb AS n_buckets,
 FROM m ORDER BY source
 """,
     category="llm_text",
-    tags=("defer-window2",),
 )
 def zipf_dyadic_slope_by_source(
     spark: SparkSession, sf_dir: str
@@ -2812,7 +2783,6 @@ SELECT p.sa AS source_a, p.sb AS source_b,
 FROM terms t, pair p
 """,
     category="llm_text",
-    tags=("defer-window2",),
 )
 def hellinger_affinity_sources(
     spark: SparkSession, sf_dir: str
@@ -2888,7 +2858,6 @@ def hellinger_affinity_sources(
 
 @register(
     "bm25_rsj_topk",
-    bench=True,  # v3.3 gate (round 14): new bench shape
     oracle="""
 WITH toks AS (
   SELECT doc_id, unnest(list_filter(
@@ -2938,7 +2907,6 @@ SELECT doc_id, terms_matched, doc_len, score_micro
 FROM scored ORDER BY score_micro DESC, doc_id LIMIT 20
 """,
     category="llm_text",
-    tags=("defer-window2",),
 )
 def bm25_rsj_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 RANKED RETRIEVAL (k₁ = 1.2, b = 0.75, rational RSJ idf)
@@ -3095,7 +3063,6 @@ SELECT n, sw AS sum_weights, sww AS sum_sq_weights,
 FROM m
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def kish_design_effect_segments(
     spark: SparkSession, sf_dir: str
@@ -3152,7 +3119,6 @@ SELECT est.n_sampled, tru.n_all,
 FROM est, tru
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def horvitz_thompson_total_audit(
     spark: SparkSession, sf_dir: str
@@ -3227,7 +3193,6 @@ SELECT grp AS n_groups, theta_ppm,
 FROM m
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def jackknife_ratio_nations(
     spark: SparkSession, sf_dir: str
@@ -3329,7 +3294,6 @@ SELECT n, tp AS turning_points,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def turning_points_test_daily(
     spark: SparkSession, sf_dir: str
@@ -3403,7 +3367,6 @@ SELECT rec.n, rec.n_records, harm.h_micro AS expected_micro,
 FROM rec, harm
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def records_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RECORDS TEST on daily revenue — count upper records (days
@@ -3483,7 +3446,6 @@ SELECT CAST(cnt AS BIGINT) AS n_days,
 FROM fin WHERE rn = (cnt + 1) // 2
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def siegel_repeated_medians_daily(
     spark: SparkSession, sf_dir: str
@@ -3589,7 +3551,6 @@ SELECT m AS n_obs,
 FROM d
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def dickey_fuller_t_daily(
     spark: SparkSession, sf_dir: str
@@ -3674,7 +3635,6 @@ FROM r8, (SELECT unnest([1,2,3,4,5,6,7,8]) AS c)
 ORDER BY servers
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def erlang_b_blocking_hourly(
     spark: SparkSession, sf_dir: str
@@ -3760,7 +3720,6 @@ SELECT doc_id, width, height, m00, m10, m01,
 FROM m ORDER BY doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window2",),
 )
 def multimodal_pgm_centroid_moments(
     spark: SparkSession, sf_dir: str
@@ -3898,7 +3857,6 @@ SELECT doc_id, n_samples, energy, diff_energy,
 FROM m ORDER BY doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window2",),
 )
 def multimodal_wav_diff_energy(
     spark: SparkSession, sf_dir: str
@@ -4025,7 +3983,6 @@ SELECT CAST(label_a AS INT) AS label_a, CAST(label_b AS INT)
 FROM pairs ORDER BY label_a, label_b
 """,
     category="llm_embeddings",
-    tags=("defer-window2",),
 )
 def embedding_centroid_drift_labels(
     spark: SparkSession, sf_dir: str
@@ -4146,7 +4103,6 @@ SELECT rec.d,
 FROM rec, g ORDER BY rec.d
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def ewma_control_chart_daily(
     spark: SparkSession, sf_dir: str
@@ -4292,7 +4248,6 @@ SELECT rev.nation, rev.r AS revenue_cents,
 FROM rev ORDER BY rev.nation
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def dhondt_allocation_nations(
     spark: SparkSession, sf_dir: str
@@ -4415,7 +4370,6 @@ SELECT from_dev, n_cohorts, num AS next_cum_cents,
 FROM lnk ORDER BY from_dev
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def chain_ladder_dev_factors(
     spark: SparkSession, sf_dir: str
@@ -4522,7 +4476,6 @@ SELECT source, n AS n_types, t AS n_tokens,
 FROM m ORDER BY source
 """,
     category="llm_text",
-    tags=("defer-window2",),
 )
 def token_gini_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GINI COEFFICIENT OF TOKEN FREQUENCIES per source — lexical
@@ -4624,7 +4577,6 @@ FROM mom JOIN lagmom ON lagmom.event_type = mom.event_type
 ORDER BY mom.event_type
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def interevent_burstiness_memory_types(
     spark: SparkSession, sf_dir: str
@@ -4743,7 +4695,6 @@ FROM pairs p LEFT JOIN inter i ON i.cur = p.cur
 ORDER BY ym
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def topk_stability_monthly_parts(
     spark: SparkSession, sf_dir: str
@@ -4856,7 +4807,6 @@ SELECT CAST(h.m AS BIGINT) AS m_bits, h.occupied, tru.d AS true_distinct,
 FROM hits h, tru ORDER BY m_bits
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def linear_counting_audit(
     spark: SparkSession, sf_dir: str
@@ -4948,7 +4898,6 @@ SELECT n,
 FROM mom
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def adstock_regression_daily(
     spark: SparkSession, sf_dir: str
@@ -5069,7 +5018,6 @@ SELECT pri, CAST(max(n) AS BIGINT) AS n_orders,
 FROM c GROUP BY pri ORDER BY pri
 """,
     category="udf",
-    tags=("defer-window2",),
 )
 def pandas_grouped_agg_iqr(
     spark: SparkSession, sf_dir: str
@@ -5189,7 +5137,6 @@ SELECT n AS n_days,
 FROM d
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def partial_correlation_daily_events(
     spark: SparkSession, sf_dir: str
@@ -5296,7 +5243,6 @@ SELECT x, rsi_ppm,
 FROM st WHERE cnt2 = 14 ORDER BY x
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def stoch_rsi_14_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STOCHASTIC RSI (14/14, Cutler variant) — the
@@ -5410,7 +5356,6 @@ kst AS (
 SELECT x, kst_ppm FROM kst ORDER BY x
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def kst_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KNOW SURE THING (Pring's KST) on daily revenue — the
@@ -5582,7 +5527,6 @@ SELECT CAST(label AS INT) AS label,
 FROM s GROUP BY label ORDER BY label
 """,
     category="llm_embeddings",
-    tags=("defer-window2",),
 )
 def silhouette_simplified_labels(
     spark: SparkSession, sf_dir: str
@@ -5697,7 +5641,6 @@ SELECT dims.n, dims.k,
 FROM ssw, ssb, dims
 """,
     category="llm_embeddings",
-    tags=("defer-window2",),
 )
 def calinski_harabasz_labels(
     spark: SparkSession, sf_dir: str
@@ -5807,7 +5750,6 @@ SELECT CAST(k AS INT) AS k, n, within,
 FROM cov ORDER BY k
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def chebyshev_coverage_audit(
     spark: SparkSession, sf_dir: str
@@ -5886,7 +5828,6 @@ SELECT n,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def gini_mean_difference_daily(
     spark: SparkSession, sf_dir: str
@@ -5969,7 +5910,6 @@ FROM (
 )
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def drawdown_spells_daily(
     spark: SparkSession, sf_dir: str
@@ -6071,7 +6011,6 @@ SELECT m AS n_obs,
 FROM d
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def arch_lm_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ENGLE'S ARCH LM TEST (lag 1) on daily revenue changes — the
@@ -6171,7 +6110,6 @@ SELECT decile, cyt AS cum_treated_pos, cnt_t AS cum_treated,
 FROM cum ORDER BY decile
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QINI UPLIFT CURVE by score decile — the uplift-model
@@ -6280,7 +6218,6 @@ SELECT CAST(s AS INT) AS direction, CAST(len AS BIGINT) AS run_length,
 FROM runs GROUP BY s, len ORDER BY direction, run_length
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def updown_streak_census_daily(
     spark: SparkSession, sf_dir: str
@@ -6378,7 +6315,6 @@ SELECT bucket, n AS n_risk, d AS n_events,
 FROM km ORDER BY bucket
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def rmst_customer_tenure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESTRICTED MEAN SURVIVAL TIME over customer tenure — the
@@ -6544,7 +6480,6 @@ SELECT pri_a, pri_b, ni, nj,
 FROM pairs ORDER BY pri_a, pri_b
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def dunn_posthoc_priorities(
     spark: SparkSession, sf_dir: str
@@ -6666,7 +6601,6 @@ SELECT ym, h AS high_cents, l AS low_cents, c AS close_cents,
 FROM ohlc ORDER BY ym
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def pivot_points_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLASSIC FLOOR-TRADER PIVOT POINTS per month — the
@@ -6743,7 +6677,6 @@ SELECT n,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def theil_u_naive_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THEIL'S U₁ INEQUALITY COEFFICIENT of the naive (lag-1)
@@ -6798,7 +6731,6 @@ SELECT x, e AS error_cents, cfe AS cum_error_cents,
 FROM run ORDER BY x
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def tracking_signal_naive_daily(
     spark: SparkSession, sf_dir: str
@@ -6900,7 +6832,6 @@ SELECT covariate, nt AS n_treated, nc AS n_control,
 FROM m ORDER BY covariate
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def smd_covariate_balance_building(
     spark: SparkSession, sf_dir: str
@@ -7029,7 +6960,6 @@ SELECT a, b, c, d, rr_ppm,
 FROM rr
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def evalue_building_returns(
     spark: SparkSession, sf_dir: str
@@ -7138,7 +7068,6 @@ SELECT (SELECT min(pa) FROM sym) AS start_vertex,
        (SELECT CAST(count(*) AS BIGINT) FROM dist2) AS n_reached
 """,
     category="llm_graph",
-    tags=("defer-window2",),
 )
 def diameter_double_sweep_copurchase(
     spark: SparkSession, sf_dir: str
@@ -7271,7 +7200,6 @@ SELECT from_type, n_s AS n_transitions, c_max AS modal_count,
 FROM rows_out ORDER BY from_type
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def markov_predictability_event_types(
     spark: SparkSession, sf_dir: str
@@ -7401,7 +7329,6 @@ FROM ssb JOIN tot ON tot.seasonality = ssb.seasonality
 ORDER BY ssb.seasonality
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def seasonal_strength_eta_daily(
     spark: SparkSession, sf_dir: str
@@ -7530,7 +7457,6 @@ FROM q LEFT JOIN hits h ON h.qid = q.qid
 ORDER BY query_id
 """,
     category="llm_similarity",
-    tags=("defer-window2",),
 )
 def matryoshka_prefix_recall(
     spark: SparkSession, sf_dir: str
@@ -7671,7 +7597,6 @@ SELECT d, hi AS high_cents, lo AS low_cents, cl AS close_cents,
 FROM clv ORDER BY d
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def accumulation_distribution_daily(
     spark: SparkSession, sf_dir: str
@@ -7743,7 +7668,6 @@ SELECT d, force_raw AS force_cents_vol,
 FROM win WHERE cnt = 13 ORDER BY d
 """,
     category="events",
-    tags=("defer-window2",),
 )
 def force_index_13_daily(
     spark: SparkSession, sf_dir: str
@@ -7816,7 +7740,6 @@ SELECT cont AS continuations, rev AS reversals,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def cowles_jones_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COWLES-JONES RATIO of daily revenue changes — the original
@@ -7895,7 +7818,6 @@ SELECT n, pmax AS max_partial_sum, pmin AS min_partial_sum,
 FROM m
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def buishand_range_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BUISHAND RANGE TEST for series homogeneity — the hydrology

@@ -123,7 +123,6 @@ FROM m JOIN fin f ON f.source = m.source
 ORDER BY m.source
 """,
     category="llm_text",
-    tags=("defer-window2",),
 )
 def heaps_dyadic_vocab_growth(
     spark: SparkSession, sf_dir: str
@@ -264,7 +263,6 @@ SELECT p.sa AS source_a, p.sb AS source_b,
 FROM terms t, pair p
 """,
     category="llm_text",
-    tags=("defer-window2",),
 )
 def chi_square_homogeneity_sources(
     spark: SparkSession, sf_dir: str
@@ -382,7 +380,6 @@ JOIN card cb ON cb.source = i.source_b
 ORDER BY i.source_a, i.source_b
 """,
     category="llm_dedup",
-    tags=("defer-window2",),
 )
 def source_shingle_overlap_jaccard(
     spark: SparkSession, sf_dir: str
@@ -473,7 +470,6 @@ FROM va LEFT JOIN tr ON tr.shingle = va.shingle
 GROUP BY 1 ORDER BY 1
 """,
     category="llm_curation",
-    tags=("defer-window2",),
 )
 def split_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAIN/VAL N-GRAM COVERAGE — after an 80/20 deterministic
@@ -554,7 +550,6 @@ SELECT source,
 FROM rk GROUP BY 1 ORDER BY 1
 """,
     category="llm_curation",
-    tags=("defer-window2",),
 )
 def source_doc_cap_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-SOURCE DOCUMENT CAP (the RefinedWeb/C4 "no domain may
@@ -622,7 +617,6 @@ LEFT JOIN docs_ct d ON d.t_milli = thr.t_milli
 ORDER BY thr.t_milli
 """,
     category="llm_dedup",
-    tags=("defer-window2",),
 )
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEDUP THRESHOLD SWEEP — the knob-tuning table every dedup

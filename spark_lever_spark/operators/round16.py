@@ -44,7 +44,6 @@ from spark_lever_spark.registry import register
 
 @register(
     "simhash_bit_balance_audit",
-    bench=True,
     oracle="""
 WITH tok AS MATERIALIZED (
   SELECT DISTINCT doc_id, tok
@@ -72,7 +71,6 @@ SELECT CAST(j AS INT) AS bit_idx, n_ones, n_docs,
 FROM perbit ORDER BY bit_idx
 """,
     category="llm_dedup",
-    tags=("defer-window2",),
 )
 def simhash_bit_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HASH-FAMILY HEALTH AUDIT of the 60-bit simhash the dedup family
@@ -175,7 +173,6 @@ c{r} AS (SELECT shingle FROM c{r - 1}
     "greedy_coverage_doc_selection",
     oracle=_greedy_cover_oracle(),
     category="llm_curation",
-    tags=("defer-window2",),
 )
 def greedy_coverage_doc_selection(
     spark: SparkSession, sf_dir: str
@@ -298,7 +295,6 @@ SELECT doc_id, CAST(w * h AS INT) AS n_pixels,
 FROM ranked WHERE rn = 1 ORDER BY doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window2",),
 )
 def multimodal_ppm_color_quantize(
     spark: SparkSession, sf_dir: str
@@ -405,7 +401,6 @@ SELECT doc_id, CAST(ns AS INT) AS n_samples,
 FROM lagd GROUP BY doc_id, ns ORDER BY doc_id
 """,
     category="llm_multimodal",
-    tags=("defer-window2",),
 )
 def multimodal_wav_zero_crossings(
     spark: SparkSession, sf_dir: str
@@ -515,7 +510,6 @@ FROM grid GROUP BY w, c_t, t_all
 ORDER BY total_count DESC, term
 """,
     category="llm_textstats",
-    tags=("defer-window2",),
 )
 def term_dispersion_gries_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TERM DISPERSION (Gries' DP, deviation of proportions) for the
@@ -622,7 +616,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_cells,
 FROM used
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def stratified_ate_priority_returns(
     spark: SparkSession, sf_dir: str
@@ -717,7 +710,6 @@ SELECT brand, n AS n_items,
 FROM b CROSS JOIN g ORDER BY brand
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def eb_shrunk_brand_return_rates(
     spark: SparkSession, sf_dir: str
@@ -789,7 +781,6 @@ SELECT source, total_tokens, vocab, n1, n2,
 FROM m ORDER BY source
 """,
     category="llm_textstats",
-    tags=("defer-window2",),
 )
 def good_turing_unseen_mass_by_source(
     spark: SparkSession, sf_dir: str
@@ -866,7 +857,6 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM days) AS n_days,
 FROM cnt
 """,
     category="relational",
-    tags=("defer-window2",),
 )
 def kendall_tau_daily_error_click(
     spark: SparkSession, sf_dir: str
@@ -966,7 +956,6 @@ SELECT s.n_vertices, CAST(s.s1 // 2 AS BIGINT) AS n_edges, s.s2,
 FROM s CROSS JOIN tri
 """,
     category="llm_graph",
-    tags=("defer-window2",),
 )
 def config_model_triangle_excess_copurchase(
     spark: SparkSession, sf_dir: str

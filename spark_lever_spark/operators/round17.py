@@ -99,7 +99,6 @@ GROUP BY comp.component
 ORDER BY entity_id
 """,
     category="llm_dedup",
-    bench=True,
 )
 def er_cross_source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source fuzzy entity resolution over the document corpus:
@@ -696,7 +695,6 @@ LEFT JOIN mv ON mv.cid = COALESCE(n1.cid, n2.cid)
 ORDER BY cid
 """,
     category="llm_similarity",
-    bench=True,
 )
 def kmeans_lloyd_refine_embeddings(
     spark: SparkSession, sf_dir: str

@@ -142,7 +142,6 @@ def range_join_bucketed(
 
 @register(
     "asof_purchase_last_view",
-    bench=True,
     oracle="""
 WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
            FROM events WHERE event_type = 'purchase'),
@@ -186,7 +185,6 @@ def asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "range_join_views_before_purchase",
-    bench=True,
     oracle="""
 WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
            FROM events WHERE event_type = 'purchase'),
@@ -325,7 +323,6 @@ def resample_hourly_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "scd2_event_type_history",
-    bench=True,
     oracle="""
 WITH ordered AS (
   SELECT user_id, event_type, ts, event_id,
@@ -540,7 +537,6 @@ def interval_union_active_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ewma_daily_event_value",
-    bench=True,
     oracle="""
 WITH RECURSIVE daily AS (
   SELECT event_type, CAST(ts AS DATE) AS day,
@@ -1234,7 +1230,6 @@ SELECT purchase_id, user_id, p_ts, click_id, c_ts,
 FROM cand WHERE rn = 1 ORDER BY purchase_id
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def asof_nearest_event_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAREST-event as-of join: each purchase matched to the closest
@@ -1452,7 +1447,6 @@ FROM b JOIN s ON s.user_id = b.user_id
 ORDER BY user_id, buy_id, sell_id
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def fifo_lot_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIFO lot matching — the inventory/cost-basis allocator: each
@@ -1535,7 +1529,6 @@ SELECT CAST(h AS TIMESTAMP) AS hour,
 FROM spans ORDER BY hour
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def linear_interpolate_hourly_gaps(
     spark: SparkSession, sf_dir: str
@@ -1601,7 +1594,6 @@ def linear_interpolate_hourly_gaps(
 
 @register(
     "interval_max_concurrency_daily",
-    bench=True,  # v2.6 gate (round 10): day-partitioned sweep line
     oracle="""
 WITH iv AS (
   SELECT user_id, date_trunc('day', ts) AS d,
@@ -1635,7 +1627,6 @@ SELECT CAST(d AS TIMESTAMP) AS day, CAST(conc AS BIGINT) AS max_concurrent,
 FROM best WHERE rn = 1 ORDER BY day
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def interval_max_concurrency_daily(
     spark: SparkSession, sf_dir: str
@@ -1713,7 +1704,6 @@ FROM spine s LEFT JOIN active a ON a.day = s.day
 GROUP BY 1 ORDER BY month
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def missing_days_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-spine densification — the gap AUDIT every pipeline
@@ -2050,7 +2040,6 @@ WHERE least(a.e_a, b.e_b) > greatest(a.s_a, b.s_b)
 ORDER BY a_id, b_id
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def interval_overlap_join_bursts(
     spark: SparkSession, sf_dir: str
@@ -2146,7 +2135,6 @@ FROM m WHERE n >= 10
 ORDER BY priority, x
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def rolling_ols_trend_14d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLING 14-calendar-day OLS trend per order priority — the
@@ -2240,7 +2228,6 @@ SELECT event_type,
 FROM per_event GROUP BY event_type ORDER BY event_type
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def business_seconds_click_bursts(
     spark: SparkSession, sf_dir: str
@@ -2341,7 +2328,6 @@ GROUP BY l.event_type, l.n, l.sx, l.smr, l.ucl, l.lcl
 ORDER BY l.event_type
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def xmr_control_chart_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XmR (individuals & moving-range) CONTROL CHART per event type —
@@ -2475,7 +2461,6 @@ SELECT priority,
 FROM status GROUP BY priority ORDER BY priority
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def ffill_ttl_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward-fill WITH A TTL: densify daily revenue onto the full
@@ -2604,7 +2589,6 @@ SELECT m.event_type, m.n AS n_days,
 FROM m ORDER BY m.event_type
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def hysteresis_alerts_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALERTING WITH HYSTERESIS: fire when the daily value crosses
@@ -2732,7 +2716,6 @@ SELECT event_type, n_runs, n_plus, n_minus,
 FROM runs ORDER BY event_type
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def runs_test_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WALD–WOLFOWITZ RUNS TEST for serial randomness: split each
@@ -2839,7 +2822,6 @@ SELECT day,
 FROM d GROUP BY day ORDER BY day
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def vwap_daily_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VOLUME-weighted average price per ship day — the execution-cost
@@ -2906,7 +2888,6 @@ FROM m c JOIN m p ON p.p_brand = c.p_brand AND p.mx = c.mx - 1
 ORDER BY c.p_brand, c.yyyymm
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def price_volume_mix_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRICE/VOLUME bridge ("revenue waterfall") per brand and month —
@@ -3007,7 +2988,6 @@ FROM f, q WHERE day >= TIMESTAMP '2000-01-01'
 ORDER BY day
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def conformal_interval_seasonal_naive(
     spark: SparkSession, sf_dir: str
@@ -3111,7 +3091,6 @@ SELECT event_type, CAST(lag AS BIGINT) AS lag, n AS n_pairs,
 FROM m ORDER BY event_type, lag
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def acf_multi_lag_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AUTOCORRELATION FUNCTION at lags 1/7/14 days per event type —
@@ -3219,7 +3198,6 @@ GROUP BY g.user_id
 ORDER BY g.user_id
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def idle_gap_analysis_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IDLE-GAP analysis — the COMPLEMENT of interval_union_active_time:
@@ -3312,7 +3290,6 @@ SELECT p_brand, n AS n_demand_days,
 FROM m ORDER BY p_brand
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def reorder_point_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INVENTORY REORDER POINT per brand — the safety-stock formula
@@ -3376,7 +3353,6 @@ FROM sp JOIN mn ON mn.event_type = sp.event_type
 ORDER BY sp.event_type, sp.day
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def stock_span_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STOCK SPAN per event type — for every day, how many
@@ -3462,7 +3438,6 @@ FROM monthly a JOIN monthly b
 ORDER BY a.p_brand, yyyymm
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def price_elasticity_arc_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ARC PRICE ELASTICITY of demand per brand, month over month —
@@ -3575,7 +3550,6 @@ SELECT p_brand, n AS n_demand_days,
 FROM m WHERE n >= 2 ORDER BY p_brand
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def demand_pattern_sbc_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SYNTETOS–BOYLAN demand-pattern classification per brand — the
@@ -3674,7 +3648,6 @@ SELECT event_type, CAST(day AS TIMESTAMP) AS day, v AS value_cents,
 FROM w ORDER BY event_type, day
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def bollinger_breakout_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOLLINGER-BAND BREAKOUTS per event type — days whose value
@@ -3776,7 +3749,6 @@ SELECT event_type,
 FROM wide ORDER BY event_type
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def pacf_lag2_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PARTIAL AUTOCORRELATION at lag 2 per event type — the AR-order
@@ -3912,7 +3884,6 @@ FROM en JOIN tot ON tot.event_type = en.event_type
 ORDER BY en.event_type, level
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def haar_energy_decomposition_daily(
     spark: SparkSession, sf_dir: str
@@ -4027,7 +3998,6 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM daily) AS n_days,
 FROM r WHERE rk = (m + 1) // 2
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def hodges_lehmann_daily_value(
     spark: SparkSession, sf_dir: str
@@ -4148,7 +4118,6 @@ SELECT yyyymm,
 FROM lat GROUP BY yyyymm ORDER BY yyyymm
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def apdex_ship_latency_monthly(
     spark: SparkSession, sf_dir: str
@@ -4254,7 +4223,6 @@ SELECT yyyymm, n_brands,
 FROM s ORDER BY yyyymm
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def price_index_laspeyres_fisher_monthly(
     spark: SparkSession, sf_dir: str
@@ -4372,7 +4340,6 @@ SELECT d, x AS value_cents, low14, high14, k_ppm,
 FROM k ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def stochastic_oscillator_daily(
     spark: SparkSession, sf_dir: str
@@ -4465,7 +4432,6 @@ SELECT m.n AS n_days,
 FROM m CROSS JOIN sums
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def durbin_watson_daily_revenue(
     spark: SparkSession, sf_dir: str
@@ -4556,7 +4522,6 @@ SELECT cal_month,
 FROM ratio GROUP BY cal_month ORDER BY cal_month
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def monthly_seasonal_index_ratio_to_ma(
     spark: SparkSession, sf_dir: str
@@ -4654,7 +4619,6 @@ SELECT d, x AS value_cents, n_diffs, gain14, loss14,
 FROM win ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def rsi_cutler_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RELATIVE STRENGTH INDEX, Cutler's simple-moving-average variant
@@ -4743,7 +4707,6 @@ SELECT d, x AS value_cents, v AS volume, dir,
 FROM dirs ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def obv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ON-BALANCE VOLUME (Granville) over the daily order series —
@@ -4826,7 +4789,6 @@ SELECT d, x AS value_cents, n_win,
 FROM win ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def aroon_25_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AROON indicator (Chande) over daily revenue: how many days ago
@@ -4942,7 +4904,6 @@ SELECT d, vol AS volume, s_vol AS volume20,
 FROM win ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def chaikin_money_flow_daily(
     spark: SparkSession, sf_dir: str
@@ -5064,7 +5025,6 @@ SELECT m AS n_months, s_stat, var18,
 FROM v
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def mann_kendall_trend_monthly(
     spark: SparkSession, sf_dir: str
@@ -5189,7 +5149,6 @@ SELECT d, round(x * 1000000) / 1000000 AS daily_value,
 FROM r ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def macd_signal_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MACD (Appel's Moving Average Convergence/Divergence — fast
@@ -5313,7 +5272,6 @@ SELECT d, hi AS high_cents, lo AS low_cents, cl AS close_cents,
 FROM tr ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def atr_sma14_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVERAGE TRUE RANGE (Wilder's volatility unit, here with the
@@ -5401,7 +5359,6 @@ SELECT d, x AS value_cents, hi20 AS high20_cents, lo20 AS low20_cents,
 FROM w WHERE hi20 IS NOT NULL ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def donchian_breakout_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DONCHIAN CHANNEL breakouts (Richard Donchian's 20-day
@@ -5497,7 +5454,6 @@ SELECT d, x AS value_cents, peak AS peak_cents, dd_ppm,
 FROM ui ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def ulcer_index_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ULCER INDEX (Martin & McCann's downside-volatility measure —
@@ -5583,7 +5539,6 @@ SELECT pk AS partkey, d, CAST(q AS BIGINT) AS qty,
 FROM r ORDER BY partkey, d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def croston_intermittent_demand(
     spark: SparkSession, sf_dir: str
@@ -5723,7 +5678,6 @@ SELECT d, hi AS high_cents, lo AS low_cents,
 FROM sums ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window",),
 )
 def vortex_indicator_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VORTEX INDICATOR (Botes & Siepman 2010 — paired
@@ -5833,7 +5787,6 @@ SELECT d, round(x * 1000000) / 1000000 AS daily_value,
 FROM r ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def kalman_local_level_daily(
     spark: SparkSession, sf_dir: str
@@ -5974,7 +5927,6 @@ SELECT m AS yyyymm, round(x * 1000000) / 1000000 AS monthly_value,
 FROM r WHERE rn > 12 ORDER BY yyyymm
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def holt_winters_additive_monthly(
     spark: SparkSession, sf_dir: str
@@ -6174,7 +6126,6 @@ UNION ALL SELECT * FROM row3
 ORDER BY level
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def binseg_changepoints_daily(
     spark: SparkSession, sf_dir: str
@@ -6344,7 +6295,6 @@ SELECT d, x AS value_cents, r AS return_cents,
 FROM win ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def rolling_sharpe_14d_daily(
     spark: SparkSession, sf_dir: str
@@ -6502,7 +6452,6 @@ FROM s5
    .replace("{S4}", ", ".join(_GRANGER_STAGES[3]))
    .replace("{S5}", ", ".join(_GRANGER_STAGES[4])),
     category="temporal",
-    tags=("defer-window2",),
 )
 def granger_causality_daily(
     spark: SparkSession, sf_dir: str
@@ -6611,7 +6560,6 @@ FROM daily c JOIN g2 ON g2.cd = c.d
 ORDER BY c.d
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def hampel_filter_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HAMPEL FILTER over daily revenue — the standard robust
@@ -6749,7 +6697,6 @@ SELECT d, x AS n_events, CAST(state AS BIGINT) AS burst_state
 FROM expanded ORDER BY d
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def burst_viterbi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BURST DETECTION by exact-integer VITERBI decoding — the
@@ -6949,7 +6896,6 @@ SELECT n1, n2,
 FROM ssr
 """,
     category="temporal",
-    tags=("defer-window2",),
 )
 def chow_test_midpoint_daily(
     spark: SparkSession, sf_dir: str

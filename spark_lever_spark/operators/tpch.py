@@ -64,7 +64,6 @@ GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """,
     category="tpch",
-    bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary report (TPC-H Q1 shape): wide scan-agg.
@@ -132,7 +131,6 @@ ORDER BY revenue DESC, o_orderdate, l_orderkey
 LIMIT 10
 """,
     category="tpch",
-    bench=True,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shipping priority (TPC-H Q3 shape): 3-way join + agg + top-k.
@@ -176,7 +174,6 @@ GROUP BY n_name
 ORDER BY revenue DESC, n_name
 """,
     category="tpch",
-    bench=True,
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local supplier volume (TPC-H Q5 shape): 6-way join.
@@ -223,7 +220,6 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01'
   AND l_quantity < 24
 """,
     category="tpch",
-    bench=True,
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecast revenue change (TPC-H Q6 shape): pure scan-filter-agg.
@@ -264,7 +260,6 @@ ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """,
     category="tpch",
-    bench=True,
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned item reporting (TPC-H Q10 shape): join + agg + top-20."""
@@ -344,7 +339,6 @@ ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 20
 """,
     category="tpch",
-    bench=True,
 )
 def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-volume customer (TPC-H Q18 shape): agg-derived semi join.
@@ -397,7 +391,6 @@ GROUP BY n_name, year(o_orderdate)
 ORDER BY nation, o_year DESC
 """,
     category="tpch",
-    bench=True,
 )
 def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product profit (TPC-H Q9 shape, cost proxy = 0.6*retail*qty since

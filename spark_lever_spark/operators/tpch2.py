@@ -36,7 +36,6 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """,
     category="tpch",
-    bench=True,
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 (EXISTS -> left-semi join; commitdate predicate adapted to
@@ -83,7 +82,6 @@ GROUP BY supp_nation, cust_nation, l_year
 ORDER BY supp_nation, cust_nation, l_year
 """,
     category="tpch",
-    bench=True,
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7: bi-directional nation-pair volume by year. Both nation dims
@@ -208,7 +206,6 @@ GROUP BY c_count
 ORDER BY custdist DESC, c_count DESC
 """,
     category="tpch",
-    bench=True,
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13: orders-per-customer histogram (left outer join keeps

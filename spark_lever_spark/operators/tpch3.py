@@ -52,7 +52,6 @@ def _derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q2_min_cost_supplier",
-    bench=True,
     oracle=f"""
 WITH {_PS_SQL},
 eu AS (

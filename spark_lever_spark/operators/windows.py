@@ -37,7 +37,6 @@ SELECT * FROM (
 ORDER BY o_custkey, rn
 """,
     category="windows",
-    bench=True,
 )
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k via row_number — the canonical distributed
@@ -464,7 +463,6 @@ WHERE rk = (t.q * n + 99) // 100
 ORDER BY decile
 """,
     category="windows",
-    tags=("defer-window",),
 )
 def exact_global_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT global deciles of l_extendedprice — what
@@ -535,7 +533,6 @@ SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
 FROM v ORDER BY user_id, ts, event_id
 """,
     category="windows",
-    tags=("defer-window",),
 )
 def window_last_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``last_value(... IGNORE NULLS)`` — the gap-carry window
@@ -604,7 +601,6 @@ FROM sel b JOIN sel m
 ORDER BY b.decile
 """,
     category="windows",
-    tags=("defer-window",),
 )
 def qq_deciles_mktsegments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q-Q (quantile-quantile) comparison of order values between the

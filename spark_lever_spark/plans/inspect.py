@@ -99,13 +99,42 @@ def _simple(node) -> str:
     return node.getClass().getSimpleName()
 
 
+def _inspected_plan(df: DataFrame):
+    """The physical plan the hazard sweeps walk: the executed plan, or
+    AQE's initial plan when adaptive execution wraps it."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if _simple(plan) == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    return plan
+
+
+def _is_file_scan(node) -> bool:
+    name = _simple(node)
+    return "FileSourceScan" in name or "RowDataSourceScan" in name
+
+
+def has_file_scan(df: DataFrame) -> bool:
+    """True if the inspected plan reaches a file (or JDBC) scan leaf.
+    An eagerly computed frame (a ``LogicalRDD``/``ExistingRDD``, e.g.
+    after ``localCheckpoint``) hides its scans, so the hazard sweeps
+    see nothing below it."""
+
+    def walk(node) -> bool:
+        if _is_file_scan(node):
+            return True
+        ch = node.children()
+        return any(walk(ch.apply(i)) for i in range(ch.size()))
+
+    return walk(_inspected_plan(df))
+
+
 def _scan_without_aggregate(node) -> bool:
     """True if some path below reaches a file scan without crossing an
     aggregation — i.e. the subtree ships RAW table rows."""
     name = _simple(node)
     if "Aggregate" in name:  # Hash/Sort/ObjectHashAggregateExec
         return False
-    if "FileSourceScan" in name or "RowDataSourceScan" in name:
+    if _is_file_scan(node):
         return True
     ch = node.children()
     return any(
@@ -133,9 +162,7 @@ def single_partition_scale_hazards(df: DataFrame) -> list[str]:
     aggregates (exchange feeds an Aggregate), presentation sorts
     (range partitioning), and windows over pre-aggregated domains are
     all legitimate and not flagged."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if _simple(plan) == "AdaptiveSparkPlanExec":
-        plan = plan.initialPlan()
+    plan = _inspected_plan(df)
     hazards: list[str] = []
 
     def feeding_exchange(node):
@@ -183,9 +210,7 @@ def nested_loop_hazards(df: DataFrame) -> list[str]:
     bounded raw-side broadcasts (a filtered probe batch) must be
     whitelisted BY NAME in the sweep test so any new accidental
     nested loop fails loudly."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if _simple(plan) == "AdaptiveSparkPlanExec":
-        plan = plan.initialPlan()
+    plan = _inspected_plan(df)
     out: list[str] = []
 
     def agg_derived(node) -> bool:

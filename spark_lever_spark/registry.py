@@ -7,18 +7,14 @@ computing the identical result (same column names — the driver's
 compare hashes values after sorting columns by name).
 
 The registry is what ``__spark_entry__.queries()`` / ``oracle_sql()``
-expose to the correctness driver, and what ``bench.py`` samples.
+expose to the correctness driver, and what ``perfbench``'s query mix
+draws its queries from (by name).
 """
 
 from __future__ import annotations
 
-import hashlib
-import inspect
-import json
-import re
 from collections.abc import Callable
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,9 +27,7 @@ class Query:
     fn: QueryFn
     oracle: str | None  # DuckDB SQL; None => rows-only check
     category: str = "misc"
-    bench: bool = False  # include in bench.py headline set
     doc: str = ""
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 _REGISTRY: dict[str, Query] = {}
@@ -43,8 +37,6 @@ def register(
     name: str,
     oracle: str | None,
     category: str = "misc",
-    bench: bool = False,
-    tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a named query with its oracle SQL."""
 
@@ -56,408 +48,17 @@ def register(
             fn=fn,
             oracle=oracle.strip() if oracle else None,
             category=category,
-            bench=bench,
             doc=(fn.__doc__ or "").strip(),
-            tags=tags,
         )
         return fn
 
     return deco
 
 
-# The correctness driver consumes queries() in dict order and has a
-# per-round budget (50/round; every CORRECTNESS_r0N file is exactly the
-# first 50 names of that round's ordering). Order the exposed dict so
-# the budget lands where it buys the most new information:
-#   0. queries whose LATEST driver check failed (must be re-verified
-#      THIS round — their most recent green rows predate the break),
-#   1. queries whose implementation or oracle CHANGED since their last
-#      green stamp (the stamp no longer covers the shipping code — as
-#      urgent as never-checked; round 9 modified seven green-stamped
-#      queries and the vintage rotation would not have re-checked them
-#      for ~4 rounds), then never-driver-checked queries (SQL-oracle
-#      first — the stronger check — then rows-only),
-#   2. already-green queries, least-recently-driver-checked FIRST, so
-#      the window rotates through the whole registry across rounds
-#      instead of pinning to one prefix (r03 and r04 re-checked an
-#      identical 50-query set while two queries regressed outside it —
-#      that must not repeat). Streaming queries drain last within a
-#      vintage (slowest per verified row).
-#
-# All inputs derive from committed artifacts at the repo root — no
-# per-round manual bookkeeping: the driver's CORRECTNESS_r0N.json
-# supplies stamp vintage/outcome, and STAMP_HASHES.json (regenerated by
-# `python scripts/stamp_hashes.py` FIRST thing each round, before any
-# query is edited) records the content hash each green stamp verified.
-
-
-def _load_driver_checks(
-    root: Path | None = None,
-) -> tuple[dict[str, int], frozenset[str]]:
-    """Parse driver CORRECTNESS_r*.json artifacts at the repo root.
-
-    Returns ``(last_green, refront)`` where ``last_green`` maps query
-    name -> most recent round with a green row (no err, and hash or
-    rows matched), and ``refront`` is the set of queries whose LATEST
-    driver check failed — those must head the next window.  Missing or
-    unparseable artifacts degrade to "never checked" (group 1), which
-    is the safe direction.
-    """
-    if root is None:
-        root = Path(__file__).resolve().parent.parent
-    last_green: dict[str, int] = {}
-    latest: dict[str, tuple[int, bool]] = {}
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)", path.stem)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            # hash_match is the gate when the driver computed one;
-            # rows-only (no-oracle) checks report hash_match as None.
-            hm = row.get("hash_match")
-            green = not row.get("err") and (
-                bool(hm) if hm is not None else bool(row.get("rows_match"))
-            )
-            if green:
-                last_green[name] = max(last_green.get(name, 0), rnd)
-            if rnd >= latest.get(name, (0, True))[0]:
-                latest[name] = (rnd, green)
-    refront = frozenset(n for n, (_, green) in latest.items() if not green)
-    return last_green, refront
-
-
-_LAST_GREEN, _REFRONT = _load_driver_checks()
-
-
-def content_hash(q: Query) -> str:
-    """Content hash of what a driver stamp actually verified: the query
-    function's BODY (from its `def` line — the @register decorator is
-    excluded so a bench/tags/category flip doesn't fake a semantic
-    change) plus the oracle string explicitly (the oracle usually lives
-    in the decorator literal, so it must be hashed on its own)."""
-    try:
-        src = inspect.getsource(q.fn)
-    except (OSError, TypeError):
-        src = ""
-    m = re.search(r"(?m)^def ", src)
-    if m:
-        src = src[m.start():]
-    payload = src + "\x00" + (q.oracle or "")
-    return hashlib.sha256(payload.encode()).hexdigest()[:16]
-
-
-def _load_stamp_hashes(root: Path | None = None) -> dict[str, str]:
-    """Read the committed STAMP_HASHES.json sidecar: query name -> the
-    content hash the query had when its latest green driver stamp was
-    taken (written by scripts/stamp_hashes.py at round start, before any
-    edits).  Missing or unparseable sidecar degrades to {} — every
-    stamped query then counts as changed, the safe direction."""
-    if root is None:
-        root = Path(__file__).resolve().parent.parent
-    try:
-        data = json.loads((root / "STAMP_HASHES.json").read_text())
-    except (OSError, ValueError):
-        return {}
-    if not isinstance(data, dict):
-        return {}
-    return {
-        n: row.get("hash", "")
-        for n, row in data.items()
-        if isinstance(row, dict)
-    }
-
-
-_STAMP_HASHES = _load_stamp_hashes()
-_HASH_CACHE: dict[str, str] = {}
-
-
-def _changed_since_stamp(q: Query) -> bool:
-    """True when the query carries a green driver stamp but its
-    implementation or oracle no longer matches the content the stamp
-    verified (VERDICT r9 task #1: such a stamp is stale — the query must
-    re-front instead of waiting ~4 rounds for vintage rotation)."""
-    if _LAST_GREEN.get(q.name, 0) == 0:
-        return False  # never stamped — handled by the never-checked group
-    h = _HASH_CACHE.get(q.name)
-    if h is None:
-        h = _HASH_CACHE[q.name] = content_hash(q)
-    stamped = _STAMP_HASHES.get(q.name)
-    return stamped is None or stamped != h
-
-
-# Plain-import branch captures the WHOLE name list (ADVICE r17: the old
-# `import\s+(spark_lever_spark[\w.]*)` took only the first module of
-# `import spark_lever_spark.a, spark_lever_spark.b`, so an edit to the
-# second escaped the taint closure — fail-open); the caller splits on
-# commas and keeps package-prefixed names.
-_IMPORT_RE = re.compile(
-    r"(?m)^\s*(?:from\s+(spark_lever_spark[\w.]*|\.+[\w.]*)\s+import\s+"
-    r"(\([^)]*\)|[^\n]+)|import\s+([^\n]+))"
-)
-
-
-def _taint_closure(repo_root: Path, changed_files: set[str]) -> set[str]:
-    """Expand a set of changed repo-relative files to every package file
-    that (transitively) imports one of them.
-
-    Static regex scan over ``spark_lever_spark/**/*.py`` — handles
-    ``import spark_lever_spark.x``, ``from spark_lever_spark.x import
-    y`` (where ``y`` may itself be a submodule, as in ``from
-    spark_lever_spark.llm import dedup``), and relative ``from .x
-    import y`` forms.  Used by :func:`sync_stamp_hashes` so a query
-    whose oracle/behavior is composed from helpers in another module is
-    skipped when THAT module changed (ADVICE r16), not only when its
-    own file did.  Unreadable files degrade to no edges (their queries
-    are still caught by the own-file seed).
-    """
-    pkg = repo_root / "spark_lever_spark"
-    mod_to_file: dict[str, str] = {}
-    sources: dict[str, str] = {}
-    for p in pkg.rglob("*.py"):
-        rel = str(p.relative_to(repo_root))
-        dotted = ".".join(Path(rel).with_suffix("").parts)
-        if dotted.endswith(".__init__"):
-            dotted = dotted[: -len(".__init__")]
-        mod_to_file[dotted] = rel
-        try:
-            sources[rel] = p.read_text()
-        except OSError:
-            sources[rel] = ""
-
-    def resolve(base: str, names: str, rel_file: str) -> set[str]:
-        out: set[str] = set()
-        if base.startswith("."):
-            # relative import: anchor at this file's package
-            pkg_parts = Path(rel_file).with_suffix("").parts[:-1]
-            up = len(base) - len(base.lstrip("."))
-            anchor = ".".join(pkg_parts[: len(pkg_parts) - (up - 1)])
-            stem = base.lstrip(".")
-            base = f"{anchor}.{stem}" if stem else anchor
-        if base in mod_to_file:
-            out.add(mod_to_file[base])
-        for n in re.split(r"[,\s()]+", names or ""):
-            n = n.split(" as ")[0].strip()
-            if n and f"{base}.{n}" in mod_to_file:
-                out.add(mod_to_file[f"{base}.{n}"])
-        return out
-
-    imports: dict[str, set[str]] = {}
-    this_file = str(Path(__file__).resolve().relative_to(repo_root))
-    for rel, src in sources.items():
-        # registry.py's own imports (the _ensure_loaded fan-out) pull in
-        # every operator module but contribute nothing to any query's
-        # content — with them, every-module-imports-registry +
-        # registry-imports-every-module makes the graph fully connected
-        # and the taint check degenerates to "skip everything".
-        if rel == this_file:
-            imports[rel] = set()
-            continue
-        deps: set[str] = set()
-        for m in _IMPORT_RE.finditer(src):
-            if m.group(3):
-                for mod in m.group(3).split(","):
-                    mod = mod.split(" as ")[0].strip()
-                    if mod.startswith("spark_lever_spark"):
-                        deps |= resolve(mod, "", rel)
-            else:
-                deps |= resolve(m.group(1), m.group(2), rel)
-        imports[rel] = deps - {rel}
-
-    tainted = set(changed_files)
-    while True:
-        grew = {
-            rel
-            for rel, deps in imports.items()
-            if rel not in tainted and deps & tainted
-        }
-        if not grew:
-            return tainted
-        tainted |= grew
-
-
-def sync_stamp_hashes(root: Path | None = None) -> str:
-    """Self-heal a stale STAMP_HASHES.json (VERDICT r15 task #6).
-
-    Two consecutive verdicts flagged the same recurring risk: if
-    ``scripts/stamp_hashes.py`` is not run FIRST thing each round, the
-    sidecar lacks the latest round's stamps, every just-stamped query
-    classifies as changed-since-stamp, and the next 50-query driver
-    window re-fronts already-green queries while never-stamped ones
-    starve.  This guard makes the manual step self-healing: it is
-    called from ``bench.py`` (which the driver runs every round), so a
-    forgotten round start can no longer waste a window.
-
-    Safety: a stamp-time hash may only be recorded from code the driver
-    actually verified.  The driver stamps the round's FINAL commit, so
-    the current hash equals the stamp-time hash iff the query's source
-    file is untouched (committed or uncommitted) since the round's
-    CORRECTNESS artifact landed.  We check exactly that via git: files
-    changed since the commit that introduced the latest artifact are
-    excluded — their queries legitimately re-front.
-
-    Returns a one-line status string (callers print it to stderr; the
-    bench stdout contract stays one JSON line).  Degrades to a no-op
-    message on any git/IO failure — ordering then falls back to the
-    committed sidecar, the safe direction.
-    """
-    import subprocess
-
-    if root is None:
-        root = Path(__file__).resolve().parent.parent
-    rounds = []
-    for path in root.glob("CORRECTNESS_r*.json"):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)", path.stem)
-        if m:
-            rounds.append(int(m.group(1)))
-    if not rounds:
-        return "stamp-sync: no CORRECTNESS artifacts — nothing to sync"
-    latest = max(rounds)
-
-    last_green, _ = _load_driver_checks(root)
-    sidecar_path = root / "STAMP_HASHES.json"
-    try:
-        recorded = json.loads(sidecar_path.read_text())
-        assert isinstance(recorded, dict)
-    except (OSError, ValueError, AssertionError):
-        recorded = {}
-
-    stale = [
-        n
-        for n, rnd in last_green.items()
-        if rnd == latest
-        and not (
-            isinstance(recorded.get(n), dict)
-            and recorded[n].get("round", -1) >= rnd
-        )
-    ]
-    if not stale:
-        return f"stamp-sync: sidecar fresh through r{latest}"
-
-    # Files touched since the latest artifact landed (committed diff +
-    # working-tree changes + untracked additions) — queries living
-    # there, or transitively importing from there, are NOT safe to
-    # certify from current source.
-    try:
-        log_proc = subprocess.run(
-            ["git", "log", "--format=%H", "-n1", "--",
-             f"CORRECTNESS_r{latest:02d}.json", f"CORRECTNESS_r{latest}.json"],
-            cwd=root, capture_output=True, text=True, timeout=30,
-        )
-        artifact_commit = log_proc.stdout.strip()
-        if log_proc.returncode != 0 or not artifact_commit:
-            return "stamp-sync: artifact commit not found — sidecar stale, run scripts/stamp_hashes.py"
-        # git emits repo-relative paths; query files are compared by
-        # their path relative to the REAL repo root (the package's
-        # parent), so a tmp-root test exercises the same comparison.
-        diff_proc = subprocess.run(
-            ["git", "diff", "--name-only", artifact_commit, "--",
-             "spark_lever_spark", "__spark_entry__.py"],
-            cwd=root, capture_output=True, text=True, timeout=30,
-        )
-        untracked_proc = subprocess.run(
-            ["git", "ls-files", "--others", "--exclude-standard", "--",
-             "spark_lever_spark", "__spark_entry__.py"],
-            cwd=root, capture_output=True, text=True, timeout=30,
-        )
-        # ADVICE r16 (medium): a nonzero git exit leaves stdout empty,
-        # and empty MUST NOT read as "nothing changed" — that would
-        # certify every stale query, inverting the fail-safe direction.
-        if diff_proc.returncode != 0 or untracked_proc.returncode != 0:
-            return "stamp-sync: git diff failed — sidecar stale, run scripts/stamp_hashes.py"
-        changed_files = set(diff_proc.stdout.split()) | set(
-            untracked_proc.stdout.split()
-        )
-    except (OSError, subprocess.SubprocessError):
-        return "stamp-sync: git unavailable — sidecar stale, run scripts/stamp_hashes.py"
-
-    repo_root = Path(__file__).resolve().parent.parent
-    # ADVICE r16 (medium): a query's oracle can be composed at import
-    # time from helpers in OTHER modules (round16 oracles splice
-    # _WC_CTE / _SH3_CTE from round14c/round15), so comparing only the
-    # query's own file misses edits that change its content hash and
-    # behavior.  Taint-propagate: a file is unsafe if it changed OR it
-    # (transitively) imports a changed package file.
-    tainted = (
-        _taint_closure(repo_root, changed_files) if changed_files else set()
-    )
-    _ensure_loaded()
-    synced, skipped = 0, []
-    for name in stale:
-        q = _REGISTRY.get(name)
-        if q is None:
-            continue
-        try:
-            src_file = str(
-                Path(inspect.getfile(q.fn)).resolve().relative_to(repo_root)
-            )
-        except (OSError, TypeError, ValueError):
-            skipped.append(name)
-            continue
-        if src_file in tainted:
-            skipped.append(name)  # edited since stamp — must re-front
-            continue
-        recorded[name] = {"round": latest, "hash": content_hash(q)}
-        synced += 1
-    if synced:
-        sidecar_path.write_text(
-            json.dumps(dict(sorted(recorded.items())), indent=0,
-                       sort_keys=True) + "\n"
-        )
-    return (
-        f"stamp-sync: healed {synced} r{latest} stamps into sidecar"
-        + (f"; {len(skipped)} skipped (source changed since artifact): "
-           f"{sorted(skipped)[:5]}" if skipped else "")
-    )
-
-
-def _driver_group(q: Query) -> tuple[int, int]:
-    if q.name in _REFRONT:
-        return (0, 0)
-    if _changed_since_stamp(q):
-        # Stamped green, but on different code/oracle than now ships:
-        # ahead of never-checked (those at least have no stale claim).
-        return (1, -1)
-    last = _LAST_GREEN.get(q.name, 0)
-    if last == 0:  # never driver-checked: oracle first (stronger check)
-        # "defer-window": still never-checked, but queued BEHIND the
-        # other never-checked queries (used when the next 50-query
-        # window is already exactly full of earlier-round additions —
-        # adding mid-round must not push any of them past the budget).
-        # Once any CORRECTNESS round stamps them the tag is inert.
-        # "defer-window2": one level further back — for additions made
-        # AFTER the window is already exactly full of defer-window
-        # entries (they all tie at (1, 2), where registration order
-        # would otherwise interleave new entries into the full window
-        # by module import position).
-        if "defer-window2" in q.tags:
-            return (1, 3)
-        if "defer-window" in q.tags:
-            return (1, 2)
-        return (1, 0 if q.oracle else 1)
-    return (2, last)  # oldest vintage first → window rotates
-
-
 def all_queries() -> dict[str, Query]:
+    """Every registered query, in registration order."""
     _ensure_loaded()
-    order = list(_REGISTRY)
-    keyed = sorted(
-        _REGISTRY.values(),
-        key=lambda q: (
-            *_driver_group(q),
-            q.category == "streaming",
-            order.index(q.name),
-        ),
-    )
-    return {q.name: q for q in keyed}
+    return dict(_REGISTRY)
 
 
 def query_fns() -> dict[str, QueryFn]:
@@ -466,10 +67,6 @@ def query_fns() -> dict[str, QueryFn]:
 
 def oracle_sqls() -> dict[str, str]:
     return {name: q.oracle for name, q in all_queries().items() if q.oracle}
-
-
-def bench_queries() -> dict[str, Query]:
-    return {name: q for name, q in all_queries().items() if q.bench}
 
 
 _LOADED = False
@@ -498,6 +95,15 @@ def _ensure_loaded() -> None:
         layout,
         lever_demo,
         temporal,
+        bars,
+        alloc,
+        actions,
+        round14,
+        round14c,
+        round15,
+        round16,
+        round17,
+        round18,
     )
     from spark_lever_spark.llm import (  # noqa: F401
         curation,
@@ -507,53 +113,11 @@ def _ensure_loaded() -> None:
         multimodal,
         packing,
         pipeline,
+        selection,
         similarity,
         textstats,
     )
     from spark_lever_spark.functions import udfs  # noqa: F401
     from spark_lever_spark.streaming import queries as streaming_queries  # noqa: F401
-
-    # round-7 additions import LAST: never-driver-checked queries sort
-    # by registration order within their group, and the 47 round-6
-    # queries must keep the head of the 50-query driver window
-    from spark_lever_spark.llm import selection  # noqa: F401
-    from spark_lever_spark.operators import bars  # noqa: F401
-
-    # round-8 additions (all defer-window tagged, so they queue behind
-    # the fronted round-7 stamps; total never-checked stays < 50)
-    from spark_lever_spark.operators import alloc  # noqa: F401
-
-    # round-14 additions (defer-window2: they tie with the pending
-    # late-r13 batch; total pending stays <= 50 so every one lands)
-    from spark_lever_spark.operators import round14  # noqa: F401
-
-    # round-14 second-wave additions import AFTER round14: same
-    # defer-window2 tie, registration order queues them behind the 47
-    # already-pending queries so the r14 window head is undisturbed.
-    from spark_lever_spark.operators import round14c  # noqa: F401
-
-    # round-15 additions import LAST (defer-window2 + latest
-    # registration order → queued behind the 74 pending r14 queries;
-    # the r15 driver window head is undisturbed).
-    from spark_lever_spark.operators import actions  # noqa: F401
-    from spark_lever_spark.operators import round15  # noqa: F401
-
-    # round-16 additions import LAST (defer-window + latest
-    # registration order → queued behind the 35 pending r15 NEVERs;
-    # 1 re-front + 35 NEVERs + 10 additions = 46 of the 50-query
-    # window, leaving 4 oldest-vintage rotation slots).
-    from spark_lever_spark.operators import round16  # noqa: F401
-
-    # round-17 additions import LAST: with never-stamped at 0 after
-    # round 16, these 5 head the never-checked group and the remaining
-    # 45 window slots rotate the r04/r05 stamp vintages (VERDICT r17
-    # plan: 5 additions + 45 oldest-vintage = the full 50 budget).
-    from spark_lever_spark.operators import round17  # noqa: F401
-
-    # round-18 additions: 2 never-checked queries; together with the 3
-    # round-17 re-fronts (changed-since-stamp) they fill exactly the 5
-    # non-rotation slots, leaving 45 for the r05/r06 vintage rotation
-    # (VERDICT r17 tasks #2/#3).
-    from spark_lever_spark.operators import round18  # noqa: F401
 
     _LOADED = True

@@ -645,7 +645,6 @@ FROM (SELECT DISTINCT user_id FROM matched
 ORDER BY user_id
 """,
     category="streaming",
-    tags=("defer-window",),
 )
 def stream_stream_left_join_unmatched_clicks(
     spark: SparkSession, sf_dir: str
@@ -749,7 +748,6 @@ FROM (SELECT DISTINCT user_id FROM matched
 ORDER BY user_id
 """,
     category="streaming",
-    tags=("defer-window",),
 )
 def stream_stream_full_outer_join_expiry(
     spark: SparkSession, sf_dir: str
@@ -828,7 +826,6 @@ SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start,
 FROM events GROUP BY 1 ORDER BY 1
 """,
     category="streaming",
-    tags=("defer-window",),
 )
 def stream_windowed_distinct_users(
     spark: SparkSession, sf_dir: str
@@ -873,7 +870,6 @@ SELECT hour_start, event_type, events, rnk
 FROM ranked WHERE rnk <= 2 ORDER BY hour_start, rnk
 """,
     category="streaming",
-    tags=("defer-window",),
 )
 def stream_hourly_top2_event_types(
     spark: SparkSession, sf_dir: str

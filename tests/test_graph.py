@@ -104,33 +104,6 @@ def test_cc_converges_exactly_at_budget(spark):
     assert got == {0: 0, 1: 0}
 
 
-def test_election_phase_timings_consistent(spark, sf_dir):
-    """The phase-split helper (BASELINE.md v3.4 phase gates) must run
-    the SAME pipeline as the registered election query: phase timings
-    positive, candidate-pair count equal to the query's own candidate
-    stage, and the helper's final collect equal to the query result."""
-    from spark_lever_spark.llm.graph import (
-        _election_candidate_pairs,
-        dedup_cluster_quality_election,
-        election_phase_timings,
-    )
-
-    t = election_phase_timings(spark, sf_dir)
-    assert set(t) == {
-        "candidates_sec",
-        "cc_sec",
-        "election_sec",
-        "n_candidate_pairs",
-    }
-    assert t["candidates_sec"] > 0
-    assert t["cc_sec"] > 0
-    assert t["election_sec"] > 0
-    assert (
-        t["n_candidate_pairs"]
-        == _election_candidate_pairs(spark, sf_dir).count()
-    )
-
-
 def test_cc_contracted_path_matches_union_find(spark, monkeypatch):
     """The hash-to-min pre-contraction is conditional on edge count
     (round 18: skipped below _CONTRACT_MIN_EDGES, where its eager

@@ -386,8 +386,8 @@ def test_adaptive_drain_policy_trajectory():
     first SoCC'14 backoff (over-occupancy + worsening trend), resume
     when the trend recovers, and drain 32 files in 6 segments — a
     predicted (32 - 6) * c0 = 41 s win over fixed 1-file-per-trigger.
-    Pure arithmetic, deterministic; the live measurement lives in
-    bench_streaming.py (scenario "adaptive_drain") and BASELINE.md."""
+    Pure arithmetic, deterministic; the live measurement is recorded
+    in BASELINE.md."""
     from spark_lever_spark.lever.actuator import (
         MEASURED_BATCH_OVERHEAD_MS,
         DynamicBatchSizer,

@@ -587,18 +587,23 @@ def registry_plan_hazards(spark, sf_dir):
     registry-wide hazard sweeps below (r19, VERDICT r18 task #2:
     building all 614 frames — eager queries execute during fn() — was
     the suite's single most expensive step and the two sweeps each
-    paid it; one pass computes both hazard maps)."""
+    paid it; one pass computes both hazard maps and the set of plans
+    that reach no file scan)."""
     from spark_lever_spark.plans.inspect import (
+        has_file_scan,
         nested_loop_hazards,
         single_partition_scale_hazards,
     )
 
     single_part: dict = {}
     nested: dict = {}
+    pinned: set = set()
     for name, q in ALL.items():
         if q.category == "streaming":
             continue
         df = q.fn(spark, sf_dir)
+        if not has_file_scan(df):
+            pinned.add(name)
         h = single_partition_scale_hazards(df)
         if h:
             single_part[name] = h
@@ -606,7 +611,7 @@ def registry_plan_hazards(spark, sf_dir):
             h = nested_loop_hazards(df)
             if h:
                 nested[name] = h
-    return single_part, nested
+    return single_part, nested, pinned
 
 
 def test_no_single_partition_scale_hazards_registry_wide(
@@ -620,7 +625,7 @@ def test_no_single_partition_scale_hazards_registry_wide(
     range-partitioned presentation sorts are legitimate and pass.
     Streaming queries are excluded (building their frame runs a
     drain); their plans are covered by the streaming suites."""
-    flagged, _ = registry_plan_hazards
+    flagged, _, _ = registry_plan_hazards
     assert not flagged, flagged
 
 
@@ -664,9 +669,8 @@ NESTED_LOOP_WHITELIST = {
         "pairs themselves meet through the cell equi-join"
     ),
     "lof_outliers_int8_cells": (
-        "broadcast k = max(16, sqrt(N)) prefix-centroid table for IVF "
-        "cell assignment — N*k = O(N^1.5) map-side probes; kNN pairs "
-        "themselves meet through the cell equi-join"
+        "the kNN table is localCheckpointed, then the quantized-table "
+        "persist is released"
     ),
     "ann_ivf": "broadcast probe vector + centroid cells",
     "ann_pq_adc_topk": (
@@ -701,8 +705,147 @@ def test_no_unsanctioned_nested_loops_registry_wide(
     bounds/offset frames (aggregate-derived broadcast sides) pass
     automatically. A refactor that silently turns an equi-join into a
     nested loop anywhere else fails here, not at 100 TB."""
-    _, flagged = registry_plan_hazards
+    _, flagged, _ = registry_plan_hazards
     assert not flagged, flagged
+
+
+# Queries whose inspected plan reaches no file scan: they compute
+# eagerly (localCheckpoint, createDataFrame of driver results) or read
+# an eagerly pinned input, so the plan is a bare LogicalRDD/ExistingRDD
+# and the two sweeps above cannot see the work below it.  Each entry
+# says why the query pins; a query that newly pins fails here instead
+# of passing both sweeps unseen.
+PINNED_PLANS = {
+    "bfs_hops_copurchase": (
+        "BFS frontier over the localCheckpointed symmetric co-purchase "
+        "edges"
+    ),
+    "bitmap_rollup_daily_to_monthly": (
+        "eager pin of the month-grain rollup, then the daily bitmap persist"
+        " is released"
+    ),
+    "bpe_learn_merges": (
+        "the single-task merge kernel's output is eagerly localCheckpointed"
+        " (the distributed loop returns its merges via createDataFrame)"
+    ),
+    "clustering_coefficient_copurchase": "reads copurchase_edges(pinned=True)",
+    "cross_source_duplication_matrix": (
+        "eager pin (<= source-domain² rows), then the LSH signature persist"
+        " is released"
+    ),
+    "dbscan_box_clusters_errors": (
+        "eager pin of the cluster-count-sized result, then the neighbour "
+        "and core persists are released"
+    ),
+    "decision_stump_returns": (
+        "eager pin of the stump result, then the point and score persists "
+        "are released"
+    ),
+    "dedup_minhash_clusters": (
+        "connected_components over the eagerly pinned dedup_minhash_lsh "
+        "pairs"
+    ),
+    "dedup_minhash_lsh": (
+        "eager pin, then the minhash signature persist is released"
+    ),
+    "dedup_minhash_lsh_tuned": (
+        "eager pin, then the minhash signature persist is released"
+    ),
+    "dedup_shingle_containment": (
+        "eager pin, then the shingle and token persists are released"
+    ),
+    "dedup_threshold_sweep": (
+        "eager pin (5 rows), then the LSH signature persist is released"
+    ),
+    "diameter_double_sweep_copurchase": (
+        "two BFS sweeps driven from the driver; the result row comes back "
+        "via createDataFrame"
+    ),
+    "edge_triangle_support_copurchase": "reads copurchase_edges(pinned=True)",
+    "embedding_top_pc_power_iteration": (
+        "power-iteration vector is localCheckpointed each round"
+    ),
+    "er_lsh_blocking_audit": (
+        "eager pin (1 row), then the LSH signature persist is released"
+    ),
+    "greedy_coverage_doc_selection": (
+        "driver-side greedy loop; the K picked docs come back via "
+        "createDataFrame"
+    ),
+    "grouped_split_no_leakage": (
+        "eager pin (3 rows), then the (user, split) aggregate persist is "
+        "released"
+    ),
+    "harmonic_closeness_sampled_bfs": (
+        "sampled BFS over the localCheckpointed symmetric co-purchase edges"
+    ),
+    "hits_hubs_authorities_purchases": (
+        "single-task HITS kernel / per-half-round localCheckpoint of the "
+        "score vectors"
+    ),
+    "hodges_lehmann_daily_value": (
+        "eager pin (1 row), then the daily-aggregate persist is released"
+    ),
+    "isotonic_return_rate_by_price": (
+        "cumulative-sum frame is eagerly localCheckpointed before the PAV "
+        "pass"
+    ),
+    "kcore_peel_copurchase": (
+        "per-round localCheckpoint of the peeled edge set (plan growth "
+        "otherwise OOMs the driver)"
+    ),
+    "kmeans_lloyd_refine_embeddings": (
+        "eager pin of the k-row result, then the quantized and assignment "
+        "caches are released"
+    ),
+    "ktruss_3_copurchase": (
+        "iterative edge peel; the per-round edge counts come back via "
+        "createDataFrame"
+    ),
+    "lever_plan_proportion": (
+        "the Lever plan is computed on the driver and returned via "
+        "createDataFrame"
+    ),
+    "lincoln_petersen_dedup_estimate": (
+        "eager pin, then the paragraph and shingle persists are released"
+    ),
+    "link_prediction_common_neighbors": "reads copurchase_edges(pinned=True)",
+    "link_prediction_pref_attachment": "reads copurchase_edges(pinned=True)",
+    "link_prediction_resource_allocation": (
+        "reads copurchase_edges(pinned=True)"
+    ),
+    "lof_outliers_int8_cells": (
+        "kNN table is localCheckpointed, then the quantized-table persist "
+        "is released"
+    ),
+    "lpa_communities_copurchase": (
+        "per-round localCheckpoint of the label vector"
+    ),
+    "mad_outlier_order_values": (
+        "eager pin, then the value and deviation persists are released"
+    ),
+    "mutual_nn_int8_ivf": (
+        "eager pin of the nearest-neighbour table, then the quantized-table"
+        " persist is released"
+    ),
+    "pagerank_copurchase": "per-round localCheckpoint of the rank vector",
+    "personalized_pagerank_copurchase": (
+        "per-round localCheckpoint of the rank vector"
+    ),
+    "recursive_cte_dup_chains": (
+        "recursive chain expansion, eagerly localCheckpointed"
+    ),
+    "rich_club_coefficient_copurchase": "reads copurchase_edges(pinned=True)",
+    "triangle_count_copurchase": "reads copurchase_edges(pinned=True)",
+}
+
+
+def test_pinned_plans_are_declared(registry_plan_hazards):
+    _, _, pinned = registry_plan_hazards
+    assert pinned == set(PINNED_PLANS), (
+        f"newly pinned: {sorted(pinned - set(PINNED_PLANS))}; "
+        f"no longer pinned: {sorted(set(PINNED_PLANS) - pinned)}"
+    )
 
 
 def test_round16_dispersion_grid_joins_broadcast(spark, sf_dir):

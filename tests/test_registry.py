@@ -1,312 +1,28 @@
-"""Driver-verification window ordering (registry.py).
-
-The correctness driver checks only the first 50 names of
-``registry.all_queries()`` per round, so the ordering IS the
-verification schedule.  These tests pin the schedule's derivation from
-the committed CORRECTNESS_r*.json artifacts: failed-latest-check
-queries re-front, never-checked queries come next (oracle-backed
-first), and green queries rotate oldest-vintage-first.
-"""
+"""Query registry contract (registry.py): ``all_queries()`` is every
+registered query in registration order, and no committed query name
+ever silently disappears."""
 
 from __future__ import annotations
 
-import json
+import pytest
 
 from spark_lever_spark import registry
 
 
-def _write(tmp_path, rnd: int, rows: dict) -> None:
-    (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
-
-
-GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-BAD_HASH = {"rows_match": True, "schema_match": True, "hash_match": False, "err": None}
-ERR = {"rows_match": False, "schema_match": False, "hash_match": False, "err": "boom"}
-
-
-def test_last_green_takes_latest_round(tmp_path):
-    _write(tmp_path, 1, {"a": GREEN, "b": GREEN})
-    _write(tmp_path, 2, {"a": GREEN})
-    last_green, refront = registry._load_driver_checks(tmp_path)
-    assert last_green == {"a": 2, "b": 1}
-    assert refront == frozenset()
-
-
-def test_failed_latest_check_refronts(tmp_path):
-    _write(tmp_path, 1, {"a": GREEN, "b": GREEN, "c": GREEN})
-    _write(tmp_path, 2, {"a": ERR, "b": BAD_HASH})
-    last_green, refront = registry._load_driver_checks(tmp_path)
-    # a/b keep their round-1 green vintage but must re-front because
-    # their LATEST check failed; c stays plain green.
-    assert last_green == {"a": 1, "b": 1, "c": 1}
-    assert refront == {"a", "b"}
-
-
-def test_refront_clears_after_green_recheck(tmp_path):
-    _write(tmp_path, 1, {"a": ERR})
-    _write(tmp_path, 2, {"a": GREEN})
-    last_green, refront = registry._load_driver_checks(tmp_path)
-    assert last_green == {"a": 2}
-    assert refront == frozenset()
-
-
-def test_rows_only_green_counts(tmp_path):
-    # Rows-only (no-oracle) checks report rows_match without hash_match.
-    _write(tmp_path, 3, {"s": {"rows_match": True, "hash_match": None, "err": None}})
-    last_green, refront = registry._load_driver_checks(tmp_path)
-    assert last_green == {"s": 3}
-    assert refront == frozenset()
-
-
-def test_malformed_artifacts_degrade_to_never_checked(tmp_path):
-    (tmp_path / "CORRECTNESS_r01.json").write_text("{not json")
-    (tmp_path / "CORRECTNESS_r02.json").write_text('["a", "list"]')
-    last_green, refront = registry._load_driver_checks(tmp_path)
-    assert last_green == {}
-    assert refront == frozenset()
-
-
-def test_live_window_rotates_to_oldest_vintage():
-    """The real repo artifacts: window 50 must hold the least-recently
-    driver-checked queries (plus any refronts/never-checked), never a
-    re-run of the newest round's set."""
+def test_all_queries_in_registration_order():
+    """all_queries() exposes the registry in registration order, as a
+    copy: callers may mutate what they get without touching the
+    registry."""
     qs = registry.all_queries()
-    names = list(qs)
-    assert len(names) == len(set(names))
-    window = set(names[:50])
-    newest = max(registry._LAST_GREEN.values(), default=0)
-    # Changed-since-stamp queries legitimately re-enter the window even
-    # with a newest-round stamp: the stamp no longer covers their code.
-    newest_only = {
-        n
-        for n, rnd in registry._LAST_GREEN.items()
-        if rnd == newest
-        and n not in registry._REFRONT
-        and not (n in qs and registry._changed_since_stamp(qs[n]))
-    }
-    # Queries whose latest green check is the newest round sort last;
-    # they only enter the window if everything older already fits.
-    overlap = window & newest_only
-    older_or_new = [
-        n
-        for n in names
-        if n in registry._REFRONT or registry._LAST_GREEN.get(n, 0) < newest
-    ]
-    assert not overlap or len(older_or_new) < 50
+    assert list(qs) == list(registry._REGISTRY)
+    qs.pop(next(iter(qs)))
+    assert registry.all_queries().keys() == registry._REGISTRY.keys()
 
 
-def test_never_checked_oracle_queries_lead_green_requeue():
-    """A query with no CORRECTNESS row anywhere must sort before every
-    already-green query (the driver should spend budget on new
-    information first)."""
-    qs = registry.all_queries()
-    groups = [registry._driver_group(q)[0] for q in qs.values()]
-    # group ids must be non-decreasing in the exposed order
-    assert groups == sorted(groups)
-
-
-def test_changed_since_stamp_refronts(monkeypatch):
-    """A green-stamped query whose implementation/oracle content hash no
-    longer matches the committed STAMP_HASHES.json record must sort into
-    group (1, -1): ahead of never-checked, behind latest-check-RED —
-    its stamp certifies code that no longer ships (VERDICT r9 task #1,
-    where seven round-9-modified queries would otherwise have waited ~4
-    rounds for the vintage rotation)."""
-    qs = registry.all_queries()
-    q = qs["q1_pricing_summary"]
-    assert registry._LAST_GREEN.get(q.name, 0) > 0, "needs a stamped query"
-
-    # Hash matches the record -> ordinary green-vintage group.
-    monkeypatch.setitem(registry._STAMP_HASHES, q.name, registry.content_hash(q))
-    assert registry._driver_group(q)[0] == 2
-
-    # Hash mismatch (query edited after its stamp) -> re-fronts.
-    monkeypatch.setitem(registry._STAMP_HASHES, q.name, "0" * 16)
-    assert registry._driver_group(q) == (1, -1)
-
-    # No sidecar record at all counts as changed — the safe direction.
-    monkeypatch.delitem(registry._STAMP_HASHES, q.name)
-    assert registry._driver_group(q) == (1, -1)
-
-    # A latest-check-RED query still outranks changed-since-stamp.
-    monkeypatch.setattr(registry, "_REFRONT", frozenset({q.name}))
-    assert registry._driver_group(q) == (0, 0)
-
-
-def test_stamp_hashes_sidecar_covers_all_stamped_queries():
-    """Every green-stamped query must either have a sidecar hash that
-    matches its current content (stamp still valid) or sort into the
-    re-front group — i.e. the sidecar can never silently go stale."""
-    for q in registry.all_queries().values():
-        if registry._LAST_GREEN.get(q.name, 0) == 0:
-            continue
-        recorded = registry._STAMP_HASHES.get(q.name)
-        if recorded == registry.content_hash(q):
-            assert registry._driver_group(q)[0] == 2 or q.name in registry._REFRONT
-        else:
-            assert registry._driver_group(q)[0] <= 1
-
-
-def _git(tmp_path, *args):
-    import subprocess
-
-    subprocess.run(
-        ["git", *args], cwd=tmp_path, check=True, capture_output=True,
-        env={"PATH": "/usr/bin:/bin", "HOME": str(tmp_path),
-             "GIT_AUTHOR_NAME": "t", "GIT_AUTHOR_EMAIL": "t@t",
-             "GIT_COMMITTER_NAME": "t", "GIT_COMMITTER_EMAIL": "t@t"},
-    )
-
-
-def test_sync_stamp_hashes_heals_missing_round(tmp_path):
-    """bench.py's round-start guard (VERDICT r15 task #6): a sidecar
-    missing the latest CORRECTNESS round's stamps is regenerated in
-    place for queries whose source is untouched since the artifact
-    landed, so a forgotten scripts/stamp_hashes.py run no longer wastes
-    a 50-query driver window."""
-    _git(tmp_path, "init", "-q")
-    _write(tmp_path, 99, {"q1_pricing_summary": GREEN, "join_inner": GREEN})
-    _git(tmp_path, "add", "-A")
-    _git(tmp_path, "commit", "-qm", "artifact")
-
-    # No sidecar at all -> both r99 stamps healed (tmp repo's diff vs
-    # the artifact commit is empty, so no source counts as changed).
-    msg = registry.sync_stamp_hashes(tmp_path)
-    assert "healed 2 r99 stamps" in msg, msg
-    sidecar = json.loads((tmp_path / "STAMP_HASHES.json").read_text())
-    q = registry.all_queries()["q1_pricing_summary"]
-    assert sidecar["q1_pricing_summary"] == {
-        "round": 99,
-        "hash": registry.content_hash(q),
-    }
-
-    # Second call is a no-op: fresh.
-    assert "fresh through r99" in registry.sync_stamp_hashes(tmp_path)
-
-
-def test_sync_stamp_hashes_skips_edited_sources(tmp_path, monkeypatch):
-    """A query whose source FILE changed since the artifact commit must
-    NOT be healed — the current hash no longer matches what the driver
-    verified, and the query legitimately re-fronts."""
-    import subprocess
-
-    _git(tmp_path, "init", "-q")
-    _write(tmp_path, 99, {"q1_pricing_summary": GREEN, "join_inner": GREEN})
-    _git(tmp_path, "add", "-A")
-    _git(tmp_path, "commit", "-qm", "artifact")
-
-    import inspect as _inspect
-    from pathlib import Path
-
-    q1_file = str(
-        Path(_inspect.getfile(registry.all_queries()["q1_pricing_summary"].fn))
-        .resolve()
-        .relative_to(Path(registry.__file__).resolve().parent.parent)
-    )
-    real_run = subprocess.run
-
-    def fake_run(cmd, **kw):
-        if cmd[:2] == ["git", "diff"]:
-            r = real_run(cmd, **kw)
-            r.stdout = q1_file + "\n"
-            return r
-        return real_run(cmd, **kw)
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    msg = registry.sync_stamp_hashes(tmp_path)
-    assert "healed 1 r99 stamps" in msg and "q1_pricing_summary" in msg, msg
-    sidecar = json.loads((tmp_path / "STAMP_HASHES.json").read_text())
-    assert "join_inner" in sidecar and "q1_pricing_summary" not in sidecar
-
-
-def test_sync_stamp_hashes_fails_closed_on_git_error(tmp_path, monkeypatch):
-    """ADVICE r16 (medium): a nonzero `git diff` exit leaves stdout
-    empty, which must degrade to the run-the-script message — NOT read
-    as 'nothing changed' and certify every stale query."""
-    import subprocess
-
-    _git(tmp_path, "init", "-q")
-    _write(tmp_path, 99, {"q1_pricing_summary": GREEN})
-    _git(tmp_path, "add", "-A")
-    _git(tmp_path, "commit", "-qm", "artifact")
-
-    real_run = subprocess.run
-
-    def fake_run(cmd, **kw):
-        r = real_run(cmd, **kw)
-        if cmd[:2] == ["git", "diff"]:
-            r.returncode, r.stdout = 128, ""
-        return r
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    msg = registry.sync_stamp_hashes(tmp_path)
-    assert "run scripts/stamp_hashes.py" in msg, msg
-    assert not (tmp_path / "STAMP_HASHES.json").exists()
-
-
-def test_sync_stamp_hashes_skips_helper_module_edits(tmp_path, monkeypatch):
-    """ADVICE r16 (medium): an oracle composed at import time from a
-    helper in ANOTHER module (round16 splices round14c's _WC_CTE)
-    changes content hash when the helper file is edited, while the
-    query's own file stays untouched — sync must still skip it."""
-    import subprocess
-
-    target = "chebyshev_coverage_audit"  # lives in operators/round16.py,
-    # which imports helpers from operators/round14c.py
-    _git(tmp_path, "init", "-q")
-    _write(tmp_path, 99, {target: GREEN, "join_inner": GREEN})
-    _git(tmp_path, "add", "-A")
-    _git(tmp_path, "commit", "-qm", "artifact")
-
-    real_run = subprocess.run
-
-    def fake_run(cmd, **kw):
-        r = real_run(cmd, **kw)
-        if cmd[:2] == ["git", "diff"]:
-            r.stdout = "spark_lever_spark/operators/round14c.py\n"
-        return r
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    msg = registry.sync_stamp_hashes(tmp_path)
-    assert "healed 1 r99 stamps" in msg and target in msg, msg
-    sidecar = json.loads((tmp_path / "STAMP_HASHES.json").read_text())
-    assert "join_inner" in sidecar and target not in sidecar
-
-
-def test_sync_stamp_hashes_counts_untracked_files_as_changed(
-    tmp_path, monkeypatch
-):
-    """ADVICE r16 (medium, tail case): `git diff` never lists UNTRACKED
-    files, so an untracked helper module a query's oracle splices from
-    must still taint it — ls-files --others feeds the same changed set."""
-    import subprocess
-
-    _git(tmp_path, "init", "-q")
-    _write(tmp_path, 99, {"q1_pricing_summary": GREEN, "join_inner": GREEN})
-    _git(tmp_path, "add", "-A")
-    _git(tmp_path, "commit", "-qm", "artifact")
-
-    import inspect as _inspect
-    from pathlib import Path
-
-    q1_file = str(
-        Path(_inspect.getfile(registry.all_queries()["q1_pricing_summary"].fn))
-        .resolve()
-        .relative_to(Path(registry.__file__).resolve().parent.parent)
-    )
-    real_run = subprocess.run
-
-    def fake_run(cmd, **kw):
-        r = real_run(cmd, **kw)
-        if cmd[:2] == ["git", "ls-files"]:
-            r.stdout = q1_file + "\n"
-        return r
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    msg = registry.sync_stamp_hashes(tmp_path)
-    assert "healed 1 r99 stamps" in msg and "q1_pricing_summary" in msg, msg
-    sidecar = json.loads((tmp_path / "STAMP_HASHES.json").read_text())
-    assert "join_inner" in sidecar and "q1_pricing_summary" not in sidecar
+def test_register_rejects_duplicate_names():
+    name = next(iter(registry.all_queries()))
+    with pytest.raises(ValueError, match="duplicate query name"):
+        registry.register(name, oracle=None)(lambda spark, sf_dir: None)
 
 
 def test_no_silent_deregistration():
@@ -329,24 +45,3 @@ def test_no_silent_deregistration():
     assert not new, (
         f"new queries not yet in registry_names.txt (regenerate it): {sorted(new)}"
     )
-
-
-def test_import_re_captures_every_module_of_multi_import_line():
-    """ADVICE r17 (low): the plain-import branch used to capture only
-    the FIRST module of `import spark_lever_spark.a, spark_lever_spark.b`
-    — an edit to the second escaped the taint closure (fail-open). The
-    regex now captures the whole name list and the closure splits it on
-    commas, keeping package-prefixed names (including mixed lines where
-    a stdlib module leads)."""
-    src = (
-        "import os, spark_lever_spark.llm.dedup, "
-        "spark_lever_spark.llm.graph as g\n"
-    )
-    m = registry._IMPORT_RE.search(src)
-    assert m is not None and m.group(3)
-    mods = [x.split(" as ")[0].strip() for x in m.group(3).split(",")]
-    kept = [x for x in mods if x.startswith("spark_lever_spark")]
-    assert kept == [
-        "spark_lever_spark.llm.dedup",
-        "spark_lever_spark.llm.graph",
-    ]

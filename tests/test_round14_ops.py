@@ -1,5 +1,5 @@
 """Independent-reference checks for the round-14 operator batch
-(registered in round 13, defer-window tagged) — the house "simulator
+(registered in round 13) — the house "simulator
 equality" pattern: plain-Python replays so a shared SQL-side
 misconception cannot hide in both engines.
 """
