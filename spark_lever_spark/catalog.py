@@ -49,17 +49,14 @@ def _ensure_parity_confs(spark: SparkSession) -> None:
         pass  # conf locked down — session.py defaults already cover it
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table, normalizing timestamps to exactly ONE type
-    (TIMESTAMP, i.e. LTZ under the pinned-UTC session) no matter how the
-    driver regenerates the parquet. The generator has shipped the same
-    column as TIMESTAMP(NANOS) (surfaces as long under nanosAsLong) and
-    as plain timestamp[us] (surfaces as TIMESTAMP_NTZ, which Spark
-    forbids in unix_micros / numeric casts); every downstream operator
-    is written against the single post-catalog type."""
-    _ensure_parity_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
-
+def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """Normalize a scan of table ``name`` (batch or streaming) to exactly
+    ONE timestamp type: TIMESTAMP, i.e. LTZ under the pinned-UTC
+    session. The generator has shipped the same column as
+    TIMESTAMP(NANOS) (surfaces as long under nanosAsLong) and as plain
+    timestamp[us] (surfaces as TIMESTAMP_NTZ, which Spark forbids in
+    unix_micros / numeric casts); every downstream operator is written
+    against the single post-catalog type."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -84,6 +81,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if ntz_casts:
         df = df.withColumns(ntz_casts)
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one table with its timestamps normalized
+    (``normalize_timestamps``) whichever way the parquet encodes them."""
+    _ensure_parity_confs(spark)
+    return normalize_timestamps(spark.read.parquet(table_path(sf_dir, name)), name)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -179,6 +183,17 @@ def _scan_width_estimate(df: DataFrame) -> int | None:
         return len(files)  # advisory: remote/unsizable listing
 
 
+def default_parallelism(df: DataFrame) -> int:
+    """The session's target task parallelism (classic mode), falling
+    back to the shuffle-partition conf under Spark Connect."""
+    try:
+        return df.sparkSession.sparkContext.defaultParallelism
+    except Exception:  # Spark Connect: no sparkContext
+        return int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+
+
 def spread_scan(
     df: DataFrame, key: str | None = None, default_narrow: bool = False
 ) -> DataFrame:
@@ -206,15 +221,7 @@ def spread_scan(
     whose downstream stage is expensive enough that under-parallelism
     costs more than one shuffle of the input (the minhash signature
     map, ADVICE r16)."""
-    try:
-        par = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext
-        try:
-            par = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-            )
-        except Exception:
-            return df
+    par = default_parallelism(df)
     width = _scan_width_estimate(df)
     if width is None:
         if not default_narrow:

@@ -6,20 +6,20 @@ re-places *input* data across heterogeneous nodes between micro-batches
 reference tree). Structured Streaming owns source->partition placement,
 so this re-creation actuates at the shuffle boundary instead: the same
 controller (metrics -> capability -> straggler sets -> reassignment
-plan) drives a *weighted repartition* injected ahead of heavy stages,
-plus rate-based admission control and speculation/exclusion knobs.
+plan) drives a *weighted repartition* injected ahead of heavy stages.
 
 Modules:
-- model:        config + metric dataclasses (flags mirror the reference)
+- model:        config (the reference's three thresholds) + metric
+                dataclasses
 - classifier:   quartile straggler classification + rate-drift
                 confirmation (TaskSetManager.scala:787-819,
                 JobMonitor.scala:204-297)
 - capability:   per-host capability estimation (JobMonitor.scala:303-332)
-- strategies:   proportion / greedy / two-choice / power-of-two plans +
-                escalation selector (JobMonitor.scala:353-547)
+- strategies:   proportion / two-choice plans + the escalation
+                selector between them (JobMonitor.scala:353-516)
 - balancer:     the per-batch control loop tying the above together
-- actuator:     weighted repartition / admission control / dynamic batch
-                sizing (RecurringTimer.scala:64-86) on the Spark side
+- actuator:     weighted repartition / dynamic batch sizing
+                (RecurringTimer.scala:64-86) on the Spark side
 - metrics:      StreamingQueryProgress -> BatchReport adapters
 """
 
@@ -32,7 +32,6 @@ from spark_lever_spark.lever.model import (
 from spark_lever_spark.lever.balancer import LeverBalancer
 from spark_lever_spark.lever.actuator import (
     DynamicBatchSizer,
-    admission_limits,
     partition_counts,
     weighted_repartition,
 )
@@ -44,7 +43,6 @@ __all__ = [
     "LeverBalancer",
     "LeverConfig",
     "Plan",
-    "admission_limits",
     "partition_counts",
     "weighted_repartition",
 ]

@@ -10,15 +10,17 @@ the equivalent lever here is the *shuffle boundary*:
   cluster, fewer/lighter partitions on a straggler host means its tasks
   finish with everyone else — same objective as block migration (equal
   per-node finish time), actuated one stage later.
-- ``admission_limits``: rate-based admission per source — the analog of
-  the reference's dynamic batch sizing applied to
-  ``maxOffsetsPerTrigger``/``maxFilesPerTrigger`` style knobs.
 - ``DynamicBatchSizer``: the SoCC'14 fixed-point batch-interval
   iteration verbatim (RecurringTimer.scala:64-86), usable to retune a
-  ``processingTime`` trigger between restarts or to drive admission.
-- ``speculation_conf`` / ``exclusion_conf``: the Dolly-clone and
-  Wrangler-blacklist equivalents as modern Spark conf dicts
-  (TaskSchedulerImpl.scala:357-401; CoarseGrainedSchedulerBackend.scala:123-139).
+  ``processingTime`` trigger between restarts; ``adaptive_file_drain``
+  runs it against a bounded file backlog.
+- ``apply_plan``: the ``foreachBatch`` entry point over
+  ``weighted_repartition``.
+
+Dolly task cloning and Wrangler executor exclusion need no engine code
+here: Spark's built-in ``spark.speculation`` and
+``spark.excludeOnFailure.*`` confs subsume them
+(TaskSchedulerImpl.scala:357-401; CoarseGrainedSchedulerBackend.scala:123-139).
 """
 
 from __future__ import annotations
@@ -148,18 +150,6 @@ def partition_sizes(df: DataFrame) -> list[int]:
         .collect()
     )
     return [r["count"] for r in rows]
-
-
-def admission_limits(
-    weights: dict[str, float], total_rows_per_trigger: int
-) -> dict[str, int]:
-    """Split a global per-trigger row budget across sources/hosts by
-    weight — the ``maxOffsetsPerTrigger`` analog of the reference's
-    receiver-side rate control (RateLimiter.scala:75-88)."""
-    return {
-        h: max(int(round(w * total_rows_per_trigger)), 1)
-        for h, w in weights.items()
-    }
 
 
 # Measured on this stack (BASELINE.md, round-7 trigger-overhead
@@ -329,27 +319,6 @@ def adaptive_file_drain(
     finally:
         shutil.rmtree(staging, ignore_errors=True)
         shutil.rmtree(ck, ignore_errors=True)
-
-
-def speculation_conf(quantile: float = 0.75, multiplier: float = 1.5) -> dict[str, str]:
-    """Modern equivalent of Dolly task cloning
-    (TaskSchedulerImpl.scala:357-401): built-in speculative execution
-    subsumes clone-and-kill-loser."""
-    return {
-        "spark.speculation": "true",
-        "spark.speculation.quantile": str(quantile),
-        "spark.speculation.multiplier": str(multiplier),
-    }
-
-
-def exclusion_conf() -> dict[str, str]:
-    """Modern equivalent of Wrangler utilization blacklisting
-    (CoarseGrainedSchedulerBackend.scala:123-139): health-based executor
-    exclusion."""
-    return {
-        "spark.excludeOnFailure.enabled": "true",
-        "spark.excludeOnFailure.killExcludedExecutors": "false",
-    }
 
 
 def apply_plan(

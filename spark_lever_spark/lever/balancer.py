@@ -21,6 +21,10 @@ from spark_lever_spark.lever.classifier import (
 )
 from spark_lever_spark.lever.model import BatchReport, LeverConfig, Plan
 
+# Wrangler utilization limits (CoarseGrainedSchedulerBackend.scala:132).
+EXCLUDE_CPU_PCT = 200.0
+EXCLUDE_MEM_PCT = 60.0
+
 
 class LeverBalancer:
     def __init__(self, config: LeverConfig | None = None) -> None:
@@ -30,17 +34,12 @@ class LeverBalancer:
         self._last_strategy: str | None = None
         self._last_delay_ms: float = 0.0
         self._last_plan: Plan | None = None
-        self.history: list[Plan] = []
-
-    @property
-    def last_plan(self) -> Plan | None:
-        return self._last_plan
 
     def on_batch(self, report: BatchReport) -> Plan | None:
         """Feed one batch's metrics; returns a reassignment plan when
         the straggler trigger fires, else None."""
         cfg = self.config
-        if not cfg.enabled or not report.samples:
+        if not report.samples:
             return None
 
         runtimes = report.runtimes
@@ -78,9 +77,12 @@ class LeverBalancer:
             h: (s.input_rate if s.input_rate > 0 else s.handled_bytes)
             for h, s in report.samples.items()
         }
-        plan = strategies.build_plan(
-            strategy, final.helpee, final.helper, capability, load, cfg.seed
+        build = (
+            strategies.two_choice_plan
+            if strategy == strategies.TWO_CHOICE
+            else strategies.proportion_plan
         )
+        plan = build(final.helpee, final.helper, capability, load)
         self._last_strategy = strategy
         self._last_final_helper = set(final.helper)
         self._remember(report, new_rates, plan)
@@ -96,7 +98,6 @@ class LeverBalancer:
         self._last_delay_ms = report.total_delay_ms
         if plan is not None:
             self._last_plan = plan
-            self.history.append(plan)
 
     def target_weights(self, report: BatchReport) -> dict[str, float]:
         """Absolute per-host load weights for the next batch: the last
@@ -117,12 +118,11 @@ class LeverBalancer:
         the reference, WorkerMonitor.scala:65-129). On modern Spark the
         enforcement knob is ``spark.excludeOnFailure.*`` / decommission;
         here we surface the decision."""
-        cfg = self.config
         out: set[str] = set()
         for host, s in report.samples.items():
-            if s.cpu_pct is not None and s.cpu_pct >= cfg.exclude_cpu_pct:
+            if s.cpu_pct is not None and s.cpu_pct >= EXCLUDE_CPU_PCT:
                 out.add(host)
-            elif s.mem_pct is not None and s.mem_pct >= cfg.exclude_mem_pct:
+            elif s.mem_pct is not None and s.mem_pct >= EXCLUDE_MEM_PCT:
                 out.add(host)
             elif (
                 s.load_avg is not None

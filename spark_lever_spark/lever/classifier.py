@@ -76,7 +76,8 @@ def confirm_with_rates(
     derived from a (median/P25) and b (P75/median):
 
     - potential helpee: r < 1/(a*b) -> helper; <= 1/b -> median; else
-      confirmed helpee (unless it was a confirmed helper last round).
+      confirmed helpee, or median if it was a confirmed helper last
+      round. A missing rate counts as "else".
     - potential median: r < 1/a -> helper; <= b -> median; else helpee.
     - potential helper: r < a -> helper; <= a*b -> median; else helpee.
     """
@@ -96,16 +97,14 @@ def confirm_with_rates(
 
     for host in potential.helpee:
         r = drift(host)
-        if r is None:
-            final.helpee.add(host)  # no rate signal: trust runtimes
-        elif r < 1.0 / (a * b):
+        if r is not None and r < 1.0 / (a * b):
             final.helper.add(host)
-        elif r <= 1.0 / b:
+        elif r is not None and r <= 1.0 / b:
             final.median.add(host)
+        elif host in last_final_helper:
+            final.median.add(host)  # never straight from helper to helpee
         else:
-            final.helpee.add(host)
-        if host in last_final_helper:
-            final.helpee.discard(host)
+            final.helpee.add(host)  # still slow; a missing rate trusts runtimes
 
     for host in potential.median:
         r = drift(host)

@@ -1,18 +1,18 @@
 """Config + metric dataclasses for the Lever-equivalent balancer.
 
-Flag names and default operating points mirror the reference fork's
-code-embedded constants (BASELINE.md §A):
+``LeverConfig`` holds the reference fork's three tunable thresholds,
+defaulting to its code-embedded operating points (BASELINE.md §A):
 
 - straggler trigger: per-host runtime spread >= 300 ms
   (JobMonitor.scala:175)
 - helper margin inside the interquartile band: 600 ms
   (TaskSetManager.scala:805)
-- escalation to two-choice: |helpee| x |helper| > 80 or last-batch delay
-  regression > 300 ms under proportion (JobMonitor.scala:360)
-- dynamic batch occupancy target 0.75, 5-batch warm-up
-  (RecurringTimer.scala:68-86,147-151)
-- utilization exclusion: cpu >= 200 %, mem >= 60 %, loadavg >= cores
-  (CoarseGrainedSchedulerBackend.scala:132)
+- escalation to two-choice after a last-batch delay regression > 300 ms
+  under proportion (JobMonitor.scala:360)
+
+The reference's fixed constants live next to their one reader:
+``strategies.ESCALATION_PRODUCT`` and the ``balancer.EXCLUDE_*``
+utilization limits.
 """
 
 from __future__ import annotations
@@ -22,20 +22,9 @@ from dataclasses import dataclass, field
 
 @dataclass(frozen=True)
 class LeverConfig:
-    enabled: bool = True
-    # 'auto' applies the reference's selector; or force one of
-    # 'proportion' | 'greedy' | 'two_choice' | 'power_of_two'.
-    strategy: str = "auto"
     trigger_spread_ms: float = 300.0
     helper_margin_ms: float = 600.0
-    escalation_product: int = 80
     regression_ms: float = 300.0
-    occupancy_target: float = 0.75
-    warmup_batches: int = 5
-    exclude_cpu_pct: float = 200.0
-    exclude_mem_pct: float = 60.0
-    # deterministic seed for the power-of-two random helper choice
-    seed: int = 42
 
 
 @dataclass

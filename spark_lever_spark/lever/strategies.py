@@ -1,14 +1,15 @@
-"""Reassignment-plan strategies (reference JobMonitor.scala:389-547).
+"""Reassignment-plan strategies and the selector between them
+(reference JobMonitor.scala:353-516).
 
 Each strategy answers: for every helpee (confirmed straggler), what
 share of its next-batch load should stay and what share moves to which
 helper? Shares are expressed relative to the helpee's current load and
-sum to 1 per helpee.
+sum to 1 per helpee. The reference's selector only ever picks
+proportion or two-choice, so those are the two plans built here.
 
 Notes on faithfulness: the reference file cannot compile as-is (it
 flips ``load/cap`` vs ``cap/load`` between the first and second half of
-``twoChoiceStrategy``, and greedy's load update subtracts the keep-share
-instead of assigning it). We implement the documented *intent* — spare
+``twoChoiceStrategy``). We implement the documented *intent* — spare
 capacity ratio = capability / current load, helpee keeps its
 fair-by-capability share — and clamp/renormalize shares to [0, 1] so a
 pathological input can never produce a negative split.
@@ -16,14 +17,14 @@ pathological input can never produce a negative split.
 
 from __future__ import annotations
 
-import random
-
 from spark_lever_spark.lever.model import LeverConfig, Plan
 
 PROPORTION = "proportion"
-GREEDY = "greedy"
 TWO_CHOICE = "two_choice"
-POWER_OF_TWO = "power_of_two"
+
+# Escalate to two-choice above this |helpee| x |helper| product: the
+# proportion plan's cost grows with it (JobMonitor.scala:360).
+ESCALATION_PRODUCT = 80
 
 
 def _normalize(shares: dict[str, float]) -> dict[str, float]:
@@ -71,33 +72,6 @@ def _spare_ratio(capability: dict[str, float], load: dict[str, float]) -> dict[s
     }
 
 
-def greedy_plan(
-    helpees: set[str],
-    helpers: set[str],
-    capability: dict[str, float],
-    load: dict[str, float],
-) -> Plan:
-    """Assign each helpee's surplus to the single helper with the
-    largest spare-capacity ratio cap/load, updating loads after each
-    assignment so successive helpees spread out
-    (JobMonitor.scala:427-463)."""
-    load = dict(load)
-    ratios: dict[str, dict[str, float]] = {}
-    for a in sorted(helpees):
-        ratio = _spare_ratio(capability, load)
-        hs = [h for h in helpers if h != a and h in ratio]
-        if not hs or a not in ratio:
-            continue
-        best = max(hs, key=lambda h: ratio[h])
-        denom = ratio[best] + ratio[a]
-        shares = _normalize({a: ratio[a] / denom, best: ratio[best] / denom})
-        orig = load[a]
-        load[best] = load.get(best, 0.0) + orig * shares[best]
-        load[a] = orig * shares[a]
-        ratios[a] = shares
-    return Plan(strategy=GREEDY, ratios=ratios)
-
-
 def two_choice_plan(
     helpees: set[str],
     helpers: set[str],
@@ -133,34 +107,6 @@ def two_choice_plan(
     return Plan(strategy=TWO_CHOICE, ratios=ratios)
 
 
-def power_of_two_plan(
-    helpees: set[str],
-    helpers: set[str],
-    capability: dict[str, float],
-    load: dict[str, float],
-    seed: int = 42,
-) -> Plan:
-    """Pick two helpers uniformly at random per helpee, then split
-    proportionally to spare capacity (JobMonitor.scala:524-547) — the
-    classic power-of-two-choices trick: near-best balance at O(1)
-    decision cost. Seeded for reproducibility (the reference used an
-    unseeded Random; tests need determinism)."""
-    rng = random.Random(seed)
-    ratio = _spare_ratio(capability, load)
-    ratios: dict[str, dict[str, float]] = {}
-    for a in sorted(helpees):
-        hs = sorted(h for h in helpers if h != a and h in ratio)
-        if not hs or a not in ratio:
-            continue
-        picks = hs if len(hs) <= 2 else rng.sample(hs, 2)
-        denom = ratio[a] + sum(ratio[h] for h in picks)
-        shares = {a: ratio[a] / denom}
-        for h in picks:
-            shares[h] = ratio[h] / denom
-        ratios[a] = _normalize(shares)
-    return Plan(strategy=POWER_OF_TWO, ratios=ratios)
-
-
 def select_strategy(
     n_helpee: int,
     n_helper: int,
@@ -172,33 +118,13 @@ def select_strategy(
     """The reference's escalation rule (JobMonitor.scala:353-382):
     no helpees -> no plan; escalate from proportion to two-choice when
     the helpee x helper product exceeds 80 (plan cost) or the last
-    proportion plan regressed total delay by > 300 ms; otherwise
-    proportion. A forced config.strategy overrides."""
+    proportion plan regressed total delay by more than
+    ``config.regression_ms``; otherwise proportion."""
     if n_helpee == 0 or n_helper == 0:
         return None
-    if config.strategy != "auto":
-        return config.strategy
-    escalate = (n_helpee * n_helper > config.escalation_product) or (
+    escalate = (n_helpee * n_helper > ESCALATION_PRODUCT) or (
         last_strategy == PROPORTION
         and (this_delay_ms - last_delay_ms) > config.regression_ms
     )
     return TWO_CHOICE if escalate else PROPORTION
 
-
-def build_plan(
-    strategy: str,
-    helpees: set[str],
-    helpers: set[str],
-    capability: dict[str, float],
-    load: dict[str, float],
-    seed: int = 42,
-) -> Plan:
-    if strategy == PROPORTION:
-        return proportion_plan(helpees, helpers, capability, load)
-    if strategy == GREEDY:
-        return greedy_plan(helpees, helpers, capability, load)
-    if strategy == TWO_CHOICE:
-        return two_choice_plan(helpees, helpers, capability, load)
-    if strategy == POWER_OF_TWO:
-        return power_of_two_plan(helpees, helpers, capability, load, seed)
-    raise ValueError(f"unknown strategy: {strategy}")

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_lever_spark.catalog import load_table
+from spark_lever_spark.catalog import default_parallelism, load_table, spread_scan
 from spark_lever_spark.llm.similarity import as_double, cosine
 from spark_lever_spark.registry import register
 
@@ -1019,11 +1019,6 @@ def mutual_nn_int8_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
-    from spark_lever_spark.llm.similarity import (
-        default_parallelism,
-        spread_to_parallelism,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # Spread the single-partition scan and persist the quantized
     # table: q feeds FIVE consumers (the k count, the centroid prefix,
@@ -1031,7 +1026,7 @@ def mutual_nn_int8_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each one replays the scan+quantize as its own serialized job
     # (optimization r18, guide §2.4/§5 recompute elimination).
     # Released below once the top-1 neighbor table is pinned.
-    b = spread_to_parallelism(
+    b = spread_scan(
         emb.select("vec_id", as_double(F.col("embedding")).alias("l"))
     )
     sc = b.agg(
@@ -1381,8 +1376,6 @@ def embedding_top_pc_power_iteration(
     # serialized the whole Gram pass on one core — the r18 bench read
     # 5.17 s (2.08x gate) against 0.9 s once spread. No-op when the
     # input already scans at session parallelism (cluster scale).
-    from spark_lever_spark.catalog import spread_scan
-
     q = spread_scan(q)
     g = (
         q.select(
@@ -1749,17 +1742,12 @@ def lof_outliers_int8_cells(
     from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
-    from spark_lever_spark.llm.similarity import (
-        default_parallelism,
-        spread_to_parallelism,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # Spread the single-partition scan and persist the quantized table
     # (FOUR consumers: the k count, centroid prefix, the N·kc probe
     # stage, and the cell re-join) — the mutual_nn_int8_ivf treatment
     # (optimization r18, guide §2.4/§5). Released once knn is pinned.
-    b = spread_to_parallelism(
+    b = spread_scan(
         emb.select("vec_id", as_double(F.col("embedding")).alias("l"))
     )
     sc = b.agg(

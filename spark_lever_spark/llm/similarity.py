@@ -28,31 +28,6 @@ def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def default_parallelism(df: DataFrame) -> int:
-    """The session's target task parallelism (classic mode), falling
-    back to the shuffle-partition conf under Spark Connect."""
-    try:
-        return df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext
-        return int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-
-
-def spread_to_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin-repartition `df` up to the session's default
-    parallelism when its scan is narrower — a thin alias for
-    ``catalog.spread_scan`` (r19 consolidation: one helper, one cheap
-    file-based width probe; VERDICT r18 task #6). At cluster scale a
-    real corpus scans >= parallelism partitions and this is a no-op.
-    Row-to-partition assignment is deterministic under retry
-    (sort-before-repartition is on by default), and every caller's
-    result is per-row deterministic regardless of partitioning."""
-    from spark_lever_spark.catalog import spread_scan
-
-    return spread_scan(df)
-
-
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<double> columns (JVM-side fold)."""
     return F.aggregate(

@@ -22,7 +22,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_lever_spark.catalog import _ensure_parity_confs, table_path
+from spark_lever_spark.catalog import (
+    _ensure_parity_confs,
+    normalize_timestamps,
+    table_path,
+)
 from spark_lever_spark.registry import register
 
 
@@ -64,24 +68,9 @@ def _stream_table(
         .option("maxFilesPerTrigger", str(files_per_trigger))
         .parquet(d)
     )
-    from pyspark.sql import types as T
-
-    if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
-        # integer division — see catalog.load_table: double division
-        # corrupts the microsecond digit at 2024-era nano magnitudes
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    # mirror catalog.load_table's TIMESTAMP_NTZ -> TIMESTAMP
-    # normalization so the stream side carries the same single
-    # timestamp type as the batch side (stream-static joins and any
-    # future epoch math would otherwise meet mixed types)
-    ntz = {
-        f.name: F.col(f.name).cast(T.TimestampType())
-        for f in sdf.schema.fields
-        if isinstance(f.dataType, T.TimestampNTZType)
-    }
-    if ntz:
-        sdf = sdf.withColumns(ntz)
-    return sdf
+    # the same single timestamp type as the batch side, so stream-static
+    # joins and epoch math never meet mixed types
+    return normalize_timestamps(sdf, name)
 
 
 class _bounded_shuffle:

@@ -10,9 +10,13 @@ import math
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from spark_lever_spark.lever.actuator import admission_limits, partition_counts
+from spark_lever_spark.lever.actuator import partition_counts
 from spark_lever_spark.lever.capability import estimate_capability
-from spark_lever_spark.lever.classifier import classify_quartiles
+from spark_lever_spark.lever.classifier import (
+    Classification,
+    classify_quartiles,
+    confirm_with_rates,
+)
 from spark_lever_spark.lever import strategies as S
 
 hosts = st.lists(
@@ -63,12 +67,7 @@ def test_every_strategy_emits_normalized_shares(hs, data):
     helpers = set(hs[1:])
     cap = {h: data.draw(pos) for h in hs}
     load = {h: data.draw(pos) for h in hs}
-    for build in (
-        S.proportion_plan,
-        S.greedy_plan,
-        S.two_choice_plan,
-        lambda a, b, c, d: S.power_of_two_plan(a, b, c, d, seed=7),
-    ):
+    for build in (S.proportion_plan, S.two_choice_plan):
         plan = build(helpee, helpers, cap, load)
         for h, shares in plan.ratios.items():
             assert math.isclose(sum(shares.values()), 1.0, rel_tol=1e-9)
@@ -87,13 +86,23 @@ def test_capability_positive_for_sane_traces(hs, data):
     assert all(v > 0 for v in cap.values())
 
 
+rate = st.one_of(st.none(), st.floats(min_value=0.0, max_value=1e6, allow_nan=False))
+ratio = st.floats(min_value=1.0, max_value=100.0, allow_nan=False)
+
+
 @given(hosts, st.data())
-@settings(max_examples=60, deadline=None)
-def test_admission_limits_conserve_budget_approximately(hs, data):
-    weights = {h: data.draw(pos) for h in hs}
-    total_w = sum(weights.values())
-    weights = {h: w / total_w for h, w in weights.items()}
-    budget = data.draw(st.integers(min_value=100, max_value=1_000_000))
-    limits = admission_limits(weights, budget)
-    assert all(v >= 1 for v in limits.values())
-    assert abs(sum(limits.values()) - budget) <= len(hs)
+@settings(max_examples=200, deadline=None)
+def test_confirmation_partitions_all_hosts(hs, data):
+    """Every host lands in exactly one confirmed set, whatever its rate
+    drift and whether it was last round's helper."""
+    potential = Classification(
+        a_median_to_helper=data.draw(ratio), b_helpee_to_median=data.draw(ratio)
+    )
+    for h in hs:
+        data.draw(st.sampled_from([potential.helpee, potential.median, potential.helper])).add(h)
+    old_rates = {h: r for h in hs if (r := data.draw(rate)) is not None}
+    new_rates = {h: r for h in hs if (r := data.draw(rate)) is not None}
+    last_helper = {h for h in hs if data.draw(st.booleans())}
+    final = confirm_with_rates(potential, old_rates, new_rates, last_helper)
+    assert final.helpee | final.median | final.helper == set(hs)
+    assert len(final.helpee) + len(final.median) + len(final.helper) == len(hs)
