@@ -18,9 +18,12 @@ Modules:
 - strategies:   proportion / two-choice plans + the escalation
                 selector between them (JobMonitor.scala:353-516)
 - balancer:     the per-batch control loop tying the above together
-- actuator:     weighted repartition / dynamic batch sizing
-                (RecurringTimer.scala:64-86) on the Spark side
-- metrics:      StreamingQueryProgress -> BatchReport adapters
+- actuator:     weighted repartition of a micro-batch on the Spark side
+- metrics:      per-task telemetry -> BatchReport roll-up
+
+One micro-batch of the live loop (perfbench/streamlever.LeverLoop):
+``metrics.TraceCollector`` -> ``LeverBalancer.on_batch`` ->
+``LeverBalancer.target_weights`` -> ``actuator.apply_plan``.
 """
 
 from spark_lever_spark.lever.model import (
@@ -31,14 +34,12 @@ from spark_lever_spark.lever.model import (
 )
 from spark_lever_spark.lever.balancer import LeverBalancer
 from spark_lever_spark.lever.actuator import (
-    DynamicBatchSizer,
     partition_counts,
     weighted_repartition,
 )
 
 __all__ = [
     "BatchReport",
-    "DynamicBatchSizer",
     "HostSample",
     "LeverBalancer",
     "LeverConfig",

@@ -4,10 +4,9 @@ Wires classifier -> confirmation -> capability -> strategy selection
 into a single ``on_batch`` step, mirroring the reference's actor
 round-trip (JobSetFinished -> decidestraggler -> estimateCapability ->
 workReassignmentPlan -> DataReallocateTable, JobMonitor.scala:160-382)
-as plain driver-side Python. The emitted ``Plan`` is consumed by
-``actuator.weighted_repartition`` ahead of the next micro-batch's heavy
-stage, and ``exclude_hosts`` reproduces the Wrangler utilization
-blacklist (CoarseGrainedSchedulerBackend.scala:123-139).
+as plain driver-side Python. The emitted ``Plan`` is folded into
+per-host weights by ``target_weights`` and actuated by
+``actuator.apply_plan`` ahead of the next micro-batch's heavy stage.
 """
 
 from __future__ import annotations
@@ -20,10 +19,6 @@ from spark_lever_spark.lever.classifier import (
     confirm_with_rates,
 )
 from spark_lever_spark.lever.model import BatchReport, LeverConfig, Plan
-
-# Wrangler utilization limits (CoarseGrainedSchedulerBackend.scala:132).
-EXCLUDE_CPU_PCT = 200.0
-EXCLUDE_MEM_PCT = 60.0
 
 
 class LeverBalancer:
@@ -111,23 +106,3 @@ class LeverBalancer:
             return {h: v / total for h, v in load.items()}
         return self._last_plan.target_weights(load)
 
-    def exclude_hosts(self, report: BatchReport) -> set[str]:
-        """Wrangler-style utilization exclusion: cpu >= 200 %,
-        mem >= 60 %, or loadavg >= cores
-        (CoarseGrainedSchedulerBackend.scala:132; sampled per second in
-        the reference, WorkerMonitor.scala:65-129). On modern Spark the
-        enforcement knob is ``spark.excludeOnFailure.*`` / decommission;
-        here we surface the decision."""
-        out: set[str] = set()
-        for host, s in report.samples.items():
-            if s.cpu_pct is not None and s.cpu_pct >= EXCLUDE_CPU_PCT:
-                out.add(host)
-            elif s.mem_pct is not None and s.mem_pct >= EXCLUDE_MEM_PCT:
-                out.add(host)
-            elif (
-                s.load_avg is not None
-                and s.cores is not None
-                and s.load_avg >= s.cores
-            ):
-                out.add(host)
-        return out

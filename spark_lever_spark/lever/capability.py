@@ -16,15 +16,7 @@ implement.)
 
 from __future__ import annotations
 
-
-def _median(values: list[float]) -> float:
-    s = sorted(values)
-    n = len(s)
-    if n == 0:
-        return 0.0
-    if n % 2 == 0:
-        return (s[n // 2 - 1] + s[n // 2]) / 2.0
-    return s[n // 2]
+from statistics import median
 
 
 def estimate_capability(
@@ -37,7 +29,7 @@ def estimate_capability(
         return {}
     if any(h not in runtime_ms or runtime_ms[h] <= 0 for h in handled_bytes):
         return {}
-    t_ideal = _median(list(runtime_ms.values()))
+    t_ideal = median(runtime_ms.values())
     out: dict[str, float] = {}
     for host, size in handled_bytes.items():
         rt = runtime_ms[host]

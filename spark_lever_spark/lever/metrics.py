@@ -1,24 +1,21 @@
-"""Metrics plane: adapt Spark telemetry into ``BatchReport``s.
+"""Metrics plane: roll per-task telemetry up into ``BatchReport``s.
 
 The reference's metrics plane was three actor systems (executor ->
 WorkerMonitor -> JobMonitor; SURVEY.md §2.A L1-L3, L12). Modern Spark
-surfaces the same signals in-driver:
+surfaces the same signals in-driver, so ``TraceCollector`` takes the
+exact fields a ``SparkListener.onTaskEnd`` would forward (host, task
+runtime, bytes read) plus per-host input rates, and ``flush`` turns one
+batch of them into a ``BatchReport`` for ``LeverBalancer.on_batch``.
 
-- ``StreamingQueryProgress`` (per micro-batch): batch duration,
-  per-source input rate -> ``progress_to_report`` below.
-- ``SparkListener.onTaskEnd`` task metrics grouped by ``taskInfo.host``
-  (per-host runtime + bytesRead). Attaching a Java listener from Python
-  requires the py4j callback server; to stay robust in embedded/headless
-  runs we instead expose ``TraceCollector.record_task`` with the exact
-  fields a listener would forward — a thin bridge can feed it from
-  py4j, tests feed it synthetic traces, and local[k] runs have a single
-  host anyway.
+Its live feeder is perfbench's stream-lever loop
+(``perfbench/streamlever.LeverLoop``): before each micro-batch it reads
+the previous batch's task list from Spark's status API, maps tasks to
+hosts and calls ``record_task`` and ``flush``.
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
-from typing import Any
 
 from spark_lever_spark.lever.model import BatchReport, HostSample
 
@@ -64,28 +61,3 @@ class TraceCollector:
             samples=samples,
         )
 
-
-def progress_to_report(progress: dict[str, Any]) -> BatchReport:
-    """Convert a ``StreamingQueryProgress`` JSON dict (as handed to
-    ``StreamingQueryListener.onQueryProgress`` / ``query.lastProgress``)
-    into a single-host ``BatchReport`` — the local-mode view, where the
-    interesting signal is batch duration vs trigger interval (drives
-    ``DynamicBatchSizer`` and admission control)."""
-    duration = progress.get("durationMs", {}) or {}
-    total = float(duration.get("triggerExecution", 0.0))
-    rate = 0.0
-    for src in progress.get("sources", []) or []:
-        rate += float(src.get("inputRowsPerSecond") or 0.0)
-    batch_id = int(progress.get("batchId", 0))
-    sample = HostSample(
-        host="local",
-        runtime_ms=total,
-        handled_bytes=float(progress.get("numInputRows", 0) or 0),
-        input_rate=rate,
-    )
-    return BatchReport(
-        batch_id=batch_id,
-        total_delay_ms=total,
-        processing_delay_ms=total,
-        samples={"local": sample},
-    )

@@ -10,9 +10,8 @@ defaulting to its code-embedded operating points (BASELINE.md §A):
 - escalation to two-choice after a last-batch delay regression > 300 ms
   under proportion (JobMonitor.scala:360)
 
-The reference's fixed constants live next to their one reader:
-``strategies.ESCALATION_PRODUCT`` and the ``balancer.EXCLUDE_*``
-utilization limits.
+The reference's one fixed constant, the two-choice escalation product,
+lives next to its one reader: ``strategies.ESCALATION_PRODUCT``.
 """
 
 from __future__ import annotations
@@ -31,21 +30,14 @@ class LeverConfig:
 class HostSample:
     """One host's metrics for one micro-batch.
 
-    On a real cluster these come from SparkListener task metrics
-    aggregated by ``taskInfo.host`` (runtime, bytesRead) and
-    StreamingQueryProgress source rates; utilization fields come from an
-    OS sampler (the reference shelled out to ``top`` once a second,
-    WorkerMonitor.scala:79-129).
+    ``metrics.TraceCollector`` builds these from task metrics grouped by
+    host (runtime, bytes read) and per-host input rates.
     """
 
     host: str
     runtime_ms: float  # wall-clock of this host's tasks in the batch
     handled_bytes: float = 0.0  # bytes processed by this host
     input_rate: float = 0.0  # bytes/s currently routed to this host
-    cpu_pct: float | None = None
-    mem_pct: float | None = None
-    load_avg: float | None = None
-    cores: int | None = None
 
 
 @dataclass

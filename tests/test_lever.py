@@ -9,10 +9,10 @@ import dataclasses
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from spark_lever_spark.lever import (
     BatchReport,
-    DynamicBatchSizer,
     HostSample,
     LeverBalancer,
     LeverConfig,
@@ -20,10 +20,9 @@ from spark_lever_spark.lever import (
     partition_counts,
     weighted_repartition,
 )
-from spark_lever_spark.lever.actuator import partition_sizes
 from spark_lever_spark.lever.capability import estimate_capability
 from spark_lever_spark.lever.classifier import classify_quartiles, confirm_with_rates
-from spark_lever_spark.lever.metrics import TraceCollector, progress_to_report
+from spark_lever_spark.lever.metrics import TraceCollector
 from spark_lever_spark.lever import strategies
 
 
@@ -230,49 +229,6 @@ def test_balancer_plans_in_stream_lever_regime():
     assert weights["slow"] < 1.0 / len(runtimes)
 
 
-def test_balancer_wrangler_exclusion_thresholds():
-    bal = LeverBalancer()
-    samples = {
-        "hot-cpu": HostSample("hot-cpu", 1.0, cpu_pct=250.0),
-        "hot-mem": HostSample("hot-mem", 1.0, mem_pct=75.0),
-        "hot-load": HostSample("hot-load", 1.0, load_avg=9.0, cores=8),
-        "ok": HostSample("ok", 1.0, cpu_pct=50.0, mem_pct=30.0, load_avg=1.0, cores=8),
-    }
-    r = BatchReport(0, 0.0, 0.0, samples)
-    assert bal.exclude_hosts(r) == {"hot-cpu", "hot-mem", "hot-load"}
-
-
-# ------------------------------------------------------------ dynamic batch
-
-
-def test_dynamic_batch_converges_to_target_occupancy():
-    sizer = DynamicBatchSizer(initial_ms=1000.0, warmup=5)
-    # constant 600ms processing: steady state interval -> 600/0.75 = 800
-    for _ in range(20):
-        interval = sizer.on_batch(600.0)
-    assert math.isclose(interval, 800.0, rel_tol=0.01)
-    assert 600.0 <= 0.76 * interval  # occupancy ~at target
-
-
-def test_dynamic_batch_backs_off_on_worsening_occupancy():
-    # reference branch (RecurringTimer.scala:67-76): interval grew
-    # (lastBatch > secondLastBatch), occupancy worsened AND is over
-    # target -> back off to 0.75 x the second-last interval
-    sizer = DynamicBatchSizer(initial_ms=1000.0, warmup=0)
-    sizer.on_batch(900.0)  # seeds history
-    grown = sizer.on_batch(900.0)  # 900/0.75 = 1200 > 1000
-    assert math.isclose(grown, 1200.0)
-    # proc 1100: occupancy 1100/1200 > 900/1000 and over 0.75 target
-    backed = sizer.on_batch(1100.0)
-    assert math.isclose(backed, 750.0)  # 0.75 x 1000
-
-
-def test_dynamic_batch_warmup_fixed():
-    sizer = DynamicBatchSizer(initial_ms=500.0, warmup=5)
-    for _ in range(5):
-        assert sizer.on_batch(400.0) == 500.0
-
-
 # ------------------------------------------------------------ metrics plane
 
 
@@ -292,17 +248,46 @@ def test_trace_collector_rollup():
     assert tc.flush(8, 0.0, 0.0).samples == {}
 
 
-def test_progress_to_report_adapter():
-    progress = {
-        "batchId": 3,
-        "numInputRows": 1200,
-        "durationMs": {"triggerExecution": 450},
-        "sources": [{"inputRowsPerSecond": 2400.0}],
-    }
-    rep = progress_to_report(progress)
-    assert rep.batch_id == 3
-    assert rep.samples["local"].runtime_ms == 450.0
-    assert rep.samples["local"].input_rate == 2400.0
+def test_collector_feeds_balancer():
+    """The batch-completion feedback loop (PARITY L12): two batches of
+    per-task records and input rates go through the collector into the
+    balancer, batch 0 seeding the rate history and batch 1 deciding."""
+    runtimes = {"slow": 2000.0, "m1": 1000.0, "m2": 1010.0, "fast": 500.0}
+
+    def via_collector(tc, bal, batch_id, slow_rate):
+        for h, rt in runtimes.items():
+            # two parallel tasks per host: runtime is the max, bytes sum
+            tc.record_task(h, rt, 250_000.0)
+            tc.record_task(h, rt / 2, 750_000.0)
+            tc.record_input_rate(h, slow_rate if h == "slow" else 1000.0)
+        rep = tc.flush(batch_id, 2000.0, 2000.0)
+        return rep, bal.on_batch(rep)
+
+    tc, bal, hand_bal = TraceCollector(), LeverBalancer(), LeverBalancer()
+    for batch_id in (0, 1):
+        rep, plan = via_collector(tc, bal, batch_id, slow_rate=1000.0)
+        hand = _report(
+            batch_id,
+            runtimes,
+            rates={h: 1000.0 for h in runtimes},
+            handled={h: 1_000_000.0 for h in runtimes},
+            delay=2000.0,
+        )
+        assert rep == hand
+        hand_plan = hand_bal.on_batch(hand)
+    assert plan is not None and hand_plan is not None
+    assert plan.strategy == hand_plan.strategy
+    assert plan.ratios.keys() == hand_plan.ratios.keys() == {"slow"}
+    for h, shares in hand_plan.ratios.items():
+        assert plan.ratios[h] == pytest.approx(shares, rel=1e-12)
+
+    # a cut in the straggler's input rate, recorded through the
+    # collector, moves it from the confirmed helpees to the helpers
+    # (rate drift 0.1 < 1/(a*b) = 0.5): no helpee is left, so no plan
+    tc, bal = TraceCollector(), LeverBalancer()
+    via_collector(tc, bal, 0, slow_rate=1000.0)
+    _, cut_plan = via_collector(tc, bal, 1, slow_rate=100.0)
+    assert cut_plan is None
 
 
 # ----------------------------------------------------------- actuation (Spark)
@@ -321,7 +306,8 @@ def test_weighted_repartition_row_distribution(spark):
     df = spark.range(0, 40_000)
     weights = {"big": 4 / 7, "mid": 2 / 7, "small": 1 / 7}
     out = weighted_repartition(df, weights, num_partitions=7, seed=1)
-    sizes = sorted(partition_sizes(out), reverse=True)
+    per_part = out.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    sizes = sorted((r["count"] for r in per_part), reverse=True)
     assert sum(sizes) == 40_000
     assert len(sizes) == 7
     # every partition carries ~1/7 of rows (equal-size partitions; the
@@ -348,89 +334,3 @@ def test_plan_fold_reduces_straggler_share():
     assert w["slow"] == pytest.approx(0.1)
     assert w["h1"] == pytest.approx(0.5)
     assert w["h2"] == pytest.approx(0.4)
-
-
-def test_batch_sizer_honors_measured_overhead_floor():
-    """The round-7 trigger-overhead decomposition gives the sizer a
-    real per-batch constant: with min_ms at the measured floor, the
-    fixed-point iteration must never propose an interval below it
-    (which would be pure scheduling overhead on this stack)."""
-    from spark_lever_spark.lever.actuator import (
-        MEASURED_BATCH_OVERHEAD_MS,
-        DynamicBatchSizer,
-    )
-
-    s = DynamicBatchSizer(
-        initial_ms=5000, warmup=1, min_ms=MEASURED_BATCH_OVERHEAD_MS
-    )
-    out = 5000.0
-    for _ in range(12):  # tiny processing times drive the interval down
-        out = s.on_batch(10.0)
-    assert out >= MEASURED_BATCH_OVERHEAD_MS
-
-
-def test_adaptive_drain_policy_trajectory():
-    """VERDICT r7 task #4: the L13 sizer gating a 32-file backlog
-    drain with the measured c0 = 1.58 s constant. Simulated with the
-    linear cost model t(batch) = c0 + w*files (w = 300 ms/file): the
-    policy must double while the sizer's trend is healthy, HOLD at the
-    first SoCC'14 backoff (over-occupancy + worsening trend), resume
-    when the trend recovers, and drain 32 files in 6 segments — a
-    predicted (32 - 6) * c0 = 41 s win over fixed 1-file-per-trigger.
-    Pure arithmetic, deterministic; the live measurement is recorded
-    in BASELINE.md."""
-    from spark_lever_spark.lever.actuator import (
-        MEASURED_BATCH_OVERHEAD_MS,
-        DynamicBatchSizer,
-        next_drain_batch_size,
-    )
-
-    c0, w = MEASURED_BATCH_OVERHEAD_MS, 300.0
-    sizer = DynamicBatchSizer(3000.0, warmup=1)
-    remaining, fpt = 32, 1
-    sizes: list[int] = []
-    holds = 0
-    while remaining:
-        take = min(fpt, remaining)
-        sizes.append(take)
-        remaining -= take
-        sizer.on_batch(c0 + w * take)
-        if sizer.backed_off:
-            holds += 1
-        fpt = next_drain_batch_size(sizer, take, remaining, max_files=16)
-    assert sizes == [1, 2, 4, 8, 8, 9], sizes
-    assert holds == 1  # exactly one backoff-gated hold (after the 8-jump)
-    predicted_saving_sec = (32 - len(sizes)) * c0 / 1000.0
-    assert predicted_saving_sec > 30.0
-
-
-def test_adaptive_drain_live_small_backlog(spark, sf_dir, tmp_path):
-    """End-to-end adaptive_file_drain over a real 6-file backlog:
-    checkpoint reuse across restart segments must process every file
-    exactly once (segment sizes sum to the backlog) in fewer segments
-    than files, with the doubling trajectory."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from spark_lever_spark.lever.actuator import adaptive_file_drain
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    src = str(tmp_path / "backlog")
-    ev.limit(6000).repartition(6).write.parquet(src)
-    files = sorted(
-        os.path.join(src, f)
-        for f in os.listdir(src)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
-    assert len(files) == 6
-    out = adaptive_file_drain(
-        spark,
-        files,
-        ev.schema,
-        lambda sdf: sdf.groupBy("event_type").count(),
-    )
-    sizes = [s for s, _ in out["segments"]]
-    assert sum(sizes) == 6
-    assert len(sizes) < 6
-    assert sizes[0] == 1
