@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -88,6 +89,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (``normalize_timestamps``) whichever way the parquet encodes them."""
     _ensure_parity_confs(spark)
     return normalize_timestamps(spark.read.parquet(table_path(sf_dir, name)), name)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer for one
+    parquet file, read from its footer on the driver through Spark's
+    own converter (so session confs such as ``nanosAsLong`` apply)
+    without the Spark job that inference runs."""
+    import json
+
+    jvm = spark._jvm
+    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark._jsc.hadoopConfiguration(), jvm.org.apache.hadoop.fs.Path(path)
+    )
+    converter = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf()
+    )
+    converted = converter.convert(footer.getFileMetaData().getSchema())
+    return StructType.fromJson(json.loads(converted.json()))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1,8 +1,8 @@
-"""Round-17 additions: cross-source entity resolution, streaming
-near-dup, and k-means Lloyd refinement.
+"""Round-17 additions: cross-source entity resolution and k-means
+Lloyd refinement.
 
-The two headline operators close the capability gaps VERDICT r16
-ranked highest for a 100 TB training-data pipeline:
+The headline operator closes the capability gap VERDICT r16 ranked
+highest for a 100 TB training-data pipeline:
 
 * **Cross-source fuzzy entity resolution** — LSH blocking + cheap
   signature screen + exact multi-field pairwise scoring + connected-
@@ -11,11 +11,6 @@ ranked highest for a 100 TB training-data pipeline:
   the reference's cogroup/join surface supports piecewise
   (PairRDDFunctions.scala:491-649); here it is one declarative plan
   whose joins are all hash equi-joins.
-* **Streaming near-dup** — minhash band index maintained incrementally
-  inside ``foreachBatch`` (the P3xP5 marriage: structured-streaming
-  micro-batches + the banded-LSH dedup stack). Work per batch is
-  O(batch x band-collisions) against a persistent band index, never
-  O(corpus^2) — the shape continuous ingestion needs.
 
 Supporting operators: an exact-integer k-means Lloyd refinement round
 over int8-grid embeddings (the iterative centroid-UPDATE step the
@@ -25,22 +20,18 @@ of the pair table), and an ER blocking-quality audit (pairs
 completeness + reduction ratio against exact ground truth on a
 deterministic sample — the honest way to evaluate blocking at scale).
 
-All five are new queries in a new module (VERDICT r16 task #2: keep
+All four are new queries in a new module (VERDICT r16 task #2: keep
 the driver window's 45 vintage-rotation slots intact by touching no
 stamped query's file).
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_lever_spark.catalog import load_table
 from spark_lever_spark.llm.dedup import (
-    _MINHASH_BAND_CTES,
     _MINHASH_SQL_CTES,
     lsh_candidate_pairs,
     minhash_bands,
@@ -125,7 +116,6 @@ def er_cross_source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge is the O(log n) large/small-star loop. Nothing is ever
     all-pairs. Reference analog: cogroup/join + distinct surface,
     PairRDDFunctions.scala:491-649."""
-    from spark_lever_spark.llm.dedup import minhash_bands
     from spark_lever_spark.llm.graph import connected_components
 
     from pyspark import StorageLevel
@@ -478,142 +468,6 @@ def _er_lsh_blocking_audit_plan(
         .crossJoin(blocked.agg(F.count("*").alias("n_blocked_pairs")))
         .crossJoin(found.agg(F.count("*").alias("n_found_pairs")))
     )
-
-
-# ---------------------------------------------------------------------------
-# streaming near-dup (minhash bands in foreachBatch, incremental index)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "stream_minhash_near_dup",
-    oracle=f"""
-WITH {_MINHASH_BAND_CTES},
-p AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM banded a
-  JOIN banded b
-    ON b.band_idx = a.band_idx AND b.band_digest = a.band_digest
-   AND a.doc_id < b.doc_id
-),
-bi AS (SELECT id_a AS d, id_b AS o FROM p
-       UNION ALL
-       SELECT id_b, id_a FROM p)
-SELECT d AS doc_id, CAST(count(*) AS BIGINT) AS n_dup_partners,
-       CAST(min(o) AS BIGINT) AS min_partner
-FROM bi GROUP BY d ORDER BY doc_id
-""",
-    category="streaming",
-)
-def stream_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming near-dup detection with an INCREMENTAL band index —
-    the continuous-ingestion marriage of the banded-LSH dedup stack
-    and foreachBatch (VERDICT r16 task #3b). The corpus arrives in
-    four micro-batches; each batch (a) minhashes only its own
-    documents, (b) equi-joins its band digests against the persistent
-    index of all EARLIER batches (cross-batch pairs), (c) self-joins
-    within the batch (same-batch pairs), then appends its bands to the
-    index. Every near-dup pair is discovered exactly once — within its
-    later member's batch — so the union of per-batch emissions equals
-    the batch-free LSH pair table regardless of how documents were
-    split into batches (the oracle computes exactly that, batch-free).
-    Per-batch work is O(batch x band-collisions) against the index,
-    never O(corpus^2); at scale the index is a parquet table
-    partitioned by band digest and the batch side broadcasts.
-    Replay/restart safety (ADVICE r17 medium): index presence is
-    derived from the index DIRECTORY, not an in-memory flag (a driver
-    restart from the same checkpoint would otherwise silently drop all
-    cross-batch pairs), and the cross-batch join excludes self-matches
-    — a replayed micro-batch finds its own band rows already in the
-    index, and least/greatest of the same doc would emit id_a == id_b
-    rows that survive distinct and corrupt partner counts. At cluster
-    scale the existence probe is the same check through the Hadoop FS
-    API against the durable index table's path.
-    Reference analog: DStream transform + updateStateByKey composition
-    (DStream.scala / PairDStreamFunctions.scala)."""
-    from spark_lever_spark.streaming.queries import _bounded_shuffle
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # TemporaryDirectory (not bare mkdtemp — ADVICE r17): the work dir
-    # holds a corpus copy + band index + pair table and must not
-    # accumulate across runs; the result is eagerly materialized before
-    # the context deletes its backing files.
-    with tempfile.TemporaryDirectory(
-        prefix="stream_neardup_"
-    ) as work, tempfile.TemporaryDirectory() as ck:
-        src_dir = os.path.join(work, "in")
-        docs.repartition(4).write.parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        index_dir = os.path.join(work, "band_index")
-        pairs_dir = os.path.join(work, "pairs")
-
-        def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-            s = batch_df.sparkSession
-            _, bands = minhash_bands(batch_df)
-            bands = bands.persist()
-            try:
-                bl = bands.alias("b")
-                within = bl.join(
-                    bands.alias("c"),
-                    (F.col("c.band_idx") == F.col("b.band_idx"))
-                    & (F.col("c.band_digest") == F.col("b.band_digest"))
-                    & (F.col("b.doc_id") < F.col("c.doc_id")),
-                ).select(
-                    F.col("b.doc_id").alias("id_a"),
-                    F.col("c.doc_id").alias("id_b"),
-                )
-                new_pairs = within
-                if os.path.isdir(index_dir):
-                    idx = s.read.parquet(index_dir).alias("i")
-                    cross = bl.join(
-                        idx,
-                        (F.col("i.band_idx") == F.col("b.band_idx"))
-                        & (F.col("i.band_digest") == F.col("b.band_digest"))
-                        & (F.col("i.doc_id") != F.col("b.doc_id")),
-                    ).select(
-                        F.least("b.doc_id", "i.doc_id").alias("id_a"),
-                        F.greatest("b.doc_id", "i.doc_id").alias("id_b"),
-                    )
-                    new_pairs = new_pairs.unionByName(cross)
-                new_pairs.distinct().write.mode("append").parquet(pairs_dir)
-                bands.write.mode("append").parquet(index_dir)
-            finally:
-                bands.unpersist()
-
-        with _bounded_shuffle(spark):
-            q = (
-                sdf.writeStream.foreachBatch(on_batch)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(ck, "ck"))
-                .start()
-            )
-            q.awaitTermination()
-        # distinct at read: foreachBatch is at-least-once, so a replayed
-        # micro-batch may append its emissions twice — the pair SET is
-        # the idempotent unit, partner counts must come from it.
-        pairs = spark.read.parquet(pairs_dir).distinct()
-        bi = pairs.select(
-            F.col("id_a").alias("d"), F.col("id_b").alias("o")
-        ).unionByName(
-            pairs.select(F.col("id_b").alias("d"), F.col("id_a").alias("o"))
-        )
-        out = (
-            bi.groupBy(F.col("d").alias("doc_id"))
-            .agg(
-                F.count("*").alias("n_dup_partners"),
-                F.min("o").alias("min_partner"),
-            )
-            .orderBy("doc_id")
-        )
-        # materialize NOW: the caller collects after the work dir (the
-        # parquet this plan reads) has been deleted.
-        return out.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------

@@ -100,7 +100,7 @@ def _simple(node) -> str:
 
 
 def _inspected_plan(df: DataFrame):
-    """The physical plan the hazard sweeps walk: the executed plan, or
+    """The physical plan the hazard checks walk: the executed plan, or
     AQE's initial plan when adaptive execution wraps it."""
     plan = df._jdf.queryExecution().executedPlan()
     if _simple(plan) == "AdaptiveSparkPlanExec":
@@ -116,7 +116,7 @@ def _is_file_scan(node) -> bool:
 def has_file_scan(df: DataFrame) -> bool:
     """True if the inspected plan reaches a file (or JDBC) scan leaf.
     An eagerly computed frame (a ``LogicalRDD``/``ExistingRDD``, e.g.
-    after ``localCheckpoint``) hides its scans, so the hazard sweeps
+    after ``localCheckpoint``) hides its scans, so the hazard checks
     see nothing below it."""
 
     def walk(node) -> bool:
@@ -201,14 +201,14 @@ def single_partition_scale_hazards(df: DataFrame) -> list[str]:
 
 
 def nested_loop_hazards(df: DataFrame) -> list[str]:
-    """Registry-sweep companion to single_partition_scale_hazards:
+    """Registry-wide companion to single_partition_scale_hazards:
     report every BroadcastNestedLoopJoin / CartesianProduct whose
     broadcast (or either, for cartesian) side is NOT derived from an
     aggregation — i.e. a quadratic join over raw rows. The sanctioned
     shapes pass automatically (scalar attach: 1-row aggregate
     broadcast; bounds/offset frames: aggregate-derived); deliberately
     bounded raw-side broadcasts (a filtered probe batch) must be
-    whitelisted BY NAME in the sweep test so any new accidental
+    whitelisted BY NAME in the oracle test so any new accidental
     nested loop fails loudly."""
     plan = _inspected_plan(df)
     out: list[str] = []

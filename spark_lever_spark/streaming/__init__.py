@@ -10,23 +10,19 @@ maps onto Structured Streaming as a strict superset:
   aggregations — incremental state maintenance replaces the reference's
   invReduceFunc bookkeeping (ReducedWindowedDStream.scala:33-176);
 - updateStateByKey (StateDStream.scala:29-110) becomes
-  applyInPandasWithState;
-- processing-time-only parity is reproduced by stamping an arrival-time
-  column at ingest (`with_arrival_time`) — the reference has no event
-  time at all, so its windows are windows over arrival order.
+  applyInPandasWithState.
 
-Sources/sinks: files, rate, socket, kafka (format passthrough);
-foreachBatch / console / memory / file sinks. The golden-output test
-harness (reference TestSuiteBase.scala) lives in `harness.py`.
+Sources/sinks: files, socket, kafka (format passthrough); foreachBatch /
+console / memory / file sinks. `harness.py` holds the one drain every
+streaming query runs through (`StreamDrain`) and the golden-output test
+harness (reference TestSuiteBase.scala).
 """
 
 from spark_lever_spark.streaming.core import (
     file_stream,
-    rate_stream,
     sliding_window_agg,
     socket_stream,
     tumbling_window_agg,
-    with_arrival_time,
 )
 from spark_lever_spark.streaming.stateful import (
     sessionize_stream,
@@ -38,11 +34,9 @@ __all__ = [
     "sessionize_stream",
     "BatchCollector",
     "file_stream",
-    "rate_stream",
     "run_file_batches",
     "sliding_window_agg",
     "socket_stream",
     "tumbling_window_agg",
     "update_state_by_key",
-    "with_arrival_time",
 ]

@@ -8,7 +8,6 @@ Source parity (reference StreamingContext.scala:245-454, §2.D):
 - queueStream (test input) -> file batches via harness.run_file_batches
 - Kafka direct (external/kafka/.../KafkaUtils.scala:339) ->
   spark.readStream.format("kafka") passthrough (`kafka_stream`)
-- rate source replaces the reference's raw-socket benchmark generator.
 
 Window parity (reference DStream.scala:640-651, WindowedDStream.scala):
 the reference windows are unions of recent batch RDDs keyed by arrival
@@ -55,19 +54,6 @@ def socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
     )
 
 
-def rate_stream(
-    spark: SparkSession, rows_per_second: int = 1000, num_partitions: int | None = None
-) -> DataFrame:
-    """Deterministic load generator (timestamp, value) — the test/bench
-    stand-in for the reference's raw network receiver."""
-    reader = spark.readStream.format("rate").option(
-        "rowsPerSecond", str(rows_per_second)
-    )
-    if num_partitions is not None:
-        reader = reader.option("numPartitions", str(num_partitions))
-    return reader.load()
-
-
 # The exact record shape the kafka connector produces — any DataFrame
 # with this schema can stand in for a kafka topic, which is how the
 # broker-less contract test (tests/test_streaming_kafka.py) proves the
@@ -106,13 +92,6 @@ def kafka_stream(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def with_arrival_time(df: DataFrame, col_name: str = "arrival_ts") -> DataFrame:
-    """Processing-time parity mode: the reference has no event time
-    (SURVEY.md §2.B) — its windows bucket by arrival. Stamping ingest
-    time reproduces that under event-time machinery."""
-    return df.withColumn(col_name, F.current_timestamp())
 
 
 def tumbling_window_agg(

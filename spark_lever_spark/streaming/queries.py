@@ -9,110 +9,21 @@ oracle computes (reference parity target: §2.C keyed streaming ops,
 which the reference could only golden-test per batch —
 TestSuiteBase.scala).
 
-The parquet inputs are single files; the file source requires a
-directory, so each run streams through a symlink dir (cheap, read-only).
+Every query stages, drains and cleans up through one
+``harness.StreamDrain``; what it returns reads nothing the drain wrote.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_lever_spark.catalog import (
-    _ensure_parity_confs,
-    normalize_timestamps,
-    table_path,
-)
+from spark_lever_spark.catalog import load_table
+from spark_lever_spark.llm.dedup import _MINHASH_BAND_CTES, minhash_bands
 from spark_lever_spark.registry import register
-
-
-def _stream_table(
-    spark: SparkSession, sf_dir: str, name: str, files_per_trigger: int = 1
-) -> DataFrame:
-    """Streaming scan of one driver table via a symlink directory.
-
-    Handles BOTH physical layouts the generator could ship: a single
-    parquet file (symlinked as-is) and a multi-file parquet DIRECTORY,
-    whose data files are symlinked FLAT into the staging dir in sorted
-    name order — the file stream source does not recurse into
-    subdirectories, so a directory symlink would silently yield an
-    EMPTY stream (verified; zero batches, no error). Flat + sorted
-    also makes each source file one deterministic micro-batch under
-    maxFilesPerTrigger=1, which the multi-batch determinism tests
-    exploit."""
-    _ensure_parity_confs(spark)
-    src = table_path(sf_dir, name)
-    d = tempfile.mkdtemp(prefix=f"stream_{name}_")
-    if os.path.isdir(src):
-        files = sorted(
-            f
-            for f in os.listdir(src)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        if not files:
-            raise ValueError(f"no parquet data files under {src}")
-        for i, f in enumerate(files):
-            os.symlink(
-                os.path.join(src, f),
-                os.path.join(d, f"{name}_{i:05d}.parquet"),
-            )
-    else:
-        os.symlink(src, os.path.join(d, f"{name}.parquet"))
-    schema = spark.read.parquet(src).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(files_per_trigger))
-        .parquet(d)
-    )
-    # the same single timestamp type as the batch side, so stream-static
-    # joins and epoch math never meet mixed types
-    return normalize_timestamps(sdf, name)
-
-
-class _bounded_shuffle:
-    """Stateful streaming disables AQE coalescing, so a vanilla
-    session's 200 shuffle partitions become 200 tiny state-store tasks
-    per micro-batch — pure overhead at test SF. Pin a sane parallelism
-    for the drain, restore after. (State-store partitioning is
-    checkpoint-scoped; each drain uses a fresh checkpoint, so changing
-    it between runs is safe.)"""
-
-    def __init__(self, spark: SparkSession, n: int = 32) -> None:
-        self.spark, self.n = spark, n
-
-    def __enter__(self) -> None:
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc) -> None:
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-
-
-def _drain(out: DataFrame, name_hint: str, mode: str) -> DataFrame:
-    """Run a streaming plan to exhaustion into a memory sink; returns
-    the resulting table (final state for complete mode, union of all
-    emissions for append)."""
-    spark = out.sparkSession
-    qname = f"{name_hint}_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ck, _bounded_shuffle(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(ck, "ck"))
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(qname)
-
-
-def _drain_complete(out: DataFrame, name_hint: str) -> DataFrame:
-    return _drain(out, name_hint, "complete")
+from spark_lever_spark.streaming.harness import BatchCollector, StreamDrain
 
 
 @register(
@@ -127,11 +38,12 @@ def stream_agg_orders_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental keyed aggregation over a drained stream
     (reduceByKey parity, PairDStreamFunctions.scala:78-103): final
     state == the batch GROUP BY."""
-    sdf = _stream_table(spark, sf_dir, "orders")
-    agg = sdf.groupBy("o_orderstatus").agg(
-        F.count("*").alias("cnt"), F.sum("o_totalprice").alias("total")
-    )
-    return _drain_complete(agg, "orders_status").orderBy("o_orderstatus")
+    with StreamDrain(spark) as drain:
+        agg = drain.table(sf_dir, "orders").groupBy("o_orderstatus").agg(
+            F.count("*").alias("cnt"), F.sum("o_totalprice").alias("total")
+        )
+        final = drain.run(agg, "complete")
+    return final.orderBy("o_orderstatus")
 
 
 @register(
@@ -154,15 +66,15 @@ def stream_windowed_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame
     equal the batch date_trunc rollup."""
     from spark_lever_spark.streaming.core import tumbling_window_agg
 
-    sdf = _stream_table(spark, sf_dir, "events")
-    win = tumbling_window_agg(
-        sdf,
-        "ts",
-        "1 hour",
-        keys=["event_type"],
-        aggs=[F.count("*").alias("events"), F.sum("value").alias("sum_value")],
-    )
-    final = _drain_complete(win, "events_hourly")
+    with StreamDrain(spark) as drain:
+        win = tumbling_window_agg(
+            drain.table(sf_dir, "events"),
+            "ts",
+            "1 hour",
+            keys=["event_type"],
+            aggs=[F.count("*").alias("events"), F.sum("value").alias("sum_value")],
+        )
+        final = drain.run(win, "complete")
     return final.select(
         F.col("window.start").alias("hour_start"),
         "event_type",
@@ -183,30 +95,21 @@ def stream_update_state_customer_counts(spark: SparkSession, sf_dir: str) -> Dat
     """updateStateByKey parity (StateDStream.scala:29-110) through
     applyInPandasWithState: running per-segment counts; after draining
     all batches the state equals the batch GROUP BY count."""
-    from spark_lever_spark.streaming.harness import BatchCollector
     from spark_lever_spark.streaming.stateful import (
         running_count_update,
         update_state_by_key,
     )
 
-    sdf = _stream_table(spark, sf_dir, "customer", files_per_trigger=1)
-    out = update_state_by_key(
-        sdf.select("c_mktsegment"),
-        ["c_mktsegment"],
-        running_count_update,
-        state_schema="cnt long",
-        output_schema="c_mktsegment string, cnt long",
-    )
     collector = BatchCollector()
-    with tempfile.TemporaryDirectory() as ck, _bounded_shuffle(spark):
-        q = (
-            out.writeStream.foreachBatch(collector)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(ck, "ck"))
-            .start()
+    with StreamDrain(spark) as drain:
+        out = update_state_by_key(
+            drain.table(sf_dir, "customer").select("c_mktsegment"),
+            ["c_mktsegment"],
+            running_count_update,
+            state_schema="cnt long",
+            output_schema="c_mktsegment string, cnt long",
         )
-        q.awaitTermination()
+        drain.run(out, "update", collector)
     # last emission per key == final state
     final: dict[str, int] = {}
     for _, rows in sorted(collector.batches):
@@ -215,10 +118,6 @@ def stream_update_state_customer_counts(spark: SparkSession, sf_dir: str) -> Dat
     return spark.createDataFrame(
         sorted(final.items()), "c_mktsegment string, cnt long"
     ).orderBy("c_mktsegment")
-
-
-def _drain_append(out: DataFrame, name_hint: str) -> DataFrame:
-    return _drain(out, name_hint, "append")
 
 
 @register(
@@ -238,11 +137,14 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside a batch; final union == batch DISTINCT. At scale the state
     store holds one entry per distinct key — bound it with a watermark
     on an event-time column when keys grow unboundedly."""
-    sdf = _stream_table(spark, sf_dir, "events")
-    deduped = sdf.select("user_id", "event_type").dropDuplicates(
-        ["user_id", "event_type"]
-    )
-    return _drain_append(deduped, "dedup_events").orderBy("user_id", "event_type")
+    with StreamDrain(spark) as drain:
+        deduped = (
+            drain.table(sf_dir, "events")
+            .select("user_id", "event_type")
+            .dropDuplicates(["user_id", "event_type"])
+        )
+        final = drain.run(deduped, "append")
+    return final.orderBy("user_id", "event_type")
 
 
 @register(
@@ -271,24 +173,24 @@ def stream_static_orders_by_nation(
     equals the batch three-way join the oracle computes. At 100 TB the
     static side is the standard slowly-changing dim broadcast; the
     stream side never re-shuffles on the join key."""
-    from spark_lever_spark.catalog import load_table
-
-    sdf = _stream_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
     nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", F.col("n_name").alias("nation")
     )
-    enriched = (
-        sdf.join(F.broadcast(cust), sdf.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-    )
-    agg = enriched.groupBy("nation").agg(
-        F.count("*").alias("cnt"),
-        F.sum("o_totalprice").alias("total"),
-    )
-    return _drain_complete(agg, "orders_by_nation").orderBy("nation")
+    with StreamDrain(spark) as drain:
+        sdf = drain.table(sf_dir, "orders")
+        enriched = (
+            sdf.join(F.broadcast(cust), sdf.o_custkey == cust.c_custkey)
+            .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
+        )
+        agg = enriched.groupBy("nation").agg(
+            F.count("*").alias("cnt"),
+            F.sum("o_totalprice").alias("total"),
+        )
+        final = drain.run(agg, "complete")
+    return final.orderBy("nation")
 
 
 @register(
@@ -321,16 +223,16 @@ def stream_sliding_events_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts."""
     from spark_lever_spark.streaming.core import sliding_window_agg
 
-    sdf = _stream_table(spark, sf_dir, "events")
-    win = sliding_window_agg(
-        sdf,
-        "ts",
-        "30 minutes",
-        "15 minutes",
-        keys=["event_type"],
-        aggs=[F.count("*").alias("events")],
-    )
-    final = _drain_complete(win, "events_sliding30")
+    with StreamDrain(spark) as drain:
+        win = sliding_window_agg(
+            drain.table(sf_dir, "events"),
+            "ts",
+            "30 minutes",
+            "15 minutes",
+            keys=["event_type"],
+            aggs=[F.count("*").alias("events")],
+        )
+        final = drain.run(win, "complete")
     return final.select(
         F.col("window.start").alias("window_start"),
         "event_type",
@@ -375,11 +277,11 @@ def stream_session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     session end = last event + gap — the oracle mirrors both). State
     per key is bounded by open sessions; production adds a watermark to
     age them out."""
-    sdf = _stream_table(spark, sf_dir, "events")
-    agg = sdf.groupBy(
-        F.session_window("ts", "30 minutes").alias("w"), "user_id"
-    ).agg(F.count("*").alias("n_events"))
-    final = _drain_complete(agg, "session_windows")
+    with StreamDrain(spark) as drain:
+        agg = drain.table(sf_dir, "events").groupBy(
+            F.session_window("ts", "30 minutes").alias("w"), "user_id"
+        ).agg(F.count("*").alias("n_events"))
+        final = drain.run(agg, "complete")
     return final.select(
         "user_id",
         F.col("w.start").alias("session_start"),
@@ -408,63 +310,53 @@ def stream_foreachbatch_upsert_users(
     merge, the Structured Streaming replacement for the reference's
     foreachRDD + hand-rolled saveAsHadoopFiles, DStream.scala
     foreachRDD/saveAs*). The events stream is drained in FOUR
-    micro-batches (the source table re-written as 4 files, one per
-    trigger); every batch is pre-aggregated per user then merged into
-    the versioned parquet target: counts ADD, the last-event payload
-    takes the max (ts, event_id) — both operations associative and
-    commutative, so the final table is independent of batch boundaries
-    and equals the batch GROUP BY the oracle computes. At scale this is
+    micro-batches (the events re-written as 4 files by event_id mod 4,
+    one per trigger); every batch is pre-aggregated per user then
+    merged into the versioned parquet target: counts ADD, the
+    last-event payload takes the max (ts, event_id) — both operations
+    associative and commutative, so the final table is independent of
+    batch boundaries and equals the batch GROUP BY the oracle
+    computes. At scale this is
     the idempotent-writer shape: per-batch merge keyed on the table
     key, target partitioned/bucketed by that key."""
-    ev_src = table_path(sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="upsert_src_")
-    src_dir = os.path.join(work, "in")
-    spark.read.parquet(ev_src).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
-    ).repartition(4).write.parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
     )
     target_holder = {"path": None}
+    with StreamDrain(spark) as drain:
+        sdf = drain.batches([ev.filter(F.col("event_id") % 4 == i) for i in range(4)])
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.groupBy("user_id").agg(
-            F.count("*").alias("n_events"),
-            F.max(F.struct("ts", "event_id", "event_type")).alias("last"),
-        )
-        if target_holder["path"] is not None:
-            t = batch_df.sparkSession.read.parquet(target_holder["path"])
-            tt, bb = t.alias("t"), b.alias("b")
-            merged = tt.join(bb, F.col("t.user_id") == F.col("b.user_id"), "full").select(
-                F.coalesce(F.col("b.user_id"), F.col("t.user_id")).alias("user_id"),
-                (
-                    F.coalesce(F.col("t.n_events"), F.lit(0))
-                    + F.coalesce(F.col("b.n_events"), F.lit(0))
-                ).alias("n_events"),
-                F.greatest(F.col("t.last"), F.col("b.last")).alias("last"),
+        def upsert(batch_df: DataFrame, batch_id: int) -> None:
+            b = batch_df.groupBy("user_id").agg(
+                F.count("*").alias("n_events"),
+                F.max(F.struct("ts", "event_id", "event_type")).alias("last"),
             )
-        else:
-            merged = b
-        out = os.path.join(work, f"target_v{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        target_holder["path"] = out
+            if target_holder["path"] is not None:
+                t = batch_df.sparkSession.read.parquet(target_holder["path"])
+                tt, bb = t.alias("t"), b.alias("b")
+                merged = tt.join(bb, F.col("t.user_id") == F.col("b.user_id"), "full").select(
+                    F.coalesce(F.col("b.user_id"), F.col("t.user_id")).alias("user_id"),
+                    (
+                        F.coalesce(F.col("t.n_events"), F.lit(0))
+                        + F.coalesce(F.col("b.n_events"), F.lit(0))
+                    ).alias("n_events"),
+                    F.greatest(F.col("t.last"), F.col("b.last")).alias("last"),
+                )
+            else:
+                merged = b
+            out = os.path.join(drain.dir, f"target_v{batch_id}")
+            merged.write.mode("overwrite").parquet(out)
+            target_holder["path"] = out
 
-    with tempfile.TemporaryDirectory() as ck, _bounded_shuffle(spark):
-        q = (
-            sdf.writeStream.foreachBatch(upsert)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(ck, "ck"))
-            .start()
+        drain.run(sdf, "update", upsert)
+        final = (
+            spark.read.parquet(target_holder["path"])
+            .select(
+                "user_id", "n_events", F.col("last.event_type").alias("last_event_type")
+            )
+            .localCheckpoint(eager=True)
         )
-        q.awaitTermination()
-    final = spark.read.parquet(target_holder["path"])
-    return final.select(
-        "user_id", "n_events", F.col("last.event_type").alias("last_event_type")
-    ).orderBy("user_id")
+    return final.orderBy("user_id")
 
 
 @register(
@@ -494,25 +386,24 @@ def stream_stream_join_click_purchase(
     no watermark is needed. The per-user rollup happens batch-side on
     the drained pairs (chaining a second stateful agg behind a
     stream-stream join needs watermarks by construction)."""
-    clicks = _stream_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "click"
-    )
-    purchases = _stream_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    c = clicks.select(
-        F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
-    )
-    p = purchases.select(
-        F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
-    )
-    joined = c.join(
-        p,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-    )
-    pairs = _drain_append(joined, "ss_join")
+    with StreamDrain(spark) as drain:
+        c = (
+            drain.table(sf_dir, "events")
+            .filter(F.col("event_type") == "click")
+            .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
+        )
+        p = (
+            drain.table(sf_dir, "events")
+            .filter(F.col("event_type") == "purchase")
+            .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
+        )
+        joined = c.join(
+            p,
+            (F.col("p_user") == F.col("c_user"))
+            & (F.col("p_ts") >= F.col("c_ts"))
+            & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
+        )
+        pairs = drain.run(joined, "append")
     return (
         pairs.groupBy(F.col("c_user").alias("user_id"))
         .agg(F.count("*").alias("n_pairs"))
@@ -545,44 +436,16 @@ def stream_watermark_append_close(spark: SparkSession, sf_dir: str) -> DataFrame
     downstream exactly-once consumers key on, and what bounds state at
     100 TB. Two deterministic micro-batches (even event_ids then odd)
     prove emissions survive cross-batch state."""
-    from spark_lever_spark.streaming.harness import BatchCollector
-
-    work = tempfile.mkdtemp(prefix="wm_close_")
-    in_dir = os.path.join(work, "in")
-    os.makedirs(in_dir)
-    ev = _stream_table_schema_src(spark, sf_dir)
-    base_t = 1_700_000_000
-    for i, pred in enumerate(["event_id % 2 = 0", "event_id % 2 = 1"]):
-        part_dir = os.path.join(work, f"part{i}")
-        ev.filter(pred).coalesce(1).write.parquet(part_dir)
-        src = next(
-            os.path.join(part_dir, f)
-            for f in os.listdir(part_dir)
-            if f.endswith(".parquet")
-        )
-        dst = os.path.join(in_dir, f"batch_{i}.parquet")
-        os.rename(src, dst)
-        os.utime(dst, (base_t + i * 10, base_t + i * 10))
-    schema = spark.read.parquet(os.path.join(in_dir, "batch_0.parquet")).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .withWatermark("ts", "1 hour")
-    )
-    agg = sdf.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.count("*").alias("cnt"))
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     collector = BatchCollector()
-    with tempfile.TemporaryDirectory() as ck, _bounded_shuffle(spark):
-        q = (
-            agg.writeStream.foreachBatch(collector)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(ck, "ck"))
-            .start()
-        )
-        q.awaitTermination()
+    with StreamDrain(spark) as drain:
+        sdf = drain.batches(
+            [ev.filter("event_id % 2 = 0"), ev.filter("event_id % 2 = 1")]
+        ).withWatermark("ts", "1 hour")
+        agg = sdf.groupBy(
+            F.window("ts", "1 hour").alias("w"), "event_type"
+        ).agg(F.count("*").alias("cnt"))
+        drain.run(agg, "append", collector)
     rows = [
         (w[0], etype, int(cnt))
         for _, batch_rows in sorted(collector.batches)
@@ -591,15 +454,6 @@ def stream_watermark_append_close(spark: SparkSession, sf_dir: str) -> DataFrame
     return spark.createDataFrame(
         rows, "window_start timestamp, event_type string, cnt long"
     ).orderBy("window_start", "event_type")
-
-
-def _stream_table_schema_src(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized batch view of events for harness-driven re-writes."""
-    from spark_lever_spark.catalog import load_table
-
-    return load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type"
-    )
 
 
 @register(
@@ -656,32 +510,31 @@ def stream_stream_left_join_unmatched_clicks(
     reproduces exactly that set algebraically. Matched pairs emit
     regardless (inner semantics are watermark-independent). Output
     rolls up per user: matched-pair count and expired-unmatched count."""
-    clicks = (
-        _stream_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-    )
-    purchases = (
-        _stream_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-    )
-    c = clicks.select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("c_id"),
-    )
-    p = purchases.select(
-        F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
-    )
-    joined = c.join(
-        p,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    )
-    pairs = _drain_append(joined, "ss_left_join")
+    with StreamDrain(spark) as drain:
+        c = (
+            drain.table(sf_dir, "events")
+            .filter(F.col("event_type") == "click")
+            .withWatermark("ts", "1 hour")
+            .select(
+                F.col("user_id").alias("c_user"),
+                F.col("ts").alias("c_ts"),
+                F.col("event_id").alias("c_id"),
+            )
+        )
+        p = (
+            drain.table(sf_dir, "events")
+            .filter(F.col("event_type") == "purchase")
+            .withWatermark("ts", "1 hour")
+            .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
+        )
+        joined = c.join(
+            p,
+            (F.col("p_user") == F.col("c_user"))
+            & (F.col("p_ts") >= F.col("c_ts"))
+            & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
+            "leftOuter",
+        )
+        pairs = drain.run(joined, "append")
     return (
         pairs.groupBy(F.col("c_user").alias("user_id"))
         .agg(
@@ -756,32 +609,27 @@ def stream_stream_full_outer_join_expiry(
     reproduces both sets algebraically with exactly those
     inequalities. Output rolls up per user: matched pairs,
     expired-unmatched clicks, expired-unmatched purchases."""
-    clicks = (
-        _stream_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
+    with StreamDrain(spark) as drain:
+        clicks = (
+            drain.table(sf_dir, "events")
+            .filter(F.col("event_type") == "click")
+            .withWatermark("ts", "1 hour")
+            .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
         )
-    )
-    purchases = (
-        _stream_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
+        purchases = (
+            drain.table(sf_dir, "events")
+            .filter(F.col("event_type") == "purchase")
+            .withWatermark("ts", "1 hour")
+            .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
         )
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-        "fullOuter",
-    )
-    rows = _drain_append(joined, "ss_full_outer")
+        joined = clicks.join(
+            purchases,
+            (F.col("p_user") == F.col("c_user"))
+            & (F.col("p_ts") >= F.col("c_ts"))
+            & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
+            "fullOuter",
+        )
+        rows = drain.run(joined, "append")
     return (
         rows.groupBy(
             F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id")
@@ -830,12 +678,14 @@ def stream_windowed_distinct_users(
     PairDStreamFunctions countByKeyAndWindow family; the DStream lineage
     could only approximate this per batch). Drained availableNow, the
     chained state equals the batch count(DISTINCT) per hour."""
-    sdf = _stream_table(spark, sf_dir, "events")
-    dedup = sdf.select(
-        F.window("ts", "1 hour").alias("window"), "user_id"
-    ).dropDuplicates(["window", "user_id"])
-    agg = dedup.groupBy("window").agg(F.count("*").alias("n_users"))
-    final = _drain_complete(agg, "windowed_distinct_users")
+    with StreamDrain(spark) as drain:
+        dedup = (
+            drain.table(sf_dir, "events")
+            .select(F.window("ts", "1 hour").alias("window"), "user_id")
+            .dropDuplicates(["window", "user_id"])
+        )
+        agg = dedup.groupBy("window").agg(F.count("*").alias("n_users"))
+        final = drain.run(agg, "complete")
     return final.select(
         F.col("window.start").alias("hour_start"), "n_users"
     ).orderBy("hour_start")
@@ -874,13 +724,14 @@ def stream_hourly_top2_event_types(
     the batch tier is broadcast-scale at any corpus size. Counts are
     exact int64; the rank tiebreak (events DESC, type ASC) is total,
     so the leaderboard is deterministic."""
-    sdf = _stream_table(spark, sf_dir, "events")
-    win = (
-        sdf.select(F.window("ts", "1 hour").alias("window"), "event_type")
-        .groupBy("window", "event_type")
-        .agg(F.count("*").alias("events"))
-    )
-    final = _drain_complete(win, "hourly_top2_event_types")
+    with StreamDrain(spark) as drain:
+        win = (
+            drain.table(sf_dir, "events")
+            .select(F.window("ts", "1 hour").alias("window"), "event_type")
+            .groupBy("window", "event_type")
+            .agg(F.count("*").alias("events"))
+        )
+        final = drain.run(win, "complete")
     from pyspark.sql.window import Window as W
 
     ranked = final.select(
@@ -896,3 +747,109 @@ def stream_hourly_top2_event_types(
         .cast("int"),
     )
     return ranked.where(F.col("rnk") <= 2).orderBy("hour_start", "rnk")
+
+
+@register(
+    "stream_minhash_near_dup",
+    oracle=f"""
+WITH {_MINHASH_BAND_CTES},
+p AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM banded a
+  JOIN banded b
+    ON b.band_idx = a.band_idx AND b.band_digest = a.band_digest
+   AND a.doc_id < b.doc_id
+),
+bi AS (SELECT id_a AS d, id_b AS o FROM p
+       UNION ALL
+       SELECT id_b, id_a FROM p)
+SELECT d AS doc_id, CAST(count(*) AS BIGINT) AS n_dup_partners,
+       CAST(min(o) AS BIGINT) AS min_partner
+FROM bi GROUP BY d ORDER BY doc_id
+""",
+    category="streaming",
+)
+def stream_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming near-dup detection with an INCREMENTAL band index —
+    the continuous-ingestion marriage of the banded-LSH dedup stack
+    and foreachBatch (VERDICT r16 task #3b). The corpus arrives in
+    four micro-batches; each batch (a) minhashes only its own
+    documents, (b) equi-joins its band digests against the persistent
+    index of all EARLIER batches (cross-batch pairs), (c) self-joins
+    within the batch (same-batch pairs), then appends its bands to the
+    index. Every near-dup pair is discovered exactly once — within its
+    later member's batch — so the union of per-batch emissions equals
+    the batch-free LSH pair table regardless of how documents were
+    split into batches (the oracle computes exactly that, batch-free).
+    Per-batch work is O(batch x band-collisions) against the index,
+    never O(corpus^2); at scale the index is a parquet table
+    partitioned by band digest and the batch side broadcasts.
+    Replay/restart safety (ADVICE r17 medium): index presence is
+    derived from the index DIRECTORY, not an in-memory flag (a driver
+    restart from the same checkpoint would otherwise silently drop all
+    cross-batch pairs), and the cross-batch join excludes self-matches
+    — a replayed micro-batch finds its own band rows already in the
+    index, and least/greatest of the same doc would emit id_a == id_b
+    rows that survive distinct and corrupt partner counts. At cluster
+    scale the existence probe is the same check through the Hadoop FS
+    API against the durable index table's path.
+    Reference analog: DStream transform + updateStateByKey composition
+    (DStream.scala / PairDStreamFunctions.scala)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    with StreamDrain(spark) as drain:
+        sdf = drain.batches([docs.filter(F.col("doc_id") % 4 == i) for i in range(4)])
+        index_dir = os.path.join(drain.dir, "band_index")
+        pairs_dir = os.path.join(drain.dir, "pairs")
+
+        def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+            s = batch_df.sparkSession
+            _, bands = minhash_bands(batch_df)
+            bands = bands.persist()
+            try:
+                bl = bands.alias("b")
+                within = bl.join(
+                    bands.alias("c"),
+                    (F.col("c.band_idx") == F.col("b.band_idx"))
+                    & (F.col("c.band_digest") == F.col("b.band_digest"))
+                    & (F.col("b.doc_id") < F.col("c.doc_id")),
+                ).select(
+                    F.col("b.doc_id").alias("id_a"),
+                    F.col("c.doc_id").alias("id_b"),
+                )
+                new_pairs = within
+                if os.path.isdir(index_dir):
+                    idx = s.read.parquet(index_dir).alias("i")
+                    cross = bl.join(
+                        idx,
+                        (F.col("i.band_idx") == F.col("b.band_idx"))
+                        & (F.col("i.band_digest") == F.col("b.band_digest"))
+                        & (F.col("i.doc_id") != F.col("b.doc_id")),
+                    ).select(
+                        F.least("b.doc_id", "i.doc_id").alias("id_a"),
+                        F.greatest("b.doc_id", "i.doc_id").alias("id_b"),
+                    )
+                    new_pairs = new_pairs.unionByName(cross)
+                new_pairs.distinct().write.mode("append").parquet(pairs_dir)
+                bands.write.mode("append").parquet(index_dir)
+            finally:
+                bands.unpersist()
+
+        drain.run(sdf, "update", on_batch)
+        # distinct at read: foreachBatch is at-least-once, so a replayed
+        # micro-batch may append its emissions twice — the pair SET is
+        # the idempotent unit, partner counts must come from it.
+        pairs = spark.read.parquet(pairs_dir).distinct()
+        bi = pairs.select(
+            F.col("id_a").alias("d"), F.col("id_b").alias("o")
+        ).unionByName(
+            pairs.select(F.col("id_b").alias("d"), F.col("id_a").alias("o"))
+        )
+        out = (
+            bi.groupBy(F.col("d").alias("doc_id"))
+            .agg(
+                F.count("*").alias("n_dup_partners"),
+                F.min("o").alias("min_partner"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    return out.orderBy("doc_id")

@@ -138,14 +138,6 @@ def running_count_update(
     return (prev + len(pdf),)
 
 
-def running_sum_update(value_col: str) -> Callable[[tuple, pd.DataFrame, tuple | None], tuple]:
-    def fn(key: tuple, pdf: pd.DataFrame, old: tuple | None) -> tuple:
-        prev = old[0] if old else 0.0
-        return (float(prev) + float(pdf[value_col].sum()),)
-
-    return fn
-
-
 def sessionize_stream(
     df: DataFrame,
     user_col: str,

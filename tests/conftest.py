@@ -25,3 +25,14 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture(scope="session")
+def oracle_con(sf_dir):
+    """One DuckDB connection over ``sf_dir`` for the whole oracle sweep,
+    closed when the session ends."""
+    from tests.oracle import duckdb_con
+
+    con = duckdb_con(sf_dir)
+    yield con
+    con.close()

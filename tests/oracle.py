@@ -23,6 +23,11 @@ TABLES = (
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A connection with one view per table under ``sf_dir``. The views
+    read the parquet files at query time, so a connection shared by many
+    queries (the ``oracle_con`` session fixture) assumes that nothing
+    rewrites those files while it is open; a test that rewrites data
+    builds its own connection."""
     con = duckdb.connect()
     import os
 
@@ -96,27 +101,3 @@ def compare(spark_df, oracle_df: pd.DataFrame, name: str = "") -> None:
     assert len(a) == len(b), f"{name}: row count {len(a)} vs {len(b)}"
     mismatches = [(x, y) for x, y in zip(a, b) if x != y]
     assert not mismatches, f"{name}: {len(mismatches)} row mismatches, first: {mismatches[:3]}"
-
-
-_CON_CACHE: dict = {}
-
-
-def _cached_con(sf_dir: str) -> "duckdb.DuckDBPyConnection":
-    """One read-only connection per sf_dir for the 614-way parity
-    sweep (r19: a fresh connect + 10 view registrations per test added
-    up; the views are pure reads over static parquet, so sharing is
-    safe — tests that mutate state build their own connection via
-    duckdb_con)."""
-    if sf_dir not in _CON_CACHE:
-        _CON_CACHE[sf_dir] = duckdb_con(sf_dir)
-    return _CON_CACHE[sf_dir]
-
-
-def check_query(spark, sf_dir: str, name: str) -> None:
-    """Run a registered query against its oracle at sf_dir."""
-    from spark_lever_spark import registry
-
-    q = registry.all_queries()[name]
-    assert q.oracle, f"{name} has no oracle"
-    oracle_df = _cached_con(sf_dir).execute(q.oracle).df()
-    compare(q.fn(spark, sf_dir), oracle_df, name)

@@ -6,7 +6,6 @@ reference's physical layer."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from spark_lever_spark import registry
@@ -579,273 +578,6 @@ def test_peak_concurrency_window_is_day_bucketed(spark, sf_dir):
     big = [s for s in specs if " d#" in s or ", d#" in s]
     assert big and all(" b#" in s or ", b#" in s for s in big), specs
     assert shuffle_join_count(df) == 0
-
-
-@pytest.fixture(scope="module")
-def registry_plan_hazards(spark, sf_dir):
-    """ONE pass over every batch query's plan, shared by the two
-    registry-wide hazard sweeps below (r19, VERDICT r18 task #2:
-    building all 614 frames — eager queries execute during fn() — was
-    the suite's single most expensive step and the two sweeps each
-    paid it; one pass computes both hazard maps and the set of plans
-    that reach no file scan)."""
-    from spark_lever_spark.plans.inspect import (
-        has_file_scan,
-        nested_loop_hazards,
-        single_partition_scale_hazards,
-    )
-
-    single_part: dict = {}
-    nested: dict = {}
-    pinned: set = set()
-    for name, q in ALL.items():
-        if q.category == "streaming":
-            continue
-        df = q.fn(spark, sf_dir)
-        if not has_file_scan(df):
-            pinned.add(name)
-        h = single_partition_scale_hazards(df)
-        if h:
-            single_part[name] = h
-        if name not in NESTED_LOOP_WHITELIST:
-            h = nested_loop_hazards(df)
-            if h:
-                nested[name] = h
-    return single_part, nested, pinned
-
-
-def test_no_single_partition_scale_hazards_registry_wide(
-    registry_plan_hazards,
-):
-    """Mechanical sweep of the grank doctrine over EVERY batch query:
-    no plan may feed a Sort/Window from an Exchange SinglePartition
-    whose subtree ships raw (un-aggregated) table rows — the
-    one-task-funnel that dies at the executor memory wall. Windows
-    over pre-aggregated domains, global single-row aggregates, and
-    range-partitioned presentation sorts are legitimate and pass.
-    Streaming queries are excluded (building their frame runs a
-    drain); their plans are covered by the streaming suites."""
-    flagged, _, _ = registry_plan_hazards
-    assert not flagged, flagged
-
-
-# The ONLY queries allowed to carry a nested-loop join over raw
-# (non-aggregate-derived) inputs, each with a bounded side by
-# construction; anything new that degrades to a nested loop fails the
-# sweep below.
-NESTED_LOOP_WHITELIST = {
-    "join_cartesian": "deliberate cartesian parity query (25 x 5 dims)",
-    "join_theta_nonequi": "deliberate theta-join parity over bounded dims",
-    "knn_cosine_topk": "broadcast 1-row query vector (vec_id = 0 probe)",
-    "ann_ivf_nprobe_recall_curve": (
-        "broadcast FIXED 20-row query panel for the brute ground-truth "
-        "pass — Q is a query constant at any SF, so the Q x N map-side "
-        "probe stays linear in the corpus; centroid ranking rides the "
-        "same panel broadcast"
-    ),
-    "kmeans_assign_embeddings": (
-        "broadcast k=8 fixed centroid table — every vector probes "
-        "exactly 8 rows map-side, a query constant at any SF"
-    ),
-    "kmeans_inertia_elbow": (
-        "broadcast k=16 fixed centroid table (vec_id < 16) — every "
-        "vector probes exactly 16 rows map-side, a query constant at "
-        "any SF"
-    ),
-    "kmeans_lloyd_refine_embeddings": (
-        "broadcast k=8 centroid table per Lloyd iteration (init = "
-        "vec_id < 8 prefix; refined = 8-row aggregate stats) — every "
-        "vector probes exactly 8 rows map-side, a query constant at "
-        "any SF"
-    ),
-    "mutual_nn_int8_ivf": (
-        "broadcast k = max(16, sqrt(N)) prefix-centroid table for IVF "
-        "probe assignment — N*k = O(N^1.5) map-side probes; candidate "
-        "pairs themselves meet through the cell equi-join"
-    ),
-    "semdedup_int8_cells": (
-        "broadcast k = max(16, sqrt(N)) prefix-centroid table for IVF "
-        "cell assignment — N*k = O(N^1.5) map-side probes; duplicate "
-        "pairs themselves meet through the cell equi-join"
-    ),
-    "lof_outliers_int8_cells": (
-        "the kNN table is localCheckpointed, then the quantized-table "
-        "persist is released"
-    ),
-    "ann_ivf": "broadcast probe vector + centroid cells",
-    "ann_pq_adc_topk": (
-        "broadcast 1-row quantized query vector (vec_id = 0) for the "
-        "exact-distance rider column only — the ADC scoring path "
-        "itself probes the 32-row broadcast LUT through an equi-join"
-    ),
-    "ann_int8_exact_topk": "broadcast 1-row quantized query vector",
-    "hard_negative_mining": "broadcast bounded probe batch (vec_id < 50)",
-    "embedding_decontaminate_int8": (
-        "broadcast bounded benchmark suite (vec_id % 50 == 0, <= 2000 — "
-        "fixed-size by construction at every SF)"
-    ),
-    "tiered_rate_lookup_join": (
-        "broadcast 4-row literal tier table — the banded-rate lookup "
-        "dim; each fact row probes <= 4 bands map-side"
-    ),
-    "hodges_lehmann_daily_value": (
-        "broadcast calendar-bounded daily aggregate (~2.6k rows at "
-        "ANY fact SF) self-joined d2 >= d1 to enumerate Walsh pairs — "
-        "the pair blow-up is quadratic in the DAY domain only, a "
-        "query constant like the km life table's bucket domain"
-    ),
-}
-
-
-def test_no_unsanctioned_nested_loops_registry_wide(
-    registry_plan_hazards,
-):
-    """Every BroadcastNestedLoopJoin/CartesianProduct over raw rows
-    must be on the explicit whitelist above — scalar attaches and
-    bounds/offset frames (aggregate-derived broadcast sides) pass
-    automatically. A refactor that silently turns an equi-join into a
-    nested loop anywhere else fails here, not at 100 TB."""
-    _, flagged, _ = registry_plan_hazards
-    assert not flagged, flagged
-
-
-# Queries whose inspected plan reaches no file scan: they compute
-# eagerly (localCheckpoint, createDataFrame of driver results) or read
-# an eagerly pinned input, so the plan is a bare LogicalRDD/ExistingRDD
-# and the two sweeps above cannot see the work below it.  Each entry
-# says why the query pins; a query that newly pins fails here instead
-# of passing both sweeps unseen.
-PINNED_PLANS = {
-    "bfs_hops_copurchase": (
-        "BFS frontier over the localCheckpointed symmetric co-purchase "
-        "edges"
-    ),
-    "bitmap_rollup_daily_to_monthly": (
-        "eager pin of the month-grain rollup, then the daily bitmap persist"
-        " is released"
-    ),
-    "bpe_learn_merges": (
-        "the single-task merge kernel's output is eagerly localCheckpointed"
-        " (the distributed loop returns its merges via createDataFrame)"
-    ),
-    "clustering_coefficient_copurchase": "reads copurchase_edges(pinned=True)",
-    "cross_source_duplication_matrix": (
-        "eager pin (<= source-domain² rows), then the LSH signature persist"
-        " is released"
-    ),
-    "dbscan_box_clusters_errors": (
-        "eager pin of the cluster-count-sized result, then the neighbour "
-        "and core persists are released"
-    ),
-    "decision_stump_returns": (
-        "eager pin of the stump result, then the point and score persists "
-        "are released"
-    ),
-    "dedup_minhash_clusters": (
-        "connected_components over the eagerly pinned dedup_minhash_lsh "
-        "pairs"
-    ),
-    "dedup_minhash_lsh": (
-        "eager pin, then the minhash signature persist is released"
-    ),
-    "dedup_minhash_lsh_tuned": (
-        "eager pin, then the minhash signature persist is released"
-    ),
-    "dedup_shingle_containment": (
-        "eager pin, then the shingle and token persists are released"
-    ),
-    "dedup_threshold_sweep": (
-        "eager pin (5 rows), then the LSH signature persist is released"
-    ),
-    "diameter_double_sweep_copurchase": (
-        "two BFS sweeps driven from the driver; the result row comes back "
-        "via createDataFrame"
-    ),
-    "edge_triangle_support_copurchase": "reads copurchase_edges(pinned=True)",
-    "embedding_top_pc_power_iteration": (
-        "power-iteration vector is localCheckpointed each round"
-    ),
-    "er_lsh_blocking_audit": (
-        "eager pin (1 row), then the LSH signature persist is released"
-    ),
-    "greedy_coverage_doc_selection": (
-        "driver-side greedy loop; the K picked docs come back via "
-        "createDataFrame"
-    ),
-    "grouped_split_no_leakage": (
-        "eager pin (3 rows), then the (user, split) aggregate persist is "
-        "released"
-    ),
-    "harmonic_closeness_sampled_bfs": (
-        "sampled BFS over the localCheckpointed symmetric co-purchase edges"
-    ),
-    "hits_hubs_authorities_purchases": (
-        "single-task HITS kernel / per-half-round localCheckpoint of the "
-        "score vectors"
-    ),
-    "hodges_lehmann_daily_value": (
-        "eager pin (1 row), then the daily-aggregate persist is released"
-    ),
-    "isotonic_return_rate_by_price": (
-        "cumulative-sum frame is eagerly localCheckpointed before the PAV "
-        "pass"
-    ),
-    "kcore_peel_copurchase": (
-        "per-round localCheckpoint of the peeled edge set (plan growth "
-        "otherwise OOMs the driver)"
-    ),
-    "kmeans_lloyd_refine_embeddings": (
-        "eager pin of the k-row result, then the quantized and assignment "
-        "caches are released"
-    ),
-    "ktruss_3_copurchase": (
-        "iterative edge peel; the per-round edge counts come back via "
-        "createDataFrame"
-    ),
-    "lever_plan_proportion": (
-        "the Lever plan is computed on the driver and returned via "
-        "createDataFrame"
-    ),
-    "lincoln_petersen_dedup_estimate": (
-        "eager pin, then the paragraph and shingle persists are released"
-    ),
-    "link_prediction_common_neighbors": "reads copurchase_edges(pinned=True)",
-    "link_prediction_pref_attachment": "reads copurchase_edges(pinned=True)",
-    "link_prediction_resource_allocation": (
-        "reads copurchase_edges(pinned=True)"
-    ),
-    "lof_outliers_int8_cells": (
-        "kNN table is localCheckpointed, then the quantized-table persist "
-        "is released"
-    ),
-    "lpa_communities_copurchase": (
-        "per-round localCheckpoint of the label vector"
-    ),
-    "mad_outlier_order_values": (
-        "eager pin, then the value and deviation persists are released"
-    ),
-    "mutual_nn_int8_ivf": (
-        "eager pin of the nearest-neighbour table, then the quantized-table"
-        " persist is released"
-    ),
-    "pagerank_copurchase": "per-round localCheckpoint of the rank vector",
-    "personalized_pagerank_copurchase": (
-        "per-round localCheckpoint of the rank vector"
-    ),
-    "recursive_cte_dup_chains": (
-        "recursive chain expansion, eagerly localCheckpointed"
-    ),
-    "rich_club_coefficient_copurchase": "reads copurchase_edges(pinned=True)",
-    "triangle_count_copurchase": "reads copurchase_edges(pinned=True)",
-}
-
-
-def test_pinned_plans_are_declared(registry_plan_hazards):
-    _, _, pinned = registry_plan_hazards
-    assert pinned == set(PINNED_PLANS), (
-        f"newly pinned: {sorted(pinned - set(PINNED_PLANS))}; "
-        f"no longer pinned: {sorted(set(PINNED_PLANS) - pinned)}"
-    )
 
 
 def test_round16_dispersion_grid_joins_broadcast(spark, sf_dir):

@@ -9,7 +9,7 @@ chunk becomes one micro-batch via maxFilesPerTrigger=1, and the
 registered query functions must produce row-for-row identical results
 against the split layout and the original single-file layout.
 
-This also exercises the _stream_table multi-file-directory path: a
+This also exercises the StreamDrain.table multi-file-directory path: a
 directory-valued events.parquet previously yielded a silently EMPTY
 stream (zero batches, no error) — the exact failure mode that would
 appear if the driver regenerated tables as multi-file parquet.
@@ -18,7 +18,6 @@ appear if the driver regenerated tables as multi-file parquet.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pandas as pd
 import pyarrow as pa
@@ -31,10 +30,10 @@ _SPLIT_K = 4
 
 
 @pytest.fixture(scope="module")
-def split_sf_dir(spark, sf_dir) -> str:
+def split_sf_dir(spark, sf_dir, tmp_path_factory) -> str:
     """A clone of sf_dir where events.parquet is a DIRECTORY of
     chronological chunks (everything else symlinked verbatim)."""
-    root = tempfile.mkdtemp(prefix="sf_split_")
+    root = str(tmp_path_factory.mktemp("sf_split"))
     for f in os.listdir(sf_dir):
         if f != "events.parquet":
             os.symlink(os.path.join(sf_dir, f), os.path.join(root, f))
