@@ -1,8 +1,8 @@
-"""Validate the single-task-kernel gate boundary ABOVE 2M edges
-(VERDICT r18 task #7): synthesize a co-purchase input whose support-2
-edge table exceeds _LOCAL_GRAPH_MAX_EDGES, confirm the registered
-query picks the DISTRIBUTED loop on its own, then force the kernel on
-the same input and compare rows + timings. Also exercises
+"""Validate the single-task-kernel gate boundary ABOVE 2M edges:
+synthesize a co-purchase input whose support-2 edge table exceeds
+_LOCAL_GRAPH_MAX_EDGES, confirm the registered query picks the
+DISTRIBUTED loop on its own, then force the kernel on the same input
+and compare rows + timings. Also exercises
 connected_components' contraction + star-loop path on a >2M-edge
 graph against the forced kernel finisher.
 
@@ -13,8 +13,7 @@ re-joined fast and the star loop has real work). Every edge appears
 in exactly two distinct orders, passing the min_support=2 filter.
 
 Usage: python scripts/scale_gate_probe.py [n_edges]   (default 2.5M)
-Writes timings to stdout; the round ledger copies them into
-plans/r19/.
+Writes timings to stdout.
 """
 
 from __future__ import annotations

@@ -6,8 +6,7 @@ This catches the failure class the tuned test session masks: round 6
 shipped a query whose 16-wide aggregate-HOF self-join passed under
 get_session's 8 GB driver but OOMed a vanilla session's codegen; only
 this sweep exposed it (fixed by reformulating relationally). Run it
-before relying on CORRECTNESS_r{N} for queries the driver has not yet
-checked.
+before trusting a query that only the tuned test session has run.
 
 Usage: python scripts/vanilla_sweep.py [sf_dir]   (default sf0.01)
 """

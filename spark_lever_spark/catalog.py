@@ -162,7 +162,7 @@ def _scan_width_estimate(df: DataFrame) -> int | None:
     tasks the frame's scan will run with, WITHOUT converting the plan
     to an RDD (``df.rdd.getNumPartitions()`` plans the whole query a
     second time on the driver; measured per-call latency on every
-    spread consumer — VERDICT r18 task #6).
+    spread consumer).
 
     File-backed frames reproduce Spark's split math from the file
     listing: each file costs ``openCostInBytes`` extra and splits pack

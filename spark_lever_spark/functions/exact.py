@@ -27,6 +27,15 @@ Therefore:
 
 Every oracle SQL mirrors these with the same textual pattern
 (``CAST(round(x*100) AS BIGINT)``, ``round(x*10000)/10000``).
+
+Integer division is not portable either: Spark ``div`` truncates
+toward zero, DuckDB ``//`` floors, and 64-bit moments overflow BIGINT.
+One SQL text serves both engines through two placeholders: ``{I}`` is
+the wide integer type and ``{D}`` the integer division. ``duck_sql``
+fills them with HUGEINT and ``//``; ``spark_sql`` with ``DEC38``
+(DECIMAL(38,0)) and ``div``. ``sql_ss_div`` divides the magnitude and
+reapplies the sign, so both engines agree whatever the numerator's
+sign.
 """
 
 from __future__ import annotations
@@ -53,3 +62,31 @@ def sql_cents(expr: str) -> str:
 def sql_round_to(expr: str, n: int) -> str:
     s = 10**n
     return f"round(({expr}) * {s}) / {s}"
+
+
+DEC38 = "decimal(38,0)"
+
+
+def sql_ss_div(num: str, den: str, scale: int) -> str:
+    """SIGN-SPLIT scaled integer division, one SQL text valid in BOTH
+    dialects via the {I} placeholder (HUGEINT / decimal(38,0)) and the
+    {D} placeholder (// / div): magnitude is floor-divided, the sign
+    reapplied — Spark div truncates while DuckDB // floors, so the two
+    only agree on non-negative numerators (the CCI doctrine)."""
+    return (
+        f"CASE WHEN ({num}) >= 0"
+        f" THEN CAST(CAST(({num}) AS {{I}}) * {scale} {{D}} ({den})"
+        f" AS BIGINT)"
+        f" ELSE -CAST(CAST(-({num}) AS {{I}}) * {scale} {{D}} ({den})"
+        f" AS BIGINT) END"
+    )
+
+
+def duck_sql(expr: str) -> str:
+    """Fill the {I}/{D} placeholders for DuckDB: HUGEINT and //."""
+    return expr.format(I="HUGEINT", D="//")
+
+
+def spark_sql(expr: str) -> str:
+    """Fill the {I}/{D} placeholders for Spark: DECIMAL(38,0) and div."""
+    return expr.format(I=DEC38, D="div")

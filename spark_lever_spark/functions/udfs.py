@@ -12,6 +12,8 @@ Reference parity map:
   `groupBy().applyInPandas` grouped aggregation
 - registration for SQL (reference UDFRegistration.scala) ->
   `spark.udf.register`
+- grouped-aggregate pandas UDF -> `pandas_udf` of type GROUPED_AGG,
+  reducing each group to one value inside `.agg()` (exact IQR)
 
 Every entry computes something a built-in could also compute so the
 DuckDB oracle can verify the UDF machinery itself (serialization,
@@ -47,7 +49,6 @@ FROM documents
 WHERE doc_id < 200
 ORDER BY doc_id
 """,
-    category="udf",
 )
 def pandas_udf_text_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-vectorized scalar pandas UDF (the engine's standard escape
@@ -65,7 +66,6 @@ def pandas_udf_text_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT event_type, median(value) AS med_value, COUNT(*) AS cnt
 FROM events GROUP BY event_type ORDER BY event_type
 """,
-    category="udf",
 )
 def grouped_pandas_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UDAF via applyInPandas (reference had no native UDAF surface —
@@ -98,7 +98,6 @@ SELECT event_type,
 FROM events WHERE event_type IN ('click', 'view')
 GROUP BY event_type ORDER BY event_type
 """,
-    category="udf",
 )
 def sql_registered_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """spark.udf.register + use from SQL (reference
@@ -147,7 +146,6 @@ SELECT doc_id, pos, word,
 FROM w
 ORDER BY doc_id, pos
 """,
-    category="udf",
 )
 def udtf_word_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (Spark 3.5+/4 table function) used via SQL LATERAL:
@@ -182,3 +180,92 @@ def udtf_word_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY d.doc_id, t.pos
         """
     )
+
+
+# ---------------------------------------------------------------------------
+# GROUPED_AGG pandas UDF surface + partial correlation
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "pandas_grouped_agg_iqr",
+    oracle="""
+WITH c AS (
+  SELECT o_orderpriority AS pri,
+         CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+         row_number() OVER (PARTITION BY o_orderpriority
+                            ORDER BY round(o_totalprice * 100),
+                                     o_orderkey) AS rn,
+         count(*) OVER (PARTITION BY o_orderpriority) AS n
+  FROM orders
+)
+SELECT pri, CAST(max(n) AS BIGINT) AS n_orders,
+       CAST(max(CASE WHEN rn = (n + 3) // 4 THEN cents END)
+            AS BIGINT) AS q1_cents,
+       CAST(max(CASE WHEN rn = (3 * n + 3) // 4 THEN cents END)
+            AS BIGINT) AS q3_cents,
+       CAST(max(CASE WHEN rn = (3 * n + 3) // 4 THEN cents END)
+            - max(CASE WHEN rn = (n + 3) // 4 THEN cents END)
+            AS BIGINT) AS iqr_cents
+FROM c GROUP BY pri ORDER BY pri
+""",
+)
+def pandas_grouped_agg_iqr(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """GROUPED_AGG PANDAS UDF surface — the Arrow per-group
+    AGGREGATION path (pandas_udf returning a scalar inside .agg()),
+    distinct from grouped_pandas_median's applyInPandas (full-frame
+    in, full-frame out) and from map_in_pandas (partition
+    streams): three scalar UDAFs compute the exact ⌈n/4⌉ / ⌈3n/4⌉
+    order-statistic quartiles and their IQR on int64 cents, with
+    numpy partition-free exact sorting inside the Arrow batch (each
+    GROUP must fit an executor — the priority domain is 5 keys;
+    heavy-key domains pre-aggregate instead, same caveat as the
+    median op). The oracle replays the quartiles as rank windows —
+    a Python-rounding or nearest-rank-convention slip in the UDF
+    cannot hash-match. Scale: one shuffle on the bounded priority
+    key."""
+    from pyspark.sql.functions import PandasUDFType, pandas_udf
+
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderpriority",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias(
+            "cents"
+        ),
+        "o_orderkey",
+    )
+
+    # series-to-scalar: the explicit GROUPED_AGG functionType (this
+    # module's `from __future__ import annotations` stringifies type
+    # hints, which defeats pandas_udf's signature inference)
+    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
+    def q1_udaf(cents, key):
+        order = sorted(zip(cents.tolist(), key.tolist()))
+        n = len(order)
+        return int(order[(n + 3) // 4 - 1][0])
+
+    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
+    def q3_udaf(cents, key):
+        order = sorted(zip(cents.tolist(), key.tolist()))
+        n = len(order)
+        return int(order[(3 * n + 3) // 4 - 1][0])
+
+    # GROUPED_AGG UDFs cannot mix with built-in aggregates in one
+    # .agg() — the count rides a third pandas UDAF
+    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
+    def n_udaf(cents):
+        return len(cents)
+
+    agg = o.groupBy(F.col("o_orderpriority").alias("pri")).agg(
+        n_udaf(F.col("cents")).alias("n_orders"),
+        q1_udaf(F.col("cents"), F.col("o_orderkey")).alias("q1_cents"),
+        q3_udaf(F.col("cents"), F.col("o_orderkey")).alias("q3_cents"),
+    )
+    return agg.selectExpr(
+        "pri",
+        "n_orders",
+        "q1_cents",
+        "q3_cents",
+        "q3_cents - q1_cents AS iqr_cents",
+    ).orderBy("pri")

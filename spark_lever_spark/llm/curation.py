@@ -27,11 +27,16 @@ Scale notes (the 100 TB shapes):
   100 TB corpus.
 - winnowing is per-document array work (map-only, codegen'd); the
   fingerprint set per doc is O(tokens/window) longs.
+
+Selection and leakage: train/val n-gram coverage, a per-source
+document cap, greedy set-cover selection over 3-shingles, and a
+Bloom-prefiltered n-gram decontamination audit (flagged vs exact hits,
+realized false-positive load, no false negatives).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -102,7 +107,6 @@ hits AS (
 SELECT doc_id, n_grams, n_hits, n_hits > 0 AS contaminated
 FROM hits ORDER BY doc_id
 """,
-    category="llm_curation",
 )
 def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
@@ -176,7 +180,6 @@ SELECT doc_id, n_bigrams, n_oov, sum_train_freq,
            AS avg_train_freq
 FROM scored ORDER BY doc_id
 """,
-    category="llm_curation",
 )
 def text_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality partitioning, exact-arithmetic form: train
@@ -239,7 +242,6 @@ FROM documents
 WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 25
 ORDER BY doc_id
 """,
-    category="llm_curation",
 )
 def sample_hash_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-bucket sampling: keep documents whose
@@ -292,7 +294,6 @@ SELECT doc_id,
        array_to_string(list_transform(d, x -> CAST(x AS VARCHAR)), ',') AS fps
 FROM fp ORDER BY doc_id
 """,
-    category="llm_curation",
 )
 def text_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS-style winnowing fingerprints: hash every 3-token k-gram,
@@ -360,7 +361,6 @@ SELECT source, lang, n_docs, n_tokens,
 FROM per, tot
 ORDER BY source, lang
 """,
-    category="llm_curation",
 )
 def mix_source_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-mixing weights: per (source, lang) token shares and the
@@ -454,7 +454,6 @@ FROM sampled
 GROUP BY lang, source
 ORDER BY lang, source
 """,
-    category="llm_pipeline",
 )
 def pipeline_curate_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed curation pipeline: quality gate → benchmark
@@ -550,7 +549,6 @@ FROM per_doc
 WHERE n_spans > 0
 ORDER BY doc_id
 """,
-    category="llm_dedup",
 )
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact substring-span duplication profile (Lee et al. 2022,
@@ -622,7 +620,6 @@ FROM scored s JOIN med m ON s.source = m.source
 WHERE s.avg_tok_len <= m.med_score
 ORDER BY s.doc_id
 """,
-    category="llm_curation",
 )
 def curate_top_half_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source median-gated curation: keep each source's better
@@ -682,7 +679,6 @@ FROM cum
 WHERE cum_tokens <= 2000
 ORDER BY source, cum_tokens
 """,
-    category="llm_curation",
 )
 def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget-capped corpus sampling: take documents per source
@@ -749,7 +745,6 @@ WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
       < r.rate * 10000
 ORDER BY d.doc_id
 """,
-    category="llm_curation",
 )
 def sample_apply_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLY half of domain rebalancing: turn mix_source_weights'
@@ -833,7 +828,6 @@ SELECT source, count(*) AS n_docs,
        CAST(SUM(chars_removed) AS BIGINT) AS chars_removed
 FROM red GROUP BY source ORDER BY source
 """,
-    category="llm_curation",
 )
 def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction pass (emails / phone numbers / IPv4 masked to
@@ -910,7 +904,6 @@ s AS (
 SELECT source, split, count(*) AS n_docs
 FROM s GROUP BY source, split ORDER BY source, split
 """,
-    category="llm_curation",
 )
 def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified train/val/test split (80/10/10 by
@@ -952,7 +945,6 @@ SELECT CAST(epoch AS BIGINT) AS epoch, CAST(pos AS BIGINT) AS pos, doc_id
 FROM ranked WHERE pos <= 20
 ORDER BY epoch, pos
 """,
-    category="llm_curation",
 )
 def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-epoch global shuffle: epoch k's training order
@@ -1015,7 +1007,6 @@ SELECT source, n_tokens,
            AS kept_tokens_est
 FROM per, ext ORDER BY source
 """,
-    category="llm_curation",
 )
 def temperature_sampling_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based mixture sampling at alpha = 0.5 (the
@@ -1077,7 +1068,6 @@ SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars,
        END AS qnorm
 FROM ranked ORDER BY doc_id
 """,
-    category="llm_curation",
 )
 def quality_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source quality-score normalization: each document's score
@@ -1172,7 +1162,6 @@ SELECT doc_id, CAST(rank_a AS BIGINT) AS rank_a,
        CAST(rank_b AS BIGINT) AS rank_b, rrf_score
 FROM fused ORDER BY rrf_score DESC, doc_id LIMIT 20
 """,
-    category="llm_curation",
 )
 def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. '09, k = 60) of two
@@ -1273,7 +1262,6 @@ FROM assigned a, leak l
 GROUP BY a.split, l.n_leaky_users
 ORDER BY split
 """,
-    category="llm_curation",
 )
 def grouped_split_no_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP-consistent train/val/test split + leakage audit — the
@@ -1345,7 +1333,6 @@ SELECT g.source, g.lang, g.n_docs, g.n_chars,
 FROM g, tot t
 ORDER BY source, lang
 """,
-    category="llm_curation",
 )
 def stratified_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratification balance telemetry — the mix report every corpus
@@ -1404,7 +1391,6 @@ FROM tickets
 ORDER BY ticket, o_orderkey
 LIMIT 100
 """,
-    category="llm_curation",
 )
 def weighted_sample_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic WEIGHTED sampling without replacement by unit-hash
@@ -1485,7 +1471,6 @@ SELECT stratum, CAST(fold AS BIGINT) AS fold,
        CAST(max(c_custkey) AS BIGINT) AS max_key
 FROM assign GROUP BY stratum, fold ORDER BY stratum, fold
 """,
-    category="llm_curation",
 )
 def stratified_kfold_assignment(
     spark: SparkSession, sf_dir: str
@@ -1544,7 +1529,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_docs,
             AS BIGINT) AS overlap_ppm
 FROM flags
 """,
-    category="llm_curation",
 )
 def epoch_sample_overlap_audit(
     spark: SparkSession, sf_dir: str
@@ -1621,7 +1605,6 @@ SELECT g.segment, g.n AS n_orders,
        g.n * 1000000 // (g.n + 100) AS shrink_ppm
 FROM g CROSS JOIN tot ORDER BY g.segment
 """,
-    category="llm_curation",
 )
 def target_encode_mktsegment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SMOOTHED TARGET ENCODING (m-estimate, m=100) of the customer
@@ -1751,7 +1734,6 @@ SELECT f_source, f_nchars, f_tokband, f_md5char, n_pairs,
 FROM pat
 ORDER BY weight_milli DESC, f_source, f_nchars, f_tokband, f_md5char
 """,
-    category="llm_curation",
 )
 def fellegi_sunter_weight_table(
     spark: SparkSession, sf_dir: str
@@ -1845,4 +1827,531 @@ def fellegi_sunter_weight_table(
         "f_nchars",
         "f_tokband",
         "f_md5char",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Held-out n-gram coverage and per-source document caps
+# ---------------------------------------------------------------------------
+
+
+# Shared 3-shingle CTE (space-split, the dedup_shingle_containment
+# construction) carrying source for the cross-source measures.
+_SH3_CTE = """
+tok3 AS (
+  SELECT doc_id, source,
+         generate_subscripts(string_split(text, ' '), 1) AS idx,
+         unnest(string_split(text, ' ')) AS word
+  FROM documents
+),
+sh3 AS (
+  SELECT a.doc_id, a.source,
+         a.word || ' ' || b.word || ' ' || c.word AS shingle
+  FROM tok3 a
+  JOIN tok3 b ON b.doc_id = a.doc_id AND b.idx = a.idx + 1
+  JOIN tok3 c ON c.doc_id = a.doc_id AND c.idx = a.idx + 2
+)
+"""
+
+
+def _shingles3(col: Column) -> Column:
+    """Overlapping 3-token shingles of a space-split text column
+    (array<string>; empty below 3 tokens) — mirrors _SH3_CTE."""
+    lst = F.split(col, " ")
+    return F.when(
+        F.size(lst) >= 3,
+        F.transform(
+            F.sequence(F.lit(1), F.size(lst) - 2),
+            lambda i: F.array_join(F.slice(lst, i, 3), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+@register(
+    "split_ngram_coverage",
+    oracle="""
+WITH
+""" + _SH3_CTE + """,
+lab AS (
+  SELECT doc_id,
+         (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+          % 10) < 8 AS is_train
+  FROM documents
+),
+tr AS (
+  SELECT DISTINCT s.shingle
+  FROM sh3 s JOIN lab l ON l.doc_id = s.doc_id
+  WHERE l.is_train
+),
+va AS (
+  SELECT DISTINCT s.source, s.shingle
+  FROM sh3 s JOIN lab l ON l.doc_id = s.doc_id
+  WHERE NOT l.is_train
+)
+SELECT va.source,
+       CAST(count(*) AS BIGINT) AS n_val_grams,
+       CAST(SUM(CASE WHEN tr.shingle IS NOT NULL THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_covered,
+       CAST(CAST(SUM(CASE WHEN tr.shingle IS NOT NULL THEN 1 ELSE 0
+                     END) AS HUGEINT) * 1000000
+            // count(*) AS BIGINT) AS coverage_ppm
+FROM va LEFT JOIN tr ON tr.shingle = va.shingle
+GROUP BY 1 ORDER BY 1
+""",
+)
+def split_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TRAIN/VAL N-GRAM COVERAGE — after an 80/20 deterministic
+    doc-hash split (the md5-bucket idiom every split/sample query here
+    uses), what fraction of the held-out side's distinct 3-grams
+    already appears in train? High coverage = the val loss measures
+    memorization-adjacent interpolation, not generalization — the
+    leakage lens on split design that text_decontaminate applies to
+    EXTERNAL eval sets, turned inward on the pipeline's own split
+    (grouped_split_no_leakage guards keys; this measures residual
+    CONTENT overlap that key-grouping cannot see). Exact distinct
+    grams both sides, one gram-keyed left join, ppm floor-division.
+    Scale: two distinct shuffles + one equi-join, all gram-keyed."""
+    docs = load_table(spark, sf_dir, "documents")
+    lab = docs.select(
+        "doc_id",
+        "source",
+        (
+            F.conv(
+                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
+                16,
+                10,
+            ).cast("long")
+            % 10
+            < 8
+        ).alias("is_train"),
+        F.explode(_shingles3(F.col("text"))).alias("shingle"),
+    )
+    tr = (
+        lab.filter(F.col("is_train"))
+        .select("shingle")
+        .distinct()
+        .withColumn("seen", F.lit(1))
+    )
+    va = (
+        lab.filter(~F.col("is_train"))
+        .select("source", "shingle")
+        .distinct()
+    )
+    return (
+        va.join(tr, "shingle", "left")
+        .groupBy("source")
+        .agg(
+            F.count("*").alias("n_val_grams"),
+            F.sum(F.coalesce(F.col("seen"), F.lit(0))).alias(
+                "n_covered"
+            ),
+        )
+        .selectExpr(
+            "source",
+            "n_val_grams",
+            "n_covered",
+            "CAST(CAST(n_covered AS DECIMAL(38,0)) * 1000000"
+            " div n_val_grams AS BIGINT) AS coverage_ppm",
+        )
+        .orderBy("source")
+    )
+
+
+@register(
+    "source_doc_cap_filter",
+    oracle="""
+WITH rk AS (
+  SELECT source, n_chars,
+         row_number() OVER (PARTITION BY source
+                            ORDER BY n_chars DESC, doc_id) AS rn
+  FROM documents
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(SUM(CASE WHEN rn <= 50 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_kept,
+       CAST(SUM(CASE WHEN rn > 50 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_dropped,
+       CAST(SUM(CASE WHEN rn <= 50 THEN n_chars ELSE 0 END) AS BIGINT)
+         AS kept_chars,
+       CAST(SUM(n_chars) AS BIGINT) AS total_chars
+FROM rk GROUP BY 1 ORDER BY 1
+""",
+)
+def source_doc_cap_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PER-SOURCE DOCUMENT CAP (the RefinedWeb/C4 "no domain may
+    dominate" rule): rank docs within each source by quality proxy
+    (n_chars desc, doc_id tie-break) and cap at 50, reporting
+    kept/dropped/char-mass per source — the anti-skew gate that stops
+    one crawler feed from being 90 % of an epoch. One rank window per
+    source partition + conditional aggregation; at cluster scale the
+    window is source-partitioned so the cap parallelizes across
+    sources (and a skewed mega-source is exactly what the cap
+    removes). Complements mix_source_weights (which re-weights what
+    survives) and curate_top_half_by_source (median gate; this is a
+    fixed-budget gate)."""
+    docs = load_table(spark, sf_dir, "documents")
+    w = Window.partitionBy("source").orderBy(
+        F.desc("n_chars"), "doc_id"
+    )
+    rk = docs.select(
+        "source", "n_chars", F.row_number().over(w).alias("rn")
+    )
+    return (
+        rk.groupBy("source")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.when(F.col("rn") <= 50, 1).otherwise(0)).alias(
+                "n_kept"
+            ),
+            F.sum(F.when(F.col("rn") > 50, 1).otherwise(0)).alias(
+                "n_dropped"
+            ),
+            F.sum(
+                F.when(F.col("rn") <= 50, F.col("n_chars")).otherwise(0)
+            ).alias("kept_chars"),
+            F.sum("n_chars").alias("total_chars"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Submodular greedy corpus selection (set cover over 3-shingles)
+# ---------------------------------------------------------------------------
+
+_GREEDY_K = 6
+
+
+def _greedy_cover_oracle(k: int = _GREEDY_K) -> str:
+    """Unrolled greedy set-cover oracle: round r picks the not-yet-
+    selected doc with the maximum count of 3-shingles not covered by
+    rounds 1..r-1 (ties -> min doc_id; docs whose shingles are all
+    covered count 0)."""
+    ctes = [
+        "WITH "
+        + _SH3_CTE.strip().lstrip("WITH").strip()
+        + """,
+sh AS MATERIALIZED (SELECT DISTINCT doc_id, shingle FROM sh3),
+docs0 AS MATERIALIZED (SELECT DISTINCT doc_id FROM sh),
+g1 AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS g FROM sh GROUP BY 1),
+p1 AS (SELECT doc_id, g FROM g1 ORDER BY g DESC, doc_id LIMIT 1),
+c1 AS (SELECT DISTINCT shingle FROM sh
+       WHERE doc_id IN (SELECT doc_id FROM p1))"""
+    ]
+    for r in range(2, k + 1):
+        prev_sel = " UNION ALL ".join(
+            f"SELECT doc_id FROM p{i}" for i in range(1, r)
+        )
+        ctes.append(f"""g{r} AS (
+  SELECT d.doc_id, CAST(coalesce(x.g, 0) AS BIGINT) AS g
+  FROM (SELECT doc_id FROM docs0
+        WHERE doc_id NOT IN ({prev_sel})) d
+  LEFT JOIN (SELECT doc_id, count(*) AS g FROM sh
+             WHERE shingle NOT IN (SELECT shingle FROM c{r - 1})
+             GROUP BY 1) x ON x.doc_id = d.doc_id
+),
+p{r} AS (SELECT doc_id, g FROM g{r} ORDER BY g DESC, doc_id LIMIT 1),
+c{r} AS (SELECT shingle FROM c{r - 1}
+         UNION
+         SELECT shingle FROM sh
+         WHERE doc_id IN (SELECT doc_id FROM p{r}))""")
+    finals = " UNION ALL ".join(
+        f"SELECT CAST({r} AS INT) AS selection_rank, doc_id, g AS gain,"
+        f" (SELECT CAST(count(*) AS BIGINT) FROM c{r}) AS covered_cum"
+        f" FROM p{r}"
+        for r in range(1, k + 1)
+    )
+    return ",\n".join(ctes) + f"\n{finals}\nORDER BY selection_rank"
+
+
+@register(
+    "greedy_coverage_doc_selection",
+    oracle=_greedy_cover_oracle(),
+)
+def greedy_coverage_doc_selection(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """GREEDY SUBMODULAR CORPUS SELECTION (lazy-greedy set cover over
+    3-token shingles): round r selects the document with the largest
+    MARGINAL vocabulary coverage — the facility-location/coverage
+    objective behind data-subset-selection pipelines (pick the few
+    docs that span the corpus's n-gram space for eval seeds or dedup
+    anchors). Deterministic tie-break: max gain, then min doc_id; a
+    doc whose shingles are fully covered counts 0 and stays eligible.
+    K=6 fixed rounds. Scale shape: the shingle table is computed ONCE
+    and persisted; each round is one anti-join against the (bounded,
+    <= K docs' shingles) covered set — broadcast-sized by construction
+    — plus one count aggregation; the per-round argmax is a 1-row
+    TakeOrdered. Driver materializes exactly K result rows."""
+    from pyspark import StorageLevel
+
+    docs = load_table(spark, sf_dir, "documents")
+    # Bound the cached partition count to the session's real
+    # parallelism: a 200-partition vanilla-session distinct otherwise
+    # caches 200 slivers and every one of the K rounds' stages pays a
+    # 200-task scheduling storm (measured 65 s -> ~15 s at sf0.01).
+    # Classic-mode probe with a Connect-safe fallback (the minhash_bands
+    # pattern, llm/dedup.py).
+    try:
+        par = spark.sparkContext.defaultParallelism
+    except Exception:  # Spark Connect: no sparkContext
+        par = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    doc_sh = (
+        docs.select(
+            "doc_id", F.explode(_shingles3(F.col("text"))).alias("shingle")
+        )
+        .distinct()
+        .coalesce(par)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    selected: list[int] = []
+    rows = []
+    cum = 0
+    for r in range(1, _GREEDY_K + 1):
+        cand_sh = doc_sh
+        if selected:
+            cand_sh = cand_sh.filter(~F.col("doc_id").isin(selected))
+            covered = (
+                doc_sh.filter(F.col("doc_id").isin(selected))
+                .select("shingle")
+                .distinct()
+            )
+            cand_sh = cand_sh.join(
+                F.broadcast(covered), "shingle", "left_anti"
+            )
+        top_rows = (
+            cand_sh.groupBy("doc_id")
+            .agg(F.count("*").alias("g"))
+            .orderBy(F.desc("g"), F.asc("doc_id"))
+            .limit(1)
+            .collect()
+        )
+        if top_rows and int(top_rows[0]["g"]) > 0:
+            doc_id, gain = int(top_rows[0]["doc_id"]), int(top_rows[0]["g"])
+        else:
+            # every remaining doc is fully covered: the greedy argmax
+            # degenerates to gain 0, min remaining doc_id (the oracle's
+            # coalesce(0) grid keeps those docs eligible)
+            doc_id = int(
+                doc_sh.select("doc_id")
+                .distinct()
+                .filter(~F.col("doc_id").isin(selected))
+                .agg(F.min("doc_id"))
+                .collect()[0][0]
+            )
+            gain = 0
+        selected.append(doc_id)
+        # marginal gain counts exactly the newly covered shingles, so
+        # the cumulative coverage is the running gain sum — no extra
+        # count action per round
+        cum += gain
+        rows.append((r, doc_id, gain, cum))
+    doc_sh.unpersist()
+    return spark.createDataFrame(
+        rows,
+        "selection_rank int, doc_id long, gain long, covered_cum long",
+    ).orderBy("selection_rank")
+
+
+# ---------------------------------------------------------------------------
+# Bloom-prefiltered n-gram decontamination audit
+# ---------------------------------------------------------------------------
+
+_NGRAM = 5  # word n-gram width (long enough that cross-doc hits mean
+# contamination, short enough that the synthetic corpus has real hits)
+_BITS_PER_GRAM = 16  # m = 16 x distinct eval grams -> fill ~0.12 at
+# k = 2, theoretical fp ~1.4 % at ANY corpus scale (m tracks the eval
+# set, which is what a production decontamination filter sizes against)
+
+
+def _md5_pos(col: Column, tag: str, m: Column) -> Column:
+    """Deterministic Bloom probe position: 48-bit integer from a tagged
+    md5 prefix, modulo the filter size. Identical in DuckDB as
+    ``('0x' || substr(md5('tag:' || g), 1, 12))::BIGINT % m``."""
+    return F.conv(
+        F.substring(
+            F.md5(F.encode(F.concat(F.lit(tag + ":"), col), "UTF-8")), 1, 12
+        ),
+        16,
+        10,
+    ).cast("long") % m
+
+
+def _word_ngrams(toks: Column, n: int) -> Column:
+    """All word ``n``-grams of a token array, in position order (empty
+    when the document is shorter than ``n`` tokens)."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+@register(
+    "decontaminate_bloom_ngram_audit",
+    oracle=f"""
+WITH d AS (
+  SELECT doc_id, string_split(text, ' ') AS toks, doc_id % 10 = 7 AS is_eval
+  FROM documents
+),
+grams AS (
+  SELECT doc_id, is_eval,
+         array_to_string(toks[CAST(i AS BIGINT):CAST(i + {_NGRAM} - 1 AS BIGINT)],
+                         ' ') AS g
+  FROM d, LATERAL unnest(range(1, len(toks) - {_NGRAM} + 2)) t(i)
+),
+ev AS (SELECT DISTINCT g FROM grams WHERE is_eval),
+m AS (SELECT {_BITS_PER_GRAM} * count(*) AS m FROM ev),
+bits AS (
+  SELECT DISTINCT pos FROM (
+    SELECT ('0x' || substr(md5('b1:' || g), 1, 12))::BIGINT % m.m AS pos
+    FROM ev, m
+    UNION ALL
+    SELECT ('0x' || substr(md5('b2:' || g), 1, 12))::BIGINT % m.m
+    FROM ev, m
+  )
+),
+corp AS (
+  SELECT doc_id, g,
+         ('0x' || substr(md5('b1:' || g), 1, 12))::BIGINT % m.m AS p1,
+         ('0x' || substr(md5('b2:' || g), 1, 12))::BIGINT % m.m AS p2
+  FROM grams, m WHERE NOT is_eval
+),
+probed AS (
+  SELECT doc_id, g,
+         (p1 IN (SELECT pos FROM bits)
+          AND p2 IN (SELECT pos FROM bits)) AS flagged,
+         g IN (SELECT g FROM ev) AS hit
+  FROM corp
+)
+SELECT
+  (SELECT CAST(count(*) AS BIGINT) FROM ev) AS n_eval_grams,
+  (SELECT CAST(count(*) AS BIGINT) FROM bits) AS n_bits_set,
+  CAST(count(*) AS BIGINT) AS n_corpus_grams,
+  CAST(sum(CASE WHEN flagged THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged,
+  CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) AS n_true_hits,
+  CAST(sum(CASE WHEN flagged AND NOT hit THEN 1 ELSE 0 END) AS BIGINT)
+    AS n_false_pos,
+  CAST(sum(CASE WHEN hit AND NOT flagged THEN 1 ELSE 0 END) AS BIGINT)
+    AS n_missed,
+  CAST(count(DISTINCT CASE WHEN flagged THEN doc_id END) AS BIGINT)
+    AS n_docs_flagged,
+  CAST(count(DISTINCT CASE WHEN hit THEN doc_id END) AS BIGINT)
+    AS n_docs_contaminated
+FROM probed
+""",
+)
+def decontaminate_bloom_ngram_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Audit of a Bloom-prefiltered n-gram decontamination pass.
+
+    Eval split = ``doc_id % 10 == 7``; its distinct word 5-grams seed a
+    Bloom filter (k = 2 md5-derived probes into m = 16 x |eval grams|
+    bits — the md5 family, unlike the xxhash64 runtime filters in
+    operators/bloom.py, is replayable in the DuckDB oracle). Every
+    corpus (non-eval) n-gram instance is probed against the filter and
+    ALSO exactly verified, yielding one audit row: filter size and set
+    bits, flagged vs true-hit instance counts, realized false-positive
+    load, the structurally-impossible miss count (always 0 — Bloom
+    filters have no false negatives), and contaminated-document counts.
+
+    Scale shapes: the filter is built by aggregating the EVAL side only
+    (broadcast both as the bit table and as the exact-verify set — the
+    eval set is the small side by construction, and m tracks IT, not
+    the corpus, so the ~1.4 % theoretical fp rate holds at any corpus
+    size); the corpus side is scanned once, probed and verified via
+    broadcast joins with zero corpus-grain shuffle — the single output
+    row comes from one map-side-combinable aggregation. In production
+    the exact verify runs on the flagged ~1.5 % only; the audit
+    verifies everything to measure what that shortcut would miss (0).
+    """
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.split("text", " ").alias("toks"),
+        (F.col("doc_id") % 10 == 7).alias("is_eval"),
+    )
+    grams = docs.select(
+        "doc_id",
+        "is_eval",
+        F.explode(_word_ngrams(F.col("toks"), _NGRAM)).alias("g"),
+    )
+    ev = grams.filter("is_eval").select("g").distinct()
+    m = ev.agg(
+        (F.lit(_BITS_PER_GRAM) * F.count("*")).cast("long").alias("m")
+    )
+    bits = (
+        ev.crossJoin(F.broadcast(m))
+        .select(
+            F.explode(
+                F.array(
+                    _md5_pos(F.col("g"), "b1", F.col("m")),
+                    _md5_pos(F.col("g"), "b2", F.col("m")),
+                )
+            ).alias("pos")
+        )
+        .distinct()
+    )
+    corp = (
+        grams.filter(~F.col("is_eval"))
+        .crossJoin(F.broadcast(m))
+        .select(
+            "doc_id",
+            "g",
+            _md5_pos(F.col("g"), "b1", F.col("m")).alias("p1"),
+            _md5_pos(F.col("g"), "b2", F.col("m")).alias("p2"),
+        )
+    )
+    b1 = F.broadcast(bits.select(F.col("pos").alias("p1")).withColumn(
+        "f1", F.lit(True)
+    ))
+    b2 = F.broadcast(bits.select(F.col("pos").alias("p2")).withColumn(
+        "f2", F.lit(True)
+    ))
+    hits = F.broadcast(ev.select(F.col("g")).withColumn("h", F.lit(True)))
+    probed = (
+        corp.join(b1, "p1", "left")
+        .join(b2, "p2", "left")
+        .join(hits, "g", "left")
+        .select(
+            "doc_id",
+            (F.coalesce("f1", F.lit(False)) & F.coalesce("f2", F.lit(False)))
+            .alias("flagged"),
+            F.coalesce("h", F.lit(False)).alias("hit"),
+        )
+    )
+    agg = probed.agg(
+        F.count("*").alias("n_corpus_grams"),
+        F.sum(F.col("flagged").cast("long")).alias("n_flagged"),
+        F.sum(F.col("hit").cast("long")).alias("n_true_hits"),
+        F.sum((F.col("flagged") & ~F.col("hit")).cast("long")).alias(
+            "n_false_pos"
+        ),
+        F.sum((F.col("hit") & ~F.col("flagged")).cast("long")).alias(
+            "n_missed"
+        ),
+        F.countDistinct(
+            F.when(F.col("flagged"), F.col("doc_id"))
+        ).alias("n_docs_flagged"),
+        F.countDistinct(F.when(F.col("hit"), F.col("doc_id"))).alias(
+            "n_docs_contaminated"
+        ),
+    )
+    return (
+        ev.agg(F.count("*").alias("n_eval_grams"))
+        .crossJoin(bits.agg(F.count("*").alias("n_bits_set")))
+        .crossJoin(agg)
+        .select(
+            "n_eval_grams",
+            "n_bits_set",
+            "n_corpus_grams",
+            "n_flagged",
+            "n_true_hits",
+            "n_false_pos",
+            "n_missed",
+            "n_docs_flagged",
+            "n_docs_contaminated",
+        )
     )

@@ -19,6 +19,12 @@ the 100 TB point; verified on the synthetic `documents` table):
   Hamming distance, blocked by 16-bit chunks (pigeonhole: distance<=3
   implies >=1 of 4 chunks equal).
 
+Audits of those families: Lincoln-Petersen duplicate estimate, simhash
+bit balance, inter-source shingle overlap, threshold sweep; and
+cross-source entity resolution (LSH blocking, signature screen, exact
+verification, component merge) with its duplication matrix and
+blocking-quality audit.
+
 Everything uses built-in JVM expressions (md5/conv/bit ops/higher-order
 array functions) — zero Python UDFs in any hot path.
 
@@ -43,7 +49,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_lever_spark.catalog import load_table
+from spark_lever_spark.catalog import load_table, spread_scan
+from spark_lever_spark.llm.curation import _SH3_CTE, _shingles3
 from spark_lever_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -148,11 +155,11 @@ def minhash_bands(
     # re-measured 16.4 -> 3.5 s warm, identical pair sets). At cluster
     # scale the input already carries >= parallelism partitions and
     # this is a no-op; results are per-doc deterministic either way.
-    # r19 consolidation (VERDICT r18 task #6): the inline probe — the
-    # original of the pattern, including the ADVICE r16/r17 file-count
-    # and split-size refinements — now lives in catalog.spread_scan,
-    # which estimates scan width from the file listing instead of a
-    # plan-to-RDD conversion per call.
+    # The inline probe — the original of the pattern, including its
+    # file-count and split-size refinements — now lives in
+    # catalog.spread_scan, which estimates scan width from the file
+    # listing instead of a plan-to-RDD conversion per call (that
+    # conversion planned the whole query a second time on the driver).
     from spark_lever_spark.catalog import spread_scan
 
     docs = spread_scan(docs, default_narrow=True)
@@ -326,7 +333,6 @@ FROM documents
 GROUP BY md5(text)
 ORDER BY keep_id
 """,
-    category="llm_dedup",
 )
 def dedup_exact_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on md5 content fingerprint — shuffles digests, not text."""
@@ -343,7 +349,6 @@ FROM documents
 GROUP BY 1
 ORDER BY keep_id
 """,
-    category="llm_dedup",
 )
 def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup after normalization (lower/trim/space-collapse)."""
@@ -382,7 +387,6 @@ JOIN card cb ON cb.doc_id = id_b
 WHERE CAST(n_common AS DOUBLE) / (ca.n_tok + cb.n_tok - n_common) >= 0.8
 ORDER BY id_a, id_b
 """,
-    category="llm_dedup",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup detection by exact token-set Jaccard ≥ 0.8 with
@@ -528,7 +532,6 @@ est AS MATERIALIZED (
 WITH {_MINHASH_SQL_CTES}
 SELECT id_a, id_b, est_jaccard FROM est ORDER BY id_a, id_b
 """,
-    category="llm_dedup",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(k=32) + LSH banding (8 bands x 4 rows) candidate pairs.
@@ -575,8 +578,8 @@ def lsh_candidate_pairs(
     # re-attach sides), so without a persist the k-hash signature map
     # — the pipeline's expensive stage — runs three times (the r16
     # containment-fix recompute class). Corpus-linear, spills to disk.
-    # Release contract (optimization r19, closing the ADVICE r17 /
-    # VERDICT r18 leak): the returned frame is lazy, so there is no
+    # Release contract (without it the signature persist outlived
+    # every query that built it): the returned frame is lazy, so there is no
     # post-action point inside this helper to unpersist from. Callers
     # pass ``releases`` and unpersist its entries once their own
     # result is pinned (eager localCheckpoint or a CC pass that
@@ -696,12 +699,11 @@ ORDER BY id_a, id_b
 @register(
     "dedup_minhash_lsh_tuned",
     oracle=_TUNED_LSH_SQL,
-    category="llm_dedup",
 )
 def dedup_minhash_lsh_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs under the ADAPTIVE banding chosen by
-    ``tune_lsh_banding`` — the round-7 tuner made actionable end-to-end
-    (VERDICT r7 task #3). The tuner samples the corpus's pairwise-
+    ``tune_lsh_banding`` — the tuner made actionable end-to-end. The
+    tuner samples the corpus's pairwise-
     Jaccard background histogram (deterministic md5-bucket sample, no
     RNG) and picks, among all (b, r) with b*r = 32, the banding that
     minimizes the expected candidate count subject to recall >= 0.9 at
@@ -777,7 +779,6 @@ JOIN chunked b
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 ORDER BY id_a, id_b
 """,
-    category="llm_dedup",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash(60-bit) near-dup pairs with chunk blocking.
@@ -877,7 +878,6 @@ JOIN sizes sa ON s.source_a = sa.source
 JOIN sizes sb ON s.source_b = sb.source
 ORDER BY source_a, source_b
 """,
-    category="llm_dedup",
 )
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source contamination matrix: distinct 8-token-gram overlap
@@ -950,7 +950,6 @@ FROM c a JOIN c b
 WHERE levenshtein(a.c_name, b.c_name) <= 1
 ORDER BY id_a, id_b
 """,
-    category="llm_dedup",
 )
 def fuzzy_join_customer_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy record linkage: name pairs within Levenshtein distance 1,
@@ -1014,7 +1013,6 @@ LEFT JOIN dupc ON dupc.doc_id = t.doc_id
 LEFT JOIN dupb ON dupb.doc_id = t.doc_id
 ORDER BY t.doc_id
 """,
-    category="llm_dedup",
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental (delta) near-dedup: tonight's crawl batch (doc_id %
@@ -1108,7 +1106,6 @@ SELECT t.doc_id, t.n_paras,
 FROM totals t LEFT JOIN kept k ON k.doc_id = t.doc_id
 ORDER BY t.doc_id
 """,
-    category="llm_dedup",
 )
 def dedup_paragraph_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paragraph-level exact dedup with document reconstruction (the
@@ -1206,7 +1203,6 @@ FROM pairs JOIN card ca ON ca.doc_id = id_contained
 WHERE 5 * n_common >= 4 * ca.n_sh
 ORDER BY id_contained, id_container
 """,
-    category="llm_dedup",
 )
 def dedup_shingle_containment(
     spark: SparkSession, sf_dir: str
@@ -1354,7 +1350,6 @@ SELECT c.golden_id, c.p_name, CAST(c.n_listings AS BIGINT) AS n_listings,
 FROM clusters c JOIN pick k ON k.p_name = c.p_name
 ORDER BY c.golden_id
 """,
-    category="llm_dedup",
 )
 def golden_record_survivorship(
     spark: SparkSession, sf_dir: str
@@ -1448,7 +1443,6 @@ SELECT tp, fp, fn,
        CAST(tp * 1000000 // (tp + fn) AS BIGINT) AS recall_ppm
 FROM conf
 """,
-    category="llm_dedup",
 )
 def lsh_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline OBSERVABILITY for approximate dedup: the confusion
@@ -1574,7 +1568,6 @@ SELECT est_bucket,
        CAST(SUM(exact_ppm) // count(*) AS BIGINT) AS mean_exact_ppm
 FROM pairs GROUP BY est_bucket ORDER BY est_bucket
 """,
-    category="llm_dedup",
 )
 def lsh_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CALIBRATION (reliability) curve for the MinHash estimator: for
@@ -1693,7 +1686,6 @@ SELECT n AS n_docs, n11, n10, n01, n00,
              * 1000000) / 1000000 AS kappa
 FROM cells
 """,
-    category="llm_dedup",
 )
 def cohens_kappa_dedup_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COHEN'S KAPPA between two near-dup detection methods — does
@@ -1869,7 +1861,6 @@ SELECT r.n AS n_docs,
 FROM (SELECT max(n) AS n FROM ranked) r
 CROSS JOIN sums s CROSS JOIN truth t
 """,
-    category="llm_dedup",
 )
 def blocking_quality_sorted_neighborhood(
     spark: SparkSession, sf_dir: str
@@ -1964,4 +1955,880 @@ def blocking_quality_sorted_neighborhood(
                 F.expr("n_found * 1000000 div true_pairs"),
             ).alias("pair_completeness_ppm"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Dedup audits: Lincoln-Petersen estimate, shingle overlap, threshold sweep
+# ---------------------------------------------------------------------------
+
+
+_LP_N = 16  # tokens per chunk/shingle — cohens_kappa_dedup_methods' unit
+
+
+@register(
+    "lincoln_petersen_dedup_estimate",
+    oracle=f"""
+WITH base AS (
+  SELECT doc_id, string_split(text, ' ') AS ptoks,
+         list_filter(string_split_regex(text, '\\s+'), x -> x <> '')
+             AS stoks
+  FROM documents
+),
+paras AS (
+  SELECT doc_id,
+         md5(list_aggregate(
+           ptoks[CAST(t.p AS INT) * {_LP_N} + 1
+                 : CAST(t.p AS INT) * {_LP_N} + {_LP_N}],
+           'string_agg', ' ')) AS fp
+  FROM base,
+       LATERAL unnest(range(CAST(ceil(len(ptoks) / {_LP_N}.0)
+                            AS BIGINT))) AS t(p)
+),
+shing AS (
+  SELECT doc_id,
+         md5(list_aggregate(
+           stoks[CAST(t.p AS INT) + 1 : CAST(t.p AS INT) + {_LP_N}],
+           'string_agg', ' ')) AS fp
+  FROM base,
+       LATERAL unnest(range(CAST(greatest(len(stoks) - {_LP_N} + 1, 1)
+                            AS BIGINT))) AS t(p)
+),
+pa AS (
+  SELECT DISTINCT p.doc_id FROM paras p
+  JOIN (SELECT fp FROM paras GROUP BY fp
+        HAVING count(DISTINCT doc_id) > 1) d ON d.fp = p.fp
+),
+pb AS (
+  SELECT DISTINCT s.doc_id FROM shing s
+  JOIN (SELECT fp FROM shing GROUP BY fp
+        HAVING count(DISTINCT doc_id) > 1) d ON d.fp = s.fp
+),
+flags AS (
+  SELECT b.doc_id,
+         CASE WHEN pa.doc_id IS NULL THEN 0 ELSE 1 END AS a,
+         CASE WHEN pb.doc_id IS NULL THEN 0 ELSE 1 END AS b
+  FROM base b
+  LEFT JOIN pa ON pa.doc_id = b.doc_id
+  LEFT JOIN pb ON pb.doc_id = b.doc_id
+),
+cells AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(SUM(a) AS BIGINT) AS n1,
+         CAST(SUM(b) AS BIGINT) AS n2,
+         CAST(SUM(a * b) AS BIGINT) AS m_both,
+         CAST(SUM(CASE WHEN a = 1 OR b = 1 THEN 1 ELSE 0 END)
+              AS BIGINT) AS union_flagged
+  FROM flags
+)
+SELECT n_docs, n1, n2, m_both, union_flagged,
+       CAST((n1 + 1) * (n2 + 1) // (m_both + 1) - 1 AS BIGINT)
+           AS chapman_est,
+       CAST(GREATEST((n1 + 1) * (n2 + 1) // (m_both + 1) - 1
+                     - union_flagged, 0) AS BIGINT) AS est_missed
+FROM cells
+""",
+)
+def lincoln_petersen_dedup_estimate(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """CAPTURE-RECAPTURE estimate of TOTAL near-duplicate documents —
+    Lincoln-Petersen with the Chapman bias correction, treating two
+    independent detectors as the two capture occasions (aligned
+    16-token chunk fingerprints = capture 1, sliding 16-token
+    shingles = capture 2 — cohens_kappa_dedup_methods' exact flag
+    definitions, reused verbatim): N̂ = (n₁+1)(n₂+1)/(m+1) − 1. Where
+    kappa asks 'do the methods agree', this asks the question a
+    curation budget actually needs — 'how many duplicates does even
+    the UNION miss' (est_missed = N̂ − |union|, clamped at 0). The
+    Chapman +1s keep the estimator finite at m = 0 and the whole
+    readout is exact integer arithmetic — one floor-division.
+    Scale: both flag passes shuffle on fingerprint keys (the kappa
+    plan); one doc-keyed join; 1-row output."""
+    # spread the narrow scan before the two md5-explode passes — the
+    # corpus-CPU stage otherwise runs one task per row group
+    # (optimization r18, catalog.spread_scan)
+    docs = spread_scan(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    base = docs.select(
+        "doc_id",
+        F.split("text", " ").alias("ptoks"),
+        F.filter(
+            F.split("text", r"\s+"), lambda t: t != F.lit("")
+        ).alias("stoks"),
+    )
+    paras = base.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(
+                    F.lit(0),
+                    F.ceil(F.size("ptoks") / F.lit(float(_LP_N)))
+                    .cast("long")
+                    - 1,
+                ),
+                lambda p: F.md5(
+                    F.concat_ws(
+                        " ", F.slice("ptoks", p * _LP_N + 1, _LP_N)
+                    )
+                ),
+            )
+        ).alias("fp"),
+    )
+    shing = base.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(
+                    F.lit(0),
+                    F.greatest(
+                        F.size("stoks") - (_LP_N - 1), F.lit(1)
+                    ).cast("long")
+                    - 1,
+                ),
+                lambda p: F.md5(
+                    F.concat_ws(" ", F.slice("stoks", p + 1, _LP_N))
+                ),
+            )
+        ).alias("fp"),
+    )
+
+    # Each fingerprint table feeds flagged() twice (the dup-fp
+    # aggregate AND the join-back side) — without a persist the
+    # corpus-wide md5 shingle explode runs twice per detector
+    # (optimization r18, guide §5 recompute elimination). Fingerprint
+    # grain, spills to disk at scale.
+    from pyspark import StorageLevel
+
+    paras = paras.persist(StorageLevel.MEMORY_AND_DISK)
+    shing = shing.persist(StorageLevel.MEMORY_AND_DISK)
+
+    def flagged(fps: DataFrame) -> DataFrame:
+        dup_fp = (
+            fps.groupBy("fp")
+            .agg(F.count_distinct("doc_id").alias("cd"))
+            .filter(F.col("cd") > 1)
+            .select("fp")
+        )
+        return fps.join(dup_fp, "fp").select("doc_id").distinct()
+
+    pa = flagged(paras).select(F.col("doc_id").alias("pa_id"))
+    pb = flagged(shing).select(F.col("doc_id").alias("pb_id"))
+    flags = (
+        base.select("doc_id")
+        .join(pa, base.doc_id == F.col("pa_id"), "left")
+        .join(pb, base.doc_id == F.col("pb_id"), "left")
+        .select(
+            F.when(F.col("pa_id").isNull(), 0).otherwise(1).alias("a"),
+            F.when(F.col("pb_id").isNull(), 0).otherwise(1).alias("b"),
+        )
+    )
+    cells = flags.agg(
+        F.count("*").alias("n_docs"),
+        F.sum("a").alias("n1"),
+        F.sum("b").alias("n2"),
+        F.sum(F.col("a") * F.col("b")).alias("m_both"),
+        F.sum(
+            F.when((F.col("a") == 1) | (F.col("b") == 1), 1).otherwise(0)
+        ).alias("union_flagged"),
+    )
+    out = cells.select(
+        "n_docs",
+        "n1",
+        "n2",
+        "m_both",
+        "union_flagged",
+        F.expr(
+            "CAST((n1 + 1) * (n2 + 1) div (m_both + 1) - 1 AS BIGINT)"
+        ).alias("chapman_est"),
+        F.expr(
+            "CAST(GREATEST((n1 + 1) * (n2 + 1) div (m_both + 1) - 1"
+            " - union_flagged, 0) AS BIGINT)"
+        ).alias("est_missed"),
+    )
+    # 1-row result: pin eagerly, release the fingerprint caches.
+    out = out.localCheckpoint(eager=True)
+    paras.unpersist()
+    shing.unpersist()
+    return out
+
+
+@register(
+    "source_shingle_overlap_jaccard",
+    oracle="""
+WITH
+""" + _SH3_CTE + """,
+ssh AS (SELECT DISTINCT source, shingle FROM sh3),
+card AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS n_sh
+  FROM ssh GROUP BY 1
+),
+inter AS (
+  SELECT a.source AS source_a, b.source AS source_b,
+         CAST(count(*) AS BIGINT) AS n_common
+  FROM ssh a JOIN ssh b
+    ON a.shingle = b.shingle AND a.source < b.source
+  GROUP BY 1, 2
+)
+SELECT i.source_a, i.source_b,
+       ca.n_sh AS n_a, cb.n_sh AS n_b, i.n_common,
+       CAST(CAST(i.n_common AS HUGEINT) * 1000000
+            // (ca.n_sh + cb.n_sh - i.n_common) AS BIGINT)
+         AS jaccard_ppm
+FROM inter i
+JOIN card ca ON ca.source = i.source_a
+JOIN card cb ON cb.source = i.source_b
+ORDER BY i.source_a, i.source_b
+""",
+)
+def source_shingle_overlap_jaccard(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PAIRWISE SOURCE-LEVEL shingle-set Jaccard — the corpus-grain
+    overlap matrix ("how much of source A is re-crawled in source B")
+    that decides whether two feeds should be cross-deduped at all
+    before any per-document LSH runs; document-grain dedup answers
+    which docs collide, this answers which SOURCES do. Exact distinct
+    3-shingle sets per source, one shingle-keyed equi-join for the
+    intersection cardinalities (candidate fan-out per shingle bounded
+    by the source count squared, never by docs), union by
+    inclusion-exclusion, Jaccard as one exact ppm floor-division
+    (non-negative, so // and div agree). Scale: the (source, shingle)
+    distinct is the only data-grain shuffle; everything after is
+    source-pair-grain (bounded)."""
+    ssh = (
+        load_table(spark, sf_dir, "documents")
+        .select("source", F.explode(_shingles3(F.col("text"))).alias("shingle"))
+        .distinct()
+    )
+    card = ssh.groupBy("source").agg(F.count("*").alias("n_sh"))
+    a = ssh.alias("a")
+    b = ssh.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.source") < F.col("b.source")),
+        )
+        .groupBy(
+            F.col("a.source").alias("source_a"),
+            F.col("b.source").alias("source_b"),
+        )
+        .agg(F.count("*").alias("n_common"))
+    )
+    ca = card.select(
+        F.col("source").alias("source_a"), F.col("n_sh").alias("n_a")
+    )
+    cb = card.select(
+        F.col("source").alias("source_b"), F.col("n_sh").alias("n_b")
+    )
+    return (
+        inter.join(F.broadcast(ca), "source_a")
+        .join(F.broadcast(cb), "source_b")
+        .selectExpr(
+            "source_a",
+            "source_b",
+            "n_a",
+            "n_b",
+            "n_common",
+            "CAST(CAST(n_common AS DECIMAL(38,0)) * 1000000"
+            " div (n_a + n_b - n_common) AS BIGINT) AS jaccard_ppm",
+        )
+        .orderBy("source_a", "source_b")
+    )
+
+
+@register(
+    "dedup_threshold_sweep",
+    oracle="""
+WITH RECURSIVE """ + _TUNED_EST_CTES + """,
+thr AS (SELECT CAST(unnest([500, 600, 700, 800, 900]) AS BIGINT) AS t_milli),
+flt AS (
+  SELECT thr.t_milli, e.id_a, e.id_b
+  FROM tune_est e, thr
+  WHERE e.est_jaccard >= CAST(thr.t_milli AS DOUBLE) / 1000.0
+),
+pairs_ct AS (
+  SELECT t_milli, CAST(count(*) AS BIGINT) AS n_pairs
+  FROM flt GROUP BY 1
+),
+docs_ct AS (
+  SELECT t_milli, CAST(count(DISTINCT d) AS BIGINT) AS n_docs
+  FROM (SELECT t_milli, id_a AS d FROM flt
+        UNION ALL SELECT t_milli, id_b FROM flt)
+  GROUP BY 1
+)
+SELECT thr.t_milli AS threshold_milli,
+       COALESCE(p.n_pairs, 0) AS n_pairs,
+       COALESCE(d.n_docs, 0) AS n_docs
+FROM thr LEFT JOIN pairs_ct p ON p.t_milli = thr.t_milli
+LEFT JOIN docs_ct d ON d.t_milli = thr.t_milli
+ORDER BY thr.t_milli
+""",
+)
+def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DEDUP THRESHOLD SWEEP — the knob-tuning table every dedup
+    rollout needs before committing a similarity cutoff: for each
+    candidate threshold (0.5..0.9 on the milli grid), how many tuned
+    LSH candidate pairs survive and how many documents they touch.
+    n_docs is the upper bound on removals at that threshold (every
+    dup cluster keeps one member), so the sweep reads directly as
+    "corpus shrinkage vs aggressiveness" — the curve operators consult
+    before picking the est-filter floor (BASELINE.md's documented
+    candidate-cut direction for the election query). ONE pass over the
+    tuned candidate pairs (threshold list broadcast-exploded, never a
+    re-scan per threshold); the DuckDB oracle replays the full tuner
+    decision + banding + sweep. Scale: the pair table is the data
+    grain; per-threshold rollups are a 5x fan-out of it, all
+    equi-keyed."""
+    from spark_lever_spark.llm.dedup import (
+        lsh_candidate_pairs,
+        tune_lsh_banding,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    b, _r = tune_lsh_banding(
+        docs, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=150
+    )
+    rel: list = []
+    pairs = lsh_candidate_pairs(docs, k=32, bands=b, releases=rel)
+    th = spark.range(5).selectExpr(
+        "CAST(500 + id * 100 AS BIGINT) AS t_milli"
+    )
+    flt = pairs.crossJoin(F.broadcast(th)).filter(
+        F.col("est_jaccard")
+        >= F.col("t_milli").cast("double") / F.lit(1000.0)
+    )
+    pairs_ct = flt.groupBy("t_milli").agg(F.count("*").alias("n_pairs"))
+    docs_ct = (
+        flt.select("t_milli", F.col("id_a").alias("d"))
+        .unionAll(flt.select("t_milli", F.col("id_b").alias("d")))
+        .groupBy("t_milli")
+        .agg(F.countDistinct("d").alias("n_docs"))
+    )
+    out = (
+        th.join(pairs_ct, "t_milli", "left")
+        .join(docs_ct, "t_milli", "left")
+        .selectExpr(
+            "t_milli AS threshold_milli",
+            "COALESCE(n_pairs, 0) AS n_pairs",
+            "COALESCE(n_docs, 0) AS n_docs",
+        )
+        .orderBy("threshold_milli")
+        # eager pin (5 rows), then release the LSH signature persist (r19)
+        .localCheckpoint(eager=True)
+    )
+    for cached in rel:
+        cached.unpersist()
+    return out
+
+
+# ---------------------------------------------------------------------------
+# Hash-family health: simhash bit balance
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "simhash_bit_balance_audit",
+    oracle="""
+WITH tok AS MATERIALIZED (
+  SELECT DISTINCT doc_id, tok
+  FROM (SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok
+        FROM documents)
+  WHERE tok <> ''
+),
+th AS MATERIALIZED (
+  SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM tok
+),
+bits AS MATERIALIZED (
+  SELECT doc_id, p.j,
+         SUM(CASE WHEN ((h >> p.j) & 1) = 1 THEN 1 ELSE -1 END) AS s
+  FROM th, (SELECT unnest(range(60)) AS j) p
+  GROUP BY doc_id, p.j
+),
+perbit AS (
+  SELECT j, CAST(SUM(CASE WHEN s > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_ones,
+         CAST(count(*) AS BIGINT) AS n_docs
+  FROM bits GROUP BY j
+)
+SELECT CAST(j AS INT) AS bit_idx, n_ones, n_docs,
+       CAST(abs(2 * n_ones - n_docs) * 1000000 // n_docs AS BIGINT)
+           AS imbalance_ppm
+FROM perbit ORDER BY bit_idx
+""",
+)
+def simhash_bit_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HASH-FAMILY HEALTH AUDIT of the 60-bit simhash the dedup family
+    blocks on (dedup_simhash, llm/dedup.py): per bit position, the
+    fraction of documents whose simhash sets that bit. A healthy
+    md5-derived family sits near 50 % per bit; a skewed bit inflates
+    chunk-block collision rates and silently degrades near-dup recall
+    precision — exactly the audit a 100 TB dedup pipeline runs before
+    trusting its banding math. Output: per-bit ones count and the
+    absolute imbalance |2·ones − n|/n in ppm (integer-exact, floor
+    division on a non-negative numerator). Scale shape: one token scan,
+    one (doc, bit) aggregation, one 60-group rollup — all map-side
+    combinable equi-aggregations, no joins."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", F.explode(tokens_distinct(F.col("text"))).alias("word")
+    ).withColumn("h", token_hash(F.col("word"), bits=60))
+    bit = toks.select(
+        "doc_id",
+        F.explode(F.sequence(F.lit(0), F.lit(59))).alias("j"),
+        "h",
+    ).withColumn(
+        "contrib",
+        F.when(F.expr("(shiftright(h, j) & 1)") == 1, 1).otherwise(-1),
+    )
+    sims = (
+        bit.groupBy("doc_id", "j")
+        .agg(F.sum("contrib").alias("s"))
+        .withColumn("b", (F.col("s") > 0).cast("long"))
+    )
+    return (
+        sims.groupBy("j")
+        .agg(
+            F.sum("b").alias("n_ones"),
+            F.count("*").alias("n_docs"),
+        )
+        .select(
+            F.col("j").cast("int").alias("bit_idx"),
+            "n_ones",
+            "n_docs",
+            F.expr(
+                "CAST(abs(2 * n_ones - n_docs) * 1000000 div n_docs"
+                " AS BIGINT)"
+            ).alias("imbalance_ppm"),
+        )
+        .orderBy("bit_idx")
+    )
+
+
+# ---------------------------------------------------------------------------
+# cross-source entity resolution
+# ---------------------------------------------------------------------------
+
+# Two-stage match rule (blocking -> screen -> exact verify):
+#   block:  LSH band collision (8 bands x 4 rows, md5-affine family)
+#   screen: signature agreement >= 0.75 (24/32 positions — exact
+#           multiples of 1/32, no float-boundary risk)
+#   match:  same lang AND different source AND exact token-Jaccard
+#           >= 7/8, tested as 8*|A∩B| >= 7*|A∪B| in pure int math.
+
+
+@register(
+    "er_cross_source_docs",
+    oracle=f"""
+WITH RECURSIVE {_MINHASH_SQL_CTES},
+scr AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.75),
+sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY doc_id),
+meta AS (SELECT doc_id, source, lang FROM documents),
+inter AS (
+  SELECT s.id_a, s.id_b, CAST(count(*) AS BIGINT) AS c
+  FROM scr s
+  JOIN tok ta ON ta.doc_id = s.id_a
+  JOIN tok tb ON tb.doc_id = s.id_b AND tb.tok = ta.tok
+  GROUP BY s.id_a, s.id_b
+),
+edges0 AS (
+  SELECT i.id_a AS u, i.id_b AS v
+  FROM inter i
+  JOIN sz sa ON sa.doc_id = i.id_a
+  JOIN sz sb ON sb.doc_id = i.id_b
+  JOIN meta ma ON ma.doc_id = i.id_a
+  JOIN meta mb ON mb.doc_id = i.id_b
+  WHERE ma.source <> mb.source AND ma.lang = mb.lang
+    AND 8 * i.c >= 7 * (sa.n + sb.n - i.c)
+),
+edges AS (SELECT u, v FROM edges0 UNION SELECT v, u FROM edges0),
+reach(node, comp) AS (
+  SELECT DISTINCT u, u FROM edges
+  UNION
+  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
+),
+comp AS (SELECT node, MIN(comp) AS component FROM reach GROUP BY node)
+SELECT comp.component AS entity_id,
+       CAST(count(*) AS BIGINT) AS n_records,
+       CAST(count(DISTINCT m.source) AS BIGINT) AS n_sources
+FROM comp JOIN meta m ON m.doc_id = comp.node
+GROUP BY comp.component
+ORDER BY entity_id
+""",
+)
+def er_cross_source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-source fuzzy entity resolution over the document corpus:
+    LSH blocking -> signature screen -> exact multi-field scoring ->
+    connected-component merge -> entity table.
+
+    A "record" is a document; records from DIFFERENT sources that
+    agree on lang and whose exact distinct-token Jaccard is >= 7/8
+    are the same entity (the classic linkage split: a cheap generous
+    blocker, then a precise field-agreement rule on candidates only).
+    Output is the merged entity table: one row per multi-record
+    entity with its record and source counts.
+
+    Scale shapes: candidates come only from the band equi-join
+    (uniform md5 digests); the CHEAP metadata rule (source/lang + the
+    exact size-ratio necessary condition) prunes the distinct pair
+    table BEFORE the k=32 signature arrays attach (r19, guide §2.3
+    shuffle fewer bytes — the screen's filters are conjunctive, so
+    they commute; measured at sf0.1: 7.74M band pairs -> 0.98M
+    metadata survivors -> 753,838 screened, the same verify-input
+    invariant as the est-first order, rows identical); exact
+    verification is candidate-grain (array_intersect on two
+    ~100-token arrays per pair — JVM built-ins, no explode); the CC
+    merge is the O(log n) large/small-star loop. Nothing is ever
+    all-pairs. Reference analog: cogroup/join + distinct surface,
+    PairRDDFunctions.scala:491-649."""
+    from spark_lever_spark.llm.graph import connected_components
+
+    from pyspark import StorageLevel
+
+    docs = load_table(spark, sf_dir, "documents")
+    rel: list = []
+    # Bare distinct band pairs — signatures deliberately NOT attached
+    # yet (the whole point of the r19 reorder); the sig persist joins
+    # the release list exactly as in lsh_candidate_pairs.
+    sig, banded = minhash_bands(docs, k=32, bands=8)
+    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    rel.append(sig)
+    ba, bb = banded.alias("a"), banded.alias("b")
+    pairs = (
+        ba.join(
+            bb,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_digest") == F.col("b.band_digest"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+        )
+        .distinct()
+    )
+    # Tokenize the corpus ONCE and cache it: the tokenized base feeds
+    # the metadata screen sides AND both token-array attach sides
+    # (optimization r18, guide §5).
+    base = docs.select(
+        "doc_id",
+        "source",
+        "lang",
+        tokens_distinct(F.col("text")).alias("toks"),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # Metadata pre-filter BEFORE the token arrays attach (optimization
+    # r18, guide §2.3 shuffle fewer bytes / §1.2 per-task work): the
+    # old plan attached two ~100-token arrays to every screened pair
+    # and only then applied the source/lang rule and the exact-Jaccard
+    # verify — the array attach and the per-pair array_intersect were
+    # the query's hottest stage. The cheap joins below carry only
+    # (source, lang, |toks|); besides the source/lang rule they apply
+    # an exact NECESSARY condition of the match rule: with
+    # c <= min(na, nb),  8c >= 7(na + nb - c)  ⟺  15c >= 7(na + nb)
+    # implies  8·min(na, nb) >= 7·max(na, nb),  so a pair failing the
+    # size-ratio test can never pass the verify — dropping it early
+    # changes nothing. Survivors alone pay the array attach; the final
+    # predicate is unchanged (na = |ta|, nb = |tb| by construction).
+    meta_a = base.select(
+        F.col("doc_id").alias("id_a"),
+        F.col("source").alias("src_a"),
+        F.col("lang").alias("lang_a"),
+        F.size("toks").cast("long").alias("na"),
+    )
+    meta_b = base.select(
+        F.col("doc_id").alias("id_b"),
+        F.col("source").alias("src_b"),
+        F.col("lang").alias("lang_b"),
+        F.size("toks").cast("long").alias("nb"),
+    )
+    cand_meta = (
+        pairs.join(meta_a, "id_a")
+        .join(meta_b, "id_b")
+        .filter(
+            (F.col("src_a") != F.col("src_b"))
+            & (F.col("lang_a") == F.col("lang_b"))
+            & (
+                8 * F.least("na", "nb")
+                >= 7 * F.greatest("na", "nb")
+            )
+        )
+        .select("id_a", "id_b", "na", "nb")
+    )
+    # k=32 signature screen, attached only to the metadata survivors
+    # (7.9x fewer array-carrying rows at sf0.1). The expression is
+    # lsh_candidate_pairs' est_jaccard verbatim, so the survivor set
+    # is bit-identical to the old est-first order.
+    sa = sig.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = sig.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
+    est = F.size(
+        F.filter(
+            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m
+        )
+    ).cast("double") / F.lit(32.0)
+    cand = (
+        cand_meta.join(sa, "id_a")
+        .join(sb, "id_b")
+        .filter(F.round(est, 4) >= 0.75)
+        .select("id_a", "id_b", "na", "nb")
+    )
+    ta = base.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("ta"))
+    tb = base.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("tb"))
+    c = F.size(F.array_intersect("ta", "tb")).cast("long")
+    union_n = F.col("na") + F.col("nb") - c
+    edges = (
+        cand.join(ta, "id_a")
+        .join(tb, "id_b")
+        .filter(8 * c >= 7 * union_n)
+        .select("id_a", "id_b")
+    )
+    comp = connected_components(edges, src="id_a", dst="id_b")
+    # connected_components eagerly materializes its edge input, so the
+    # tokenized corpus cache AND the LSH signature persist are
+    # released here (r19: no persisted relation survives the return).
+    base.unpersist()
+    for cached in rel:
+        cached.unpersist()
+    meta = docs.select(F.col("doc_id").alias("node"), "source")
+    return (
+        comp.join(meta, "node")
+        .groupBy(F.col("component").alias("entity_id"))
+        .agg(
+            F.count("*").alias("n_records"),
+            F.countDistinct("source").alias("n_sources"),
+        )
+        .orderBy("entity_id")
+    )
+
+
+@register(
+    "cross_source_duplication_matrix",
+    oracle=f"""
+WITH {_MINHASH_SQL_CTES},
+meta AS (SELECT doc_id, source FROM documents),
+p AS (
+  SELECT LEAST(ma.source, mb.source) AS source_a,
+         GREATEST(ma.source, mb.source) AS source_b,
+         e.id_a, e.id_b
+  FROM est e
+  JOIN meta ma ON ma.doc_id = e.id_a
+  JOIN meta mb ON mb.doc_id = e.id_b
+  WHERE e.est_jaccard >= 0.8 AND ma.source <> mb.source
+),
+cnt AS (
+  SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_dup_pairs
+  FROM p GROUP BY 1, 2
+),
+inv AS (
+  SELECT source_a, source_b,
+         CAST(count(DISTINCT d) AS BIGINT) AS n_docs_involved
+  FROM (SELECT source_a, source_b, id_a AS d FROM p
+        UNION ALL
+        SELECT source_a, source_b, id_b FROM p)
+  GROUP BY 1, 2
+)
+SELECT cnt.source_a, cnt.source_b, cnt.n_dup_pairs, inv.n_docs_involved
+FROM cnt JOIN inv USING (source_a, source_b)
+ORDER BY source_a, source_b
+""",
+)
+def cross_source_duplication_matrix(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Source x source duplication matrix: for every unordered pair of
+    sources, how many near-dup document pairs (signature agreement
+    >= 0.8) cross them and how many distinct documents are involved —
+    the curation dashboard that tells you which crawls duplicate which
+    before you weight or drop one. Pair grain comes straight from the
+    LSH band equi-join + signature screen; the rollup is two keyed
+    aggregations over a 20x20 source domain (a query constant at any
+    corpus size)."""
+    rel: list = []
+    out = _cross_source_duplication_matrix_plan(
+        spark, sf_dir, rel
+    ).localCheckpoint(
+        eager=True  # eager pin (<= source-domain² rows), then release
+    )
+    for cached in rel:
+        cached.unpersist()
+    return out
+
+
+def _cross_source_duplication_matrix_plan(
+    spark: SparkSession, sf_dir: str, releases: list
+) -> DataFrame:
+    """Lazy pre-checkpoint matrix pipeline — extracted so the
+    plan-contract suite can pin the join shapes (kmeans-builder
+    precedent, r19)."""
+    docs = load_table(spark, sf_dir, "documents")
+    meta = docs.select("doc_id", "source")
+    pairs = (
+        lsh_candidate_pairs(docs, releases=releases)
+        .filter(F.col("est_jaccard") >= 0.8)
+        .join(
+            meta.select(
+                F.col("doc_id").alias("id_a"), F.col("source").alias("sa")
+            ),
+            "id_a",
+        )
+        .join(
+            meta.select(
+                F.col("doc_id").alias("id_b"), F.col("source").alias("sb")
+            ),
+            "id_b",
+        )
+        .filter(F.col("sa") != F.col("sb"))
+        .select(
+            F.least("sa", "sb").alias("source_a"),
+            F.greatest("sa", "sb").alias("source_b"),
+            "id_a",
+            "id_b",
+        )
+    )
+    cnt = pairs.groupBy("source_a", "source_b").agg(
+        F.count("*").alias("n_dup_pairs")
+    )
+    inv = (
+        pairs.select("source_a", "source_b", F.col("id_a").alias("d"))
+        .unionByName(
+            pairs.select("source_a", "source_b", F.col("id_b").alias("d"))
+        )
+        .groupBy("source_a", "source_b")
+        .agg(F.countDistinct("d").alias("n_docs_involved"))
+    )
+    return cnt.join(inv, ["source_a", "source_b"]).orderBy(
+        "source_a", "source_b"
+    )
+
+
+@register(
+    "er_lsh_blocking_audit",
+    oracle=f"""
+WITH {_MINHASH_SQL_CTES},
+samp AS (
+  SELECT doc_id, source, lang FROM documents
+  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 40
+),
+sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY doc_id),
+allp AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM samp a
+  JOIN samp b ON b.lang = a.lang AND a.doc_id < b.doc_id
+  WHERE a.source <> b.source
+),
+tinter AS (
+  SELECT p.id_a, p.id_b, CAST(count(*) AS BIGINT) AS c
+  FROM allp p
+  JOIN tok ta ON ta.doc_id = p.id_a
+  JOIN tok tb ON tb.doc_id = p.id_b AND tb.tok = ta.tok
+  GROUP BY 1, 2
+),
+truth AS (
+  SELECT t.id_a, t.id_b
+  FROM tinter t
+  JOIN sz sa ON sa.doc_id = t.id_a
+  JOIN sz sb ON sb.doc_id = t.id_b
+  WHERE 8 * t.c >= 7 * (sa.n + sb.n - t.c)
+),
+blocked AS (
+  SELECT e.id_a, e.id_b
+  FROM est e
+  JOIN samp a ON a.doc_id = e.id_a
+  JOIN samp b ON b.doc_id = e.id_b
+  WHERE e.est_jaccard >= 0.75 AND a.source <> b.source AND a.lang = b.lang
+)
+SELECT
+  (SELECT CAST(count(*) AS BIGINT) FROM samp) AS n_sample_docs,
+  (SELECT CAST(count(*) AS BIGINT) FROM allp) AS n_possible_pairs,
+  (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_true_pairs,
+  (SELECT CAST(count(*) AS BIGINT) FROM blocked) AS n_blocked_pairs,
+  (SELECT CAST(count(*) AS BIGINT)
+   FROM truth t JOIN blocked k
+     ON k.id_a = t.id_a AND k.id_b = t.id_b) AS n_found_pairs
+""",
+)
+def er_lsh_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocking-quality audit for the ER pipeline above: on a
+    deterministic FIXED-SIZE sample (the K=40 docs first in
+    md5(doc_id) hash order — a seedless uniform draw both engines can
+    replay), compare the LSH-block + signature-screen candidate set
+    against EXACT ground truth (all cross-source same-lang sample
+    pairs with token-Jaccard >= 7/8). The counts give pairs
+    completeness (n_found / n_true — what blocking misses) and
+    reduction ratio (1 - n_blocked / n_possible — what blocking
+    saves). Sampling is the only honest way to measure this at corpus
+    scale: ground truth is quadratic. Fixed-SIZE, not fixed-rate: a
+    rate sample's all-pairs set grows
+    quadratically with the corpus — at 100x data the audit would do
+    10,000x the truth-side work — while hash-ordered top-K keeps the
+    audit O(K^2) at any scale (the K-row selection is a TakeOrdered,
+    never a global sort materialization)."""
+    rel: list = []
+    out = _er_lsh_blocking_audit_plan(spark, sf_dir, rel).localCheckpoint(
+        eager=True  # eager pin (1 row), then release the LSH sig persist
+    )
+    for cached in rel:
+        cached.unpersist()
+    return out
+
+
+def _er_lsh_blocking_audit_plan(
+    spark: SparkSession, sf_dir: str, releases: list
+) -> DataFrame:
+    """Lazy pre-checkpoint audit pipeline — extracted so the
+    plan-contract suite can pin the join shapes (the registered query
+    returns an eagerly pinned 1-row result with truncated lineage —
+    the kmeans-builder precedent, r19)."""
+    docs = load_table(spark, sf_dir, "documents")
+    samp = (
+        docs.select(
+            "doc_id",
+            "source",
+            "lang",
+            tokens_distinct(F.col("text")).alias("toks"),
+        )
+        .orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
+        .limit(40)
+        # K rows feed five consumers (both pair sides, the semi-join
+        # filters, the count) — eager-materialize so the corpus-wide
+        # TakeOrdered runs once, not per consumer.
+        .localCheckpoint(eager=True)
+    )
+    a = samp.select(
+        F.col("doc_id").alias("id_a"),
+        F.col("source").alias("sa"),
+        F.col("lang").alias("la"),
+        F.col("toks").alias("ta"),
+    )
+    b = samp.select(
+        F.col("doc_id").alias("id_b"),
+        F.col("source").alias("sb"),
+        F.col("lang").alias("lb"),
+        F.col("toks").alias("tb"),
+    )
+    allp = a.join(
+        b,
+        (F.col("lb") == F.col("la")) & (F.col("id_a") < F.col("id_b")),
+    ).filter(F.col("sa") != F.col("sb"))
+    c = F.size(F.array_intersect("ta", "tb")).cast("long")
+    union_n = F.size("ta").cast("long") + F.size("tb").cast("long") - c
+    truth = allp.filter(8 * c >= 7 * union_n).select("id_a", "id_b")
+    samp_ids = samp.select("doc_id")
+    blocked = (
+        lsh_candidate_pairs(docs, releases=releases)
+        .filter(F.col("est_jaccard") >= 0.75)
+        .join(samp_ids.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi")
+        .join(samp_ids.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi")
+        .join(a.select("id_a", "sa", "la"), "id_a")
+        .join(b.select("id_b", "sb", "lb"), "id_b")
+        .filter((F.col("sa") != F.col("sb")) & (F.col("la") == F.col("lb")))
+        .select("id_a", "id_b")
+    )
+    found = truth.join(blocked, ["id_a", "id_b"], "left_semi")
+    return (
+        samp.agg(F.count("*").alias("n_sample_docs"))
+        .crossJoin(allp.agg(F.count("*").alias("n_possible_pairs")))
+        .crossJoin(truth.agg(F.count("*").alias("n_true_pairs")))
+        .crossJoin(blocked.agg(F.count("*").alias("n_blocked_pairs")))
+        .crossJoin(found.agg(F.count("*").alias("n_found_pairs")))
     )

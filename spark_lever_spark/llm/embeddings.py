@@ -16,6 +16,9 @@ The synthetic embeddings are near-orthogonal random vectors (max
 intra-label cosine ~0.45 at sf0.001), so the dedup threshold is set at
 0.35 to exercise non-empty outputs; production near-dup would sit at
 ~0.95 with the identical plan.
+
+Label-cluster quality: centroid drift, simplified silhouette,
+Calinski-Harabasz.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_lever_spark.catalog import default_parallelism, load_table, spread_scan
+from spark_lever_spark.functions.exact import DEC38
 from spark_lever_spark.llm.similarity import as_double, cosine
 from spark_lever_spark.registry import register
 
@@ -39,7 +43,6 @@ WHERE list_cosine_similarity(a.v, b.v) >= 0.35
 GROUP BY b.vec_id
 ORDER BY dup_id
 """,
-    category="llm_dedup",
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: within each block, a vector is a
@@ -110,7 +113,6 @@ WHERE vec_id <> 0 AND label IN (SELECT cell FROM probed)
 ORDER BY cos_sim DESC, vec_id
 LIMIT 10
 """,
-    category="llm_similarity",
 )
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN for query vector 0: probe the 2 nearest of 10 cells,
@@ -180,7 +182,6 @@ SELECT vec_id, scale,
        END AS within_bound
 FROM q ORDER BY vec_id
 """,
-    category="llm_embeddings",
 )
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization of the embedding column (absmax
@@ -335,7 +336,6 @@ SELECT p.vec_id,
 FROM p JOIN q ON q.vec_id = p.vec_id
 ORDER BY p.vec_id
 """,
-    category="llm_embeddings",
 )
 def embedding_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson–Lindenstrauss random projection 64d -> 16d with a
@@ -421,7 +421,6 @@ scored AS (
 SELECT ia AS vec_a, ib AS vec_b, score
 FROM scored ORDER BY score DESC, vec_a, vec_b LIMIT 20
 """,
-    category="llm_similarity",
 )
 def ann_jl_projected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity search IN THE JL-PROJECTED SPACE — the composition
@@ -528,7 +527,6 @@ dots AS (
 SELECT vec_id, label, dot_q FROM dots
 ORDER BY dot_q DESC, vec_id LIMIT 10
 """,
-    category="llm_similarity",
 )
 def ann_int8_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k retrieval over INT8-quantized embeddings — the layout a
@@ -628,7 +626,6 @@ scored AS (
 SELECT vec_id, bench_id, dot_q, score, contaminated
 FROM scored WHERE rn = 1 ORDER BY vec_id
 """,
-    category="llm_similarity",
 )
 def embedding_decontaminate_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination in EMBEDDING space: every corpus
@@ -753,7 +750,6 @@ SELECT CAST(cid AS BIGINT) AS centroid_id,
        CAST(max(vec_id) AS BIGINT) AS max_vec_id
 FROM a WHERE rn = 1 GROUP BY cid ORDER BY cid
 """,
-    category="llm_similarity",
 )
 def kmeans_assign_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd ASSIGNMENT step of k-means over the embedding table
@@ -807,7 +803,7 @@ def kmeans_assign_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-11 additions: model-selection elbow and reciprocal nearest neighbors
+# Model-selection elbow and reciprocal nearest neighbors
 # ---------------------------------------------------------------------------
 
 
@@ -862,7 +858,6 @@ SELECT k, inertia, n_points FROM (
   UNION ALL SELECT 16, i16, n_points FROM tot
 ) ORDER BY k
 """,
-    category="llm_similarity",
 )
 def kmeans_inertia_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-MEANS model-selection ELBOW curve — within-cluster inertia at
@@ -994,7 +989,6 @@ FROM nn m1 JOIN nn m2 ON m1.vb = m2.va AND m2.vb = m1.va
 WHERE m1.va < m1.vb
 ORDER BY vec_a
 """,
-    category="llm_similarity",
 )
 def mutual_nn_int8_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MUTUAL (reciprocal) nearest neighbors over int8 embeddings with
@@ -1176,7 +1170,6 @@ SELECT * FROM (
   WHERE adc.vec_id <> 0
 ) WHERE rnk <= 20 ORDER BY rnk
 """,
-    category="llm_similarity",
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCT-QUANTIZATION ANN with ASYMMETRIC DISTANCE COMPUTATION
@@ -1327,7 +1320,6 @@ SELECT CAST(v3.i AS BIGINT) AS dim, v3.val AS component_micro,
 FROM v3 CROSS JOIN ray CROSS JOIN den
 ORDER BY dim
 """,
-    category="llm_embeddings",
 )
 def embedding_top_pc_power_iteration(
     spark: SparkSession, sf_dir: str
@@ -1513,7 +1505,6 @@ SELECT dup AS dup_id, CAST(min(ca) AS BIGINT) AS canonical_id,
        min(cell) AS cell
 FROM pr GROUP BY dup ORDER BY dup_id
 """,
-    category="llm_dedup",
 )
 def semdedup_int8_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023 — SEMANTIC deduplication by
@@ -1714,7 +1705,6 @@ SELECT node AS vec_id, cell, cnt AS n_neighbors, lof_milli
 FROM lof
 ORDER BY lof_milli DESC, vec_id LIMIT 20
 """,
-    category="llm_similarity",
 )
 def lof_outliers_int8_cells(
     spark: SparkSession, sf_dir: str
@@ -1876,4 +1866,372 @@ def lof_outliers_int8_cells(
         )
         .orderBy(F.desc("lof_milli"), "vec_id")
         .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Multimodal feature extraction + embedding drift
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "embedding_centroid_drift_labels",
+    oracle="""
+WITH comp AS (
+  SELECT label, t.i AS pos,
+         CAST(floor(CAST(embedding[CAST(t.i AS INT) + 1] AS DOUBLE)
+                    * 1000 + 0.5) AS BIGINT) AS q
+  FROM embeddings, LATERAL unnest(range(len(embedding))) AS t(i)
+),
+cent AS (
+  SELECT label, pos,
+         CAST(SUM(q) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
+  FROM comp GROUP BY 1, 2
+),
+cm AS (
+  SELECT label, pos,
+         CASE WHEN s >= 0 THEN CAST(s * 1000 // n AS BIGINT)
+              ELSE -CAST((-s) * 1000 // n AS BIGINT) END AS c_micro
+  FROM cent
+),
+pairs AS (
+  SELECT a.label AS label_a, b.label AS label_b,
+         CAST(SUM(CAST(a.c_micro - b.c_micro AS HUGEINT)
+                  * (a.c_micro - b.c_micro)) AS HUGEINT) AS l2sq
+  FROM cm a JOIN cm b ON b.pos = a.pos AND b.label > a.label
+  GROUP BY 1, 2
+)
+SELECT CAST(label_a AS INT) AS label_a, CAST(label_b AS INT)
+           AS label_b,
+       CAST(l2sq // 1000000 AS BIGINT) AS centroid_l2sq_micro
+FROM pairs ORDER BY label_a, label_b
+""",
+)
+def embedding_centroid_drift_labels(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PAIRWISE CENTROID DRIFT between embedding label clusters —
+    the distribution-shift monitor an embedding pipeline runs per
+    ingest batch (are today's class centroids where yesterday's
+    were?): each component quantizes to the exact milli grid
+    (floor(v·1000 + 0.5) — one deterministic double product per
+    float, the documented grid), per-label centroids are SIGN-SPLIT
+    micro floor-divisions of exact int64 component sums, and every
+    label pair publishes the exact squared L2 distance between
+    centroid vectors (HUGEINT ⟷ decimal(38,0), re-floored to the
+    micro grid). 10 labels ⇒ 45 pairs — the full drift matrix, not
+    a sample. Scale: one (label, pos) rollup after a posexplode
+    (64·N rows, map-side combinable), then a 640-row self-join."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    comp = emb.select(
+        "label",
+        F.posexplode("embedding").alias("pos", "v"),
+    ).selectExpr(
+        "label",
+        "pos",
+        "CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT) AS q",
+    )
+    cent = comp.groupBy("label", "pos").agg(
+        F.sum("q").alias("s"), F.count("*").alias("n")
+    )
+    cm = cent.selectExpr(
+        "label",
+        "pos",
+        "CASE WHEN s >= 0 THEN CAST(s * 1000 div n AS BIGINT)"
+        " ELSE -CAST((-s) * 1000 div n AS BIGINT) END AS c_micro",
+    )
+    a = cm.selectExpr(
+        "label AS label_a", "pos AS pa", "c_micro AS ca"
+    )
+    b = cm.selectExpr(
+        "label AS label_b", "pos AS pb", "c_micro AS cb"
+    )
+    pairs = (
+        a.join(
+            b,
+            (F.col("pb") == F.col("pa"))
+            & (F.col("label_b") > F.col("label_a")),
+        )
+        .groupBy("label_a", "label_b")
+        .agg(
+            F.sum(
+                F.expr(f"CAST(ca - cb AS {DEC38}) * (ca - cb)")
+            ).alias("l2sq")
+        )
+    )
+    return pairs.selectExpr(
+        "CAST(label_a AS INT) AS label_a",
+        "CAST(label_b AS INT) AS label_b",
+        f"CAST(l2sq div 1000000 AS BIGINT) AS centroid_l2sq_micro",
+    ).orderBy("label_a", "label_b")
+
+
+# ---------------------------------------------------------------------------
+# Clustering quality: simplified silhouette + Calinski-Harabasz
+# ---------------------------------------------------------------------------
+
+# Shared milli-grid embedding quantization + per-label centroids (the
+# embedding_centroid_drift_labels grid): q = floor(v*1000 + 0.5),
+# centroid component = sign-split micro floor of the exact sums.
+_EMB_CENT_CTE = """
+comp AS (
+  SELECT vec_id, label, t.i AS pos,
+         CAST(floor(CAST(embedding[CAST(t.i AS INT) + 1] AS DOUBLE)
+                    * 1000 + 0.5) AS BIGINT) AS q
+  FROM embeddings, LATERAL unnest(range(len(embedding))) AS t(i)
+),
+cent AS (
+  SELECT label, pos,
+         CASE WHEN SUM(q) >= 0
+              THEN CAST(SUM(q) * 1000 // count(*) AS BIGINT)
+              ELSE -CAST((-SUM(q)) * 1000 // count(*) AS BIGINT)
+         END AS c_micro,
+         CAST(count(*) AS BIGINT) AS n_members
+  FROM comp GROUP BY 1, 2
+)
+"""
+
+
+def _emb_comp_cent(spark: SparkSession, sf_dir: str):
+    emb = load_table(spark, sf_dir, "embeddings")
+    comp = emb.select(
+        "vec_id",
+        "label",
+        F.posexplode("embedding").alias("pos", "v"),
+    ).selectExpr(
+        "vec_id",
+        "label",
+        "pos",
+        "CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT) AS q",
+    )
+    cent = comp.groupBy("label", "pos").agg(
+        F.expr(
+            "CASE WHEN SUM(q) >= 0"
+            " THEN CAST(SUM(q) * 1000 div count(*) AS BIGINT)"
+            " ELSE -CAST((-SUM(q)) * 1000 div count(*) AS BIGINT) END"
+        ).alias("c_micro"),
+        F.count("*").alias("n_members"),
+    )
+    return comp, cent
+
+
+@register(
+    "silhouette_simplified_labels",
+    oracle="""
+WITH
+""" + _EMB_CENT_CTE + """,
+d2 AS (
+  SELECT comp.vec_id, comp.label AS own_label, cent.label AS to_label,
+         CAST(SUM(CAST(comp.q * 1000 - cent.c_micro AS HUGEINT)
+                  * (comp.q * 1000 - cent.c_micro)) AS HUGEINT) AS dd
+  FROM comp JOIN cent ON cent.pos = comp.pos
+  GROUP BY 1, 2, 3
+),
+ab AS (
+  SELECT vec_id, own_label,
+         CAST(max(CASE WHEN to_label = own_label THEN dd END)
+              AS HUGEINT) AS a2,
+         CAST(min(CASE WHEN to_label <> own_label THEN dd END)
+              AS HUGEINT) AS b2
+  FROM d2 GROUP BY 1, 2
+),
+s AS (
+  SELECT own_label AS label,
+         CASE WHEN b2 > a2 THEN CAST((b2 - a2) * 1000000
+                   // (CASE WHEN a2 > b2 THEN a2 ELSE b2 END)
+                   AS BIGINT)
+              WHEN a2 > b2 THEN -CAST((a2 - b2) * 1000000
+                   // (CASE WHEN a2 > b2 THEN a2 ELSE b2 END)
+                   AS BIGINT)
+              ELSE 0 END AS s_ppm
+  FROM ab WHERE a2 IS NOT NULL AND b2 IS NOT NULL
+)
+SELECT CAST(label AS INT) AS label,
+       CAST(count(*) AS BIGINT) AS n_points,
+       CASE WHEN SUM(s_ppm) >= 0
+            THEN CAST(SUM(s_ppm) // count(*) AS BIGINT)
+            ELSE -CAST((-SUM(s_ppm)) // count(*) AS BIGINT)
+       END AS mean_silhouette_ppm
+FROM s GROUP BY label ORDER BY label
+""",
+)
+def silhouette_simplified_labels(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """SIMPLIFIED SILHOUETTE per embedding label — the cluster-
+    quality score kmeans_inertia_elbow (within-scatter only) cannot
+    see: for each vector, a = squared distance to its OWN centroid,
+    b = squared distance to the NEAREST other centroid, s =
+    (b−a)/max(a,b) — the centroid-based simplified silhouette
+    (Hruschka 2004; O(N·k) instead of the O(N²) full silhouette),
+    here on SQUARED distances (the documented monotone discrete
+    variant — sign and ranking agree with the classic; no sqrt
+    ever runs). Vectors and centroids meet on the micro grid
+    (comp·1000 vs the micro centroid — same scale), all distances
+    exact HUGEINT ⟷ decimal(38,0); per-point and per-label means
+    are SIGN-SPLIT floors. Scale: one posexplode rollup, one
+    (pos)-join of N·64 rows against the 640-row broadcast centroid
+    table, one per-point reduce."""
+    comp, cent = _emb_comp_cent(spark, sf_dir)
+    d2 = (
+        comp.join(
+            F.broadcast(
+                cent.selectExpr(
+                    "label AS to_label", "pos AS cpos", "c_micro"
+                )
+            ),
+            F.col("cpos") == F.col("pos"),
+        )
+        .groupBy("vec_id", F.col("label").alias("own_label"), "to_label")
+        .agg(
+            F.sum(
+                F.expr(
+                    f"CAST(q * 1000 - c_micro AS {DEC38})"
+                    " * (q * 1000 - c_micro)"
+                )
+            ).alias("dd")
+        )
+    )
+    ab = d2.groupBy("vec_id", "own_label").agg(
+        F.max(
+            F.when(F.col("to_label") == F.col("own_label"), F.col("dd"))
+        ).alias("a2"),
+        F.min(
+            F.when(F.col("to_label") != F.col("own_label"), F.col("dd"))
+        ).alias("b2"),
+    )
+    s = ab.filter(
+        F.col("a2").isNotNull() & F.col("b2").isNotNull()
+    ).selectExpr(
+        "own_label AS label",
+        "CASE WHEN b2 > a2 THEN CAST((b2 - a2) * 1000000"
+        " div (CASE WHEN a2 > b2 THEN a2 ELSE b2 END) AS BIGINT)"
+        " WHEN a2 > b2 THEN -CAST((a2 - b2) * 1000000"
+        " div (CASE WHEN a2 > b2 THEN a2 ELSE b2 END) AS BIGINT)"
+        " ELSE CAST(0 AS BIGINT) END AS s_ppm",
+    )
+    return (
+        s.groupBy("label")
+        .agg(
+            F.count("*").alias("n_points"),
+            F.expr(
+                "CASE WHEN SUM(s_ppm) >= 0"
+                " THEN CAST(SUM(s_ppm) div count(*) AS BIGINT)"
+                " ELSE -CAST((-SUM(s_ppm)) div count(*) AS BIGINT)"
+                " END"
+            ).alias("mean_silhouette_ppm"),
+        )
+        .selectExpr(
+            "CAST(label AS INT) AS label",
+            "n_points",
+            "mean_silhouette_ppm",
+        )
+        .orderBy("label")
+    )
+
+
+@register(
+    "calinski_harabasz_labels",
+    oracle="""
+WITH
+""" + _EMB_CENT_CTE + """,
+gmean AS (
+  SELECT pos,
+         CASE WHEN SUM(q) >= 0
+              THEN CAST(SUM(q) * 1000 // count(*) AS BIGINT)
+              ELSE -CAST((-SUM(q)) * 1000 // count(*) AS BIGINT)
+         END AS g_micro
+  FROM comp GROUP BY 1
+),
+ssw AS (
+  SELECT CAST(SUM(CAST(comp.q * 1000 - cent.c_micro AS HUGEINT)
+              * (comp.q * 1000 - cent.c_micro)) AS HUGEINT) AS w
+  FROM comp JOIN cent
+    ON cent.label = comp.label AND cent.pos = comp.pos
+),
+ssb AS (
+  SELECT CAST(SUM(CAST(cent.n_members AS HUGEINT)
+              * (cent.c_micro - gmean.g_micro)
+              * (cent.c_micro - gmean.g_micro)) AS HUGEINT) AS b
+  FROM cent JOIN gmean ON gmean.pos = cent.pos
+),
+dims AS (
+  SELECT CAST(count(DISTINCT vec_id) AS BIGINT) AS n,
+         CAST(count(DISTINCT label) AS BIGINT) AS k
+  FROM comp
+)
+SELECT dims.n, dims.k,
+       CASE WHEN ssw.w > 0 AND dims.k > 1
+            THEN CAST(ssb.b * (dims.n - dims.k) * 1000
+                      // (ssw.w * (dims.k - 1)) AS BIGINT)
+       END AS ch_milli
+FROM ssw, ssb, dims
+""",
+)
+def calinski_harabasz_labels(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """CALINSKI-HARABASZ VARIANCE-RATIO CRITERION of the embedding
+    label clustering — CH = (SSB/(k−1))/(SSW/(n−k)), the
+    cluster-separation index that is a PURE RATIONAL in the scatter
+    sums (no sqrt, no log — unlike Davies-Bouldin): between-scatter
+    weights each centroid's squared offset from the global mean by
+    its membership, within-scatter sums squared member-to-centroid
+    offsets, all on the shared micro grid with exact HUGEINT ⟷
+    decimal(38,0) accumulation and ONE milli floor-division.
+    Complements silhouette_simplified_labels (per-point view) with
+    the global ANOVA-style view. Scale: one posexplode, two
+    broadcast centroid joins, 1-row algebra."""
+    comp, cent = _emb_comp_cent(spark, sf_dir)
+    gmean = comp.groupBy("pos").agg(
+        F.expr(
+            "CASE WHEN SUM(q) >= 0"
+            " THEN CAST(SUM(q) * 1000 div count(*) AS BIGINT)"
+            " ELSE -CAST((-SUM(q)) * 1000 div count(*) AS BIGINT) END"
+        ).alias("g_micro")
+    )
+    ssw = (
+        comp.join(
+            F.broadcast(
+                cent.selectExpr(
+                    "label AS cl", "pos AS cpos", "c_micro"
+                )
+            ),
+            (F.col("cl") == F.col("label"))
+            & (F.col("cpos") == F.col("pos")),
+        )
+        .agg(
+            F.sum(
+                F.expr(
+                    f"CAST(q * 1000 - c_micro AS {DEC38})"
+                    " * (q * 1000 - c_micro)"
+                )
+            ).alias("w")
+        )
+    )
+    ssb = (
+        cent.join(F.broadcast(gmean), "pos")
+        .agg(
+            F.sum(
+                F.expr(
+                    f"CAST(n_members AS {DEC38})"
+                    " * (c_micro - g_micro) * (c_micro - g_micro)"
+                )
+            ).alias("b")
+        )
+    )
+    dims = comp.agg(
+        F.countDistinct("vec_id").alias("n"),
+        F.countDistinct("label").alias("k"),
+    )
+    return (
+        ssw.crossJoin(ssb)
+        .crossJoin(F.broadcast(dims))
+        .selectExpr(
+            "n",
+            "k",
+            "CASE WHEN w > 0 AND k > 1 THEN"
+            " CAST(b * (n - k) * 1000 div (w * (k - 1)) AS BIGINT)"
+            " END AS ch_milli",
+        )
     )

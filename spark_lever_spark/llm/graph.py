@@ -17,6 +17,10 @@ over naive label propagation, whose round count is the graph diameter.
 Lineage is truncated with ``localCheckpoint`` every round so the plan
 does not compound across iterations (on a cluster you would use
 reliable ``checkpoint`` with an HDFS dir instead).
+
+Co-purchase graph statistics: clustering coefficient, rich-club
+profile, 3-truss peel, preferential attachment, double-sweep diameter
+bound, configuration-model triangle excess.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_lever_spark.catalog import load_table, spread_scan
+from spark_lever_spark.functions.exact import spark_sql
 from spark_lever_spark.registry import register
 
 
@@ -122,7 +127,7 @@ def copurchase_edges(
         # smaller than lineitem, so the checkpoint is cheap at any
         # scale and each branch reads a LogicalRDD instead of
         # re-running the basket aggregation (guide §5 recompute
-        # elimination; measured A/B in OPTIMIZATION_r18.md).
+        # elimination; measured in a same-session A/B).
         out = out.localCheckpoint(eager=True)
     return out
 
@@ -168,7 +173,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
 # fixed overhead (a symmetric union + groupBy-min, two relabel joins and
 # two eager localCheckpoint materializations) cannot amortize on small
 # graphs.  Calibrated by a same-tree, same-session A/B at sf0.1
-# (round 18, VERDICT r17 task #1, min-of-N clearCache'd reads):
+# (min-of-N clearCache'd reads):
 #   dbscan_box_clusters_errors (~192k-edge core graph):
 #     contract-always 8.97 s / contract-never 7.69 s / conditional 7.52 s
 #   dedup_cluster_quality_election (3.67M-pair graph):
@@ -397,7 +402,6 @@ FROM comp
 GROUP BY component
 ORDER BY component
 """,
-    category="llm_dedup",
 )
 def dedup_cc_chain_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive dup-cluster extraction, oracle-checkable variant.
@@ -454,7 +458,6 @@ comp AS (SELECT node, MIN(comp) AS component FROM reach GROUP BY node)
 SELECT component, COUNT(*) AS cluster_size, MIN(node) AS canonical_doc
 FROM comp GROUP BY component ORDER BY component
 """,
-    category="llm_dedup",
 )
 def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full near-dup pipeline: MinHash+LSH candidate pairs ->
@@ -502,7 +505,6 @@ SELECT verts.n_vertices, (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_edges,
        tri.n_triangles
 FROM verts CROSS JOIN tri
 """,
-    category="llm_dedup",
 )
 def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting over the co-purchase graph (parts bought
@@ -591,7 +593,6 @@ GROUP BY lbl ORDER BY size DESC, community
 @register(
     "lpa_communities_copurchase",
     oracle=_lpa_oracle(),
-    category="llm_dedup",
 )
 def lpa_communities_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label propagation communities (Raghavan et al. '07, synchronized
@@ -756,7 +757,6 @@ def _kcore_local(e: DataFrame, rounds: int, k: int) -> DataFrame:
 @register(
     "kcore_peel_copurchase",
     oracle=_kcore_oracle(),
-    category="llm_dedup",
 )
 def kcore_peel_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-core decomposition of the co-purchase graph by iterative
@@ -1198,7 +1198,6 @@ r0 AS MATERIALIZED (
 @register(
     "pagerank_copurchase",
     oracle=_pagerank_oracle(),
-    category="llm_dedup",
 )
 def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the co-purchase part graph — the fifth graph
@@ -1332,7 +1331,6 @@ SELECT component,
          AS canonical_tokens
 FROM ranked GROUP BY component ORDER BY component
 """,
-    category="llm_dedup",
 )
 def dedup_cluster_quality_election(
     spark: SparkSession, sf_dir: str
@@ -1348,17 +1346,16 @@ def dedup_cluster_quality_election(
     across clusters). The reference rule every dedup paper glosses as
     'keep one representative', made explicit and verifiable.
 
-    Round 9 (VERDICT r8 task #4): candidacy now runs under the
-    ``tune_lsh_banding`` choice instead of the fixed 8x4 — on this
-    high-background-similarity corpus the fixed banding generated ~3M
-    candidate pairs at sf0.1 (the 27.7 s BENCH_r08 bill), nearly all
-    background J≈0.5-0.8 noise the est>=0.5 filter then discarded
-    pair-by-pair. The tuner keeps recall >= 0.9 at the J=0.95 dup
-    threshold while minimizing expected candidates; candidacy for
-    mid-band pairs is LSH-governed by design (the whole point of
-    banding selectivity). The oracle replays the ENTIRE tuning
-    decision + banding + CC + election in SQL, so the hash certifies
-    the tuned pipeline end-to-end.
+    Candidacy runs under the ``tune_lsh_banding`` choice instead of the
+    fixed 8x4 — on this high-background-similarity corpus the fixed
+    banding generated ~3M candidate pairs at sf0.1 (27.7 s of the
+    query's time), nearly all background J≈0.5-0.8 noise the est>=0.5
+    filter then discarded pair-by-pair. The tuner keeps recall >= 0.9 at
+    the J=0.95 dup threshold while minimizing expected candidates;
+    candidacy for mid-band pairs is LSH-governed by design (the whole
+    point of banding selectivity). The oracle replays the ENTIRE tuning
+    decision + banding + CC + election in SQL, so the hash certifies the
+    tuned pipeline end-to-end.
 
     Candidate generation and election are separate helpers
     (`_election_candidate_pairs` / `_election_from_components`) so the
@@ -1457,7 +1454,6 @@ SELECT -1, (SELECT CAST(count(*) AS BIGINT) FROM verts)
            - (SELECT CAST(count(*) AS BIGINT) FROM dist)
 ORDER BY hop
 """,
-    category="llm_dedup",
 )
 def bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source BFS hop distances over the co-purchase graph
@@ -1573,7 +1569,6 @@ SELECT e.doc_id,
 FROM exact e LEFT JOIN comp c ON c.node = e.doc_id
 ORDER BY e.doc_id
 """,
-    category="llm_dedup",
 )
 def dedup_decision_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-document dedup DECISION LEDGER a production corpus
@@ -1659,7 +1654,6 @@ SELECT h.degree, h.n_vertices,
 FROM hist h CROSS JOIN tot t
 ORDER BY h.degree
 """,
-    category="llm_dedup",
 )
 def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the co-purchase graph with the
@@ -1735,7 +1729,6 @@ SELECT n,
              * 1000000) / 1000000 AS assortativity
 FROM m
 """,
-    category="llm_dedup",
 )
 def degree_assortativity_copurchase(
     spark: SparkSession, sf_dir: str
@@ -1834,7 +1827,6 @@ SELECT c.component,
 FROM comp c JOIN names n ON n.nid = c.node
 GROUP BY c.component ORDER BY c.component
 """,
-    category="llm_dedup",
 )
 def entity_resolution_clusters(
     spark: SparkSession, sf_dir: str
@@ -1897,7 +1889,7 @@ def entity_resolution_clusters(
 
 
 # ---------------------------------------------------------------------------
-# round-11 additions: link prediction and density clustering
+# Link prediction and density clustering
 # ---------------------------------------------------------------------------
 
 
@@ -1941,7 +1933,6 @@ SELECT a AS part_a, b AS part_b, cn AS common_neighbors,
 FROM scored
 ORDER BY cn DESC, jaccard_ppm DESC, a, b LIMIT 20
 """,
-    category="llm_graph",
 )
 def link_prediction_common_neighbors(
     spark: SparkSession, sf_dir: str
@@ -2045,7 +2036,6 @@ FROM (
 )
 GROUP BY cluster_id ORDER BY cluster_id
 """,
-    category="llm_graph",
 )
 def dbscan_box_clusters_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN density clustering (Ester et al. 1996) of error events in
@@ -2200,7 +2190,6 @@ SELECT e.pa, e.pb,
 FROM e LEFT JOIN sup ON sup.pa = e.pa AND sup.pb = e.pb
 ORDER BY e.pa, e.pb
 """,
-    category="llm_graph",
 )
 def edge_triangle_support_copurchase(
     spark: SparkSession, sf_dir: str
@@ -2299,7 +2288,6 @@ SELECT m.m AS n_edges, dd.nc AS n_communities, intra.li AS intra_edges,
              * 1000000) / 1000000 AS modularity
 FROM m CROSS JOIN intra CROSS JOIN dd
 """,
-    category="llm_graph",
 )
 def modularity_brand_partition_copurchase(
     spark: SparkSession, sf_dir: str
@@ -2400,7 +2388,6 @@ SELECT a AS part_a, b AS part_b, cn AS common_neighbors, ra_micro
 FROM open_w
 ORDER BY ra_micro DESC, cn DESC, a, b LIMIT 20
 """,
-    category="llm_graph",
 )
 def link_prediction_resource_allocation(
     spark: SparkSession, sf_dir: str
@@ -2486,7 +2473,6 @@ SELECT s AS seed,
             AS BIGINT) AS harmonic_micro
 FROM dist GROUP BY s ORDER BY seed
 """,
-    category="llm_graph",
 )
 def harmonic_closeness_sampled_bfs(
     spark: SparkSession, sf_dir: str
@@ -2631,7 +2617,6 @@ r0 AS MATERIALIZED (
 @register(
     "personalized_pagerank_copurchase",
     oracle=_ppr_oracle(),
-    category="llm_graph",
 )
 def personalized_pagerank_copurchase(
     spark: SparkSession, sf_dir: str
@@ -2787,7 +2772,6 @@ ORDER BY kind, score_micro DESC, node"""
 @register(
     "hits_hubs_authorities_purchases",
     oracle=_hits_oracle(),
-    category="llm_graph",
 )
 def hits_hubs_authorities_purchases(
     spark: SparkSession, sf_dir: str
@@ -2900,3 +2884,592 @@ def hits_hubs_authorities_purchases(
     out = out.localCheckpoint(eager=True)
     e.unpersist()
     return out
+
+
+# ---------------------------------------------------------------------------
+# Co-purchase graph: per-node clustering coefficients
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "clustering_coefficient_copurchase",
+    oracle="""
+WITH items AS (
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+),
+pairs AS (
+  SELECT a.l_partkey AS pa, b.l_partkey AS pb
+  FROM items a JOIN items b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY 1, 2 HAVING count(*) >= 2
+),
+adj AS (
+  SELECT pa AS u, pb AS v FROM pairs
+  UNION ALL SELECT pb, pa FROM pairs
+),
+deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
+tri AS (
+  SELECT x.u AS node, CAST(count(*) AS BIGINT) AS t
+  FROM adj x
+  JOIN adj y ON y.u = x.u AND x.v < y.v
+  JOIN pairs p ON p.pa = x.v AND p.pb = y.v
+  GROUP BY x.u
+)
+SELECT deg.u AS part, deg.d AS degree,
+       CAST(COALESCE(tri.t, 0) AS BIGINT) AS n_triangles,
+       CAST(2 * COALESCE(tri.t, 0) * 1000000
+            // (deg.d * (deg.d - 1)) AS BIGINT) AS cc_ppm
+FROM deg LEFT JOIN tri ON tri.node = deg.u
+WHERE deg.d >= 2
+ORDER BY cc_ppm DESC, degree DESC, part LIMIT 20
+""",
+)
+def clustering_coefficient_copurchase(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PER-NODE LOCAL CLUSTERING COEFFICIENT on the co-purchase graph
+    — Watts-Strogatz cc(v) = 2·T(v)/(deg(v)·(deg(v)−1)), the
+    node-level density readout triangle_count_copurchase only
+    publishes globally (and the structural signal behind 'tightly
+    bundled accessory kits' vs 'hub parts bought with everything').
+    Per-node triangles come from the wedge-closure equi-join (both
+    neighbors of v adjacent, v's wedge oriented x.v < y.v so each
+    triangle counts once per corner — Σ deg² work, the compact-
+    forward bound), closed against the canonical pa < pb edge set.
+    cc is exact: integer triangle counts and degrees, one ppm
+    floor-division, deg ≥ 2 filter excludes the undefined leaves.
+    Deterministic top-20 (cc desc, degree desc, part). Scale: the
+    same support-≥ 2 pruned edge set as every copurchase query; no
+    step exceeds the wedge bound."""
+    from spark_lever_spark.llm.graph import copurchase_edges
+
+    pairs = copurchase_edges(spark, sf_dir, pinned=True)
+    adj = pairs.select(
+        F.col("pa").alias("u"), F.col("pb").alias("v")
+    ).union(pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
+    deg = adj.groupBy("u").agg(F.count("*").alias("d"))
+    x = adj.select(F.col("u").alias("node"), F.col("v").alias("w1"))
+    y = adj.select(F.col("u").alias("node2"), F.col("v").alias("w2"))
+    tri = (
+        x.join(
+            y,
+            (F.col("node2") == F.col("node"))
+            & (F.col("w1") < F.col("w2")),
+        )
+        .join(
+            pairs,
+            (F.col("pa") == F.col("w1")) & (F.col("pb") == F.col("w2")),
+        )
+        .groupBy("node")
+        .agg(F.count("*").alias("t"))
+    )
+    return (
+        deg.join(tri, deg.u == tri.node, "left")
+        .filter(F.col("d") >= 2)
+        .select(
+            F.col("u").alias("part"),
+            F.col("d").alias("degree"),
+            F.coalesce(F.col("t"), F.lit(0)).alias("n_triangles"),
+            F.expr(
+                "CAST(2 * COALESCE(t, 0) * 1000000"
+                " div (d * (d - 1)) AS BIGINT)"
+            ).alias("cc_ppm"),
+        )
+        .orderBy(F.desc("cc_ppm"), F.desc("degree"), "part")
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Graph: rich-club / k-truss / preferential attachment on co-purchase
+# ---------------------------------------------------------------------------
+
+# Support->=2 co-purchase edge list (the graph every co-purchase query
+# shares — see triangle_count_copurchase / kcore_peel_copurchase).
+_COPURCHASE_CTE = """
+items AS (
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+),
+pairs AS (
+  SELECT a.l_partkey AS pa, b.l_partkey AS pb
+  FROM items a JOIN items b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY 1, 2 HAVING count(*) >= 2
+)
+"""
+
+
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from spark_lever_spark.llm.graph import copurchase_edges
+
+    return copurchase_edges(spark, sf_dir, pinned=True)
+
+
+@register(
+    "rich_club_coefficient_copurchase",
+    oracle="""
+WITH
+""" + _COPURCHASE_CTE + """,
+adj AS (
+  SELECT pa AS u, pb AS v FROM pairs
+  UNION ALL SELECT pb, pa FROM pairs
+),
+deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
+ks AS (SELECT unnest([2, 4, 8, 16, 32]) AS k),
+club AS (
+  SELECT ks.k, CAST(count(*) AS BIGINT) AS nk
+  FROM deg, ks WHERE deg.d > ks.k GROUP BY ks.k
+),
+ek AS (
+  SELECT ks.k, CAST(count(*) AS BIGINT) AS mk
+  FROM pairs p
+  JOIN deg da ON da.u = p.pa
+  JOIN deg db ON db.u = p.pb, ks
+  WHERE da.d > ks.k AND db.d > ks.k
+  GROUP BY ks.k
+)
+SELECT c.k, c.nk AS club_size, COALESCE(e.mk, 0) AS club_edges,
+       CASE WHEN c.nk > 1
+            THEN CAST(COALESCE(e.mk, 0) * 2000000
+                      // (c.nk * (c.nk - 1)) AS BIGINT)
+       END AS phi_ppm
+FROM club c LEFT JOIN ek e ON e.k = c.k
+ORDER BY c.k
+""",
+)
+def rich_club_coefficient_copurchase(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """RICH-CLUB COEFFICIENT φ(k) of the co-purchase graph at k ∈
+    {2,4,8,16,32} — do high-degree parts preferentially co-purchase
+    with EACH OTHER (hub oligarchy) or spread across the catalog?
+    φ(k) = 2·E_{>k} / (n_{>k}(n_{>k}−1)): the density of the
+    subgraph induced by nodes of degree > k, published as one exact
+    non-negative ppm floor-division per k (counts are int64; the
+    2× lives in the scale constant). Complements
+    degree_assortativity_copurchase (a single global correlation)
+    with the full k-profile the assortativity coefficient
+    averages away. Scale: one edge rollup + a degree join + a 5-row
+    broadcast threshold table; no wedge work at all."""
+    pairs = _copurchase_pairs(spark, sf_dir)
+    adj = pairs.select(F.col("pa").alias("u")).union(
+        pairs.select(F.col("pb").alias("u"))
+    )
+    deg = adj.groupBy("u").agg(F.count("*").alias("d"))
+    ks = spark.range(1).selectExpr(
+        "explode(array(2, 4, 8, 16, 32)) AS k"
+    )
+    club = (
+        deg.crossJoin(F.broadcast(ks))
+        .filter(F.col("d") > F.col("k"))
+        .groupBy("k")
+        .agg(F.count("*").alias("nk"))
+    )
+    da = deg.select(F.col("u").alias("ua"), F.col("d").alias("dda"))
+    db = deg.select(F.col("u").alias("ub"), F.col("d").alias("ddb"))
+    ek = (
+        pairs.join(da, F.col("pa") == F.col("ua"))
+        .join(db, F.col("pb") == F.col("ub"))
+        .crossJoin(F.broadcast(ks))
+        .filter((F.col("dda") > F.col("k")) & (F.col("ddb") > F.col("k")))
+        .groupBy("k")
+        .agg(F.count("*").alias("mk"))
+    )
+    return (
+        club.join(ek, "k", "left")
+        .selectExpr(
+            "CAST(k AS INT) AS k",
+            "nk AS club_size",
+            "COALESCE(mk, 0) AS club_edges",
+            "CASE WHEN nk > 1 THEN CAST(COALESCE(mk, 0) * 2000000"
+            " div (nk * (nk - 1)) AS BIGINT) END AS phi_ppm",
+        )
+        .orderBy("k")
+    )
+
+
+def _truss_round_sql(i: int) -> str:
+    """One unrolled 3-truss peel round: keep edges of e{i} with >= 1
+    triangle support inside e{i}. Every stage is MATERIALIZED: each
+    CTE is referenced by two+ later stages and the chain would
+    otherwise be re-inlined (and re-computed) once per unrolled
+    round — the recursive-oracle doctrine."""
+    return f"""
+adj{i} AS MATERIALIZED (
+  SELECT pa AS u, pb AS v FROM e{i}
+  UNION ALL SELECT pb, pa FROM e{i}
+),
+e{i + 1} AS MATERIALIZED (
+  SELECT p.pa, p.pb
+  FROM e{i} p
+  WHERE EXISTS (
+    SELECT 1 FROM adj{i} x JOIN adj{i} y
+      ON x.v = y.v AND x.u = p.pa AND y.u = p.pb
+  )
+)"""
+
+
+@register(
+    "ktruss_3_copurchase",
+    oracle="""
+WITH
+""" + _COPURCHASE_CTE.replace(
+    "pairs AS (", "pairs AS MATERIALIZED ("
+) + """,
+e0 AS MATERIALIZED (SELECT pa, pb FROM pairs),
+""" + ",".join(_truss_round_sql(i) for i in range(3)) + """
+SELECT 0 AS round,
+       (SELECT CAST(count(*) AS BIGINT) FROM e0) AS edges_remaining
+UNION ALL SELECT 1, (SELECT CAST(count(*) AS BIGINT) FROM e1)
+UNION ALL SELECT 2, (SELECT CAST(count(*) AS BIGINT) FROM e2)
+UNION ALL SELECT 3, (SELECT CAST(count(*) AS BIGINT) FROM e3)
+ORDER BY round
+""",
+)
+def ktruss_3_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """3-TRUSS PEELING of the co-purchase graph — the EDGE analog of
+    kcore_peel_copurchase: an edge survives iff it closes at least
+    one triangle among surviving edges (k-truss with k = 3 ⇒
+    support ≥ k−2 = 1), iterated 3 bounded rounds (the bounded-
+    rounds doctrine: each peel round is ONE wedge equi-join on the
+    surviving adjacency — Σ deg² work — plus a semi-join; the round
+    count is a query constant, never data-driven). Published as the
+    per-round edge-census trajectory (round 0 = raw support-≥2
+    graph); a converged trajectory shows edges_remaining constant
+    across the last rounds. Trusses are the community-detection
+    precursor (cohesive cores stricter than k-core — every edge,
+    not just every node, needs embedded support). Exact integer
+    counts only."""
+    # Each round's edge set is PERSISTED before the count: without it
+    # round i re-evaluates the whole peel lineage of rounds 0..i-1
+    # (O(rounds²) wedge joins) — the iterative-algorithm caching
+    # doctrine (same as lpa_communities / pagerank rounds).
+    pairs = _copurchase_pairs(spark, sf_dir)
+    e = pairs.persist()
+    cached = [e]
+    counts = [("0", e.count())]
+    for i in range(3):
+        adj = e.select(F.col("pa").alias("u"), F.col("pb").alias("v")).union(
+            e.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
+        )
+        x = adj.select(F.col("u").alias("xa"), F.col("v").alias("w"))
+        y = adj.select(F.col("u").alias("yb"), F.col("v").alias("w2"))
+        tri_edges = (
+            x.join(y, F.col("w") == F.col("w2"))
+            .select(F.col("xa").alias("pa"), F.col("yb").alias("pb"))
+            .distinct()
+        )
+        e = e.join(tri_edges, ["pa", "pb"], "left_semi").persist()
+        cached.append(e)
+        counts.append((str(i + 1), e.count()))
+    rows = [(int(r), int(c)) for r, c in counts]
+    for df in cached:
+        df.unpersist()
+    return spark.createDataFrame(
+        rows, "round INT, edges_remaining BIGINT"
+    ).orderBy("round")
+
+
+@register(
+    "link_prediction_pref_attachment",
+    oracle="""
+WITH
+""" + _COPURCHASE_CTE + """,
+adj AS (
+  SELECT pa AS u, pb AS v FROM pairs
+  UNION ALL SELECT pb, pa FROM pairs
+),
+deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
+wedge AS (
+  SELECT x.u AS a, y.v AS b
+  FROM adj x JOIN adj y ON x.v = y.u AND x.u < y.v
+  GROUP BY 1, 2
+),
+open_w AS (
+  SELECT w.a, w.b FROM wedge w
+  LEFT JOIN pairs p ON p.pa = w.a AND p.pb = w.b
+  WHERE p.pa IS NULL
+)
+SELECT o.a AS part_a, o.b AS part_b,
+       da.d AS deg_a, db.d AS deg_b,
+       CAST(da.d * db.d AS BIGINT) AS pa_score
+FROM open_w o
+JOIN deg da ON da.u = o.a
+JOIN deg db ON db.u = o.b
+ORDER BY pa_score DESC, part_a, part_b LIMIT 20
+""",
+)
+def link_prediction_pref_attachment(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PREFERENTIAL-ATTACHMENT LINK PREDICTION on the co-purchase
+    graph: rank not-yet-co-purchased 2-hop pairs by deg(a)·deg(b) —
+    the growth-model predictor (Barabási–Albert: new edges attach
+    proportionally to degree products), the GLOBAL-popularity
+    counterweight to link_prediction_common_neighbors /
+    _resource_allocation (which reward local overlap; PA rewards
+    joint popularity even with zero shared neighbors among the
+    candidates). Candidates come from the same wedge join + edge
+    anti-join; the score is one exact int64 product, top-20 by
+    (score, pair) deterministic order. Scale: hub-bounded wedge
+    work, same as the CN predictor."""
+    pairs = _copurchase_pairs(spark, sf_dir)
+    adj = pairs.select(
+        F.col("pa").alias("u"), F.col("pb").alias("v")
+    ).union(pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
+    deg = adj.groupBy("u").agg(F.count("*").alias("d"))
+    x = adj.select(F.col("u").alias("a"), F.col("v").alias("w"))
+    y = adj.select(F.col("u").alias("w2"), F.col("v").alias("b"))
+    wedge = (
+        x.join(y, (F.col("w") == F.col("w2")) & (F.col("a") < F.col("b")))
+        .select("a", "b")
+        .distinct()
+    )
+    open_w = wedge.join(
+        pairs,
+        (F.col("a") == F.col("pa")) & (F.col("b") == F.col("pb")),
+        "left_anti",
+    )
+    da = deg.select(F.col("u").alias("ua"), F.col("d").alias("deg_a"))
+    db = deg.select(F.col("u").alias("ub"), F.col("d").alias("deg_b"))
+    return (
+        open_w.join(da, F.col("a") == F.col("ua"))
+        .join(db, F.col("b") == F.col("ub"))
+        .selectExpr(
+            "a AS part_a",
+            "b AS part_b",
+            "deg_a",
+            "deg_b",
+            "CAST(deg_a * deg_b AS BIGINT) AS pa_score",
+        )
+        .orderBy(F.desc("pa_score"), "part_a", "part_b")
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Double-sweep diameter lower bound
+# ---------------------------------------------------------------------------
+
+_SWEEP_SQL = """
+walk{tag}(v, hop) AS (
+  SELECT {seed}, 0
+  UNION
+  SELECT s.pb, w.hop + 1
+  FROM walk{tag} w JOIN sym s ON s.pa = w.v
+  WHERE w.hop < 4
+),
+dist{tag} AS (
+  SELECT v, CAST(min(hop) AS BIGINT) AS hop FROM walk{tag} GROUP BY v
+),
+far{tag} AS (
+  SELECT v, hop FROM dist{tag}
+  ORDER BY hop DESC, v LIMIT 1
+)"""
+
+
+@register(
+    "diameter_double_sweep_copurchase",
+    oracle="""
+WITH RECURSIVE
+""" + _COPURCHASE_CTE.replace(
+        "pairs AS (", "pairs AS MATERIALIZED ("
+    ) + """,
+sym AS MATERIALIZED (
+  SELECT pa, pb FROM pairs UNION ALL SELECT pb, pa FROM pairs
+),
+""" + _SWEEP_SQL.format(tag="1", seed="(SELECT min(pa) FROM sym)")
+    + ","
+    + _SWEEP_SQL.format(tag="2", seed="(SELECT v FROM far1)") + """
+SELECT (SELECT min(pa) FROM sym) AS start_vertex,
+       (SELECT v FROM far1) AS turn_vertex,
+       (SELECT hop FROM far1) AS first_sweep_dist,
+       (SELECT v FROM far2) AS far_vertex,
+       (SELECT hop FROM far2) AS diameter_lower_bound,
+       (SELECT CAST(count(*) AS BIGINT) FROM dist2) AS n_reached
+""",
+)
+def diameter_double_sweep_copurchase(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """DOUBLE-SWEEP DIAMETER LOWER BOUND of the co-purchase graph —
+    the classic 2-BFS heuristic (Magnien/Latapy/Habib: BFS from an
+    arbitrary vertex, re-BFS from the farthest found; the second
+    eccentricity is a lower bound that is EXACT on trees and
+    near-tight in practice — how 'how wide is the catalog graph'
+    gets answered without all-pairs work): both sweeps are the
+    bfs_hops_copurchase frontier-relaxation (hop budget 4, a query
+    constant; each round ONE frontier-adjacency equi-join with the
+    visited-set anti-join, per-round persist — the iterative-
+    algorithm caching doctrine), the turn vertex picked by the
+    deterministic (hop DESC, vertex) order. Scale: 2 × 4 bounded
+    rounds of Σdeg-work joins."""
+    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    sym = pairs.select(
+        F.col("pa").alias("u"), F.col("pb").alias("v")
+    ).union(
+        pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
+    ).persist()
+
+    def sweep(seed_df):
+        # seed_df: single row (v) — frontier relaxation, 4 bounded
+        # rounds (the bfs_hops budget), built LAZILY: no per-round
+        # driver action — one collect at the end materializes the
+        # whole sweep (per-round isEmpty/count actions measured ~3s
+        # of job overhead each on a graph this small)
+        dist = seed_df.select(
+            F.col("v"), F.lit(0).cast("long").alias("hop")
+        ).localCheckpoint()
+        frontier = dist
+        for hop in range(1, 5):
+            fr = frontier.select(F.col("v").alias("fv"))
+            visited = dist.select(F.col("v").alias("dv"))
+            sy = sym.alias("sy")
+            nxt = frontier = (
+                fr.join(sy, F.col("fv") == F.col("sy.u"))
+                .select(F.col("sy.v").alias("nv"))
+                .distinct()
+                .join(
+                    visited, F.col("nv") == F.col("dv"), "left_anti"
+                )
+                .select(
+                    F.col("nv").alias("v"),
+                    F.lit(hop).cast("long").alias("hop"),
+                )
+            )
+            # localCheckpoint truncates the per-round lineage: the
+            # lazy 4-round DAG otherwise compounds to ~200 stages of
+            # shuffle bookkeeping on a graph this small
+            dist = dist.unionByName(nxt).localCheckpoint(eager=False)
+        far_rows = (
+            dist.orderBy(F.desc("hop"), "v").limit(1).collect()
+        )
+        n_reached = dist.count()
+        return far_rows[0], n_reached
+
+    start = sym.agg(F.min("u").alias("v"))
+    far1, _ = sweep(start)
+    far2, n2 = sweep(
+        sym.sparkSession.createDataFrame([(far1["v"],)], "v bigint")
+    )
+    start_v = start.collect()[0]["v"]
+    pairs.unpersist()
+    sym.unpersist()
+    return spark.createDataFrame(
+        [
+            (
+                int(start_v),
+                int(far1["v"]),
+                int(far1["hop"]),
+                int(far2["v"]),
+                int(far2["hop"]),
+                int(n2),
+            )
+        ],
+        "start_vertex bigint, turn_vertex bigint,"
+        " first_sweep_dist bigint, far_vertex bigint,"
+        " diameter_lower_bound bigint, n_reached bigint",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Configuration-model triangle excess (graph null check)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "config_model_triangle_excess_copurchase",
+    oracle="""
+WITH items AS (
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+),
+e AS (
+  SELECT a.l_partkey AS pa, b.l_partkey AS pb
+  FROM items a JOIN items b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY 1, 2 HAVING count(*) >= 2
+),
+deg AS (
+  SELECT v, CAST(count(*) AS BIGINT) AS d
+  FROM (SELECT pa AS v FROM e UNION ALL SELECT pb FROM e)
+  GROUP BY v
+),
+s AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_vertices,
+         CAST(SUM(d) AS BIGINT) AS s1,
+         CAST(SUM(d * (d - 1)) AS BIGINT) AS s2
+  FROM deg
+),
+tri AS (
+  SELECT CAST(count(*) AS BIGINT) AS t_obs
+  FROM e e1
+  JOIN e e2 ON e2.pa = e1.pb
+  JOIN e e3 ON e3.pa = e1.pa AND e3.pb = e2.pb
+)
+SELECT s.n_vertices, CAST(s.s1 // 2 AS BIGINT) AS n_edges, s.s2,
+       tri.t_obs,
+       CAST(CAST(s2 AS HUGEINT) * s2 * s2 * 1000
+            // (6 * CAST(s1 AS HUGEINT) * s1 * s1) AS BIGINT)
+           AS expected_milli,
+       CASE WHEN s2 > 0 THEN
+         CAST(CAST(t_obs AS HUGEINT) * 6000 * s1 * s1 * s1
+              // (CAST(s2 AS HUGEINT) * s2 * s2) AS BIGINT)
+       END AS excess_ratio_milli
+FROM s CROSS JOIN tri
+""",
+)
+def config_model_triangle_excess_copurchase(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """CONFIGURATION-MODEL TRIANGLE NULL CHECK on the co-purchase
+    graph: observed triangles vs the Chung-Lu/configuration-model
+    expectation E[T] ≈ (1/6)·(S₂/S₁)³ with S₁ = Σd, S₂ = Σd(d−1) —
+    the closed-form degree-sequence null every network-science
+    clustering claim is tested against (excess ≫ 1 means real
+    community structure, not degree artifacts). Same edge set and
+    oriented two-equi-join triangle enumeration as
+    triangle_count_copurchase (llm/graph.py); the null needs only the
+    degree sequence, one aggregation. All ratios HUGEINT ⟷
+    decimal(38,0) milli floor-divisions (non-negative). Scale shape:
+    compact-forward triangle join (Σ deg² bound) + one degree rollup."""
+    from spark_lever_spark.llm.graph import copurchase_edges
+
+    e = copurchase_edges(spark, sf_dir)
+    deg = (
+        e.select(F.col("pa").alias("v"))
+        .unionByName(e.select(F.col("pb").alias("v")))
+        .groupBy("v")
+        .agg(F.count("*").alias("d"))
+    )
+    s = deg.agg(
+        F.count("*").alias("n_vertices"),
+        F.sum("d").alias("s1"),
+        F.sum(F.col("d") * (F.col("d") - 1)).alias("s2"),
+    )
+    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+    tri = (
+        e1.join(e2, F.col("e2.pa") == F.col("e1.pb"))
+        .join(
+            e3,
+            (F.col("e3.pa") == F.col("e1.pa"))
+            & (F.col("e3.pb") == F.col("e2.pb")),
+        )
+        .agg(F.count("*").alias("t_obs"))
+    )
+    return s.crossJoin(F.broadcast(tri)).selectExpr(
+        "n_vertices",
+        "CAST(s1 div 2 AS BIGINT) AS n_edges",
+        "s2",
+        "t_obs",
+        spark_sql(
+            "CAST(CAST(s2 AS {I}) * s2 * s2 * 1000"
+            " {D} (6 * CAST(s1 AS {I}) * s1 * s1) AS BIGINT)"
+        )
+        + " AS expected_milli",
+        spark_sql(
+            "CASE WHEN s2 > 0 THEN"
+            " CAST(CAST(t_obs AS {I}) * 6000 * s1 * s1 * s1"
+            " {D} (CAST(s2 AS {I}) * s2 * s2) AS BIGINT) END"
+        )
+        + " AS excess_ratio_milli",
+    )

@@ -15,6 +15,9 @@ Design (the part that must be right at 100 TB):
   get genuine magic/header/raster parsing with fail-loud validation,
   so both media modalities exercise a real decode path end-to-end
   (tests/test_multimodal.py pins the fail-loud contract).
+
+Features on the decoded media: PGM Sobel energy and centroid moments,
+PPM color quantization, WAV difference energy and zero crossings.
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_lever_spark.catalog import load_table
+from spark_lever_spark.functions.exact import DEC38
 from spark_lever_spark.registry import register
 
 DECODED_SCHEMA = T.StructType(
@@ -109,7 +113,6 @@ SELECT doc_id,
 FROM documents
 ORDER BY doc_id
 """,
-    category="llm_multimodal",
 )
 def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload → mapInPandas (Arrow-batched) decode stub →
@@ -134,7 +137,6 @@ FROM documents
 GROUP BY source
 ORDER BY source
 """,
-    category="llm_multimodal",
 )
 def multimodal_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-only aggregation over the media struct — the planner
@@ -169,7 +171,6 @@ FROM documents
 WHERE doc_id < 100
 ORDER BY doc_id, frame_idx
 """,
-    category="llm_multimodal",
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling: one row per selected frame (stride 4) from each
@@ -205,7 +206,6 @@ SELECT doc_id, width, height,
        CAST(FLOOR(224.0 * height / GREATEST(width, height)) AS INT) AS out_h
 FROM d ORDER BY doc_id
 """,
-    category="llm_multimodal",
 )
 def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize-to-fit-224 planning: target dimensions computed JVM-side
@@ -293,7 +293,6 @@ SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
        pixel_sum, CAST(w * h AS INT) AS n_pixels
 FROM px ORDER BY doc_id
 """,
-    category="llm_multimodal",
 )
 def multimodal_pgm_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode end-to-end (upgrade over the injectable stub
@@ -419,7 +418,6 @@ SELECT doc_id, CAST(8000 AS INT) AS sample_rate, CAST(ns AS INT) AS n_samples,
        sample_sum, peak_amplitude
 FROM sm ORDER BY doc_id
 """,
-    category="llm_multimodal",
 )
 def multimodal_wav_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode end-to-end (the audio sibling of
@@ -565,7 +563,6 @@ SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
        r_sum, g_sum, b_sum, top_row_r_sum
 FROM px ORDER BY doc_id
 """,
-    category="llm_multimodal",
 )
 def multimodal_bmp_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second REAL image format next to NetPBM: 24-bit uncompressed
@@ -676,7 +673,6 @@ SELECT doc_id, CAST(8000 AS INT) AS sample_rate, CAST(cnt AS INT) AS n_samples,
        sample_sum, peak
 FROM s ORDER BY doc_id
 """,
-    category="llm_multimodal",
 )
 def multimodal_au_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second REAL audio format next to RIFF/WAVE: Sun/NeXT .au, whose
@@ -788,7 +784,6 @@ SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
        r_sum, g_sum, b_sum, CAST(w * h AS INT) AS n_pixels
 FROM px ORDER BY doc_id
 """,
-    category="llm_multimodal",
 )
 def multimodal_ppm_rgb_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL COLOR image decode (the 3-channel upgrade over
@@ -902,7 +897,6 @@ SELECT n.doc_id, CAST(n.ns AS INT) AS n_samples,
 FROM n LEFT JOIN agg a ON a.doc_id = n.doc_id
 ORDER BY n.doc_id
 """,
-    category="llm_multimodal",
 )
 def audio_silence_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Silence-run detection over REAL decoded PCM (the curation
@@ -1003,7 +997,6 @@ SELECT doc_id, CAST(pw AS INT) AS pool_w, CAST(ph AS INT) AS pool_h,
        CAST(SUM(pv) AS BIGINT) AS pooled_sum
 FROM pooled GROUP BY doc_id, pw, ph ORDER BY doc_id
 """,
-    category="llm_multimodal",
 )
 def image_mean_pool_2x(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image RESIZE (2x2 mean pooling, odd edges cropped) over
@@ -1091,7 +1084,6 @@ SELECT doc_id, CAST(bin AS BIGINT) AS bin,
        CAST(count(*) AS BIGINT) AS n_pixels
 FROM px GROUP BY doc_id, bin ORDER BY doc_id, bin
 """,
-    category="llm_multimodal",
 )
 def multimodal_pgm_histogram(
     spark: SparkSession, sf_dir: str
@@ -1203,7 +1195,6 @@ SELECT sq.doc_id, CAST(sq.ns AS BIGINT) AS n_samples, sq.sum_sq,
 FROM sq JOIN zc ON zc.doc_id = sq.doc_id
 ORDER BY sq.doc_id
 """,
-    category="llm_multimodal",
 )
 def multimodal_wav_rms_energy(
     spark: SparkSession, sf_dir: str
@@ -1261,4 +1252,620 @@ def multimodal_wav_rms_energy(
         .cast("long")
         .alias("rms_milli"),
         "zero_crossings",
+    ).orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# Multimodal: Sobel gradient energy over decoded PGM rasters
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "multimodal_pgm_sobel_energy",
+    oracle="""
+WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200),
+dims AS (
+  SELECT doc_id, doc_id % 16 + 4 AS w, doc_id % 12 + 4 AS h FROM d
+),
+inter AS (
+  SELECT doc_id, w, h,
+         CAST(t.i % (w - 2) + 1 AS BIGINT) AS px,
+         CAST(t.i // (w - 2) + 1 AS BIGINT) AS py
+  FROM dims, LATERAL unnest(range((w - 2) * (h - 2))) AS t(i)
+),
+g AS (
+  SELECT doc_id, w, h,
+         ((doc_id * 31 + ((py - 1) * w + px + 1) * 7) % 256
+          + 2 * ((doc_id * 31 + (py * w + px + 1) * 7) % 256)
+          + (doc_id * 31 + ((py + 1) * w + px + 1) * 7) % 256)
+         - ((doc_id * 31 + ((py - 1) * w + px - 1) * 7) % 256
+            + 2 * ((doc_id * 31 + (py * w + px - 1) * 7) % 256)
+            + (doc_id * 31 + ((py + 1) * w + px - 1) * 7) % 256)
+             AS gx,
+         ((doc_id * 31 + ((py + 1) * w + px - 1) * 7) % 256
+          + 2 * ((doc_id * 31 + ((py + 1) * w + px) * 7) % 256)
+          + (doc_id * 31 + ((py + 1) * w + px + 1) * 7) % 256)
+         - ((doc_id * 31 + ((py - 1) * w + px - 1) * 7) % 256
+            + 2 * ((doc_id * 31 + ((py - 1) * w + px) * 7) % 256)
+            + (doc_id * 31 + ((py - 1) * w + px + 1) * 7) % 256)
+             AS gy
+  FROM inter
+)
+SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+       CAST((w - 2) * (h - 2) AS BIGINT) AS n_interior,
+       CAST(SUM(gx * gx + gy * gy) AS BIGINT) AS sobel_energy
+FROM g GROUP BY doc_id, w, h ORDER BY doc_id
+""",
+)
+def multimodal_pgm_sobel_energy(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """REAL IMAGE-GRADIENT compute over binary image payloads: Sobel
+    edge energy Σ(Gx² + Gy²) over every interior pixel — the
+    standard blur/quality screen a production image-curation
+    pipeline runs after decode (blurry → low gradient energy). The
+    pipeline is genuinely end-to-end binary: deterministic NetPBM P5
+    payloads (multimodal_pgm_real_decode's generator) are decoded —
+    magic check, header parse, numpy raster — and convolved with the
+    3×3 Sobel kernels via numpy slicing inside one Arrow-batched
+    mapInPandas stage (the slot a PIL/OpenCV kernel would occupy; a
+    100 TB corpus maps this per-partition with zero shuffle). The
+    oracle predicts the exact integer energy analytically from the
+    raster formula (doc·31 + i·7) mod 256, so a decoder that misreads
+    the header, raster order, or kernel CANNOT hash-match. All
+    integers; no floats anywhere."""
+    import numpy as np  # noqa: F401 (imported for the worker closure)
+
+    from spark_lever_spark.llm.multimodal import encode_pgm
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id")
+    )
+
+    def encode_run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [encode_pgm(int(x)) for x in pdf["doc_id"]],
+                }
+            )
+
+    with_media = docs.mapInPandas(
+        encode_run, "doc_id long, payload binary"
+    )
+
+    def sobel_run(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            ids, ws, hs, ni, en = [], [], [], [], []
+            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
+                b = bytes(buf)
+                if not b.startswith(b"P5\n"):
+                    raise ValueError("not a binary PGM (P5) stream")
+                hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
+                dims = b[3 : b.index(b"\n", 3)].split()
+                w, h = int(dims[0]), int(dims[1])
+                img = (
+                    np.frombuffer(b, dtype=np.uint8, offset=hdr_end + 1)
+                    .astype(np.int64)
+                    .reshape(h, w)
+                )
+                gx = (
+                    (img[:-2, 2:] + 2 * img[1:-1, 2:] + img[2:, 2:])
+                    - (img[:-2, :-2] + 2 * img[1:-1, :-2] + img[2:, :-2])
+                )
+                gy = (
+                    (img[2:, :-2] + 2 * img[2:, 1:-1] + img[2:, 2:])
+                    - (img[:-2, :-2] + 2 * img[:-2, 1:-1] + img[:-2, 2:])
+                )
+                ids.append(int(doc_id))
+                ws.append(w)
+                hs.append(h)
+                ni.append((w - 2) * (h - 2))
+                en.append(int((gx * gx + gy * gy).sum()))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "width": pd.Series(ws, dtype="int32"),
+                    "height": pd.Series(hs, dtype="int32"),
+                    "n_interior": pd.Series(ni, dtype="int64"),
+                    "sobel_energy": pd.Series(en, dtype="int64"),
+                }
+            )
+
+    out = with_media.mapInPandas(
+        sobel_run,
+        "doc_id long, width int, height int,"
+        " n_interior long, sobel_energy long",
+    )
+    return out.orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# Multimodal feature extraction + embedding drift
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "multimodal_pgm_centroid_moments",
+    oracle="""
+WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 120),
+dims AS (
+  SELECT doc_id, doc_id % 16 + 4 AS w, doc_id % 12 + 4 AS h FROM d
+),
+px AS (
+  SELECT doc_id, w, h,
+         t.i % w AS xx, t.i // w AS yy,
+         (doc_id * 31 + t.i * 7) % 256 AS p
+  FROM dims, LATERAL unnest(range(w * h)) AS t(i)
+),
+m AS (
+  SELECT doc_id, CAST(max(w) AS INT) AS width,
+         CAST(max(h) AS INT) AS height,
+         CAST(SUM(p) AS BIGINT) AS m00,
+         CAST(SUM(xx * p) AS BIGINT) AS m10,
+         CAST(SUM(yy * p) AS BIGINT) AS m01
+  FROM px GROUP BY doc_id
+)
+SELECT doc_id, width, height, m00, m10, m01,
+       CASE WHEN m00 > 0
+            THEN CAST(m10 * 1000 // m00 AS BIGINT)
+       END AS cx_milli,
+       CASE WHEN m00 > 0
+            THEN CAST(m01 * 1000 // m00 AS BIGINT)
+       END AS cy_milli
+FROM m ORDER BY doc_id
+""",
+)
+def multimodal_pgm_centroid_moments(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """RAW IMAGE MOMENTS + INTENSITY CENTROID over REAL decoded PGM
+    rasters — the M00/M10/M01 moment stage every blob-tracking /
+    alignment / crop-heuristic pipeline runs right after decode (and
+    the precursor to Hu invariants): deterministic P5 binaries
+    materialize as the payload column (same generator as
+    multimodal_pgm_histogram / _sobel_energy), a genuine numpy
+    parser re-reads header + raster and accumulates the exact int64
+    moment sums; the centroid publishes as two non-negative milli
+    floor-divisions. The analytic oracle replays the pixel formula
+    ((id·31 + i·7) mod 256 at x = i mod w, y = i div w), so a
+    row-major/column-major mixup in the decoder cannot hash-match.
+    Scale: decode + moments are one row-partitioned Arrow pass."""
+    from typing import Iterator
+
+    import pandas as pd
+
+    from spark_lever_spark.llm.multimodal import encode_pgm
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 120)
+        .select("doc_id")
+    )
+
+    def encode_run(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [
+                        encode_pgm(int(d)) for d in pdf["doc_id"]
+                    ],
+                }
+            )
+
+    with_media = docs.mapInPandas(
+        encode_run, "doc_id long, payload binary"
+    )
+
+    def moments_run(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        for pdf in batches:
+            ids, ws, hs, m00s, m10s, m01s = [], [], [], [], [], []
+            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
+                b = bytes(buf)
+                if not b.startswith(b"P5\n"):
+                    raise ValueError("not a binary PGM (P5) stream")
+                hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
+                dims = b[3 : b.index(b"\n", 3)].split()
+                w, h = int(dims[0]), int(dims[1])
+                img = (
+                    np.frombuffer(
+                        b, dtype=np.uint8, offset=hdr_end + 1
+                    )
+                    .astype(np.int64)
+                    .reshape(h, w)
+                )
+                xs = np.arange(w, dtype=np.int64)
+                ys = np.arange(h, dtype=np.int64)
+                ids.append(int(doc_id))
+                ws.append(w)
+                hs.append(h)
+                m00s.append(int(img.sum()))
+                m10s.append(int((img * xs[None, :]).sum()))
+                m01s.append(int((img * ys[:, None]).sum()))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "width": pd.Series(ws, dtype="int32"),
+                    "height": pd.Series(hs, dtype="int32"),
+                    "m00": pd.Series(m00s, dtype="int64"),
+                    "m10": pd.Series(m10s, dtype="int64"),
+                    "m01": pd.Series(m01s, dtype="int64"),
+                }
+            )
+
+    out = with_media.mapInPandas(
+        moments_run,
+        "doc_id long, width int, height int,"
+        " m00 long, m10 long, m01 long",
+    )
+    return out.selectExpr(
+        "doc_id",
+        "width",
+        "height",
+        "m00",
+        "m10",
+        "m01",
+        "CASE WHEN m00 > 0 THEN CAST(m10 * 1000 div m00 AS BIGINT)"
+        " END AS cx_milli",
+        "CASE WHEN m00 > 0 THEN CAST(m01 * 1000 div m00 AS BIGINT)"
+        " END AS cy_milli",
+    ).orderBy("doc_id")
+
+
+@register(
+    "multimodal_wav_diff_energy",
+    oracle="""
+WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200),
+dims AS (
+  SELECT doc_id, doc_id % 200 + 50 AS n FROM d
+),
+s AS (
+  SELECT doc_id, n, t.i AS i,
+         (doc_id * 131 + t.i * 17) % 2048 - 1024 AS v
+  FROM dims, LATERAL unnest(range(n)) AS t(i)
+),
+led AS (
+  SELECT doc_id, n, v,
+         lead(v) OVER (PARTITION BY doc_id ORDER BY i) AS v1
+  FROM s
+),
+m AS (
+  SELECT doc_id, CAST(max(n) AS BIGINT) AS n_samples,
+         CAST(SUM(v * v) AS BIGINT) AS energy,
+         CAST(SUM(CASE WHEN v1 IS NULL THEN 0
+                       ELSE (v1 - v) * (v1 - v) END) AS BIGINT)
+             AS diff_energy
+  FROM led GROUP BY doc_id
+)
+SELECT doc_id, n_samples, energy, diff_energy,
+       CASE WHEN energy > 0
+            THEN CAST(CAST(diff_energy AS HUGEINT) * 1000000
+                      // (4 * CAST(energy AS HUGEINT)) AS BIGINT)
+       END AS hf_ratio_ppm
+FROM m ORDER BY doc_id
+""",
+)
+def multimodal_wav_diff_energy(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """FIRST-DIFFERENCE ENERGY RATIO over REAL decoded audio — the
+    log-free high-frequency proxy (Σ(sᵢ₊₁−sᵢ)²/4Σsᵢ² is the
+    normalized difference energy, monotone in the spectral centroid
+    for band-limited signals — the music/speech/hiss triage feature
+    computed when an FFT is not affordable or, here, not
+    hash-exact). Same deterministic RIFF/WAVE payloads and numpy
+    parser as multimodal_wav_rms_energy; both energies accumulate
+    as exact int64 (|s| ≤ 1024 ⇒ per-clip sums ≪ 2⁶³), the ratio is
+    one non-negative HUGEINT ⟷ decimal(38,0) ppm floor-division,
+    Cauchy-Schwarz-bounded by 10⁶. The analytic oracle replays the
+    sample formula through a lead window, so off-by-one framing in
+    the parser cannot hash-match. Scale: one row-partitioned Arrow
+    pass."""
+    from typing import Iterator
+
+    import pandas as pd
+
+    from spark_lever_spark.llm.multimodal import encode_wav
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id")
+    )
+
+    def encode_run(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [
+                        encode_wav(int(d)) for d in pdf["doc_id"]
+                    ],
+                }
+            )
+
+    with_media = docs.mapInPandas(
+        encode_run, "doc_id long, payload binary"
+    )
+
+    def diff_run(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        import struct
+
+        import numpy as np
+
+        for pdf in batches:
+            ids, ns, es, ds = [], [], [], []
+            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
+                b = bytes(buf)
+                if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+                    raise ValueError("not a RIFF/WAVE stream")
+                (nbytes,) = struct.unpack("<I", b[40:44])
+                samples = np.frombuffer(
+                    b, dtype="<i2", offset=44, count=nbytes // 2
+                ).astype(np.int64)
+                diff = np.diff(samples)
+                ids.append(int(doc_id))
+                ns.append(len(samples))
+                es.append(int((samples * samples).sum()))
+                ds.append(int((diff * diff).sum()))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "n_samples": pd.Series(ns, dtype="int64"),
+                    "energy": pd.Series(es, dtype="int64"),
+                    "diff_energy": pd.Series(ds, dtype="int64"),
+                }
+            )
+
+    out = with_media.mapInPandas(
+        diff_run,
+        "doc_id long, n_samples long, energy long, diff_energy long",
+    )
+    return out.selectExpr(
+        "doc_id",
+        "n_samples",
+        "energy",
+        "diff_energy",
+        "CASE WHEN energy > 0 THEN"
+        f" CAST(CAST(diff_energy AS {DEC38}) * 1000000"
+        f" div (4 * CAST(energy AS {DEC38})) AS BIGINT)"
+        " END AS hf_ratio_ppm",
+    ).orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# Multimodal: color quantization + zero-crossing audio features
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "multimodal_ppm_color_quantize",
+    oracle="""
+WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 150),
+dims AS (
+  SELECT doc_id, doc_id % 12 + 4 AS w, doc_id % 8 + 4 AS h FROM d
+),
+px AS (
+  SELECT doc_id, w, h,
+         (((doc_id * 37 + t.i * 11) % 256) // 64) * 16
+         + (((doc_id * 37 + t.i * 11 + 71) % 256) // 64) * 4
+         + ((doc_id * 37 + t.i * 11 + 142) % 256) // 64 AS bin
+  FROM dims, LATERAL unnest(range(w * h)) AS t(i)
+),
+bc AS (
+  SELECT doc_id, w, h, bin, CAST(count(*) AS BIGINT) AS c
+  FROM px GROUP BY doc_id, w, h, bin
+),
+ranked AS (
+  SELECT doc_id, w, h, bin, c,
+         row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, bin)
+             AS rn,
+         count(*) OVER (PARTITION BY doc_id) AS nb
+  FROM bc
+)
+SELECT doc_id, CAST(w * h AS INT) AS n_pixels,
+       CAST(bin AS INT) AS dominant_bin, c AS dominant_count,
+       CAST(nb AS INT) AS n_bins
+FROM ranked WHERE rn = 1 ORDER BY doc_id
+""",
+)
+def multimodal_ppm_color_quantize(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """COLOR-SPACE QUANTIZATION over real decoded P6 images: every
+    pixel maps to a 4x4x4 RGB cube bin (r//64, g//64, b//64 -> 64
+    bins), per image the DOMINANT bin (max count, tie -> lowest bin
+    id) and the occupied-bin count — the palette-histogram feature a
+    multimodal curation pipeline uses for near-duplicate screening and
+    low-information-image filtering. The decode is the genuine P6
+    parser (magic check, header parse, numpy interleaved-RGB read) in
+    the Arrow-batched mapInPandas codec slot (see
+    multimodal_ppm_rgb_decode, llm/multimodal.py); the oracle replays
+    bins analytically from the deterministic raster formula. Scale:
+    payloads never leave the executor; output is 5 small columns per
+    image."""
+    import pandas as pd
+
+    from spark_lever_spark.llm.multimodal import encode_ppm
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 150)
+        .select("doc_id")
+    )
+
+    def encode_run(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [encode_ppm(int(d)) for d in pdf["doc_id"]],
+                }
+            )
+
+    with_media = docs.mapInPandas(encode_run, "doc_id long, payload binary")
+
+    def quantize_run(batches):
+        import numpy as np
+
+        for pdf in batches:
+            ids, npx, dbin, dcnt, nbins = [], [], [], [], []
+            for did, buf in zip(pdf["doc_id"], pdf["payload"]):
+                b = bytes(buf)
+                if not b.startswith(b"P6\n"):
+                    raise ValueError("not a binary PPM (P6) stream")
+                hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
+                dims_line = b[3 : b.index(b"\n", 3)].split()
+                w, h = int(dims_line[0]), int(dims_line[1])
+                raster = np.frombuffer(b, dtype=np.uint8, offset=hdr_end + 1)
+                if raster.size != w * h * 3:
+                    raise ValueError("raster size mismatch")
+                rgb = raster.reshape(-1, 3).astype(np.int64)
+                bins = (
+                    (rgb[:, 0] // 64) * 16
+                    + (rgb[:, 1] // 64) * 4
+                    + rgb[:, 2] // 64
+                )
+                counts = np.bincount(bins, minlength=64)
+                dom = int(np.argmax(counts))  # first max = lowest bin id
+                ids.append(int(did))
+                npx.append(w * h)
+                dbin.append(dom)
+                dcnt.append(int(counts[dom]))
+                nbins.append(int(np.count_nonzero(counts)))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "n_pixels": pd.Series(npx, dtype="int32"),
+                    "dominant_bin": pd.Series(dbin, dtype="int32"),
+                    "dominant_count": pd.Series(dcnt, dtype="int64"),
+                    "n_bins": pd.Series(nbins, dtype="int32"),
+                }
+            )
+
+    return with_media.mapInPandas(
+        quantize_run,
+        "doc_id long, n_pixels int, dominant_bin int, dominant_count long,"
+        " n_bins int",
+    ).orderBy("doc_id")
+
+
+@register(
+    "multimodal_wav_zero_crossings",
+    oracle="""
+WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200),
+n AS (SELECT doc_id, doc_id % 200 + 50 AS ns FROM d),
+s AS (
+  SELECT doc_id, ns, t.i AS i,
+         (doc_id * 131 + t.i * 17) % 2048 - 1024 AS v
+  FROM n, LATERAL unnest(range(ns)) AS t(i)
+),
+lagd AS (
+  SELECT doc_id, ns, i, v,
+         lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv
+  FROM s
+)
+SELECT doc_id, CAST(ns AS INT) AS n_samples,
+       CAST(SUM(CASE WHEN pv IS NOT NULL AND v * pv < 0
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_crossings,
+       CAST(SUM(CASE WHEN v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zeros,
+       CAST(MIN(CASE WHEN pv IS NOT NULL AND v * pv < 0 THEN i END)
+            AS BIGINT) AS first_crossing_idx
+FROM lagd GROUP BY doc_id, ns ORDER BY doc_id
+""",
+)
+def multimodal_wav_zero_crossings(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ZERO-CROSSING-RATE features over real decoded PCM: per clip the
+    count of strict sign flips (s_i * s_{i-1} < 0), exact-zero sample
+    count, and the first crossing index — the cheapest
+    voiced/unvoiced + spectral-centroid proxy an audio curation
+    pipeline computes before any FFT. Decode is the genuine RIFF/WAVE
+    parser (magic + fmt validation, numpy int16 read — the
+    decode_wav_batch contract, llm/multimodal.py); the feature math
+    runs vectorized in the same Arrow batch. The oracle replays the
+    deterministic sample formula with a lag window. Distinct from
+    audio_silence_runs (amplitude-threshold VAD runs) and
+    multimodal_wav_diff_energy (first-difference energy)."""
+    import pandas as pd
+
+    from spark_lever_spark.llm.multimodal import encode_wav
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id")
+    )
+
+    def encode_run(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [encode_wav(int(d)) for d in pdf["doc_id"]],
+                }
+            )
+
+    with_media = docs.mapInPandas(encode_run, "doc_id long, payload binary")
+
+    def zcr_run(batches):
+        import struct
+
+        import numpy as np
+
+        for pdf in batches:
+            ids, nsamp, ncross, nzero, firsts = [], [], [], [], []
+            for did, buf in zip(pdf["doc_id"], pdf["payload"]):
+                b = bytes(buf)
+                if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+                    raise ValueError("not a RIFF/WAVE stream")
+                (data_len,) = struct.unpack("<I", b[40:44])
+                s = np.frombuffer(
+                    b, dtype="<i2", offset=44, count=data_len // 2
+                ).astype(np.int64)
+                prod = s[1:] * s[:-1]
+                cross = prod < 0
+                ids.append(int(did))
+                nsamp.append(int(s.size))
+                ncross.append(int(cross.sum()))
+                nzero.append(int((s == 0).sum()))
+                firsts.append(
+                    int(np.argmax(cross)) + 1 if cross.any() else None
+                )
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "n_samples": pd.Series(nsamp, dtype="int32"),
+                    "n_crossings": pd.Series(ncross, dtype="int64"),
+                    "n_zeros": pd.Series(nzero, dtype="int64"),
+                    "first_crossing_idx": pd.Series(
+                        firsts, dtype="Int64"
+                    ),
+                }
+            )
+
+    return with_media.mapInPandas(
+        zcr_run,
+        "doc_id long, n_samples int, n_crossings long, n_zeros long,"
+        " first_crossing_idx long",
     ).orderBy("doc_id")

@@ -58,7 +58,6 @@ SELECT doc_id, chunk_idx,
 FROM chunks
 ORDER BY doc_id, chunk_idx
 """,
-    category="llm_text",
 )
 def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window chunking: 64-token windows at stride 48 (16-token
@@ -176,7 +175,6 @@ SELECT COUNT(*) AS n_docs,
        TRUE AS fills_consistent
 FROM documents
 """,
-    category="llm_text",
 )
 def pack_documents_2048(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack documents into 2048-token bins by whitespace token count,
@@ -257,7 +255,6 @@ SELECT source, chunk_idx,
 FROM hit GROUP BY source, chunk_idx
 ORDER BY source, chunk_idx
 """,
-    category="llm_text",
 )
 def pack_concat_2048(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style CONCAT packing (the complement of the first-fit

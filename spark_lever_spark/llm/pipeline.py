@@ -73,7 +73,6 @@ FROM kept
 GROUP BY lang, source
 ORDER BY lang, source
 """,
-    category="llm_pipeline",
 )
 def pipeline_quality_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """quality gate -> dedup-keep-first -> per-(lang, source) corpus
@@ -176,7 +175,6 @@ SELECT source, chunk_idx,
 FROM hit GROUP BY source, chunk_idx
 ORDER BY source, chunk_idx
 """,
-    category="llm_pipeline",
 )
 def pipeline_pii_paragraph_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-6 curation stages COMPOSED end-to-end: PII redaction

@@ -72,7 +72,6 @@ FROM occ o JOIN stats s USING (bucket), tot
 GROUP BY o.doc_id
 ORDER BY score_num DESC, o.doc_id
 """,
-    category="llm_curation",
 )
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance score per document against a target
@@ -163,7 +162,6 @@ rk AS (
 SELECT anchor_id, anchor_label, negative_id, negative_label, cos_sim
 FROM rk WHERE rn = 1 ORDER BY anchor_id
 """,
-    category="llm_similarity",
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor
@@ -244,7 +242,6 @@ SELECT t.doc_id, t.n_paras,
 FROM totals t LEFT JOIN kept k ON k.doc_id = t.doc_id
 ORDER BY t.doc_id
 """,
-    category="llm_dedup",
 )
 def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style boilerplate removal: any 16-token paragraph appearing
@@ -420,7 +417,6 @@ s{r} AS MATERIALIZED (
 @register(
     "bpe_learn_merges",
     oracle=_bpe_oracle(),
-    category="llm_text",
 )
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE vocabulary learning (Sennrich et al. 2016) —
@@ -528,7 +524,6 @@ SELECT d.doc_id, d.lang, d.source,
 FROM documents d JOIN hits h ON h.doc_id = d.doc_id
 ORDER BY d.doc_id
 """,
-    category="llm_text",
 )
 def text_boolean_and_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive boolean retrieval over an inverted index: documents
@@ -627,7 +622,6 @@ GROUP BY d.doc_id ORDER BY d.doc_id
 @register(
     "bpe_apply_encode",
     oracle=_bpe_apply_oracle(),
-    category="llm_text",
 )
 def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKENIZER APPLICATION — the companion to bpe_learn_merges'

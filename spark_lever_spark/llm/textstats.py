@@ -4,14 +4,27 @@ ID, document fingerprinting.
 All built-in-function pipelines (split/regexp/higher-order array ops)
 — JVM-side, whole-stage-codegen friendly, no UDFs. Each is the Spark
 expression of a standard LLM-corpus preprocessing stage.
+
+- corpus-shape measures: dyadic Zipf and Heaps slopes, token Gini,
+  Gries' DP dispersion, Good-Turing unseen mass;
+- source comparison and ranking: Hellinger affinity, chi-square
+  homogeneity, BM25 top-k with a rational RSJ idf.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from spark_lever_spark.catalog import load_table, spread_scan
+from spark_lever_spark.functions.exact import (
+    DEC38,
+    duck_sql,
+    spark_sql,
+    sql_ss_div,
+)
+from spark_lever_spark.llm.curation import _SH3_CTE, _shingles3
 from spark_lever_spark.registry import register
 
 # tiny built-in stopword lists for the n-gram/stopword language ID
@@ -58,7 +71,6 @@ SELECT doc_id,
 FROM documents
 ORDER BY doc_id
 """,
-    category="llm_text",
 )
 def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + regex (BPE-proxy) tokens."""
@@ -96,7 +108,6 @@ SELECT doc_id,
 FROM t
 ORDER BY doc_id
 """,
-    category="llm_text",
 )
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length, mean token length, stopword ratio, and a
@@ -144,7 +155,6 @@ SELECT doc_id, lang AS lang_actual,
 FROM s
 ORDER BY doc_id
 """,
-    category="llm_text",
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-overlap language ID heuristic with a deterministic
@@ -204,7 +214,6 @@ SELECT doc_id, min(shingle_hash) AS fingerprint,
        CAST(count(*) AS INT) AS n_shingles
 FROM sh GROUP BY doc_id ORDER BY doc_id
 """,
-    category="llm_text",
 )
 def text_fingerprint_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: min-md5 over 3-token shingles (winnowing-
@@ -287,7 +296,6 @@ SELECT w.doc_id, w.n_words, w.n_distinct_words,
 FROM wstats w JOIN bstats b USING (doc_id)
 ORDER BY w.doc_id
 """,
-    category="llm_text",
 )
 def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals per document: most-common
@@ -363,7 +371,6 @@ SELECT doc_id, CAST(rk AS INT) AS rk, term, tf, df, score
 FROM ranked WHERE rk <= 3
 ORDER BY doc_id, rk
 """,
-    category="llm_text",
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document distinctive terms by TF-IDF-style weighting,
@@ -434,7 +441,6 @@ SELECT g.source, max(g.n_tokens) AS n_tokens,
 FROM grid g CROSS JOIN tt
 GROUP BY g.source ORDER BY g.source
 """,
-    category="llm_text",
 )
 def token_drift_tv_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution drift per source: total-variation distance between
@@ -542,7 +548,6 @@ SELECT doc_id,
             AND 5 * n_alpha >= 4 * n_tok AS BOOLEAN) AS passes_gopher
 FROM m ORDER BY doc_id
 """,
-    category="llm_text",
 )
 def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality rule battery (Rae et al. '21 §A1.1, the
@@ -622,7 +627,6 @@ JOIN uni u1 ON u1.w = b.w1
 JOIN uni u2 ON u2.w = b.w2, tot t
 ORDER BY pmi_ratio DESC, w1, w2 LIMIT 20
 """,
-    category="llm_text",
 )
 def collocation_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining: top-20 adjacent-token bigrams by PMI over
@@ -701,7 +705,6 @@ SELECT source,
              / count(*) * 1000000) / 1000000 AS hapax_ratio
 FROM wc GROUP BY source ORDER BY source
 """,
-    category="llm_text",
 )
 def vocab_growth_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source vocabulary statistics: total tokens, distinct types,
@@ -768,7 +771,6 @@ FROM toks, unnest(range(1, len(ts))) t(i)
 WHERE ts[i] = 'merge' AND ts[i + 1] = 'sort'
 GROUP BY doc_id ORDER BY doc_id
 """,
-    category="llm_text",
 )
 def text_phrase_search_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phrase retrieval ("merge sort") via a POSITIONAL postings
@@ -803,7 +805,7 @@ def text_phrase_search_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-10 addition: bigram next-token prediction table
+# Bigram next-token prediction table
 # ---------------------------------------------------------------------------
 
 
@@ -836,7 +838,6 @@ SELECT head, n_head, next_tok, n_bigram, CAST(rk AS INT) AS rk,
 FROM r WHERE rk <= 3
 ORDER BY head, rk
 """,
-    category="llm_text",
 )
 def bigram_next_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Next-token prediction table from a bigram language model: for
@@ -929,7 +930,6 @@ FROM per_doc
 ORDER BY mean_rank, doc_id
 LIMIT 25
 """,
-    category="llm_text",
 )
 def doc_mean_token_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rarity-based document quality scoring WITHOUT a language model:
@@ -1010,7 +1010,6 @@ JOIN ranked r
   ON r.lang = t.lang AND r.ctx = t.ctx AND r.nxt = t.nxt
 GROUP BY t.doc_id ORDER BY t.doc_id
 """,
-    category="llm_text",
 )
 def trigram_rank_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-model fluency scoring WITHOUT transcendentals: train a
@@ -1108,7 +1107,6 @@ SELECT c.lang_actual, c.lang_pred, c.n_docs,
 FROM cells c JOIN per_actual p ON p.lang_actual = c.lang_actual
 ORDER BY c.lang_actual, c.lang_pred
 """,
-    category="llm_text",
 )
 def langid_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MODEL-EVALUATION confusion matrix for the stopword language-ID
@@ -1145,7 +1143,7 @@ def langid_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-11 additions: lexical-diversity statistics and the hashing trick
+# Lexical-diversity statistics and the hashing trick
 # ---------------------------------------------------------------------------
 
 
@@ -1173,7 +1171,6 @@ SELECT source, n_tokens, n_types, n_hapax,
            // (n_tokens * n_tokens) AS yule_k_e6
 FROM agg ORDER BY source
 """,
-    category="llm_textstats",
 )
 def yule_k_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """YULE'S characteristic K per corpus source — the classic
@@ -1231,7 +1228,6 @@ SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
        CAST(SUM(sgn) AS BIGINT) AS signed_count
 FROM h GROUP BY 1, 2 ORDER BY doc_id, bucket
 """,
-    category="llm_textstats",
 )
 def feature_hash_bow_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HASHING TRICK (Weinberger et al. 2009) — fixed-width
@@ -1306,7 +1302,6 @@ SELECT source, d AS vocab_size, n AS total_tokens, f1, f2,
              * 1000000) AS simpson_repeat_ppm
 FROM m ORDER BY source
 """,
-    category="llm_textstats",
 )
 def vocab_coverage_estimators_by_source(
     spark: SparkSession, sf_dir: str
@@ -1390,7 +1385,6 @@ SELECT CAST(row_number() OVER (ORDER BY fano DESC, w) AS BIGINT)
 FROM scored
 ORDER BY fano DESC, w LIMIT 25
 """,
-    category="llm_textstats",
 )
 def token_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKEN BURSTINESS via the FANO FACTOR — var/mean of a token's
@@ -1480,7 +1474,6 @@ SELECT source, n_docs, n_chars_alnum, n_words, n_sentences,
        1000 * n_words // n_sentences AS words_per_sentence_milli
 FROM agg ORDER BY source
 """,
-    category="llm_text",
 )
 def readability_ari_by_source(
     spark: SparkSession, sf_dir: str
@@ -1578,7 +1571,6 @@ SELECT source, n_docs, n_words, n_sentences, n_vowel_runs,
              * 1000) / 1000 AS flesch_milli
 FROM agg ORDER BY source
 """,
-    category="llm_text",
 )
 def flesch_vowel_proxy_by_source(
     spark: SparkSession, sf_dir: str
@@ -1687,7 +1679,6 @@ SELECT b.n AS n_docs, b.s AS sum_diff,
            AS n_outside_loa
 FROM b
 """,
-    category="llm_text",
 )
 def bland_altman_token_counters(
     spark: SparkSession, sf_dir: str
@@ -1814,7 +1805,6 @@ SELECT phrase, CAST(max(n_words) AS BIGINT) AS n_words,
 FROM scored GROUP BY phrase
 ORDER BY score_micro DESC, phrase LIMIT 20
 """,
-    category="llm_text",
 )
 def rake_keyword_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010 — Rapid Automatic
@@ -1898,4 +1888,869 @@ def rake_keyword_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("score_micro"), "phrase")
         .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Text: dyadic Zipf slope, Hellinger drift, BM25 (rational RSJ idf)
+# ---------------------------------------------------------------------------
+
+_WC_CTE = """
+wc AS (
+  SELECT source, w, CAST(count(*) AS BIGINT) AS c
+  FROM (SELECT source, unnest(list_filter(
+            string_split_regex(text, '\\s+'), x -> x <> '')) AS w
+        FROM documents)
+  GROUP BY source, w
+)
+"""
+
+
+def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from spark_lever_spark.llm.textstats import tokens
+
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select(
+            "source", F.explode(tokens(F.col("text"))).alias("w")
+        )
+        .groupBy("source", "w")
+        .agg(F.count("*").alias("c"))
+    )
+
+
+_ZIPF_SLOPE = sql_ss_div(
+    "nb * sxy - sx * sy", "nb * sxx - sx * sx", 1000
+)
+
+
+@register(
+    "zipf_dyadic_slope_by_source",
+    oracle="""
+WITH
+""" + _WC_CTE + """,
+rk AS (
+  SELECT source, c,
+         row_number() OVER (PARTITION BY source
+                            ORDER BY c DESC, w) AS rnk
+  FROM wc
+),
+pts AS (
+  SELECT source,
+         CAST(length(bin(rnk)) - 1 AS BIGINT) AS b,
+         CAST(SUM(CAST(length(bin(c)) - 1 AS BIGINT)) AS BIGINT) AS ylog,
+         CAST(count(*) AS BIGINT) AS nb_types
+  FROM rk GROUP BY 1, 2
+),
+pt AS (
+  SELECT source, b, CAST(1000 * ylog // nb_types AS BIGINT) AS y
+  FROM pts
+),
+m AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS nb,
+         CAST(SUM(b) AS BIGINT) AS sx,
+         CAST(SUM(b * b) AS BIGINT) AS sxx,
+         CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(b * y) AS BIGINT) AS sxy
+  FROM pt GROUP BY 1
+)
+SELECT source, nb AS n_buckets,
+       CASE WHEN nb * sxx - sx * sx > 0
+            THEN """ + duck_sql(_ZIPF_SLOPE) + """
+       END AS zipf_slope_micro
+FROM m ORDER BY source
+""",
+)
+def zipf_dyadic_slope_by_source(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """DYADIC ZIPF SLOPE per source — the Zipf exponent (slope of
+    log-frequency vs log-rank) estimated ENTIRELY on the dyadic
+    grid so no transcendental ever executes: ranks bucket by
+    floor(log₂ rank) = length(bin(rank))−1 (the sketch_log2 string
+    trick, exact in both engines), each bucket's mean floor(log₂
+    count) lands on the milli grid by one exact division, and the
+    slope is the standard OLS Cramer ratio over the ≤ ~17 bucket
+    points — a SIGN-SPLIT micro floor-division of exact int64
+    moments (slope ≈ −1000 micro ⇔ the classic Zipf −1). The
+    distributional-shape complement to vocab_growth_by_source
+    (which publishes totals, not the power-law exponent). Scale:
+    one (source, token) shuffle, a per-source rank window, then a
+    bounded ≤ 17-bucket rollup."""
+    wc = _word_counts(spark, sf_dir)
+    rk = wc.select(
+        "source",
+        "c",
+        F.row_number()
+        .over(
+            Window.partitionBy("source").orderBy(F.desc("c"), "w")
+        )
+        .alias("rnk"),
+    )
+    pts = rk.groupBy(
+        "source",
+        (F.length(F.bin("rnk")) - 1).cast("long").alias("b"),
+    ).agg(
+        F.sum((F.length(F.bin("c")) - 1).cast("long")).alias("ylog"),
+        F.count("*").alias("nb_types"),
+    )
+    pt = pts.selectExpr(
+        "source", "b", "CAST(1000 * ylog div nb_types AS BIGINT) AS y"
+    )
+    m = pt.groupBy("source").agg(
+        F.count("*").alias("nb"),
+        F.sum("b").alias("sx"),
+        F.sum(F.col("b") * F.col("b")).alias("sxx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("b") * F.col("y")).alias("sxy"),
+    )
+    return m.selectExpr(
+        "source",
+        "nb AS n_buckets",
+        "CASE WHEN nb * sxx - sx * sx > 0 THEN "
+        + spark_sql(_ZIPF_SLOPE)
+        + " END AS zipf_slope_micro",
+    ).orderBy("source")
+
+
+@register(
+    "hellinger_affinity_sources",
+    oracle="""
+WITH
+""" + _WC_CTE + """,
+tot AS (
+  SELECT source, CAST(SUM(c) AS BIGINT) AS n,
+         row_number() OVER (ORDER BY SUM(c) DESC, source) AS rnk
+  FROM wc GROUP BY 1
+),
+pair AS (
+  SELECT max(CASE WHEN rnk = 1 THEN source END) AS sa,
+         max(CASE WHEN rnk = 2 THEN source END) AS sb,
+         CAST(max(CASE WHEN rnk = 1 THEN n END) AS BIGINT) AS na,
+         CAST(max(CASE WHEN rnk = 2 THEN n END) AS BIGINT) AS nb
+  FROM tot WHERE rnk <= 2
+),
+sa_wc AS (
+  SELECT wc.w, wc.c FROM wc, pair WHERE wc.source = pair.sa
+),
+sb_wc AS (
+  SELECT wc.w, wc.c FROM wc, pair WHERE wc.source = pair.sb
+),
+joined AS (
+  SELECT COALESCE(a.c, 0) AS cp, COALESCE(b.c, 0) AS cq
+  FROM sa_wc a FULL OUTER JOIN sb_wc b ON b.w = a.w
+),
+terms AS (
+  SELECT CAST(SUM(CAST(floor(1000000 * sqrt(CAST(cp * cq AS DOUBLE))
+                  / sqrt(CAST(p.na * p.nb AS DOUBLE)))
+              AS BIGINT)) AS BIGINT) AS bc
+  FROM joined, pair p
+)
+SELECT p.sa AS source_a, p.sb AS source_b,
+       CAST(p.na AS BIGINT) AS n_a, CAST(p.nb AS BIGINT) AS n_b,
+       t.bc AS bc_affinity_ppm,
+       1000000 - t.bc AS hellinger_sq_ppm
+FROM terms t, pair p
+""",
+)
+def hellinger_affinity_sources(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """HELLINGER DISTANCE between the token distributions of the two
+    LARGEST sources — the bounded f-divergence drift metric that
+    completes the drift quintet (TV = token_drift_tv_distance,
+    Wasserstein/KS/CvM/AD on values): H² = 1 − Σ√(pᵢqᵢ), with the
+    Bhattacharyya affinity Σ√(pᵢqᵢ) = Σ√(cpᵢ·cqᵢ)/√(N_a·N_b)
+    computed PER-TERM-FLOORED on the ppm grid (the anderson_darling
+    doctrine): each term is one exact int64 product → one double
+    conversion (< 2⁵³ at these SFs, documented) → correctly-rounded
+    IEEE sqrt/division → floor, the same expression text in both
+    engines. Unlike TV (L1 on shares), Hellinger is
+    mass-concentration sensitive — the metric semdedup-style
+    distribution matching actually wants. Scale: one (source,
+    token) shuffle + one full-outer token join of the two largest
+    sources."""
+    wc = _word_counts(spark, sf_dir)
+    tot = wc.groupBy("source").agg(F.sum("c").alias("n"))
+    rk = tot.select(
+        "source",
+        "n",
+        F.row_number()
+        .over(Window.orderBy(F.desc("n"), "source"))
+        .alias("rnk"),
+    ).filter(F.col("rnk") <= 2)
+    pair = rk.agg(
+        F.max(F.when(F.col("rnk") == 1, F.col("source"))).alias("sa"),
+        F.max(F.when(F.col("rnk") == 2, F.col("source"))).alias("sb"),
+        F.max(F.when(F.col("rnk") == 1, F.col("n"))).alias("na"),
+        F.max(F.when(F.col("rnk") == 2, F.col("n"))).alias("nb"),
+    )
+    a = (
+        wc.join(
+            F.broadcast(pair), F.col("source") == F.col("sa"), "inner"
+        )
+        .select(F.col("w").alias("wa"), F.col("c").alias("cp"))
+    )
+    b = (
+        wc.join(
+            F.broadcast(pair.select("sb")),
+            F.col("source") == F.col("sb"),
+            "inner",
+        )
+        .select(F.col("w").alias("wb"), F.col("c").alias("cq"))
+    )
+    joined = a.join(b, F.col("wa") == F.col("wb"), "full_outer").select(
+        F.coalesce(F.col("cp"), F.lit(0)).alias("cp"),
+        F.coalesce(F.col("cq"), F.lit(0)).alias("cq"),
+    )
+    terms = joined.crossJoin(F.broadcast(pair)).agg(
+        F.max("sa").alias("source_a"),
+        F.max("sb").alias("source_b"),
+        F.max("na").alias("n_a"),
+        F.max("nb").alias("n_b"),
+        F.sum(
+            F.expr(
+                "CAST(floor(1000000 * sqrt(CAST(cp * cq AS DOUBLE))"
+                " / sqrt(CAST(na * nb AS DOUBLE))) AS BIGINT)"
+            )
+        ).alias("bc"),
+    )
+    return terms.selectExpr(
+        "source_a",
+        "source_b",
+        "n_a",
+        "n_b",
+        "bc AS bc_affinity_ppm",
+        "1000000 - bc AS hellinger_sq_ppm",
+    )
+
+
+@register(
+    "bm25_rsj_topk",
+    oracle="""
+WITH toks AS (
+  SELECT doc_id, unnest(list_filter(
+             string_split_regex(text, '\\s+'), x -> x <> '')) AS w
+  FROM documents
+),
+dl AS (
+  SELECT doc_id, CAST(count(*) AS BIGINT) AS dlen FROM toks GROUP BY 1
+),
+g AS (
+  SELECT CAST(count(*) AS BIGINT) AS nd,
+         CAST(SUM(dlen) AS BIGINT) AS tt
+  FROM dl
+),
+df AS (
+  SELECT w, CAST(count(DISTINCT doc_id) AS BIGINT) AS dfc
+  FROM toks GROUP BY 1
+),
+qterms AS (
+  SELECT w, dfc FROM (
+    SELECT w, dfc,
+           row_number() OVER (ORDER BY dfc DESC, w) AS rnk
+    FROM df
+  ) WHERE rnk IN (10, 11, 12)
+),
+tf AS (
+  SELECT t.doc_id, t.w, CAST(count(*) AS BIGINT) AS tfc
+  FROM toks t JOIN qterms q ON q.w = t.w
+  GROUP BY 1, 2
+),
+scored AS (
+  SELECT tf.doc_id,
+         CAST(SUM((2 * g.nd - 2 * q.dfc + 1) * 22
+                  * CAST(g.tt AS HUGEINT) * tf.tfc * 1000000
+                  // ((2 * q.dfc + 1)
+                      * (10 * CAST(g.tt AS HUGEINT) * tf.tfc
+                         + 3 * g.tt + 9 * dl.dlen * g.nd)))
+              AS BIGINT) AS score_micro,
+         CAST(count(*) AS BIGINT) AS terms_matched,
+         CAST(max(dl.dlen) AS BIGINT) AS doc_len
+  FROM tf
+  JOIN qterms q ON q.w = tf.w
+  JOIN dl ON dl.doc_id = tf.doc_id, g
+  GROUP BY tf.doc_id
+)
+SELECT doc_id, terms_matched, doc_len, score_micro
+FROM scored ORDER BY score_micro DESC, doc_id LIMIT 20
+""",
+)
+def bm25_rsj_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 RANKED RETRIEVAL (k₁ = 1.2, b = 0.75, rational RSJ idf)
+    over the documents table — the reference-grade lexical ranker
+    tfidf_top_terms stops short of: query = the 3 mid-head terms
+    (document-frequency ranks 10–12, deterministic df-then-token
+    order), idf = the Robertson–Spärck-Jones ODDS form (N−df+½)/
+    (df+½) ≡ (2N−2df+1)/(2df+1) — a pure rational, so the usual log
+    never executes (log is monotone: per-term ordering is preserved
+    within each term; the summed score is the documented
+    rational-idf variant). The whole per-(doc,term) score collapses
+    to ONE exact integer ratio: with T = Σdl and N docs,
+    tf·(k₁+1)/(tf + k₁(1−b+b·dl·N/T)) = 22·T·tf/(10·T·tf + 3·T +
+    9·dl·N) (k₁, b as the rationals 6/5, 3/4) — per-term micro-
+    floored (HUGEINT ⟷ decimal(38,0)), summed exactly, top-20 by
+    (score, doc_id). Scale: one token explode, a 3-term broadcast
+    semi-join (only matching postings survive), per-doc rollup."""
+    from spark_lever_spark.llm.textstats import tokens
+
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", F.explode(tokens(F.col("text"))).alias("w")
+    )
+    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dlen"))
+    g = dl.agg(
+        F.count("*").alias("nd"), F.sum("dlen").alias("tt")
+    )
+    df = toks.groupBy("w").agg(
+        F.countDistinct("doc_id").alias("dfc")
+    )
+    qterms = (
+        df.select(
+            "w",
+            "dfc",
+            F.row_number()
+            .over(Window.orderBy(F.desc("dfc"), "w"))
+            .alias("rnk"),
+        )
+        .filter(F.col("rnk").isin(10, 11, 12))
+        .select("w", "dfc")
+    )
+    tf = (
+        toks.join(F.broadcast(qterms), "w")
+        .groupBy("doc_id", "w", "dfc")
+        .agg(F.count("*").alias("tfc"))
+    )
+    scored = (
+        tf.join(dl, "doc_id")
+        .crossJoin(F.broadcast(g))
+        .groupBy("doc_id")
+        .agg(
+            F.sum(
+                F.expr(
+                    "(2 * nd - 2 * dfc + 1) * 22"
+                    f" * CAST(tt AS {DEC38}) * tfc * 1000000"
+                    " div ((2 * dfc + 1)"
+                    f" * (10 * CAST(tt AS {DEC38}) * tfc"
+                    " + 3 * tt + 9 * dlen * nd))"
+                )
+            )
+            .cast("long")
+            .alias("score_micro"),
+            F.count("*").alias("terms_matched"),
+            F.max("dlen").alias("doc_len"),
+        )
+    )
+    return (
+        scored.select(
+            "doc_id", "terms_matched", "doc_len", "score_micro"
+        )
+        .orderBy(F.desc("score_micro"), "doc_id")
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Lexical concentration, temporal burstiness, ranking stability
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "token_gini_by_source",
+    oracle="""
+WITH
+""" + _WC_CTE + """,
+rk AS (
+  SELECT source, c,
+         row_number() OVER (PARTITION BY source ORDER BY c, w) AS i
+  FROM wc
+),
+m AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS n,
+         CAST(SUM(c) AS BIGINT) AS t,
+         CAST(SUM(CAST(i AS HUGEINT) * c) AS HUGEINT) AS ic
+  FROM rk GROUP BY 1
+)
+SELECT source, n AS n_types, t AS n_tokens,
+       CASE WHEN n > 0 AND t > 0
+            THEN CAST((2 * ic - (CAST(n AS HUGEINT) + 1) * t) * 1000000
+                      // (CAST(n AS HUGEINT) * t) AS BIGINT)
+       END AS token_gini_ppm
+FROM m ORDER BY source
+""",
+)
+def token_gini_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GINI COEFFICIENT OF TOKEN FREQUENCIES per source — lexical
+    concentration as economists would measure it (how unequally is
+    token mass distributed over the vocabulary): the exact
+    rank-formula G = (2Σi·cᵢ − (n+1)Σc)/(n·Σc) over ascending-count
+    ranks with deterministic (count, token) tie-breaks — one
+    HUGEINT ⟷ decimal(38,0) ppm floor-division, non-negative by the
+    rearrangement inequality. The distribution-SHAPE complement to
+    yule_k (repeat-rate) and the zipf slope (power-law exponent):
+    Gini reads the whole Lorenz curve of the vocabulary.
+    Scale: one (source, token) shuffle + per-source rank window."""
+    wc = _word_counts(spark, sf_dir)
+    rk = wc.select(
+        "source",
+        "c",
+        F.row_number()
+        .over(Window.partitionBy("source").orderBy("c", "w"))
+        .alias("i"),
+    )
+    m = rk.groupBy("source").agg(
+        F.count("*").alias("n"),
+        F.sum("c").alias("t"),
+        F.sum(F.col("i").cast(DEC38) * F.col("c")).alias("ic"),
+    )
+    return m.selectExpr(
+        "source",
+        "n AS n_types",
+        "t AS n_tokens",
+        "CASE WHEN n > 0 AND t > 0 THEN"
+        f" CAST((2 * ic - (CAST(n AS {DEC38}) + 1) * t) * 1000000"
+        f" div (CAST(n AS {DEC38}) * t) AS BIGINT)"
+        " END AS token_gini_ppm",
+    ).orderBy("source")
+
+
+# ---------------------------------------------------------------------------
+# Vocabulary growth and source homogeneity: Heaps slope, chi-square
+# ---------------------------------------------------------------------------
+
+
+_HEAPS_SLOPE = sql_ss_div("nb * sxy - sx * sy", "nb * sxx - sx * sx", 1000)
+
+
+@register(
+    "heaps_dyadic_vocab_growth",
+    oracle="""
+WITH
+""" + _SH3_CTE + """,
+dsh AS (
+  SELECT source, doc_id, CAST(count(*) AS BIGINT) AS n_tok
+  FROM sh3 GROUP BY 1, 2
+),
+fo AS (
+  SELECT source, shingle, min(doc_id) AS first_doc
+  FROM sh3 GROUP BY 1, 2
+),
+nv AS (
+  SELECT source, first_doc AS doc_id,
+         CAST(count(*) AS BIGINT) AS n_new
+  FROM fo GROUP BY 1, 2
+),
+cum AS (
+  SELECT d.source, d.doc_id,
+         row_number() OVER (PARTITION BY d.source
+                            ORDER BY d.doc_id) AS rn,
+         CAST(SUM(d.n_tok) OVER (PARTITION BY d.source
+                                 ORDER BY d.doc_id) AS BIGINT) AS cn,
+         CAST(SUM(COALESCE(v.n_new, 0))
+              OVER (PARTITION BY d.source
+                    ORDER BY d.doc_id) AS BIGINT) AS cv
+  FROM dsh d LEFT JOIN nv v
+    ON v.source = d.source AND v.doc_id = d.doc_id
+),
+pt AS (
+  SELECT source,
+         CAST(length(bin(cn)) - 1 AS BIGINT) AS x,
+         CAST(length(bin(cv)) - 1 AS BIGINT) AS y
+  FROM cum
+  WHERE (rn & (rn - 1)) = 0 AND cn > 0 AND cv > 0
+),
+m AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS nb,
+         CAST(SUM(x) AS BIGINT) AS sx,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(x * y) AS BIGINT) AS sxy
+  FROM pt GROUP BY 1
+),
+fin AS (
+  SELECT source,
+         CAST(max(cn) AS BIGINT) AS total_shingles,
+         CAST(max(cv) AS BIGINT) AS vocab_types
+  FROM cum GROUP BY 1
+)
+SELECT m.source, m.nb AS n_checkpoints,
+       f.total_shingles, f.vocab_types,
+       CASE WHEN m.nb * m.sxx - m.sx * m.sx > 0
+            THEN """ + duck_sql(_HEAPS_SLOPE) + """
+       END AS heaps_beta_milli
+FROM m JOIN fin f ON f.source = m.source
+ORDER BY m.source
+""",
+)
+def heaps_dyadic_vocab_growth(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """HEAPS'-LAW type-token growth per source — V(n) ~ K·n^beta, the
+    vocabulary-scaling exponent that predicts how many NEW types the
+    next 10x of corpus brings (the sampling complement to
+    zipf_dyadic_slope_by_source's frequency exponent; the two are
+    linked as beta ~ 1/zipf_s). Types here are 3-token shingles (the
+    word vocabulary of this corpus saturates in a handful of docs —
+    shingle types keep growing, the regime Heaps describes). The fit
+    runs ENTIRELY on the dyadic grid (the zipf doctrine): checkpoints
+    at power-of-two doc prefixes (rn & (rn-1) = 0 — exact in both
+    engines), x = floor(log2 cumulative-shingles), y = floor(log2
+    cumulative-types) via length(bin(.))-1, slope = OLS Cramer ratio
+    as a SIGN-SPLIT milli floor-division of exact int64 moments. New
+    types per doc come from a min-doc_id first-occurrence rollup, so
+    the cumulative distinct count is one window sum, never a per-prefix
+    re-scan. Scale: one (source, shingle) shuffle for first
+    occurrences, one doc-grain window, a <= ~12-point OLS per source."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "source", "doc_id", _shingles3(F.col("text")).alias("sh")
+    )
+    exploded = docs.select(
+        "source", "doc_id", F.explode("sh").alias("shingle")
+    )
+    dsh = exploded.groupBy("source", "doc_id").agg(
+        F.count("*").alias("n_tok")
+    )
+    nv = (
+        exploded.groupBy("source", "shingle")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .groupBy("source", "doc_id")
+        .agg(F.count("*").alias("n_new"))
+    )
+    wd = Window.partitionBy("source").orderBy("doc_id")
+    cum = (
+        dsh.join(nv, ["source", "doc_id"], "left")
+        .select(
+            "source",
+            "doc_id",
+            F.row_number().over(wd).alias("rn"),
+            F.sum("n_tok").over(wd).alias("cn"),
+            F.sum(F.coalesce(F.col("n_new"), F.lit(0)))
+            .over(wd)
+            .alias("cv"),
+        )
+    )
+    pt = cum.filter(
+        (F.expr("rn & (rn - 1)") == 0)
+        & (F.col("cn") > 0)
+        & (F.col("cv") > 0)
+    ).select(
+        "source",
+        (F.length(F.bin("cn")) - 1).cast("long").alias("x"),
+        (F.length(F.bin("cv")) - 1).cast("long").alias("y"),
+    )
+    m = pt.groupBy("source").agg(
+        F.count("*").alias("nb"),
+        F.sum("x").alias("sx"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+    )
+    fin = cum.groupBy("source").agg(
+        F.max("cn").alias("total_shingles"),
+        F.max("cv").alias("vocab_types"),
+    )
+    return (
+        m.join(fin, "source")
+        .selectExpr(
+            "source",
+            "nb AS n_checkpoints",
+            "total_shingles",
+            "vocab_types",
+            "CASE WHEN nb * sxx - sx * sx > 0 THEN "
+            + spark_sql(_HEAPS_SLOPE)
+            + " END AS heaps_beta_milli",
+        )
+        .orderBy("source")
+    )
+
+
+def _chi_cell(c: str, nside: str) -> str:
+    """One chi-square cell term on the micro grid, valid in both
+    dialects via {I}/{D}: (c*N - rw*n_side)^2 * 1e6 // (rw*n_side*N).
+    The numerator is a square (non-negative), so truncating div and
+    flooring // agree; rw > 0 on the union vocabulary."""
+    d = f"({c} * ntot - rw * {nside})"
+    return (
+        f"CAST(CAST({d} AS {{I}}) * {d} * 1000000"
+        f" {{D}} (CAST(rw AS {{I}}) * {nside} * ntot) AS BIGINT)"
+    )
+
+
+@register(
+    "chi_square_homogeneity_sources",
+    oracle="""
+WITH
+""" + _WC_CTE + """,
+tot AS (
+  SELECT source, CAST(SUM(c) AS BIGINT) AS n,
+         row_number() OVER (ORDER BY SUM(c) DESC, source) AS rnk
+  FROM wc GROUP BY 1
+),
+pair AS (
+  SELECT max(CASE WHEN rnk = 1 THEN source END) AS sa,
+         max(CASE WHEN rnk = 2 THEN source END) AS sb,
+         CAST(max(CASE WHEN rnk = 1 THEN n END) AS BIGINT) AS na,
+         CAST(max(CASE WHEN rnk = 2 THEN n END) AS BIGINT) AS nb
+  FROM tot WHERE rnk <= 2
+),
+cells AS (
+  SELECT w,
+         CAST(SUM(CASE WHEN wc.source = p.sa THEN c ELSE 0 END)
+              AS BIGINT) AS ca,
+         CAST(SUM(CASE WHEN wc.source = p.sb THEN c ELSE 0 END)
+              AS BIGINT) AS cb
+  FROM wc, pair p
+  WHERE wc.source IN (p.sa, p.sb)
+  GROUP BY 1
+),
+t AS (
+  SELECT """ + duck_sql(_chi_cell("ca", "na")) + """ AS ta,
+         """ + duck_sql(_chi_cell("cb", "nb")) + """ AS tb
+  FROM (SELECT ca, cb, ca + cb AS rw, p.na, p.nb,
+               p.na + p.nb AS ntot
+        FROM cells, pair p)
+),
+terms AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_types,
+         CAST(SUM(ta + tb) AS BIGINT) AS chi2_micro
+  FROM t
+)
+SELECT p.sa AS source_a, p.sb AS source_b,
+       p.na AS n_a, p.nb AS n_b,
+       t.n_types, t.n_types - 1 AS df, t.chi2_micro
+FROM terms t, pair p
+""",
+)
+def chi_square_homogeneity_sources(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """TWO-SAMPLE CHI-SQUARE HOMOGENEITY between the token
+    distributions of the two largest sources — "are these two corpora
+    draws from the same token distribution?", the categorical
+    counterpart of the value-domain KS/CvM/AD family and the exact
+    test behind mixture re-weighting decisions. Unlike KL/JSD (whose
+    logs are banned from hash-gated outputs), Pearson's X^2 is
+    RATIONAL in the counts: each cell term (c - E)^2/E expands to
+    (c*N - rw*n_side)^2 / (rw*n_side*N) over exact integers, floored
+    once onto the micro grid per cell ({I} = HUGEINT/decimal(38,0);
+    numerators are squares, so truncating div and flooring // agree)
+    — ZERO floating-point anywhere, the sum is bit-exact by
+    construction. Headroom: the per-cell numerator d^2 * 1e6 with
+    |d| <= c*N needs c*N <= 1e16 for decimal(38,0) — guaranteed at
+    ~1e8 two-source tokens even if one token is the whole corpus, and
+    far beyond under any real (Zipfian, c << N) vocabulary; past that,
+    drop the micro scale one notch per 100x. Scale: one (source, token) shuffle
+    + a vocab-grain two-column pivot; the 2xV table never materializes
+    wider than the vocabulary."""
+    wc = _word_counts(spark, sf_dir)
+    tot = wc.groupBy("source").agg(F.sum("c").alias("n"))
+    rk = tot.select(
+        "source",
+        "n",
+        F.row_number()
+        .over(Window.orderBy(F.desc("n"), "source"))
+        .alias("rnk"),
+    ).filter(F.col("rnk") <= 2)
+    pair = rk.agg(
+        F.max(F.when(F.col("rnk") == 1, F.col("source"))).alias("sa"),
+        F.max(F.when(F.col("rnk") == 2, F.col("source"))).alias("sb"),
+        F.max(F.when(F.col("rnk") == 1, F.col("n"))).alias("na"),
+        F.max(F.when(F.col("rnk") == 2, F.col("n"))).alias("nb"),
+    )
+    cells = (
+        wc.join(
+            F.broadcast(pair),
+            (F.col("source") == F.col("sa"))
+            | (F.col("source") == F.col("sb")),
+        )
+        .groupBy("w")
+        .agg(
+            F.max("sa").alias("sa"),
+            F.max("sb").alias("sb"),
+            F.max("na").alias("na"),
+            F.max("nb").alias("nb"),
+            F.sum(
+                F.when(F.col("source") == F.col("sa"), F.col("c"))
+                .otherwise(0)
+            ).alias("ca"),
+            F.sum(
+                F.when(F.col("source") == F.col("sb"), F.col("c"))
+                .otherwise(0)
+            ).alias("cb"),
+        )
+    )
+    t = cells.selectExpr(
+        "sa", "sb", "na", "nb", "ca", "cb",
+        "ca + cb AS rw",
+        "na + nb AS ntot",
+    ).selectExpr(
+        "sa",
+        "sb",
+        "na",
+        "nb",
+        f"{spark_sql(_chi_cell('ca', 'na'))} AS ta",
+        f"{spark_sql(_chi_cell('cb', 'nb'))} AS tb",
+    )
+    return (
+        t.groupBy("sa", "sb", "na", "nb")
+        .agg(
+            F.count("*").alias("n_types"),
+            F.sum(F.col("ta") + F.col("tb")).alias("chi2_micro"),
+        )
+        .selectExpr(
+            "sa AS source_a",
+            "sb AS source_b",
+            "na AS n_a",
+            "nb AS n_b",
+            "n_types",
+            "n_types - 1 AS df",
+            "chi2_micro",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Corpus linguistics: Gries' deviation-of-proportions term dispersion
+# ---------------------------------------------------------------------------
+
+_DP_NUM = "abs(CAST(c_ts AS {I}) * t_all - CAST(t_s AS {I}) * c_t)"
+
+
+@register(
+    "term_dispersion_gries_dp",
+    oracle="""
+WITH """ + _WC_CTE.strip().lstrip("WITH").strip() + """,
+tot AS (SELECT CAST(SUM(c) AS BIGINT) AS t_all FROM wc),
+src AS (SELECT source, CAST(SUM(c) AS BIGINT) AS t_s FROM wc GROUP BY 1),
+term AS (
+  SELECT w, CAST(SUM(c) AS BIGINT) AS c_t FROM wc GROUP BY 1
+  ORDER BY c_t DESC, w LIMIT 20
+),
+grid AS (
+  SELECT t.w, t.c_t, s.source, s.t_s, tot.t_all,
+         CAST(coalesce(x.c, 0) AS BIGINT) AS c_ts
+  FROM term t CROSS JOIN src s CROSS JOIN tot
+  LEFT JOIN wc x ON x.w = t.w AND x.source = s.source
+)
+SELECT w AS term, c_t AS total_count,
+       CAST(SUM(""" + duck_sql(_DP_NUM) + """) * 1000000
+            // (2 * CAST(c_t AS HUGEINT) * t_all) AS BIGINT) AS dp_ppm
+FROM grid GROUP BY w, c_t, t_all
+ORDER BY total_count DESC, term
+""",
+)
+def term_dispersion_gries_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TERM DISPERSION (Gries' DP, deviation of proportions) for the
+    top-20 corpus terms: DP = ½ Σ_s |v_s − e_s| where v_s is the share
+    of the term's occurrences in source s and e_s is source s's share
+    of all tokens — 0 means the term spreads exactly like the corpus,
+    1 means it is confined to one source. THE corpus-linguistics
+    dispersion measure (Gries 2008), and the signal a mixture-weighting
+    pipeline uses to separate corpus-wide function words from
+    source-bound jargon before reweighting. Exact rational form:
+    |c_ts·T − T_s·C_t| summed over ALL sources (zero-count cells
+    included via the term×source grid), scaled ppm, floor-divided by
+    2·C_t·T (non-negative numerator — floor == truncate in both
+    engines). Scale shape: one token-count table feeds three
+    aggregations; the grid is top-20 × n_sources — broadcast-sized by
+    construction."""
+    wc = _word_counts(spark, sf_dir)
+    tot = wc.agg(F.sum("c").alias("t_all"))
+    src = wc.groupBy("source").agg(F.sum("c").alias("t_s"))
+    term = (
+        wc.groupBy("w")
+        .agg(F.sum("c").alias("c_t"))
+        .orderBy(F.desc("c_t"), F.asc("w"))
+        .limit(20)
+    )
+    # Prune wc to the top-20 terms BEFORE the grid join: the pruned
+    # side is <= 20 x n_sources rows (broadcast-sized at any SF), so
+    # the full vocabulary table never shuffles for a 400-row grid.
+    wc_top = wc.join(F.broadcast(term.select("w")), "w").withColumnRenamed(
+        "c", "c_raw"
+    )
+    grid = (
+        term.crossJoin(F.broadcast(src))
+        .crossJoin(F.broadcast(tot))
+        .join(F.broadcast(wc_top), ["w", "source"], "left")
+        .select(
+            "w",
+            "c_t",
+            "t_s",
+            "t_all",
+            F.coalesce("c_raw", F.lit(0)).alias("c_ts"),
+        )
+    )
+    return (
+        grid.groupBy("w", "c_t", "t_all")
+        .agg(F.expr(f"SUM({spark_sql(_DP_NUM)})").alias("num"))
+        .selectExpr(
+            "w AS term",
+            "c_t AS total_count",
+            spark_sql(
+                "CAST(num * 1000000 {D} (2 * CAST(c_t AS {I}) * t_all)"
+                " AS BIGINT)"
+            )
+            + " AS dp_ppm",
+        )
+        .orderBy(F.desc("total_count"), F.asc("term"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Good-Turing unseen mass by source
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "good_turing_unseen_mass_by_source",
+    oracle="""
+WITH """ + _WC_CTE.strip().lstrip("WITH").strip() + """,
+m AS (
+  SELECT source, CAST(SUM(c) AS BIGINT) AS total_tokens,
+         CAST(count(*) AS BIGINT) AS vocab,
+         CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+         CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
+  FROM wc GROUP BY 1
+)
+SELECT source, total_tokens, vocab, n1, n2,
+       CAST(n1 * 1000000 // total_tokens AS BIGINT) AS unseen_ppm,
+       CASE WHEN n1 > 0
+            THEN CAST(2 * n2 * 1000 // n1 AS BIGINT) END AS r1_star_milli
+FROM m ORDER BY source
+""",
+)
+def good_turing_unseen_mass_by_source(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """GOOD-TURING UNSEEN-MASS ESTIMATION per source: the hapax share
+    N₁/T estimates the probability mass of never-seen vocabulary
+    (Good 1953 — the missing-species estimator under every smoothed
+    LM), and the adjusted singleton count r* = 2·N₂/N₁ is the first
+    Good-Turing re-estimate. High unseen mass flags a source whose
+    vocabulary a tokenizer/LM has not saturated — the
+    keep-sampling-or-stop signal for data curation. Integer-exact ppm
+    / milli floor divisions on non-negative counts. Scale shape: one
+    token-count aggregation then a 20-group rollup, all map-side
+    combinable."""
+    wc = _word_counts(spark, sf_dir)
+    return (
+        wc.groupBy("source")
+        .agg(
+            F.sum("c").alias("total_tokens"),
+            F.count("*").alias("vocab"),
+            F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).alias("n1"),
+            F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).alias("n2"),
+        )
+        .selectExpr(
+            "source",
+            "total_tokens",
+            "vocab",
+            "n1",
+            "n2",
+            "CAST(n1 * 1000000 div total_tokens AS BIGINT) AS unseen_ppm",
+            "CASE WHEN n1 > 0 THEN CAST(2 * n2 * 1000 div n1 AS BIGINT)"
+            " END AS r1_star_milli",
+        )
+        .orderBy("source")
     )

@@ -46,9 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_lever_spark.catalog import load_table
+from spark_lever_spark.functions.exact import DEC38
 from spark_lever_spark.registry import register
-
-_DEC = "decimal(38,0)"
 
 
 @register(
@@ -60,7 +59,6 @@ FROM orders
 ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey
 LIMIT 64
 """,
-    category="relational",
 )
 def take_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """takeSample(withReplacement=false, num=64) (reference
@@ -99,7 +97,6 @@ FROM orders
 WHERE o_custkey = 7
 ORDER BY o_orderkey
 """,
-    category="relational",
 )
 def lookup_orders_by_custkey(
     spark: SparkSession, sf_dir: str
@@ -135,7 +132,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
        CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders
 FROM lineitem
 """,
-    category="relational",
 )
 def count_approx_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """countApprox(timeout, confidence) (reference
@@ -176,7 +172,6 @@ SELECT n, sum_cents,
              ) / sqrt(CAST(n AS DOUBLE))) / 100 AS ci95_halfwidth
 FROM s
 """,
-    category="relational",
 )
 def mean_sum_approx_prices(
     spark: SparkSession, sf_dir: str
@@ -195,7 +190,7 @@ def mean_sum_approx_prices(
     s = o.agg(
         F.count("*").alias("n"),
         F.sum(c).alias("sum_cents"),
-        F.sum(c.cast(_DEC) * c).alias("sumsq"),
+        F.sum(c.cast(DEC38) * c).alias("sumsq"),
     )
     nd = F.col("n").cast("double")
     return s.select(

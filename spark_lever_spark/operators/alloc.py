@@ -116,7 +116,6 @@ SELECT l_orderkey, l_linenumber, line_cents, fee_cents,
 FROM ranked
 ORDER BY l_orderkey, l_linenumber
 """,
-    category="relational",
 )
 def prorate_fee_largest_remainder(
     spark: SparkSession, sf_dir: str
@@ -193,7 +192,6 @@ SELECT nation,
            AS weighted_median_cents
 FROM cum GROUP BY nation ORDER BY nation
 """,
-    category="relational",
 )
 def weighted_median_order_value(
     spark: SparkSession, sf_dir: str

@@ -50,7 +50,6 @@ SELECT event_type, h AS window_start,
 FROM w GROUP BY event_type, h
 ORDER BY event_type, h
 """,
-    category="temporal",
 )
 def ohlc_hourly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC bars per event_type: open/close = first/last value
@@ -122,7 +121,6 @@ SELECT o_orderpriority,
        CAST(max(bdays) AS BIGINT) AS max_bdays
 FROM bd GROUP BY o_orderpriority ORDER BY o_orderpriority
 """,
-    category="temporal",
 )
 def ship_latency_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship latency in BUSINESS days (weekends excluded) per
@@ -201,7 +199,6 @@ SELECT nation, CAST(CAST(month AS DATE) AS VARCHAR) AS month, cents,
 FROM monthly
 ORDER BY nation, month
 """,
-    category="temporal",
 )
 def mom_revenue_growth_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue growth per nation — the

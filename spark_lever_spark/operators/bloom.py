@@ -105,7 +105,6 @@ WHERE l_orderkey IN (
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """,
-    category="joins",
 )
 def bloom_semi_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lineitem revenue for urgent orders, with an explicit Bloom

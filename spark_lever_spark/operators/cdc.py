@@ -128,7 +128,6 @@ merged AS (
 )
 {_SUMMARY_SQL}
 """,
-    category="cdc",
 )
 def merge_apply_cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO orders semantics: one change batch with deletes
@@ -197,7 +196,6 @@ merged AS (
 )
 {_SUMMARY_SQL}
 """,
-    category="cdc",
 )
 def merge_cdc_sequence_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered multi-batch CDC apply: three overlapping change batches
@@ -266,7 +264,6 @@ SELECT o_orderstatus, count(*) AS n,
          AS sum_cents
 FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus
 """,
-    category="cdc",
 )
 def matview_incremental_orders_by_status(
     spark: SparkSession, sf_dir: str
@@ -350,7 +347,6 @@ FROM events
 GROUP BY event_type, CAST(ts AS DATE)
 ORDER BY event_type, day
 """,
-    category="cdc",
 )
 def backfill_dirty_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-data backfill with PARTITION PRUNING: a late-arriving batch
@@ -422,7 +418,6 @@ WHERE a.o_orderkey IS NULL OR b.o_orderkey IS NULL
    OR a.o_totalprice <> b.o_totalprice
 ORDER BY o_orderkey
 """,
-    category="cdc",
 )
 def cdc_change_feed_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change-data-feed GENERATION at row detail (the Delta CDF /
@@ -495,7 +490,6 @@ SELECT o_orderstatus,
        CAST(sum(dig) AS BIGINT) AS sum_sig
 FROM d GROUP BY o_orderstatus ORDER BY o_orderstatus
 """,
-    category="cdc",
 )
 def orders_integrity_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent per-group table fingerprint — the
@@ -578,7 +572,6 @@ SELECT 'supplier.s_nationkey->nation',
        CAST((SELECT count(*) FROM supplier) AS BIGINT)
 ORDER BY relationship
 """,
-    category="cdc",
 )
 def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit across the schema's FK graph: for
@@ -652,7 +645,6 @@ SELECT CAST(asof_seq AS INT) AS asof_seq, o_orderstatus,
 FROM state GROUP BY asof_seq, o_orderstatus
 ORDER BY asof_seq, o_orderstatus
 """,
-    category="cdc",
 )
 def cdc_state_asof_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME TRAVEL over a change log: reconstruct the table state AS OF
@@ -750,7 +742,6 @@ JOIN customer c ON c.c_custkey = m.o_custkey
 JOIN nation n ON n.n_nationkey = c.c_nationkey
 GROUP BY n.n_name ORDER BY n.n_name
 """,
-    category="cdc",
 )
 def matview_join_ivm_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of a JOIN view — revenue-by-nation over

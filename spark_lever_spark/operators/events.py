@@ -3,6 +3,12 @@ funnel conversion — the batch forms of the canonical streaming
 workloads (the reference's DStream examples are exactly this class of
 job), expressed with window functions so they scale as one shuffle on
 user_id.
+
+- queueing: M/M/1 metrics and Erlang-B blocking on hourly arrivals;
+- survival: two-group log-rank test, restricted mean survival time;
+- event-series statistics: error-event c-chart, inter-event burstiness,
+  Markov predictability, partial correlation, adstock regression, and
+  A/D line and force index on daily event bars.
 """
 
 from __future__ import annotations
@@ -12,6 +18,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_lever_spark.catalog import load_table
+from spark_lever_spark.functions.exact import (
+    DEC38,
+    duck_sql,
+    spark_sql,
+    sql_ss_div,
+)
 from spark_lever_spark.registry import register
 
 
@@ -39,7 +51,6 @@ FROM sessions
 GROUP BY user_id, session_no
 ORDER BY user_id, session_no
 """,
-    category="events",
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity): lag -> new-session
@@ -91,7 +102,6 @@ SELECT (SELECT COUNT(*) FROM v) AS viewed,
        (SELECT COUNT(*) FROM c) AS clicked_after_view,
        (SELECT COUNT(*) FROM p) AS purchased_after_click
 """,
-    category="events",
 )
 def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel: first view -> first later click -> first later
@@ -149,7 +159,6 @@ SELECT h.event_type, h.hour, h.cnt,
 FROM hourly h JOIN stats s ON h.event_type = s.event_type
 ORDER BY h.event_type, h.hour
 """,
-    category="events",
 )
 def anomaly_hourly_event_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rate-anomaly detection: z-score of each (event_type, hour)
@@ -208,7 +217,6 @@ FROM activity
 GROUP BY cohort_day, day_offset
 ORDER BY cohort_day, day_offset
 """,
-    category="events",
 )
 def retention_cohorts_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention cohort matrix: users grouped by first-seen day, counted
@@ -257,7 +265,6 @@ FROM ordered
 WHERE prev_ts IS NULL OR ts - prev_ts > INTERVAL 10 MINUTE
 ORDER BY user_id, event_type, ts, event_id
 """,
-    category="events",
 )
 def debounce_events_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Debounce / burst suppression: keep only the FIRST event of each
@@ -314,7 +321,6 @@ GROUP BY path
 ORDER BY n DESC, path
 LIMIT 25
 """,
-    category="events",
 )
 def session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Behavioral path analysis: the 25 most common 3-step event-type
@@ -372,7 +378,6 @@ SELECT (SELECT COUNT(*) FROM v) AS viewed,
        (SELECT COUNT(*) FROM c) AS clicked_within_1h,
        (SELECT COUNT(*) FROM p) AS purchased_within_1h
 """,
-    category="events",
 )
 def funnel_windowed_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversion funnel with per-step time windows: each step counts
@@ -435,7 +440,6 @@ SELECT user_id, event_type AS mode_type, n AS mode_count
 FROM ranked WHERE rk = 1
 ORDER BY user_id
 """,
-    category="events",
 )
 def mode_event_type_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-group mode: most frequent event type per user
@@ -476,7 +480,6 @@ SELECT CAST(first_day AS VARCHAR) AS day, new_users,
 FROM per_day
 ORDER BY first_day
 """,
-    category="events",
 )
 def running_distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative distinct users by day — the growth curve. Computing
@@ -530,7 +533,6 @@ FROM running
 GROUP BY event_type
 ORDER BY event_type
 """,
-    category="events",
 )
 def peak_concurrency_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak concurrency via the +1/-1 sweep: each event opens a
@@ -618,7 +620,6 @@ SELECT user_id, streak_len, CAST(streak_start AS VARCHAR) AS streak_start
 FROM best WHERE rk = 1
 ORDER BY user_id
 """,
-    category="events",
 )
 def longest_daily_streak_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-active-day streak per user — gaps-and-
@@ -672,7 +673,6 @@ SELECT from_type, to_type, n,
 FROM counts
 ORDER BY from_type, to_type
 """,
-    category="events",
 )
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order transition matrix over each user's event stream:
@@ -726,7 +726,6 @@ FROM assigned
 GROUP BY bucket
 ORDER BY bucket
 """,
-    category="events",
 )
 def ab_split_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic A/B assignment + per-arm metrics: users hash into
@@ -796,7 +795,6 @@ WHERE valid_to IS NOT NULL
 GROUP BY event_type
 ORDER BY event_type
 """,
-    category="events",
 )
 def time_in_state_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-in-state rollup over the SCD2 validity intervals
@@ -866,7 +864,6 @@ SELECT user_id, CAST(sid AS BIGINT) AS sid,
 FROM r GROUP BY user_id, sid
 ORDER BY user_id, sid
 """,
-    category="events",
 )
 def sessionize_capped_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with BOTH an inactivity gap (30 min) and a
@@ -953,7 +950,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_converted,
          AS p99_sec
 FROM d
 """,
-    category="events",
 )
 def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Funnel latency distribution: per user, time from FIRST view to
@@ -1023,7 +1019,6 @@ SELECT a, b, c, d,
        END AS chi2
 FROM c
 """,
-    category="events",
 )
 def ab_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence statistic for the A/B split
@@ -1124,7 +1119,6 @@ SELECT CAST(a.cohort AS VARCHAR) AS cohort, a.age_months, s.cohort_users,
 FROM agg a JOIN sz s ON s.cohort = a.cohort
 ORDER BY cohort, age_months
 """,
-    category="events",
 )
 def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort LTV curves: users cohort by first-purchase month, and
@@ -1212,7 +1206,6 @@ SELECT CASE WHEN last_ts IS NOT NULL AND last_ts > ts - INTERVAL 1 HOUR
 FROM w WHERE event_type = 'purchase'
 GROUP BY 1 ORDER BY channel
 """,
-    category="events",
 )
 def attribution_last_touch_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch marketing attribution: each purchase credits the
@@ -1291,7 +1284,6 @@ SELECT p.pattern,
 FROM seqs s CROSS JOIN pats p
 GROUP BY p.pattern ORDER BY p.pattern
 """,
-    category="events",
 )
 def funnel_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATCH_RECOGNIZE-style sequence-pattern funnels: each user's
@@ -1398,7 +1390,6 @@ SELECT purchase_id, user_id, touch_id, CAST(pos AS BIGINT) AS pos,
        CAST(credit_milli AS BIGINT) AS credit_milli
 FROM credit ORDER BY purchase_id, pos
 """,
-    category="events",
 )
 def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     """POSITION-BASED (U-shaped) multi-touch attribution — the
@@ -1493,7 +1484,6 @@ SELECT day, n, x,
        / (1 + (1.96 * 1.96) / n) AS wilson_hi
 FROM agg ORDER BY day
 """,
-    category="events",
 )
 def wilson_ci_conversion_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily click->purchase conversion rate with the WILSON 95 %
@@ -1584,7 +1574,6 @@ SELECT from_1, from_2, to_type, n,
 FROM trigrams
 ORDER BY from_1, from_2, to_type
 """,
-    category="events",
 )
 def markov_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SECOND-order Markov transition matrix: the state is the last
@@ -1663,7 +1652,6 @@ SELECT CAST(max(n) AS BIGINT) AS n_converted,
             AS BIGINT) AS p90_seconds
 FROM r
 """,
-    category="events",
 )
 def time_to_convert_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact conversion-delay quantiles: per user, the gap between
@@ -1772,7 +1760,6 @@ SELECT purchase_id, user_id, touch_id, CAST(pos AS BIGINT) AS pos,
            AS credit_milli
 FROM ranked ORDER BY purchase_id, pos
 """,
-    category="events",
 )
 def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-DECAY multi-touch attribution — the third classic credit
@@ -1855,7 +1842,6 @@ SELECT user_id, n_events, n_types,
             // (n_events * n_events) AS BIGINT) AS impurity_ppm
 FROM per_user ORDER BY user_id
 """,
-    category="events",
 )
 def event_type_diversity_impurity(
     spark: SparkSession, sf_dir: str
@@ -1963,7 +1949,6 @@ SELECT n1, x1, n2, x2,
            AS significant
 FROM agg
 """,
-    category="events",
 )
 def newcombe_diff_ci_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B difference-of-proportions CI by NEWCOMBE's hybrid score
@@ -2050,7 +2035,6 @@ HAVING count(*) >= 2
 ORDER BY n_sessions DESC, pattern
 LIMIT 50
 """,
-    category="events",
 )
 def session_path_rle_patterns(
     spark: SparkSession, sf_dir: str
@@ -2163,7 +2147,6 @@ SELECT CAST(m.mi // 12 AS BIGINT) * 100 + (m.mi % 12) + 1 AS yyyymm,
 FROM monthly m LEFT JOIN churn c ON c.mi = m.mi
 ORDER BY m.mi
 """,
-    category="events",
 )
 def growth_accounting_monthly(
     spark: SparkSession, sf_dir: str
@@ -2290,7 +2273,6 @@ SELECT b.n_clicks,
 FROM firsts CROSS JOIN base b
 GROUP BY b.n_clicks
 """,
-    category="events",
 )
 def conversion_window_sensitivity(
     spark: SparkSession, sf_dir: str
@@ -2381,7 +2363,6 @@ SELECT CAST(x AS BIGINT) AS x, n_events, n_errors,
             AS BOOLEAN) AS page_alert
 FROM win ORDER BY x
 """,
-    category="events",
 )
 def slo_burn_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SLO ERROR-BUDGET BURN RATE with multi-window paging (the SRE
@@ -2496,7 +2477,6 @@ SELECT CAST(a.arm AS BIGINT) AS arm, a.n,
 FROM arms a CROSS JOIN theta t
 ORDER BY a.arm
 """,
-    category="events",
 )
 def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance reduction (Deng et al. WSDM'13) — the
@@ -2646,7 +2626,6 @@ SELECT n0, n1, s_pre0, s_post0, s_pre1, s_post1,
              * 1000000) / 1000000 AS did_per_user
 FROM cells
 """,
-    category="events",
 )
 def diff_in_diff_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIFFERENCE-IN-DIFFERENCES — the quasi-experimental workhorse
@@ -2754,7 +2733,6 @@ SELECT n_up, n_down, n_tie,
             AS BOOLEAN) AS significant_05
 FROM cells
 """,
-    category="events",
 )
 def mcnemar_paired_conversion(
     spark: SparkSession, sf_dir: str
@@ -2822,7 +2800,7 @@ def mcnemar_paired_conversion(
 
 
 # ---------------------------------------------------------------------------
-# round-11 additions: survival analysis and segment migration
+# Survival analysis and segment migration
 # ---------------------------------------------------------------------------
 
 
@@ -2859,7 +2837,6 @@ SELECT bucket, n_risk, n_events, n_censored,
        CAST(n_events * 1000000 AS BIGINT) // n_risk AS hazard_ppm
 FROM risk ORDER BY bucket
 """,
-    category="events",
 )
 def km_life_table_customer_tenure(
     spark: SparkSession, sf_dir: str
@@ -2942,7 +2919,6 @@ moves AS (
 SELECT from_band, to_band, CAST(count(*) AS BIGINT) AS n_transitions
 FROM moves GROUP BY 1, 2 ORDER BY from_band, to_band
 """,
-    category="events",
 )
 def segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer SEGMENT-MIGRATION matrix — month-over-month flows
@@ -3053,7 +3029,6 @@ SELECT n, w2_plus, tie_term,
            AS wilcoxon_z
 FROM s
 """,
-    category="events",
 )
 def wilcoxon_signed_rank_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WILCOXON signed-rank test on PAIRED daily view-vs-click revenue
@@ -3167,7 +3142,6 @@ k AS (
 SELECT event_type, day AS change_day, CAST(au AS BIGINT) AS k_stat
 FROM k WHERE rn = 1 ORDER BY event_type
 """,
-    category="events",
 )
 def pettitt_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PETTITT changepoint test (Pettitt 1979) per event type — the
@@ -3277,7 +3251,6 @@ SELECT CAST(DATE '1970-01-01' + INTERVAL (d.x) DAY AS TIMESTAMP) AS day,
 FROM dau d JOIN wau w ON w.x = d.x JOIN mau m ON m.x = d.x
 ORDER BY day
 """,
-    category="events",
 )
 def dau_wau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT DAU / WAU / MAU and the DAU/MAU 'stickiness' ratio per
@@ -3364,7 +3337,6 @@ SELECT day,
             // count(*) AS BIGINT) AS bounce_milli
 FROM per_sess GROUP BY day ORDER BY day
 """,
-    category="events",
 )
 def bounce_rate_daily_sessions(
     spark: SparkSession, sf_dir: str
@@ -3452,7 +3424,6 @@ SELECT entry_type, exit_type, n_sessions,
             AS BIGINT) AS row_share_ppm
 FROM m ORDER BY entry_type, exit_type
 """,
-    category="events",
 )
 def entry_exit_matrix_sessions(
     spark: SparkSession, sf_dir: str
@@ -3561,7 +3532,6 @@ SELECT a.day, a.n_started, a.started_dur_secs,
 FROM arrivals a LEFT JOIN occupancy o ON o.day = a.day
 ORDER BY a.day
 """,
-    category="events",
 )
 def littles_law_daily_events(
     spark: SparkSession, sf_dir: str
@@ -3690,7 +3660,6 @@ SELECT bucket, n_risk, n_events, hazard_ppm,
             AS BIGINT) AS cum_hazard_ppm
 FROM hz ORDER BY bucket
 """,
-    category="events",
 )
 def nelson_aalen_tenure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NELSON-AALEN cumulative-hazard estimator over customer tenure —
@@ -3796,7 +3765,6 @@ SELECT cj.k_types, dd.n_days, cj.n_succ,
        END AS q_milli
 FROM cj CROSS JOIN dd CROSS JOIN ri
 """,
-    category="events",
 )
 def cochran_q_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COCHRAN'S Q TEST over the day × event-type binary design — 'do
@@ -3933,7 +3901,6 @@ SELECT c.channel,
 FROM contrib c LEFT JOIN touch t ON t.i = c.i
 GROUP BY c.channel ORDER BY c.channel
 """,
-    category="events",
 )
 def attribution_shapley_channels(
     spark: SparkSession, sf_dir: str
@@ -4159,7 +4126,6 @@ ORDER BY state
 @register(
     "absorbing_markov_sessions",
     oracle=_absorbing_oracle(),
-    category="events",
 )
 def absorbing_markov_sessions(
     spark: SparkSession, sf_dir: str
@@ -4265,7 +4231,6 @@ SELECT bucket, n_risk, ev_purchase, ev_error, censored,
            AS hazard_error_ppm
 FROM risk ORDER BY bucket
 """,
-    category="events",
 )
 def competing_risks_daily_events(
     spark: SparkSession, sf_dir: str
@@ -4350,3 +4315,1285 @@ def competing_risks_daily_events(
             "hazard_error_ppm"
         ),
     ).orderBy("bucket")
+
+
+# ---------------------------------------------------------------------------
+# Queueing and survival: M/M/1 metrics, two-group log-rank test
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "mm1_queue_metrics_hourly",
+    oracle="""
+WITH slot AS (
+  SELECT CAST(ts AS DATE) AS d,
+         CAST(EXTRACT(hour FROM ts) AS BIGINT) AS h,
+         CAST(count(*) AS BIGINT) AS c
+  FROM events GROUP BY 1, 2
+),
+days AS (
+  SELECT CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS nd
+  FROM events
+),
+mu AS (SELECT CAST(max(c) + 1 AS BIGINT) AS m FROM slot),
+hourly AS (
+  SELECT h, CAST(SUM(c) AS BIGINT) AS arrivals FROM slot GROUP BY h
+)
+SELECT hourly.h AS hour, hourly.arrivals, days.nd AS n_days,
+       mu.m AS mu_per_slot,
+       CAST(hourly.arrivals * 1000000 // (days.nd * mu.m) AS BIGINT)
+           AS rho_ppm,
+       CAST(CAST(hourly.arrivals AS HUGEINT) * hourly.arrivals * 1000
+            // (days.nd * mu.m
+                * (days.nd * mu.m - hourly.arrivals)) AS BIGINT)
+           AS lq_milli,
+       CAST(hourly.arrivals * 1000
+            // (mu.m * (days.nd * mu.m - hourly.arrivals)) AS BIGINT)
+           AS wq_milli_slots
+FROM hourly CROSS JOIN days CROSS JOIN mu
+ORDER BY hourly.h
+""",
+)
+def mm1_queue_metrics_hourly(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """M/M/1 STEADY-STATE QUEUEING METRICS per hour-of-day — the
+    capacity-planning readout littles_law_daily_events leaves
+    implicit: with the hourly arrival rate λ_h = arrivals/n_days
+    (absent slots count as zero arrivals — the day spine is the
+    distinct-day count, not the observed-slot count) and a service
+    rate μ = the busiest observed slot + 1 (data-derived, so ρ < 1
+    by construction and the queue is stable at every hour), publish
+    utilization ρ = λ/μ, queue length Lq = ρ²/(1−ρ), and wait
+    Wq = Lq/λ — each an EXACT rational of integer counts: ρ_ppm =
+    a·10⁶ div (D·μ), Lq_milli = a²·10³ div (D·μ·(D·μ−a)),
+    Wq = a·10³ div (μ·(D·μ−a)) slot-lengths. The M/M/1 idealization
+    is the point — it turns two count aggregates into the standard
+    what-if dial. Scale: one (day,hour) rollup, a 24-row output."""
+    ev = load_table(spark, sf_dir, "events")
+    slot = ev.groupBy(
+        F.to_date("ts").alias("d"),
+        F.hour("ts").cast("long").alias("h"),
+    ).agg(F.count("*").alias("c"))
+    days = ev.agg(
+        F.count_distinct(F.to_date("ts")).alias("nd")
+    )
+    mu = slot.agg((F.max("c") + 1).alias("m"))
+    hourly = slot.groupBy("h").agg(F.sum("c").alias("arrivals"))
+    return (
+        hourly.crossJoin(F.broadcast(days))
+        .crossJoin(F.broadcast(mu))
+        .select(
+            F.col("h").alias("hour"),
+            "arrivals",
+            F.col("nd").alias("n_days"),
+            F.col("m").alias("mu_per_slot"),
+            F.expr(
+                "CAST(arrivals * 1000000 div (nd * m) AS BIGINT)"
+            ).alias("rho_ppm"),
+            F.expr(
+                f"CAST(CAST(arrivals AS {DEC38}) * arrivals * 1000"
+                f" div (nd * m * (nd * m - arrivals)) AS BIGINT)"
+            ).alias("lq_milli"),
+            F.expr(
+                "CAST(arrivals * 1000"
+                " div (m * (nd * m - arrivals)) AS BIGINT)"
+            ).alias("wq_milli_slots"),
+        )
+        .orderBy("hour")
+    )
+
+
+@register(
+    "logrank_test_segments",
+    oracle="""
+WITH per_cust AS (
+  SELECT o_custkey,
+         min(CAST(o_orderdate AS DATE)) AS first_d,
+         max(CAST(o_orderdate AS DATE)) AS last_d
+  FROM orders GROUP BY 1
+),
+horizon AS (SELECT max(CAST(o_orderdate AS DATE)) AS end_d FROM orders),
+lab AS (
+  SELECT CAST(date_diff('day', p.first_d, p.last_d) // 90 AS BIGINT)
+             AS bucket,
+         CASE WHEN date_diff('day', p.last_d,
+                             (SELECT end_d FROM horizon)) >= 180
+              THEN 1 ELSE 0 END AS churned,
+         CASE WHEN c.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS grp
+  FROM per_cust p JOIN customer c ON c.c_custkey = p.o_custkey
+),
+per_bucket AS (
+  SELECT bucket,
+         CAST(SUM(CASE WHEN grp = 1 THEN churned ELSE 0 END)
+              AS BIGINT) AS e1,
+         CAST(SUM(CASE WHEN grp = 0 THEN churned ELSE 0 END)
+              AS BIGINT) AS e0,
+         CAST(SUM(CASE WHEN grp = 1 THEN 1 - churned ELSE 0 END)
+              AS BIGINT) AS x1,
+         CAST(SUM(CASE WHEN grp = 0 THEN 1 - churned ELSE 0 END)
+              AS BIGINT) AS x0
+  FROM lab GROUP BY bucket
+),
+risk AS (
+  SELECT bucket, e1, e0,
+         CAST(SUM(e1 + x1) OVER (ORDER BY bucket DESC) AS BIGINT)
+             AS n1,
+         CAST(SUM(e1 + x1 + e0 + x0) OVER (ORDER BY bucket DESC)
+              AS BIGINT) AS n
+  FROM per_bucket
+),
+terms AS (
+  SELECT bucket,
+         e1 * 1000 - CAST((e1 + e0) * n1 * 1000 // n AS BIGINT)
+             AS oe_milli,
+         CASE WHEN n > 1 THEN
+           CAST(CAST(e1 + e0 AS HUGEINT) * n1 * (n - n1)
+                * (n - e1 - e0) * 1000000
+                // (CAST(n AS HUGEINT) * n * (n - 1)) AS BIGINT)
+         END AS v_micro
+  FROM risk
+),
+agg AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_buckets,
+         CAST(SUM(oe_milli) AS BIGINT) AS oe_milli,
+         CAST(COALESCE(SUM(v_micro), 0) AS BIGINT) AS v_micro
+  FROM terms
+)
+SELECT n_buckets, oe_milli, v_micro,
+       CASE WHEN v_micro > 0
+            THEN CAST(CAST(oe_milli AS HUGEINT) * oe_milli * 1000
+                      // v_micro AS BIGINT)
+       END AS chi2_milli
+FROM agg
+""",
+)
+def logrank_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TWO-GROUP LOG-RANK TEST on customer tenure — the standard
+    survival-curve comparison (Mantel-Cox): does the BUILDING
+    segment churn on a different schedule than everyone else? Reuses
+    km_life_table_customer_tenure's exact censoring semantics
+    (90-day tenure buckets, churned = last order ≥ 180 days before
+    the horizon) and adds the inference layer the life table lacks:
+    per bucket, observed group-1 events minus the hypergeometric
+    expectation d·n1/n (milli-floored per term — discrete variant)
+    and the hypergeometric variance d·n1·(n−n1)·(n−d)/(n²·(n−1))
+    (micro-floored; single-subject buckets contribute NULL→skipped
+    identically in both engines), then χ² = (O−E)²/V as one more
+    exact floor-division. The customer table is fact-sized and joins
+    SHUFFLED per doctrine (never broadcast). Scale: one
+    customer-grain rollup, bucket-domain suffix sums, 1-row out."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    per_cust = o.groupBy("o_custkey").agg(
+        F.min(F.to_date("o_orderdate")).alias("first_d"),
+        F.max(F.to_date("o_orderdate")).alias("last_d"),
+    )
+    horizon = o.agg(F.max(F.to_date("o_orderdate")).alias("end_d"))
+    lab = (
+        per_cust.join(c, per_cust.o_custkey == c.c_custkey)
+        .crossJoin(F.broadcast(horizon))
+        .select(
+            (F.datediff("last_d", "first_d") / 90)
+            .cast("long")
+            .alias("bucket"),
+            F.when(F.datediff("end_d", "last_d") >= 180, 1)
+            .otherwise(0)
+            .alias("churned"),
+            F.when(F.col("c_mktsegment") == "BUILDING", 1)
+            .otherwise(0)
+            .alias("grp"),
+        )
+    )
+    per_bucket = lab.groupBy("bucket").agg(
+        F.sum(
+            F.when(F.col("grp") == 1, F.col("churned")).otherwise(0)
+        ).alias("e1"),
+        F.sum(
+            F.when(F.col("grp") == 0, F.col("churned")).otherwise(0)
+        ).alias("e0"),
+        F.sum(
+            F.when(F.col("grp") == 1, 1 - F.col("churned")).otherwise(0)
+        ).alias("x1"),
+        F.sum(
+            F.when(F.col("grp") == 0, 1 - F.col("churned")).otherwise(0)
+        ).alias("x0"),
+    )
+    wd = Window.orderBy(F.col("bucket").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    risk = per_bucket.select(
+        "bucket",
+        "e1",
+        "e0",
+        F.sum(F.col("e1") + F.col("x1")).over(wd).alias("n1"),
+        F.sum(
+            F.col("e1") + F.col("x1") + F.col("e0") + F.col("x0")
+        )
+        .over(wd)
+        .alias("n"),
+    )
+    terms = risk.select(
+        F.expr(
+            "e1 * 1000 - CAST((e1 + e0) * n1 * 1000 div n AS BIGINT)"
+        ).alias("oe_milli"),
+        F.expr(
+            f"CASE WHEN n > 1 THEN"
+            f" CAST(CAST(e1 + e0 AS {DEC38}) * n1 * (n - n1)"
+            f" * (n - e1 - e0) * 1000000"
+            f" div (CAST(n AS {DEC38}) * n * (n - 1)) AS BIGINT) END"
+        ).alias("v_micro"),
+    )
+    agg = terms.agg(
+        F.count("*").alias("n_buckets"),
+        F.sum("oe_milli").alias("oe_milli"),
+        F.coalesce(F.sum("v_micro"), F.lit(0)).cast("long").alias(
+            "v_micro"
+        ),
+    )
+    return agg.select(
+        "n_buckets",
+        "oe_milli",
+        "v_micro",
+        F.expr(
+            f"CASE WHEN v_micro > 0"
+            f" THEN CAST(CAST(oe_milli AS {DEC38}) * oe_milli * 1000"
+            f" div v_micro AS BIGINT) END"
+        ).alias("chi2_milli"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Statistical process control: attribute charts + zone rules
+# ---------------------------------------------------------------------------
+
+
+_CCHART_UCL = (
+    "CAST(floor((1000 * CAST(tt AS DOUBLE)"
+    " + 3000 * sqrt(CAST(tt AS DOUBLE) * nd)) / nd) AS BIGINT)"
+)
+_CCHART_LCL = (
+    "GREATEST(CAST(0 AS BIGINT),"
+    " CAST(floor((1000 * CAST(tt AS DOUBLE)"
+    " - 3000 * sqrt(CAST(tt AS DOUBLE) * nd)) / nd) AS BIGINT))"
+)
+
+
+@register(
+    "c_chart_daily_error_events",
+    oracle="""
+WITH days AS (
+  SELECT DISTINCT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
+             AS x
+  FROM events
+),
+err AS (
+  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS x,
+         CAST(count(*) AS BIGINT) AS c
+  FROM events WHERE event_type = 'error' GROUP BY 1
+),
+grid AS (
+  SELECT d.x, COALESCE(e.c, 0) AS c FROM days d LEFT JOIN err e
+  ON e.x = d.x
+),
+g AS (
+  SELECT CAST(count(*) AS BIGINT) AS nd, CAST(SUM(c) AS BIGINT) AS tt
+  FROM grid
+)
+SELECT grid.x, grid.c,
+       CAST(1000 * g.tt // g.nd AS BIGINT) AS cbar_milli,
+       """ + _CCHART_UCL + """ AS ucl_milli,
+       """ + _CCHART_LCL + """ AS lcl_milli,
+       CAST(CASE WHEN grid.c * 1000 > """ + _CCHART_UCL + """
+                 THEN 1 ELSE 0 END AS INT) AS above_ucl,
+       CAST(CASE WHEN grid.c * 1000 < """ + _CCHART_LCL + """
+                 THEN 1 ELSE 0 END AS INT) AS below_lcl
+FROM grid, g ORDER BY grid.x
+""",
+)
+def c_chart_daily_error_events(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """c-CHART (Poisson count control chart) of daily error events —
+    Shewhart limits c̄ ± 3·√c̄ on the COUNT scale, plotted over the
+    full observed event-day spine (days with zero errors count as 0,
+    via one distinct-days LEFT JOIN — dropping them would bias c̄
+    up). Exactness: √c̄ = √(T/n) = √(T·n)/n, so each limit is one
+    double expression over two exact integers, one sqrt, one
+    division, one floor onto the milli grid (same SQL text both
+    engines); c̄ itself is the exact non-negative milli
+    floor-division, and violations compare cᵢ·1000 against the
+    milli-grid limits (the grid is the contract). Scale:
+    calendar-bounded day domain; one rollup + 1-row broadcast."""
+    ev = load_table(spark, sf_dir, "events")
+    day = F.datediff(
+        F.to_date("ts"), F.lit("1970-01-01").cast("date")
+    ).cast("long")
+    days = ev.select(day.alias("x")).distinct()
+    err = (
+        ev.filter(F.col("event_type") == "error")
+        .groupBy(day.alias("x"))
+        .agg(F.count("*").alias("c"))
+    )
+    grid = days.join(err, "x", "left").select(
+        "x", F.coalesce(F.col("c"), F.lit(0)).alias("c")
+    )
+    g = grid.agg(F.count("*").alias("nd"), F.sum("c").alias("tt"))
+    return (
+        grid.crossJoin(F.broadcast(g))
+        .selectExpr(
+            "x",
+            "c",
+            "CAST(1000 * tt div nd AS BIGINT) AS cbar_milli",
+            _CCHART_UCL + " AS ucl_milli",
+            _CCHART_LCL + " AS lcl_milli",
+            "CAST(CASE WHEN c * 1000 > " + _CCHART_UCL
+            + " THEN 1 ELSE 0 END AS INT) AS above_ucl",
+            "CAST(CASE WHEN c * 1000 < " + _CCHART_LCL
+            + " THEN 1 ELSE 0 END AS INT) AS below_lcl",
+        )
+        .orderBy("x")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Unit-root test + loss-system queueing
+# ---------------------------------------------------------------------------
+
+
+def _erlang_step(k: int) -> str:
+    """b_k = a·b_{k−1}/(k + a·b_{k−1}) on the micro grid with a =
+    An/Ad: one per-step floored division (documented discrete
+    recursion — the keltner/ewma fixed-point doctrine)."""
+    return (
+        f"CAST(CAST(an AS {{I}}) * b{k - 1} * 1000000"
+        f" {{D}} (CAST({k} AS {{I}}) * ad * 1000000"
+        f" + CAST(an AS {{I}}) * b{k - 1}) AS BIGINT) AS b{k}"
+    )
+
+
+@register(
+    "erlang_b_blocking_hourly",
+    oracle="""
+WITH hr AS (
+  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
+         CAST(count(*) AS BIGINT) AS c
+  FROM events GROUP BY 1
+),
+load AS (
+  SELECT CAST(SUM(c) AS BIGINT) AS an,
+         CAST(count(*) AS BIGINT) AS ad
+  FROM hr
+),
+r0 AS (SELECT an, ad, CAST(1000000 AS BIGINT) AS b0 FROM load),
+""" + ",\n".join(
+        f"r{k} AS (SELECT an, ad, "
+        + ", ".join([f"b{j}" for j in range(0, k)])
+        + ", "
+        + duck_sql(_erlang_step(k))
+        + f" FROM r{k - 1})"
+        for k in range(1, 9)
+    ) + """
+SELECT CAST(c AS INT) AS servers,
+       CAST(1000 * an // ad AS BIGINT) AS offered_load_milli,
+       CAST(CASE c """ + " ".join(
+        f"WHEN {k} THEN b{k}" for k in range(1, 9)
+    ) + """ END AS BIGINT) AS blocking_micro
+FROM r8, (SELECT unnest([1,2,3,4,5,6,7,8]) AS c)
+ORDER BY servers
+""",
+)
+def erlang_b_blocking_hourly(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ERLANG-B BLOCKING PROBABILITY at c = 1..8 servers for the
+    event stream — the loss-system sizing table (M/M/c/c: arrivals
+    that find all servers busy are DROPPED, the capacity-planning
+    complement to mm1_queue_metrics_hourly's infinite queue):
+    offered load a = mean events per hour (the exact rational
+    T/H, one service per hour), and B(c,a) via the numerically
+    stable Erlang-B recursion B_k = a·B_{k−1}/(k + a·B_{k−1}) —
+    factorials never materialize. Each step is ONE per-step-floored
+    micro division (the documented discrete recursion, exact
+    HUGEINT ⟷ decimal(38,0) products; 8 unrolled steps — a query
+    constant), identical expression text in both engines. Scale:
+    one hour rollup (calendar-bounded), then 1-row algebra."""
+    ev = load_table(spark, sf_dir, "events")
+    hr = ev.groupBy(
+        F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("h")
+    ).agg(F.count("*").alias("c"))
+    load = hr.agg(
+        F.sum("c").alias("an"), F.count("*").alias("ad")
+    )
+    r = load.selectExpr(
+        "an", "ad", "CAST(1000000 AS BIGINT) AS b0"
+    )
+    for k in range(1, 9):
+        r = r.selectExpr(
+            "an", "ad", f"b{k - 1}", spark_sql(_erlang_step(k))
+        ) if k == 1 else r.selectExpr(
+            "an", "ad", *[f"b{j}" for j in range(1, k)],
+            spark_sql(_erlang_step(k)),
+        )
+    cs = spark.range(1).selectExpr(
+        "explode(array(1,2,3,4,5,6,7,8)) AS c"
+    )
+    return (
+        r.crossJoin(F.broadcast(cs))
+        .selectExpr(
+            "CAST(c AS INT) AS servers",
+            "CAST(1000 * an div ad AS BIGINT) AS offered_load_milli",
+            "CAST(CASE c "
+            + " ".join(f"WHEN {k} THEN b{k}" for k in range(1, 9))
+            + " END AS BIGINT) AS blocking_micro",
+        )
+        .orderBy("servers")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Lexical concentration, temporal burstiness, ranking stability
+# ---------------------------------------------------------------------------
+
+
+_BURST_B = (
+    "CASE WHEN n > 1 AND s > 0 THEN CAST(floor("
+    "(sqrt(CAST(CAST(n AS {I}) * q - CAST(s AS {I}) * s AS DOUBLE))"
+    " - CAST(s AS DOUBLE)) * 1000"
+    " / (sqrt(CAST(CAST(n AS {I}) * q - CAST(s AS {I}) * s AS DOUBLE))"
+    " + CAST(s AS DOUBLE))) AS BIGINT) END"
+)
+_BURST_M = (
+    "CASE WHEN CAST(m AS {I}) * qa - CAST(sa AS {I}) * sa > 0"
+    " AND CAST(m AS {I}) * qb - CAST(sb AS {I}) * sb > 0"
+    " THEN CAST(floor("
+    "CAST(CAST(m AS {I}) * sab - CAST(sa AS {I}) * sb AS DOUBLE) * 1000"
+    " / (sqrt(CAST(CAST(m AS {I}) * qa - CAST(sa AS {I}) * sa"
+    " AS DOUBLE))"
+    " * sqrt(CAST(CAST(m AS {I}) * qb - CAST(sb AS {I}) * sb"
+    " AS DOUBLE)))) AS BIGINT) END"
+)
+
+
+@register(
+    "interevent_burstiness_memory_types",
+    oracle="""
+WITH seq AS (
+  SELECT event_type,
+         epoch_us(CAST(ts AS TIMESTAMP))
+         - lag(epoch_us(CAST(ts AS TIMESTAMP)))
+           OVER (PARTITION BY event_type
+                 ORDER BY ts, event_id) AS gap
+  FROM events
+),
+gaps AS (
+  SELECT event_type, gap,
+         lead(gap) OVER (PARTITION BY event_type ORDER BY gap_rn)
+             AS gap2
+  FROM (
+    SELECT event_type, gap,
+           row_number() OVER (PARTITION BY event_type ORDER BY gap)
+               AS gap_rn
+    FROM seq WHERE gap IS NOT NULL
+  )
+),
+mom AS (
+  SELECT event_type,
+         CAST(count(*) AS BIGINT) AS n,
+         CAST(SUM(gap) AS BIGINT) AS s,
+         CAST(SUM(CAST(gap AS HUGEINT) * gap) AS HUGEINT) AS q
+  FROM gaps GROUP BY 1
+),
+lagmom AS (
+  SELECT event_type,
+         CAST(count(*) AS BIGINT) AS m,
+         CAST(SUM(gap) AS BIGINT) AS sa,
+         CAST(SUM(gap2) AS BIGINT) AS sb,
+         CAST(SUM(CAST(gap AS HUGEINT) * gap) AS HUGEINT) AS qa,
+         CAST(SUM(CAST(gap2 AS HUGEINT) * gap2) AS HUGEINT) AS qb,
+         CAST(SUM(CAST(gap AS HUGEINT) * gap2) AS HUGEINT) AS sab
+  FROM gaps WHERE gap2 IS NOT NULL GROUP BY 1
+)
+SELECT mom.event_type, mom.n AS n_gaps,
+       """ + duck_sql(_BURST_B) + """ AS burstiness_milli,
+       """ + duck_sql(_BURST_M) + """ AS sorted_memory_milli
+FROM mom JOIN lagmom ON lagmom.event_type = mom.event_type
+ORDER BY mom.event_type
+""",
+)
+def interevent_burstiness_memory_types(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """GOH–BARABÁSI BURSTINESS + a sorted-gap memory coefficient of
+    inter-event times per event type — the two-parameter temporal-
+    pattern fingerprint (B = (σ−μ)/(σ+μ): −1 periodic, 0 Poisson,
+    →1 bursty; the companion correlation reads how gap magnitudes
+    cluster). Gaps are exact epoch-microsecond differences on a
+    deterministic (ts, event_id) order; B collapses to
+    (√(nQ−S²) − S)/(√(nQ−S²) + S) — exact HUGEINT ⟷ decimal(38,0)
+    moments, ONE shared double tree. The memory coefficient here is
+    computed over GAP-SORTED consecutive pairs (a deterministic,
+    order-free discrete variant — chronological lag-correlation
+    would hinge on timestamp tie order; sorted-neighbor correlation
+    reads the same magnitude-clustering signal reproducibly, and is
+    documented as such). Scale: per-type lag/lead windows (types
+    are a bounded domain), two rollups."""
+    ev = load_table(spark, sf_dir, "events")
+    wt = Window.partitionBy("event_type").orderBy("ts", "event_id")
+    seq = ev.select(
+        "event_type",
+        (
+            F.unix_micros(F.col("ts").cast("timestamp"))
+            - F.lag(
+                F.unix_micros(F.col("ts").cast("timestamp"))
+            ).over(wt)
+        ).alias("gap"),
+    ).filter(F.col("gap").isNotNull())
+    wr = Window.partitionBy("event_type").orderBy("gap_rn")
+    gaps = seq.select(
+        "event_type",
+        "gap",
+        F.row_number()
+        .over(Window.partitionBy("event_type").orderBy("gap"))
+        .alias("gap_rn"),
+    ).select(
+        "event_type",
+        "gap",
+        F.lead("gap").over(wr).alias("gap2"),
+    )
+    mom = gaps.groupBy("event_type").agg(
+        F.count("*").alias("n"),
+        F.sum("gap").alias("s"),
+        F.sum(F.col("gap").cast(DEC38) * F.col("gap")).alias("q"),
+    )
+    lagmom = (
+        gaps.filter(F.col("gap2").isNotNull())
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("m"),
+            F.sum("gap").alias("sa"),
+            F.sum("gap2").alias("sb"),
+            F.sum(F.col("gap").cast(DEC38) * F.col("gap")).alias("qa"),
+            F.sum(F.col("gap2").cast(DEC38) * F.col("gap2")).alias(
+                "qb"
+            ),
+            F.sum(F.col("gap").cast(DEC38) * F.col("gap2")).alias(
+                "sab"
+            ),
+        )
+    )
+    return (
+        mom.join(lagmom, "event_type")
+        .selectExpr(
+            "event_type",
+            "n AS n_gaps",
+            spark_sql(_BURST_B) + " AS burstiness_milli",
+            spark_sql(_BURST_M) + " AS sorted_memory_milli",
+        )
+        .orderBy("event_type")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Linear-counting sketch audit + integer adstock regression
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "adstock_regression_daily",
+    oracle="""
+WITH RECURSIVE daily AS MATERIALIZED (
+  SELECT d, clicks, purchases, row_number() OVER (ORDER BY d) AS rn
+  FROM (
+    SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
+           CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+                AS BIGINT) AS clicks,
+           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
+                    END) AS BIGINT) AS purchases
+    FROM events GROUP BY 1)
+),
+rec AS (
+  SELECT d, rn, clicks, purchases,
+         CAST(clicks * 1000 AS BIGINT) AS z
+  FROM daily WHERE rn = 1
+  UNION ALL
+  SELECT dd.d, dd.rn, dd.clicks, dd.purchases,
+         CAST(dd.clicks * 1000 + 7 * rec.z // 10 AS BIGINT)
+  FROM daily dd JOIN rec ON dd.rn = rec.rn + 1
+),
+mom AS (
+  SELECT CAST(count(*) AS BIGINT) AS n,
+         CAST(SUM(z) AS BIGINT) AS sx,
+         CAST(SUM(purchases) AS BIGINT) AS sy,
+         CAST(SUM(CAST(z AS HUGEINT) * z) AS HUGEINT) AS sxx,
+         CAST(SUM(CAST(z AS HUGEINT) * purchases) AS HUGEINT) AS sxy
+  FROM rec
+)
+SELECT n,
+       CASE WHEN CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx
+                 > 0
+            THEN CAST(floor(
+                 CAST(CAST(n AS HUGEINT) * sxy
+                      - CAST(sx AS HUGEINT) * sy AS DOUBLE) * 1000000000
+                 / CAST(CAST(n AS HUGEINT) * sxx
+                        - CAST(sx AS HUGEINT) * sx AS DOUBLE))
+                 AS BIGINT)
+       END AS beta_nano_per_milli,
+       CAST(sx // n AS BIGINT) AS mean_adstock_milli,
+       CAST(sy * 1000 // n AS BIGINT) AS mean_purchases_milli
+FROM mom
+""",
+)
+def adstock_regression_daily(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """GEOMETRIC ADSTOCK REGRESSION — the marketing-mix primitive:
+    carryover-transform daily clicks (adstock zₜ = xₜ + 0.7·zₜ₋₁,
+    the retention-decay model of advertising memory) and regress
+    daily purchases on the transformed series. The recursion runs
+    ENTIRELY on the milli-integer grid (zₜ = 1000·xₜ + ⌊7·zₜ₋₁/10⌋
+    — the documented per-step-floored discrete variant, so no float
+    ever enters the scan; non-negative operands keep Spark div =
+    DuckDB //), via the keltner prefix-scan machinery on Spark and
+    a recursive CTE oracle; the OLS slope is the standard Cramer
+    ratio of exact HUGEINT ⟷ decimal(38,0) moments with ONE double
+    division, floored to nano units (purchases per milli-adstock).
+    Scale: one day rollup, one calendar-bounded scan, one 1-row
+    reduce."""
+    ev = load_table(spark, sf_dir, "events")
+    dc = ev.groupBy(
+        F.datediff(
+            F.to_date("ts"), F.lit("1970-01-01").cast("date")
+        )
+        .cast("long")
+        .alias("d")
+    ).agg(
+        F.sum(
+            F.when(F.col("event_type") == "click", 1).otherwise(0)
+        ).alias("clicks"),
+        F.sum(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        ).alias("purchases"),
+    )
+    allrows = dc.groupBy().agg(
+        F.sort_array(
+            F.collect_list(F.struct("d", "clicks", "purchases"))
+        ).alias("srt")
+    )
+
+    scan = F.aggregate(
+        F.col("srt"),
+        F.expr(
+            "CAST(array() AS array<struct<d bigint,"
+            " purchases bigint, z bigint>>)"
+        ),
+        lambda acc, srow: F.concat(
+            acc,
+            F.array(
+                F.struct(
+                    srow["d"].alias("d"),
+                    srow["purchases"].alias("purchases"),
+                    F.when(
+                        F.size(acc) == 0,
+                        srow["clicks"] * F.lit(1000),
+                    )
+                    .otherwise(
+                        srow["clicks"] * F.lit(1000)
+                        + F.floor(
+                            F.lit(7)
+                            * F.element_at(acc, -1)["z"]
+                            / F.lit(10)
+                        )
+                    )
+                    .cast("long")
+                    .alias("z"),
+                )
+            ),
+        ),
+    )
+    rec = allrows.select(F.explode(scan).alias("r")).select(
+        F.col("r.purchases").alias("purchases"),
+        F.col("r.z").alias("z"),
+    )
+    mom = rec.agg(
+        F.count("*").alias("n"),
+        F.sum("z").alias("sx"),
+        F.sum("purchases").alias("sy"),
+        F.sum(F.col("z").cast(DEC38) * F.col("z")).alias("sxx"),
+        F.sum(F.col("z").cast(DEC38) * F.col("purchases")).alias("sxy"),
+    )
+    return mom.selectExpr(
+        "n",
+        f"CASE WHEN CAST(n AS {DEC38}) * sxx - CAST(sx AS {DEC38}) * sx"
+        " > 0 THEN CAST(floor("
+        f"CAST(CAST(n AS {DEC38}) * sxy - CAST(sx AS {DEC38}) * sy"
+        " AS DOUBLE) * 1000000000"
+        f" / CAST(CAST(n AS {DEC38}) * sxx - CAST(sx AS {DEC38}) * sx"
+        " AS DOUBLE)) AS BIGINT) END AS beta_nano_per_milli",
+        "CAST(sx div n AS BIGINT) AS mean_adstock_milli",
+        "CAST(sy * 1000 div n AS BIGINT) AS mean_purchases_milli",
+    )
+
+
+# ---------------------------------------------------------------------------
+# GROUPED_AGG pandas UDF surface + partial correlation
+# ---------------------------------------------------------------------------
+
+
+_PC_R = (
+    "CAST({d} AS DOUBLE)"
+    " / sqrt(CAST({va} AS DOUBLE) * CAST({vb} AS DOUBLE))"
+)
+_PC_RXY = _PC_R.format(d="dxy", va="vx", vb="vy")
+_PC_RXZ = _PC_R.format(d="dxz", va="vx", vb="vz")
+_PC_RZY = _PC_R.format(d="dzy", va="vz", vb="vy")
+_PC_SEL = (
+    "CASE WHEN vx > 0 AND vy > 0 AND vz > 0"
+    f" AND (1 - ({_PC_RXZ}) * ({_PC_RXZ}))"
+    f" * (1 - ({_PC_RZY}) * ({_PC_RZY})) > 0"
+    f" THEN CAST(floor((({_PC_RXY}) - ({_PC_RXZ}) * ({_PC_RZY}))"
+    f" * 1000 / sqrt((1 - ({_PC_RXZ}) * ({_PC_RXZ}))"
+    f" * (1 - ({_PC_RZY}) * ({_PC_RZY})))) AS BIGINT) END"
+)
+
+
+@register(
+    "partial_correlation_daily_events",
+    oracle="""
+WITH daily AS (
+  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
+         CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+              AS BIGINT) AS x,
+         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+              AS BIGINT) AS y,
+         CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
+              AS BIGINT) AS z
+  FROM events GROUP BY 1
+),
+mom AS (
+  SELECT CAST(count(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(z) AS BIGINT) AS sz,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(y * y) AS BIGINT) AS syy,
+         CAST(SUM(z * z) AS BIGINT) AS szz,
+         CAST(SUM(x * y) AS BIGINT) AS sxy,
+         CAST(SUM(x * z) AS BIGINT) AS sxz,
+         CAST(SUM(z * y) AS BIGINT) AS szy
+  FROM daily
+),
+d AS (
+  SELECT n,
+         CAST(n * sxy - sx * sy AS HUGEINT) AS dxy,
+         CAST(n * sxz - sx * sz AS HUGEINT) AS dxz,
+         CAST(n * szy - sz * sy AS HUGEINT) AS dzy,
+         CAST(n * sxx - sx * sx AS HUGEINT) AS vx,
+         CAST(n * syy - sy * sy AS HUGEINT) AS vy,
+         CAST(n * szz - sz * sz AS HUGEINT) AS vz
+  FROM mom
+)
+SELECT n AS n_days,
+       """ + _PC_SEL + """ AS partial_corr_milli
+FROM d
+""",
+)
+def partial_correlation_daily_events(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PARTIAL CORRELATION of daily clicks and purchases CONTROLLING
+    for views — the confounder-adjusted association (first-order
+    pcor = (r_xy − r_xz·r_zy)/√((1−r_xz²)(1−r_zy²))): raw click↔
+    purchase correlation is inflated by overall traffic; partialling
+    out the view count reads the direct association — the
+    observational-causal primitive between rolling_corr (raw) and
+    granger (lagged). All three correlations come from ONE pass of
+    exact int64/HUGEINT moments; the pcor is a single fixed double
+    tree (identical text both engines — the granger staged-
+    expression rule), milli-floored, with variance and denominator
+    CASE guards degrading to NULL identically. Scale: one day-grain
+    rollup + one 1-row reduce."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        F.datediff(
+            F.to_date("ts"), F.lit("1970-01-01").cast("date")
+        )
+        .cast("long")
+        .alias("d")
+    ).agg(
+        F.sum(
+            F.when(F.col("event_type") == "click", 1).otherwise(0)
+        ).alias("x"),
+        F.sum(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        ).alias("y"),
+        F.sum(
+            F.when(F.col("event_type") == "view", 1).otherwise(0)
+        ).alias("z"),
+    )
+    mom = daily.agg(
+        F.count("*").alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum("z").alias("sz"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+        F.sum(F.col("z") * F.col("z")).alias("szz"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("x") * F.col("z")).alias("sxz"),
+        F.sum(F.col("z") * F.col("y")).alias("szy"),
+    )
+    d = mom.selectExpr(
+        "n",
+        f"CAST(n * sxy - sx * sy AS {DEC38}) AS dxy",
+        f"CAST(n * sxz - sx * sz AS {DEC38}) AS dxz",
+        f"CAST(n * szy - sz * sy AS {DEC38}) AS dzy",
+        f"CAST(n * sxx - sx * sx AS {DEC38}) AS vx",
+        f"CAST(n * syy - sy * sy AS {DEC38}) AS vy",
+        f"CAST(n * szz - sz * sz AS {DEC38}) AS vz",
+    )
+    return d.selectExpr(
+        "n AS n_days", _PC_SEL + " AS partial_corr_milli"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Restricted mean survival time (KM product on the micro grid)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "rmst_customer_tenure",
+    oracle="""
+WITH RECURSIVE per_cust AS MATERIALIZED (
+  SELECT o_custkey,
+         min(CAST(o_orderdate AS DATE)) AS first_d,
+         max(CAST(o_orderdate AS DATE)) AS last_d
+  FROM orders GROUP BY 1
+),
+horizon AS (SELECT max(CAST(o_orderdate AS DATE)) AS end_d
+            FROM orders),
+lab AS (
+  SELECT date_diff('day', first_d, last_d) // 90 AS bucket,
+         CASE WHEN date_diff('day', last_d,
+                             (SELECT end_d FROM horizon)) >= 180
+              THEN 1 ELSE 0 END AS churned
+  FROM per_cust
+),
+per_bucket AS MATERIALIZED (
+  SELECT CAST(bucket AS BIGINT) AS bucket,
+         CAST(SUM(churned) AS BIGINT) AS d,
+         CAST(SUM(1 - churned) AS BIGINT) AS c
+  FROM lab GROUP BY 1
+),
+risk AS MATERIALIZED (
+  SELECT bucket, d,
+         CAST(SUM(d + c) OVER (ORDER BY bucket DESC) AS BIGINT) AS n,
+         row_number() OVER (ORDER BY bucket) AS rn
+  FROM per_bucket
+),
+km AS (
+  SELECT bucket, rn, d, n,
+         CAST((1000000 * (n - d)) // n AS BIGINT) AS s
+  FROM risk WHERE rn = 1
+  UNION ALL
+  SELECT r.bucket, r.rn, r.d, r.n,
+         CAST((km.s * (r.n - r.d)) // r.n AS BIGINT)
+  FROM risk r JOIN km ON r.rn = km.rn + 1
+)
+SELECT bucket, n AS n_risk, d AS n_events,
+       s AS survival_ppm,
+       CAST(SUM(s * 90) OVER (ORDER BY bucket) AS BIGINT)
+           AS rmst_ppm_days
+FROM km ORDER BY bucket
+""",
+)
+def rmst_customer_tenure(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RESTRICTED MEAN SURVIVAL TIME over customer tenure — the
+    clinically-preferred summary when hazards aren't proportional
+    (RMST(τ) = ∫₀τ S(t)dt — "expected retained days within τ"),
+    built ON the km_life_table machinery (same 90-day buckets, same
+    censoring rule): the KM product S(t) = Π(1 − dᵢ/nᵢ) runs as a
+    per-step micro-floored integer recursion (sₖ = ⌊sₖ₋₁·(nₖ−dₖ)/nₖ⌋
+    — the documented discrete product, all non-negative so Spark
+    div = DuckDB //; a recursive CTE on the ≤ ~30-bucket domain in
+    the oracle, the keltner collect-sorted scan on Spark), and RMST
+    is the exact running Σ s·90 in ppm-days. Scale: one customer
+    rollup, then bucket-domain algebra."""
+    o = load_table(spark, sf_dir, "orders")
+    per_cust = o.groupBy("o_custkey").agg(
+        F.min(F.to_date("o_orderdate")).alias("first_d"),
+        F.max(F.to_date("o_orderdate")).alias("last_d"),
+    )
+    horizon = o.agg(F.max(F.to_date("o_orderdate")).alias("end_d"))
+    lab = per_cust.join(F.broadcast(horizon)).select(
+        (F.datediff("last_d", "first_d") / 90)
+        .cast("long")
+        .alias("bucket"),
+        F.when(F.datediff("end_d", "last_d") >= 180, 1)
+        .otherwise(0)
+        .alias("churned"),
+    )
+    per_bucket = lab.groupBy("bucket").agg(
+        F.sum("churned").alias("d"),
+        F.sum(1 - F.col("churned")).alias("c"),
+    )
+    wdesc = Window.orderBy(F.col("bucket").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    risk = per_bucket.select(
+        "bucket",
+        "d",
+        F.sum(F.col("d") + F.col("c")).over(wdesc).alias("n"),
+    )
+    allrows = risk.groupBy().agg(
+        F.sort_array(
+            F.collect_list(F.struct("bucket", "d", "n"))
+        ).alias("srt")
+    )
+    def _exact_div(num, den):
+        # exact non-negative integer floor-division on Column longs:
+        # (num - num % den) is exactly divisible, so the double
+        # division is exact (operands < 2^53) — floor(a/b) alone
+        # could round up across an integer boundary
+        return ((num - num % den) / den).cast("long")
+
+    scan = F.aggregate(
+        F.col("srt"),
+        F.expr(
+            "CAST(array() AS array<struct<bucket bigint, d bigint,"
+            " n bigint, s bigint>>)"
+        ),
+        lambda acc, r: F.concat(
+            acc,
+            F.array(
+                F.struct(
+                    r["bucket"].alias("bucket"),
+                    r["d"].alias("d"),
+                    r["n"].alias("n"),
+                    F.when(
+                        F.size(acc) == 0,
+                        _exact_div(
+                            F.lit(1000000).cast("long")
+                            * (r["n"] - r["d"]),
+                            r["n"],
+                        ),
+                    )
+                    .otherwise(
+                        _exact_div(
+                            F.element_at(acc, -1)["s"]
+                            * (r["n"] - r["d"]),
+                            r["n"],
+                        )
+                    )
+                    .cast("long")
+                    .alias("s"),
+                )
+            ),
+        ),
+    )
+    km = allrows.select(F.explode(scan).alias("r")).select(
+        F.col("r.bucket").alias("bucket"),
+        F.col("r.n").alias("n_risk"),
+        F.col("r.d").alias("n_events"),
+        F.col("r.s").alias("survival_ppm"),
+    )
+    return km.select(
+        "bucket",
+        "n_risk",
+        "n_events",
+        "survival_ppm",
+        F.sum(F.col("survival_ppm") * 90)
+        .over(Window.orderBy("bucket"))
+        .alias("rmst_ppm_days"),
+    ).orderBy("bucket")
+
+
+# ---------------------------------------------------------------------------
+# Markov next-event predictability
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "markov_predictability_event_types",
+    oracle="""
+WITH seq AS (
+  SELECT user_id, event_type AS from_type,
+         lead(event_type) OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS to_type
+  FROM events
+),
+tr AS (
+  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS c
+  FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
+),
+st AS (
+  SELECT from_type,
+         CAST(SUM(c) AS BIGINT) AS n_s,
+         CAST(MAX(c) AS BIGINT) AS c_max,
+         CAST(SUM(CAST(c AS HUGEINT) * (c - 1)) AS HUGEINT) AS rep2
+  FROM tr GROUP BY 1
+),
+rows_out AS (
+  SELECT from_type, n_s, c_max,
+         CAST(c_max * 1000000 // n_s AS BIGINT) AS greedy_acc_ppm,
+         CASE WHEN n_s > 1
+              THEN CAST(rep2 * 1000000
+                   // (CAST(n_s AS HUGEINT) * (n_s - 1)) AS BIGINT)
+         END AS renyi2_ppm
+  FROM st
+  UNION ALL
+  SELECT '__ALL__',
+         CAST(SUM(n_s) AS BIGINT),
+         CAST(SUM(c_max) AS BIGINT),
+         CAST(SUM(c_max) * 1000000 // SUM(n_s) AS BIGINT),
+         CAST(SUM(rep2 * 1000000
+              // (CAST(n_s AS HUGEINT) * (n_s - 1)) * n_s)
+              // SUM(n_s) AS BIGINT)
+  FROM st WHERE n_s > 1
+)
+SELECT from_type, n_s AS n_transitions, c_max AS modal_count,
+       greedy_acc_ppm, renyi2_ppm
+FROM rows_out ORDER BY from_type
+""",
+)
+def markov_predictability_event_types(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """NEXT-EVENT PREDICTABILITY of the event-type Markov chain —
+    what markov_transition_matrix's raw probabilities don't
+    summarize: per source state, the GREEDY accuracy (share of
+    transitions the argmax predictor gets right — the ceiling of
+    any deterministic next-event model) and the Rényi-2 collision
+    rate Σc(c−1)/n(n−1) (probability two random transitions from
+    this state agree — the log-free entropy surrogate, same kernel
+    as the permutation census). The '__ALL__' row weights per-state
+    values by transition mass: greedy accuracy aggregates EXACTLY
+    (Σ modal counts / Σ n), the pooled Rényi-2 is the n_s-weighted
+    mean of the per-state ppm values (per-term floored, the
+    documented grid). Scale: one per-user lead window, bounded
+    type-pair rollups."""
+    ev = load_table(spark, sf_dir, "events")
+    wt = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = ev.select(
+        F.col("event_type").alias("from_type"),
+        F.lead("event_type").over(wt).alias("to_type"),
+    ).filter(F.col("to_type").isNotNull())
+    tr = seq.groupBy("from_type", "to_type").agg(
+        F.count("*").alias("c")
+    )
+    st = tr.groupBy("from_type").agg(
+        F.sum("c").alias("n_s"),
+        F.max("c").alias("c_max"),
+        F.sum(F.col("c").cast(DEC38) * (F.col("c") - 1)).alias("rep2"),
+    )
+    per_state = st.selectExpr(
+        "from_type",
+        "n_s",
+        "c_max",
+        "CAST(c_max * 1000000 div n_s AS BIGINT) AS greedy_acc_ppm",
+        "CASE WHEN n_s > 1 THEN CAST(rep2 * 1000000"
+        f" div (CAST(n_s AS {DEC38}) * (n_s - 1)) AS BIGINT)"
+        " END AS renyi2_ppm",
+    )
+    overall = st.filter("n_s > 1").agg(
+        F.sum("n_s").alias("n_s"),
+        F.sum("c_max").alias("c_max"),
+        F.expr(
+            "CAST(SUM(c_max) * 1000000 div SUM(n_s) AS BIGINT)"
+        ).alias("greedy_acc_ppm"),
+        F.expr(
+            "CAST(SUM(rep2 * 1000000"
+            f" div (CAST(n_s AS {DEC38}) * (n_s - 1)) * n_s)"
+            " div SUM(n_s) AS BIGINT)"
+        ).alias("renyi2_ppm"),
+    ).selectExpr(
+        "'__ALL__' AS from_type",
+        "n_s",
+        "c_max",
+        "greedy_acc_ppm",
+        "renyi2_ppm",
+    )
+    return (
+        per_state.unionByName(overall)
+        .selectExpr(
+            "from_type",
+            "n_s AS n_transitions",
+            "c_max AS modal_count",
+            "greedy_acc_ppm",
+            "renyi2_ppm",
+        )
+        .orderBy("from_type")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Accumulation/Distribution line + Force Index on the event bars
+# ---------------------------------------------------------------------------
+
+# Daily event-value bars (the atr_sma14_daily construction): hi/lo =
+# window extrema of value cents, close = max_by on the deterministic
+# event_id key, volume = event count.
+_EVENT_BARS_CTE = """
+bars AS (
+  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
+         CAST(max(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+             AS hi,
+         CAST(min(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+             AS lo,
+         CAST(arg_max(CAST(round(value * 100) AS BIGINT), event_id)
+              AS BIGINT) AS cl,
+         CAST(count(*) AS BIGINT) AS vol
+  FROM events GROUP BY 1
+)
+"""
+
+
+def _event_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy(
+        F.datediff(
+            F.to_date("ts"), F.lit("1970-01-01").cast("date")
+        )
+        .cast("long")
+        .alias("d")
+    ).agg(
+        F.max(F.round(F.col("value") * 100).cast("long")).alias("hi"),
+        F.min(F.round(F.col("value") * 100).cast("long")).alias("lo"),
+        F.expr(
+            "max_by(CAST(round(value * 100) AS BIGINT), event_id)"
+        ).alias("cl"),
+        F.count("*").alias("vol"),
+    )
+
+
+_ADL_TERM = sql_ss_div("(2 * cl - lo - hi) * vol", "hi - lo", 1000000)
+
+
+@register(
+    "accumulation_distribution_daily",
+    oracle="""
+WITH
+""" + _EVENT_BARS_CTE + """,
+clv AS (
+  SELECT d, hi, lo, cl, vol,
+         CASE WHEN hi > lo THEN """ + duck_sql(_ADL_TERM) + """
+              ELSE 0 END AS mf_micro
+  FROM bars
+)
+SELECT d, hi AS high_cents, lo AS low_cents, cl AS close_cents,
+       vol AS volume, mf_micro AS money_flow_micro,
+       CAST(SUM(mf_micro) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING)
+            AS BIGINT) AS adl_micro
+FROM clv ORDER BY d
+""",
+)
+def accumulation_distribution_daily(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ACCUMULATION/DISTRIBUTION LINE over daily event-value bars —
+    the volume-flow pressure gauge (Chaikin's money-flow volume
+    CLV·V = ((C−L)−(H−C))/(H−L)·V accumulated): where OBV signs the
+    WHOLE day's volume by the close-over-close direction,
+    A/D weights it by WHERE in the range the close landed —
+    divergence between the two is the classic exhaustion signal,
+    and chaikin_money_flow is this same term windowed instead of
+    accumulated. Bars are the atr_sma14 construction (extrema +
+    deterministic max_by close + count volume); each money-flow
+    term is ONE SIGN-SPLIT micro floor-division (the published
+    grid, flat bars contribute exactly 0 via the same CASE), the
+    line one prefix-sum window of exact integers. Scale:
+    calendar-bounded day domain — one rollup, one window."""
+    bars = _event_bars(spark, sf_dir)
+    clv = bars.selectExpr(
+        "d",
+        "hi",
+        "lo",
+        "cl",
+        "vol",
+        "CASE WHEN hi > lo THEN " + spark_sql(_ADL_TERM)
+        + " ELSE CAST(0 AS BIGINT) END AS mf_micro",
+    )
+    return clv.select(
+        "d",
+        F.col("hi").alias("high_cents"),
+        F.col("lo").alias("low_cents"),
+        F.col("cl").alias("close_cents"),
+        F.col("vol").alias("volume"),
+        F.col("mf_micro").alias("money_flow_micro"),
+        F.sum("mf_micro")
+        .over(
+            Window.orderBy("d").rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+        )
+        .alias("adl_micro"),
+    ).orderBy("d")
+
+
+_FI_SEL = sql_ss_div("s13", "13", 1)
+
+
+@register(
+    "force_index_13_daily",
+    oracle="""
+WITH
+""" + _EVENT_BARS_CTE + """,
+fi AS (
+  SELECT d,
+         CAST((cl - LAG(cl) OVER (ORDER BY d)) * vol AS BIGINT)
+             AS force_raw
+  FROM bars
+),
+win AS (
+  SELECT d, force_raw,
+         CAST(SUM(force_raw) OVER (ORDER BY d ROWS BETWEEN 12
+              PRECEDING AND CURRENT ROW) AS BIGINT) AS s13,
+         CAST(count(force_raw) OVER (ORDER BY d ROWS BETWEEN 12
+              PRECEDING AND CURRENT ROW) AS BIGINT) AS cnt
+  FROM fi WHERE force_raw IS NOT NULL
+)
+SELECT d, force_raw AS force_cents_vol,
+       """ + duck_sql(_FI_SEL) + """ AS force_index_sma13
+FROM win WHERE cnt = 13 ORDER BY d
+""",
+)
+def force_index_13_daily(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ELDER'S FORCE INDEX (13-period, SMA form) over daily event
+    bars — price change × volume, the three-ingredient momentum
+    gauge (direction, extent, volume) of 'Trading for a Living',
+    here with the SMA smoothing variant (documented — Elder's EMA-13
+    needs the float recursion; the SMA form keeps every published
+    value an exact integer: raw force is one int64 product per day,
+    the smoother one SIGN-SPLIT floor-division by the constant 13
+    on a full-window count guard). Complements
+    accumulation_distribution_daily (range position × volume) with
+    close-over-close × volume. Scale: one rollup, one lag, one row
+    window."""
+    bars = _event_bars(spark, sf_dir)
+    wl = Window.orderBy("d")
+    fi = bars.select(
+        "d",
+        (
+            (F.col("cl") - F.lag("cl").over(wl)) * F.col("vol")
+        ).alias("force_raw"),
+    ).filter(F.col("force_raw").isNotNull())
+    w13 = Window.orderBy("d").rowsBetween(-12, 0)
+    win = fi.select(
+        "d",
+        "force_raw",
+        F.sum("force_raw").over(w13).alias("s13"),
+        F.count("force_raw").over(w13).alias("cnt"),
+    )
+    return (
+        win.filter(F.col("cnt") == 13)
+        .selectExpr(
+            "d",
+            "force_raw AS force_cents_vol",
+            spark_sql(_FI_SEL) + " AS force_index_sma13",
+        )
+        .orderBy("d")
+    )

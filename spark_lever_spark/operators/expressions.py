@@ -38,7 +38,6 @@ SELECT c_custkey,
 FROM customer
 ORDER BY c_custkey
 """,
-    category="expressions",
 )
 def expr_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String ops (reference stringOperations.scala: Upper:140 Lower:150
@@ -69,7 +68,6 @@ WHERE p_name LIKE '%gold%'
    OR regexp_matches(p_type, '^(PROMO|ECONOMY)$')
 ORDER BY p_partkey
 """,
-    category="expressions",
 )
 def expr_like_rlike(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIKE + RLIKE predicates (reference stringOperations.scala Like:98
@@ -98,7 +96,6 @@ SELECT c_custkey,
 FROM customer
 ORDER BY c_custkey
 """,
-    category="expressions",
 )
 def expr_case_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN / IF / null functions (reference predicates.scala
@@ -137,7 +134,6 @@ FROM lineitem
 WHERE l_orderkey <= 100
 ORDER BY l_orderkey, l_linenumber
 """,
-    category="expressions",
 )
 def expr_cast_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cast matrix (reference Cast.scala full coercion table).
@@ -176,7 +172,6 @@ SELECT s_suppkey,
 FROM supplier
 ORDER BY s_suppkey
 """,
-    category="expressions",
 )
 def expr_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arithmetic/math (reference arithmetic.scala: Add..Remainder
@@ -216,7 +211,6 @@ FROM orders
 WHERE o_orderkey <= 200
 ORDER BY o_orderkey
 """,
-    category="expressions",
 )
 def expr_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datetime superset (the reference had ONLY date/timestamp casts —
@@ -254,7 +248,6 @@ FROM lineitem
 WHERE l_orderkey <= 100
 ORDER BY l_orderkey, l_linenumber
 """,
-    category="expressions",
 )
 def expr_complex_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Complex-type construction + access (reference complexTypes.scala:
@@ -291,7 +284,6 @@ GROUP BY word
 ORDER BY cnt DESC, word
 LIMIT 25
 """,
-    category="expressions",
 )
 def expr_explode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generate/explode (reference execution/Generate.scala:35, Explode
@@ -317,7 +309,6 @@ FROM documents
 WHERE doc_id < 5
 ORDER BY doc_id, pos
 """,
-    category="expressions",
 )
 def expr_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode (reference UserDefinedGenerator analog, generators.scala:79)."""
@@ -338,7 +329,6 @@ FROM events
 WHERE event_id < 100
 ORDER BY event_id
 """,
-    category="expressions",
 )
 def expr_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction (modern superset of the reference's
@@ -365,7 +355,6 @@ FROM events
 GROUP BY event_type
 ORDER BY event_type
 """,
-    category="expressions",
 )
 def expr_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured analytics via Spark 4's VARIANT type:
@@ -401,7 +390,6 @@ SELECT o_orderkey, o_orderstatus AS s, o_totalprice AS p
 FROM orders WHERE o_orderkey < 200
 ORDER BY o_orderkey
 """,
-    category="expressions",
 )
 def expr_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-level XML functions (Spark 4 `from_xml` — completes the
@@ -443,7 +431,6 @@ SELECT o_orderkey,
 FROM orders
 ORDER BY o_orderkey
 """,
-    category="expressions",
 )
 def expr_bitwise_in_greatest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise and/or/xor/not/shifts (reference arithmetic.scala:
@@ -483,7 +470,6 @@ SELECT status,
          AS sum_filled_cents
 FROM base GROUP BY status ORDER BY status
 """,
-    category="expressions",
 )
 def na_fill_drop_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrameNaFunctions parity (reference DataFrame.na in 1.3:
@@ -542,7 +528,6 @@ FROM wide
 UNPIVOT (val FOR metric IN (n_orders, total_price, avg_price))
 ORDER BY o_orderpriority, metric
 """,
-    category="expressions",
 )
 def unpivot_melt_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT / melt — the inverse of pivot (reference has neither;
@@ -582,7 +567,6 @@ FROM customer c, LATERAL (
 WHERE c.c_custkey < 300
 ORDER BY c_custkey, o_totalprice DESC, o_orderkey
 """,
-    category="expressions",
 )
 def lateral_topk_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery with per-group LIMIT — top-2 orders
@@ -648,7 +632,6 @@ closure(root_id, member_id) AS (
 SELECT root_id, member_id FROM closure
 ORDER BY root_id, member_id
 """,
-    category="expressions",
 )
 def recursive_cte_dup_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE (Spark 4 superset — the 1.3 parser had no CTEs
@@ -732,7 +715,6 @@ FROM orders
 WHERE o_orderkey < 500
 ORDER BY o_orderkey
 """,
-    category="expressions",
 )
 def expr_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI-safe TRY_* expression family (superset — 1.3 had no ANSI
@@ -777,7 +759,6 @@ FROM per_line
 WHERE net_cents > 2000000
 ORDER BY l_orderkey, l_linenumber
 """,
-    category="expressions",
 )
 def expr_map_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-type higher-order functions: build a per-order
@@ -831,7 +812,6 @@ WHERE props IS NOT NULL
 GROUP BY event_type
 ORDER BY event_type
 """,
-    category="expressions",
 )
 def expr_regexp_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """regexp_extract_all + regexp_extract over the semi-structured
@@ -867,7 +847,6 @@ SELECT event_id,
          AS tokyo_local
 FROM events WHERE event_id < 200 ORDER BY event_id
 """,
-    category="expressions",
 )
 def expr_timezone_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timezone conversion surface (convert_timezone, Spark 3.4+ —
@@ -919,7 +898,6 @@ FROM r a
 JOIN r b ON a.l_orderkey = b.l_orderkey AND b.rn = a.n + 1 - a.rn
 GROUP BY a.l_orderkey ORDER BY a.l_orderkey
 """,
-    category="expressions",
 )
 def hof_reduce_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array aggregation HOF chain — ``aggregate`` (SQL ``reduce``),
@@ -992,7 +970,6 @@ SELECT user_id, event_type, weekday_n, weekend_n,
        weekday_n - weekend_n AS shift
 FROM g ORDER BY user_id, event_type
 """,
-    category="expressions",
 )
 def map_hof_weekend_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-typed aggregation HOF chain — ``map_from_entries`` ->
@@ -1076,7 +1053,6 @@ SELECT o_orderkey,
             THEN 1 ELSE 0 END AS BIGINT) AS luhn_valid
 FROM s ORDER BY o_orderkey
 """,
-    category="expressions",
 )
 def luhn_reference_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LUHN check-digit issuance (ISO/IEC 7812 mod-10 — the checksum

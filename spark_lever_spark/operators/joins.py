@@ -32,7 +32,6 @@ FROM orders JOIN customer ON o_custkey = c_custkey
 GROUP BY o_orderpriority, c_mktsegment
 ORDER BY o_orderpriority, c_mktsegment
 """,
-    category="joins",
 )
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner equi-join (reference ShuffledHashJoin/BroadcastHashJoin)."""
@@ -56,7 +55,6 @@ FROM customer LEFT JOIN (
 GROUP BY c_custkey, c_name
 ORDER BY c_custkey
 """,
-    category="joins",
 )
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join (reference HashOuterJoin.scala) — unmatched
@@ -80,7 +78,6 @@ RIGHT JOIN customer ON o_custkey = c_custkey
 GROUP BY c_custkey
 ORDER BY c_custkey
 """,
-    category="joins",
 )
 def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right outer join (reference HashOuterJoin.scala, RightOuter)."""
@@ -106,7 +103,6 @@ SELECT coalesce(c_custkey, o_custkey) AS custkey,
 FROM hi_cust FULL OUTER JOIN hi_ord ON c_custkey = o_custkey
 ORDER BY custkey
 """,
-    category="joins",
 )
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join (reference HashOuterJoin.scala, FullOuter)."""
@@ -140,7 +136,6 @@ WHERE EXISTS (SELECT 1 FROM orders
               WHERE o_custkey = c_custkey AND o_totalprice > 350000)
 ORDER BY c_custkey
 """,
-    category="joins",
 )
 def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (reference LeftSemiJoinHash.scala; SQL `LEFT SEMI
@@ -162,7 +157,6 @@ WHERE NOT EXISTS (SELECT 1 FROM orders
                   WHERE o_custkey = c_custkey AND o_totalprice > 350000)
 ORDER BY c_custkey
 """,
-    category="joins",
 )
 def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join — beyond-reference superset (absent in the
@@ -188,7 +182,6 @@ JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name, n_name
 ORDER BY r_name, n_name
 """,
-    category="joins",
 )
 def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit broadcast-hash join (reference BroadcastHashJoin.scala;
@@ -216,7 +209,6 @@ SELECT s_suppkey, count(*) AS n_pricier_parts
 FROM supplier JOIN part ON p_retailprice > s_acctbal / 100
 GROUP BY s_suppkey ORDER BY s_suppkey
 """,
-    category="joins",
 )
 def join_theta_nonequi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure non-equi theta join (reference
@@ -237,7 +229,6 @@ def join_theta_nonequi(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT r_name, n_name FROM region CROSS JOIN nation
 ORDER BY r_name, n_name
 """,
-    category="joins",
 )
 def join_cartesian(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product (reference CartesianProduct.scala) — only ever
@@ -257,7 +248,6 @@ FROM lineitem JOIN part
   ON l_partkey = p_partkey AND l_extendedprice > 40 * p_retailprice
 ORDER BY l_orderkey, l_linenumber
 """,
-    category="joins",
 )
 def join_mixed_equi_nonequi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-join with residual non-equi condition — hash join on the
@@ -291,7 +281,6 @@ SELECT coalesce(c.custkey, o.custkey) AS custkey,
 FROM c FULL OUTER JOIN o ON c.custkey = o.custkey
 ORDER BY custkey
 """,
-    category="joins",
 )
 def cogroup_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cogroup (reference PairRDDFunctions.cogroup :696-803) as a
@@ -354,7 +343,6 @@ SELECT a.k, a.n_cust, b.n_supp
 FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
 ORDER BY a.k NULLS FIRST
 """,
-    category="joins",
 )
 def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equality join (<=> / IS NOT DISTINCT FROM): NULL keys
@@ -390,7 +378,6 @@ GROUP BY part_a, part_b
 ORDER BY n_orders DESC, part_a, part_b
 LIMIT 20
 """,
-    category="joins",
 )
 def basket_part_pairs_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence: the 20 part pairs most often
@@ -469,7 +456,6 @@ tri AS (
 SELECT part_a, part_b, part_c, n_orders
 FROM tri ORDER BY n_orders DESC, part_a, part_b, part_c
 """,
-    category="joins",
 )
 def frequent_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent 3-itemsets with A-PRIORI pruning (Agrawal & Srikant
@@ -545,7 +531,6 @@ SELECT o.o_orderstatus,
 FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
 GROUP BY o.o_orderstatus ORDER BY o.o_orderstatus
 """,
-    category="joins",
 )
 def hybrid_skew_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID (differential) skew join — the production answer when a
@@ -620,7 +605,6 @@ FROM e a JOIN e b
  AND b.ts BETWEEN a.ts - INTERVAL 5 MINUTE AND a.ts + INTERVAL 5 MINUTE
  AND abs(b.value - a.value) <= 1.0
 """,
-    category="joins",
 )
 def grid_join_value_time_neighbors(
     spark: SparkSession, sf_dir: str
@@ -710,7 +694,6 @@ WHERE NOT EXISTS (
 )
 ORDER BY p_partkey
 """,
-    category="joins",
 )
 def skyline_parts_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline (Pareto-frontier) query: parts not dominated on
@@ -820,7 +803,6 @@ JOIN names b ON a.noun = b.noun AND a.p_name < b.p_name
 WHERE levenshtein(a.p_name, b.p_name) <= 3
 ORDER BY name_a, name_b
 """,
-    category="joins",
 )
 def fuzzy_join_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy (edit-distance) self-join — the entity-resolution
@@ -878,7 +860,6 @@ WHERE b.o_orderdate >= a.o_orderdate - INTERVAL 7 DAY
   AND b.o_orderdate <= a.o_orderdate + INTERVAL 7 DAY
 ORDER BY custkey, orderkey_1, orderkey_2
 """,
-    category="joins",
 )
 def duplicate_payment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-payment detection — the classic finance audit: same
@@ -970,7 +951,6 @@ JOIN n_item nc ON nc.l_partkey = r.consequent, baskets t
 ORDER BY r.n_ab DESC, r.antecedent, r.consequent
 LIMIT 20
 """,
-    category="joins",
 )
 def association_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIRECTIONAL association rules over market baskets — the step
@@ -1078,7 +1058,6 @@ FROM o JOIN tiers t ON o.c >= t.lo_cents AND o.c < t.hi_cents
 GROUP BY t.tier, o.o_orderpriority
 ORDER BY tier, o_orderpriority
 """,
-    category="joins",
 )
 def tiered_rate_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tiered-rate RANGE-LOOKUP join — the tax-bracket/commission
@@ -1146,7 +1125,6 @@ FROM ranked a JOIN ranked b
 WHERE levenshtein(a.p_name, b.p_name) <= 4
 ORDER BY name_a, name_b
 """,
-    category="joins",
 )
 def sorted_neighborhood_pairs(
     spark: SparkSession, sf_dir: str

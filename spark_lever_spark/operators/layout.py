@@ -69,7 +69,6 @@ SELECT event_id, {_Z_EVENTS} AS zval
 FROM events
 ORDER BY event_id
 """,
-    category="layout",
 )
 def layout_zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton Z-value per event over (user_id, day-of-year) — the
@@ -99,7 +98,6 @@ SELECT month, n_rows, min_cents, max_cents,
        n_matching
 FROM part ORDER BY month
 """,
-    category="sources",
 )
 def partition_stats_prune_report(
     spark: SparkSession, sf_dir: str
@@ -193,7 +191,6 @@ def _hilbert_oracle() -> str:
 @register(
     "layout_hilbert_events",
     oracle=_hilbert_oracle(),
-    category="layout",
 )
 def layout_hilbert_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HILBERT-CURVE clustering value per event over (user_id,

@@ -26,7 +26,6 @@ from spark_lever_spark.registry import register
 SELECT CAST(7 AS BIGINT) AS partition_count, COUNT(*) AS total_rows
 FROM lineitem
 """,
-    category="lever",
 )
 def lever_weighted_repartition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted repartition actuation (reference BlockGenerator.scala:
@@ -68,7 +67,6 @@ SELECT * FROM (VALUES
 ) AS t(helpee, target, share)
 ORDER BY helpee, target
 """,
-    category="lever",
 )
 def lever_plan_proportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end controller decision on a synthetic 4-host trace

@@ -11,6 +11,22 @@ Determinism notes:
 - "sampling" for oracle parity is hash/modulo-based (deterministic in
   both engines); `df.sample` itself is exercised in tests/ where only
   statistical properties are asserted.
+
+Statistical families over the TPC-H tables, in exact integer
+arithmetic (functions/exact.py):
+
+- rank tests on blocked designs: Friedman, Jonckheere-Terpstra, Dunn
+  post-hoc, Cronbach's alpha;
+- audit sketches: Benford second digit, log2-histogram quantiles,
+  linear counting;
+- diversity and concentration: Atkinson, Palma/Hoover, CR-k, ecological
+  diversity;
+- classifier evaluation: PR-AUC, MCC/Youden, Brier score, odds/risk
+  ratios, Qini uplift;
+- survey sampling and allocation: Kish design effect, Horvitz-Thompson,
+  grouped jackknife, D'Hondt/Sainte-Laguë, p-chart;
+- causal diagnostics: SMD covariate balance, E-value, stratified ATE,
+  empirical-Bayes shrinkage, Kendall tau between event series.
 """
 
 from __future__ import annotations
@@ -20,7 +36,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_lever_spark.catalog import load_table
-from spark_lever_spark.functions.exact import cents, round_to
+from spark_lever_spark.functions.exact import (
+    DEC38,
+    cents,
+    duck_sql,
+    round_to,
+    spark_sql,
+    sql_ss_div,
+)
 from spark_lever_spark.operators.grank import (
     ntile_from_rank,
     with_global_rank,
@@ -41,7 +64,6 @@ FROM lineitem
 WHERE l_quantity > 45 AND l_returnflag = 'R'
 ORDER BY l_orderkey, l_linenumber
 """,
-    category="relational",
 )
 def scan_project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Project + Filter (reference basicOperators.scala:35,:50).
@@ -72,7 +94,6 @@ def scan_project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
 ORDER BY l_returnflag, l_linestatus
 """,
-    category="relational",
 )
 def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (reference basicOperators.scala:208 — partial+final dedup)."""
@@ -90,7 +111,6 @@ def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT o_custkey, min(o_orderkey) AS first_orderkey
 FROM orders GROUP BY o_custkey ORDER BY o_custkey
 """,
-    category="relational",
 )
 def dropduplicates_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed dedup with a deterministic representative (min orderkey) —
@@ -112,7 +132,6 @@ FROM orders
 ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 50
 """,
-    category="relational",
 )
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k (reference TakeOrdered, basicOperators.scala:130): orderBy+limit
@@ -153,7 +172,6 @@ FROM l
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """,
-    category="relational",
 )
 def agg_stats_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate function surface (reference
@@ -223,7 +241,6 @@ FROM orders
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """,
-    category="relational",
 )
 def first_last_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First/Last aggregates (reference aggregates.scala:427,:441) in their
@@ -249,7 +266,6 @@ SELECT COUNT(DISTINCT l_orderkey) AS exact_orders,
        TRUE AS parts_within_3rsd
 FROM lineitem
 """,
-    category="relational",
 )
 def approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ approximate distinct (reference
@@ -298,7 +314,6 @@ SELECT '__ALL__' AS event_type, COUNT(DISTINCT user_id) AS exact_users,
 FROM events
 ORDER BY event_type
 """,
-    category="relational",
 )
 def sketch_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable DataSketches HLL aggregates (hll_sketch_agg /
@@ -361,7 +376,6 @@ SELECT '__ALL__' AS event_type, COUNT(DISTINCT user_id) AS n_users
 FROM events
 ORDER BY event_type
 """,
-    category="relational",
 )
 def bitmap_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT distinct counting through mergeable bitmap partials
@@ -399,7 +413,6 @@ SELECT o_orderkey, o_custkey, round(o_totalprice*100)/100 AS o_totalprice
 FROM orders WHERE o_orderkey % 7 = 0
 ORDER BY o_orderkey
 """,
-    category="relational",
 )
 def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic systematic sample (modulo on the key) — the
@@ -426,7 +439,6 @@ SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bucket,
 FROM orders
 GROUP BY 1 ORDER BY 1
 """,
-    category="relational",
 )
 def histogram_fixed_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram (reference DoubleRDDFunctions.histogram :96-143) as a
@@ -454,7 +466,6 @@ SELECT l_returnflag,
 FROM l
 GROUP BY l_returnflag ORDER BY l_returnflag
 """,
-    category="relational",
 )
 def percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (beyond-reference superset of
@@ -481,7 +492,6 @@ def percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT event_type, count(*) AS cnt
 FROM events GROUP BY event_type ORDER BY event_type
 """,
-    category="relational",
 )
 def count_by_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """countByValue (reference rdd/RDD.scala:1044) as groupBy().count()."""
@@ -495,7 +505,6 @@ def count_by_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT n_regionkey, array_to_string(list_sort(list(n_name)), ',') AS nations
 FROM nation GROUP BY n_regionkey ORDER BY n_regionkey
 """,
-    category="relational",
 )
 def values_collected_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """groupByKey-with-values (reference PairRDDFunctions.groupByKey :444)
@@ -518,7 +527,6 @@ def values_collected_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT c_mktsegment, COUNT(*) AS total, TRUE AS frac_ok
 FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
 """,
-    category="relational",
 )
 def sample_by_key_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sampleByKey / df.stat.sampleBy (reference PairRDDFunctions.scala:
@@ -567,7 +575,6 @@ SELECT CAST(8 AS BIGINT) AS partitions,
        MAX(l_orderkey) AS max_key
 FROM lineitem
 """,
-    category="relational",
 )
 def map_in_pandas_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapPartitions/glom parity (reference RDD.scala:641,:544) via
@@ -667,7 +674,6 @@ def pipe_partitions(
     oracle="""
 SELECT lower(n_name) AS value FROM nation ORDER BY value
 """,
-    category="relational",
 )
 def pipe_partitions_tr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pipe() demo: nation names lowercased by an external `tr` process
@@ -684,7 +690,6 @@ SELECT l_returnflag, COUNT(*) AS cnt,
        CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """,
-    category="relational",
 )
 def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage salted aggregation for skewed keys: stage 1 aggregates
@@ -734,7 +739,6 @@ SELECT l_returnflag, n,
          AS corr_qty_price
 FROM m ORDER BY l_returnflag
 """,
-    category="relational",
 )
 def stat_corr_covar_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlation/covariance (reference DoubleRDDFunctions stats +
@@ -781,7 +785,6 @@ SELECT o_orderstatus, COUNT(*) AS n,
        TRUE AS p50_ok, TRUE AS p90_ok, TRUE AS p99_ok
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """,
-    category="relational",
 )
 def approx_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_percentile (Greenwald-Khanna sketch) p50/p90/p99 of
@@ -830,7 +833,6 @@ def approx_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT TRUE AS disjoint_exhaustive,
        TRUE AS train_le_total, TRUE AS holdout_le_total
 """,
-    category="relational",
 )
 def random_split_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """randomSplit (reference RDD.scala:409) train/holdout split:
@@ -870,7 +872,6 @@ SELECT l_returnflag, COUNT(*) AS cnt,
 FROM lineitem JOIN flag_dim ON l_returnflag = f
 GROUP BY l_returnflag ORDER BY l_returnflag
 """,
-    category="relational",
 )
 def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted shuffle join for skewed keys, oracle-equal to the plain
@@ -923,7 +924,6 @@ SELECT array_to_string(fl, ',') AS flags_found,
        len(list_intersect(fl, ['A','N','R'])) = 3 AS all_flags_present
 FROM d
 """,
-    category="relational",
 )
 def stat_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.stat.freqItems (heavy hitters, single pass, no shuffle —
@@ -960,7 +960,6 @@ SELECT event_type, event_id, CAST(rk AS INT) AS rk FROM (
 WHERE rk <= 3
 ORDER BY event_type, rk
 """,
-    category="relational",
 )
 def reservoir_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic reservoir-style k-per-group sampling: rank rows
@@ -997,7 +996,6 @@ WHERE NOT EXISTS (
 )
 ORDER BY p_retailprice, p_size, p_partkey
 """,
-    category="relational",
 )
 def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline / Pareto frontier: parts not dominated on
@@ -1075,7 +1073,6 @@ SELECT check_name, n_violations, n_checked,
 FROM checks
 ORDER BY check_name
 """,
-    category="relational",
 )
 def dq_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality audit: null-rate, value-range, and referential-
@@ -1145,7 +1142,6 @@ FROM lineitem l JOIN med m ON l.l_returnflag = m.l_returnflag
 GROUP BY l.l_returnflag, m.med
 ORDER BY l.l_returnflag
 """,
-    category="relational",
 )
 def stat_mad_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median absolute deviation per group — the robust dispersion
@@ -1210,7 +1206,6 @@ FROM diff
 GROUP BY change_type
 ORDER BY change_type
 """,
-    category="relational",
 )
 def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff / CDC derivation: classify every key across two
@@ -1290,7 +1285,6 @@ FROM l, b
 GROUP BY bin
 ORDER BY bin
 """,
-    category="relational",
 )
 def equidepth_histogram_broadcast_bounds(
     spark: SparkSession, sf_dir: str
@@ -1350,7 +1344,6 @@ FROM (
 WHERE rk <= 3
 ORDER BY o_orderpriority, rk, o_orderkey
 """,
-    category="relational",
 )
 def topk_orders_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k WITH ties per group (dense_rank cut): every order whose
@@ -1396,7 +1389,6 @@ SELECT col, CAST(n_distinct AS BIGINT) AS n_distinct,
 FROM ranked WHERE rk = 1
 ORDER BY col
 """,
-    category="relational",
 )
 def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column profiling (data-catalog statistics): distinct count, most
@@ -1450,7 +1442,6 @@ FROM days d JOIN du u
 GROUP BY d.day
 ORDER BY day
 """,
-    category="relational",
 )
 def sketch_rolling_distinct_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 3-day distinct users via MERGEABLE daily HLL sketches —
@@ -1530,7 +1521,6 @@ est AS (
 SELECT user_id, exact_cnt, cms_est, cms_est - exact_cnt AS overcount
 FROM est ORDER BY exact_cnt DESC, user_id
 """,
-    category="relational",
 )
 def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan '05): d=4 rows x w=256
@@ -1609,7 +1599,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_keys,
          / 1000000 AS top_key_share
 FROM kc
 """,
-    category="relational",
 )
 def skew_key_diagnostics_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join/shuffle-key skew diagnostics — the pre-flight a 100 TB
@@ -1660,7 +1649,6 @@ ex AS (
 SELECT type_a, type_b, exact_common, TRUE AS within_bound
 FROM ex ORDER BY type_a, type_b
 """,
-    category="relational",
 )
 def sketch_hll_intersection_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL sketch ALGEBRA: intersection cardinality of user sets per
@@ -1734,7 +1722,6 @@ SELECT user_id, CAST(max(cnt) AS BIGINT) AS n,
          AS delta
 FROM e GROUP BY user_id ORDER BY user_id
 """,
-    category="relational",
 )
 def secondary_sort_first_last_delta(
     spark: SparkSession, sf_dir: str
@@ -1850,7 +1837,6 @@ SELECT n.n1, n.n2,
        best.at_v AS at_value
 FROM best CROSS JOIN n
 """,
-    category="relational",
 )
 def ks_statistic_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic between src0's and
@@ -1938,7 +1924,6 @@ SELECT n1, n2,
              / CAST(2 * n1 * n2 AS DOUBLE) * 1000000) / 1000000 AS auc
 FROM agg
 """,
-    category="relational",
 )
 def mann_whitney_u_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann–Whitney U rank-sum test statistic between src0's and
@@ -2015,7 +2000,6 @@ SELECT c.digit, c.n,
          / 1000000 AS observed_freq
 FROM c CROSS JOIN t ORDER BY c.digit
 """,
-    category="relational",
 )
 def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-significant-digit distribution of order amounts —
@@ -2081,7 +2065,6 @@ SELECT CAST(n AS BIGINT) AS n_customers,
          AS top20pct_share
 FROM ranked GROUP BY n
 """,
-    category="relational",
 )
 def pareto_concentration_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto (80/20) revenue concentration: the share of total order
@@ -2151,7 +2134,6 @@ SELECT CAST(max(n) AS BIGINT) AS n_customers,
              * 1000000) / 1000000 AS gini
 FROM ranked
 """,
-    category="relational",
 )
 def gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of customer revenue — the scalar inequality
@@ -2203,7 +2185,6 @@ SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_lines,
        CAST(max(days) AS BIGINT) AS max_days
 FROM lat GROUP BY o_orderpriority ORDER BY o_orderpriority
 """,
-    category="relational",
 )
 def ship_latency_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship latency distribution per order priority — the
@@ -2267,7 +2248,6 @@ SELECT nation, customers, buyers, orders,
              * 1000000) / 1000000 AS arpu
 FROM agg ORDER BY nation
 """,
-    category="relational",
 )
 def arpu_decomposition_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ARPU decomposition per nation: ARPU = conversion x orders-per-
@@ -2374,7 +2354,6 @@ JOIN ex ea ON ea.event_type = p.type_a
 JOIN ex eb ON eb.event_type = p.type_b
 ORDER BY 1, 2
 """,
-    category="relational",
 )
 def sketch_theta_fixed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch distinct counting with a FIXED sampling threshold
@@ -2506,7 +2485,6 @@ SELECT exact_rows, est_rows,
        CAST(est_rows AS DOUBLE) / exact_rows AS overestimate_ratio
 FROM exact, est
 """,
-    category="relational",
 )
 def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JOIN-SIZE ESTIMATION from mergeable key histograms — the
@@ -2596,7 +2574,6 @@ SELECT b.event_type, b.d AS changepoint_day,
 FROM best b JOIN tot t ON t.event_type = b.event_type
 WHERE b.rn = 1 ORDER BY b.event_type
 """,
-    category="events",
 )
 def cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point detection on daily event volumes: per type,
@@ -2679,7 +2656,6 @@ SELECT CAST(((c - mn) * 20) // (mx - mn + 1) AS INT) AS bucket,
 FROM v, mm
 GROUP BY 1, 2 ORDER BY bucket
 """,
-    category="relational",
 )
 def histogram_equi_width_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 20-bucket equal-WIDTH histogram of order value: bucket =
@@ -2737,7 +2713,6 @@ SELECT CAST(((rk - 1) * 10) // n AS INT) AS bucket,
        CAST(sum(c) AS BIGINT) AS sum_cents
 FROM r GROUP BY 1 ORDER BY bucket
 """,
-    category="relational",
 )
 def equal_frequency_buckets_orders(
     spark: SparkSession, sf_dir: str
@@ -2802,7 +2777,6 @@ SELECT CAST(max(d.m) AS BIGINT) AS median_cents,
            AS worst_deviation_cents
 FROM dev d, mad
 """,
-    category="relational",
 )
 def mad_outlier_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier detection via Median Absolute Deviation — the
@@ -2874,7 +2848,6 @@ SELECT o_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
        c AS totalprice_cents, rk AS global_rank
 FROM r WHERE (rk - 1) % 500 = 0 ORDER BY rk
 """,
-    category="relational",
 )
 def systematic_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Systematic (every k-th) sampling on the exact global
@@ -2905,7 +2878,7 @@ def systematic_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-10 additions: ordered-set aggregates, sketch re-aggregation, RFM
+# Ordered-set aggregates, sketch re-aggregation, RFM
 # ---------------------------------------------------------------------------
 
 
@@ -2934,7 +2907,6 @@ SELECT o_orderpriority,
            AS p75_cents
 FROM r GROUP BY o_orderpriority ORDER BY o_orderpriority
 """,
-    category="relational",
 )
 def percentile_disc_order_priority(
     spark: SparkSession, sf_dir: str
@@ -3009,7 +2981,6 @@ SELECT CAST('1970-01-01' AS TIMESTAMP) AS month,
 FROM events
 ORDER BY month
 """,
-    category="relational",
 )
 def bitmap_rollup_daily_to_monthly(
     spark: SparkSession, sf_dir: str
@@ -3090,7 +3061,6 @@ SELECT CAST(r_score AS BIGINT) AS r_score,
 FROM scored GROUP BY 1, 2, 3
 ORDER BY r_score, f_score, m_score
 """,
-    category="relational",
 )
 def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation — the marketing-analytics workhorse: every
@@ -3152,7 +3122,6 @@ SELECT r_name,
 FROM nation JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name ORDER BY r_name
 """,
-    category="relational",
 )
 def listagg_nations_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered LISTAGG / string_agg — the report-formatting aggregate
@@ -3199,7 +3168,6 @@ base AS (
 )
 SELECT base.n_customers, ni.n_not_in, ne.n_not_exists FROM base, ni, ne
 """,
-    category="relational",
 )
 def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-valued-logic parity: ``NOT IN`` against a set CONTAINING
@@ -3253,7 +3221,6 @@ WHERE v.c * t.n > t.s
 GROUP BY v.o_orderpriority
 ORDER BY v.o_orderpriority
 """,
-    category="relational",
 )
 def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-subquery filter — rows above the GLOBAL average — with
@@ -3294,7 +3261,6 @@ SELECT o_orderpriority,
        CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS n_statuses
 FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
 """,
-    category="relational",
 )
 def multi_distinct_one_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTIPLE count(DISTINCT ...) over different columns in ONE
@@ -3348,7 +3314,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_orders,
                      ELSE v.c END) AS BIGINT) AS sum_cents_after
 FROM v, cuts
 """,
-    category="relational",
 )
 def winsorize_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorization — the ML-feature-prep clamp: values below the
@@ -3429,7 +3394,6 @@ SELECT n AS n_values,
            AS p75_cents
 FROM picked
 """,
-    category="relational",
 )
 def percentile_cont_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``percentile_cont`` — the INTERPOLATING ordered-set aggregate
@@ -3504,7 +3468,6 @@ SELECT CAST(gap_days // 30 AS BIGINT) AS gap_bucket_months,
 FROM gaps WHERE gap_days IS NOT NULL
 GROUP BY 1 ORDER BY gap_bucket_months
 """,
-    category="relational",
 )
 def customer_order_gap_distribution(
     spark: SparkSession, sf_dir: str
@@ -3557,7 +3520,6 @@ SELECT p.n_orders,
 FROM per_cust p, tot t
 GROUP BY p.n_orders ORDER BY n_orders
 """,
-    category="relational",
 )
 def repeat_purchase_distribution(
     spark: SparkSession, sf_dir: str
@@ -3604,7 +3566,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
        CAST(count(*) - count(DISTINCT event_id) AS BIGINT) AS n_dups
 FROM events
 """,
-    category="relational",
 )
 def id_contiguity_audit_events(
     spark: SparkSession, sf_dir: str
@@ -3657,7 +3618,6 @@ SELECT fd,
            AS holds
 FROM fd GROUP BY fd ORDER BY fd
 """,
-    category="relational",
 )
 def functional_dependency_audit(
     spark: SparkSession, sf_dir: str
@@ -3741,7 +3701,6 @@ SELECT priority, CAST(v_cents AS BIGINT) AS v_cents,
            / 1000000 AS hyp_cume_dist
 FROM agg ORDER BY priority, v_cents
 """,
-    category="relational",
 )
 def hypothetical_rank_order_value(
     spark: SparkSession, sf_dir: str
@@ -3824,7 +3783,6 @@ WHERE NOT EXISTS (
 )
 ORDER BY p_partkey
 """,
-    category="relational",
 )
 def relational_division_priorities(
     spark: SparkSession, sf_dir: str
@@ -3893,7 +3851,6 @@ SELECT CAST(SUM(grp_size) AS BIGINT) AS n_rows,
            AS n_groups_below_l3
 FROM groups
 """,
-    category="relational",
 )
 def k_anonymity_audit_customers(
     spark: SparkSession, sf_dir: str
@@ -3963,7 +3920,6 @@ SELECT b.disc_pct, b.n_lines, b.total_qty, b.revenue_cents,
 FROM bands b CROSS JOIN base
 ORDER BY b.disc_pct
 """,
-    category="relational",
 )
 def discount_response_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISCOUNT RESPONSE CURVE: per discount percentage band, the
@@ -4037,7 +3993,6 @@ ORDER BY CAST(10 * sg + sq * ng AS DOUBLE) / CAST(ng * (10 + n) AS DOUBLE)
          DESC, l_partkey
 LIMIT 20
 """,
-    category="relational",
 )
 def bayesian_avg_part_quantity(
     spark: SparkSession, sf_dir: str
@@ -4111,7 +4066,6 @@ SELECT n, sx, min_items, max_items,
            AS dispersion_ppm
 FROM m
 """,
-    category="relational",
 )
 def basket_dispersion_index(
     spark: SparkSession, sf_dir: str
@@ -4199,7 +4153,6 @@ UNION ALL SELECT 'customer->nation', n_rows, n_orphans FROM c
 UNION ALL SELECT 'nation->region', n_rows, n_orphans FROM n
 ORDER BY link
 """,
-    category="relational",
 )
 def referential_cascade_audit(
     spark: SparkSession, sf_dir: str
@@ -4282,7 +4235,6 @@ SELECT CAST(yyyymm AS BIGINT) AS yyyymm,
             * 1000000 // SUM(rev) AS BIGINT) AS top_decile_share_ppm
 FROM ranked GROUP BY yyyymm ORDER BY yyyymm
 """,
-    category="relational",
 )
 def monthly_concentration_top_decile(
     spark: SparkSession, sf_dir: str
@@ -4375,7 +4327,6 @@ SELECT n,
              * 1000000) / 1000000 AS spearman_rho
 FROM m
 """,
-    category="relational",
 )
 def spearman_rank_revenue_orders(
     spark: SparkSession, sf_dir: str
@@ -4468,7 +4419,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_orders,
            AS max_abs_delta_cents
 FROM j
 """,
-    category="relational",
 )
 def order_total_reconciliation(
     spark: SparkSession, sf_dir: str
@@ -4549,7 +4499,6 @@ SELECT event_type, n,
              * 1000000) / 1000000 AS autocorr_lag1
 FROM m ORDER BY event_type
 """,
-    category="temporal",
 )
 def autocorr_lag1_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAG-1 AUTOCORRELATION of daily value per event type — the
@@ -4640,7 +4589,6 @@ SELECT 'lineitem', (SELECT CAST(n AS BIGINT) FROM li),
        (SELECT CAST(count(*) AS BIGINT) FROM lineitem)
 ORDER BY tbl
 """,
-    category="relational",
 )
 def erasure_footprint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ERASURE-FOOTPRINT audit (GDPR right-to-be-forgotten planning):
@@ -4708,7 +4656,6 @@ SELECT c.n AS n_rows, c.k AS n_distinct_endings,
        (SELECT o FROM top WHERE rn = 1) AS top_ending_count
 FROM chi c
 """,
-    category="relational",
 )
 def cents_ending_uniformity_audit(
     spark: SparkSession, sf_dir: str
@@ -4799,7 +4746,6 @@ SELECT n0, concordant, discordant, ties_x, ties_y,
              * 1000000) / 1000000 AS kendall_tau_b
 FROM s
 """,
-    category="relational",
 )
 def kendall_tau_monthly_rev_orders(
     spark: SparkSession, sf_dir: str
@@ -4912,7 +4858,6 @@ FROM cums
 GROUP BY c_nationkey, n_g
 ORDER BY c_nationkey
 """,
-    category="relational",
 )
 def t_closeness_ordered_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-CLOSENESS audit (Li, Li & Venkatasubramanian 2007) — the
@@ -5013,7 +4958,6 @@ SELECT yyyymm,
             AS BIGINT) AS effective_n_milli
 FROM shares GROUP BY yyyymm ORDER BY yyyymm
 """,
-    category="relational",
 )
 def hhi_concentration_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HERFINDAHL–HIRSCHMAN INDEX of monthly revenue across nations —
@@ -5115,7 +5059,6 @@ SELECT n_pos, n_neg,
            - 1000000 AS gini_ppm
 FROM agg
 """,
-    category="relational",
 )
 def roc_auc_price_predicts_return(
     spark: SparkSession, sf_dir: str
@@ -5221,7 +5164,6 @@ SELECT abc_class,
        min(rk) AS first_rank, max(rk) AS last_rank
 FROM cls GROUP BY abc_class ORDER BY abc_class
 """,
-    category="relational",
 )
 def abc_classification_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC INVENTORY CLASSIFICATION of parts by revenue — the 80/95
@@ -5318,7 +5260,6 @@ SELECT segment, CAST(rn AS BIGINT) AS rnk, o_orderkey,
        x AS total_dollars, y AS n_items, md2
 FROM top WHERE rn <= 3 ORDER BY segment, rnk
 """,
-    category="relational",
 )
 def mahalanobis_outliers_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTIVARIATE (2-D Mahalanobis) outliers per market segment —
@@ -5484,7 +5425,6 @@ FROM base JOIN ranked ON ranked.priority = base.priority
 GROUP BY base.priority, base.n_orders, base.s
 ORDER BY base.priority
 """,
-    category="relational",
 )
 def poisson_bootstrap_ci_priority(
     spark: SparkSession, sf_dir: str
@@ -5611,7 +5551,6 @@ SELECT g.decile, g.n AS n_orders, g.np AS n_returned,
             // (CAST(g.n AS HUGEINT) * tot.pt) AS BIGINT) AS lift_ppm
 FROM g CROSS JOIN tot ORDER BY g.decile
 """,
-    category="relational",
 )
 def decile_lift_table_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DECILE LIFT / CUMULATIVE-GAINS TABLE for 'order value predicts
@@ -5703,7 +5642,6 @@ SELECT segment, priority, o AS observed,
              * 1000000) / 1000000 AS adj_residual
 FROM marg ORDER BY segment, priority
 """,
-    category="relational",
 )
 def contingency_residuals_segment_priority(
     spark: SparkSession, sf_dir: str
@@ -5798,7 +5736,6 @@ SELECT n1 AS n_building, n2 AS n_machinery,
        abs(md / sqrt(a + b)) > 1.959964 AS significant_5pct
 FROM t
 """,
-    category="relational",
 )
 def welch_t_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WELCH'S UNEQUAL-VARIANCE t-TEST for mean order value, BUILDING
@@ -5907,7 +5844,6 @@ SELECT segment, max(n) AS n_total,
            AS trimmed_mean_cents
 FROM kept GROUP BY segment ORDER BY segment
 """,
-    category="relational",
 )
 def trimmed_mean_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10% TRIMMED MEAN of order value per market segment — the
@@ -6004,7 +5940,6 @@ SELECT per.yyyymm, per.n_name, per.x AS revenue_cents,
 FROM per JOIN m ON m.yyyymm = per.yyyymm
 ORDER BY per.yyyymm, per.n_name
 """,
-    category="relational",
 )
 def zscore_nation_monthly_peers(
     spark: SparkSession, sf_dir: str
@@ -6125,7 +6060,6 @@ SELECT nm.n_nations, nm.m_months, d.sum_d2_x4,
                 - nm.n_nations)) AS w_ppm
 FROM nm CROSS JOIN d
 """,
-    category="relational",
 )
 def kendall_w_nation_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KENDALL'S W (coefficient of concordance) over the monthly
@@ -6222,7 +6156,6 @@ WHERE (c.cum - p.off + p.j) // p.j
         > (c.cum - c.v - p.off + p.j) // p.j
 ORDER BY c.o_orderkey
 """,
-    category="relational",
 )
 def monetary_unit_sampling_orders(
     spark: SparkSession, sf_dir: str
@@ -6322,7 +6255,6 @@ GROUP BY f.priority, f.n, f.q1_cents, f.q2_cents, f.q3_cents,
          f.lo_fence, f.hi_fence
 ORDER BY f.priority
 """,
-    category="relational",
 )
 def robust_quartile_shape_by_priority(
     spark: SparkSession, sf_dir: str
@@ -6483,7 +6415,6 @@ SELECT c.priority, c.n_g, CAST(c.r2 AS BIGINT) AS rank2_sum,
 FROM contrib c CROSS JOIN tot CROSS JOIN h
 ORDER BY c.priority
 """,
-    category="relational",
 )
 def kruskal_wallis_priorities(
     spark: SparkSession, sf_dir: str
@@ -6603,7 +6534,6 @@ SELECT n.n1, n.n2,
                 * (n.n1 + n.n2)) AS BIGINT) AS t_cvm_micro
 FROM n CROSS JOIN u
 """,
-    category="relational",
 )
 def cramer_von_mises_sources(
     spark: SparkSession, sf_dir: str
@@ -6724,7 +6654,6 @@ SELECT n_name, p_brand, r0 AS rev_base_cents, r1 AS rev_next_cents,
 FROM eff
 ORDER BY n_name, p_brand
 """,
-    category="relational",
 )
 def shift_share_nation_brandmix(
     spark: SparkSession, sf_dir: str
@@ -6872,7 +6801,6 @@ SELECT n AS n_total, r AS n_returned, swn AS sum_w_n, swr AS sum_w_r,
          * 1000000) / 1000000 AS z_squared
 FROM s
 """,
-    category="relational",
 )
 def cochran_armitage_trend_returns(
     spark: SparkSession, sf_dir: str
@@ -6972,7 +6900,6 @@ SELECT n.n1, n.n2,
             AS BIGINT) AS cliffs_delta_ppm
 FROM n CROSS JOIN s
 """,
-    category="relational",
 )
 def cliffs_delta_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLIFF'S DELTA between src0's and src1's document lengths — the
@@ -7062,7 +6989,6 @@ SELECT m AS n_blocks, l AS page_l,
              * 1000000) / 1000000 AS z_squared
 FROM s
 """,
-    category="relational",
 )
 def page_trend_test_priorities(
     spark: SparkSession, sf_dir: str
@@ -7168,7 +7094,6 @@ SELECT n1, n2,
              * 1000000) / 1000000 AS hedges_g
 FROM w
 """,
-    category="relational",
 )
 def effect_size_cohens_d_segments(
     spark: SparkSession, sf_dir: str
@@ -7285,7 +7210,6 @@ SELECT segment, n_h, sd_milli_cents,
                      THEN 1 ELSE 0 END AS alloc_n
 FROM ranked ORDER BY segment
 """,
-    category="relational",
 )
 def neyman_allocation_segments(
     spark: SparkSession, sf_dir: str
@@ -7441,7 +7365,6 @@ SELECT n.n1, n.n2,
 FROM scored s CROSS JOIN n
 GROUP BY n.n1, n.n2, n.nt
 """,
-    category="relational",
 )
 def ansari_bradley_sources(
     spark: SparkSession, sf_dir: str
@@ -7605,7 +7528,6 @@ SELECT a.abc_class, x.xyz_class,
 FROM abc a JOIN xyz x ON x.l_partkey = a.l_partkey
 GROUP BY 1, 2 ORDER BY 1, 2
 """,
-    category="relational",
 )
 def abc_xyz_matrix_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC-XYZ INVENTORY MATRIX — the 9-cell planning grid supply
@@ -7726,7 +7648,6 @@ SELECT segment, priority, n_pop, n_sample,
            AS weighted_n
 FROM w2 ORDER BY segment, priority
 """,
-    category="relational",
 )
 def raking_calibration_segment_priority(
     spark: SparkSession, sf_dir: str
@@ -7850,7 +7771,6 @@ SELECT segment, n_orders, n_above,
              * 1000000) / 1000000 AS adj_residual
 FROM marg ORDER BY segment
 """,
-    category="relational",
 )
 def moods_median_test_segments(
     spark: SparkSession, sf_dir: str
@@ -7948,7 +7868,6 @@ SELECT CAST(((rk - 1) * 10) // n + 1 AS BIGINT) AS decile,
 FROM ranked
 GROUP BY 1 ORDER BY decile
 """,
-    category="relational",
 )
 def lorenz_curve_customer_deciles(
     spark: SparkSession, sf_dir: str
@@ -8022,7 +7941,6 @@ SELECT yyyymm,
            AS otif_ppm
 FROM per_order GROUP BY yyyymm ORDER BY yyyymm
 """,
-    category="relational",
 )
 def on_time_in_full_monthly(
     spark: SparkSession, sf_dir: str
@@ -8108,7 +8026,6 @@ SELECT bucket_lo,
        CAST(SUM(c) AS BIGINT) AS value_cents
 FROM bucketed GROUP BY bucket_lo ORDER BY bucket_lo
 """,
-    category="relational",
 )
 def backlog_aging_snapshot(
     spark: SparkSession, sf_dir: str
@@ -8183,7 +8100,6 @@ SELECT p_brand,
            AS slow_qty
 FROM flagged GROUP BY p_brand ORDER BY p_brand
 """,
-    category="relational",
 )
 def slow_moving_parts_by_brand(
     spark: SparkSession, sf_dir: str
@@ -8277,7 +8193,6 @@ SELECT n.n1, n.n2,
            AS ad_micro
 FROM n CROSS JOIN terms
 """,
-    category="relational",
 )
 def anderson_darling_sources(
     spark: SparkSession, sf_dir: str
@@ -8372,7 +8287,6 @@ SELECT CAST(c_nationkey AS INT) AS c_nationkey, c_mktsegment, k_size,
            AS meets_l3
 FROM g ORDER BY c_nationkey, c_mktsegment
 """,
-    category="relational",
 )
 def l_diversity_audit_customers(
     spark: SparkSession, sf_dir: str
@@ -8447,7 +8361,6 @@ FROM demand d JOIN holding h ON h.p_brand = d.p_brand
 WHERE h.h > 0
 ORDER BY d.p_brand
 """,
-    category="relational",
 )
 def eoq_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ECONOMIC ORDER QUANTITY (Harris-Wilson 1913, the square-root
@@ -8537,7 +8450,6 @@ SELECT o_orderpriority, n,
             ) AS BIGINT) END AS cpk_milli
 FROM m ORDER BY o_orderpriority
 """,
-    category="relational",
 )
 def process_capability_cpk_latency(
     spark: SparkSession, sf_dir: str
@@ -8622,7 +8534,6 @@ SELECT kth.k, kth.hk AS kth_hash,
             AS BIGINT) AS err_ppm
 FROM kth CROSS JOIN tru
 """,
-    category="relational",
 )
 def sketch_kmv_distinct_orders(
     spark: SparkSession, sf_dir: str
@@ -8706,7 +8617,6 @@ FROM qstar s JOIN dem ON dem.p_brand = s.p_brand
 GROUP BY s.p_brand, s.n_days, s.q_star
 ORDER BY s.p_brand
 """,
-    category="relational",
 )
 def newsvendor_quantile_brands(
     spark: SparkSession, sf_dir: str
@@ -8821,7 +8731,6 @@ SELECT n, k,
        END AS eta_sq_ppm
 FROM ss
 """,
-    category="relational",
 )
 def anova_f_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-WAY ANOVA F statistic of order value across priority
@@ -8973,7 +8882,6 @@ SELECT n, k,
        END AS bf_w_micro
 FROM ss
 """,
-    category="relational",
 )
 def brown_forsythe_priorities(
     spark: SparkSession, sf_dir: str
@@ -9128,7 +9036,6 @@ row0 AS (
 )
 SELECT * FROM row0
 """,
-    category="relational",
 )
 def decision_stump_returns(
     spark: SparkSession, sf_dir: str
@@ -9308,7 +9215,6 @@ SELECT cum.b AS bucket, cum.nb AS n_orders, cum.pb AS n_returned,
 FROM cum JOIN iso ON iso.i = cum.b
 ORDER BY bucket
 """,
-    category="relational",
 )
 def isotonic_return_rate_by_price(
     spark: SparkSession, sf_dir: str
@@ -9509,7 +9415,6 @@ SELECT r3.rn AS n_name, r3.cm AS yyyymm, r3.v AS rev_cents,
 FROM r3 JOIN cm2 ON cm2.cm = r3.cm
 ORDER BY n_name, yyyymm
 """,
-    category="relational",
 )
 def median_polish_nation_month(
     spark: SparkSession, sf_dir: str
@@ -9626,7 +9531,6 @@ SELECT n.n1, n.n2,
             AS BIGINT) AS w1_micro
 FROM n CROSS JOIN area
 """,
-    category="relational",
 )
 def wasserstein_distance_sources(
     spark: SparkSession, sf_dir: str
@@ -9741,7 +9645,6 @@ SELECT n, s AS total_cents,
        END AS ge2_within_micro
 FROM tot
 """,
-    category="relational",
 )
 def ge2_inequality_decomposition_nations(
     spark: SparkSession, sf_dir: str
@@ -9829,4 +9732,2817 @@ def ge2_inequality_decomposition_nations(
         total.alias("ge2_total_micro"),
         between.alias("ge2_between_micro"),
         (total - between).alias("ge2_within_micro"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Rank tests on blocked designs: Friedman, Cronbach, Jonckheere-Terpstra
+# ---------------------------------------------------------------------------
+
+
+# Monthly revenue per (month, priority) — the blocked-design base for
+# Friedman / Cronbach (blocks = months with ALL k priorities present).
+_MONTH_PRIO_CTES = """
+cell AS (
+  SELECT CAST(year(o_orderdate) * 12 + (month(o_orderdate) - 1)
+              AS BIGINT) AS mx,
+         o_orderpriority AS g,
+         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             AS rev
+  FROM orders GROUP BY 1, 2
+),
+kk AS (SELECT CAST(count(DISTINCT g) AS BIGINT) AS k FROM cell),
+comp AS (
+  SELECT cell.mx, cell.g, cell.rev
+  FROM cell
+  JOIN (SELECT mx FROM cell GROUP BY mx
+        HAVING count(*) = (SELECT k FROM kk)) f ON f.mx = cell.mx
+)
+"""
+
+
+def _month_prio_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders")
+    cell = o.groupBy(
+        (F.year("o_orderdate") * 12 + (F.month("o_orderdate") - 1))
+        .cast("long")
+        .alias("mx"),
+        F.col("o_orderpriority").alias("g"),
+    ).agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+            "rev"
+        )
+    )
+    kk = cell.agg(F.count_distinct("g").alias("k"))
+    full = (
+        cell.groupBy(F.col("mx").alias("fmx"))
+        .agg(F.count("*").alias("gcnt"))
+        .crossJoin(F.broadcast(kk))
+        .filter(F.col("gcnt") == F.col("k"))
+        .select("fmx", "k")
+    )
+    return cell.join(
+        F.broadcast(full), cell.mx == F.col("fmx")
+    ).select("mx", "g", "rev", "k")
+
+
+@register(
+    "friedman_test_priorities_monthly",
+    oracle="""
+WITH
+""" + _MONTH_PRIO_CTES + """,
+rk AS (
+  SELECT mx, g,
+         CAST(2 * rank() OVER (PARTITION BY mx ORDER BY rev)
+              + count(*) OVER (PARTITION BY mx, rev) - 1
+              AS BIGINT) AS r2
+  FROM comp
+),
+rsum AS (
+  SELECT g, CAST(SUM(r2) AS BIGINT) AS r2_sum FROM rk GROUP BY g
+),
+agg AS (
+  SELECT CAST(count(*) AS BIGINT) AS k,
+         CAST(SUM(CAST(r2_sum AS HUGEINT) * r2_sum) AS HUGEINT)
+             AS sum_r2_sq
+  FROM rsum
+),
+b AS (
+  SELECT CAST(count(DISTINCT mx) AS BIGINT) AS b_months FROM comp
+)
+SELECT b.b_months, agg.k AS k_groups,
+       CAST(agg.sum_r2_sq AS BIGINT) AS sum_r2_sq,
+       CASE WHEN b.b_months > 0 AND agg.k > 1 THEN
+         CAST(3000 * agg.sum_r2_sq
+              // (4 * b.b_months * agg.k * (agg.k + 1)) AS BIGINT)
+         - 3000 * b.b_months * (agg.k + 1)
+       END AS chi2_milli
+FROM b CROSS JOIN agg
+""",
+)
+def friedman_test_priorities_monthly(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """FRIEDMAN rank test for k related samples — the blocked-design
+    nonparametric ANOVA (months are blocks, the 5 order priorities
+    are treatments, monthly revenue is the response): χ² =
+    12/(bk(k+1))·ΣR_j² − 3b(k+1) on within-block ranks, the test
+    kendall_w rescales into agreement (W = χ²/(b(k−1))) and
+    page_trend_test orders — this publishes the plain omnibus
+    member. Exactness: average ranks are kept on the ×2 integer grid
+    (2·rank + ties − 1, the tie-stable discrete doctrine), so ΣR2² =
+    4·ΣR² is exact and χ²·1000 = 3000·ΣR2²/(4bk(k+1)) − 3000b(k+1)
+    — ONE floor-division with the constant pulled outside the floor
+    (constant-minus doctrine; tie-uncorrected variant, documented).
+    Only months observing all k priorities enter (complete blocks).
+    Scale: one month×priority rollup (calendar-bounded domain), one
+    per-block rank window."""
+    comp = _month_prio_complete(spark, sf_dir)
+    r2 = (
+        2 * F.rank().over(Window.partitionBy("mx").orderBy("rev"))
+        + F.count("*").over(Window.partitionBy("mx", "rev"))
+        - 1
+    ).cast("long")
+    rk = comp.select("mx", "g", r2.alias("r2"))
+    rsum = rk.groupBy("g").agg(F.sum("r2").alias("r2_sum"))
+    agg = rsum.agg(
+        F.count("*").alias("k"),
+        F.sum(F.col("r2_sum").cast(DEC38) * F.col("r2_sum")).alias(
+            "sum_r2_sq"
+        ),
+    )
+    b = comp.agg(F.count_distinct("mx").alias("b_months"))
+    return b.crossJoin(F.broadcast(agg)).select(
+        "b_months",
+        F.col("k").alias("k_groups"),
+        F.col("sum_r2_sq").cast("long").alias("sum_r2_sq"),
+        F.expr(
+            "CASE WHEN b_months > 0 AND k > 1 THEN"
+            " CAST(3000 * sum_r2_sq"
+            " div (4 * b_months * k * (k + 1)) AS BIGINT)"
+            " - 3000 * b_months * (k + 1) END"
+        ).alias("chi2_milli"),
+    )
+
+
+@register(
+    "cronbach_alpha_priorities_monthly",
+    oracle="""
+WITH
+""" + _MONTH_PRIO_CTES + """,
+bb AS (SELECT CAST(count(DISTINCT mx) AS BIGINT) AS b FROM comp),
+item AS (
+  SELECT g, CAST(SUM(rev) AS BIGINT) AS si,
+         CAST(SUM(CAST(rev AS HUGEINT) * rev) AS HUGEINT) AS qi
+  FROM comp GROUP BY g
+),
+dsum AS (
+  SELECT CAST(count(*) AS BIGINT) AS k,
+         CAST(SUM(bb.b * qi - CAST(si AS HUGEINT) * si) AS HUGEINT)
+             AS d_items
+  FROM item CROSS JOIN bb GROUP BY bb.b
+),
+tm AS (
+  SELECT mx, CAST(SUM(rev) AS BIGINT) AS tv FROM comp GROUP BY mx
+),
+dtot AS (
+  SELECT CAST(bb.b * SUM(CAST(tv AS HUGEINT) * tv)
+              - CAST(SUM(tv) AS HUGEINT) * SUM(tv) AS HUGEINT) AS d_t
+  FROM tm CROSS JOIN bb GROUP BY bb.b
+)
+SELECT bb.b AS b_months, dsum.k AS k_items,
+       CASE WHEN dtot.d_t > 0 AND dsum.k > 1
+                 AND CAST(dsum.k AS DOUBLE)
+                     * abs(CAST(dtot.d_t AS DOUBLE)) * 1000 < 1e37
+            THEN CASE WHEN dtot.d_t - dsum.d_items >= 0
+                 THEN CAST(dsum.k * (dtot.d_t - dsum.d_items) * 1000
+                           // ((dsum.k - 1) * dtot.d_t) AS BIGINT)
+                 ELSE -CAST(dsum.k * (dsum.d_items - dtot.d_t) * 1000
+                            // ((dsum.k - 1) * dtot.d_t) AS BIGINT)
+                 END
+       END AS alpha_milli
+FROM bb CROSS JOIN dsum CROSS JOIN dtot
+""",
+)
+def cronbach_alpha_priorities_monthly(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """CRONBACH'S ALPHA internal-consistency reliability — the
+    psychometric workhorse (α = k/(k−1)·(1 − Σσᵢ²/σ_T²)) read over
+    the month×priority revenue matrix: months are subjects, the 5
+    priorities are items, and α asks whether the priority revenue
+    streams move together month to month (the reliability face of
+    what kendall_w measures in ranks). Exactness: every variance is
+    the n-scaled moment b·Q − S² (exact decimal(38,0) ⟷ HUGEINT on
+    the same complete-block b), so α = k·(D_T − ΣDᵢ)/((k−1)·D_T) is
+    a ratio of exact integers, published milli with the SIGN-SPLIT
+    floor (α < 0 happens when items anticorrelate; Spark div
+    truncates, DuckDB // floors). Degenerate zero total variance
+    NULLs via the same CASE; the 10³⁷ double guard degrades
+    identically past decimal headroom. Scale: one calendar-bounded
+    month×priority rollup; three scalar aggregates."""
+    comp = _month_prio_complete(spark, sf_dir)
+    bb = comp.agg(F.count_distinct("mx").alias("b"))
+    item = comp.groupBy("g").agg(
+        F.sum("rev").alias("si"),
+        F.sum(F.col("rev").cast(DEC38) * F.col("rev")).alias("qi"),
+    )
+    dsum = (
+        item.crossJoin(F.broadcast(bb))
+        .groupBy("b")
+        .agg(
+            F.count("*").alias("k"),
+            F.sum(
+                F.col("b") * F.col("qi")
+                - F.col("si").cast(DEC38) * F.col("si")
+            ).alias("d_items"),
+        )
+    )
+    tm = comp.groupBy("mx").agg(F.sum("rev").alias("tv"))
+    dtot = (
+        tm.crossJoin(F.broadcast(bb))
+        .groupBy("b")
+        .agg(
+            (
+                F.first("b")
+                * F.sum(F.col("tv").cast(DEC38) * F.col("tv"))
+                - F.sum("tv").cast(DEC38) * F.sum("tv")
+            ).alias("d_t")
+        )
+        .select("d_t")
+    )
+    return (
+        bb.crossJoin(F.broadcast(dsum.select("k", "d_items")))
+        .crossJoin(F.broadcast(dtot))
+        .select(
+            F.col("b").alias("b_months"),
+            F.col("k").alias("k_items"),
+            F.expr(
+                "CASE WHEN d_t > 0 AND k > 1"
+                " AND CAST(k AS DOUBLE) * abs(CAST(d_t AS DOUBLE))"
+                " * 1000 < 1e37 THEN"
+                " CASE WHEN d_t - d_items >= 0"
+                " THEN CAST(k * (d_t - d_items) * 1000"
+                " div ((k - 1) * d_t) AS BIGINT)"
+                " ELSE -CAST(k * (d_items - d_t) * 1000"
+                " div ((k - 1) * d_t) AS BIGINT) END END"
+            ).alias("alpha_milli"),
+        )
+    )
+
+
+@register(
+    "jonckheere_terpstra_priorities",
+    oracle="""
+WITH v AS (
+  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS x,
+         o_orderpriority AS g
+  FROM orders
+),
+cnts AS (
+  SELECT x,
+         CAST(SUM(CASE WHEN g = '1-URGENT' THEN 1 ELSE 0 END)
+              AS BIGINT) AS c1,
+         CAST(SUM(CASE WHEN g = '2-HIGH' THEN 1 ELSE 0 END)
+              AS BIGINT) AS c2,
+         CAST(SUM(CASE WHEN g = '3-MEDIUM' THEN 1 ELSE 0 END)
+              AS BIGINT) AS c3,
+         CAST(SUM(CASE WHEN g = '4-NOT SPECIFIED' THEN 1 ELSE 0 END)
+              AS BIGINT) AS c4,
+         CAST(SUM(CASE WHEN g = '5-LOW' THEN 1 ELSE 0 END)
+              AS BIGINT) AS c5
+  FROM v GROUP BY x
+),
+cum AS (
+  SELECT x, c1, c2, c3, c4, c5,
+         COALESCE(SUM(c1) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
+                  PRECEDING AND 1 PRECEDING), 0) AS l1,
+         COALESCE(SUM(c2) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
+                  PRECEDING AND 1 PRECEDING), 0) AS l2,
+         COALESCE(SUM(c3) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
+                  PRECEDING AND 1 PRECEDING), 0) AS l3,
+         COALESCE(SUM(c4) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
+                  PRECEDING AND 1 PRECEDING), 0) AS l4
+  FROM cnts
+),
+jt AS (
+  SELECT CAST(SUM(
+           CAST(c2 AS HUGEINT) * (2 * l1 + c1)
+         + CAST(c3 AS HUGEINT) * (2 * l1 + c1 + 2 * l2 + c2)
+         + CAST(c4 AS HUGEINT) * (2 * l1 + c1 + 2 * l2 + c2
+                                  + 2 * l3 + c3)
+         + CAST(c5 AS HUGEINT) * (2 * l1 + c1 + 2 * l2 + c2
+                                  + 2 * l3 + c3 + 2 * l4 + c4)
+         ) AS HUGEINT) AS jt2
+  FROM cum
+),
+gn AS (
+  SELECT CAST(SUM(c1 + c2 + c3 + c4 + c5) AS BIGINT) AS n,
+         CAST(SUM(c1) AS BIGINT) * CAST(SUM(c1) AS BIGINT)
+         + CAST(SUM(c2) AS BIGINT) * CAST(SUM(c2) AS BIGINT)
+         + CAST(SUM(c3) AS BIGINT) * CAST(SUM(c3) AS BIGINT)
+         + CAST(SUM(c4) AS BIGINT) * CAST(SUM(c4) AS BIGINT)
+         + CAST(SUM(c5) AS BIGINT) * CAST(SUM(c5) AS BIGINT)
+             AS sum_n_sq
+  FROM cnts
+)
+SELECT gn.n AS n_total,
+       CASE WHEN CAST(gn.n AS DOUBLE) < 3e9
+            THEN CAST(jt.jt2 AS BIGINT) END AS jt2,
+       CASE WHEN CAST(gn.n AS DOUBLE) < 3e9
+            THEN CAST(2 * jt.jt2
+                      - (CAST(gn.n AS HUGEINT) * gn.n - gn.sum_n_sq)
+                      AS BIGINT) END AS dev_x4
+FROM gn CROSS JOIN jt
+""",
+)
+def jonckheere_terpstra_priorities(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """JONCKHEERE-TERPSTRA ordered-alternatives test — the k-sample
+    trend test (H₁: order value shifts MONOTONICALLY across the
+    ordinal priority classes 1-URGENT → 5-LOW) that beats
+    kruskal_wallis exactly when the alternative is ordered, computed
+    WITHOUT the naive Σ n_i·n_j pairwise comparisons: one pass over
+    the DISTINCT value domain carries per-group counts plus
+    strictly-less running sums, and JT = Σ_{i<j} U_ij becomes one
+    windowed scan (U_ij = Σ_v c_j(v)·[lt_i(v) + ½c_i(v)]). Ties are
+    kept exact on the ×2 grid (JT2 = 2·JT, all integers). dev_x4 =
+    4·(JT − E[JT]) with E[JT] = (N² − Σn_i²)/4 — the centered
+    statistic, still exact. The N < 3·10⁹ guard (N² must fit int64)
+    NULLs identically in both engines past that. Scale: one
+    value-domain rollup + one ordered window — work is O(distinct
+    values), never O(N²)."""
+    o = load_table(spark, sf_dir, "orders")
+    v = o.select(
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("x"),
+        F.col("o_orderpriority").alias("g"),
+    )
+    prios = [
+        ("c1", "1-URGENT"),
+        ("c2", "2-HIGH"),
+        ("c3", "3-MEDIUM"),
+        ("c4", "4-NOT SPECIFIED"),
+        ("c5", "5-LOW"),
+    ]
+    cnts = v.groupBy("x").agg(
+        *[
+            F.sum(F.when(F.col("g") == p, 1).otherwise(0)).alias(c)
+            for c, p in prios
+        ]
+    )
+    wl = Window.orderBy("x").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    cum = cnts.select(
+        "x",
+        "c1",
+        "c2",
+        "c3",
+        "c4",
+        "c5",
+        *[
+            F.coalesce(F.sum(f"c{i}").over(wl), F.lit(0)).alias(f"l{i}")
+            for i in range(1, 5)
+        ],
+    )
+    jt = cum.agg(
+        F.sum(
+            F.expr(
+                f"CAST(c2 AS {DEC38}) * (2 * l1 + c1)"
+                f" + CAST(c3 AS {DEC38}) * (2 * l1 + c1 + 2 * l2 + c2)"
+                f" + CAST(c4 AS {DEC38}) * (2 * l1 + c1 + 2 * l2 + c2"
+                f" + 2 * l3 + c3)"
+                f" + CAST(c5 AS {DEC38}) * (2 * l1 + c1 + 2 * l2 + c2"
+                f" + 2 * l3 + c3 + 2 * l4 + c4)"
+            )
+        ).alias("jt2")
+    )
+    gn = cnts.agg(
+        F.sum(
+            F.col("c1") + F.col("c2") + F.col("c3") + F.col("c4")
+            + F.col("c5")
+        ).alias("n"),
+        (
+            F.sum("c1") * F.sum("c1")
+            + F.sum("c2") * F.sum("c2")
+            + F.sum("c3") * F.sum("c3")
+            + F.sum("c4") * F.sum("c4")
+            + F.sum("c5") * F.sum("c5")
+        ).alias("sum_n_sq"),
+    )
+    return gn.crossJoin(F.broadcast(jt)).select(
+        F.col("n").alias("n_total"),
+        F.expr(
+            "CASE WHEN CAST(n AS DOUBLE) < 3e9"
+            " THEN CAST(jt2 AS BIGINT) END"
+        ).alias("jt2"),
+        F.expr(
+            f"CASE WHEN CAST(n AS DOUBLE) < 3e9"
+            f" THEN CAST(2 * jt2"
+            f" - (CAST(n AS {DEC38}) * n - sum_n_sq) AS BIGINT) END"
+        ).alias("dev_x4"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Audit sketches: Benford second digit, log2-histogram quantiles
+# ---------------------------------------------------------------------------
+
+
+# Benford second-significant-digit expected frequencies, ppm:
+# P(d) = sum over d1 in 1..9 of log10(1 + 1/(10*d1 + d)), the ONLY
+# transcendental — frozen as rational literals shared verbatim by
+# both engines (the hard-coded-constant doctrine).
+_BENFORD2_PPM = [
+    (0, 119679),
+    (1, 113890),
+    (2, 108821),
+    (3, 104330),
+    (4, 100308),
+    (5, 96677),
+    (6, 93375),
+    (7, 90352),
+    (8, 87570),
+    (9, 84997),
+]
+
+_BENFORD2_VALUES = ", ".join(f"({d}, {p})" for d, p in _BENFORD2_PPM)
+
+
+@register(
+    "benford_second_digit_audit",
+    oracle=f"""
+WITH d AS (
+  SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
+                          AS VARCHAR), 2, 1) AS BIGINT) AS digit
+  FROM orders
+  WHERE o_totalprice > 0
+    AND length(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
+                    AS VARCHAR)) >= 2
+),
+c AS (
+  SELECT digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY digit
+),
+t AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM c),
+exp_t AS (SELECT * FROM (VALUES {_BENFORD2_VALUES}) AS v(digit, p_ppm)),
+j AS (
+  SELECT e.digit, COALESCE(c.n, 0) AS n,
+         CAST(e.p_ppm AS BIGINT) AS expected_ppm,
+         CAST(t.total * e.p_ppm AS BIGINT) AS e_micro
+  FROM exp_t e LEFT JOIN c ON c.digit = e.digit CROSS JOIN t
+)
+SELECT CAST(digit AS BIGINT) AS digit, n, expected_ppm,
+       CASE WHEN e_micro > 0 THEN
+         CAST((CAST(n * 1000000 - e_micro AS HUGEINT)
+               * (n * 1000000 - e_micro))
+              // (CAST(e_micro AS HUGEINT) * 1000) AS BIGINT)
+       END AS chi2_term_milli
+FROM j ORDER BY digit
+""",
+)
+def benford_second_digit_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """BENFORD SECOND-DIGIT audit of order amounts — the forensic
+    accounting follow-up to benford_first_digit_audit (fabricators
+    who learn the first-digit law still flunk the second digit;
+    Nigrini's standard two-test battery), upgraded with the
+    inference the first-digit query leaves to the reader: per digit,
+    the χ² contribution (n_d − N·p_d)²/(N·p_d) against the Benford
+    expectation — the expected frequencies Σ log₁₀(1+1/(10d₁+d))
+    are the only transcendental and are FROZEN as ppm literals
+    shared verbatim by both engines. χ² terms are exact integer
+    arithmetic on the µ-count grid, milli-floored per digit (the
+    caller sums 10 terms for the statistic); digits with zero
+    observations still contribute via the 10-row literal spine.
+    Digit extraction is position 2 of the exact cents string. Scale:
+    one digit rollup; 10-row output."""
+    spine = [
+        F.struct(
+            F.lit(d).cast("long").alias("digit"),
+            F.lit(p).cast("long").alias("p_ppm"),
+        )
+        for d, p in _BENFORD2_PPM
+    ]
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_totalprice") > 0
+    )
+    cents_str = F.round(F.col("o_totalprice") * 100).cast("long").cast(
+        "string"
+    )
+    d = o.select(
+        F.substring(cents_str, 2, 1).cast("long").alias("digit")
+    ).filter(F.length(cents_str) >= 2)
+    c = d.groupBy("digit").agg(F.count("*").alias("cn"))
+    t = c.agg(F.sum("cn").alias("total"))
+    exp_t = (
+        load_table(spark, sf_dir, "region")
+        .limit(1)
+        .select(F.explode(F.array(*spine)).alias("e"))
+        .select(F.col("e.digit").alias("edigit"), F.col("e.p_ppm"))
+    )
+    j = (
+        exp_t.join(c, F.col("edigit") == F.col("digit"), "left")
+        .crossJoin(F.broadcast(t))
+        .select(
+            F.col("edigit").alias("digit"),
+            F.coalesce(F.col("cn"), F.lit(0)).alias("n"),
+            F.col("p_ppm").alias("expected_ppm"),
+            (F.col("total") * F.col("p_ppm")).alias("e_micro"),
+        )
+    )
+    return j.select(
+        "digit",
+        "n",
+        "expected_ppm",
+        F.expr(
+            f"CASE WHEN e_micro > 0 THEN"
+            f" CAST((CAST(n * 1000000 - e_micro AS {DEC38})"
+            f" * (n * 1000000 - e_micro))"
+            f" div (CAST(e_micro AS {DEC38}) * 1000) AS BIGINT) END"
+        ).alias("chi2_term_milli"),
+    ).orderBy("digit")
+
+
+@register(
+    "sketch_log2_histogram_quantiles",
+    oracle="""
+WITH v AS (
+  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+  FROM orders WHERE o_totalprice > 0
+),
+b AS (
+  SELECT CAST(length(bin(cents)) - 1 AS BIGINT) AS bucket,
+         CAST(count(*) AS BIGINT) AS n
+  FROM v GROUP BY 1
+),
+c AS (
+  SELECT bucket, n,
+         CAST(SUM(n) OVER (ORDER BY bucket
+                           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
+         CAST(SUM(n) OVER () AS BIGINT) AS total
+  FROM b
+)
+SELECT bucket, n, cum,
+       CAST(1 << bucket AS BIGINT) AS lo_cents,
+       CASE WHEN cum - n < (total + 1) // 2
+                 AND (total + 1) // 2 <= cum
+            THEN 1 ELSE 0 END AS contains_median,
+       CASE WHEN cum - n < (9 * total + 9) // 10
+                 AND (9 * total + 9) // 10 <= cum
+            THEN 1 ELSE 0 END AS contains_p90
+FROM c ORDER BY bucket
+""",
+)
+def sketch_log2_histogram_quantiles(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """POWER-OF-TWO-BUCKET HISTOGRAM quantile sketch over order
+    amounts — the DDSketch/HdrHistogram idea (log-spaced buckets
+    give bounded RELATIVE error; base 2 gives a 100% worst-case
+    relative bound) with the bucket index computed EXACTLY in both
+    engines: floor(log₂ cents) = length(bin(cents)) − 1 — a string
+    length, not a transcendental (IEEE log2 is NOT guaranteed
+    correctly rounded near powers of two; bin() is exact at any
+    magnitude). The sketch is one tiny mergeable map {bucket →
+    count} (≤ 64 entries at ANY corpus size — the sketch_hll
+    mergeability argument), and the discrete median / p90 ranks
+    (n+1)//2 and ceil(0.9n) land in buckets via exact cumulative
+    counts; the bucket lower bound 2^b (one integer shift) is the
+    quantile estimate with ≤ 2× relative error. Scale: one
+    map-side-combinable bucket rollup; ~15-row output."""
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_totalprice") > 0
+    )
+    v = o.select(
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
+    )
+    b = v.groupBy(
+        (F.length(F.bin("cents")) - 1).cast("long").alias("bucket")
+    ).agg(F.count("*").alias("n"))
+    wc = Window.orderBy("bucket").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    c = b.select(
+        "bucket",
+        "n",
+        F.sum("n").over(wc).alias("cum"),
+        F.sum("n").over(Window.partitionBy()).alias("total"),
+    )
+    return c.select(
+        "bucket",
+        "n",
+        "cum",
+        F.expr(
+            "CAST(shiftleft(CAST(1 AS BIGINT), CAST(bucket AS INT))"
+            " AS BIGINT)"
+        ).alias("lo_cents"),
+        F.expr(
+            "CASE WHEN cum - n < (total + 1) div 2"
+            " AND (total + 1) div 2 <= cum THEN 1 ELSE 0 END"
+        ).alias("contains_median"),
+        F.expr(
+            "CASE WHEN cum - n < (9 * total + 9) div 10"
+            " AND (9 * total + 9) div 10 <= cum THEN 1 ELSE 0 END"
+        ).alias("contains_p90"),
+    ).orderBy("bucket")
+
+
+# ---------------------------------------------------------------------------
+# Statistical process control: attribute charts + zone rules
+# ---------------------------------------------------------------------------
+
+_PCHART_UCL = (
+    "CAST(floor((CAST(dd AS DOUBLE) * 1000000"
+    " + 3000000 * sqrt(CAST(dd AS DOUBLE) * (nn - dd) / ni)) / nn)"
+    " AS BIGINT)"
+)
+_PCHART_LCL = (
+    "GREATEST(CAST(0 AS BIGINT),"
+    " CAST(floor((CAST(dd AS DOUBLE) * 1000000"
+    " - 3000000 * sqrt(CAST(dd AS DOUBLE) * (nn - dd) / ni)) / nn)"
+    " AS BIGINT))"
+)
+
+
+@register(
+    "p_chart_monthly_returns",
+    oracle="""
+WITH m AS (
+  SELECT CAST(EXTRACT(year FROM CAST(l_shipdate AS DATE)) * 100
+              + EXTRACT(month FROM CAST(l_shipdate AS DATE)) AS BIGINT)
+             AS ym,
+         CAST(count(*) AS BIGINT) AS ni,
+         CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
+              AS BIGINT) AS di
+  FROM lineitem GROUP BY 1
+),
+g AS (
+  SELECT CAST(SUM(ni) AS BIGINT) AS nn, CAST(SUM(di) AS BIGINT) AS dd
+  FROM m
+),
+lim AS (
+  SELECT m.ym, m.ni, m.di, g.nn, g.dd,
+         CAST(m.di * 1000000 // m.ni AS BIGINT) AS phat_ppm,
+         """ + _PCHART_UCL + """ AS ucl_ppm,
+         """ + _PCHART_LCL + """ AS lcl_ppm
+  FROM m, g
+)
+SELECT ym, ni AS n_lines, di AS n_returned, phat_ppm, ucl_ppm, lcl_ppm,
+       CAST(CASE WHEN phat_ppm > ucl_ppm THEN 1 ELSE 0 END AS INT)
+           AS above_ucl,
+       CAST(CASE WHEN phat_ppm < lcl_ppm THEN 1 ELSE 0 END AS INT)
+           AS below_lcl
+FROM lim ORDER BY ym
+""",
+)
+def p_chart_monthly_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """p-CHART (attribute control chart) of the monthly lineitem
+    return fraction — Shewhart limits p̄ ± 3·√(p̄(1−p̄)/nᵢ) with
+    VARYING subgroup sizes (each month's limit uses its own nᵢ —
+    the defining feature of the p-chart vs the np-chart). Exactness:
+    p̄(1−p̄)/nᵢ = D·(N−D)/(N²·nᵢ), so each limit is ONE double
+    expression over three exact integers (D·(N−D) ≈ 10¹¹ ≪ 2⁵³ —
+    exact in DOUBLE), one sqrt, one division, one floor onto the ppm
+    grid, written as the SAME SQL text in both engines; the plotted
+    statistic p̂ᵢ is the exact non-negative ppm floor-division and
+    violation flags compare ON THE PPM GRID (documented — the grid
+    is the published contract). LCL clamps at 0 via GREATEST. Scale:
+    one map-side monthly rollup + a 1-row broadcast of the grand
+    totals."""
+    li = load_table(spark, sf_dir, "lineitem")
+    m = li.groupBy(
+        (
+            F.year(F.to_date("l_shipdate")).cast("long") * 100
+            + F.month(F.to_date("l_shipdate")).cast("long")
+        ).alias("ym")
+    ).agg(
+        F.count("*").alias("ni"),
+        F.sum(
+            F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+        ).alias("di"),
+    )
+    g = m.agg(
+        F.sum("ni").alias("nn"), F.sum("di").alias("dd")
+    )
+    lim = m.crossJoin(F.broadcast(g)).selectExpr(
+        "ym",
+        "ni",
+        "di",
+        "CAST(di * 1000000 div ni AS BIGINT) AS phat_ppm",
+        _PCHART_UCL + " AS ucl_ppm",
+        _PCHART_LCL + " AS lcl_ppm",
+    )
+    return lim.selectExpr(
+        "ym",
+        "ni AS n_lines",
+        "di AS n_returned",
+        "phat_ppm",
+        "ucl_ppm",
+        "lcl_ppm",
+        "CAST(CASE WHEN phat_ppm > ucl_ppm THEN 1 ELSE 0 END AS INT)"
+        " AS above_ucl",
+        "CAST(CASE WHEN phat_ppm < lcl_ppm THEN 1 ELSE 0 END AS INT)"
+        " AS below_lcl",
+    ).orderBy("ym")
+
+
+# ---------------------------------------------------------------------------
+# Diversity / concentration indices
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "ecological_diversity_brands_by_nation",
+    oracle="""
+WITH bc AS (
+  SELECT n.n_nationkey AS nation, p.p_brand AS brand,
+         CAST(count(*) AS BIGINT) AS c
+  FROM lineitem l
+  JOIN orders o ON o.o_orderkey = l.l_orderkey
+  JOIN customer cu ON cu.c_custkey = o.o_custkey
+  JOIN nation n ON n.n_nationkey = cu.c_nationkey
+  JOIN part p ON p.p_partkey = l.l_partkey
+  GROUP BY 1, 2
+),
+m AS (
+  SELECT nation,
+         CAST(count(*) AS BIGINT) AS richness,
+         CAST(SUM(c) AS BIGINT) AS n,
+         CAST(SUM(CAST(c AS HUGEINT) * (c - 1)) AS HUGEINT) AS rep2,
+         CAST(MAX(c) AS BIGINT) AS cmax
+  FROM bc GROUP BY 1
+)
+SELECT nation, richness, n,
+       CASE WHEN n > 1
+            THEN CAST(rep2 * 1000000 // (CAST(n AS HUGEINT) * (n - 1))
+                      AS BIGINT) END AS simpson_ppm,
+       CASE WHEN rep2 > 0
+            THEN CAST(CAST(n AS HUGEINT) * (n - 1) * 1000000 // rep2
+                      AS BIGINT) END AS inv_simpson_ppm,
+       CAST(cmax * 1000000 // n AS BIGINT) AS berger_parker_ppm,
+       CASE WHEN rep2 > 0
+            THEN CAST(CAST(n AS HUGEINT) * (n - 1) * 1000000
+                      // (rep2 * richness) AS BIGINT)
+       END AS simpson_evenness_ppm
+FROM m ORDER BY nation
+""",
+)
+def ecological_diversity_brands_by_nation(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ECOLOGICAL DIVERSITY PROFILE of purchased part brands per
+    customer nation — the community-ecology index battery on
+    categorical purchase mixes: richness (distinct brands), the
+    UNBIASED Simpson concentration Σc(c−1)/n(n−1) (probability two
+    random purchases without replacement share a brand — a rational
+    in the counts, unlike entropy), its inverse ("effective number
+    of brands", Hill number of order 2), Berger–Parker dominance
+    (share of the single biggest brand), and Simpson evenness
+    (inverse-Simpson over richness). Distinct from
+    event_type_diversity_impurity (per-user Gini impurity of event
+    types — biased form, different grain and table). All ratios are
+    non-negative HUGEINT ⟷ decimal(38,0) ppm floor-divisions.
+    Scale: one 4-way dim join (dims broadcastable), two stacked
+    map-side aggregations on (nation, brand) then (nation)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    cu = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    p = load_table(spark, sf_dir, "part")
+    bc = (
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .join(cu, o["o_custkey"] == cu["c_custkey"])
+        .join(F.broadcast(n), cu["c_nationkey"] == n["n_nationkey"])
+        .join(p, li["l_partkey"] == p["p_partkey"])
+        .groupBy(
+            F.col("n_nationkey").alias("nation"),
+            F.col("p_brand").alias("brand"),
+        )
+        .agg(F.count("*").alias("c"))
+    )
+    m = bc.groupBy("nation").agg(
+        F.count("*").alias("richness"),
+        F.sum("c").alias("n"),
+        F.sum(F.col("c").cast(DEC38) * (F.col("c") - 1)).alias("rep2"),
+        F.max("c").alias("cmax"),
+    )
+    return m.selectExpr(
+        "nation",
+        "richness",
+        "n",
+        "CASE WHEN n > 1 THEN CAST(rep2 * 1000000"
+        f" div (CAST(n AS {DEC38}) * (n - 1)) AS BIGINT) END"
+        " AS simpson_ppm",
+        f"CASE WHEN rep2 > 0 THEN CAST(CAST(n AS {DEC38}) * (n - 1)"
+        " * 1000000 div rep2 AS BIGINT) END AS inv_simpson_ppm",
+        "CAST(cmax * 1000000 div n AS BIGINT) AS berger_parker_ppm",
+        f"CASE WHEN rep2 > 0 THEN CAST(CAST(n AS {DEC38}) * (n - 1)"
+        " * 1000000 div (rep2 * richness) AS BIGINT) END"
+        " AS simpson_evenness_ppm",
+    ).orderBy("nation")
+
+
+@register(
+    "atkinson_index_customers",
+    oracle="""
+WITH cr AS (
+  SELECT o_custkey,
+         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             AS x
+  FROM orders GROUP BY 1
+),
+pos AS (SELECT x FROM cr WHERE x > 0),
+m AS (
+  SELECT CAST(count(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS t,
+         CAST(SUM(1000000000000 // x) AS HUGEINT) AS rsum
+  FROM pos
+)
+SELECT n, t AS total_cents, CAST(rsum AS BIGINT) AS recip_sum_pico,
+       CASE WHEN t > 0 AND rsum > 0
+            THEN 1000000 - CAST(CAST(n AS HUGEINT) * n
+                 * 1000000000000000000 // (CAST(t AS HUGEINT) * rsum)
+                 AS BIGINT)
+       END AS atkinson2_ppm
+FROM m
+""",
+)
+def atkinson_index_customers(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ATKINSON INEQUALITY INDEX (ε = 2) over per-customer order
+    revenue — the welfare-theoretic inequality measure with an
+    explicit aversion parameter; at ε = 2 the equally-distributed
+    equivalent is the HARMONIC mean, so A = 1 − H/μ = 1 −
+    n²/(T·Σ1/xᵢ) is a pure RATIONAL in the data (ε = 1 would need
+    the geometric mean's logs — banned from hash-gated outputs).
+    Complements gini_customer_revenue / ge2_inequality (Gini weights
+    transfers by rank, GE(2) by distance; Atkinson-2 is
+    bottom-sensitive — transfers among the poorest dominate). The
+    reciprocal sum is per-term floored on the pico grid (Σ 10¹²//xᵢ,
+    the discrete variant, documented); the final index is one
+    HUGEINT ⟷ decimal(38,0) ppm floor-division. Zero-revenue
+    customers are excluded (H degenerates at x = 0). Scale: one
+    customer rollup, one 1-row reduce."""
+    o = load_table(spark, sf_dir, "orders")
+    cr = o.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+            "x"
+        )
+    )
+    pos = cr.filter(F.col("x") > 0)
+    m = pos.agg(
+        F.count("*").alias("n"),
+        F.sum("x").alias("t"),
+        F.sum(F.expr("1000000000000 div x").cast(DEC38)).alias("rsum"),
+    )
+    return m.selectExpr(
+        "n",
+        "t AS total_cents",
+        "CAST(rsum AS BIGINT) AS recip_sum_pico",
+        "CASE WHEN t > 0 AND rsum > 0 THEN 1000000 -"
+        f" CAST(CAST(n AS {DEC38}) * n * 1000000000000000000"
+        f" div (CAST(t AS {DEC38}) * rsum) AS BIGINT) END"
+        " AS atkinson2_ppm",
+    )
+
+
+@register(
+    "palma_hoover_customers",
+    oracle="""
+WITH cr AS (
+  SELECT o_custkey,
+         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             AS x
+  FROM orders GROUP BY 1
+),
+rk AS (
+  SELECT x,
+         row_number() OVER (ORDER BY x, o_custkey) AS ra,
+         row_number() OVER (ORDER BY x DESC, o_custkey DESC) AS rd
+  FROM cr
+),
+g AS (
+  SELECT CAST(count(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS t
+  FROM rk
+),
+parts AS (
+  SELECT g.n, g.t,
+         CAST(g.n // 10 AS BIGINT) AS n10,
+         CAST(4 * g.n // 10 AS BIGINT) AS n40,
+         CAST(SUM(CASE WHEN rk.rd <= g.n // 10 THEN rk.x ELSE 0 END)
+              AS BIGINT) AS top10,
+         CAST(SUM(CASE WHEN rk.ra <= 4 * g.n // 10 THEN rk.x ELSE 0
+              END) AS BIGINT) AS bot40,
+         CAST(SUM(ABS(CAST(g.n AS HUGEINT) * rk.x - g.t)) AS HUGEINT)
+             AS sdev
+  FROM rk, g GROUP BY g.n, g.t
+)
+SELECT n, t AS total_cents, n10, n40,
+       top10 AS top10_cents, bot40 AS bottom40_cents,
+       CASE WHEN bot40 > 0
+            THEN CAST(CAST(top10 AS HUGEINT) * 1000000 // bot40
+                      AS BIGINT) END AS palma_ppm,
+       CASE WHEN t > 0
+            THEN CAST(sdev * 1000000 // (2 * CAST(n AS HUGEINT) * t)
+                      AS BIGINT) END AS hoover_ppm
+FROM parts
+""",
+)
+def palma_hoover_customers(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PALMA RATIO + HOOVER INDEX over per-customer order revenue —
+    the two inequality summaries policy economists quote alongside
+    Gini: Palma (total revenue of the top 10% of customers over the
+    bottom 40%, on exact floor-count group sizes n//10 and 4n//10
+    with deterministic revenue-then-key rank tie-breaks) and Hoover
+    (the share of total revenue that would have to move to equalize:
+    Σ|n·xᵢ − T|/(2nT) — the maximum Lorenz-to-diagonal gap, exact
+    HUGEINT ⟷ decimal(38,0)). Both publish as non-negative ppm
+    floor-divisions. Scale: one customer rollup, two rank windows,
+    one 1-row reduce."""
+    o = load_table(spark, sf_dir, "orders")
+    cr = o.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+            "x"
+        )
+    )
+    rk = cr.select(
+        "x",
+        F.row_number()
+        .over(Window.orderBy("x", "o_custkey"))
+        .alias("ra"),
+        F.row_number()
+        .over(Window.orderBy(F.desc("x"), F.desc("o_custkey")))
+        .alias("rd"),
+    )
+    g = rk.agg(F.count("*").alias("n"), F.sum("x").alias("t"))
+    parts = (
+        rk.crossJoin(F.broadcast(g))
+        .groupBy("n", "t")
+        .agg(
+            F.expr("CAST(max(n) div 10 AS BIGINT)").alias("n10"),
+            F.expr("CAST(4 * max(n) div 10 AS BIGINT)").alias("n40"),
+            F.sum(
+                F.when(
+                    F.col("rd") <= F.expr("n div 10"), F.col("x")
+                ).otherwise(0)
+            ).alias("top10"),
+            F.sum(
+                F.when(
+                    F.col("ra") <= F.expr("4 * n div 10"), F.col("x")
+                ).otherwise(0)
+            ).alias("bot40"),
+            F.sum(
+                F.abs(F.col("n").cast(DEC38) * F.col("x") - F.col("t"))
+            ).alias("sdev"),
+        )
+    )
+    return parts.selectExpr(
+        "n",
+        "t AS total_cents",
+        "n10",
+        "n40",
+        "top10 AS top10_cents",
+        "bot40 AS bottom40_cents",
+        "CASE WHEN bot40 > 0 THEN"
+        f" CAST(CAST(top10 AS {DEC38}) * 1000000 div bot40 AS BIGINT)"
+        " END AS palma_ppm",
+        "CASE WHEN t > 0 THEN CAST(sdev * 1000000"
+        f" div (2 * CAST(n AS {DEC38}) * t) AS BIGINT) END"
+        " AS hoover_ppm",
+    )
+
+
+@register(
+    "cr_concentration_brands",
+    oracle="""
+WITH br AS (
+  SELECT p.p_brand AS brand,
+         CAST(SUM(CAST(round(l.l_extendedprice * (1 - l.l_discount)
+                             * 100) AS BIGINT)) AS BIGINT) AS rev
+  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+  GROUP BY 1
+),
+rk AS (
+  SELECT rev, row_number() OVER (ORDER BY rev DESC, brand) AS rd
+  FROM br
+),
+m AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_brands,
+         CAST(SUM(rev) AS BIGINT) AS t,
+         CAST(SUM(CASE WHEN rd <= 1 THEN rev ELSE 0 END) AS BIGINT)
+             AS c1,
+         CAST(SUM(CASE WHEN rd <= 4 THEN rev ELSE 0 END) AS BIGINT)
+             AS c4,
+         CAST(SUM(CASE WHEN rd <= 8 THEN rev ELSE 0 END) AS BIGINT)
+             AS c8
+  FROM rk
+)
+SELECT n_brands, t AS total_cents,
+       CAST(CAST(c1 AS HUGEINT) * 1000000 // t AS BIGINT) AS cr1_ppm,
+       CAST(CAST(c4 AS HUGEINT) * 1000000 // t AS BIGINT) AS cr4_ppm,
+       CAST(CAST(c8 AS HUGEINT) * 1000000 // t AS BIGINT) AS cr8_ppm
+FROM m
+""",
+)
+def cr_concentration_brands(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """CONCENTRATION RATIOS CR1/CR4/CR8 of discounted revenue by part
+    brand — the antitrust screen quoted before HHI (CR4 > 0.6 ⇒
+    "highly concentrated" under the classic DOJ bands):
+    top-k revenue shares under a deterministic revenue-then-brand
+    rank. Complements hhi_concentration_monthly (HHI weights ALL
+    squared shares; CR-k reads only the head — the two disagree
+    exactly when a long tail hides behind a few leaders). Exact
+    int64 cents throughout; shares are non-negative HUGEINT ⟷
+    decimal(38,0) ppm floor-divisions. Scale: one fact-dim join
+    (part prunable to partkey+brand), one brand rollup (bounded
+    domain), one rank window on the tiny brand table."""
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    br = (
+        li.join(p.select("p_partkey", "p_brand"),
+                li["l_partkey"] == F.col("p_partkey"))
+        .groupBy(F.col("p_brand").alias("brand"))
+        .agg(
+            F.sum(
+                F.round(
+                    F.col("l_extendedprice")
+                    * (1 - F.col("l_discount"))
+                    * 100
+                ).cast("long")
+            ).alias("rev")
+        )
+    )
+    rk = br.select(
+        "rev",
+        F.row_number()
+        .over(Window.orderBy(F.desc("rev"), "brand"))
+        .alias("rd"),
+    )
+    m = rk.agg(
+        F.count("*").alias("n_brands"),
+        F.sum("rev").alias("t"),
+        F.sum(F.when(F.col("rd") <= 1, F.col("rev")).otherwise(0)).alias(
+            "c1"
+        ),
+        F.sum(F.when(F.col("rd") <= 4, F.col("rev")).otherwise(0)).alias(
+            "c4"
+        ),
+        F.sum(F.when(F.col("rd") <= 8, F.col("rev")).otherwise(0)).alias(
+            "c8"
+        ),
+    )
+    return m.selectExpr(
+        "n_brands",
+        "t AS total_cents",
+        f"CAST(CAST(c1 AS {DEC38}) * 1000000 div t AS BIGINT) AS cr1_ppm",
+        f"CAST(CAST(c4 AS {DEC38}) * 1000000 div t AS BIGINT) AS cr4_ppm",
+        f"CAST(CAST(c8 AS {DEC38}) * 1000000 div t AS BIGINT) AS cr8_ppm",
+    )
+
+
+# ---------------------------------------------------------------------------
+# ML evaluation metrics on the 'order value predicts a return' task
+# ---------------------------------------------------------------------------
+
+_LAB_CTE = """
+lab AS (
+  SELECT o.o_orderkey,
+         CAST(round(o.o_totalprice * 100) AS BIGINT) AS score,
+         CAST(max(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END)
+              AS BIGINT) AS pos
+  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+  GROUP BY 1, 2
+)
+"""
+
+
+def _lab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_returnflag"
+    )
+    return (
+        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+        .groupBy(
+            "o_orderkey",
+            F.round(F.col("o_totalprice") * 100)
+            .cast("long")
+            .alias("score"),
+        )
+        .agg(
+            F.max(
+                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+            )
+            .cast("long")
+            .alias("pos")
+        )
+    )
+
+
+@register(
+    "pr_auc_price_predicts_return",
+    oracle="""
+WITH
+""" + _LAB_CTE + """,
+per_score AS (
+  SELECT score, CAST(count(*) AS BIGINT) AS cnt,
+         CAST(SUM(pos) AS BIGINT) AS np
+  FROM lab GROUP BY score
+),
+cum AS (
+  SELECT score, cnt, np,
+         CAST(SUM(cnt) OVER (ORDER BY score DESC) AS BIGINT) AS cum_n,
+         CAST(SUM(np) OVER (ORDER BY score DESC) AS BIGINT) AS tp
+  FROM per_score
+),
+agg AS (
+  SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
+         CAST(SUM(cnt - np) AS BIGINT) AS n_neg,
+         CAST(count(*) AS BIGINT) AS n_scores,
+         CAST(SUM(CAST(np AS HUGEINT) * tp * 1000000 // cum_n)
+              AS HUGEINT) AS ap_terms
+  FROM cum
+)
+SELECT n_pos, n_neg, n_scores,
+       CAST(n_pos * 1000000 // (n_pos + n_neg) AS BIGINT)
+           AS prevalence_ppm,
+       CAST(ap_terms // n_pos AS BIGINT) AS ap_ppm
+FROM agg
+""",
+)
+def pr_auc_price_predicts_return(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """AVERAGE PRECISION (step-interpolated PR-AUC) of 'order value
+    predicts a return' — the ranking metric that matters when
+    positives are rare and ROC-AUC flatters (its baseline is the
+    prevalence, published alongside): AP = Σᵢ ΔRᵢ·Pᵢ over
+    descending-score thresholds, which with integer counts is
+    (1/n₊)·Σ npᵢ·TPᵢ/cumᵢ — each threshold term is ONE per-term
+    floored ppm division (the discrete variant, documented; all of
+    np, TP, cum are exact), the final AP one more exact integer
+    division. The cumulative runs on the per-SCORE domain which
+    scales with the fact table, so Spark uses grank's binned 2-pass
+    cumsum (with_grouped_cumsum, empty partition set, descending via
+    the negated score) — never a single-task global window.
+    Reference: roc_auc_price_predicts_return (same task, Mann-
+    Whitney identity)."""
+    from spark_lever_spark.operators.grank import with_grouped_cumsum
+
+    lab = _lab(spark, sf_dir)
+    per_score = lab.groupBy("score").agg(
+        F.count("*").alias("cnt"), F.sum("pos").alias("np")
+    )
+    neg = per_score.withColumn("nscore", -F.col("score"))
+    cum = with_grouped_cumsum(
+        neg, [], F.col("nscore"), ["nscore"], ["cnt", "np"]
+    )
+    agg = cum.agg(
+        F.sum("np").alias("n_pos"),
+        F.sum(F.col("cnt") - F.col("np")).alias("n_neg"),
+        F.count("*").alias("n_scores"),
+        F.sum(
+            F.expr(
+                f"CAST(np AS {DEC38}) * _cum_np * 1000000 div _cum_cnt"
+            )
+        ).alias("ap_terms"),
+    )
+    return agg.selectExpr(
+        "n_pos",
+        "n_neg",
+        "n_scores",
+        "CAST(n_pos * 1000000 div (n_pos + n_neg) AS BIGINT)"
+        " AS prevalence_ppm",
+        "CAST(ap_terms div n_pos AS BIGINT) AS ap_ppm",
+    )
+
+
+_MCC_SEL = (
+    "CASE WHEN (tp + fp) * (tp + fn) > 0 AND (tn + fp) * (tn + fn) > 0"
+    " THEN CAST(floor("
+    "CAST(CAST(tp AS {I}) * tn - CAST(fp AS {I}) * fn AS DOUBLE) * 1000"
+    " / sqrt(CAST(CAST(tp + fp AS {I}) * (tp + fn) * (tn + fp)"
+    " * (tn + fn) AS DOUBLE))) AS BIGINT) END"
+)
+
+
+@register(
+    "mcc_youden_price_median",
+    oracle="""
+WITH
+""" + _LAB_CTE + """,
+rk AS (
+  SELECT score, pos,
+         row_number() OVER (ORDER BY score, o_orderkey) AS rn
+  FROM lab
+),
+med AS (
+  SELECT CAST(max(CASE WHEN rn = (n + 1) // 2 THEN score END)
+              AS BIGINT) AS thr
+  FROM rk, (SELECT CAST(count(*) AS BIGINT) AS n FROM rk) g
+),
+conf AS (
+  SELECT
+    CAST(SUM(CASE WHEN pos = 1 AND score > thr THEN 1 ELSE 0 END)
+         AS BIGINT) AS tp,
+    CAST(SUM(CASE WHEN pos = 0 AND score > thr THEN 1 ELSE 0 END)
+         AS BIGINT) AS fp,
+    CAST(SUM(CASE WHEN pos = 1 AND score <= thr THEN 1 ELSE 0 END)
+         AS BIGINT) AS fn,
+    CAST(SUM(CASE WHEN pos = 0 AND score <= thr THEN 1 ELSE 0 END)
+         AS BIGINT) AS tn,
+    CAST(max(thr) AS BIGINT) AS thr
+  FROM rk, med
+)
+SELECT thr AS threshold_cents, tp, fp, fn, tn,
+       """ + duck_sql(_MCC_SEL) + """ AS mcc_milli,
+       CASE WHEN tp + fn > 0 AND fp + tn > 0
+            THEN CAST(tp * 1000000 // (tp + fn)
+                      + tn * 1000000 // (fp + tn) - 1000000 AS BIGINT)
+       END AS youden_j_ppm,
+       CASE WHEN tp + fp > 0
+            THEN CAST(tp * 1000000 // (tp + fp) AS BIGINT)
+       END AS precision_ppm,
+       CASE WHEN tp + fn > 0
+            THEN CAST(tp * 1000000 // (tp + fn) AS BIGINT)
+       END AS recall_ppm,
+       CASE WHEN 2 * tp + fp + fn > 0
+            THEN CAST(2 * tp * 1000000 // (2 * tp + fp + fn) AS BIGINT)
+       END AS f1_ppm
+FROM conf
+""",
+)
+def mcc_youden_price_median(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """MATTHEWS CORRELATION + YOUDEN'S J (+ precision/recall/F1) of
+    the median-threshold classifier 'order value > median predicts a
+    return' — the single-threshold confusion-matrix battery that
+    complements the threshold-free AUC pair: MCC is the only one of
+    the five that uses all four cells symmetrically (the binary-
+    classification Pearson φ). The threshold is the exact lower
+    median (rank (n+1)//2 under a deterministic score-then-key
+    order). MCC's denominator is one exact HUGEINT ⟷ decimal(38,0)
+    4-product, its numerator exact; ONE double conversion each, one
+    sqrt, one division, one floor onto the milli grid (floor handles
+    the negative-MCC case identically in both engines). Youden/
+    precision/recall/F1 are per-term floored non-negative ppm
+    divisions. Scale: one fact join + rollup, one rank window on the
+    order domain, one 1-row reduce."""
+    lab = _lab(spark, sf_dir)
+    rk = lab.select(
+        "score",
+        "pos",
+        F.row_number()
+        .over(Window.orderBy("score", "o_orderkey"))
+        .alias("rn"),
+    )
+    g = rk.agg(F.count("*").alias("n"))
+    med = (
+        rk.crossJoin(F.broadcast(g))
+        .agg(
+            F.max(
+                F.when(
+                    F.col("rn") == F.expr("(n + 1) div 2"),
+                    F.col("score"),
+                )
+            ).alias("thr")
+        )
+    )
+    conf = rk.crossJoin(F.broadcast(med)).agg(
+        F.sum(
+            F.when(
+                (F.col("pos") == 1) & (F.col("score") > F.col("thr")), 1
+            ).otherwise(0)
+        ).alias("tp"),
+        F.sum(
+            F.when(
+                (F.col("pos") == 0) & (F.col("score") > F.col("thr")), 1
+            ).otherwise(0)
+        ).alias("fp"),
+        F.sum(
+            F.when(
+                (F.col("pos") == 1) & (F.col("score") <= F.col("thr")),
+                1,
+            ).otherwise(0)
+        ).alias("fn"),
+        F.sum(
+            F.when(
+                (F.col("pos") == 0) & (F.col("score") <= F.col("thr")),
+                1,
+            ).otherwise(0)
+        ).alias("tn"),
+        F.max("thr").alias("thr"),
+    )
+    return conf.selectExpr(
+        "thr AS threshold_cents",
+        "tp",
+        "fp",
+        "fn",
+        "tn",
+        spark_sql(_MCC_SEL) + " AS mcc_milli",
+        "CASE WHEN tp + fn > 0 AND fp + tn > 0 THEN"
+        " CAST(tp * 1000000 div (tp + fn)"
+        " + tn * 1000000 div (fp + tn) - 1000000 AS BIGINT)"
+        " END AS youden_j_ppm",
+        "CASE WHEN tp + fp > 0 THEN"
+        " CAST(tp * 1000000 div (tp + fp) AS BIGINT)"
+        " END AS precision_ppm",
+        "CASE WHEN tp + fn > 0 THEN"
+        " CAST(tp * 1000000 div (tp + fn) AS BIGINT)"
+        " END AS recall_ppm",
+        "CASE WHEN 2 * tp + fp + fn > 0 THEN"
+        " CAST(2 * tp * 1000000 div (2 * tp + fp + fn) AS BIGINT)"
+        " END AS f1_ppm",
+    )
+
+
+@register(
+    "brier_score_band_forecast",
+    oracle="""
+WITH
+""" + _LAB_CTE + """,
+banded AS (
+  SELECT score // 500000 AS band, pos, o_orderkey % 2 AS half
+  FROM lab
+),
+train AS (
+  SELECT band, CAST(count(*) AS BIGINT) AS b,
+         CAST(SUM(pos) AS BIGINT) AS a
+  FROM banded WHERE half = 1 GROUP BY 1
+),
+test AS (
+  SELECT band, CAST(SUM(pos) AS BIGINT) AS n1,
+         CAST(count(*) - SUM(pos) AS BIGINT) AS n0
+  FROM banded WHERE half = 0 GROUP BY 1
+),
+terms AS (
+  SELECT t.band,
+         CAST((CAST(te.n1 AS HUGEINT) * (t.a - t.b) * (t.a - t.b)
+               + CAST(te.n0 AS HUGEINT) * t.a * t.a) * 1000000000000
+              // (CAST(t.b AS HUGEINT) * t.b) AS HUGEINT) AS term,
+         te.n1 + te.n0 AS nt
+  FROM train t JOIN test te ON te.band = t.band
+),
+agg AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_bands,
+         CAST(SUM(nt) AS BIGINT) AS n_test,
+         CAST(SUM(term) AS HUGEINT) AS tsum
+  FROM terms
+),
+tot AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_test_all FROM banded
+  WHERE half = 0
+)
+SELECT agg.n_bands, agg.n_test, tot.n_test_all,
+       CAST(agg.tsum // (1000000 * CAST(agg.n_test AS HUGEINT))
+            AS BIGINT) AS brier_ppm
+FROM agg, tot
+""",
+)
+def brier_score_band_forecast(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """BRIER SCORE of a held-out band-rate forecast — the proper
+    scoring rule on probabilities (not ranks): train on ODD order
+    keys (per fixed $5000 price band, forecast p̂ = returns/count, an
+    exact rational a/b), score on EVEN keys as mean (p̂ − y)².
+    The key-parity split is the house's deterministic train/test
+    idiom (grouped_split_no_leakage); fixed-width bands keep the
+    band key rank-free so train and test band identically. Per band
+    the test sum collapses exactly: n₁·(a−b)² + n₀·a² over b² — one
+    per-band pico-floored term (documented discrete variant), then
+    one exact integer division onto the ppm grid. Test rows in
+    bands unseen in training are skipped (inner join; the published
+    n_test vs n_test_all shows the skip). Scale: one fact join +
+    three band rollups on a bounded band domain."""
+    lab = _lab(spark, sf_dir)
+    banded = lab.selectExpr(
+        "score div 500000 AS band", "pos", "o_orderkey % 2 AS half"
+    )
+    train = (
+        banded.filter("half = 1")
+        .groupBy("band")
+        .agg(F.count("*").alias("b"), F.sum("pos").alias("a"))
+    )
+    test = (
+        banded.filter("half = 0")
+        .groupBy("band")
+        .agg(
+            F.sum("pos").alias("n1"),
+            (F.count("*") - F.sum("pos")).alias("n0"),
+        )
+    )
+    terms = train.join(test, "band").selectExpr(
+        "band",
+        f"CAST((CAST(n1 AS {DEC38}) * (a - b) * (a - b)"
+        f" + CAST(n0 AS {DEC38}) * a * a) * 1000000000000"
+        f" div (CAST(b AS {DEC38}) * b) AS {DEC38}) AS term",
+        "n1 + n0 AS nt",
+    )
+    agg = terms.agg(
+        F.count("*").alias("n_bands"),
+        F.sum("nt").alias("n_test"),
+        F.sum("term").alias("tsum"),
+    )
+    tot = banded.filter("half = 0").agg(
+        F.count("*").alias("n_test_all")
+    )
+    return agg.crossJoin(F.broadcast(tot)).selectExpr(
+        "n_bands",
+        "n_test",
+        "n_test_all",
+        f"CAST(tsum div (1000000 * CAST(n_test AS {DEC38})) AS BIGINT)"
+        " AS brier_ppm",
+    )
+
+
+@register(
+    "odds_risk_ratio_building_returns",
+    oracle="""
+WITH
+""" + _LAB_CTE + """,
+expo AS (
+  SELECT lab.pos,
+         CASE WHEN cu.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
+             AS exposed
+  FROM lab
+  JOIN orders o ON o.o_orderkey = lab.o_orderkey
+  JOIN customer cu ON cu.c_custkey = o.o_custkey
+),
+conf AS (
+  SELECT
+    CAST(SUM(CASE WHEN exposed = 1 AND pos = 1 THEN 1 ELSE 0 END)
+         AS BIGINT) AS a,
+    CAST(SUM(CASE WHEN exposed = 1 AND pos = 0 THEN 1 ELSE 0 END)
+         AS BIGINT) AS b,
+    CAST(SUM(CASE WHEN exposed = 0 AND pos = 1 THEN 1 ELSE 0 END)
+         AS BIGINT) AS c,
+    CAST(SUM(CASE WHEN exposed = 0 AND pos = 0 THEN 1 ELSE 0 END)
+         AS BIGINT) AS d
+  FROM expo
+)
+SELECT a, b, c, d,
+       CASE WHEN a + b > 0
+            THEN CAST(a * 1000000 // (a + b) AS BIGINT)
+       END AS risk_exposed_ppm,
+       CASE WHEN c + d > 0
+            THEN CAST(c * 1000000 // (c + d) AS BIGINT)
+       END AS risk_unexposed_ppm,
+       CASE WHEN CAST(b AS HUGEINT) * c > 0
+            THEN CAST(CAST(a AS HUGEINT) * d * 1000000
+                      // (CAST(b AS HUGEINT) * c) AS BIGINT)
+       END AS odds_ratio_ppm,
+       CASE WHEN c > 0 AND a + b > 0
+            THEN CAST(CAST(a AS HUGEINT) * (c + d) * 1000000
+                      // (CAST(c AS HUGEINT) * (a + b)) AS BIGINT)
+       END AS risk_ratio_ppm
+FROM conf
+""",
+)
+def odds_risk_ratio_building_returns(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ODDS RATIO + RISK RATIO of 'BUILDING-segment customer ⇒ order
+    has a return' — the epidemiology 2×2 effect measures that
+    newcombe_diff_ci_ab (risk DIFFERENCE) and ab_chi_square
+    (independence TEST) don't publish: OR = ad/bc (symmetric,
+    case-control-valid), RR = [a/(a+b)]/[c/(c+d)] (the direct
+    relative risk cohort studies quote — the two diverge exactly
+    when the outcome is common, visible here). All four cells are
+    exact counts; every published ratio is one non-negative HUGEINT
+    ⟷ decimal(38,0) ppm floor-division with degenerate-cell CASE
+    guards. Scale: one fact rollup + two dim joins, one 1-row
+    reduce."""
+    lab = _lab(spark, sf_dir)
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey"
+    )
+    cu = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    expo = (
+        lab.join(o, "o_orderkey")
+        .join(cu, o["o_custkey"] == cu["c_custkey"])
+        .select(
+            "pos",
+            F.when(F.col("c_mktsegment") == "BUILDING", 1)
+            .otherwise(0)
+            .alias("exposed"),
+        )
+    )
+    conf = expo.agg(
+        F.sum(
+            F.when((F.col("exposed") == 1) & (F.col("pos") == 1), 1)
+            .otherwise(0)
+        ).alias("a"),
+        F.sum(
+            F.when((F.col("exposed") == 1) & (F.col("pos") == 0), 1)
+            .otherwise(0)
+        ).alias("b"),
+        F.sum(
+            F.when((F.col("exposed") == 0) & (F.col("pos") == 1), 1)
+            .otherwise(0)
+        ).alias("c"),
+        F.sum(
+            F.when((F.col("exposed") == 0) & (F.col("pos") == 0), 1)
+            .otherwise(0)
+        ).alias("d"),
+    )
+    return conf.selectExpr(
+        "a",
+        "b",
+        "c",
+        "d",
+        "CASE WHEN a + b > 0 THEN"
+        " CAST(a * 1000000 div (a + b) AS BIGINT)"
+        " END AS risk_exposed_ppm",
+        "CASE WHEN c + d > 0 THEN"
+        " CAST(c * 1000000 div (c + d) AS BIGINT)"
+        " END AS risk_unexposed_ppm",
+        f"CASE WHEN CAST(b AS {DEC38}) * c > 0 THEN"
+        f" CAST(CAST(a AS {DEC38}) * d * 1000000"
+        f" div (CAST(b AS {DEC38}) * c) AS BIGINT)"
+        " END AS odds_ratio_ppm",
+        "CASE WHEN c > 0 AND a + b > 0 THEN"
+        f" CAST(CAST(a AS {DEC38}) * (c + d) * 1000000"
+        f" div (CAST(c AS {DEC38}) * (a + b)) AS BIGINT)"
+        " END AS risk_ratio_ppm",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Survey sampling: design effect, Horvitz-Thompson, grouped jackknife
+# ---------------------------------------------------------------------------
+
+# Deterministic unequal-probability sample of orders: segment h keeps
+# orders whose md5 bucket < 100/k_h (k = 2,3,4,5,8 by segment name
+# order) — the stable-slice idiom of sample_hash_bucket with per-
+# stratum rates, so design-based estimators have real variation.
+_SEG_RATE_CTE = """
+segk AS (
+  SELECT c_mktsegment AS seg,
+         CAST(row_number() OVER (ORDER BY c_mktsegment) AS BIGINT) + 1
+             AS k
+  FROM (SELECT DISTINCT c_mktsegment FROM customer)
+),
+od AS (
+  SELECT o.o_orderkey, cu.c_mktsegment AS seg,
+         CAST(round(o.o_totalprice * 100) AS BIGINT) AS x,
+         ('0x' || substr(md5(CAST(o.o_orderkey AS VARCHAR)), 1, 8))
+             ::BIGINT % 100 AS bucket
+  FROM orders o JOIN customer cu ON cu.c_custkey = o.o_custkey
+),
+samp AS (
+  SELECT od.o_orderkey, od.seg, od.x, segk.k
+  FROM od JOIN segk ON segk.seg = od.seg
+  WHERE od.bucket * segk.k < 100
+)
+"""
+
+
+def _seg_sample(spark: SparkSession, sf_dir: str):
+    from spark_lever_spark.llm.curation import _md5_long
+
+    o = load_table(spark, sf_dir, "orders")
+    cu = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    segk = (
+        cu.select(F.col("c_mktsegment").alias("seg"))
+        .distinct()
+        .select(
+            "seg",
+            (
+                F.row_number().over(Window.orderBy("seg")).cast("long")
+                + 1
+            ).alias("k"),
+        )
+    )
+    od = o.join(cu, o["o_custkey"] == cu["c_custkey"]).select(
+        "o_orderkey",
+        F.col("c_mktsegment").alias("seg"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("x"),
+        (
+            _md5_long(F.col("o_orderkey").cast("string"), 8) % 100
+        ).alias("bucket"),
+    )
+    samp = od.join(F.broadcast(segk), "seg").filter(
+        F.col("bucket") * F.col("k") < 100
+    )
+    return od, samp
+
+
+@register(
+    "kish_design_effect_segments",
+    oracle="""
+WITH
+""" + _SEG_RATE_CTE + """,
+m AS (
+  SELECT CAST(count(*) AS BIGINT) AS n,
+         CAST(SUM(k) AS BIGINT) AS sw,
+         CAST(SUM(k * k) AS BIGINT) AS sww
+  FROM samp
+)
+SELECT n, sw AS sum_weights, sww AS sum_sq_weights,
+       CAST(CAST(n AS HUGEINT) * sww * 1000000
+            // (CAST(sw AS HUGEINT) * sw) AS BIGINT) AS deff_ppm,
+       CAST(CAST(sw AS HUGEINT) * sw // sww AS BIGINT)
+           AS effective_n
+FROM m
+""",
+)
+def kish_design_effect_segments(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """KISH DESIGN EFFECT of an unequal-probability order sample —
+    the survey-statistics penalty for weight variation: deff =
+    n·Σw²/(Σw)² and the effective sample size n_eff = (Σw)²/Σw²
+    (Kish 1965), on a DETERMINISTIC stratified hash sample (segment
+    h keeps bucket·k_h < 100, k = 2..6 by segment order — the
+    sample_hash_bucket stable-slice idiom, so membership is a row
+    property, reproducible in both engines). Weights are the exact
+    integer inverse rates k; both ratios are single HUGEINT ⟷
+    decimal(38,0) floor-divisions. The number every weighted-
+    analysis pipeline should publish before quoting its n. Scale:
+    one dim join + map-side filter + 1-row reduce."""
+    _, samp = _seg_sample(spark, sf_dir)
+    m = samp.agg(
+        F.count("*").alias("n"),
+        F.sum("k").alias("sw"),
+        F.sum(F.col("k") * F.col("k")).alias("sww"),
+    )
+    return m.selectExpr(
+        "n",
+        "sw AS sum_weights",
+        "sww AS sum_sq_weights",
+        f"CAST(CAST(n AS {DEC38}) * sww * 1000000"
+        f" div (CAST(sw AS {DEC38}) * sw) AS BIGINT) AS deff_ppm",
+        f"CAST(CAST(sw AS {DEC38}) * sw div sww AS BIGINT)"
+        " AS effective_n",
+    )
+
+
+_HT_ERR = sql_ss_div("ht - t", "t", 1000000)
+
+
+@register(
+    "horvitz_thompson_total_audit",
+    oracle="""
+WITH
+""" + _SEG_RATE_CTE + """,
+est AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_sampled,
+         CAST(SUM(k * x) AS BIGINT) AS ht
+  FROM samp
+),
+tru AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_all,
+         CAST(SUM(x) AS BIGINT) AS t
+  FROM od
+)
+SELECT est.n_sampled, tru.n_all,
+       est.ht AS ht_total_cents, tru.t AS true_total_cents,
+       """ + duck_sql(_HT_ERR) + """ AS rel_error_ppm
+FROM est, tru
+""",
+)
+def horvitz_thompson_total_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """HORVITZ-THOMPSON TOTAL ESTIMATOR AUDIT — the design-based
+    π-estimator T̂ = Σ_{sampled} xᵢ/πᵢ over the same deterministic
+    stratified hash sample as kish_design_effect_segments (πᵢ =
+    1/k_h exactly, so xᵢ/πᵢ = k_h·xᵢ — an exact int64 product), put
+    side-by-side with the TRUE revenue total the full table yields:
+    the published relative error (SIGN-SPLIT ppm) is the
+    design-consistency check a sampling pipeline runs before
+    trusting its estimates at 100 TB, where the full-table pass is
+    the expensive one. Complements monetary_unit_sampling_orders
+    (PPS selection) with the classic STRATIFIED inverse-probability
+    design. Scale: one dim join, two map-side reduces."""
+    od, samp = _seg_sample(spark, sf_dir)
+    est = samp.agg(
+        F.count("*").alias("n_sampled"),
+        F.sum(F.col("k") * F.col("x")).alias("ht"),
+    )
+    tru = od.agg(
+        F.count("*").alias("n_all"), F.sum("x").alias("t")
+    )
+    return est.crossJoin(F.broadcast(tru)).selectExpr(
+        "n_sampled",
+        "n_all",
+        "ht AS ht_total_cents",
+        "t AS true_total_cents",
+        spark_sql(_HT_ERR) + " AS rel_error_ppm",
+    )
+
+
+@register(
+    "jackknife_ratio_nations",
+    oracle="""
+WITH base AS (
+  SELECT cu.c_nationkey AS nation,
+         CAST(count(*) AS BIGINT) AS nl,
+         CAST(SUM(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END)
+              AS BIGINT) AS rl
+  FROM lineitem l
+  JOIN orders o ON o.o_orderkey = l.l_orderkey
+  JOIN customer cu ON cu.c_custkey = o.o_custkey
+  GROUP BY 1
+),
+g AS (
+  SELECT CAST(count(*) AS BIGINT) AS grp,
+         CAST(SUM(nl) AS BIGINT) AS n, CAST(SUM(rl) AS BIGINT) AS r
+  FROM base
+),
+loo AS (
+  SELECT CAST((g.r - b.rl) * 1000000 // (g.n - b.nl) AS BIGINT)
+             AS theta_i,
+         g.grp, g.n, g.r
+  FROM base b, g
+),
+m AS (
+  SELECT CAST(max(grp) AS BIGINT) AS grp,
+         CAST(max(r) * 1000000 // max(n) AS BIGINT) AS theta_ppm,
+         CAST(SUM(theta_i) AS BIGINT) AS st,
+         CAST(SUM(CAST(theta_i AS HUGEINT) * theta_i) AS HUGEINT)
+             AS stt
+  FROM loo
+)
+SELECT grp AS n_groups, theta_ppm,
+       CAST(st // grp AS BIGINT) AS jack_mean_ppm,
+       CAST(floor(sqrt(
+            CAST((grp - 1) AS DOUBLE)
+            * CAST(grp * stt - CAST(st AS HUGEINT) * st AS DOUBLE)
+            / (CAST(grp AS DOUBLE) * grp * grp)))
+           AS BIGINT) AS jack_se_ppm
+FROM m
+""",
+)
+def jackknife_ratio_nations(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """DELETE-A-GROUP JACKKNIFE standard error of the global return
+    RATE — the resampling-free variance estimator for a RATIO
+    (where no closed form exists): leave each customer nation out
+    in turn, re-compute θ̂₍ᵢ₎ = (R−rᵢ)/(N−nᵢ) exactly on the ppm
+    grid (one floor-division per group — the documented grid), then
+    SE_J = √((g−1)/g · Σ(θᵢ−θ̄)²) via the moment collapse g·Σθ² −
+    (Σθ)² (exact HUGEINT ⟷ decimal(38,0); ONE double conversion,
+    one sqrt, one floor). The deterministic replay-based alternative
+    to poisson_bootstrap_ci_priority — no randomness, no replicate
+    storms, one pass + a 25-row reduce. Scale: one fact rollup by
+    nation (bounded domain), then driver-free 25-row algebra."""
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey"
+    )
+    cu = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey"
+    )
+    base = (
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .join(cu, o["o_custkey"] == cu["c_custkey"])
+        .groupBy(F.col("c_nationkey").alias("nation"))
+        .agg(
+            F.count("*").alias("nl"),
+            F.sum(
+                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+            ).alias("rl"),
+        )
+    )
+    g = base.agg(
+        F.count("*").alias("grp"),
+        F.sum("nl").alias("n"),
+        F.sum("rl").alias("r"),
+    )
+    loo = base.crossJoin(F.broadcast(g)).selectExpr(
+        "CAST((r - rl) * 1000000 div (n - nl) AS BIGINT) AS theta_i",
+        "grp",
+        "n",
+        "r",
+    )
+    m = loo.agg(
+        F.max("grp").alias("grp"),
+        F.expr("CAST(max(r) * 1000000 div max(n) AS BIGINT)").alias(
+            "theta_ppm"
+        ),
+        F.sum("theta_i").alias("st"),
+        F.sum(F.col("theta_i").cast(DEC38) * F.col("theta_i")).alias(
+            "stt"
+        ),
+    )
+    return m.selectExpr(
+        "grp AS n_groups",
+        "theta_ppm",
+        "CAST(st div grp AS BIGINT) AS jack_mean_ppm",
+        "CAST(floor(sqrt("
+        "CAST((grp - 1) AS DOUBLE)"
+        f" * CAST(grp * stt - CAST(st AS {DEC38}) * st AS DOUBLE)"
+        " / (CAST(grp AS DOUBLE) * grp * grp)))"
+        " AS BIGINT) AS jack_se_ppm",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Apportionment + actuarial development
+# ---------------------------------------------------------------------------
+
+# lcm(1..20) — exact divisor-method sort keys: rev/k ordered by
+# rev * (LCM // k) with no rational arithmetic (HUGEINT / decimal keys).
+_LCM20 = 232792560
+# lcm(1,3,5,...,39) for Sainte-Laguë: every odd divisor 2k-1 (k<=20)
+# divides it exactly, so rev * (_LCM_ODD39 // (2k-1)) is the exact
+# integer-scaled quotient key (lcm(1..20) is NOT divisible by 23,25,
+# 27,29,31,37 — flooring there could seat-misorder near-ties).
+# Product fits decimal(38,0)/HUGEINT: r<=~1e14 cents * 1.7e14 < 1e29.
+_LCM_ODD39 = 166966608033225
+
+
+@register(
+    "dhondt_allocation_nations",
+    oracle=f"""
+WITH rev AS (
+  SELECT n.n_nationkey AS nation,
+         CAST(SUM(CAST(round(o.o_totalprice * 100) AS BIGINT))
+              AS BIGINT) AS r
+  FROM orders o
+  JOIN customer cu ON cu.c_custkey = o.o_custkey
+  JOIN nation n ON n.n_nationkey = cu.c_nationkey
+  GROUP BY 1
+),
+ks AS (SELECT unnest(range(1, 21)) AS k),
+dh AS (
+  SELECT nation, r, k,
+         row_number() OVER (
+           ORDER BY CAST(r AS HUGEINT) * ({_LCM20} // k) DESC,
+                    nation, k) AS rnk
+  FROM rev, ks
+),
+sl AS (
+  SELECT nation, r, k,
+         row_number() OVER (
+           ORDER BY CAST(r AS HUGEINT) * ({_LCM_ODD39} // (2 * k - 1))
+                    DESC, nation, k) AS rnk
+  FROM rev, ks
+)
+SELECT rev.nation, rev.r AS revenue_cents,
+       CAST((SELECT count(*) FROM dh
+             WHERE dh.nation = rev.nation AND dh.rnk <= 20)
+            AS BIGINT) AS dhondt_seats,
+       CAST((SELECT count(*) FROM sl
+             WHERE sl.nation = rev.nation AND sl.rnk <= 20)
+            AS BIGINT) AS sainte_lague_seats
+FROM rev ORDER BY rev.nation
+""",
+)
+def dhondt_allocation_nations(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """DIVISOR-METHOD APPORTIONMENT of 20 slots across customer
+    nations by revenue — D'Hondt (divisors 1,2,3…, favors large
+    parties) and Sainte-Laguë (1,3,5…, proportionality-neutral)
+    side-by-side, the fair-allocation primitive behind quota
+    assignment, shard budgeting and A/B traffic splits (and the
+    divisor complement to prorate_fee_largest_remainder's quota
+    method — the two famously disagree: Alabama paradox): each
+    quotient orders EXACTLY via an integer key — rev·(lcm(1..20)//k)
+    for D'Hondt, rev·(lcm(1,3,..,39)//(2k-1)) for Sainte-Laguë; both
+    LCMs are divisible by every divisor in their ladder, so the keys
+    are exact scaled quotients (HUGEINT ⟷ decimal(38,0) — no rational
+    or float division anywhere), deterministic (key, nation, k)
+    tie-break, top-20 by rank per method. Scale: one fact rollup to
+    the 25-nation domain, a 20-row divisor broadcast, two 500-row
+    rank windows."""
+    o = load_table(spark, sf_dir, "orders")
+    cu = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey"
+    )
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey")
+    rev = (
+        o.join(cu, o["o_custkey"] == cu["c_custkey"])
+        .join(F.broadcast(n), cu["c_nationkey"] == n["n_nationkey"])
+        .groupBy(F.col("n_nationkey").alias("nation"))
+        .agg(
+            F.sum(
+                F.round(F.col("o_totalprice") * 100).cast("long")
+            ).alias("r")
+        )
+    )
+    ks = spark.range(1, 21).selectExpr("CAST(id AS INT) AS k")
+    quot = rev.crossJoin(F.broadcast(ks))
+    dh = quot.select(
+        "nation",
+        "k",
+        F.row_number()
+        .over(
+            Window.orderBy(
+                F.expr(
+                    f"CAST(r AS {DEC38}) * ({_LCM20} div k)"
+                ).desc(),
+                "nation",
+                "k",
+            )
+        )
+        .alias("rnk"),
+    ).filter(F.col("rnk") <= 20)
+    sl = quot.select(
+        "nation",
+        "k",
+        F.row_number()
+        .over(
+            Window.orderBy(
+                F.expr(
+                    f"CAST(r AS {DEC38})"
+                    f" * ({_LCM_ODD39} div (2 * k - 1))"
+                ).desc(),
+                "nation",
+                "k",
+            )
+        )
+        .alias("rnk"),
+    ).filter(F.col("rnk") <= 20)
+    dhc = dh.groupBy("nation").agg(F.count("*").alias("dh_seats"))
+    slc = sl.groupBy("nation").agg(F.count("*").alias("sl_seats"))
+    return (
+        rev.join(dhc, "nation", "left")
+        .join(slc, "nation", "left")
+        .selectExpr(
+            "nation",
+            "r AS revenue_cents",
+            "COALESCE(dh_seats, 0) AS dhondt_seats",
+            "COALESCE(sl_seats, 0) AS sainte_lague_seats",
+        )
+        .orderBy("nation")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Linear-counting sketch audit + integer adstock regression
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "linear_counting_audit",
+    oracle="""
+WITH ms AS (SELECT unnest([256, 1024, 4096]) AS m),
+hits AS (
+  SELECT ms.m,
+         CAST(count(DISTINCT
+              ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
+              ::BIGINT % ms.m) AS BIGINT) AS occupied
+  FROM events, ms GROUP BY ms.m
+),
+tru AS (
+  SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS d FROM events
+)
+SELECT CAST(h.m AS BIGINT) AS m_bits, h.occupied, tru.d AS true_distinct,
+       CAST((h.m - h.occupied) * 1000000 // h.m AS BIGINT)
+           AS empty_frac_ppm,
+       CAST((tru.d - h.occupied) * 1000000 // tru.d AS BIGINT)
+           AS collision_loss_ppm
+FROM hits h, tru ORDER BY m_bits
+""",
+)
+def linear_counting_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """LINEAR-COUNTING SKETCH AUDIT at m ∈ {256, 1024, 4096} bits —
+    the simplest cardinality sketch (Whang 1990: estimate =
+    −m·ln(empty/m)) audited against truth WITHOUT the log: the
+    published exact quantities are the occupied-bit count (one
+    distinct-of-md5-mod aggregation — the same stable-hash idiom as
+    sample_hash_bucket), the empty fraction, and the collision loss
+    (distinct users the bitmap under-counts) per size. The
+    occupancy trio IS the sketch designer's sizing table: it shows
+    exactly when m is too small for HLL's fallback range (the
+    sketch_hll ops' companion). All ratios are exact non-negative
+    ppm floor-divisions. Scale: three map-side mod-m distincts over
+    a bounded bitmap domain + one exact distinct."""
+    from spark_lever_spark.llm.curation import _md5_long
+
+    ev = load_table(spark, sf_dir, "events")
+    ms = spark.range(1).selectExpr(
+        "explode(array(256, 1024, 4096)) AS m"
+    )
+    hits = (
+        ev.select(
+            _md5_long(F.col("user_id").cast("string"), 8).alias("hv")
+        )
+        .crossJoin(F.broadcast(ms))
+        .groupBy("m")
+        .agg(F.countDistinct(F.expr("hv % m")).alias("occupied"))
+    )
+    tru = ev.agg(F.countDistinct("user_id").alias("d"))
+    return (
+        hits.crossJoin(F.broadcast(tru))
+        .selectExpr(
+            "CAST(m AS BIGINT) AS m_bits",
+            "occupied",
+            "d AS true_distinct",
+            "CAST((m - occupied) * 1000000 div m AS BIGINT)"
+            " AS empty_frac_ppm",
+            "CAST((d - occupied) * 1000000 div d AS BIGINT)"
+            " AS collision_loss_ppm",
+        )
+        .orderBy("m_bits")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Qini uplift curve + up/down streak census
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "qini_uplift_deciles",
+    oracle="""
+WITH
+""" + _LAB_CTE + """,
+expo AS (
+  SELECT lab.score, lab.pos, lab.o_orderkey AS okey,
+         CASE WHEN cu.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
+             AS treated
+  FROM lab
+  JOIN orders o ON o.o_orderkey = lab.o_orderkey
+  JOIN customer cu ON cu.c_custkey = o.o_custkey
+),
+rk AS (
+  SELECT pos, treated,
+         ntile(10) OVER (ORDER BY score DESC, treated, pos, okey)
+             AS decile
+  FROM expo
+),
+byd AS (
+  SELECT CAST(decile AS INT) AS decile,
+         CAST(SUM(CASE WHEN treated = 1 THEN pos ELSE 0 END)
+              AS BIGINT) AS yt,
+         CAST(SUM(treated) AS BIGINT) AS nt,
+         CAST(SUM(CASE WHEN treated = 0 THEN pos ELSE 0 END)
+              AS BIGINT) AS yc,
+         CAST(SUM(1 - treated) AS BIGINT) AS nc
+  FROM rk GROUP BY 1
+),
+cum AS (
+  SELECT decile,
+         CAST(SUM(yt) OVER w AS BIGINT) AS cyt,
+         CAST(SUM(nt) OVER w AS BIGINT) AS cnt_t,
+         CAST(SUM(yc) OVER w AS BIGINT) AS cyc,
+         CAST(SUM(nc) OVER w AS BIGINT) AS cnc
+  FROM byd WINDOW w AS (ORDER BY decile)
+)
+SELECT decile, cyt AS cum_treated_pos, cnt_t AS cum_treated,
+       cyc AS cum_control_pos, cnc AS cum_control,
+       CASE WHEN cnc > 0
+            THEN CAST(cyt AS BIGINT)
+                 - CAST(CAST(cyc AS HUGEINT) * cnt_t // cnc AS BIGINT)
+       END AS qini_scaled
+FROM cum ORDER BY decile
+""",
+)
+def qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """QINI UPLIFT CURVE by score decile — the uplift-model
+    evaluation standard (Radcliffe): order the population by model
+    score (here the price score, BUILDING membership as the
+    'treatment' — the same derived task as the epidemiology 2×2),
+    then at each cumulative decile publish Qini(k) = Y_t(k) −
+    Y_c(k)·N_t(k)/N_c(k) — incremental positives versus a
+    control-scaled counterfactual. The only division is ONE
+    non-negative HUGEINT ⟷ decimal(38,0) floor per decile; ntile
+    runs on a deterministic (score, treated, key) total order so
+    decile boundaries are reproducible. Complements
+    decile_lift_table_returns (lift without a control arm) and
+    diff_in_diff (two-period, no ranking). Scale: one fact rollup,
+    two dim joins, one rank window + bounded decile rollup."""
+    lab = _lab(spark, sf_dir)
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey"
+    )
+    cu = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    # global decile WITHOUT a single-task ntile window: grank's
+    # binned 2-pass global rank + the exact ntile_from_rank closed
+    # form (the order is made TOTAL by the okey tiebreak — an
+    # ntile over a non-total order is nondeterministic)
+    from spark_lever_spark.operators.grank import (
+        ntile_from_rank,
+        with_global_rank,
+    )
+
+    expo = (
+        lab.join(o, "o_orderkey")
+        .join(cu, o["o_custkey"] == cu["c_custkey"])
+        .select(
+            "score",
+            "pos",
+            F.col("o_orderkey").alias("okey"),
+            F.when(F.col("c_mktsegment") == "BUILDING", 1)
+            .otherwise(0)
+            .alias("treated"),
+        )
+    )
+    ranked = with_global_rank(
+        expo, -F.col("score"), ["treated", "pos", "okey"]
+    )
+    rk = ranked.select(
+        "pos",
+        "treated",
+        ntile_from_rank(
+            F.col("_rk"), F.col("_n_tot"), 10
+        ).alias("decile"),
+    )
+    byd = rk.groupBy(F.col("decile").cast("int").alias("decile")).agg(
+        F.sum(
+            F.when(F.col("treated") == 1, F.col("pos")).otherwise(0)
+        ).alias("yt"),
+        F.sum("treated").alias("nt"),
+        F.sum(
+            F.when(F.col("treated") == 0, F.col("pos")).otherwise(0)
+        ).alias("yc"),
+        F.sum(1 - F.col("treated")).alias("nc"),
+    )
+    w = Window.orderBy("decile")
+    cum = byd.select(
+        "decile",
+        F.sum("yt").over(w).alias("cyt"),
+        F.sum("nt").over(w).alias("cnt_t"),
+        F.sum("yc").over(w).alias("cyc"),
+        F.sum("nc").over(w).alias("cnc"),
+    )
+    return cum.selectExpr(
+        "decile",
+        "cyt AS cum_treated_pos",
+        "cnt_t AS cum_treated",
+        "cyc AS cum_control_pos",
+        "cnc AS cum_control",
+        "CASE WHEN cnc > 0 THEN CAST(cyt AS BIGINT)"
+        f" - CAST(CAST(cyc AS {DEC38}) * cnt_t div cnc AS BIGINT)"
+        " END AS qini_scaled",
+    ).orderBy("decile")
+
+
+# ---------------------------------------------------------------------------
+# Dunn post-hoc pairwise rank test + monthly pivot points
+# ---------------------------------------------------------------------------
+
+_DUNN_Z = (
+    "CASE WHEN (CAST(nn AS DOUBLE) * (nn + 1) * (nn - 1) - tt) > 0"
+    " THEN CAST(floor(CAST(num AS DOUBLE) * 1000"
+    " / (2 * sqrt((CAST(nn AS DOUBLE) * (nn + 1) * (nn - 1) - tt)"
+    " * CAST(ni AS DOUBLE) * nj * (ni + nj)"
+    " / (12.0 * (nn - 1))))) AS BIGINT) END"
+)
+
+
+@register(
+    "dunn_posthoc_priorities",
+    oracle="""
+WITH v AS (
+  SELECT o_orderpriority AS priority,
+         CAST(round(o_totalprice * 100) AS BIGINT) AS x
+  FROM orders
+),
+pts AS (
+  SELECT x, priority, CAST(count(*) AS BIGINT) AS c
+  FROM v GROUP BY 1, 2
+),
+tv AS (
+  SELECT x, CAST(SUM(c) AS BIGINT) AS t FROM pts GROUP BY 1
+),
+cum AS (
+  SELECT x, t,
+         CAST(SUM(t) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) - t
+              AS BIGINT) AS before_all
+  FROM tv
+),
+grp AS (
+  SELECT p.priority, CAST(SUM(p.c) AS BIGINT) AS n_g,
+         CAST(SUM(CAST(p.c AS HUGEINT)
+                  * (2 * cum.before_all + cum.t + 1)) AS HUGEINT)
+             AS s2r
+  FROM pts p JOIN cum ON cum.x = p.x GROUP BY 1
+),
+g AS (
+  SELECT CAST(SUM(n_g) AS BIGINT) AS nn FROM grp
+),
+ties AS (
+  SELECT CAST(SUM(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT) AS tt
+  FROM tv
+),
+pairs AS (
+  SELECT a.priority AS pri_a, b.priority AS pri_b,
+         a.n_g AS ni, b.n_g AS nj,
+         CAST(a.s2r * b.n_g - b.s2r * a.n_g AS HUGEINT) AS num,
+         g.nn, CAST(ties.tt AS DOUBLE) AS tt
+  FROM grp a JOIN grp b ON b.priority > a.priority, g, ties
+)
+SELECT pri_a, pri_b, ni, nj,
+       CAST(FLOOR(CAST(num AS DOUBLE)
+            / CAST(2 * CAST(ni AS HUGEINT) * nj AS DOUBLE)) AS BIGINT)
+           AS mean_rank_diff_x1,
+       """ + _DUNN_Z + """ AS dunn_z_milli
+FROM pairs ORDER BY pri_a, pri_b
+""",
+)
+def dunn_posthoc_priorities(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """DUNN'S POST-HOC TEST after Kruskal-Wallis — WHICH priority
+    pairs differ (KW only says "some do"): pairwise z = (R̄ᵢ−R̄ⱼ)/
+    √(V·(1/nᵢ+1/nⱼ)) with the tie-corrected rank variance V =
+    (n(n+1) − Σ(t³−t)/(n−1))/12, on the kruskal_wallis_priorities
+    machinery (doubled midranks 2·before+t+1 — integers ALWAYS; the
+    value-domain rollup, never a row-level rank). The rank-mean
+    difference cross-multiplies to the exact HUGEINT ⟷
+    decimal(38,0) numerator S2ᵢnⱼ − S2ⱼnᵢ; z is ONE shared double
+    tree (sqrt of exact products), milli-floored; the signed
+    mean-rank gap also publishes exactly (⌊num/2nᵢnⱼ⌋ — num is signed, and
+    DuckDB's HUGEINT // TRUNCATES on negatives while FLOOR(double)
+    floors, so BOTH engines publish via the identical FLOOR-on-
+    double text — operands ≪ 2⁵³, conversion exact). All 10 pairs.
+    Scale: value-domain rollups (cent-price domain), a 5-row
+    self-join."""
+    o = load_table(spark, sf_dir, "orders")
+    v = o.select(
+        F.col("o_orderpriority").alias("priority"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("x"),
+    )
+    pts = v.groupBy("x", "priority").agg(F.count("*").alias("c"))
+    tv = pts.groupBy("x").agg(F.sum("c").alias("t"))
+    wc = Window.orderBy("x").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = tv.select(
+        "x",
+        "t",
+        (F.sum("t").over(wc) - F.col("t")).alias("before_all"),
+    )
+    grp = (
+        pts.join(cum, "x")
+        .groupBy("priority")
+        .agg(
+            F.sum("c").alias("n_g"),
+            F.sum(
+                F.col("c").cast(DEC38)
+                * (2 * F.col("before_all") + F.col("t") + 1)
+            ).alias("s2r"),
+        )
+    )
+    g = grp.agg(F.sum("n_g").alias("nn"))
+    ties = tv.agg(
+        F.sum(
+            F.col("t").cast(DEC38) * F.col("t") * F.col("t")
+            - F.col("t")
+        ).alias("tt")
+    )
+    a = grp.selectExpr(
+        "priority AS pri_a", "n_g AS ni", "s2r AS s2a"
+    )
+    b = grp.selectExpr(
+        "priority AS pri_b", "n_g AS nj", "s2r AS s2b"
+    )
+    pairs = (
+        a.join(b, F.col("pri_b") > F.col("pri_a"))
+        .crossJoin(F.broadcast(g))
+        .crossJoin(F.broadcast(ties))
+        .selectExpr(
+            "pri_a",
+            "pri_b",
+            "ni",
+            "nj",
+            f"CAST(s2a * nj - s2b * ni AS {DEC38}) AS num",
+            "nn",
+            "CAST(tt AS DOUBLE) AS tt",
+        )
+    )
+    return pairs.selectExpr(
+        "pri_a",
+        "pri_b",
+        "ni",
+        "nj",
+        "CAST(FLOOR(CAST(num AS DOUBLE)"
+        f" / CAST(2 * CAST(ni AS {DEC38}) * nj AS DOUBLE)) AS BIGINT)"
+        " AS mean_rank_diff_x1",
+        _DUNN_Z + " AS dunn_z_milli",
+    ).orderBy("pri_a", "pri_b")
+
+
+# ---------------------------------------------------------------------------
+# Causal diagnostics: covariate balance + E-value
+# ---------------------------------------------------------------------------
+
+_SMD_SEL = (
+    "CASE WHEN nt > 1 AND nc > 1 AND"
+    " (CAST(qt AS DOUBLE) * nt - CAST(st AS DOUBLE) * st)"
+    " / (CAST(nt AS DOUBLE) * nt * (nt - 1))"
+    " + (CAST(qc AS DOUBLE) * nc - CAST(sc AS DOUBLE) * sc)"
+    " / (CAST(nc AS DOUBLE) * nc * (nc - 1)) > 0"
+    " THEN CAST(floor((CAST(st AS DOUBLE) / nt"
+    " - CAST(sc AS DOUBLE) / nc) * 1000"
+    " / sqrt(((CAST(qt AS DOUBLE) * nt - CAST(st AS DOUBLE) * st)"
+    " / (CAST(nt AS DOUBLE) * nt * (nt - 1))"
+    " + (CAST(qc AS DOUBLE) * nc - CAST(sc AS DOUBLE) * sc)"
+    " / (CAST(nc AS DOUBLE) * nc * (nc - 1))) / 2)) AS BIGINT) END"
+)
+
+
+@register(
+    "smd_covariate_balance_building",
+    oracle="""
+WITH base AS (
+  SELECT CASE WHEN cu.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
+             AS treated,
+         CAST(round(o.o_totalprice * 100) AS BIGINT) AS price,
+         CAST(EXTRACT(month FROM CAST(o.o_orderdate AS DATE))
+              AS BIGINT) AS mth,
+         CAST(substr(o.o_orderpriority, 1, 1) AS BIGINT)
+             AS prio_proxy
+  FROM orders o JOIN customer cu ON cu.c_custkey = o.o_custkey
+),
+long AS (
+  SELECT treated, 'price_cents' AS covariate, price AS val FROM base
+  UNION ALL
+  SELECT treated, 'order_month', mth FROM base
+  UNION ALL
+  SELECT treated, 'priority_proxy', prio_proxy FROM base
+),
+m AS (
+  SELECT covariate,
+         CAST(SUM(CASE WHEN treated = 1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS nt,
+         CAST(SUM(CASE WHEN treated = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS nc,
+         CAST(SUM(CASE WHEN treated = 1 THEN val ELSE 0 END)
+              AS BIGINT) AS st,
+         CAST(SUM(CASE WHEN treated = 0 THEN val ELSE 0 END)
+              AS BIGINT) AS sc,
+         CAST(SUM(CASE WHEN treated = 1
+                  THEN CAST(val AS HUGEINT) * val ELSE 0 END)
+              AS HUGEINT) AS qt,
+         CAST(SUM(CASE WHEN treated = 0
+                  THEN CAST(val AS HUGEINT) * val ELSE 0 END)
+              AS HUGEINT) AS qc
+  FROM long GROUP BY 1
+)
+SELECT covariate, nt AS n_treated, nc AS n_control,
+       """ + _SMD_SEL + """ AS smd_milli
+FROM m ORDER BY covariate
+""",
+)
+def smd_covariate_balance_building(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """STANDARDIZED MEAN DIFFERENCE covariate-balance table for the
+    BUILDING 'treatment' — the table every observational study
+    prints FIRST (|SMD| < 0.1 ⇒ covariate balanced; the
+    prerequisite the odds-ratio / Qini queries implicitly assume):
+    SMD = (x̄_t − x̄_c)/√((s²_t + s²_c)/2) per covariate (order
+    price, order month, the numeric priority code), long-format. All moments
+    are exact int64/HUGEINT per arm; the SMD is one fixed double
+    tree (sample variances via the n·Q−S² collapse over n²(n−1) —
+    identical text both engines), milli-floored, degenerate arms
+    CASE-NULL. Scale: one dim join, one 3-covariate long rollup."""
+    o = load_table(spark, sf_dir, "orders")
+    cu = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    base = o.join(cu, o["o_custkey"] == cu["c_custkey"]).select(
+        F.when(F.col("c_mktsegment") == "BUILDING", 1)
+        .otherwise(0)
+        .alias("treated"),
+        F.round(F.col("o_totalprice") * 100)
+        .cast("long")
+        .alias("price"),
+        F.month(F.to_date("o_orderdate")).cast("long").alias("mth"),
+        F.substring("o_orderpriority", 1, 1)
+        .cast("long")
+        .alias("prio_proxy"),
+    )
+    long = (
+        base.selectExpr(
+            "treated", "'price_cents' AS covariate", "price AS val"
+        )
+        .unionByName(
+            base.selectExpr(
+                "treated", "'order_month' AS covariate", "mth AS val"
+            )
+        )
+        .unionByName(
+            base.selectExpr(
+                "treated",
+                "'priority_proxy' AS covariate",
+                "prio_proxy AS val",
+            )
+        )
+    )
+    m = long.groupBy("covariate").agg(
+        F.sum(F.when(F.col("treated") == 1, 1).otherwise(0)).alias(
+            "nt"
+        ),
+        F.sum(F.when(F.col("treated") == 0, 1).otherwise(0)).alias(
+            "nc"
+        ),
+        F.sum(
+            F.when(F.col("treated") == 1, F.col("val")).otherwise(0)
+        ).alias("st"),
+        F.sum(
+            F.when(F.col("treated") == 0, F.col("val")).otherwise(0)
+        ).alias("sc"),
+        F.sum(
+            F.when(
+                F.col("treated") == 1,
+                F.col("val").cast(DEC38) * F.col("val"),
+            ).otherwise(F.lit(0).cast(DEC38))
+        ).alias("qt"),
+        F.sum(
+            F.when(
+                F.col("treated") == 0,
+                F.col("val").cast(DEC38) * F.col("val"),
+            ).otherwise(F.lit(0).cast(DEC38))
+        ).alias("qc"),
+    )
+    return m.selectExpr(
+        "covariate",
+        "nt AS n_treated",
+        "nc AS n_control",
+        _SMD_SEL + " AS smd_milli",
+    ).orderBy("covariate")
+
+
+_EVALUE_SEL = (
+    "CASE WHEN rr_ppm >= 1000000"
+    " THEN CAST(floor(CAST(rr_ppm AS DOUBLE) / 1000"
+    " + sqrt(CAST(rr_ppm AS DOUBLE) / 1000000"
+    " * (CAST(rr_ppm AS DOUBLE) / 1000000 - 1)) * 1000) AS BIGINT)"
+    " ELSE CAST(floor(1000000000.0 / rr_ppm"
+    " + sqrt(1000000.0 / rr_ppm"
+    " * (1000000.0 / rr_ppm - 1)) * 1000) AS BIGINT) END"
+)
+
+
+@register(
+    "evalue_building_returns",
+    oracle="""
+WITH
+""" + _LAB_CTE + """,
+expo AS (
+  SELECT lab.pos,
+         CASE WHEN cu.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
+             AS exposed
+  FROM lab
+  JOIN orders o ON o.o_orderkey = lab.o_orderkey
+  JOIN customer cu ON cu.c_custkey = o.o_custkey
+),
+conf AS (
+  SELECT
+    CAST(SUM(CASE WHEN exposed = 1 AND pos = 1 THEN 1 ELSE 0 END)
+         AS BIGINT) AS a,
+    CAST(SUM(CASE WHEN exposed = 1 AND pos = 0 THEN 1 ELSE 0 END)
+         AS BIGINT) AS b,
+    CAST(SUM(CASE WHEN exposed = 0 AND pos = 1 THEN 1 ELSE 0 END)
+         AS BIGINT) AS c,
+    CAST(SUM(CASE WHEN exposed = 0 AND pos = 0 THEN 1 ELSE 0 END)
+         AS BIGINT) AS d
+  FROM expo
+),
+rr AS (
+  SELECT a, b, c, d,
+         CAST(CAST(a AS HUGEINT) * (c + d) * 1000000
+              // (CAST(c AS HUGEINT) * (a + b)) AS BIGINT) AS rr_ppm
+  FROM conf WHERE c > 0 AND a + b > 0
+)
+SELECT a, b, c, d, rr_ppm,
+       """ + _EVALUE_SEL + """ AS evalue_milli
+FROM rr
+""",
+)
+def evalue_building_returns(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """VANDERWEELE E-VALUE for the BUILDING→return risk ratio — the
+    sensitivity-analysis headline of modern epidemiology: the
+    minimum strength of unmeasured confounding (on the risk-ratio
+    scale, with both treatment and outcome) that could explain away
+    the observed association, E = RR* + √(RR*(RR*−1)) with RR* the
+    risk ratio oriented above 1 (the reciprocal convention for
+    protective effects, encoded in the CASE). RR comes exact from
+    the same 2×2 as odds_risk_ratio_building_returns (ppm
+    floor-division); the E-value is one fixed double tree on the
+    published rr_ppm grid (the grid is the contract), milli-
+    floored. An E-value near 1 says the smd-unbalanced covariates
+    could easily explain the effect — the three causal queries
+    (balance → effect → robustness) read as a pipeline. Scale: one
+    fact rollup + dim joins, 1-row algebra."""
+    lab = _lab(spark, sf_dir)
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey"
+    )
+    cu = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    expo = (
+        lab.join(o, "o_orderkey")
+        .join(cu, o["o_custkey"] == cu["c_custkey"])
+        .select(
+            "pos",
+            F.when(F.col("c_mktsegment") == "BUILDING", 1)
+            .otherwise(0)
+            .alias("exposed"),
+        )
+    )
+    conf = expo.agg(
+        F.sum(
+            F.when((F.col("exposed") == 1) & (F.col("pos") == 1), 1)
+            .otherwise(0)
+        ).alias("a"),
+        F.sum(
+            F.when((F.col("exposed") == 1) & (F.col("pos") == 0), 1)
+            .otherwise(0)
+        ).alias("b"),
+        F.sum(
+            F.when((F.col("exposed") == 0) & (F.col("pos") == 1), 1)
+            .otherwise(0)
+        ).alias("c"),
+        F.sum(
+            F.when((F.col("exposed") == 0) & (F.col("pos") == 0), 1)
+            .otherwise(0)
+        ).alias("d"),
+    )
+    rr = conf.filter("c > 0 AND a + b > 0").selectExpr(
+        "a",
+        "b",
+        "c",
+        "d",
+        f"CAST(CAST(a AS {DEC38}) * (c + d) * 1000000"
+        f" div (CAST(c AS {DEC38}) * (a + b)) AS BIGINT) AS rr_ppm",
+    )
+    return rr.selectExpr(
+        "a", "b", "c", "d", "rr_ppm", _EVALUE_SEL + " AS evalue_milli"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Causal: stratified (cell-propensity IPW-equivalent) ATE
+# ---------------------------------------------------------------------------
+
+_ATE_DIV = sql_ss_div("SUM(CAST(n AS {I}) * (r1 - r0))", "SUM(n)", 1)
+
+
+@register(
+    "stratified_ate_priority_returns",
+    oracle="""
+WITH u AS (
+  SELECT c.c_nationkey AS nk, c.c_mktsegment AS seg,
+         CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+              THEN 1 ELSE 0 END AS t,
+         CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END AS y
+  FROM lineitem l
+  JOIN orders o ON o.o_orderkey = l.l_orderkey
+  JOIN customer c ON c.c_custkey = o.o_custkey
+),
+cell AS (
+  SELECT nk, seg,
+         CAST(SUM(t) AS BIGINT) AS n1,
+         CAST(SUM(t * y) AS BIGINT) AS x1,
+         CAST(SUM(1 - t) AS BIGINT) AS n0,
+         CAST(SUM((1 - t) * y) AS BIGINT) AS x0
+  FROM u GROUP BY 1, 2
+),
+used AS (
+  SELECT n1 + n0 AS n,
+         CAST(x1 * 1000000 // n1 AS BIGINT) AS r1,
+         CAST(x0 * 1000000 // n0 AS BIGINT) AS r0
+  FROM cell WHERE n1 > 0 AND n0 > 0
+),
+naive AS (
+  SELECT CAST(CAST(SUM(t * y) AS BIGINT) * 1000000
+              // SUM(t) AS BIGINT)
+         - CAST(CAST(SUM((1 - t) * y) AS BIGINT) * 1000000
+                // SUM(1 - t) AS BIGINT) AS naive_diff_ppm
+  FROM u
+)
+SELECT CAST(count(*) AS BIGINT) AS n_cells,
+       CAST(SUM(n) AS BIGINT) AS n_units,
+       (SELECT naive_diff_ppm FROM naive) AS naive_diff_ppm,
+       """ + duck_sql(_ATE_DIV) + """ AS ate_ppm
+FROM used
+""",
+)
+def stratified_ate_priority_returns(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """STRATIFIED AVERAGE TREATMENT EFFECT (exact-matching /
+    cell-propensity IPW estimator): effect of high order priority
+    (1-URGENT/2-HIGH) on line-item return rate, adjusted for customer
+    (nation × market segment) strata — within each cell the treated
+    and control return rates difference, weighted by cell size over
+    cells containing BOTH groups (the common-support restriction).
+    The textbook confounding-adjustment identity: with cell-constant
+    propensities, stratification == inverse-propensity weighting.
+    Integer-exact ppm rates per cell; the signed weighted mean uses
+    the sign-split {I}/{D} division. Scale shape: one fact join chain
+    (customer dim broadcastable), one cell aggregation (125 cells at
+    any SF), one final rollup."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_returnflag"
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderpriority"
+    )
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey", "c_mktsegment"
+    )
+    u = (
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        .select(
+            F.col("c_nationkey").alias("nk"),
+            F.col("c_mktsegment").alias("seg"),
+            F.when(
+                F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
+            )
+            .otherwise(0)
+            .alias("t"),
+            F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
+        )
+    )
+    cell = u.groupBy("nk", "seg").agg(
+        F.sum("t").alias("n1"),
+        F.sum(F.col("t") * F.col("y")).alias("x1"),
+        F.sum(F.lit(1) - F.col("t")).alias("n0"),
+        F.sum((F.lit(1) - F.col("t")) * F.col("y")).alias("x0"),
+    )
+    used = cell.filter((F.col("n1") > 0) & (F.col("n0") > 0)).selectExpr(
+        "n1 + n0 AS n",
+        "CAST(x1 * 1000000 div n1 AS BIGINT) AS r1",
+        "CAST(x0 * 1000000 div n0 AS BIGINT) AS r0",
+    )
+    naive = u.selectExpr(
+        "CAST(SUM(t * y) * 1000000 div SUM(t) AS BIGINT)"
+        " - CAST(SUM((1 - t) * y) * 1000000 div SUM(1 - t) AS BIGINT)"
+        " AS naive_diff_ppm"
+    )
+    return (
+        used.selectExpr(
+            "CAST(count(*) AS BIGINT) AS n_cells",
+            "CAST(SUM(n) AS BIGINT) AS n_units",
+            spark_sql(_ATE_DIV) + " AS ate_ppm",
+        )
+        .crossJoin(F.broadcast(naive))
+        .select("n_cells", "n_units", "naive_diff_ppm", "ate_ppm")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Empirical-Bayes shrinkage of per-brand return rates
+# ---------------------------------------------------------------------------
+
+_EB_M = 200  # prior pseudo-count (beta-binomial prior strength)
+
+
+@register(
+    "eb_shrunk_brand_return_rates",
+    oracle=f"""
+WITH b AS (
+  SELECT p.p_brand AS brand, CAST(count(*) AS BIGINT) AS n,
+         CAST(SUM(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END)
+              AS BIGINT) AS x
+  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+  GROUP BY 1
+),
+g AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, CAST(SUM(x) AS BIGINT) AS xx
+      FROM b)
+SELECT brand, n AS n_items,
+       CAST(x * 1000000 // n AS BIGINT) AS raw_ppm,
+       CAST((CAST(x AS HUGEINT) * nn + {_EB_M} * CAST(xx AS HUGEINT))
+            * 1000000 // (CAST(nn AS HUGEINT) * (n + {_EB_M}))
+            AS BIGINT) AS shrunk_ppm,
+       CAST(xx * 1000000 // nn AS BIGINT) AS grand_ppm
+FROM b CROSS JOIN g ORDER BY brand
+""",
+)
+def eb_shrunk_brand_return_rates(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """EMPIRICAL-BAYES SHRINKAGE of per-brand return rates toward the
+    grand mean (beta-binomial posterior mean with prior strength
+    m=200, the _EB_M constant): shrunk = (x_b + m·p̄)/(n_b + m) —
+    small brands pull hard toward the corpus rate, big brands barely
+    move. The James-Stein-style stabilization every per-segment metric
+    dashboard needs before ranking small cells, in the exact rational
+    form (x_b·N + m·X)·10⁶ // (N·(n_b + m)) — integer-exact,
+    non-negative, floor == truncate in both engines. Scale shape: one
+    broadcast-dim join, one brand aggregation (25 groups), one scalar
+    attach."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_partkey", "l_returnflag"
+    )
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    b = (
+        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+        .groupBy(F.col("p_brand").alias("brand"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(
+                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+            ).alias("x"),
+        )
+    )
+    g = b.agg(F.sum("n").alias("nn"), F.sum("x").alias("xx"))
+    return (
+        b.crossJoin(F.broadcast(g))
+        .selectExpr(
+            "brand",
+            "n AS n_items",
+            "CAST(x * 1000000 div n AS BIGINT) AS raw_ppm",
+            spark_sql(
+                f"CAST((CAST(x AS {{I}}) * nn + {_EB_M} *"
+                f" CAST(xx AS {{I}})) * 1000000"
+                f" {{D}} (CAST(nn AS {{I}}) * (n + {_EB_M}))"
+                " AS BIGINT)"
+            )
+            + " AS shrunk_ppm",
+            "CAST(xx * 1000000 div nn AS BIGINT) AS grand_ppm",
+        )
+        .orderBy("brand")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Kendall concordance between two daily event series
+# ---------------------------------------------------------------------------
+
+_TAU_DIV = sql_ss_div("conc - disc", "npairs", 1000000)
+
+
+@register(
+    "kendall_tau_daily_error_click",
+    oracle="""
+WITH days AS (
+  SELECT CAST(ts AS DATE) AS d,
+         CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
+              AS BIGINT) AS x,
+         CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+              AS BIGINT) AS y
+  FROM events GROUP BY 1
+),
+p AS (
+  SELECT a.x AS xa, a.y AS ya, b.x AS xb, b.y AS yb
+  FROM days a JOIN days b ON a.d < b.d
+),
+cnt AS (
+  SELECT
+    CAST(SUM(CASE WHEN (xa - xb) * (ya - yb) > 0 THEN 1 ELSE 0 END)
+         AS BIGINT) AS conc,
+    CAST(SUM(CASE WHEN (xa - xb) * (ya - yb) < 0 THEN 1 ELSE 0 END)
+         AS BIGINT) AS disc,
+    CAST(SUM(CASE WHEN xa = xb OR ya = yb THEN 1 ELSE 0 END)
+         AS BIGINT) AS tied_pairs,
+    CAST(count(*) AS BIGINT) AS npairs
+  FROM p
+)
+SELECT (SELECT CAST(count(*) AS BIGINT) FROM days) AS n_days,
+       conc AS concordant, disc AS discordant, tied_pairs,
+       """ + duck_sql(_TAU_DIV) + """ AS tau_a_ppm
+FROM cnt
+""",
+)
+def kendall_tau_daily_error_click(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """KENDALL RANK CONCORDANCE (tau-a, integer-exact) between the
+    daily error-event and click-event counts: over all day pairs,
+    concordant minus discordant over total pairs — the
+    distribution-free monotone-association test (no sqrt, unlike
+    tau-b, so it stays inside the no-transcendental doctrine; ties
+    reported separately). The ops question it answers: do error
+    bursts co-move with traffic? Scale shape: one map-side daily
+    aggregation collapses the fact table to the bounded DAY domain
+    (~30 rows here, ≤ calendar at any SF — the hodges_lehmann
+    precedent), then the pair enumeration is quadratic in DAYS only;
+    one final scalar rollup."""
+    ev = load_table(spark, sf_dir, "events")
+    days = (
+        ev.groupBy(F.col("ts").cast("date").alias("d"))
+        .agg(
+            F.sum(
+                F.when(F.col("event_type") == "error", 1).otherwise(0)
+            ).alias("x"),
+            F.sum(
+                F.when(F.col("event_type") == "click", 1).otherwise(0)
+            ).alias("y"),
+        )
+    )
+    a = days.select(
+        F.col("d").alias("da"), F.col("x").alias("xa"), F.col("y").alias("ya")
+    )
+    b = days.select(
+        F.col("d").alias("db"), F.col("x").alias("xb"), F.col("y").alias("yb")
+    )
+    p = a.join(F.broadcast(b), F.col("da") < F.col("db"))
+    cnt = p.selectExpr(
+        "CAST(SUM(CASE WHEN (xa - xb) * (ya - yb) > 0 THEN 1 ELSE 0 END)"
+        " AS BIGINT) AS conc",
+        "CAST(SUM(CASE WHEN (xa - xb) * (ya - yb) < 0 THEN 1 ELSE 0 END)"
+        " AS BIGINT) AS disc",
+        "CAST(SUM(CASE WHEN xa = xb OR ya = yb THEN 1 ELSE 0 END)"
+        " AS BIGINT) AS tied_pairs",
+        "CAST(count(*) AS BIGINT) AS npairs",
+    )
+    nd = days.agg(F.count("*").alias("n_days"))
+    return cnt.crossJoin(F.broadcast(nd)).selectExpr(
+        "n_days",
+        "conc AS concordant",
+        "disc AS discordant",
+        "tied_pairs",
+        spark_sql(_TAU_DIV) + " AS tau_a_ppm",
     )

@@ -33,7 +33,6 @@ FROM lineitem
 GROUP BY CUBE (l_returnflag, l_linestatus)
 ORDER BY g_flag, g_status, l_returnflag, l_linestatus
 """,
-    category="rollups",
 )
 def cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE with grouping() indicators (reference Expand.scala:35 +
@@ -62,7 +61,6 @@ JOIN region ON n_regionkey = r_regionkey
 GROUP BY ROLLUP (r_name, n_name)
 ORDER BY r_name NULLS FIRST, n_name NULLS FIRST
 """,
-    category="rollups",
 )
 def rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over a dim hierarchy (region > nation) after broadcast joins."""
@@ -92,7 +90,6 @@ FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
 """,
-    category="rollups",
 )
 def grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (reference GroupingSets logical node,
@@ -121,7 +118,6 @@ SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
 FROM events
 GROUP BY 1 ORDER BY 1
 """,
-    category="rollups",
 )
 def pivot_event_type_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (reference had only GROUP BY + CASE; pivot is the modern
@@ -152,7 +148,6 @@ FROM events
 GROUP BY day, event_type
 ORDER BY day, event_type
 """,
-    category="rollups",
 )
 def rollup_hourly_to_daily_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-aggregate (hypertable) rollup: daily stats derived
@@ -225,7 +220,6 @@ SELECT region, nation, cents,
              * 1000000) / 1000000 AS region_share_of_total
 FROM tot ORDER BY region, nation
 """,
-    category="rollups",
 )
 def share_of_parent_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percent-of-parent along the geography hierarchy (nation within
@@ -320,7 +314,6 @@ FROM bucketed
 GROUP BY nation, brand_bucket
 ORDER BY nation, cents DESC, brand_bucket
 """,
-    category="rollups",
 )
 def topn_plus_other_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N-plus-OTHER rollup: per nation, the top-3 part brands by

@@ -46,7 +46,6 @@ SELECT custkey, count(*) AS cnt FROM (
   SELECT custkey FROM rich UNION ALL SELECT custkey FROM urgent
 ) GROUP BY custkey ORDER BY custkey
 """,
-    category="setops",
 )
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL (reference basicOperators.scala:77 — bag semantics,
@@ -66,7 +65,6 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     + """
 SELECT custkey FROM rich UNION SELECT custkey FROM urgent ORDER BY custkey
 """,
-    category="setops",
 )
 def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION DISTINCT (reference SqlParser UNION [DISTINCT]) = union + dedup."""
@@ -80,7 +78,6 @@ def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     + """
 SELECT custkey FROM rich INTERSECT SELECT custkey FROM urgent ORDER BY custkey
 """,
-    category="setops",
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (reference basicOperators.scala:252)."""
@@ -94,7 +91,6 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     + """
 SELECT custkey FROM rich EXCEPT SELECT custkey FROM urgent ORDER BY custkey
 """,
-    category="setops",
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT / subtract (reference basicOperators.scala:238,
@@ -109,7 +105,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT n_name, CAST(row_number() OVER (ORDER BY n_nationkey) - 1 AS BIGINT) AS idx
 FROM nation ORDER BY idx
 """,
-    category="setops",
 )
 def zip_with_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zipWithIndex (reference rdd/RDD.scala:1133) in its deterministic
@@ -141,7 +136,6 @@ SELECT CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
        count(*) AS n_rows
 FROM lineitem
 """,
-    category="setops",
 )
 def tree_aggregate_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """treeAggregate parity (reference RDD.scala `treeAggregate` /
@@ -175,7 +169,6 @@ SELECT count(*) AS n_rows,
        TRUE AS ids_unique
 FROM events
 """,
-    category="setops",
 )
 def zip_with_unique_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zipWithUniqueId parity (reference RDD.scala `zipWithUniqueId`):

@@ -63,7 +63,6 @@ FROM l
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """,
-    category="tpch",
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary report (TPC-H Q1 shape): wide scan-agg.
@@ -130,7 +129,6 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY revenue DESC, o_orderdate, l_orderkey
 LIMIT 10
 """,
-    category="tpch",
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shipping priority (TPC-H Q3 shape): 3-way join + agg + top-k.
@@ -173,7 +171,6 @@ WHERE r_name = 'ASIA'
 GROUP BY n_name
 ORDER BY revenue DESC, n_name
 """,
-    category="tpch",
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local supplier volume (TPC-H Q5 shape): 6-way join.
@@ -219,7 +216,6 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
 """,
-    category="tpch",
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecast revenue change (TPC-H Q6 shape): pure scan-filter-agg.
@@ -259,7 +255,6 @@ GROUP BY c_custkey, c_name, c_acctbal, n_name
 ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """,
-    category="tpch",
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned item reporting (TPC-H Q10 shape): join + agg + top-20."""
@@ -301,7 +296,6 @@ SELECT round(CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END) AS DOUBLE)
              * 1000000 / sum(rev)) / 10000 AS promo_revenue_pct
 FROM j
 """,
-    category="tpch",
 )
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Promotion effect (TPC-H Q14 shape): conditional aggregation over
@@ -338,7 +332,6 @@ GROUP BY c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice
 ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 20
 """,
-    category="tpch",
 )
 def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-volume customer (TPC-H Q18 shape): agg-derived semi join.
@@ -390,7 +383,6 @@ JOIN nation   ON s_nationkey = n_nationkey
 GROUP BY n_name, year(o_orderdate)
 ORDER BY nation, o_year DESC
 """,
-    category="tpch",
 )
 def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product profit (TPC-H Q9 shape, cost proxy = 0.6*retail*qty since

@@ -35,7 +35,6 @@ WHERE o_orderdate >= TIMESTAMP '1996-01-01'
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """,
-    category="tpch",
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 (EXISTS -> left-semi join; commitdate predicate adapted to
@@ -81,7 +80,6 @@ FROM (
 GROUP BY supp_nation, cust_nation, l_year
 ORDER BY supp_nation, cust_nation, l_year
 """,
-    category="tpch",
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7: bi-directional nation-pair volume by year. Both nation dims
@@ -144,7 +142,6 @@ FROM (
 GROUP BY o_year
 ORDER BY o_year
 """,
-    category="tpch",
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8: market share of NATION_3 suppliers in EUROPE for PROMO
@@ -205,7 +202,6 @@ FROM (
 GROUP BY c_count
 ORDER BY custdist DESC, c_count DESC
 """,
-    category="tpch",
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13: orders-per-customer histogram (left outer join keeps
@@ -239,7 +235,6 @@ FROM supplier JOIN revenue ON s_suppkey = supplier_no
 WHERE total_rev = (SELECT MAX(total_rev) FROM revenue)
 ORDER BY s_suppkey
 """,
-    category="tpch",
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q15: top revenue supplier via scalar-subquery max. Revenue kept
@@ -277,7 +272,6 @@ WHERE p_brand = 'Brand#23'
   AND l_quantity < (SELECT 0.2 * AVG(l2.l_quantity)
                     FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
 """,
-    category="tpch",
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q17: correlated scalar subquery (avg qty per part) decorrelated
@@ -318,7 +312,6 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
    OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
        AND l_quantity BETWEEN 20 AND 30)
 """,
-    category="tpch",
 )
 def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q19: disjunctive brand/size/quantity predicate (shipmode and
@@ -363,7 +356,6 @@ WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0)
 GROUP BY c_mktsegment
 ORDER BY c_mktsegment
 """,
-    category="tpch",
 )
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22: wealthy customers with no orders (phone-country-code
@@ -405,7 +397,6 @@ WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY
 GROUP BY l_linestatus
 ORDER BY l_linestatus
 """,
-    category="tpch",
 )
 def q12_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q12 adapted (no l_shipmode/commitdate: 'late' = shipped >60 days
@@ -451,7 +442,6 @@ GROUP BY s_name
 ORDER BY numwait DESC, s_name
 LIMIT 20
 """,
-    category="tpch",
 )
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21 adapted ('late' = shipped >60 days after order date, standing

@@ -75,7 +75,6 @@ JOIN best b ON e.ps_partkey = b.ps_partkey
 WHERE p_size = 15 AND p_type = 'LARGE'
 ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
 """,
-    category="tpch",
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2: cheapest EUROPE supplier per qualifying part (ties kept,
@@ -143,7 +142,6 @@ HAVING CAST(SUM(value_1e4) AS DOUBLE)
      > 0.002 * (SELECT CAST(SUM(value_1e4) AS DOUBLE) FROM natps)
 ORDER BY value DESC, ps_partkey
 """,
-    category="tpch",
 )
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11: parts whose NATION_3 supply value exceeds a fraction of the
@@ -192,7 +190,6 @@ WHERE p_brand <> 'Brand#45' AND p_type <> 'PROMO'
 GROUP BY p_brand, p_type, p_size
 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """,
-    category="tpch",
 )
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q16: distinct-supplier counts by part attribute, excluding
@@ -249,7 +246,6 @@ WHERE n_name = 'NATION_1'
   )
 ORDER BY s_name
 """,
-    category="tpch",
 )
 def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q20: NATION_1 suppliers holding 'red' parts whose total supply

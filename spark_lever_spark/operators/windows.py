@@ -36,7 +36,6 @@ SELECT * FROM (
 ) WHERE rn <= 3
 ORDER BY o_custkey, rn
 """,
-    category="windows",
 )
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k via row_number — the canonical distributed
@@ -66,7 +65,6 @@ SELECT s_nationkey, s_suppkey,
 FROM supplier
 ORDER BY s_nationkey, rnk, s_suppkey
 """,
-    category="windows",
 )
 def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank with real ties (rounded balance)."""
@@ -97,7 +95,6 @@ SELECT o_custkey, o_orderkey,
 FROM orders
 ORDER BY o_custkey, o_orderkey
 """,
-    category="windows",
 )
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead offsets: days between consecutive orders per customer."""
@@ -126,7 +123,6 @@ SELECT o_custkey, o_orderkey,
 FROM orders
 ORDER BY o_custkey, o_orderkey
 """,
-    category="windows",
 )
 def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running aggregate with an explicit ROWS frame."""
@@ -158,7 +154,6 @@ SELECT o_custkey, o_orderkey,
 FROM orders
 ORDER BY o_custkey, o_orderkey
 """,
-    category="windows",
 )
 def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 3-row moving average (bounded ROWS frame)."""
@@ -191,7 +186,6 @@ FROM (
   FROM customer
 ) GROUP BY quartile ORDER BY quartile
 """,
-    category="windows",
 )
 def window_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile bucketing → quartile summary (DoubleRDD-stats analog).
@@ -237,7 +231,6 @@ FROM supplier
 WINDOW w AS (ORDER BY s_acctbal, s_suppkey)
 ORDER BY s_acctbal, s_suppkey
 """,
-    category="windows",
 )
 def window_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist / decile ntile in one window — the
@@ -292,7 +285,6 @@ FROM events
 WHERE user_id < 20
 ORDER BY user_id, ts, event_id
 """,
-    category="windows",
 )
 def window_range_interval_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame bounded by a TIME interval (trailing 1-hour sum and
@@ -345,7 +337,6 @@ SELECT n_name, rev_cents,
 FROM rev
 ORDER BY rev_rank
 """,
-    category="windows",
 )
 def share_of_total_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contribution analysis: each nation's share of total revenue via
@@ -404,7 +395,6 @@ SELECT CAST(month AS VARCHAR) AS month, rev_cents,
 FROM monthly
 ORDER BY month
 """,
-    category="windows",
 )
 def revenue_mom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue delta and ratio — the period-over-
@@ -462,7 +452,6 @@ FROM r, (VALUES (10), (20), (30), (40), (50), (60), (70), (80), (90)) t(q)
 WHERE rk = (t.q * n + 99) // 100
 ORDER BY decile
 """,
-    category="windows",
 )
 def exact_global_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT global deciles of l_extendedprice — what
@@ -532,7 +521,6 @@ SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
        ) AS last_purchase_cents
 FROM v ORDER BY user_id, ts, event_id
 """,
-    category="windows",
 )
 def window_last_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``last_value(... IGNORE NULLS)`` — the gap-carry window
@@ -600,7 +588,6 @@ FROM sel b JOIN sel m
   ON m.decile = b.decile AND b.seg = 'BUILDING' AND m.seg = 'MACHINERY'
 ORDER BY b.decile
 """,
-    category="windows",
 )
 def qq_deciles_mktsegments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q-Q (quantile-quantile) comparison of order values between the

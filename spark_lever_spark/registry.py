@@ -1,10 +1,12 @@
 """Central query registry.
 
 Every operator the engine claims (SURVEY.md §2 inventory) registers a
-named query here: a PySpark callable ``(spark, sf_dir) -> DataFrame``
-plus, when SQL-expressible, a DuckDB-compatible ANSI-SQL oracle string
-computing the identical result (same column names — the driver's
-compare hashes values after sorting columns by name).
+named query here as a (callable, oracle) pair: a PySpark callable
+``(spark, sf_dir) -> DataFrame`` and, when SQL-expressible, a
+DuckDB-compatible ANSI-SQL oracle string computing the identical
+result (same column names — the correctness check hashes values after
+sorting columns by name). A query's domain is the module that defines
+it.
 
 The registry is what ``__spark_entry__.queries()`` / ``oracle_sql()``
 expose to the correctness driver, and what ``perfbench``'s query mix
@@ -26,18 +28,12 @@ class Query:
     name: str
     fn: QueryFn
     oracle: str | None  # DuckDB SQL; None => rows-only check
-    category: str = "misc"
-    doc: str = ""
 
 
 _REGISTRY: dict[str, Query] = {}
 
 
-def register(
-    name: str,
-    oracle: str | None,
-    category: str = "misc",
-) -> Callable[[QueryFn], QueryFn]:
+def register(name: str, oracle: str | None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a named query with its oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -47,8 +43,6 @@ def register(
             name=name,
             fn=fn,
             oracle=oracle.strip() if oracle else None,
-            category=category,
-            doc=(fn.__doc__ or "").strip(),
         )
         return fn
 
@@ -98,12 +92,6 @@ def _ensure_loaded() -> None:
         bars,
         alloc,
         actions,
-        round14,
-        round14c,
-        round15,
-        round16,
-        round17,
-        round18,
     )
     from spark_lever_spark.llm import (  # noqa: F401
         curation,

@@ -32,7 +32,6 @@ from spark_lever_spark.streaming.harness import BatchCollector, StreamDrain
 SELECT o_orderstatus, COUNT(*) AS cnt, SUM(o_totalprice) AS total
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """,
-    category="streaming",
 )
 def stream_agg_orders_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental keyed aggregation over a drained stream
@@ -57,7 +56,6 @@ FROM events
 GROUP BY 1, 2
 ORDER BY 1, 2
 """,
-    category="streaming",
 )
 def stream_windowed_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time window aggregation over the drained events
@@ -89,7 +87,6 @@ def stream_windowed_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame
 SELECT c_mktsegment, COUNT(*) AS cnt
 FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
 """,
-    category="streaming",
 )
 def stream_update_state_customer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """updateStateByKey parity (StateDStream.scala:29-110) through
@@ -126,7 +123,6 @@ def stream_update_state_customer_counts(spark: SparkSession, sf_dir: str) -> Dat
 SELECT DISTINCT user_id, event_type FROM events
 ORDER BY user_id, event_type
 """,
-    category="streaming",
 )
 def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication: dropDuplicates keyed state emits each
@@ -159,7 +155,6 @@ JOIN nation n ON n.n_nationkey = c.c_nationkey
 GROUP BY n.n_name
 ORDER BY n.n_name
 """,
-    category="streaming",
 )
 def stream_static_orders_by_nation(
     spark: SparkSession, sf_dir: str
@@ -210,7 +205,6 @@ WHERE ts >= win_start AND ts < win_start + INTERVAL 30 MINUTE
 GROUP BY 1, 2
 ORDER BY 1, 2
 """,
-    category="streaming",
 )
 def stream_sliding_events_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding event-time windows (30 min window, 15 min slide) over
@@ -263,7 +257,6 @@ SELECT user_id, CAST(min(ts) AS TIMESTAMP) AS session_start,
 FROM g GROUP BY user_id, s
 ORDER BY user_id, session_start
 """,
-    category="streaming",
 )
 def stream_session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows over the drained events stream
@@ -300,7 +293,6 @@ SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
 FROM events
 GROUP BY user_id ORDER BY user_id
 """,
-    category="streaming",
 )
 def stream_foreachbatch_upsert_users(
     spark: SparkSession, sf_dir: str
@@ -369,7 +361,6 @@ FROM events c JOIN events p
  AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 1 HOUR
 GROUP BY c.user_id ORDER BY c.user_id
 """,
-    category="streaming",
 )
 def stream_stream_join_click_purchase(
     spark: SparkSession, sf_dir: str
@@ -421,7 +412,6 @@ FROM events, mx
 WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= mx.m - INTERVAL 1 HOUR
 GROUP BY 1, 2 ORDER BY 1, 2
 """,
-    category="streaming",
 )
 def stream_watermark_append_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode watermark FINALIZATION semantics, driver-checked:
@@ -487,7 +477,6 @@ FROM (SELECT DISTINCT user_id FROM matched
       UNION SELECT DISTINCT user_id FROM unmatched) u
 ORDER BY user_id
 """,
-    category="streaming",
 )
 def stream_stream_left_join_unmatched_clicks(
     spark: SparkSession, sf_dir: str
@@ -589,7 +578,6 @@ FROM (SELECT DISTINCT user_id FROM matched
       UNION SELECT DISTINCT user_id FROM up) u
 ORDER BY user_id
 """,
-    category="streaming",
 )
 def stream_stream_full_outer_join_expiry(
     spark: SparkSession, sf_dir: str
@@ -662,7 +650,6 @@ SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start,
        CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
 FROM events GROUP BY 1 ORDER BY 1
 """,
-    category="streaming",
 )
 def stream_windowed_distinct_users(
     spark: SparkSession, sf_dir: str
@@ -708,7 +695,6 @@ ranked AS (
 SELECT hour_start, event_type, events, rnk
 FROM ranked WHERE rnk <= 2 ORDER BY hour_start, rnk
 """,
-    category="streaming",
 )
 def stream_hourly_top2_event_types(
     spark: SparkSession, sf_dir: str
@@ -767,12 +753,11 @@ SELECT d AS doc_id, CAST(count(*) AS BIGINT) AS n_dup_partners,
        CAST(min(o) AS BIGINT) AS min_partner
 FROM bi GROUP BY d ORDER BY doc_id
 """,
-    category="streaming",
 )
 def stream_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup detection with an INCREMENTAL band index —
     the continuous-ingestion marriage of the banded-LSH dedup stack
-    and foreachBatch (VERDICT r16 task #3b). The corpus arrives in
+    and foreachBatch. The corpus arrives in
     four micro-batches; each batch (a) minhashes only its own
     documents, (b) equi-joins its band digests against the persistent
     index of all EARLIER batches (cross-batch pairs), (c) self-joins

@@ -340,8 +340,8 @@ def test_fuzzy_and_overlap_joins_stay_equi(spark, sf_dir):
 
 
 def test_fuzzy_length_band_blocking_exact_and_skew_capped(spark):
-    """VERDICT r9 task #4: a high-frequency head noun must not form one
-    quadratic block.  Part 1 — exactness: with every name sharing ONE
+    """A high-frequency head noun must not form one quadratic block.
+    Part 1 — exactness: with every name sharing ONE
     noun (so the noun key prunes nothing), the (noun, length-cell)
     blocked pair set equals the brute-force edit<=3 pair set, including
     pairs whose length gap of exactly 3 straddles a cell boundary.
@@ -646,9 +646,7 @@ def test_round17_blocking_audit_sample_pairs_via_lang_hash_join(
     lang HASH equi-join (inequality + source filters as residuals);
     the five scalar metric attaches are aggregate-derived broadcast
     crosses, which are the only nested loops in the plan."""
-    from spark_lever_spark.operators.round17 import (
-        _er_lsh_blocking_audit_plan,
-    )
+    from spark_lever_spark.llm.dedup import _er_lsh_blocking_audit_plan
     from spark_lever_spark.plans import formatted_plan
 
     # r19: the registered query pins its 1-row result eagerly; the
@@ -672,7 +670,7 @@ def test_round17_kmeans_refine_broadcasts_centroids(spark, sf_dir):
     plan via the extracted builder (the registered query returns an
     eagerly checkpointed k-row result with truncated lineage, so its
     caches can be unpersisted before return — ADVICE r17)."""
-    from spark_lever_spark.operators.round17 import _kmeans_lloyd_refine_plan
+    from spark_lever_spark.llm.similarity import _kmeans_lloyd_refine_plan
     from spark_lever_spark.plans import formatted_plan
 
     df, q, a1 = _kmeans_lloyd_refine_plan(spark, sf_dir)
@@ -694,9 +692,7 @@ def test_round17_kmeans_refine_broadcasts_centroids(spark, sf_dir):
 def test_round17_duplication_matrix_equi_only(spark, sf_dir):
     """Source x source matrix: pair grain from the band equi-join,
     meta attaches keyed, rollups keyed — zero nested loops."""
-    from spark_lever_spark.operators.round17 import (
-        _cross_source_duplication_matrix_plan,
-    )
+    from spark_lever_spark.llm.dedup import _cross_source_duplication_matrix_plan
 
     # r19: plan pinned on the extracted lazy builder (the registered
     # query returns an eagerly pinned result with truncated lineage).

@@ -33,6 +33,9 @@ from tests.oracle import compare
 ALL = registry.all_queries()
 WITH_ORACLE = sorted(n for n, q in ALL.items() if q.oracle)
 ROWS_ONLY = sorted(n for n, q in ALL.items() if not q.oracle)
+STREAMING = {
+    n for n, q in ALL.items() if q.fn.__module__ == "spark_lever_spark.streaming.queries"
+}
 
 # The ONLY queries allowed to carry a nested-loop join over raw
 # (non-aggregate-derived) inputs, each with a bounded side by
@@ -250,7 +253,7 @@ def _temp_views(spark) -> set[str]:
 def _leaves_nothing(spark, name):
     """Fail if the block leaves a temp-directory entry or an active
     streaming query behind, or, for a streaming query, a temp view."""
-    streaming = ALL[name].category == "streaming"
+    streaming = name in STREAMING
     entries = _temp_entries()
     views = _temp_views(spark) if streaming else set()
     yield
@@ -264,7 +267,7 @@ def _leaves_nothing(spark, name):
 
 def _check_plan(name, df):
     """The plan-hazard checks for a batch query's built frame."""
-    if ALL[name].category == "streaming":
+    if name in STREAMING:
         return
     assert has_file_scan(df) == (name not in PINNED_PLANS), (
         f"{name}: " + ("newly pinned" if name not in PINNED_PLANS else "no longer pinned")
@@ -277,7 +280,7 @@ def _check_plan(name, df):
 
 
 def test_plan_exemptions_name_batch_queries():
-    batch = {n for n, q in ALL.items() if q.category != "streaming"}
+    batch = set(ALL) - STREAMING
     assert set(PINNED_PLANS) <= batch, sorted(set(PINNED_PLANS) - batch)
     assert set(NESTED_LOOP_WHITELIST) <= batch, sorted(
         set(NESTED_LOOP_WHITELIST) - batch

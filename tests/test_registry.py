@@ -45,3 +45,22 @@ def test_no_silent_deregistration():
     assert not new, (
         f"new queries not yet in registry_names.txt (regenerate it): {sorted(new)}"
     )
+
+
+def test_no_round_named_modules():
+    """A query's module names its domain: no registered query lives in a
+    module named for the round that added it, and no such file exists
+    under spark_lever_spark/ (stale bytecode caches aside)."""
+    import re
+    from pathlib import Path
+
+    round_named = re.compile(r"round\d")
+    modules = {q.fn.__module__ for q in registry.all_queries().values()}
+    assert not sorted(m for m in modules if round_named.search(m))
+    pkg = Path(registry.__file__).parent
+    files = [
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*")
+        if "__pycache__" not in p.parts and round_named.search(p.name)
+    ]
+    assert not files, files

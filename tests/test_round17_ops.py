@@ -132,7 +132,7 @@ def test_er_cross_source_brute(spark):
 def test_er_blocking_audit_brute(spark):
     """Ground truth and blocking metrics replayed exactly in Python on
     the fixed-size hash-ordered sample (K=40 docs first in md5(doc_id)
-    order — VERDICT r17 task #4: fixed-K keeps the audit O(K^2) at any
+    order — fixed-K keeps the audit O(K^2) at any
     corpus size); consistency inequalities hold by definition."""
     import hashlib
 

@@ -10,13 +10,8 @@ import math
 import duckdb
 
 from spark_lever_spark import registry
-from spark_lever_spark.operators.round18 import (
-    _BITS_PER_GRAM,
-    _N_QUERIES,
-    _NGRAM,
-    _NPROBES,
-    _TOPK,
-)
+from spark_lever_spark.llm.curation import _BITS_PER_GRAM, _NGRAM
+from spark_lever_spark.llm.similarity import _N_QUERIES, _NPROBES, _TOPK
 
 SF = "/root/testdata/sf0.001"
 
@@ -152,7 +147,7 @@ def test_word_ngrams_short_doc_and_md5_pos_parity(spark):
     formula bit-for-bit."""
     from pyspark.sql import functions as F
 
-    from spark_lever_spark.operators.round18 import _md5_pos, _word_ngrams
+    from spark_lever_spark.llm.curation import _md5_pos, _word_ngrams
 
     df = spark.createDataFrame(
         [("a b", 1), ("a b c d e", 2), ("a b c d e f", 3), ("", 4)],

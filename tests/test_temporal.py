@@ -211,7 +211,7 @@ def test_fifo_match_equals_sequential_simulator(spark):
 
 
 def test_fifo_match_whale_key_not_quadratic(spark):
-    """Whale-key contract (VERDICT r8 task #5): ONE user with 10^4
+    """Whale-key contract: ONE user with 10^4
     lots and 10^4 sells. The pre-round-9 form (bare key equi-join,
     interval predicate as a post-join filter) enumerated n_buys x
     n_sells = 10^8 candidates for this input; the per-key grid join
