@@ -26,13 +26,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor —
-# TPC-H region/nation are constant-size; supplier/part/customer grow
-# with SF so they are *not* listed here.
-BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

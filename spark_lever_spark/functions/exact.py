@@ -55,15 +55,6 @@ def cents(col: Column) -> Column:
     return F.round(col * 100).cast("long")
 
 
-def sql_cents(expr: str) -> str:
-    return f"CAST(round(({expr}) * 100) AS BIGINT)"
-
-
-def sql_round_to(expr: str, n: int) -> str:
-    s = 10**n
-    return f"round(({expr}) * {s}) / {s}"
-
-
 DEC38 = "decimal(38,0)"
 
 

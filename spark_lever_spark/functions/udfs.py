@@ -226,8 +226,6 @@ def pandas_grouped_agg_iqr(
     a Python-rounding or nearest-rank-convention slip in the UDF
     cannot hash-match. Scale: one shuffle on the bounded priority
     key."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("long").alias(
@@ -236,25 +234,23 @@ def pandas_grouped_agg_iqr(
         "o_orderkey",
     )
 
-    # series-to-scalar: the explicit GROUPED_AGG functionType (this
-    # module's `from __future__ import annotations` stringifies type
-    # hints, which defeats pandas_udf's signature inference)
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def q1_udaf(cents, key):
+    # series-to-scalar type hints make these GROUPED_AGG pandas UDFs
+    @F.pandas_udf("long")
+    def q1_udaf(cents: pd.Series, key: pd.Series) -> int:
         order = sorted(zip(cents.tolist(), key.tolist()))
         n = len(order)
         return int(order[(n + 3) // 4 - 1][0])
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def q3_udaf(cents, key):
+    @F.pandas_udf("long")
+    def q3_udaf(cents: pd.Series, key: pd.Series) -> int:
         order = sorted(zip(cents.tolist(), key.tolist()))
         n = len(order)
         return int(order[(3 * n + 3) // 4 - 1][0])
 
     # GROUPED_AGG UDFs cannot mix with built-in aggregates in one
     # .agg() — the count rides a third pandas UDAF
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def n_udaf(cents):
+    @F.pandas_udf("long")
+    def n_udaf(cents: pd.Series) -> int:
         return len(cents)
 
     agg = o.groupBy(F.col("o_orderpriority").alias("pri")).agg(

@@ -2282,11 +2282,6 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision + banding + sweep. Scale: the pair table is the data
     grain; per-threshold rollups are a 5x fan-out of it, all
     equi-keyed."""
-    from spark_lever_spark.llm.dedup import (
-        lsh_candidate_pairs,
-        tune_lsh_banding,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     b, _r = tune_lsh_banding(
         docs, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=150

@@ -2054,8 +2054,6 @@ def dbscan_box_clusters_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     box density. The oracle replays clustering as a transitive-closure
     recursion over the same core graph. Cluster id = min core
     event_id."""
-    from spark_lever_spark.llm.graph import connected_components
-
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "error")
@@ -2941,8 +2939,6 @@ def clustering_coefficient_copurchase(
     Deterministic top-20 (cc desc, degree desc, part). Scale: the
     same support-≥ 2 pruned edge set as every copurchase query; no
     step exceeds the wedge bound."""
-    from spark_lever_spark.llm.graph import copurchase_edges
-
     pairs = copurchase_edges(spark, sf_dir, pinned=True)
     adj = pairs.select(
         F.col("pa").alias("u"), F.col("pb").alias("v")
@@ -3000,8 +2996,6 @@ pairs AS (
 
 
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_lever_spark.llm.graph import copurchase_edges
-
     return copurchase_edges(spark, sf_dir, pinned=True)
 
 
@@ -3432,8 +3426,6 @@ def config_model_triangle_excess_copurchase(
     degree sequence, one aggregation. All ratios HUGEINT ⟷
     decimal(38,0) milli floor-divisions (non-negative). Scale shape:
     compact-forward triangle join (Σ deg² bound) + one degree rollup."""
-    from spark_lever_spark.llm.graph import copurchase_edges
-
     e = copurchase_edges(spark, sf_dir)
     deg = (
         e.select(F.col("pa").alias("v"))

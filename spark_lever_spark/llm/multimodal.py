@@ -1316,8 +1316,6 @@ def multimodal_pgm_sobel_energy(
     integers; no floats anywhere."""
     import numpy as np  # noqa: F401 (imported for the worker closure)
 
-    from spark_lever_spark.llm.multimodal import encode_pgm
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 200)
@@ -1442,8 +1440,6 @@ def multimodal_pgm_centroid_moments(
     from typing import Iterator
 
     import pandas as pd
-
-    from spark_lever_spark.llm.multimodal import encode_pgm
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -1580,8 +1576,6 @@ def multimodal_wav_diff_energy(
 
     import pandas as pd
 
-    from spark_lever_spark.llm.multimodal import encode_wav
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 200)
@@ -1705,8 +1699,6 @@ def multimodal_ppm_color_quantize(
     image."""
     import pandas as pd
 
-    from spark_lever_spark.llm.multimodal import encode_ppm
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 150)
@@ -1808,8 +1800,6 @@ def multimodal_wav_zero_crossings(
     audio_silence_runs (amplitude-threshold VAD runs) and
     multimodal_wav_diff_energy (first-difference energy)."""
     import pandas as pd
-
-    from spark_lever_spark.llm.multimodal import encode_wav
 
     docs = (
         load_table(spark, sf_dir, "documents")

@@ -23,28 +23,6 @@ from spark_lever_spark.llm.textstats import token_count
 from spark_lever_spark.registry import register
 
 
-def quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """The boolean quality filter from text_quality_scores as a
-    standalone stage: >=10 tokens and mean token length < 12 chars."""
-    n_tok = token_count(F.col(text_col))
-    n_ch = F.length(text_col)
-    return docs.filter(
-        n_tok.between(10, 100000) & (n_ch.cast("double") / n_tok < 12)
-    )
-
-
-def dedup_keep_first(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Keep the lowest-doc_id representative of each normalized
-    fingerprint (the exact-dedup stage as a row filter, not a rollup)."""
-    fp = content_fingerprint(normalized_text(F.col(text_col)))
-    ranked = docs.withColumn("__fp__", fp).withColumn(
-        "__keep__", F.min("doc_id").over(Window.partitionBy("__fp__"))
-    )
-    return ranked.filter(F.col("doc_id") == F.col("__keep__")).drop(
-        "__fp__", "__keep__"
-    )
-
-
 @register(
     "pipeline_quality_dedup_stats",
     oracle="""

@@ -1,7 +1,7 @@
 """Training-data selection operators: domain importance weighting,
 hard-negative mining, boilerplate removal.
 
-Round-7 additions to the LLM-pipeline family (SURVEY.md §7 P5 —
+Members of the LLM-pipeline family (SURVEY.md §7 P5 —
 beyond-reference superset; the reference engine has no corpus
 tooling). Three capabilities a real pretraining-data pipeline runs
 between raw crawl and tokenizer:

@@ -576,7 +576,6 @@ def _kmeans_lloyd_refine_plan(
     checkpointed k-row result whose lineage is truncated)."""
 
     emb = load_table(spark, sf_dir, "embeddings")
-    from spark_lever_spark.llm.similarity import as_double
 
     b = emb.select("vec_id", as_double(F.col("embedding")).alias("l"))
     sc = b.agg(
@@ -763,7 +762,6 @@ def ann_ivf_nprobe_recall_curve(
     from pyspark.sql.window import Window
 
     from spark_lever_spark.llm.embeddings import cell_centroids
-    from spark_lever_spark.llm.similarity import as_double, cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(

@@ -1907,8 +1907,6 @@ wc AS (
 
 
 def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_lever_spark.llm.textstats import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
@@ -2192,8 +2190,6 @@ def bm25_rsj_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored (HUGEINT ⟷ decimal(38,0)), summed exactly, top-20 by
     (score, doc_id). Scale: one token explode, a 3-term broadcast
     semi-join (only matching postings survive), per-doc rollup."""
-    from spark_lever_spark.llm.textstats import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("w")

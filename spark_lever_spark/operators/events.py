@@ -57,7 +57,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag -> running sum = session number -> per-session rollup. One
     shuffle on user_id serves both window passes and the final group-by
     (same partitioning, Catalyst reuses the exchange). The streaming
-    twin is `session_window_agg` (streaming/core.py)."""
+    twin is `stream_session_window_events` (F.session_window)."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # gap as a timestamp-interval comparison, exactly what the oracle
@@ -1546,7 +1546,7 @@ def wilson_ci_conversion_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-9 additions: transition matrices and conversion-delay quantiles
+# transition matrices and conversion-delay quantiles
 # ---------------------------------------------------------------------------
 
 

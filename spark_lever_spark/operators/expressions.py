@@ -393,7 +393,7 @@ ORDER BY o_orderkey
 )
 def expr_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-level XML functions (Spark 4 `from_xml` — completes the
-    XML story next to the file-level source in sources/io.py): build an
+    XML story next to Spark's file-level `format("xml")` source): build an
     XML fragment from row values, parse it back through the schema'd
     struct, and emit the extracted fields. The oracle computes the same
     values directly, so the hash check verifies the construct->parse->
@@ -869,7 +869,7 @@ def expr_timezone_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-10 additions: array/map aggregation HOF parity
+# array/map aggregation HOF parity
 # ---------------------------------------------------------------------------
 
 

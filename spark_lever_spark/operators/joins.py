@@ -670,7 +670,7 @@ def grid_join_value_time_neighbors(
 
 
 # ---------------------------------------------------------------------------
-# round-9 additions: dominance, fuzzy-match, and audit joins
+# dominance, fuzzy-match, and audit joins
 # ---------------------------------------------------------------------------
 
 
@@ -913,7 +913,7 @@ def duplicate_payment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-10 additions: directional association rules
+# directional association rules
 # ---------------------------------------------------------------------------
 
 

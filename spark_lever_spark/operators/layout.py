@@ -36,29 +36,6 @@ def zorder_expr(x_expr: str, y_expr: str, bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_write(
-    df: DataFrame,
-    x_expr: str,
-    y_expr: str,
-    path: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Cluster ``df`` by the Z-value of (x, y) and write ``n_files``
-    parquet files: range-partition on z (each file owns a contiguous
-    Z-range = a block of the space-filling curve) and sort within
-    partitions so row-group min/max stats are tight on BOTH dims."""
-    z = F.expr(zorder_expr(x_expr, y_expr, bits)).alias("__z")
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 _Z_EVENTS = zorder_expr("user_id", "dayofyear(ts)", bits=16)
 
 
@@ -72,7 +49,7 @@ ORDER BY event_id
 )
 def layout_zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton Z-value per event over (user_id, day-of-year) — the
-    clustering key zorder_write lays files out by. Identical expression
+    key a Z-ordered write range-partitions and sorts by. Identical expression
     text runs on both engines (dayofyear exists in Spark SQL and DuckDB
     with identical semantics under the pinned UTC session)."""
     ev = load_table(spark, sf_dir, "events")
@@ -207,7 +184,7 @@ def layout_hilbert_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain executes — single-sourced via hilbert_step_exprs, the
     zorder_expr doctrine. Scale: a map-only projection (no shuffle,
     no UDF — pure integer CASE arithmetic in whole-stage codegen);
-    writers sort by hval exactly as zorder_write does."""
+    writers sort by hval exactly as a Z-ordered write sorts by zval."""
     ev = load_table(spark, sf_dir, "events")
     df = ev.selectExpr(
         "event_id",

@@ -2633,7 +2633,7 @@ def cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-9 additions: exact distribution profiling (histograms, buckets,
+# exact distribution profiling (histograms, buckets,
 # robust outliers, systematic sampling)
 # ---------------------------------------------------------------------------
 

@@ -229,7 +229,7 @@ def share_of_parent_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the leaf table is nations-sized, so both windows run over a
     bounded domain at any SF). Ratios divide exact int64 sums —
     bit-identical doubles before the 1e-6 presentation rounding.
-    Dims arrive broadcast (catalog.BROADCAST_DIMS)."""
+    Dims arrive broadcast: region/nation are constant-size at any SF."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"

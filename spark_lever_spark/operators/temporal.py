@@ -1489,7 +1489,7 @@ def fifo_lot_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-9 additions: gap interpolation and interval concurrency
+# gap interpolation and interval concurrency
 # ---------------------------------------------------------------------------
 
 

@@ -12,31 +12,26 @@ maps onto Structured Streaming as a strict superset:
 - updateStateByKey (StateDStream.scala:29-110) becomes
   applyInPandasWithState.
 
-Sources/sinks: files, socket, kafka (format passthrough); foreachBatch /
-console / memory / file sinks. `harness.py` holds the one drain every
-streaming query runs through (`StreamDrain`) and the golden-output test
-harness (reference TestSuiteBase.scala).
+Sources/sinks: the file source (`core.file_stream`); socket and kafka
+are Spark's own readers. Sinks are foreachBatch / console / memory /
+file. `harness.py` holds the one drain every streaming query runs
+through (`StreamDrain`) and the golden-output test harness (reference
+TestSuiteBase.scala).
 """
 
 from spark_lever_spark.streaming.core import (
     file_stream,
     sliding_window_agg,
-    socket_stream,
     tumbling_window_agg,
 )
-from spark_lever_spark.streaming.stateful import (
-    sessionize_stream,
-    update_state_by_key,
-)
+from spark_lever_spark.streaming.stateful import update_state_by_key
 from spark_lever_spark.streaming.harness import BatchCollector, run_file_batches
 
 __all__ = [
-    "sessionize_stream",
     "BatchCollector",
     "file_stream",
     "run_file_batches",
     "sliding_window_agg",
-    "socket_stream",
     "tumbling_window_agg",
     "update_state_by_key",
 ]

@@ -1,19 +1,19 @@
 """JDBC e2e (reference JDBCRDD.scala: stride-partitioned reads +
-WHERE-clause pushdown), runnable in-container against the embedded
-Derby engine that ships with Spark's own jars — no external server.
+WHERE-clause pushdown) on Spark's own `spark.read.jdbc`, runnable
+in-container against the embedded Derby engine that ships with Spark's
+own jars — no external server.
 
 Pins the two properties that matter at scale:
 - predicate pushdown reaches the JDBC scan (`PushedFilters` in the
   physical plan), so the database filters before shipping rows;
-- `partition_column` stride-parallelizes the read into numPartitions
+- a partition column stride-parallelizes the read into numPartitions
   concurrent JDBC cursors (JDBCRDD's core trick).
 """
 
 from __future__ import annotations
 
 import pytest
-
-from spark_lever_spark.sources.io import read_jdbc
+from pyspark.errors import IllegalArgumentException
 
 DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
@@ -30,7 +30,7 @@ def jdbc_url(spark, tmp_path_factory):
 
 
 def test_jdbc_roundtrip_and_pushdown(spark, jdbc_url):
-    got = read_jdbc(spark, jdbc_url, "METRICS", properties=DERBY_PROPS)
+    got = spark.read.jdbc(jdbc_url, "METRICS", properties=DERBY_PROPS)
     filtered = got.filter("val > 750.0").select("id", "val")
     assert filtered.count() == 499  # ids 501..999
     plan = filtered._jdf.queryExecution().executedPlan().toString()
@@ -38,15 +38,14 @@ def test_jdbc_roundtrip_and_pushdown(spark, jdbc_url):
 
 
 def test_jdbc_stride_partitioned_read(spark, jdbc_url):
-    got = read_jdbc(
-        spark,
+    got = spark.read.jdbc(
         jdbc_url,
         "METRICS",
-        partition_column="ID",
-        lower_bound=0,
-        upper_bound=1000,
-        num_partitions=4,
-    properties=DERBY_PROPS,
+        column="ID",
+        lowerBound=0,
+        upperBound=1000,
+        numPartitions=4,
+        properties=DERBY_PROPS,
     )
     assert got.rdd.getNumPartitions() == 4
     assert got.count() == 1000
@@ -55,8 +54,7 @@ def test_jdbc_stride_partitioned_read(spark, jdbc_url):
 
 
 def test_jdbc_explicit_predicates(spark, jdbc_url):
-    got = read_jdbc(
-        spark,
+    got = spark.read.jdbc(
         jdbc_url,
         "METRICS",
         # predicates are passed to the database verbatim — quote the
@@ -71,8 +69,16 @@ def test_jdbc_explicit_predicates(spark, jdbc_url):
 
 
 def test_jdbc_partition_args_validated(spark):
-    with pytest.raises(ValueError, match="partition_column requires"):
-        read_jdbc(spark, "jdbc:derby:memory:x", "T", partition_column="id")
+    # a stride-partitioned read names the column, both bounds and the
+    # partition count, or none of them: Spark rejects a bare partition
+    # column before it opens a connection
+    with pytest.raises(IllegalArgumentException, match="all or none"):
+        spark.read.format("jdbc").options(
+            url="jdbc:derby:memory:x",
+            dbtable="T",
+            partitionColumn="id",
+            **DERBY_PROPS,
+        ).load()
 
 
 def test_jdbc_append_mode(spark, jdbc_url):
@@ -88,6 +94,6 @@ def test_jdbc_append_mode(spark, jdbc_url):
                      properties=DERBY_PROPS)
     extra.write.jdbc(jdbc_url, "METRICS_APPEND", mode="append",
                      properties=DERBY_PROPS)
-    got = read_jdbc(spark, jdbc_url, "METRICS_APPEND", properties=DERBY_PROPS)
+    got = spark.read.jdbc(jdbc_url, "METRICS_APPEND", properties=DERBY_PROPS)
     assert got.count() == 100
     assert got.filter("id >= 10000").count() == 100

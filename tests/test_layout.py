@@ -11,7 +11,7 @@ import os
 from pyspark.sql import functions as F
 
 from spark_lever_spark.catalog import load_table
-from spark_lever_spark.operators.layout import zorder_write
+from spark_lever_spark.operators.layout import zorder_expr
 
 
 def _mean_file_span(spark, path, col_expr):
@@ -33,7 +33,12 @@ def test_zorder_write_tightens_stats_on_both_dims(spark, sf_dir, tmp_path):
     zpath = str(tmp_path / "z")
     upath = str(tmp_path / "by_user")
     tpath = str(tmp_path / "by_time")
-    zorder_write(ev, "user_id", "dayofyear(ts)", zpath, n_files=8)
+    # range-partition on the Z-value (each file owns a contiguous block
+    # of the curve) and sort within files
+    z = F.expr(zorder_expr("user_id", "dayofyear(ts)"))
+    ev.withColumn("z", z).repartitionByRange(8, "z").sortWithinPartitions(
+        "z"
+    ).drop("z").write.parquet(zpath)
     ev.repartitionByRange(8, "user_id").sortWithinPartitions("user_id").write.parquet(upath)
     ev.repartitionByRange(8, "ts").sortWithinPartitions("ts").write.parquet(tpath)
 

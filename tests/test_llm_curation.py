@@ -214,43 +214,6 @@ def test_pipeline_curate_sample_matches_python_ground_truth(
     assert got_map == expect
 
 
-def test_pipeline_helpers_match_slim_path(spark, sf_dir):
-    """The generic text-carrying helpers (quality_gate,
-    dedup_keep_first) must select exactly the same surviving documents
-    as the registered query's slim projected path — they are the
-    reusable API form of the same stages."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from spark_lever_spark.catalog import load_table
-    from spark_lever_spark.llm.dedup import content_fingerprint, normalized_text
-    from spark_lever_spark.llm.pipeline import dedup_keep_first, quality_gate
-    from spark_lever_spark.llm.textstats import token_count
-
-    docs = load_table(spark, sf_dir, "documents")
-    helper_ids = {
-        r.doc_id for r in dedup_keep_first(quality_gate(docs)).select("doc_id").collect()
-    }
-
-    n_tok = token_count(F.col("text"))
-    n_ch = F.length("text")
-    slim = docs.select(
-        "doc_id",
-        (n_tok.between(10, 100000) & (n_ch.cast("double") / n_tok < 12)).alias("p"),
-        content_fingerprint(normalized_text(F.col("text"))).alias("fp"),
-    ).filter(F.col("p"))
-    slim_ids = {
-        r.doc_id
-        for r in slim.withColumn(
-            "keep", F.min("doc_id").over(Window.partitionBy("fp"))
-        )
-        .filter(F.col("doc_id") == F.col("keep"))
-        .select("doc_id")
-        .collect()
-    }
-    assert helper_ids == slim_ids and len(helper_ids) > 0
-
-
 def test_bpe_kernel_matches_distributed_loop(spark, sf_dir, monkeypatch):
     """Round 18: below _LOCAL_BPE_MAX_WORDS the 5 BPE merge rounds run
     in a single-task kernel over the word-count table; the distributed

@@ -57,7 +57,7 @@ def test_broadcast_dim_join_is_broadcast(spark, sf_dir):
 
 def test_q5_broadcasts_constant_dims(spark, sf_dir):
     """region/nation are constant-size at every SF — they must never
-    arrive via shuffle (catalog.BROADCAST_DIMS contract)."""
+    arrive via shuffle."""
     df = ALL["q5_local_supplier_volume"].fn(spark, sf_dir)
     assert broadcast_join_count(df) >= 2
 

@@ -4,8 +4,12 @@ ever silently disappears."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
+import spark_lever_spark
 from spark_lever_spark import registry
 
 
@@ -33,8 +37,6 @@ def test_no_silent_deregistration():
     When adding queries, regenerate tests/registry_names.txt:
     python -c "from spark_lever_spark import registry; print('\\n'.join(sorted(registry.all_queries())))" > tests/registry_names.txt
     """
-    from pathlib import Path
-
     committed = set(
         Path(__file__).with_name("registry_names.txt").read_text().split()
     )
@@ -52,7 +54,6 @@ def test_no_round_named_modules():
     module named for the round that added it, and no such file exists
     under spark_lever_spark/ (stale bytecode caches aside)."""
     import re
-    from pathlib import Path
 
     round_named = re.compile(r"round\d")
     modules = {q.fn.__module__ for q in registry.all_queries().values()}
@@ -64,3 +65,98 @@ def test_no_round_named_modules():
         if "__pycache__" not in p.parts and round_named.search(p.name)
     ]
     assert not files, files
+
+
+# Definitions kept although no root reaches them, each for its reason.
+# A key is "<path under spark_lever_spark/>:<name>", a directory
+# ("<dir>/") or a bare name (any module).
+REACH_ALLOWLIST = {
+    "plans/": "plan-hazard instruments tests/test_plans.py runs over the registry",
+    "streaming/harness.py:run_file_batches": "golden-output harness of the streaming tests",
+    "__all__": "export lists are read by name strings, not by references",
+}
+
+
+def _names_used(nodes) -> set[str]:
+    """Every identifier the code loads or looks up as an attribute; an
+    import alone names nothing."""
+    used: set[str] = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                used.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                used.add(n.attr)
+    return used
+
+
+def _is_registered(stmt) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+        for d in stmt.decorator_list
+    )
+
+
+def test_every_package_definition_is_reached():
+    """No top-level function, class or constant in spark_lever_spark/
+    exists that only tests reach. The roots are the @register queries,
+    perfbench/ (its tests aside), scripts/, __spark_entry__.py and the
+    package __init__ with its __all__. Reachability is by name over the
+    AST: a definition is reached when reached code names it, and its
+    body then reaches further. Module-level statements other than
+    definitions run on import and count as roots."""
+    repo = Path(__file__).resolve().parents[1]
+    pkg = repo / "spark_lever_spark"
+    defs: dict[str, tuple[str, ast.AST]] = {}
+    roots: list[ast.AST] = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text())
+        whole_root = rel == "__init__.py" or any(
+            rel.startswith(k) for k in REACH_ALLOWLIST if k.endswith("/")
+        )
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+                named = [stmt.name]
+                rooted = _is_registered(stmt)
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                targets = (
+                    stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+                )
+                named = [
+                    n.id for t in targets for n in ast.walk(t)
+                    if isinstance(n, ast.Name)
+                ]
+                rooted = False
+            else:
+                roots.append(stmt)
+                continue
+            for name in named:
+                key = f"{rel}:{name}"
+                if whole_root or rooted or key in REACH_ALLOWLIST or (
+                    name in REACH_ALLOWLIST
+                ):
+                    roots.append(stmt)
+                else:
+                    defs[key] = (name, stmt)
+    for d in ("perfbench", "scripts"):
+        for path in sorted((repo / d).rglob("*.py")):
+            if "tests" not in path.relative_to(repo / d).parts:
+                roots.append(ast.parse(path.read_text()))
+    roots.append(ast.parse((repo / "__spark_entry__.py").read_text()))
+    frontier = _names_used(roots) | set(spark_lever_spark.__all__)
+    by_name: dict[str, list[str]] = {}
+    for key, (name, _) in defs.items():
+        by_name.setdefault(name, []).append(key)
+    reached: set[str] = set()
+    seen: set[str] = set()
+    while frontier:
+        name = frontier.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for key in by_name.get(name, ()):
+            reached.add(key)
+            frontier |= _names_used([defs[key][1]])
+    unreached = sorted(set(defs) - reached)
+    assert not unreached, f"only tests reach these definitions: {unreached}"

@@ -1,5 +1,6 @@
-"""Batch source/sink parity (SURVEY.md §2.G): round-trips, schema
-inference, partition discovery + pruning."""
+"""Batch source/sink parity (SURVEY.md §2.G) on Spark's own readers
+and writers: round-trips, schema inference, partition discovery +
+pruning, and the catalog's post-load schema contract."""
 
 from __future__ import annotations
 
@@ -7,14 +8,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-
-from spark_lever_spark.sources import (
-    read_csv,
-    read_json,
-    read_parquet,
-    read_text,
-    write_partitioned,
-)
 
 
 @pytest.fixture()
@@ -27,20 +20,20 @@ def sample_df(spark):
 
 def test_parquet_roundtrip_with_pruning(spark, sample_df, tmp_path):
     path = str(tmp_path / "t.parquet")
-    write_partitioned(sample_df, path)
-    back = read_parquet(spark, path, columns=["id", "tag"])
+    sample_df.write.parquet(path)
+    back = spark.read.parquet(path).select("id", "tag")
     assert back.columns == ["id", "tag"]
     assert sorted(map(tuple, back.collect())) == [(1, "a"), (2, "b"), (3, "a")]
 
 
 def test_partitioned_write_discovery_and_pruning(spark, sample_df, tmp_path):
     path = str(tmp_path / "part")
-    write_partitioned(sample_df, path, partition_by=["tag"])
+    sample_df.write.partitionBy("tag").parquet(path)
     # hive-style layout on disk
     assert sorted(
         d for d in os.listdir(path) if d.startswith("tag=")
     ) == ["tag=a", "tag=b"]
-    back = read_parquet(spark, path)
+    back = spark.read.parquet(path)
     pruned = back.filter(F.col("tag") == "a")
     assert sorted(r["id"] for r in pruned.collect()) == [1, 3]
     # partition pruning: only the tag=a directory is scanned
@@ -50,12 +43,12 @@ def test_partitioned_write_discovery_and_pruning(spark, sample_df, tmp_path):
 
 def test_json_roundtrip_and_inference(spark, sample_df, tmp_path):
     path = str(tmp_path / "t.json")
-    write_partitioned(sample_df, path, fmt="json")
-    inferred = read_json(spark, path)  # schema by sampling
+    sample_df.write.json(path)
+    inferred = spark.read.json(path)  # schema by sampling
     assert dict(inferred.dtypes)["id"] == "bigint"
     assert dict(inferred.dtypes)["x"] == "double"
     assert inferred.count() == 3
-    explicit = read_json(spark, path, schema="id long, tag string, x double")
+    explicit = spark.read.schema("id long, tag string, x double").json(path)
     assert sorted(map(tuple, explicit.collect())) == sorted(
         map(tuple, sample_df.collect())
     )
@@ -64,10 +57,10 @@ def test_json_roundtrip_and_inference(spark, sample_df, tmp_path):
 def test_csv_roundtrip_header_and_inference(spark, sample_df, tmp_path):
     path = str(tmp_path / "t.csv")
     sample_df.write.mode("overwrite").option("header", "true").csv(path)
-    inferred = read_csv(spark, path, header=True, infer_schema=True)
+    inferred = spark.read.csv(path, header=True, inferSchema=True)
     assert dict(inferred.dtypes)["id"] == "int"  # CSV inference -> int
     assert inferred.count() == 3
-    typed = read_csv(spark, path, schema="id long, tag string, x double")
+    typed = spark.read.csv(path, schema="id long, tag string, x double", header=True)
     assert sorted(map(tuple, typed.collect())) == sorted(
         map(tuple, sample_df.collect())
     )
@@ -78,8 +71,8 @@ def test_csv_malformed_modes(spark, tmp_path):
     os.makedirs(path)
     with open(os.path.join(path, "part-0.csv"), "w") as f:
         f.write("id,x\n1,2.5\nnot_a_number,oops,extra\n3,4.5\n")
-    dropped = read_csv(
-        spark, path, schema="id long, x double", header=True, mode="DROPMALFORMED"
+    dropped = spark.read.csv(
+        path, schema="id long, x double", header=True, mode="DROPMALFORMED"
     )
     assert sorted(map(tuple, dropped.collect())) == [(1, 2.5), (3, 4.5)]
 
@@ -89,23 +82,14 @@ def test_text_source(spark, tmp_path):
     os.makedirs(path)
     with open(os.path.join(path, "a.txt"), "w") as f:
         f.write("hello\nworld\n")
-    df = read_text(spark, path)
+    df = spark.read.text(path)
     assert sorted(r["value"] for r in df.collect()) == ["hello", "world"]
-
-
-def test_jdbc_argument_validation(spark):
-    from spark_lever_spark.sources import read_jdbc
-
-    with pytest.raises(ValueError, match="partition_column requires"):
-        read_jdbc(
-            spark, "jdbc:postgresql://x/y", "t", partition_column="id"
-        )
 
 
 def test_max_records_per_file(spark, tmp_path):
     path = str(tmp_path / "split")
     df = spark.range(0, 100).coalesce(1)
-    write_partitioned(df, path, max_records_per_file=25)
+    df.write.option("maxRecordsPerFile", 25).parquet(path)
     files = [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert len(files) >= 4  # 100 rows / 25 per file
 
@@ -142,7 +126,7 @@ def test_orc_roundtrip_with_pruning(spark, sample_df, tmp_path):
     # §2.E I/O row, maps to parquet/orc in modern Spark); same
     # predicate-pushdown contract as parquet
     path = str(tmp_path / "orc_rt")
-    write_partitioned(sample_df, path, fmt="orc", partition_by=["tag"])
+    sample_df.write.partitionBy("tag").orc(path)
     back = spark.read.orc(path)
     assert back.count() == sample_df.count()
     only_a = back.filter(back.tag == "a")
@@ -198,11 +182,9 @@ def test_xml_roundtrip(spark, sample_df, tmp_path):
     # Native XML source (new in Spark 4's sql module; superset — the
     # reference predates any XML source). Write partitions as rooted
     # documents, read back via rowTag with schema inference.
-    from spark_lever_spark.sources import read_xml, write_xml
-
     path = str(tmp_path / "x")
-    write_xml(sample_df, path, row_tag="rec", root_tag="recs")
-    back = read_xml(spark, path, row_tag="rec")
+    sample_df.write.option("rowTag", "rec").option("rootTag", "recs").xml(path)
+    back = spark.read.option("rowTag", "rec").xml(path)
     assert back.count() == sample_df.count()
     got = sorted(
         (r["id"], r["tag"], r["x"]) for r in back.collect()
@@ -212,7 +194,7 @@ def test_xml_roundtrip(spark, sample_df, tmp_path):
     )
     assert got == want
     # explicit schema skips the inference pass (the at-scale path)
-    back2 = read_xml(spark, path, row_tag="rec", schema=sample_df.schema)
+    back2 = spark.read.schema(sample_df.schema).option("rowTag", "rec").xml(path)
     assert back2.schema == sample_df.schema
 
 

@@ -249,7 +249,7 @@ def test_stream_stream_inner_join(spark, tmp_path):
     import json as _json
     import os
 
-    from spark_lever_spark.streaming.core import file_stream, stream_stream_join
+    from spark_lever_spark.streaming.core import file_stream
 
     left_dir, right_dir = str(tmp_path / "l"), str(tmp_path / "r")
     ck = str(tmp_path / "ck")
@@ -263,15 +263,13 @@ def test_stream_stream_inner_join(spark, tmp_path):
         for i, k in enumerate(["b", "c", "d"]):
             f.write(_json.dumps({"rts": ts.format(i), "k": k, "rv": i * 10}) + "\n")
 
-    left = file_stream(spark, left_dir, "lts timestamp, k string, lv long")
-    right = file_stream(spark, right_dir, "rts timestamp, k string, rv long")
-    joined = stream_stream_join(
-        left,
-        right,
-        on=["k"],
-        left_watermark=("lts", "10 seconds"),
-        right_watermark=("rts", "10 seconds"),
-    ).select("k", "lv", "rv")
+    left = file_stream(
+        spark, left_dir, "lts timestamp, k string, lv long"
+    ).withWatermark("lts", "10 seconds")
+    right = file_stream(
+        spark, right_dir, "rts timestamp, k string, rv long"
+    ).withWatermark("rts", "10 seconds")
+    joined = left.join(right, on=["k"]).select("k", "lv", "rv")
 
     from spark_lever_spark.streaming.harness import BatchCollector
 
@@ -321,8 +319,6 @@ def test_streaming_file_sink_roundtrip(spark, tmp_path):
 def test_session_window_merging(spark):
     """Session windows (beyond-reference superset): events <=10s apart
     merge; a >10s gap starts a new session."""
-    from spark_lever_spark.streaming.core import session_window_agg
-
     batches = [
         [
             {"ts": _ts("01"), "k": "a", "v": 1},
@@ -334,9 +330,9 @@ def test_session_window_merging(spark):
         spark,
         batches,
         SCHEMA_TS,
-        transform=lambda df: session_window_agg(
-            df, "ts", "10 seconds", keys=["k"]
-        ).select(
+        transform=lambda df: df.groupBy(
+            F.session_window("ts", "10 seconds"), "k"
+        ).count().select(
             F.col("session_window.start").cast("string").alias("ss"),
             "k",
             "count",
@@ -358,8 +354,6 @@ def test_socket_source_live(spark):
     import threading
     import time as _time
 
-    from spark_lever_spark.streaming.core import socket_stream
-
     server = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
     server.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
     server.bind(("127.0.0.1", 0))
@@ -377,7 +371,12 @@ def test_socket_source_live(spark):
     t = threading.Thread(target=serve, daemon=True)
     t.start()
 
-    sdf = socket_stream(spark, "127.0.0.1", port)
+    sdf = (
+        spark.readStream.format("socket")
+        .option("host", "127.0.0.1")
+        .option("port", str(port))
+        .load()
+    )
     assert sdf.isStreaming and sdf.columns == ["value"]
     q = (
         sdf.writeStream.format("memory")
@@ -399,133 +398,6 @@ def test_socket_source_live(spark):
         server.close()
 
 
-def test_update_state_event_time_timeout_finalizes_idle_keys(spark):
-    """Event-time expiry: a key idle past its deadline is finalized
-    with a last `expired=true` row and evicted — deterministic because
-    the deadline and the watermark both derive from event time.
-    Timeline (watermark delay 10 s, deadline = last event + 30 s):
-    batch1 a@0,b@0; batch2 b@60 (wm=-10: nothing fires); batch3 b@120
-    (wm=50 > a's deadline 30: a fires)."""
-    import pandas as pd
-
-    def upd(key, pdf, old):
-        cnt = (old[0] if old else 0) + len(pdf)
-        last_ms = max(
-            int(pd.Timestamp(t).timestamp() * 1000) for t in pdf["ts"]
-        )
-        if old:
-            last_ms = max(last_ms, old[1])
-        return (cnt, last_ms, False)
-
-    col = run_file_batches(
-        spark,
-        [
-            [{"k": "a", "ts": "2024-01-01T00:00:00"},
-             {"k": "b", "ts": "2024-01-01T00:00:00"}],
-            [{"k": "b", "ts": "2024-01-01T00:01:00"}],
-            [{"k": "b", "ts": "2024-01-01T00:02:00"}],
-        ],
-        "k string, ts timestamp",
-        transform=lambda df: update_state_by_key(
-            df.withWatermark("ts", "10 seconds"),
-            ["k"],
-            upd,
-            state_schema="cnt long, last_ms long, expired boolean",
-            output_schema="k string, cnt long, last_ms long, expired boolean",
-            timeout="EventTimeTimeout",
-            timeout_ms_fn=lambda key, st: st[1] + 30_000,
-            on_timeout=lambda key, old: (old[0], old[1], True) if old else None,
-        ),
-        output_mode="update",
-    )
-    t0 = 1704067200000  # 2024-01-01T00:00:00 UTC in epoch ms
-    per_batch = [sorted(rows) for rows in col.rows_per_batch]
-    assert per_batch[0] == [("a", 1, t0, False), ("b", 1, t0, False)]
-    assert per_batch[1] == [("b", 2, t0 + 60_000, False)]
-    assert per_batch[2] == [
-        ("a", 1, t0, True),
-        ("b", 3, t0 + 120_000, False),
-    ]
-
-
-def test_sessionize_stream_emits_each_session_once(spark):
-    """Both close paths, no double emission: in-batch gap split flushes
-    with the triggering batch; idle keys flush when the watermark
-    passes last+gap. Gap 30 min, watermark 10 min. u1: 00:00,00:10 |
-    01:00 (gap>30m -> closes s1, opens s2; s2 closes by timeout once
-    wm=01:50 after b3). u2: 00:00 | 02:00 (in-batch? no - cross-batch
-    gap closes s1 in b3). u3 filler advances the watermark."""
-    from spark_lever_spark.streaming import sessionize_stream
-
-    col = run_file_batches(
-        spark,
-        [
-            [{"u": 1, "ts": "2024-01-01T00:00:00"},
-             {"u": 1, "ts": "2024-01-01T00:10:00"},
-             {"u": 2, "ts": "2024-01-01T00:00:00"}],
-            [{"u": 1, "ts": "2024-01-01T01:00:00"}],
-            [{"u": 2, "ts": "2024-01-01T02:00:00"}],
-            [{"u": 3, "ts": "2024-01-01T03:00:00"}],
-        ],
-        "u long, ts timestamp",
-        transform=lambda df: sessionize_stream(
-            df.withWatermark("ts", "10 minutes"), "u", "ts",
-            gap_ms=30 * 60 * 1000,
-        ),
-        output_mode="append",
-    )
-    t0 = 1704067200000
-    MIN = 60_000
-    per_batch = [sorted(rows) for rows in col.rows_per_batch]
-    assert per_batch[0] == []
-    # u1's first session closes when the 01:00 event arrives past the gap
-    assert per_batch[1] == [(1, t0, t0 + 10 * MIN, 2)]
-    # u2's 02:00 event closes its 00:00 singleton session
-    assert per_batch[2] == [(2, t0, t0, 1)]
-    # wm after b3 = 01:50 > u1's deadline 01:30 -> timeout flush of s2;
-    # u2's s2 (deadline 02:30) and u3 still open in this batch
-    assert per_batch[3] == [(1, t0 + 60 * MIN, t0 + 60 * MIN, 1)]
-    # availableNow runs one final no-data batch; by then wm = 02:50
-    # passes u2's s2 deadline (02:30) -> timeout flush. u3 (deadline
-    # 03:30) is still open and stays unemitted.
-    assert per_batch[4] == [(2, t0 + 120 * MIN, t0 + 120 * MIN, 1)]
-    # total: each closed session exactly once, open sessions withheld
-    assert sum(len(b) for b in per_batch) == 4
-
-
-def test_sessionize_stream_survives_late_data(spark):
-    """A late event (older than watermark - gap) rebuilds state whose
-    natural deadline already trails the watermark; the clamp arms it
-    for the next batch instead of crashing on setTimeoutTimestamp.
-    u1@00:05 arrives after u9@02:00 pushed wm to 01:50."""
-    from spark_lever_spark.streaming import sessionize_stream
-
-    col = run_file_batches(
-        spark,
-        [
-            [{"u": 1, "ts": "2024-01-01T00:00:00"}],
-            [{"u": 9, "ts": "2024-01-01T02:00:00"}],
-            [{"u": 1, "ts": "2024-01-01T00:05:00"}],
-            [{"u": 9, "ts": "2024-01-01T02:30:00"}],
-        ],
-        "u long, ts timestamp",
-        transform=lambda df: sessionize_stream(
-            df.withWatermark("ts", "10 minutes"), "u", "ts",
-            gap_ms=30 * 60 * 1000,
-        ),
-        output_mode="append",
-    )
-    t0 = 1704067200000
-    MIN = 60_000
-    flat = sorted(r for b in col.rows_per_batch for r in b)
-    # u1's session closed (via timeout after the late event merged in);
-    # whether the late row extended the session or timed out first is
-    # engine scheduling — but the query must SURVIVE and u1 must close
-    # exactly once with start at 00:00
-    u1 = [r for r in flat if r[0] == 1]
-    assert len(u1) == 1 and u1[0][1] == t0 and u1[0][3] in (1, 2)
-
-
 def test_stream_stream_left_outer_join_emits_nulls_after_watermark(spark, tmp_path):
     """Left-outer stream-stream join (PairDStreamFunctions.scala:
     544-578 parity): a left row with no match is held in state and
@@ -537,7 +409,7 @@ def test_stream_stream_left_outer_join_emits_nulls_after_watermark(spark, tmp_pa
     import os
 
     from pyspark.sql import functions as F
-    from spark_lever_spark.streaming.core import file_stream, stream_stream_join
+    from spark_lever_spark.streaming.core import file_stream
     from spark_lever_spark.streaming.harness import BatchCollector
 
     left_dir, right_dir = str(tmp_path / "l"), str(tmp_path / "r")
@@ -581,8 +453,7 @@ def test_stream_stream_left_outer_join_emits_nulls_after_watermark(spark, tmp_pa
         spark, right_dir, "rts timestamp, k string, rv long",
         max_files_per_trigger=1,
     ).withWatermark("rts", "10 minutes").alias("r")
-    joined = stream_stream_join(
-        left,
+    joined = left.join(
         right,
         on=F.expr(
             "l.k = r.k AND rts BETWEEN lts - INTERVAL 5 MINUTES "
@@ -605,37 +476,6 @@ def test_stream_stream_left_outer_join_emits_nulls_after_watermark(spark, tmp_pa
     nulls = [r for r in rows if r[2] is None]
     assert matched == [("a", 1, 10)]
     assert nulls == [("b", 2, None)]
-
-
-def test_sessionize_stream_late_event_forms_earlier_session(spark):
-    """A late event OLDER than the open session's start must not be
-    absorbed into it — it forms its own earlier session, emitted closed
-    immediately (a later session exists)."""
-    from spark_lever_spark.streaming import sessionize_stream
-
-    col = run_file_batches(
-        spark,
-        [
-            [{"u": 1, "ts": "2024-01-01T10:00:00"}],
-            # late: 10h before the open session, within the watermark
-            # allowance only because the wm hasn't advanced past it yet
-            [{"u": 1, "ts": "2024-01-01T00:05:00"}],
-            [{"u": 9, "ts": "2024-01-01T23:00:00"}],
-        ],
-        "u long, ts timestamp",
-        transform=lambda df: sessionize_stream(
-            df.withWatermark("ts", "1 DAY"), "u", "ts",
-            gap_ms=30 * 60 * 1000,
-        ),
-        output_mode="append",
-    )
-    t0 = 1704067200000
-    MIN = 60_000
-    flat = sorted(r for b in col.rows_per_batch for r in b)
-    # the late 00:05 singleton closed on arrival; the 10:00 session
-    # must NOT report n_events=2 or a zero-length 2-event window
-    assert (1, t0 + 5 * MIN, t0 + 5 * MIN, 1) in flat
-    assert all(not (r[0] == 1 and r[3] == 2) for r in flat)
 
 
 def test_stream_stream_left_join_exact_watermark_boundary(spark, tmp_path):
@@ -780,19 +620,3 @@ def test_drop_duplicates_within_watermark_semantics(spark, tmp_path):
         ("e7", "Y"),
         ("e8", "X"),
     ]
-
-
-def test_update_state_timeout_args_validated(spark):
-    import pytest as _pytest
-    from spark_lever_spark.streaming.stateful import (
-        running_count_update,
-        update_state_by_key,
-    )
-
-    df = spark.createDataFrame([("a", 1)], ["k", "v"])
-    with _pytest.raises(ValueError, match="together"):
-        update_state_by_key(
-            df, ["k"], running_count_update,
-            state_schema="cnt long", output_schema="k string, cnt long",
-            timeout="EventTimeTimeout",  # no timeout_ms_fn -> never arms
-        )

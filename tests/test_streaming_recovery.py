@@ -75,54 +75,3 @@ def test_recovery_is_exactly_once_per_file(spark, tmp_path):
     col2 = BatchCollector()
     _run_until_drained(spark, input_dir, ckpt, col2)
     assert col2.rows_per_batch == []
-
-
-def test_sessionize_state_survives_restart_without_double_emit(spark, tmp_path):
-    """Arbitrary keyed state (open sessions + armed timeouts) is part
-    of the checkpoint: after a restart, a pre-restart session closed by
-    a post-restart event is emitted exactly once, with its start
-    timestamp recovered from before the restart."""
-    from spark_lever_spark.streaming import sessionize_stream
-
-    input_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ck")
-    os.makedirs(input_dir)
-
-    def run(collector):
-        sdf = file_stream(
-            spark, input_dir, "u long, ts timestamp", max_files_per_trigger=1
-        )
-        out = sessionize_stream(
-            sdf.withWatermark("ts", "10 minutes"), "u", "ts",
-            gap_ms=30 * 60 * 1000,
-        )
-        q = (
-            out.writeStream.foreachBatch(collector)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    # phase 1: u1 opens a session; stream drains with it still open
-    _write_batch(input_dir, 0, [{"u": 1, "ts": "2024-01-01T00:00:00"}])
-    _write_batch(input_dir, 1, [{"u": 1, "ts": "2024-01-01T00:10:00"}])
-    col1 = BatchCollector()
-    run(col1)
-    assert [r for b in col1.rows_per_batch for r in b] == []
-
-    # phase 2: restart on the same checkpoint; a far-future u1 event
-    # closes the RECOVERED session (start 00:00, 2 events) exactly once
-    _write_batch(input_dir, 2, [{"u": 1, "ts": "2024-01-01T05:00:00"}])
-    _write_batch(input_dir, 3, [{"u": 2, "ts": "2024-01-01T06:00:00"}])
-    col2 = BatchCollector()
-    run(col2)
-    t0 = 1704067200000
-    flat = sorted(r for b in col2.rows_per_batch for r in b)
-    # u1's recovered session closed once; its 05:00 session closed by
-    # timeout once wm reached 05:50; u2 still open
-    assert flat == [
-        (1, t0, t0 + 10 * 60_000, 2),
-        (1, t0 + 300 * 60_000, t0 + 300 * 60_000, 1),
-    ]
