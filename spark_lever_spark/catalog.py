@@ -2,8 +2,9 @@
 
 Mirrors the reference's data-source layer conceptually
 (sql/core/.../parquet/ParquetRelation.scala in the reference tree):
-scans are plain ``spark.read.parquet`` so Catalyst gets filter
-pushdown, column pruning and partition discovery for free.
+scans are ``spark.read.parquet`` so Catalyst gets filter pushdown,
+column pruning and partition discovery for free; the schema comes
+from a parquet footer, so building a scan runs no Spark job.
 """
 
 from __future__ import annotations
@@ -77,29 +78,64 @@ def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table with its timestamps normalized
-    (``normalize_timestamps``) whichever way the parquet encodes them."""
-    _ensure_parity_confs(spark)
-    return normalize_timestamps(spark.read.parquet(table_path(sf_dir, name)), name)
+def data_files(sf_dir: str, name: str) -> list[str]:
+    """The parquet data files of one table, in sorted name order. A
+    table is one parquet file or a directory of them; hidden and
+    ``_``-prefixed entries (``_SUCCESS``, ``.crc``) are not data."""
+    src = table_path(sf_dir, name)
+    if not os.path.isdir(src):
+        return [src]
+    files = sorted(
+        os.path.join(src, f)
+        for f in os.listdir(src)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    if not files:
+        raise ValueError(f"no parquet data files under {src}")
+    return files
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema ``spark.read.parquet(path)`` would infer for one
-    parquet file, read from its footer on the driver through Spark's
-    own converter (so session confs such as ``nanosAsLong`` apply)
-    without the Spark job that inference runs."""
+    """The schema ``spark.read.parquet`` infers from the parquet file
+    ``path``, read on the driver by the call inference makes
+    (``ParquetFileFormat.readSchemaFromFooter``: a Spark writer's stored
+    schema, else the parquet types under the session confs such as
+    ``nanosAsLong``), without inference's Spark job."""
     import json
 
-    jvm = spark._jvm
-    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        spark._jsc.hadoopConfiguration(), jvm.org.apache.hadoop.fs.Path(path)
+    from py4j.java_gateway import JavaClass
+
+    def jclass(name: str) -> JavaClass:
+        # by full name: ``spark._jvm.org.apache...`` costs one py4j
+        # round trip per package level
+        return JavaClass("org.apache." + name, spark._jvm._gateway_client)
+
+    file = jclass("hadoop.fs.Path")(path)
+    metadata = jclass("parquet.hadoop.ParquetFileReader").readFooter(
+        spark._jsc.hadoopConfiguration(),
+        file,
+        jclass("parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
     )
-    converter = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
-        spark._jsparkSession.sessionState().conf()
+    parquet = "spark.sql.execution.datasources.parquet."
+    schema = jclass(parquet + "ParquetFileFormat").readSchemaFromFooter(
+        jclass("parquet.hadoop.Footer")(file, metadata),
+        jclass(parquet + "ParquetToSparkSchemaConverter")(
+            spark._jsparkSession.sessionState().conf()
+        ),
     )
-    converted = converter.convert(footer.getFileMetaData().getSchema())
-    return StructType.fromJson(json.loads(converted.json()))
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one table with its timestamps normalized
+    (``normalize_timestamps``) whichever way the parquet encodes them,
+    under the schema of its first data file (inference, too, reads one
+    file and assumes the others agree)."""
+    _ensure_parity_confs(spark)
+    schema = parquet_schema(spark, data_files(sf_dir, name)[0])
+    return normalize_timestamps(
+        spark.read.schema(schema).parquet(table_path(sf_dir, name)), name
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

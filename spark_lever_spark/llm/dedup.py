@@ -106,11 +106,11 @@ _MH_A = tuple(_mh_coeff("a", i, 1) for i in range(64))
 _MH_B = tuple(_mh_coeff("b", i, 0) for i in range(64))
 
 
-def minhash_signature(tokens_hashed: Column, k: int) -> Column:
-    """k-permutation MinHash signature over an array<long> of token
-    hashes: h_i(x) = (a_i*(x mod p) + b_i) mod p over p = 2^31-1 with
-    md5-derived a_i in [1, p) and b_i in [0, p) — the classic
-    pairwise-independent affine family.
+def minhash_signature(tokens_hashed: str, k: int) -> Column:
+    """k-permutation MinHash signature over the array<long> column
+    ``tokens_hashed`` of token hashes: h_i(x) = (a_i*(x mod p) + b_i)
+    mod p over p = 2^31-1 with md5-derived a_i in [1, p) and b_i in
+    [0, p) — the classic pairwise-independent affine family.
 
     The coefficients MUST be large enough to wrap mod p: with small
     multipliers (the original a=2i+1 over p=2^61-1 and 40-bit token
@@ -121,18 +121,16 @@ def minhash_signature(tokens_hashed: Column, k: int) -> Column:
     the product (p-1)*(p-1) < 2^62 — exact int64 in both Spark and
     DuckDB, no overflow wrap to diverge on.
 
-    Returns array<long> of length k. Pure JVM higher-order functions.
-    """
-    def perm(a: int, b: int):
-        # closure factory: PySpark infers lambda arity from the Python
-        # signature, so default-arg tricks break higher-order functions
-        return lambda x: ((x % _MINHASH_P) * a + b) % F.lit(_MINHASH_P)
-
-    sigs = [
-        F.array_min(F.transform(tokens_hashed, perm(_MH_A[i], _MH_B[i])))
+    Returns array<long> of length k: ONE SQL expression of k
+    ``transform``s with INT coefficient literals (the Column API spends
+    thousands of py4j round trips building the k lambdas; one
+    ``transform`` nested over a coefficient array runs slower)."""
+    terms = ", ".join(
+        f"array_min(transform({tokens_hashed}, x -> "
+        f"((x % {_MINHASH_P}) * {_MH_A[i]} + {_MH_B[i]}) % {_MINHASH_P}))"
         for i in range(k)
-    ]
-    return F.array(*sigs)
+    )
+    return F.expr(f"array({terms})")
 
 
 def minhash_bands(
@@ -180,30 +178,21 @@ def minhash_bands(
     )
     sig = hashed.select(
         "doc_id",
-        minhash_signature(F.col("_th"), k).alias("sig"),
+        minhash_signature("_th", k).alias("sig"),
     )
-    band_digests = F.array(
-        *[
-            F.md5(
-                F.encode(
-                    F.concat_ws(
-                        "-",
-                        *[
-                            F.col("sig")[j].cast("string")
-                            for j in range(
-                                i * rows_per_band, (i + 1) * rows_per_band
-                            )
-                        ],
-                    ),
-                    "UTF-8",
-                )
+    # the band digests as one SQL expression too (minhash_signature)
+    digests = ", ".join(
+        "md5(encode(concat_ws('-', {}), 'UTF-8'))".format(
+            ", ".join(
+                f"CAST(sig[{j}] AS STRING)"
+                for j in range(i * rows_per_band, (i + 1) * rows_per_band)
             )
-            for i in range(bands)
-        ]
+        )
+        for i in range(bands)
     )
     banded = sig.select(
         "doc_id",
-        F.posexplode(band_digests).alias("band_idx", "band_digest"),
+        F.posexplode(F.expr(f"array({digests})")).alias("band_idx", "band_digest"),
     )
     return sig, banded
 

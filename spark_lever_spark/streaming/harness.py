@@ -35,9 +35,9 @@ from pyspark.sql.types import StructType
 
 from spark_lever_spark.catalog import (
     _ensure_parity_confs,
+    data_files,
     normalize_timestamps,
     parquet_schema,
-    table_path,
 )
 from spark_lever_spark.streaming.core import file_stream
 
@@ -88,21 +88,11 @@ class StreamDrain:
 
         The file source needs a directory and does not recurse into
         subdirectories (a symlinked table directory silently yields an
-        EMPTY stream), so the data files of either layout — one parquet
-        file, or a directory of them — are symlinked flat, in sorted
-        name order."""
+        EMPTY stream), so the table's data files (``data_files``) are
+        symlinked flat, in sorted name order."""
         if name not in self._staged:
             _ensure_parity_confs(self.spark)
-            src = table_path(sf_dir, name)
-            files = [src]
-            if os.path.isdir(src):
-                files = sorted(
-                    os.path.join(src, f)
-                    for f in os.listdir(src)
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                )
-                if not files:
-                    raise ValueError(f"no parquet data files under {src}")
+            files = data_files(sf_dir, name)
             staged = os.path.join(self.dir, name)
             os.makedirs(staged)
             for i, f in enumerate(files):

@@ -273,6 +273,53 @@ def test_minhash_bands_partitioning_invariant(spark, sf_dir):
     assert ba == bb
 
 
+def _minhash_reference(text: str, k: int, bands: int) -> tuple[list, list]:
+    """(signature, band digests) of one document recomputed in Python
+    from the hash family's definition: md5 40-bit token hashes, the
+    affine maps (a_i*(x mod p) + b_i) mod p, md5 band digests."""
+    import hashlib
+    import re
+
+    from spark_lever_spark.llm.dedup import _MH_A, _MH_B, _MINHASH_P
+
+    tokens = {t for t in re.split(r"\s+", text) if t}
+    hashes = [int(hashlib.md5(t.encode()).hexdigest()[:10], 16) for t in tokens]
+    sig = [
+        min(((x % _MINHASH_P) * _MH_A[i] + _MH_B[i]) % _MINHASH_P for x in hashes)
+        for i in range(k)
+    ]
+    rows = k // bands
+    digests = [
+        hashlib.md5("-".join(map(str, sig[b * rows:(b + 1) * rows])).encode()).hexdigest()
+        for b in range(bands)
+    ]
+    return sig, digests
+
+
+@pytest.mark.parametrize("bands", [8, 4])
+def test_minhash_bands_match_python_reference(spark, bands):
+    """Signatures and band digests are pinned to the hash family's
+    definition, not to how the Spark expression is built."""
+    from spark_lever_spark.llm.dedup import minhash_bands
+
+    texts = {
+        1: _text(_DOCS[0]),
+        2: _text(_DOCS[3]),
+        3: "  the cat sat on the mat  the cat",
+        4: "single",
+        5: "tab\tseparated\nand newline separated words",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id bigint, text string")
+    sig, banded = minhash_bands(docs, k=32, bands=bands)
+    want = {d: _minhash_reference(t, 32, bands) for d, t in texts.items()}
+    assert {r.doc_id: list(r.sig) for r in sig.collect()} == {
+        d: s for d, (s, _) in want.items()
+    }
+    assert sorted((r.doc_id, r.band_idx, r.band_digest) for r in banded.collect()) == [
+        (d, b, digest) for d, (_, ds) in sorted(want.items()) for b, digest in enumerate(ds)
+    ]
+
+
 def test_minhash_bands_connect_fallback_width_probe(spark, sf_dir):
     """ADVICE r16 (low): the Spark Connect fallback (no sparkContext /
     .rdd) must not force a full corpus shuffle when the file-backed

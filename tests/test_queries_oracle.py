@@ -240,6 +240,8 @@ _NATIVE_LIBS = ("liblz4-java-", "snappy-", "artifacts-")
 
 
 def _temp_entries() -> set[str]:
+    # the test session's own temp directory (conftest.TMP), shared by
+    # Python and the JVM and by no other process on the host
     return {
         e for e in os.listdir(tempfile.gettempdir()) if not e.startswith(_NATIVE_LIBS)
     }

@@ -281,3 +281,106 @@ def test_parquet_merge_schema_evolution(spark, tmp_path):
     assert set(merged.columns) == {"id", "a", "score", "batch"}
     rows = {r.id: r for r in merged.collect()}
     assert rows[1].score is None and rows[2].score == 9.5
+
+
+def _assert_footer_schema_is_inferred(spark, sf_dir, name):
+    """``load_table`` hands the reader the first data file's footer
+    schema: the scan's full StructType (nullability and field metadata
+    included) must be the one inference gives, before and after
+    timestamp normalization."""
+    from spark_lever_spark.catalog import (
+        data_files,
+        load_table,
+        normalize_timestamps,
+        parquet_schema,
+        table_path,
+    )
+
+    path = table_path(sf_dir, name)
+    inferred = spark.read.parquet(path)
+    given = spark.read.schema(parquet_schema(spark, data_files(sf_dir, name)[0]))
+    assert given.parquet(path).schema == inferred.schema, name
+    want = normalize_timestamps(inferred, name).schema
+    assert load_table(spark, sf_dir, name).schema == want, name
+
+
+def test_load_table_runs_no_spark_job(spark, sf_dir):
+    """Building a scan reads the schema from a parquet footer on the
+    driver; inference would run a one-task job per call."""
+    from spark_lever_spark.catalog import TABLES, load_table, table_path
+
+    sc = spark.sparkContext
+
+    def jobs_of(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    def load_all():
+        for name in TABLES:
+            load_table(spark, sf_dir, name)
+
+    assert jobs_of("catalog-load-table", load_all) == []
+    # the count sees inference's job when there is one
+    assert jobs_of(
+        "catalog-inference", lambda: spark.read.parquet(table_path(sf_dir, "region"))
+    )
+
+
+def test_load_table_schema_is_inferred_schema(spark, sf_dir):
+    from spark_lever_spark.catalog import TABLES, _ensure_parity_confs
+
+    _ensure_parity_confs(spark)
+    for name in TABLES:
+        _assert_footer_schema_is_inferred(spark, sf_dir, name)
+
+
+def test_load_table_schema_nanos_ntz_and_directory_layouts(spark, tmp_path):
+    """The footer schema is the inferred one for the encodings the
+    generator has shipped and for a Spark-written table: TIMESTAMP(NANOS)
+    ``events`` (long under the parity confs), a directory of Spark part
+    files whose footers carry Spark's own schema (TIMESTAMP_NTZ, a
+    non-nullable column, field metadata), and a directory of plain
+    parquet files."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from spark_lever_spark.catalog import (
+        _ensure_parity_confs,
+        data_files,
+        parquet_schema,
+    )
+
+    _ensure_parity_confs(spark)
+    sf = str(tmp_path)
+    ts_ns = pa.array([1_700_000_000_123_456_789, None], pa.timestamp("ns"))
+    events = pa.table({"event_id": pa.array([1, 2], pa.int64()), "ts": ts_ns})
+    pq.write_table(events, os.path.join(sf, "events.parquet"), version="2.6")
+    spark.createDataFrame(
+        [(i, datetime.datetime(2024, 1, 1, i)) for i in range(6)],
+        "id bigint not null, ts timestamp_ntz",
+    ).select(F.col("id").alias("id", metadata={"comment": "key"}), "ts").repartition(
+        3
+    ).write.parquet(os.path.join(sf, "ntz.parquet"))
+    plain = os.path.join(sf, "plain.parquet")
+    os.makedirs(plain)
+    for i in (1, 0):
+        pq.write_table(pa.table({"x": [i]}), os.path.join(plain, f"part-{i}.parquet"))
+
+    ts = parquet_schema(spark, data_files(sf, "events")[0])["ts"].dataType
+    assert isinstance(ts, T.LongType)
+    ntz = data_files(sf, "ntz")
+    assert len(ntz) == 3 and ntz == sorted(ntz)
+    assert all(os.path.basename(f).startswith("part-") for f in ntz)
+    assert [os.path.basename(f) for f in data_files(sf, "plain")] == [
+        "part-0.parquet",
+        "part-1.parquet",
+    ]
+    for name in ("events", "ntz", "plain"):
+        _assert_footer_schema_is_inferred(spark, sf, name)

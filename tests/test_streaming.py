@@ -9,11 +9,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from spark_lever_spark.streaming import run_file_batches, update_state_by_key
 from spark_lever_spark.streaming.core import (
     sliding_window_agg,
     tumbling_window_agg,
 )
+from spark_lever_spark.streaming.harness import run_file_batches
+from spark_lever_spark.streaming.stateful import update_state_by_key
 
 SCHEMA_KV = "k string, v long"
 SCHEMA_LINE = "line string"
