@@ -18,32 +18,14 @@ Modules:
 - strategies:   proportion / two-choice plans + the escalation
                 selector between them (JobMonitor.scala:353-516)
 - balancer:     the per-batch control loop tying the above together
-- actuator:     weighted repartition of a micro-batch on the Spark side
+- actuator:     ``apply_plan``, the weighted repartition of a micro-batch
+                (one SQL expression; partition tokens from Spark's
+                murmur3 hash computed in Python)
 - metrics:      per-task telemetry -> BatchReport roll-up
 
 One micro-batch of the live loop (perfbench/streamlever.LeverLoop):
 ``metrics.TraceCollector`` -> ``LeverBalancer.on_batch`` ->
 ``LeverBalancer.target_weights`` -> ``actuator.apply_plan``.
+
+The package exports nothing: callers import from the submodules.
 """
-
-from spark_lever_spark.lever.model import (
-    BatchReport,
-    HostSample,
-    LeverConfig,
-    Plan,
-)
-from spark_lever_spark.lever.balancer import LeverBalancer
-from spark_lever_spark.lever.actuator import (
-    partition_counts,
-    weighted_repartition,
-)
-
-__all__ = [
-    "BatchReport",
-    "HostSample",
-    "LeverBalancer",
-    "LeverConfig",
-    "Plan",
-    "partition_counts",
-    "weighted_repartition",
-]

@@ -3,16 +3,17 @@
 The reference migrated receiver blocks between hosts before scheduling
 (BlockGenerator.scala:175-229, BlockManager.scala:921-976). Structured
 Streaming / the DataFrame runtime owns source->partition placement, so
-the equivalent lever here is the *shuffle boundary*:
+the equivalent lever here is the *shuffle boundary*: ``apply_plan``
+re-shards a micro-batch so each host's share of partitions (and rows)
+follows the balancer's weight vector. On a cluster, fewer/lighter
+partitions on a straggler host means its tasks finish with everyone
+else — same objective as block migration (equal per-node finish time),
+actuated one stage later. perfbench's stream-lever loop calls it on
+every micro-batch.
 
-- ``weighted_repartition``: re-shard a DataFrame so each host's share
-  of partitions (and rows) follows the balancer's weight vector. On a
-  cluster, fewer/lighter partitions on a straggler host means its tasks
-  finish with everyone else — same objective as block migration (equal
-  per-node finish time), actuated one stage later.
-- ``apply_plan``: the ``foreachBatch`` entry point over
-  ``weighted_repartition``; perfbench's stream-lever loop calls it on
-  every micro-batch.
+The bucket -> partition map needs one int token per partition whose
+Spark ``hash`` lands on that partition. ``spark_hash_int`` computes
+Spark's hash in Python, so building the repartition runs no Spark job.
 
 SoCC'14 batch sizing, Dolly task cloning and Wrangler executor
 exclusion have no engine code: a running Structured Streaming query
@@ -26,6 +27,38 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_M32 = 0xFFFFFFFF
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def spark_hash_int(i: int) -> int:
+    """Spark SQL ``hash(i)`` for an INT ``i``:
+    ``Murmur3_x86_32.hashInt(i, 42)``, as a signed 32-bit int."""
+    k = _rotl32((i * 0xCC9E2D51) & _M32, 15) * 0x1B873593 & _M32
+    h = (_rotl32(42 ^ k, 13) * 5 + 0xE6546B64) & _M32
+    h ^= 4
+    h ^= h >> 16
+    h = h * 0x85EBCA6B & _M32
+    h ^= h >> 13
+    h = h * 0xC2B2AE35 & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h & 0x80000000 else h
+
+
+def partition_tokens(num_partitions: int) -> list[int]:
+    """Token j is the smallest int t >= 0 with
+    pmod(hash(t), num_partitions) == j, so hash-repartitioning on the
+    token is an identity bucket -> partition map."""
+    found: dict[int, int] = {}
+    t = 0
+    while len(found) < num_partitions:
+        found.setdefault(spark_hash_int(t) % num_partitions, t)
+        t += 1
+    return [found[j] for j in range(num_partitions)]
 
 
 def partition_counts(weights: dict[str, float], total_partitions: int) -> dict[str, int]:
@@ -51,57 +84,29 @@ def partition_counts(weights: dict[str, float], total_partitions: int) -> dict[s
     return counts
 
 
-_TOKEN_CACHE: dict[int, list[int]] = {}
-
-
-def _partition_tokens(spark: SparkSession, num_partitions: int) -> list[int]:
-    """One int token per partition j with pmod(murmur3(token), P) == j,
-    so hash-repartitioning on the token is an identity bucket->partition
-    map. Resolved once per P with a tiny Spark job (murmur3's seed is
-    fixed, so tokens are stable across sessions) and cached."""
-    cached = _TOKEN_CACHE.get(num_partitions)
-    if cached is not None:
-        return cached
-    found: dict[int, int] = {}
-    probe, span = 0, max(64 * num_partitions, 1024)
-    while len(found) < num_partitions:
-        rows = (
-            spark.range(probe, probe + span)
-            .select(
-                F.col("id").cast("int").alias("tok"),
-                F.pmod(F.hash(F.col("id").cast("int")), F.lit(num_partitions)).alias("p"),
-            )
-            .collect()
-        )
-        for r in rows:
-            found.setdefault(r["p"], r["tok"])
-        probe += span
-    tokens = [found[j] for j in range(num_partitions)]
-    _TOKEN_CACHE[num_partitions] = tokens
-    return tokens
-
-
-def weighted_repartition(
+def apply_plan(
+    spark: SparkSession,
     df: DataFrame,
     weights: dict[str, float],
     num_partitions: int,
-    seed: int = 42,
 ) -> DataFrame:
     """Re-shard ``df`` into ``num_partitions`` partitions whose *count
     per host* follows ``weights`` while keeping every partition roughly
     equal-sized: host i owns n_i = apportion(w_i) contiguous bucket ids
     and receives fraction w_i of the rows, spread uniformly over its
-    buckets.
+    buckets. Called inside ``foreachBatch`` ahead of the heavy stage:
 
-    Mechanism: u ~ rand(seed) per row; bucket chosen by cumulative
-    per-bucket probability (w_i / n_i each) via a boundary array; the
-    bucket id is then mapped to a precomputed integer *token* whose
-    murmur3 hash lands exactly on the intended partition
-    (pmod(hash(token), P) == bucket), so ``repartition(P, token)``
-    places each bucket on its own partition — exact, unlike range
-    partitioning, whose sampled bounds can merge adjacent buckets. All
-    expressions are built-ins — no Python UDF in the path — so the only
-    cost is the one shuffle we are deliberately inducing.
+        def handle(batch_df, batch_id):
+            balanced = apply_plan(spark, batch_df, weights, num_partitions=n)
+            ... heavy stage ...
+
+    Mechanism: u ~ rand(42) per row; the bucket is the number of
+    cumulative per-bucket bounds (w_i / n_i each) at or below u; the
+    bucket's token (``partition_tokens``) then places it on its own
+    partition under ``repartition(P, token)`` — exact, unlike range
+    partitioning, whose sampled bounds can merge adjacent buckets. The
+    partitioning key is one built-in SQL expression, so the only cost is
+    the one shuffle we are deliberately inducing.
     """
     counts = partition_counts(weights, num_partitions)
     if not counts:
@@ -117,39 +122,19 @@ def weighted_repartition(
             acc += w / counts[h]
             bounds.append(acc)
     bounds[-1] = 1.0 + 1e-9
-    bounds_arr = F.array(*[F.lit(b) for b in bounds])
+    total = len(bounds)
+    tokens = ", ".join(map(str, partition_tokens(total)))
+    # DOUBLE literals, or the bounds would parse as DECIMAL
+    bounds_sql = ", ".join(f"{b!r}D" for b in bounds)
     # materialize the draw once per row BEFORE referencing it inside the
     # lambda — a bare rand() inside the higher-order function would be
     # re-evaluated per array element
-    tagged = df.withColumn("__lever_u__", F.rand(seed))
-    bucket = F.aggregate(
-        F.filter(bounds_arr, lambda b: b <= F.col("__lever_u__")),
-        F.lit(0),
-        lambda n, _: n + 1,
+    token = F.expr(
+        f"element_at(array({tokens}), "
+        f"size(filter(array({bounds_sql}), b -> b <= __lever_u__)) + 1)"
     )
-    total = sum(counts.values())
-    tokens = _partition_tokens(df.sparkSession, total)
-    token_arr = F.array(*[F.lit(t) for t in tokens])
     return (
-        tagged.withColumn(
-            "__lever_tok__", F.element_at(token_arr, bucket + 1)
-        )
-        .repartition(total, "__lever_tok__")
-        .drop("__lever_tok__", "__lever_u__")
+        df.withColumn("__lever_u__", F.rand(42))
+        .repartition(total, token)
+        .drop("__lever_u__")
     )
-
-
-def apply_plan(
-    spark: SparkSession,
-    df: DataFrame,
-    weights: dict[str, float],
-    num_partitions: int,
-) -> DataFrame:
-    """Weighted repartition of one micro-batch ahead of its heavy stage,
-    called inside ``foreachBatch``:
-
-        def handle(batch_df, batch_id):
-            balanced = apply_plan(spark, batch_df, weights, num_partitions=n)
-            ... heavy stage ...
-    """
-    return weighted_repartition(df, weights, num_partitions)

@@ -34,11 +34,11 @@ def lever_weighted_repartition(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate per-partition row counts. Assertion of the weight contract
     lives in tests/test_lever.py; here we surface the partition layout
     as a stable (partition_count, total_rows) summary."""
-    from spark_lever_spark.lever.actuator import weighted_repartition
+    from spark_lever_spark.lever.actuator import apply_plan
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
-    out = weighted_repartition(
-        li, {"big": 4 / 7, "mid": 2 / 7, "small": 1 / 7}, num_partitions=7, seed=1
+    out = apply_plan(
+        spark, li, {"big": 4 / 7, "mid": 2 / 7, "small": 1 / 7}, num_partitions=7
     )
     per_part = (
         out.withColumn("pid", F.spark_partition_id())
@@ -73,7 +73,8 @@ def lever_plan_proportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (JobMonitor.scala:160-419 round-trip): classify -> confirm ->
     capability -> proportion plan, returned as (helpee, target, share)
     rows for inspection."""
-    from spark_lever_spark.lever import BatchReport, HostSample, LeverBalancer
+    from spark_lever_spark.lever.balancer import LeverBalancer
+    from spark_lever_spark.lever.model import BatchReport, HostSample
 
     runtimes = {"slow": 3000.0, "m1": 1000.0, "m2": 1050.0, "fast": 400.0}
 

@@ -75,8 +75,6 @@ def _ensure_loaded() -> None:
     # operator modules import `register` from this module.
     from spark_lever_spark.operators import (  # noqa: F401
         tpch,
-        tpch2,
-        tpch3,
         relational,
         joins,
         bloom,

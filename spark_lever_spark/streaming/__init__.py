@@ -14,7 +14,6 @@ maps onto Structured Streaming as a strict superset:
 
 Modules: `core` (file source, window aggregates), `stateful`
 (updateStateByKey), `harness` (`StreamDrain`, the one drain every
-streaming query runs through, and the reference TestSuiteBase.scala
-harness), `queries` (the registered streaming queries). The package
-exports nothing.
+streaming query runs through, and its `BatchCollector` sink), `queries`
+(the registered streaming queries). The package exports nothing.
 """

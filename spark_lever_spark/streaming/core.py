@@ -4,7 +4,8 @@ Source parity (reference StreamingContext.scala:245-454, §2.D):
 - textFileStream / fileStream -> `file_stream` (any DataSource format,
   schema required — streams are schematized DataFrames from day one,
   unlike the reference's ArrayBuffer[Any] blocks)
-- queueStream (test input) -> file batches via harness.run_file_batches
+- queueStream (test input) -> one staged file per micro-batch
+  (harness.StreamDrain.batches, and the tests' golden harness)
 - socketTextStream and the Kafka direct stream are Spark's own
   `spark.readStream.format("socket" | "kafka")`; no wrapper adds to them.
 
@@ -30,15 +31,9 @@ def file_stream(
     path: str,
     schema: StructType | str,
     fmt: str = "json",
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Directory-monitoring source (reference FileInputDStream.scala).
-    `max_files_per_trigger=1` gives the deterministic one-file-per-batch
-    cadence the golden harness relies on."""
-    reader = spark.readStream.format(fmt).schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path)
+    """Directory-monitoring source (reference FileInputDStream.scala)."""
+    return spark.readStream.format(fmt).schema(schema).load(path)
 
 
 def tumbling_window_agg(

@@ -1,34 +1,20 @@
-"""The one streaming drain, and the golden-output harness built on it.
+"""The one streaming drain.
 
 ``StreamDrain`` runs every streaming query in the package: it stages the
 inputs, drains the plan with ``Trigger.AvailableNow`` into a memory or
-foreachBatch sink, and deletes everything it wrote on exit.
-
-The harness re-creates the reference's test pattern (TestSuiteBase.scala:
-TestInputStream feeds a queue of per-batch Seqs under a manual clock;
-TestOutputStream collects per-batch output; verifyOutput compares to
-golden expected batches) on Structured Streaming:
-
-- each logical input batch is written as ONE file with a strictly
-  increasing mtime;
-- the file source reads with maxFilesPerTrigger=1, so micro-batch i
-  consumes exactly input batch i (files are ordered by mtime);
-- Trigger.AvailableNow drains all batches then stops — the manual-clock
-  equivalent;
-- a foreachBatch collector plays TestOutputStream.
-
-This is how every §2.B/§2.C operator parity test drives its pipeline.
+foreachBatch sink (``BatchCollector`` collects per-batch rows), and
+deletes everything it wrote on exit. Staged inputs are read one file
+per micro-batch (``maxFilesPerTrigger=1``). The streaming tests'
+golden-output harness (tests/golden_stream.py) drives the same drain.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import tempfile
 import time
 import uuid
 from collections.abc import Callable, Sequence
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -39,7 +25,6 @@ from spark_lever_spark.catalog import (
     normalize_timestamps,
     parquet_schema,
 )
-from spark_lever_spark.streaming.core import file_stream
 
 # Stateful streaming disables AQE coalescing, so every shuffle partition
 # is a state-store task in every micro-batch. A drain caps the session's
@@ -164,22 +149,12 @@ class StreamDrain:
 
 
 class BatchCollector:
-    """foreachBatch sink collecting (batch_id, sorted row tuples).
+    """foreachBatch sink collecting (batch_id, sorted row tuples)."""
 
-    ``batch_transform`` runs *inside* foreachBatch on the micro-batch
-    DataFrame — the exact semantics of the reference's per-batch
-    ``transform``/``foreachRDD`` (DStream.scala:516-606): recomputed
-    from scratch every batch, no cross-batch state."""
-
-    def __init__(
-        self, batch_transform: Callable[[DataFrame], DataFrame] | None = None
-    ) -> None:
+    def __init__(self) -> None:
         self.batches: list[tuple[int, list[tuple]]] = []
-        self._batch_transform = batch_transform
 
     def __call__(self, df: DataFrame, epoch_id: int) -> None:
-        if self._batch_transform is not None:
-            df = self._batch_transform(df)
         rows = sorted(tuple(r) for r in df.collect())
         self.batches.append((int(epoch_id), rows))
 
@@ -191,34 +166,3 @@ class BatchCollector:
     def all_rows(self) -> list[tuple]:
         return sorted(t for _, rows in self.batches for t in rows)
 
-
-def run_file_batches(
-    spark: SparkSession,
-    batches: Sequence[Sequence[dict[str, Any]]],
-    schema: str,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    output_mode: str = "append",
-    batch_transform: Callable[[DataFrame], DataFrame] | None = None,
-) -> BatchCollector:
-    """Drive the pipeline over the batch sequence, one JSONL file per
-    logical batch; returns the collector with per-batch
-    golden-comparable output. ``transform`` builds the streaming plan
-    (stateful, incremental); ``batch_transform`` runs per-batch inside
-    foreachBatch (stateless, recomputed — reference
-    transform/foreachRDD semantics)."""
-    collector = BatchCollector(batch_transform)
-    with StreamDrain(spark) as drain:
-        input_dir = os.path.join(drain.dir, "in")
-        os.makedirs(input_dir)
-        paths = []
-        for i, batch in enumerate(batches):
-            paths.append(os.path.join(input_dir, f"batch_{i:05d}.json"))
-            with open(paths[-1], "w") as f:
-                f.writelines(json.dumps(rec) + "\n" for rec in batch)
-        _ascending_mtimes(paths)
-        sdf = file_stream(
-            spark, input_dir, schema, fmt="json", max_files_per_trigger=1
-        )
-        out = transform(sdf) if transform is not None else sdf
-        drain.run(out, output_mode, collector)
-    return collector

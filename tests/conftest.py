@@ -1,8 +1,11 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
+import uuid
+from types import SimpleNamespace
 
 import pytest
 
@@ -33,6 +36,49 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def count_round_trips(spark):
+    """``with count_round_trips() as trips: ...`` leaves in ``trips.n``
+    the number of py4j commands the driver sent to the JVM inside the
+    block: every JVM method call, field read and object release."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    @contextlib.contextmanager
+    def counting():
+        trips = SimpleNamespace(n=0)
+        send = client.send_command
+
+        def counted(*args, **kwargs):
+            trips.n += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            yield trips
+        finally:
+            client.send_command = send
+
+    return counting
+
+
+@pytest.fixture
+def jobs_run_by(spark):
+    """``jobs_run_by(build)`` calls ``build()`` and returns the ids of
+    the Spark jobs it ran."""
+    sc = spark.sparkContext
+
+    def jobs(build):
+        group = f"jobs-run-by-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs
 
 
 @pytest.fixture(scope="session")

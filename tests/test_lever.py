@@ -11,18 +11,17 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from spark_lever_spark.lever import (
-    BatchReport,
-    HostSample,
-    LeverBalancer,
-    LeverConfig,
-    Plan,
+from spark_lever_spark.lever.actuator import (
+    apply_plan,
     partition_counts,
-    weighted_repartition,
+    partition_tokens,
+    spark_hash_int,
 )
+from spark_lever_spark.lever.balancer import LeverBalancer
 from spark_lever_spark.lever.capability import estimate_capability
 from spark_lever_spark.lever.classifier import classify_quartiles, confirm_with_rates
 from spark_lever_spark.lever.metrics import TraceCollector
+from spark_lever_spark.lever.model import BatchReport, HostSample, LeverConfig, Plan
 from spark_lever_spark.lever import strategies
 
 
@@ -305,7 +304,7 @@ def test_weighted_repartition_row_distribution(spark):
     # 3 "hosts": capable host gets 4x the rows of the weak one
     df = spark.range(0, 40_000)
     weights = {"big": 4 / 7, "mid": 2 / 7, "small": 1 / 7}
-    out = weighted_repartition(df, weights, num_partitions=7, seed=1)
+    out = apply_plan(spark, df, weights, num_partitions=7)
     per_part = out.groupBy(F.spark_partition_id().alias("pid")).count().collect()
     sizes = sorted((r["count"] for r in per_part), reverse=True)
     assert sum(sizes) == 40_000
@@ -318,10 +317,40 @@ def test_weighted_repartition_row_distribution(spark):
 
 def test_weighted_repartition_preserves_data(spark):
     df = spark.range(0, 5000)
-    out = weighted_repartition(df, {"a": 0.7, "b": 0.3}, 4, seed=2)
+    out = apply_plan(spark, df, {"a": 0.7, "b": 0.3}, 4)
     assert out.columns == df.columns
     got = sorted(r["id"] for r in out.collect())
     assert got == list(range(5000))
+
+
+def test_python_hash_is_spark_hash(spark):
+    """``spark_hash_int`` is Spark's ``hash`` on INT, and each P's
+    tokens land on their own partition under Spark's own hash."""
+    fixed = [0, 1, -1, 7, -7, 42, -42, 123456789, -987654321, -(2**31), 2**31 - 1]
+    tokens = {P: partition_tokens(P) for P in range(1, 65)}
+    ints = sorted(set(fixed).union(*tokens.values()))
+    df = spark.createDataFrame([(i,) for i in ints], "i int")
+    spark_hash = {r["i"]: r["h"] for r in df.select("i", F.hash("i").alias("h")).collect()}
+    assert spark_hash == {i: spark_hash_int(i) for i in ints}
+    for P, toks in tokens.items():
+        assert [spark_hash[t] % P for t in toks] == list(range(P)), P
+
+
+def test_apply_plan_build_runs_no_spark_job(spark, jobs_run_by):
+    # 61 partitions: a P no other test in the session actuates with
+    df = spark.range(0, 100)
+    assert jobs_run_by(lambda: apply_plan(spark, df, {"a": 0.6, "b": 0.4}, 61)) == []
+
+
+def test_apply_plan_build_round_trips(spark, count_round_trips):
+    """Building the lazy repartition of one micro-batch on 4 hosts
+    stays a handful of driver->JVM calls."""
+    df = spark.range(0, 1000)
+    weights = {"h0": 0.4, "h1": 0.3, "h2": 0.2, "h3": 0.1}
+    apply_plan(spark, df, weights, 4)
+    with count_round_trips() as trips:
+        apply_plan(spark, df, weights, 4)
+    assert 0 < trips.n <= 40
 
 
 def test_plan_fold_reduces_straggler_share():

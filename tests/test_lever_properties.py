@@ -10,7 +10,11 @@ import math
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from spark_lever_spark.lever.actuator import partition_counts
+from spark_lever_spark.lever.actuator import (
+    partition_counts,
+    partition_tokens,
+    spark_hash_int,
+)
 from spark_lever_spark.lever.capability import estimate_capability
 from spark_lever_spark.lever.classifier import (
     Classification,
@@ -40,6 +44,17 @@ def test_partition_counts_exact_and_positive(hs, data):
     ordered = sorted(hs, key=lambda h: weights[h])
     for a, b in zip(ordered, ordered[1:]):
         assert counts[a] <= counts[b] + 1  # ties may round either way
+
+
+@given(st.integers(min_value=1, max_value=512))
+@settings(max_examples=60, deadline=None)
+def test_partition_tokens_map_bucket_j_to_partition_j(P):
+    """Token j hashes to partition j (a bijection from bucket to
+    partition) and is the smallest int >= 0 that does."""
+    tokens = partition_tokens(P)
+    parts = [spark_hash_int(t) % P for t in range(max(tokens) + 1)]
+    assert [parts[t] for t in tokens] == list(range(P))
+    assert tokens == [parts.index(j) for j in range(P)]
 
 
 @given(hosts, st.data())

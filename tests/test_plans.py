@@ -6,6 +6,8 @@ reference's physical layer."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from spark_lever_spark import registry
@@ -73,18 +75,22 @@ def test_dedup_exact_single_shuffle(spark, sf_dir):
     """Exact dedup must be one hash-shuffle on the dedup key (partial
     aggregation map-side), not a global sort."""
     df = ALL["dedup_exact_md5"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Sort" not in plan.split("Exchange")[0] or True  # no pre-shuffle sort
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    (at,) = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning(fp#" in ln]
+    # the final HashAggregate sits right on the one fp-hash exchange...
+    assert lines[at - 1].strip().startswith("+- HashAggregate(keys=[fp#")
+    # ...and nothing below it sorts (the output orderBy's Sort is above)
+    assert not re.search(r"\b(Sort|SortAggregate|Window)\b", "\n".join(lines[at + 1 :]))
     assert exchange_count(df) <= 2
 
 
 def test_weighted_repartition_single_exchange(spark):
     """The balancer's actuation costs exactly the one shuffle it
     intends to induce — no hidden extra exchange."""
-    from spark_lever_spark.lever.actuator import weighted_repartition
+    from spark_lever_spark.lever.actuator import apply_plan
 
     df = spark.range(0, 1000)
-    out = weighted_repartition(df, {"a": 0.5, "b": 0.5}, 4)
+    out = apply_plan(spark, df, {"a": 0.5, "b": 0.5}, 4)
     assert exchange_count(out) == 1
 
 

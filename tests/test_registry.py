@@ -72,7 +72,6 @@ def test_no_round_named_modules():
 # ("<dir>/") or a bare name (any module).
 REACH_ALLOWLIST = {
     "plans/": "plan-hazard instruments tests/test_plans.py runs over the registry",
-    "streaming/harness.py:run_file_batches": "golden-output harness of the streaming tests",
     "__all__": "export lists are read by name strings, not by references",
 }
 

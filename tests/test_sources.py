@@ -304,30 +304,18 @@ def _assert_footer_schema_is_inferred(spark, sf_dir, name):
     assert load_table(spark, sf_dir, name).schema == want, name
 
 
-def test_load_table_runs_no_spark_job(spark, sf_dir):
+def test_load_table_runs_no_spark_job(spark, sf_dir, jobs_run_by):
     """Building a scan reads the schema from a parquet footer on the
     driver; inference would run a one-task job per call."""
     from spark_lever_spark.catalog import TABLES, load_table, table_path
-
-    sc = spark.sparkContext
-
-    def jobs_of(group, build):
-        sc.setJobGroup(group, group)
-        try:
-            build()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return list(sc.statusTracker().getJobIdsForGroup(group))
 
     def load_all():
         for name in TABLES:
             load_table(spark, sf_dir, name)
 
-    assert jobs_of("catalog-load-table", load_all) == []
+    assert jobs_run_by(load_all) == []
     # the count sees inference's job when there is one
-    assert jobs_of(
-        "catalog-inference", lambda: spark.read.parquet(table_path(sf_dir, "region"))
-    )
+    assert jobs_run_by(lambda: spark.read.parquet(table_path(sf_dir, "region")))
 
 
 def test_load_table_schema_is_inferred_schema(spark, sf_dir):

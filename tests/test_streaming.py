@@ -13,8 +13,8 @@ from spark_lever_spark.streaming.core import (
     sliding_window_agg,
     tumbling_window_agg,
 )
-from spark_lever_spark.streaming.harness import run_file_batches
 from spark_lever_spark.streaming.stateful import update_state_by_key
+from tests.golden_stream import run_file_batches
 
 SCHEMA_KV = "k string, v long"
 SCHEMA_LINE = "line string"
@@ -292,7 +292,7 @@ def test_streaming_file_sink_roundtrip(spark, tmp_path):
     import json as _json
     import os
 
-    from spark_lever_spark.streaming.core import file_stream
+    from tests.golden_stream import one_file_per_batch
 
     in_dir, out_dir, ck = (
         str(tmp_path / "in"),
@@ -304,7 +304,7 @@ def test_streaming_file_sink_roundtrip(spark, tmp_path):
         with open(os.path.join(in_dir, f"b{i}.json"), "w") as f:
             f.write(_json.dumps({"k": "x", "v": i}) + "\n")
 
-    sdf = file_stream(spark, in_dir, "k string, v long", max_files_per_trigger=1)
+    sdf = one_file_per_batch(spark, in_dir, "k string, v long")
     q = (
         sdf.writeStream.format("parquet")
         .option("path", out_dir)
@@ -410,8 +410,8 @@ def test_stream_stream_left_outer_join_emits_nulls_after_watermark(spark, tmp_pa
     import os
 
     from pyspark.sql import functions as F
-    from spark_lever_spark.streaming.core import file_stream
     from spark_lever_spark.streaming.harness import BatchCollector
+    from tests.golden_stream import one_file_per_batch
 
     left_dir, right_dir = str(tmp_path / "l"), str(tmp_path / "r")
     ck = str(tmp_path / "ck")
@@ -446,13 +446,11 @@ def test_stream_stream_left_outer_join_emits_nulls_after_watermark(spark, tmp_pa
     write(left_dir, "b2.json", [{"lts": "2026-01-01 02:00:00", "k": "z2", "lv": 0}])
     write(right_dir, "b2.json", [{"rts": "2026-01-01 02:00:00", "k": "z2", "rv": 0}])
 
-    left = file_stream(
-        spark, left_dir, "lts timestamp, k string, lv long",
-        max_files_per_trigger=1,
+    left = one_file_per_batch(
+        spark, left_dir, "lts timestamp, k string, lv long"
     ).withWatermark("lts", "10 minutes").alias("l")
-    right = file_stream(
-        spark, right_dir, "rts timestamp, k string, rv long",
-        max_files_per_trigger=1,
+    right = one_file_per_batch(
+        spark, right_dir, "rts timestamp, k string, rv long"
     ).withWatermark("rts", "10 minutes").alias("r")
     joined = left.join(
         right,

@@ -22,7 +22,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_lever_spark.streaming.harness import run_file_batches
+from tests.golden_stream import run_file_batches
 
 # the record shape Spark's kafka source produces
 KAFKA_WIRE_DDL = (

@@ -11,8 +11,8 @@ import time
 
 from pyspark.sql import functions as F
 
-from spark_lever_spark.streaming.core import file_stream
 from spark_lever_spark.streaming.harness import BatchCollector
+from tests.golden_stream import one_file_per_batch
 
 
 def _write_batch(input_dir: str, i: int, records: list[dict]) -> None:
@@ -25,9 +25,7 @@ def _write_batch(input_dir: str, i: int, records: list[dict]) -> None:
 
 
 def _run_until_drained(spark, input_dir, ckpt, collector):
-    sdf = file_stream(
-        spark, input_dir, "k string, v long", max_files_per_trigger=1
-    )
+    sdf = one_file_per_batch(spark, input_dir, "k string, v long")
     out = sdf.groupBy("k").agg(F.sum("v").alias("s"))
     q = (
         out.writeStream.foreachBatch(collector)
