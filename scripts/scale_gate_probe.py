@@ -105,9 +105,8 @@ def main() -> None:
             graph.connected_components(pairs, src="pa", dst="pb").collect()
         ),
     )
-    old_cc = graph._LOCAL_CC_MAX_EDGES
     old_ct = graph._CONTRACT_MIN_EDGES
-    graph._LOCAL_CC_MAX_EDGES = 1 << 40
+    graph._LOCAL_GRAPH_MAX_EDGES = 1 << 40
     graph._CONTRACT_MIN_EDGES = 1 << 40  # no contraction: raw kernel
     try:
         cc_kern, t_ck = timed(
@@ -117,7 +116,7 @@ def main() -> None:
             ),
         )
     finally:
-        graph._LOCAL_CC_MAX_EDGES = old_cc
+        graph._LOCAL_GRAPH_MAX_EDGES = old
         graph._CONTRACT_MIN_EDGES = old_ct
     assert cc_nat == cc_kern, "CC kernel != natural path"
     print(f"CC rows identical ({len(cc_nat)}); "

@@ -186,7 +186,7 @@ def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
-def _scan_width_estimate(df: DataFrame) -> int | None:
+def _scan_width_estimate(df: DataFrame) -> int:
     """Cheap scan-width estimate for ``spread_scan`` — the number of
     tasks the frame's scan will run with, WITHOUT converting the plan
     to an RDD (``df.rdd.getNumPartitions()`` plans the whole query a
@@ -200,17 +200,13 @@ def _scan_width_estimate(df: DataFrame) -> int | None:
     at cluster scale estimate wide (no-op) whether they are many small
     files or few huge ones. Remote schemes (s3://, hdfs://) skip the
     size probe and use the advisory file count. Non-file frames fall
-    back to the classic RDD probe; if that is unavailable too (Spark
-    Connect), return None — the caller decides the unknown case."""
+    back to the classic RDD probe."""
     try:
         files = df.inputFiles()
     except Exception:
         files = []
     if not files:
-        try:
-            return df.rdd.getNumPartitions()
-        except Exception:  # Spark Connect + non-file source
-            return None
+        return df.rdd.getNumPartitions()
     spark = df.sparkSession
     try:
         import os as _os
@@ -232,19 +228,11 @@ def _scan_width_estimate(df: DataFrame) -> int | None:
 
 
 def default_parallelism(df: DataFrame) -> int:
-    """The session's target task parallelism (classic mode), falling
-    back to the shuffle-partition conf under Spark Connect."""
-    try:
-        return df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext
-        return int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+    """The session's target task parallelism."""
+    return df.sparkSession.sparkContext.defaultParallelism
 
 
-def spread_scan(
-    df: DataFrame, key: str | None = None, default_narrow: bool = False
-) -> DataFrame:
+def spread_scan(df: DataFrame, key: str | None = None) -> DataFrame:
     """Widen a CPU-dense pipeline over a narrow scan to session
     parallelism (optimization r18, guide §2.5/§6 — the minhash_bands
     probe pattern made shared; r19: single helper, cheap file-based
@@ -261,19 +249,8 @@ def spread_scan(
     key, same partition count — one shuffle total, the CPU just moves
     to the wide side of it); keyless spreads round-robin for per-row
     map pipelines. Row-preserving either way — results of every
-    consumer are partition-independent by construction.
-
-    ``default_narrow`` decides the UNKNOWN case (Spark Connect AND a
-    non-file source, so neither probe can answer): False (default)
-    never adds a blind shuffle; True repartitions — for consumers
-    whose downstream stage is expensive enough that under-parallelism
-    costs more than one shuffle of the input (the minhash signature
-    map, ADVICE r16)."""
+    consumer are partition-independent by construction."""
     par = default_parallelism(df)
-    width = _scan_width_estimate(df)
-    if width is None:
-        if not default_narrow:
-            return df
-    elif width >= par:
+    if _scan_width_estimate(df) >= par:
         return df
     return df.repartition(par, key) if key else df.repartition(par)

@@ -2091,12 +2091,7 @@ def greedy_coverage_doc_selection(
     # parallelism: a 200-partition vanilla-session distinct otherwise
     # caches 200 slivers and every one of the K rounds' stages pays a
     # 200-task scheduling storm (measured 65 s -> ~15 s at sf0.01).
-    # Classic-mode probe with a Connect-safe fallback (the minhash_bands
-    # pattern, llm/dedup.py).
-    try:
-        par = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext
-        par = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    par = spark.sparkContext.defaultParallelism
     doc_sh = (
         docs.select(
             "doc_id", F.explode(_shingles3(F.col("text"))).alias("shingle")

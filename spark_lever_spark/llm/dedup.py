@@ -153,14 +153,10 @@ def minhash_bands(
     # re-measured 16.4 -> 3.5 s warm, identical pair sets). At cluster
     # scale the input already carries >= parallelism partitions and
     # this is a no-op; results are per-doc deterministic either way.
-    # The inline probe — the original of the pattern, including its
-    # file-count and split-size refinements — now lives in
-    # catalog.spread_scan, which estimates scan width from the file
-    # listing instead of a plan-to-RDD conversion per call (that
-    # conversion planned the whole query a second time on the driver).
-    from spark_lever_spark.catalog import spread_scan
-
-    docs = spread_scan(docs, default_narrow=True)
+    # catalog.spread_scan estimates scan width from the file listing
+    # instead of a plan-to-RDD conversion per call (that conversion
+    # planned the whole query a second time on the driver).
+    docs = spread_scan(docs)
     # Two-projection split (optimization r18, guide §1.2 per-task
     # work): the k permutations each reference the hashed-token array,
     # and higher-order functions are CodegenFallback — inlining the

@@ -18,6 +18,12 @@ Lineage is truncated with ``localCheckpoint`` every round so the plan
 does not compound across iterations (on a cluster you would use
 reliable ``checkpoint`` with an HDFS dir instead).
 
+Every count-gated algorithm (CC, LPA, k-core, PageRank and its
+personalized variant, HITS, BFS census, harmonic closeness) has two
+paths split by ``_LOCAL_GRAPH_MAX_EDGES``: a pure numpy kernel run in
+one task through ``_single_task``, and a distributed DataFrame loop
+above the gate.
+
 Co-purchase graph statistics: clustering coefficient, rich-club
 profile, 3-truss peel, preferential attachment, double-sweep diameter
 bound, configuration-model triangle excess.
@@ -25,7 +31,14 @@ bound, configuration-model triangle excess.
 
 from __future__ import annotations
 
+import hashlib
+import heapq
 import logging
+from collections.abc import Callable
+from functools import partial, reduce
+
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -183,68 +196,98 @@ def _small_star(edges: DataFrame) -> DataFrame:
 # any graph large enough to cross it.
 _CONTRACT_MIN_EDGES = 1_000_000
 
-# At or below this (post-contraction) edge count the star loop is
-# replaced by a SINGLE-TASK vectorized min-label kernel (optimization
-# r18, guide §1.2 "the distributed algorithm" + §4.2 native batch
-# code): every star round costs ~3 shuffle stages plus 2 job
-# dispatches, so a small graph pays pure scheduling latency — the
-# dominant cost of dbscan's CC (measured 104 stages for 31 core-s of
-# work) and of every post-contraction election-class graph (3.67M
-# pairs contract to 3,864 edges, then the loop ran ~5 more rounds).
-# This is the same move a cluster-scale CC makes after contraction:
-# once the graph fits one task, finish it there. 2M edges is ~32 MB
-# of Arrow payload — bounded by construction, same class as a
+# At or below this edge count a graph algorithm finishes in ONE task:
+# a vectorized numpy kernel run through ``_single_task`` replaces the
+# distributed per-round loop (optimization r18, guide §1.2 "the
+# distributed algorithm" + §4.2 native batch code). Every loop round
+# costs 2-4 shuffle stages plus 1-3 job dispatches (the per-round
+# localCheckpoint the lineage doctrine requires is itself a job), so a
+# graph-sized input pays pure scheduling latency for well under one
+# core-second of arithmetic — the dominant cost of dbscan's CC
+# (measured 104 stages for 31 core-s of work), of every
+# post-contraction election-class graph (3.67M pairs contract to 3,864
+# edges, then the star loop ran ~5 more rounds) and of the bounded-
+# rounds recursions (PageRank, PPR, LPA, HITS, k-core, BFS, sampled-BFS
+# closeness: ~15 jobs at sf0.1). Every kernel is INTEGER-exact (min
+# labels, ranks in integer units with div, mode-with-min-tie labels,
+# hop counts), so it reproduces the distributed fixpoint bit-for-bit;
+# tests/test_graph.py pins each kernel to its forced loop. Above the
+# gate the loop runs unchanged: the edge set exceeds any single task
+# and the O(|E|)-per-round join loop is the right shape. 2M edges is
+# ~32 MB of Arrow payload — bounded by construction, same class as a
 # broadcast side.
-_LOCAL_CC_MAX_EDGES = 2_000_000
+_LOCAL_GRAPH_MAX_EDGES = 2_000_000
 
 
-def _cc_local_labels(e: DataFrame) -> DataFrame:
-    """Single-task CC over a bounded edge frame: ``(cnode, component)``
-    with component = min node id, exactly the star-loop fixpoint's
-    output grain. The kernel is vectorized min-label propagation with
-    pointer-jumping to fixpoint each round (hash-to-min; O(log n)
-    rounds, each O(E+N) in numpy) — no per-row Python. Exactness:
-    labels start at identity, are componentwise non-increasing, and a
-    fixpoint under edge-relax + pointer-jumping forces equal labels on
-    every edge, hence constant per component and equal to the
-    component minimum (the minimum can never decrease)."""
+def _single_task(
+    edges: DataFrame,
+    cols: tuple[str, ...],
+    schema: str,
+    kernel: Callable[..., pd.DataFrame | None],
+) -> DataFrame:
+    """Run ``kernel`` over the whole of ``edges`` in one task: the
+    ``cols`` arrive as int64 numpy arrays (empty when the frame is), and
+    the kernel returns the ``schema`` rows as a pandas frame, or None
+    when it has none."""
+    inp = edges.select(*[F.col(c).cast("long").alias(c) for c in cols])
 
     def part(batches):
-        import numpy as np
-        import pandas as pd
+        chunks = [[b[c].to_numpy(np.int64) for c in cols] for b in batches]
+        arrays = [
+            np.concatenate([ch[i] for ch in chunks])
+            if chunks
+            else np.empty(0, dtype=np.int64)
+            for i in range(len(cols))
+        ]
+        out = kernel(*arrays)
+        if out is not None:
+            yield out
 
-        us, vs = [], []
-        for b in batches:
-            us.append(b["u"].to_numpy(np.int64))
-            vs.append(b["v"].to_numpy(np.int64))
-        if not us:
-            return
-        u = np.concatenate(us)
-        v = np.concatenate(vs)
-        nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-        eu, ev = inv[: u.size], inv[u.size :]
-        p = np.arange(nodes.size, dtype=np.int64)
-        for _ in range(64):
-            mn = np.minimum(p[eu], p[ev])
-            p_new = p.copy()
-            np.minimum.at(p_new, eu, mn)
-            np.minimum.at(p_new, ev, mn)
-            while True:
-                nxt = p_new[p_new]
-                if np.array_equal(nxt, p_new):
-                    break
-                p_new = nxt
-            if np.array_equal(p_new, p):
-                break
-            p = p_new
-        else:  # pragma: no cover — monotone labels cannot cycle
-            raise RuntimeError("local CC kernel did not converge")
-        yield pd.DataFrame({"cnode": nodes, "component": nodes[p]})
-
-    # coalesce, not repartition: the input is localCheckpoint-ed, so
-    # collapsing to one partition constrains nothing upstream and
+    # coalesce, not repartition: every input is graph-sized and pinned,
+    # so collapsing to one partition constrains nothing upstream and
     # skips the keyless-repartition pre-sort (guide §2.5).
-    return e.coalesce(1).mapInPandas(part, "cnode long, component long")
+    return inp.coalesce(1).mapInPandas(part, schema)
+
+
+def _sym_index(pa: np.ndarray, pb: np.ndarray):
+    """Dense node indexing of an undirected edge list: the ascending
+    node ids, and the symmetric directed view (each edge sends both
+    ways) as ``send``/``recv`` index arrays."""
+    nodes, inv = np.unique(np.concatenate([pa, pb]), return_inverse=True)
+    ea, eb = inv[: pa.size], inv[pa.size :]
+    return nodes, np.concatenate([ea, eb]), np.concatenate([eb, ea])
+
+
+def _cc_kernel(u: np.ndarray, v: np.ndarray) -> pd.DataFrame | None:
+    """Single-task CC: ``(cnode, component)`` with component = min node
+    id, exactly the star-loop fixpoint's output grain. Vectorized
+    min-label propagation with pointer-jumping to fixpoint each round
+    (hash-to-min; O(log n) rounds, each O(E+N) in numpy) — no per-row
+    Python. Exactness: labels start at identity, are componentwise
+    non-increasing, and a fixpoint under edge-relax + pointer-jumping
+    forces equal labels on every edge, hence constant per component and
+    equal to the component minimum (the minimum can never decrease)."""
+    if u.size == 0:
+        return None
+    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    eu, ev = inv[: u.size], inv[u.size :]
+    p = np.arange(nodes.size, dtype=np.int64)
+    for _ in range(64):
+        mn = np.minimum(p[eu], p[ev])
+        p_new = p.copy()
+        np.minimum.at(p_new, eu, mn)
+        np.minimum.at(p_new, ev, mn)
+        while True:
+            nxt = p_new[p_new]
+            if np.array_equal(nxt, p_new):
+                break
+            p_new = nxt
+        if np.array_equal(p_new, p):
+            break
+        p = p_new
+    else:  # pragma: no cover — monotone labels cannot cycle
+        raise RuntimeError("local CC kernel did not converge")
+    return pd.DataFrame({"cnode": nodes, "component": nodes[p]})
 
 
 def connected_components(
@@ -325,12 +368,14 @@ def connected_components(
     else:
         lab = None
         e = e0
-    if n_edges <= _LOCAL_CC_MAX_EDGES:
-        # Single-task finisher (see _LOCAL_CC_MAX_EDGES): one Arrow
-        # transfer + one vectorized kernel replaces ~5 star rounds of
-        # 3 shuffles + 2 jobs each. Eagerly pinned so the edge blocks
-        # release now and consumers never replay the Python stage.
-        comp_c = _cc_local_labels(e).localCheckpoint()
+    if n_edges <= _LOCAL_GRAPH_MAX_EDGES:
+        # Single-task finisher: one Arrow transfer + one vectorized
+        # kernel replaces ~5 star rounds of 3 shuffles + 2 jobs each.
+        # Eagerly pinned so the edge blocks release now and consumers
+        # never replay the Python stage.
+        comp_c = _single_task(
+            e, ("u", "v"), "cnode long, component long", _cc_kernel
+        ).localCheckpoint()
         release_local_checkpoint(e)
     else:
         # max_iter + 1 passes: detecting the fixpoint costs one
@@ -609,7 +654,12 @@ def lpa_communities_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = copurchase_edges(spark, sf_dir, pinned=True)
     if und.count() <= _LOCAL_GRAPH_MAX_EDGES:
         out = (
-            _lpa_local(und, _LPA_ROUNDS)
+            _single_task(
+                und,
+                ("pa", "pb"),
+                "community long, size long",
+                partial(_lpa_kernel, rounds=_LPA_ROUNDS),
+            )
             .orderBy(F.desc("size"), "community")
             .localCheckpoint(eager=True)
         )
@@ -705,52 +755,26 @@ e{i} AS MATERIALIZED (
     return "WITH " + ",\n".join(ctes) + "\n" + stats + "\nORDER BY round"
 
 
-def _kcore_local(e: DataFrame, rounds: int, k: int) -> DataFrame:
-    """Single-task k-core peel over a bounded ``(pa, pb)`` edge frame:
-    the ``(round, n_vertices, n_edges)`` peeling trajectory — the
-    distributed loop's output grain. Exactness: integer degree counts
-    and endpoint-set restrictions only, nothing that can drift. The
-    kernel must emit the full trajectory even when the edge frame is
-    empty (all-zero rounds), matching the loop's per-round counts."""
-    inp = e.select(
-        F.col("pa").cast("long").alias("pa"), F.col("pb").cast("long").alias("pb")
-    )
-
-    def part(batches):
-        import numpy as np
-        import pandas as pd
-
-        pas, pbs = [], []
-        for b in batches:
-            pas.append(b["pa"].to_numpy(np.int64))
-            pbs.append(b["pb"].to_numpy(np.int64))
-        pa = np.concatenate(pas) if pas else np.empty(0, dtype=np.int64)
-        pb = np.concatenate(pbs) if pbs else np.empty(0, dtype=np.int64)
-        out = []
-        for i in range(1, rounds + 1):
-            if pa.size:
-                nodes, inv = np.unique(
-                    np.concatenate([pa, pb]), return_inverse=True
-                )
-                deg = np.bincount(inv, minlength=nodes.size)
-                keep = deg >= k
-                mask = keep[inv[: pa.size]] & keep[inv[pa.size :]]
-                pa, pb = pa[mask], pb[mask]
-            out.append(
-                (
-                    i,
-                    int(np.unique(np.concatenate([pa, pb])).size),
-                    int(pa.size),
-                )
-            )
-        yield pd.DataFrame(
-            out, columns=["round", "n_vertices", "n_edges"]
-        ).astype(
-            {"round": "int32", "n_vertices": "int64", "n_edges": "int64"}
-        )
-
-    return inp.coalesce(1).mapInPandas(
-        part, "round int, n_vertices long, n_edges long"
+def _kcore_kernel(
+    pa: np.ndarray, pb: np.ndarray, rounds: int, k: int
+) -> pd.DataFrame:
+    """Single-task k-core peel over ``(pa, pb)`` edges: the ``(round,
+    n_vertices, n_edges)`` peeling trajectory — the distributed loop's
+    output grain. Exactness: integer degree counts and endpoint-set
+    restrictions only, nothing that can drift. The full trajectory is
+    emitted even for an empty edge set (all-zero rounds), matching the
+    loop's per-round counts."""
+    out = []
+    for i in range(1, rounds + 1):
+        if pa.size:
+            nodes, inv = np.unique(np.concatenate([pa, pb]), return_inverse=True)
+            deg = np.bincount(inv, minlength=nodes.size)
+            keep = deg >= k
+            mask = keep[inv[: pa.size]] & keep[inv[pa.size :]]
+            pa, pb = pa[mask], pb[mask]
+        out.append((i, int(np.unique(np.concatenate([pa, pb])).size), int(pa.size)))
+    return pd.DataFrame(out, columns=["round", "n_vertices", "n_edges"]).astype(
+        {"round": "int32", "n_vertices": "int64", "n_edges": "int64"}
     )
 
 
@@ -769,16 +793,17 @@ def kcore_peel_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation + two semi-join restrictions on vertex keys — O(|E|)
     hash work per round, lineage truncated per round. Output is the
     peeling TRAJECTORY (vertices/edges after each round), which pins
-    both the algorithm and its convergence behavior."""
+    both the algorithm and its convergence behavior. Below
+    _LOCAL_GRAPH_MAX_EDGES the peel runs in the single-task kernel."""
     e = copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     if e.count() <= _LOCAL_GRAPH_MAX_EDGES:
-        # bounded-rounds peel in the single-task vectorized kernel
-        # (_LOCAL_GRAPH_MAX_EDGES doctrine — the LPA shape applied to
-        # the last loop-shaped query; forced-path-pinned to the loop
-        # in tests/test_graph.py). The distributed loop below is the
-        # at-scale path.
         out = (
-            _kcore_local(e, _KCORE_ROUNDS, _KCORE_K)
+            _single_task(
+                e,
+                ("pa", "pb"),
+                "round int, n_vertices long, n_edges long",
+                partial(_kcore_kernel, rounds=_KCORE_ROUNDS, k=_KCORE_K),
+            )
             .orderBy("round")
             .localCheckpoint(eager=True)
         )
@@ -828,38 +853,18 @@ _PR_ROUNDS = 5
 _PR_R0 = 1_000_000_000  # initial rank per node, integer units
 _PR_TELEPORT = _PR_R0 * 3 // 20  # (1-d)·R0 with d = 0.85 = 17/20
 
-# At or below this edge count every bounded-rounds graph ITERATION
-# (PageRank, PPR, LPA, HITS, BFS, sampled-BFS closeness) finishes in a
-# single-task vectorized kernel instead of the distributed per-round
-# join loop — the _LOCAL_CC_MAX_EDGES doctrine applied to the whole
-# iterative family (optimization r18, guide §1.2 "the distributed
-# algorithm" + §4.2 native batch code). Measured at sf0.1: each loop
-# round costs 2-4 shuffle stages plus 1-3 job dispatches (the per-round
-# localCheckpoint the lineage doctrine requires is itself a job), so a
-# graph-sized input pays ~15 jobs of pure scheduling latency for well
-# under one core-second of arithmetic. Every recursion in the family
-# is INTEGER-exact by construction (ranks in integer units with div,
-# mode-with-min-tie labels, hop counts), so a numpy int64 kernel
-# reproduces the distributed fixpoint bit-for-bit — each query's
-# forced-path test pins the two paths to identical rows. Above the
-# threshold the distributed loop runs unchanged: at cluster scale the
-# edge set exceeds any single task and the O(|E|)-per-round join loop
-# is the right shape. 2M edges is ~32 MB of Arrow payload — bounded by
-# construction, same class as a broadcast side.
-_LOCAL_GRAPH_MAX_EDGES = 2_000_000
+def _pagerank_kernel(
+    pa: np.ndarray, pb: np.ndarray, personalized: bool
+) -> pd.DataFrame | None:
+    """Single-task integer-exact PageRank over ``(pa, pb)`` undirected
+    edges: ``(part, rank_units)`` for every vertex with >= 1 edge —
+    exactly the distributed loop's output grain.
 
-
-def _pagerank_local(
-    und: DataFrame, seed_marks: DataFrame | None = None
-) -> DataFrame:
-    """Single-task integer-exact PageRank over a bounded ``(pa, pb)``
-    undirected edge frame: ``(part, rank_units)`` for every vertex
-    with >= 1 edge — exactly the distributed loop's output grain.
-
-    When ``seed_marks`` (a ``(sv)`` frame of teleport targets) is
-    given, runs the PERSONALIZED variant: seeds start at R0 and keep
-    the teleport constant, non-seeds start and teleport at 0, vertices
-    never reached are dropped (r > 0) — the _ppr_oracle recursion.
+    ``personalized`` runs the seeded variant: the teleport targets ride
+    the input as ``(sv, -1)`` rows (part keys are positive, so the sign
+    is an unambiguous tag); seeds start at R0 and keep the teleport
+    constant, non-seeds start and teleport at 0, vertices never reached
+    are dropped (r > 0) — the _ppr_oracle recursion.
 
     Exactness: the round update is r'(v) = tele(v) + Σ_{u∈N(v)}
     (r(u)·17) div (20·deg(u)) in int64 — identical operations in
@@ -867,287 +872,169 @@ def _pagerank_local(
     terms are non-negative so numpy's ``//`` (floor) equals Spark/
     DuckDB's truncating ``div``. Overflow headroom: total mass stays
     <= n·R0 <= 2e6·1e9 = 2e15 under the kernel gate, so r·17 < 2^63."""
-    personalized = seed_marks is not None
-    inp = und.select(
-        F.col("pa").cast("long").alias("pa"), F.col("pb").cast("long").alias("pb")
-    )
+    marks = pa[pb < 0]
+    em = pb >= 0
+    pa, pb = pa[em], pb[em]
+    if pa.size == 0:
+        return None
+    nodes, send, recv = _sym_index(pa, pb)
+    deg = np.bincount(send, minlength=nodes.size).astype(np.int64)
     if personalized:
-        # seed markers ride the same frame as (sv, -1) rows — part keys
-        # are positive, so the sign is an unambiguous tag and the
-        # kernel needs no second input relation
-        inp = inp.unionByName(
-            seed_marks.select(
-                F.col("sv").cast("long").alias("pa"),
-                F.lit(-1).cast("long").alias("pb"),
-            )
-        )
-    r0, tele, rounds = _PR_R0, _PR_TELEPORT, _PR_ROUNDS
-
-    def part(batches):
-        import numpy as np
-        import pandas as pd
-
-        pas, pbs = [], []
-        for b in batches:
-            pas.append(b["pa"].to_numpy(np.int64))
-            pbs.append(b["pb"].to_numpy(np.int64))
-        if not pas:
-            return
-        pa = np.concatenate(pas)
-        pb = np.concatenate(pbs)
-        marks = pa[pb < 0]
-        em = pb >= 0
-        pa, pb = pa[em], pb[em]
-        if pa.size == 0:
-            return
-        nodes, inv = np.unique(np.concatenate([pa, pb]), return_inverse=True)
-        ea, eb = inv[: pa.size], inv[pa.size :]
-        # symmetric directed view: each undirected edge sends both ways
-        send = np.concatenate([ea, eb])
-        recv = np.concatenate([eb, ea])
-        deg = np.bincount(send, minlength=nodes.size).astype(np.int64)
-        if personalized:
-            seed = np.zeros(nodes.size, dtype=bool)
-            seed[np.searchsorted(nodes, np.intersect1d(marks, nodes))] = True
-            r = np.where(seed, np.int64(r0), np.int64(0))
-            t = np.where(seed, np.int64(tele), np.int64(0))
-        else:
-            r = np.full(nodes.size, r0, dtype=np.int64)
-            t = np.full(nodes.size, tele, dtype=np.int64)
-        for _ in range(rounds):
-            c = (r[send] * 17) // (20 * deg[send])
-            s = np.zeros(nodes.size, dtype=np.int64)
-            np.add.at(s, recv, c)
-            r = t + s
-        if personalized:
-            keep = r > 0
-            nodes, r = nodes[keep], r[keep]
-        yield pd.DataFrame({"part": nodes, "rank_units": r})
-
-    # coalesce, not repartition: the input is graph-sized and pinned,
-    # so collapsing to one partition constrains nothing upstream and
-    # skips the keyless-repartition pre-sort (guide §2.5)
-    return inp.coalesce(1).mapInPandas(part, "part long, rank_units long")
+        seed = np.zeros(nodes.size, dtype=bool)
+        seed[np.searchsorted(nodes, np.intersect1d(marks, nodes))] = True
+        r = np.where(seed, np.int64(_PR_R0), np.int64(0))
+        t = np.where(seed, np.int64(_PR_TELEPORT), np.int64(0))
+    else:
+        r = np.full(nodes.size, _PR_R0, dtype=np.int64)
+        t = np.full(nodes.size, _PR_TELEPORT, dtype=np.int64)
+    for _ in range(_PR_ROUNDS):
+        c = (r[send] * 17) // (20 * deg[send])
+        s = np.zeros(nodes.size, dtype=np.int64)
+        np.add.at(s, recv, c)
+        r = t + s
+    if personalized:
+        keep = r > 0
+        nodes, r = nodes[keep], r[keep]
+    return pd.DataFrame({"part": nodes, "rank_units": r})
 
 
-def _lpa_local(und: DataFrame, rounds: int) -> DataFrame:
-    """Single-task synchronized LPA over a bounded ``(pa, pb)`` edge
-    frame: ``(community, size)`` after ``rounds`` mode-label rounds —
-    the distributed loop's output grain. Exactness: each round every
-    vertex adopts the neighbor label with the highest count, ties to
-    the SMALLEST label — reproduced by sorting candidate (v, c, lbl)
-    triples on (v, -c, lbl) and taking the first per v; labels are
-    node ids (int64) throughout, no float anywhere."""
-    inp = und.select(
-        F.col("pa").cast("long").alias("pa"), F.col("pb").cast("long").alias("pb")
-    )
-
-    def part(batches):
-        import numpy as np
-        import pandas as pd
-
-        pas, pbs = [], []
-        for b in batches:
-            pas.append(b["pa"].to_numpy(np.int64))
-            pbs.append(b["pb"].to_numpy(np.int64))
-        if not pas:
-            return
-        pa = np.concatenate(pas)
-        pb = np.concatenate(pbs)
-        if pa.size == 0:
-            return
-        nodes, inv = np.unique(np.concatenate([pa, pb]), return_inverse=True)
-        ea, eb = inv[: pa.size], inv[pa.size :]
-        send = np.concatenate([ea, eb])
-        recv = np.concatenate([eb, ea])
-        n = nodes.size
-        # labels as node INDICES: nodes is ascending, so min label
-        # value == min label index and the tie-break is order-safe
-        lbl = np.arange(n, dtype=np.int64)
-        for _ in range(rounds):
-            votes = recv * np.int64(n) + lbl[send]
-            keys, cnt = np.unique(votes, return_counts=True)
-            vv, ll = keys // n, keys % n
-            order = np.lexsort((ll, -cnt, vv))
-            vv, ll = vv[order], ll[order]
-            first = np.unique(vv, return_index=True)[1]
-            nxt = lbl.copy()
-            nxt[vv[first]] = ll[first]
-            lbl = nxt
-        comm, size = np.unique(lbl, return_counts=True)
-        yield pd.DataFrame(
-            {"community": nodes[comm], "size": size.astype(np.int64)}
-        )
-
-    return inp.coalesce(1).mapInPandas(part, "community long, size long")
+def _lpa_kernel(
+    pa: np.ndarray, pb: np.ndarray, rounds: int
+) -> pd.DataFrame | None:
+    """Single-task synchronized LPA over ``(pa, pb)`` edges:
+    ``(community, size)`` after ``rounds`` mode-label rounds — the
+    distributed loop's output grain. Exactness: each round every vertex
+    adopts the neighbor label with the highest count, ties to the
+    SMALLEST label — reproduced by sorting candidate (v, c, lbl) triples
+    on (v, -c, lbl) and taking the first per v; labels are node ids
+    (int64) throughout, no float anywhere."""
+    if pa.size == 0:
+        return None
+    nodes, send, recv = _sym_index(pa, pb)
+    n = nodes.size
+    # labels as node INDICES: nodes is ascending, so min label value ==
+    # min label index and the tie-break is order-safe
+    lbl = np.arange(n, dtype=np.int64)
+    for _ in range(rounds):
+        votes = recv * np.int64(n) + lbl[send]
+        keys, cnt = np.unique(votes, return_counts=True)
+        vv, ll = keys // n, keys % n
+        order = np.lexsort((ll, -cnt, vv))
+        vv, ll = vv[order], ll[order]
+        first = np.unique(vv, return_index=True)[1]
+        nxt = lbl.copy()
+        nxt[vv[first]] = ll[first]
+        lbl = nxt
+    comm, size = np.unique(lbl, return_counts=True)
+    return pd.DataFrame({"community": nodes[comm], "size": size.astype(np.int64)})
 
 
-def _hits_local(e: DataFrame, rounds: int) -> DataFrame:
-    """Single-task integer-exact HITS over a bounded bipartite
-    ``(c, p)`` edge frame: the long-format ``(kind, node,
-    score_micro)`` output. Exactness: v ← ⌊v·10⁶ / max(v)⌋ on
-    non-negative int64 — the raw sums are bounded by 10⁶·deg <=
-    10⁶·|E| <= 2e12 under the kernel gate, so the ·10⁶ product stays
-    < 2^63 and numpy floor-div equals the decimal(38,0)/HUGEINT div
-    both engines use."""
-    inp = e.select(
-        F.col("c").cast("long").alias("c"), F.col("p").cast("long").alias("p")
-    )
-
-    def part(batches):
-        import numpy as np
-        import pandas as pd
-
-        cs, ps = [], []
-        for b in batches:
-            cs.append(b["c"].to_numpy(np.int64))
-            ps.append(b["p"].to_numpy(np.int64))
-        if not cs:
-            return
-        c = np.concatenate(cs)
-        p = np.concatenate(ps)
-        if c.size == 0:
-            return
-        cn, ci = np.unique(c, return_inverse=True)
-        pn, pi = np.unique(p, return_inverse=True)
-        a = np.full(pn.size, 1_000_000, dtype=np.int64)
-        h = np.zeros(cn.size, dtype=np.int64)
-        for _ in range(rounds):
-            hr = np.zeros(cn.size, dtype=np.int64)
-            np.add.at(hr, ci, a[pi])
-            h = hr * 1_000_000 // hr.max()
-            ar = np.zeros(pn.size, dtype=np.int64)
-            np.add.at(ar, pi, h[ci])
-            a = ar * 1_000_000 // ar.max()
-        yield pd.DataFrame(
-            {
-                "kind": ["authority"] * pn.size + ["hub"] * cn.size,
-                "node": np.concatenate([pn, cn]),
-                "score_micro": np.concatenate([a, h]),
-            }
-        )
-
-    return inp.coalesce(1).mapInPandas(
-        part, "kind string, node long, score_micro long"
+def _hits_kernel(
+    c: np.ndarray, p: np.ndarray, rounds: int
+) -> pd.DataFrame | None:
+    """Single-task integer-exact HITS over bipartite ``(c, p)`` edges:
+    the long-format ``(kind, node, score_micro)`` output. Exactness:
+    v ← ⌊v·10⁶ / max(v)⌋ on non-negative int64 — the raw sums are
+    bounded by 10⁶·deg <= 10⁶·|E| <= 2e12 under the kernel gate, so the
+    ·10⁶ product stays < 2^63 and numpy floor-div equals the
+    decimal(38,0)/HUGEINT div both engines use."""
+    if c.size == 0:
+        return None
+    cn, ci = np.unique(c, return_inverse=True)
+    pn, pi = np.unique(p, return_inverse=True)
+    a = np.full(pn.size, 1_000_000, dtype=np.int64)
+    h = np.zeros(cn.size, dtype=np.int64)
+    for _ in range(rounds):
+        hr = np.zeros(cn.size, dtype=np.int64)
+        np.add.at(hr, ci, a[pi])
+        h = hr * 1_000_000 // hr.max()
+        ar = np.zeros(pn.size, dtype=np.int64)
+        np.add.at(ar, pi, h[ci])
+        a = ar * 1_000_000 // ar.max()
+    return pd.DataFrame(
+        {
+            "kind": ["authority"] * pn.size + ["hub"] * cn.size,
+            "node": np.concatenate([pn, cn]),
+            "score_micro": np.concatenate([a, h]),
+        }
     )
 
 
-def _bfs_hops_local(und: DataFrame, max_hop: int) -> DataFrame:
-    """Single-task BFS hop census over a bounded ``(pa, pb)`` edge
-    frame, seeded at the minimum vertex: ``(hop, n_vertices)`` rows
-    for hops 0..max_hop plus the hop = -1 unreachable count —
-    integer frontier relaxation, trivially exact."""
-    inp = und.select(
-        F.col("pa").cast("long").alias("pa"), F.col("pb").cast("long").alias("pb")
-    )
-
-    def part(batches):
-        import numpy as np
-        import pandas as pd
-
-        pas, pbs = [], []
-        for b in batches:
-            pas.append(b["pa"].to_numpy(np.int64))
-            pbs.append(b["pb"].to_numpy(np.int64))
-        if not pas:
-            return
-        pa = np.concatenate(pas)
-        pb = np.concatenate(pbs)
-        if pa.size == 0:
-            return
-        nodes, inv = np.unique(np.concatenate([pa, pb]), return_inverse=True)
-        ea, eb = inv[: pa.size], inv[pa.size :]
-        send = np.concatenate([ea, eb])
-        recv = np.concatenate([eb, ea])
-        dist = np.full(nodes.size, -1, dtype=np.int64)
-        dist[0] = 0  # nodes is ascending: index 0 IS the min vertex
-        for hop in range(1, max_hop + 1):
-            reach = recv[dist[send] == hop - 1]
-            fresh = reach[dist[reach] < 0]
-            if fresh.size == 0:
-                break
-            dist[fresh] = hop
-        hops, cnt = np.unique(dist[dist >= 0], return_counts=True)
-        out_h = list(hops) + [-1]
-        out_n = list(cnt.astype(np.int64)) + [
-            int(np.count_nonzero(dist < 0))
-        ]
-        yield pd.DataFrame(
-            {
-                "hop": np.asarray(out_h, dtype=np.int32),
-                "n_vertices": np.asarray(out_n, dtype=np.int64),
-            }
-        )
-
-    return inp.coalesce(1).mapInPandas(part, "hop int, n_vertices long")
+def _bfs_dist(
+    send: np.ndarray, recv: np.ndarray, n: int, src: int, max_hop: int
+) -> np.ndarray:
+    """Hop distance from node index ``src`` to every node within
+    ``max_hop`` (-1 beyond it): synchronous integer frontier relaxation
+    over the ``_sym_index`` view, trivially exact."""
+    dist = np.full(n, -1, dtype=np.int64)
+    dist[src] = 0
+    for hop in range(1, max_hop + 1):
+        reach = recv[dist[send] == hop - 1]
+        fresh = reach[dist[reach] < 0]
+        if fresh.size == 0:
+            break
+        dist[fresh] = hop
+    return dist
 
 
-def _harmonic_local(und: DataFrame, n_seeds: int, max_hop: int) -> DataFrame:
-    """Single-task sampled-seed harmonic closeness over a bounded
-    ``(pa, pb)`` edge frame: ``(seed, n_reached, harmonic_micro)`` for
-    the ``n_seeds`` md5-order sample — hashlib.md5 of str(v) sorts
-    identically to the Spark/DuckDB md5-hex ordering (lowercase hex,
-    lexicographic), per-hop credit is the exact integer 10⁶ // hop."""
-    inp = und.select(
-        F.col("pa").cast("long").alias("pa"), F.col("pb").cast("long").alias("pb")
-    )
-
-    def part(batches):
-        import hashlib
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        pas, pbs = [], []
-        for b in batches:
-            pas.append(b["pa"].to_numpy(np.int64))
-            pbs.append(b["pb"].to_numpy(np.int64))
-        if not pas:
-            return
-        pa = np.concatenate(pas)
-        pb = np.concatenate(pbs)
-        if pa.size == 0:
-            return
-        nodes, inv = np.unique(np.concatenate([pa, pb]), return_inverse=True)
-        ea, eb = inv[: pa.size], inv[pa.size :]
-        send = np.concatenate([ea, eb])
-        recv = np.concatenate([eb, ea])
-        # nsmallest keeps a k-long heap instead of fully sorting the
-        # vertex set (ADVICE r18): the md5 key is still computed once
-        # per vertex, but the selection is O(n log k), not O(n log n)
-        seeds = heapq.nsmallest(
-            n_seeds,
-            range(nodes.size),
-            key=lambda i: (
-                hashlib.md5(str(int(nodes[i])).encode()).hexdigest(),
-                int(nodes[i]),
+def _bfs_hops_kernel(
+    pa: np.ndarray, pb: np.ndarray, max_hop: int
+) -> pd.DataFrame | None:
+    """Single-task BFS hop census over ``(pa, pb)`` edges, seeded at the
+    minimum vertex: ``(hop, n_vertices)`` rows for hops 0..max_hop plus
+    the hop = -1 unreachable count."""
+    if pa.size == 0:
+        return None
+    nodes, send, recv = _sym_index(pa, pb)
+    # nodes is ascending: index 0 IS the min vertex
+    dist = _bfs_dist(send, recv, nodes.size, 0, max_hop)
+    hops, cnt = np.unique(dist[dist >= 0], return_counts=True)
+    return pd.DataFrame(
+        {
+            "hop": np.asarray(list(hops) + [-1], dtype=np.int32),
+            "n_vertices": np.asarray(
+                list(cnt.astype(np.int64)) + [int(np.count_nonzero(dist < 0))],
+                dtype=np.int64,
             ),
-        )
-        out = []
-        for si in sorted(seeds):
-            dist = np.full(nodes.size, -1, dtype=np.int64)
-            dist[si] = 0
-            for hop in range(1, max_hop + 1):
-                reach = recv[dist[send] == hop - 1]
-                fresh = reach[dist[reach] < 0]
-                if fresh.size == 0:
-                    break
-                dist[fresh] = hop
-            pos = dist[dist > 0]
-            out.append(
-                (
-                    int(nodes[si]),
-                    int(pos.size),
-                    int((1_000_000 // pos).sum()) if pos.size else 0,
-                )
-            )
-        yield pd.DataFrame(
-            out, columns=["seed", "n_reached", "harmonic_micro"]
-        ).astype({"seed": "int64", "n_reached": "int64", "harmonic_micro": "int64"})
+        }
+    )
 
-    return inp.coalesce(1).mapInPandas(
-        part, "seed long, n_reached long, harmonic_micro long"
+
+def _harmonic_kernel(
+    pa: np.ndarray, pb: np.ndarray, n_seeds: int, max_hop: int
+) -> pd.DataFrame | None:
+    """Single-task sampled-seed harmonic closeness over ``(pa, pb)``
+    edges: ``(seed, n_reached, harmonic_micro)`` for the ``n_seeds``
+    md5-order sample — hashlib.md5 of str(v) sorts identically to the
+    Spark/DuckDB md5-hex ordering (lowercase hex, lexicographic),
+    per-hop credit is the exact integer 10⁶ // hop."""
+    if pa.size == 0:
+        return None
+    nodes, send, recv = _sym_index(pa, pb)
+    # nsmallest keeps a k-long heap instead of fully sorting the vertex
+    # set (ADVICE r18): the md5 key is still computed once per vertex,
+    # but the selection is O(n log k), not O(n log n)
+    seeds = heapq.nsmallest(
+        n_seeds,
+        range(nodes.size),
+        key=lambda i: (
+            hashlib.md5(str(int(nodes[i])).encode()).hexdigest(),
+            int(nodes[i]),
+        ),
+    )
+    out = []
+    for si in sorted(seeds):
+        dist = _bfs_dist(send, recv, nodes.size, si, max_hop)
+        pos = dist[dist > 0]
+        out.append(
+            (
+                int(nodes[si]),
+                int(pos.size),
+                int((1_000_000 // pos).sum()) if pos.size else 0,
+            )
+        )
+    return pd.DataFrame(out, columns=["seed", "n_reached", "harmonic_micro"]).astype(
+        {"seed": "int64", "n_reached": "int64", "harmonic_micro": "int64"}
     )
 
 
@@ -1221,10 +1108,31 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task vectorized kernel (same integer arithmetic, pinned to
     the loop by a forced-path test); the distributed loop is the
     at-scale path."""
-    und = copurchase_edges(spark, sf_dir, pinned=True)
+    return _pagerank(copurchase_edges(spark, sf_dir, pinned=True))
+
+
+def _pagerank(und: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
+    """Integer-exact PageRank over the pinned ``(pa, pb)`` edge frame
+    ``und``, ordered ``(part, rank_units)``; with ``seeds`` (an ``(sv)``
+    frame of teleport targets) the personalized variant, which drops
+    vertices never reached (r = 0). Global ranks are always at least
+    the teleport constant, so that filter leaves them whole."""
     if und.count() <= _LOCAL_GRAPH_MAX_EDGES:
+        inp = und
+        if seeds is not None:
+            inp = und.unionByName(
+                seeds.select(
+                    F.col("sv").cast("long").alias("pa"),
+                    F.lit(-1).cast("long").alias("pb"),
+                )
+            )
         out = (
-            _pagerank_local(und)
+            _single_task(
+                inp,
+                ("pa", "pb"),
+                "part long, rank_units long",
+                partial(_pagerank_kernel, personalized=seeds is not None),
+            )
             .orderBy(F.desc("rank_units"), "part")
             .localCheckpoint(eager=True)
         )
@@ -1235,6 +1143,16 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(und.select(F.col("pb").alias("v"), F.col("pa").alias("u")))
     edges = edges.persist()
     deg = edges.groupBy("v").agg(F.count("*").cast("long").alias("d")).persist()
+    if seeds is None:
+        marked, is_seed = deg, F.lit(True)
+    else:
+        # the seed restriction is one broadcast-sized dimension join
+        marked = (
+            deg.join(F.broadcast(seeds), deg.v == F.col("sv"), "left")
+            .select("v", "d", F.col("sv").isNotNull().alias("seed"))
+            .persist()
+        )
+        is_seed = F.col("seed")
     # static degree-annotated edge list: src degree rides the edge so
     # each round joins ONLY the rank vector
     e_src = (
@@ -1251,7 +1169,10 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overlapping replays of the 64-task construction stages, ~15
     # executor-s each, dominating the query).
     e_src.count()
-    ranks = deg.select("v", F.lit(_PR_R0).cast("long").alias("r"))
+    ranks = marked.select(
+        "v", F.when(is_seed, F.lit(_PR_R0)).otherwise(0).cast("long").alias("r")
+    )
+    tele = F.when(is_seed, F.lit(_PR_TELEPORT)).otherwise(0).cast("long")
     prev = None
     for _ in range(_PR_ROUNDS):
         contrib = (
@@ -1260,15 +1181,8 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("v")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
-            deg.join(contrib, "v", "left")
-            .select(
-                "v",
-                (
-                    F.lit(_PR_TELEPORT).cast("long")
-                    + F.coalesce(F.col("s"), F.lit(0))
-                ).alias("r"),
-            )
+        ranks = marked.join(contrib, "v", "left").select(
+            "v", (tele + F.coalesce(F.col("s"), F.lit(0))).alias("r")
         )
         # Pin each round's node-grain rank vector and free its
         # predecessor: round N+1's broadcast subquery then reads a
@@ -1278,16 +1192,16 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         if prev is not None:
             release_local_checkpoint(prev)
         prev = ranks
-    out = ranks.select(
-        F.col("v").alias("part"), F.col("r").alias("rank_units")
-    ).orderBy(F.desc("rank_units"), "part")
+    out = (
+        ranks.filter(F.col("r") > 0)
+        .select(F.col("v").alias("part"), F.col("r").alias("rank_units"))
+        .orderBy(F.desc("rank_units"), "part")
+    )
     out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    deg.unpersist()
-    e_src.unpersist()
+    for cached in (edges, deg, marked, e_src):
+        cached.unpersist()
     release_local_checkpoint(und)  # ADVICE r18: at-scale branch leaked it
-    if prev is not None:
-        release_local_checkpoint(prev)
+    release_local_checkpoint(prev)
     return out
 
 
@@ -1475,46 +1389,21 @@ def bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = copurchase_edges(spark, sf_dir, pinned=True)
     if e.count() <= _LOCAL_GRAPH_MAX_EDGES:
         out = (
-            _bfs_hops_local(e, 4)
+            _single_task(
+                e,
+                ("pa", "pb"),
+                "hop int, n_vertices long",
+                partial(_bfs_hops_kernel, max_hop=4),
+            )
             .orderBy("hop")
             .localCheckpoint(eager=True)
         )
         release_local_checkpoint(e)
         return out
-    # localCheckpoint per round: BFS is iterative, and without eager
-    # lineage truncation round N re-executes rounds 1..N-1 (measured
-    # 35s -> ~8s at sf0.001); same doctrine as connected_components.
-    sym = e.unionByName(
-        e.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
-    ).localCheckpoint()
-    release_local_checkpoint(e)  # ADVICE r18: sym is pinned; e is consumed
-    verts = sym.select(F.col("pa").alias("v")).distinct().localCheckpoint()
-    seed = (
-        verts.agg(F.min("v").alias("v"))
-        .select("v", F.lit(0).alias("hop"))
-        .localCheckpoint()
-    )
-    layers = [seed]
-    visited_v = seed.select("v")
-    frontier = seed.select("v")
-    for h in range(1, 5):
-        nxt = (
-            frontier.join(sym, frontier["v"] == sym["pa"])
-            .select(F.col("pb").alias("v"))
-            .distinct()
-            .join(visited_v, "v", "left_anti")
-            .select("v", F.lit(h).alias("hop"))
-            .localCheckpoint()
-        )
-        layers.append(nxt)
-        visited_v = visited_v.unionByName(nxt.select("v"))
-        frontier = nxt.select("v")
-    visited = layers[0]
-    for lay in layers[1:]:
-        visited = visited.unionByName(lay)
-    reached = visited.groupBy("hop").agg(F.count("*").alias("n_vertices"))
+    dist, verts = _bfs_layers(e, lambda v: v.agg(F.min("v").alias("v")), 4)
+    reached = dist.groupBy("hop").agg(F.count("*").alias("n_vertices"))
     n_verts = verts.agg(F.count("*").alias("nv"))
-    n_reach = visited.agg(F.count("*").alias("nr"))
+    n_reach = dist.agg(F.count("*").alias("nr"))
     unreachable = (
         n_verts.crossJoin(n_reach)
         .select(
@@ -1527,6 +1416,48 @@ def bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(unreachable.select(F.col("hop").cast("int"), "n_vertices"))
         .orderBy("hop")
     )
+
+
+def _bfs_layers(
+    e: DataFrame, pick_seeds: Callable[[DataFrame], DataFrame], max_hop: int
+) -> tuple[DataFrame, DataFrame]:
+    """Distributed multi-source BFS over the pinned ``(pa, pb)`` edge
+    frame ``e`` (consumed: its blocks are released). ``pick_seeds`` maps
+    the ``(v)`` vertex frame to the ``(v)`` sources. Returns ``dist`` —
+    ``(s, v, hop)`` for every vertex v within ``max_hop`` of source s —
+    and the vertex frame. Synchronous frontier relaxation: each round
+    is ONE frontier-to-adjacency equi-join plus an anti-join against
+    the visited set, on the (source, vertex) state key; the number of
+    rounds is the hop budget, a query constant, never a data size."""
+    # localCheckpoint per round: BFS is iterative, and without eager
+    # lineage truncation round N re-executes rounds 1..N-1 (measured
+    # 35s -> ~8s at sf0.001); same doctrine as connected_components.
+    sym = e.unionByName(
+        e.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
+    ).localCheckpoint()
+    release_local_checkpoint(e)  # ADVICE r18: sym is pinned; e is consumed
+    verts = sym.select(F.col("pa").alias("v")).distinct().localCheckpoint()
+    layer = (
+        pick_seeds(verts)
+        .select(F.col("v").alias("s"), F.col("v"), F.lit(0).alias("hop"))
+        .localCheckpoint()
+    )
+    layers = [layer]
+    visited = frontier = layer.select("s", "v")
+    for h in range(1, max_hop + 1):
+        nxt = (
+            frontier.join(sym, frontier["v"] == sym["pa"])
+            .select("s", F.col("pb").alias("v"))
+            .distinct()
+            .join(visited, ["s", "v"], "left_anti")
+            .select("s", "v", F.lit(h).alias("hop"))
+            .localCheckpoint()
+        )
+        layers.append(nxt)
+        visited = visited.unionByName(nxt.select("s", "v"))
+        frontier = nxt.select("s", "v")
+    release_local_checkpoint(sym)  # every layer is pinned eagerly
+    return reduce(DataFrame.unionByName, layers), verts
 
 
 @register(
@@ -2497,43 +2428,19 @@ def harmonic_closeness_sampled_bfs(
     e = copurchase_edges(spark, sf_dir, pinned=True)
     if e.count() <= _LOCAL_GRAPH_MAX_EDGES:
         out = (
-            _harmonic_local(e, 8, 4)
+            _single_task(
+                e,
+                ("pa", "pb"),
+                "seed long, n_reached long, harmonic_micro long",
+                partial(_harmonic_kernel, n_seeds=8, max_hop=4),
+            )
             .orderBy("seed")
             .localCheckpoint(eager=True)
         )
         release_local_checkpoint(e)
         return out
-    sym = e.unionByName(
-        e.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
-    ).localCheckpoint()
-    release_local_checkpoint(e)  # ADVICE r18: sym is pinned; e is consumed
-    verts = sym.select(F.col("pa").alias("v")).distinct()
-    seeds = (
-        verts.orderBy(F.md5(F.col("v").cast("string")), "v")
-        .limit(8)
-        .localCheckpoint()
-    )
-    layer = seeds.select(
-        F.col("v").alias("s"), F.col("v").alias("v"), F.lit(0).alias("hop")
-    ).localCheckpoint()
-    visited = layer.select("s", "v")
-    layers = [layer]
-    frontier = layer.select("s", "v")
-    for h in range(1, 5):
-        nxt = (
-            frontier.join(sym, frontier["v"] == sym["pa"])
-            .select("s", F.col("pb").alias("v"))
-            .distinct()
-            .join(visited, ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(h).alias("hop"))
-            .localCheckpoint()
-        )
-        layers.append(nxt)
-        visited = visited.unionByName(nxt.select("s", "v"))
-        frontier = nxt.select("s", "v")
-    dist = layers[0]
-    for lay in layers[1:]:
-        dist = dist.unionByName(lay)
+    md5_order = F.md5(F.col("v").cast("string"))
+    dist, _ = _bfs_layers(e, lambda v: v.orderBy(md5_order, "v").limit(8), 4)
     # aggregate over ALL dist rows (the hop-0 self row keeps an
     # isolated seed present with zeros, matching the oracle's
     # FILTER-inside-aggregate shape)
@@ -2630,97 +2537,16 @@ def personalized_pagerank_copurchase(
     division, 5 fixed rounds): seeds start at R0 and keep the exact
     teleport constant, non-seeds start at 0 — vertices never reached
     stay 0 and are dropped (WHERE r > 0), keeping the output
-    affinity-sized, not catalog-sized. Scale shape identical to
-    pagerank_copurchase: one static degree-annotated edge list, one
-    rank-vector equi-join + dst aggregation per round; the seed
-    restriction adds one broadcast-sized dimension join. Below
-    _LOCAL_GRAPH_MAX_EDGES the recursion runs in the single-task
-    vectorized kernel (forced-path-pinned to the loop); seed markers
+    affinity-sized, not catalog-sized. Both variants run the one
+    ``_pagerank`` (kernel and loop); the seed restriction adds one
+    broadcast-sized dimension join to the loop, and the seed markers
     ride the kernel's input frame so there is no driver collect."""
-    und = copurchase_edges(spark, sf_dir, pinned=True)
-    if und.count() <= _LOCAL_GRAPH_MAX_EDGES:
-        seeds = (
-            load_table(spark, sf_dir, "part")
-            .filter(F.col("p_brand") == "Brand#11")
-            .select(F.col("p_partkey").alias("sv"))
-        )
-        out = (
-            _pagerank_local(und, seed_marks=seeds)
-            .orderBy(F.desc("rank_units"), "part")
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(und)
-        return out
-    edges = und.select(
-        F.col("pa").alias("v"), F.col("pb").alias("u")
-    ).unionByName(
-        und.select(F.col("pb").alias("v"), F.col("pa").alias("u"))
+    seeds = (
+        load_table(spark, sf_dir, "part")
+        .filter(F.col("p_brand") == "Brand#11")
+        .select(F.col("p_partkey").alias("sv"))
     )
-    edges = edges.persist()
-    deg = edges.groupBy("v").agg(F.count("*").cast("long").alias("d")).persist()
-    p = load_table(spark, sf_dir, "part").filter(
-        F.col("p_brand") == "Brand#11"
-    ).select(F.col("p_partkey").alias("sv"))
-    is_seed = F.col("sv").isNotNull()
-    marked = deg.join(
-        F.broadcast(p), deg.v == F.col("sv"), "left"
-    ).select("v", "d", is_seed.alias("seed")).persist()
-    e_src = (
-        edges.join(deg.select(F.col("v").alias("u"), "d"), "u")
-        .select("v", "u", "d")
-        .persist()
-    )
-    # Materialize the static tables once before the loop — the
-    # pagerank_copurchase treatment (optimization r18, guide §2.4/§5):
-    # per-round broadcast subqueries compile their own plans, so a lazy
-    # cache lets each one replay the co-purchase self-join from parquet.
-    e_src.count()
-    ranks = marked.select(
-        "v",
-        F.when(F.col("seed"), F.lit(_PR_R0))
-        .otherwise(0)
-        .cast("long")
-        .alias("r"),
-    )
-    prev = None
-    for _ in range(_PR_ROUNDS):
-        contrib = (
-            e_src.join(ranks.select(F.col("v").alias("u"), "r"), "u")
-            .select("v", F.expr("(r * 17) div (20 * d)").alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            marked.join(contrib, "v", "left")
-            .select(
-                "v",
-                (
-                    F.when(F.col("seed"), F.lit(_PR_TELEPORT))
-                    .otherwise(0)
-                    .cast("long")
-                    + F.coalesce(F.col("s"), F.lit(0))
-                ).alias("r"),
-            )
-        )
-        # pin each round, free its predecessor (CC lineage doctrine)
-        ranks = ranks.localCheckpoint(eager=True)
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = ranks
-    out = (
-        ranks.filter(F.col("r") > 0)
-        .select(F.col("v").alias("part"), F.col("r").alias("rank_units"))
-        .orderBy(F.desc("rank_units"), "part")
-    )
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    deg.unpersist()
-    marked.unpersist()
-    e_src.unpersist()
-    release_local_checkpoint(und)  # ADVICE r18: at-scale branch leaked it
-    if prev is not None:
-        release_local_checkpoint(prev)
-    return out
+    return _pagerank(copurchase_edges(spark, sf_dir, pinned=True), seeds)
 
 
 def _hits_oracle(rounds: int = 3) -> str:
@@ -2787,7 +2613,8 @@ def hits_hubs_authorities_purchases(
     engines (no sign split needed), sums ride HUGEINT ⟷
     decimal(38,0). Output is both final vectors in long format
     (kind, node, score). Scale: O(|E|) per round, bounded rounds —
-    the pagerank doctrine on a bipartite edge list."""
+    the pagerank doctrine on a bipartite edge list; below
+    _LOCAL_GRAPH_MAX_EDGES the rounds run in the single-task kernel."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
@@ -2806,11 +2633,13 @@ def hits_hubs_authorities_purchases(
     # a lazy cache lets the overlapping round-1 broadcast jobs each
     # replay the join+distinct edge construction from parquet.
     if e.count() <= _LOCAL_GRAPH_MAX_EDGES:
-        # bounded bipartite edge set: run the 3 alternating rounds in
-        # the single-task vectorized kernel (_LOCAL_GRAPH_MAX_EDGES;
-        # forced-path-pinned to the loop below)
         out = (
-            _hits_local(e, 3)
+            _single_task(
+                e,
+                ("c", "p"),
+                "kind string, node long, score_micro long",
+                partial(_hits_kernel, rounds=3),
+            )
             .orderBy("kind", F.desc("score_micro"), "node")
             .localCheckpoint(eager=True)
         )
@@ -3298,7 +3127,7 @@ def diameter_double_sweep_copurchase(
     algorithm caching doctrine), the turn vertex picked by the
     deterministic (hop DESC, vertex) order. Scale: 2 × 4 bounded
     rounds of Σdeg-work joins."""
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     sym = pairs.select(
         F.col("pa").alias("u"), F.col("pb").alias("v")
     ).union(
@@ -3314,6 +3143,7 @@ def diameter_double_sweep_copurchase(
         dist = seed_df.select(
             F.col("v"), F.lit(0).cast("long").alias("hop")
         ).localCheckpoint()
+        pins = [dist]
         frontier = dist
         for hop in range(1, 5):
             fr = frontier.select(F.col("v").alias("fv"))
@@ -3335,10 +3165,14 @@ def diameter_double_sweep_copurchase(
             # lazy 4-round DAG otherwise compounds to ~200 stages of
             # shuffle bookkeeping on a graph this small
             dist = dist.unionByName(nxt).localCheckpoint(eager=False)
+            pins.append(dist)
         far_rows = (
             dist.orderBy(F.desc("hop"), "v").limit(1).collect()
         )
         n_reached = dist.count()
+        # the result is built from driver values: no pin outlives them
+        for pinned in pins:
+            release_local_checkpoint(pinned)
         return far_rows[0], n_reached
 
     start = sym.agg(F.min("u").alias("v"))
@@ -3347,8 +3181,8 @@ def diameter_double_sweep_copurchase(
         sym.sparkSession.createDataFrame([(far1["v"],)], "v bigint")
     )
     start_v = start.collect()[0]["v"]
-    pairs.unpersist()
     sym.unpersist()
+    release_local_checkpoint(pairs)
     return spark.createDataFrame(
         [
             (

@@ -225,6 +225,55 @@ def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+def _netpbm(buf, magic: bytes, channels: int):
+    """Parse a binary NetPBM stream (``b"P5"`` gray, ``b"P6"`` RGB):
+    ``(width, height, raster)`` with the raw uint8 raster, ``channels``
+    bytes per pixel. The magic, maxval 255 and the raster size are
+    validated; anything else raises (fail-loud, not fake-succeed)."""
+    import numpy as np
+
+    b = bytes(buf)
+    if not b.startswith(magic + b"\n"):
+        raise ValueError(f"not a binary NetPBM ({magic.decode()}) stream")
+    dims_end = b.index(b"\n", 3)
+    hdr_end = b.index(b"\n", dims_end + 1)
+    dims = b[3:dims_end].split()
+    w, h = int(dims[0]), int(dims[1])
+    if int(b[dims_end + 1 : hdr_end]) != 255:
+        raise ValueError("unsupported maxval")
+    raster = np.frombuffer(b, dtype=np.uint8, offset=hdr_end + 1)
+    if raster.size != w * h * channels:
+        raise ValueError("raster size mismatch")
+    return w, h, raster
+
+
+def _wav(buf):
+    """Parse a canonical RIFF/WAVE stream (44-byte header, mono 16-bit
+    PCM): ``(sample_rate, samples)`` with the samples as int64. The
+    RIFF/WAVE magic, the fmt and data chunks, the encoding and the
+    sample block size are validated; anything else raises."""
+    import struct
+
+    import numpy as np
+
+    b = bytes(buf)
+    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE stream")
+    if b[12:16] != b"fmt ":
+        raise ValueError("missing fmt chunk")
+    fmt_len, audio_fmt, channels, rate = struct.unpack("<IHHI", b[16:28])
+    bits = struct.unpack("<H", b[34:36])[0]
+    if audio_fmt != 1 or channels != 1 or bits != 16 or fmt_len != 16:
+        raise ValueError("unsupported WAV encoding")
+    if b[36:40] != b"data":
+        raise ValueError("missing data chunk")
+    (data_len,) = struct.unpack("<I", b[40:44])
+    samples = np.frombuffer(b, dtype="<i2", offset=44, count=data_len // 2)
+    if samples.size * 2 != data_len:
+        raise ValueError("sample block size mismatch")
+    return rate, samples.astype(np.int64)
+
+
 def encode_pgm(doc_id: int) -> bytes:
     """Deterministic REAL PGM (NetPBM P5) image for a doc id: binary
     header + raw 8-bit raster. w/h/pixels are fixed functions of the
@@ -250,18 +299,7 @@ def decode_pgm_batch(payloads: pd.Series) -> pd.DataFrame:
 
     widths, heights, sums, npx = [], [], [], []
     for buf in payloads:
-        b = bytes(buf)
-        if not b.startswith(b"P5\n"):
-            raise ValueError("not a binary PGM (P5) stream")
-        hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
-        dims_line = b[3 : b.index(b"\n", 3)].split()
-        w, h = int(dims_line[0]), int(dims_line[1])
-        maxval = int(b[b.index(b"\n", 3) + 1 : hdr_end])
-        if maxval != 255:
-            raise ValueError("unsupported maxval")
-        raster = np.frombuffer(b, dtype=np.uint8, offset=hdr_end + 1)
-        if raster.size != w * h:
-            raise ValueError("raster size mismatch")
+        w, h, raster = _netpbm(buf, b"P5", 1)
         widths.append(w)
         heights.append(h)
         sums.append(int(raster.astype(np.int64).sum()))
@@ -365,31 +403,15 @@ def decode_wav_batch(payloads: pd.Series) -> pd.DataFrame:
     """REAL WAV decoder: validates RIFF/WAVE magic, parses the fmt
     chunk (PCM only), reads the int16 sample block with numpy and
     computes duration + amplitude statistics. Corrupt streams raise."""
-    import struct
-
     import numpy as np
 
     rates, nsamps, ssum, smax = [], [], [], []
     for buf in payloads:
-        b = bytes(buf)
-        if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-            raise ValueError("not a RIFF/WAVE stream")
-        if b[12:16] != b"fmt ":
-            raise ValueError("missing fmt chunk")
-        fmt_len, audio_fmt, channels, rate = struct.unpack("<IHHI", b[16:28])
-        bits = struct.unpack("<H", b[34:36])[0]
-        if audio_fmt != 1 or channels != 1 or bits != 16 or fmt_len != 16:
-            raise ValueError("unsupported WAV encoding")
-        if b[36:40] != b"data":
-            raise ValueError("missing data chunk")
-        (data_len,) = struct.unpack("<I", b[40:44])
-        samples = np.frombuffer(b, dtype="<i2", offset=44, count=data_len // 2)
-        if samples.size * 2 != data_len:
-            raise ValueError("sample block size mismatch")
+        rate, samples = _wav(buf)
         rates.append(rate)
         nsamps.append(samples.size)
-        ssum.append(int(samples.astype(np.int64).sum()))
-        smax.append(int(np.abs(samples.astype(np.int64)).max()))
+        ssum.append(int(samples.sum()))
+        smax.append(int(np.abs(samples).max()))
     return pd.DataFrame(
         {
             "sample_rate": pd.Series(rates, dtype="int32"),
@@ -734,18 +756,7 @@ def decode_ppm_batch(payloads: pd.Series) -> pd.DataFrame:
 
     widths, heights, rs, gs, bs, npx = [], [], [], [], [], []
     for buf in payloads:
-        b = bytes(buf)
-        if not b.startswith(b"P6\n"):
-            raise ValueError("not a binary PPM (P6) stream")
-        hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
-        dims_line = b[3 : b.index(b"\n", 3)].split()
-        w, h = int(dims_line[0]), int(dims_line[1])
-        maxval = int(b[b.index(b"\n", 3) + 1 : hdr_end])
-        if maxval != 255:
-            raise ValueError("unsupported maxval")
-        raster = np.frombuffer(b, dtype=np.uint8, offset=hdr_end + 1)
-        if raster.size != w * h * 3:
-            raise ValueError("raster size mismatch")
+        w, h, raster = _netpbm(buf, b"P6", 3)
         rgb = raster.reshape(-1, 3).astype(np.int64)
         widths.append(w)
         heights.append(h)
@@ -836,14 +847,8 @@ def silence_runs_batch(payloads: pd.Series) -> pd.DataFrame:
 
     nsil, longest, nruns, nsamp = [], [], [], []
     for buf in payloads:
-        b = bytes(buf)
-        if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-            raise ValueError("not a RIFF/WAVE stream")
-        import struct
-
-        (data_len,) = struct.unpack("<I", b[40:44])
-        samples = np.frombuffer(b, dtype="<i2", offset=44, count=data_len // 2)
-        silent = np.abs(samples.astype(np.int64)) < 256
+        _, samples = _wav(buf)
+        silent = np.abs(samples) < 256
         # run-length encode the boolean mask
         edges = np.flatnonzero(np.diff(silent.astype(np.int8)))
         bounds = np.concatenate(([0], edges + 1, [silent.size]))
@@ -948,13 +953,7 @@ def mean_pool_2x_batch(payloads: pd.Series) -> pd.DataFrame:
 
     pws, phs, sums = [], [], []
     for buf in payloads:
-        b = bytes(buf)
-        if not b.startswith(b"P5\n"):
-            raise ValueError("not a binary PGM (P5) stream")
-        hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
-        dims_line = b[3 : b.index(b"\n", 3)].split()
-        w, h = int(dims_line[0]), int(dims_line[1])
-        raster = np.frombuffer(b, dtype=np.uint8, offset=hdr_end + 1)
+        w, h, raster = _netpbm(buf, b"P5", 1)
         img = raster.reshape(h, w).astype(np.int64)
         pw, ph = w // 2, h // 2
         pooled = (
@@ -1047,15 +1046,7 @@ def pgm_histogram_batch(payloads: pd.Series) -> pd.DataFrame:
 
     rows_bin, rows_cnt, rows_idx = [], [], []
     for pos, buf in enumerate(payloads):
-        b = bytes(buf)
-        if not b.startswith(b"P5\n"):
-            raise ValueError("not a binary PGM (P5) stream")
-        hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
-        dims_line = b[3 : b.index(b"\n", 3)].split()
-        w, h = int(dims_line[0]), int(dims_line[1])
-        raster = np.frombuffer(b, dtype=np.uint8, offset=hdr_end + 1)
-        if raster.size != w * h:
-            raise ValueError("raster size mismatch")
+        _, _, raster = _netpbm(buf, b"P5", 1)
         counts = np.bincount(raster >> 4, minlength=16)
         rows_idx.extend([pos] * 16)
         rows_bin.extend(range(16))
@@ -1139,21 +1130,9 @@ def wav_energy_batch(payloads: pd.Series) -> pd.DataFrame:
     decode_wav_batch, then computes the exact sum of squared samples
     and the strict zero-crossing count (s_i·s_{i+1} < 0) — the
     features VAD/silence-trim stages run right after decode."""
-    import struct
-
-    import numpy as np
-
     nsamps, ssq, zc = [], [], []
     for buf in payloads:
-        b = bytes(buf)
-        if b[:4] != b"RIFF" or b[8:12] != b"WAVE" or b[36:40] != b"data":
-            raise ValueError("not a canonical RIFF/WAVE stream")
-        (data_len,) = struct.unpack("<I", b[40:44])
-        samples = np.frombuffer(
-            b, dtype="<i2", offset=44, count=data_len // 2
-        ).astype(np.int64)
-        if samples.size * 2 != data_len:
-            raise ValueError("sample block size mismatch")
+        _, samples = _wav(buf)
         nsamps.append(samples.size)
         ssq.append(int((samples * samples).sum()))
         zc.append(int(((samples[:-1] * samples[1:]) < 0).sum()))
@@ -1344,17 +1323,8 @@ def multimodal_pgm_sobel_energy(
         for pdf in batches:
             ids, ws, hs, ni, en = [], [], [], [], []
             for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                if not b.startswith(b"P5\n"):
-                    raise ValueError("not a binary PGM (P5) stream")
-                hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
-                dims = b[3 : b.index(b"\n", 3)].split()
-                w, h = int(dims[0]), int(dims[1])
-                img = (
-                    np.frombuffer(b, dtype=np.uint8, offset=hdr_end + 1)
-                    .astype(np.int64)
-                    .reshape(h, w)
-                )
+                w, h, raster = _netpbm(buf, b"P5", 1)
+                img = raster.astype(np.int64).reshape(h, w)
                 gx = (
                     (img[:-2, 2:] + 2 * img[1:-1, 2:] + img[2:, 2:])
                     - (img[:-2, :-2] + 2 * img[1:-1, :-2] + img[2:, :-2])
@@ -1472,19 +1442,8 @@ def multimodal_pgm_centroid_moments(
         for pdf in batches:
             ids, ws, hs, m00s, m10s, m01s = [], [], [], [], [], []
             for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                if not b.startswith(b"P5\n"):
-                    raise ValueError("not a binary PGM (P5) stream")
-                hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
-                dims = b[3 : b.index(b"\n", 3)].split()
-                w, h = int(dims[0]), int(dims[1])
-                img = (
-                    np.frombuffer(
-                        b, dtype=np.uint8, offset=hdr_end + 1
-                    )
-                    .astype(np.int64)
-                    .reshape(h, w)
-                )
+                w, h, raster = _netpbm(buf, b"P5", 1)
+                img = raster.astype(np.int64).reshape(h, w)
                 xs = np.arange(w, dtype=np.int64)
                 ys = np.arange(h, dtype=np.int64)
                 ids.append(int(doc_id))
@@ -1602,20 +1561,12 @@ def multimodal_wav_diff_energy(
     def diff_run(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
-        import struct
-
         import numpy as np
 
         for pdf in batches:
             ids, ns, es, ds = [], [], [], []
             for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                    raise ValueError("not a RIFF/WAVE stream")
-                (nbytes,) = struct.unpack("<I", b[40:44])
-                samples = np.frombuffer(
-                    b, dtype="<i2", offset=44, count=nbytes // 2
-                ).astype(np.int64)
+                _, samples = _wav(buf)
                 diff = np.diff(samples)
                 ids.append(int(doc_id))
                 ns.append(len(samples))
@@ -1722,15 +1673,7 @@ def multimodal_ppm_color_quantize(
         for pdf in batches:
             ids, npx, dbin, dcnt, nbins = [], [], [], [], []
             for did, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                if not b.startswith(b"P6\n"):
-                    raise ValueError("not a binary PPM (P6) stream")
-                hdr_end = b.index(b"\n", b.index(b"\n", 3) + 1)
-                dims_line = b[3 : b.index(b"\n", 3)].split()
-                w, h = int(dims_line[0]), int(dims_line[1])
-                raster = np.frombuffer(b, dtype=np.uint8, offset=hdr_end + 1)
-                if raster.size != w * h * 3:
-                    raise ValueError("raster size mismatch")
+                w, h, raster = _netpbm(buf, b"P6", 3)
                 rgb = raster.reshape(-1, 3).astype(np.int64)
                 bins = (
                     (rgb[:, 0] // 64) * 16
@@ -1819,20 +1762,12 @@ def multimodal_wav_zero_crossings(
     with_media = docs.mapInPandas(encode_run, "doc_id long, payload binary")
 
     def zcr_run(batches):
-        import struct
-
         import numpy as np
 
         for pdf in batches:
             ids, nsamp, ncross, nzero, firsts = [], [], [], [], []
             for did, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                    raise ValueError("not a RIFF/WAVE stream")
-                (data_len,) = struct.unpack("<I", b[40:44])
-                s = np.frombuffer(
-                    b, dtype="<i2", offset=44, count=data_len // 2
-                ).astype(np.int64)
+                _, s = _wav(buf)
                 prod = s[1:] * s[:-1]
                 cross = prod < 0
                 ids.append(int(did))

@@ -1,5 +1,11 @@
 """Parse `explain("formatted")` for plan-shape assertions.
 
+The engine delegates its physical layer to Catalyst (the reference
+hand-built Exchange.scala, SparkStrategies.scala, ParquetFilters.scala),
+so the tests assert that those mechanics engaged: filters pushed to the
+scan, columns pruned, small dims broadcast, no redundant shuffles,
+operators inside whole-stage codegen (SURVEY.md §4).
+
 Each helper answers one scale-critical question (reference parity:
 ParquetFilters.scala row-group pushdown, SparkStrategies.scala:68-110
 broadcast choice, Exchange.scala:35-183 shuffle insertion,

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from spark_lever_spark.plans import exchange_count, shuffle_join_count
+from tests.plans import exchange_count, shuffle_join_count
 
 
 @pytest.fixture(scope="module")

@@ -66,7 +66,7 @@ def test_cc_raises_when_iteration_budget_exhausted(spark, monkeypatch):
     # always converges)
     from spark_lever_spark.llm import graph
 
-    monkeypatch.setattr(graph, "_LOCAL_CC_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", -1)
     df = spark.createDataFrame([(i, i + 1) for i in range(40)], ["src", "dst"])
     with pytest.raises(RuntimeError, match="converge"):
         connected_components(df, max_iter=1)
@@ -86,7 +86,7 @@ def test_cc_star_loop_matches_local_kernel(spark, monkeypatch):
     path = [(i, i + 1) for i in range(63)]
     for g in (edges, path):
         local = _cc_spark(spark, g)
-        monkeypatch.setattr(graph, "_LOCAL_CC_MAX_EDGES", -1)
+        monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", -1)
         star = _cc_spark(spark, g)
         monkeypatch.undo()
         assert star == local == _union_find_components(n, g)
@@ -117,7 +117,7 @@ def test_cc_contracted_path_matches_union_find(spark, monkeypatch):
     from spark_lever_spark.llm import graph
 
     monkeypatch.setattr(graph, "_CONTRACT_MIN_EDGES", 0)
-    monkeypatch.setattr(graph, "_LOCAL_CC_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", -1)
     rng = random.Random(43)
     n = 200
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(150)]
@@ -131,7 +131,7 @@ def test_cc_contracted_path_matches_union_find(spark, monkeypatch):
     assert _cc_spark(spark, edges3, max_iter=10) == {i: 0 for i in range(64)}
     # contract-then-kernel: threshold between the contracted size and
     # the input size, so the contraction fires AND the kernel finishes
-    monkeypatch.setattr(graph, "_LOCAL_CC_MAX_EDGES", 40)
+    monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", 40)
     assert _cc_spark(spark, edges3, max_iter=10) == {i: 0 for i in range(64)}
     assert _cc_spark(spark, edges) == _union_find_components(n, edges)
 
@@ -165,3 +165,13 @@ def test_iterative_graph_kernels_match_distributed_loops(
         monkeypatch.undo()
         assert fast == slow, name
         assert len(fast) > 0, name
+
+
+def test_diameter_releases_its_pins(spark, sf_dir, rdds_left_by):
+    """The double-sweep diameter builds its one result row from driver
+    values, so no cached or checkpointed RDD of its sweeps may outlive
+    the call."""
+    from spark_lever_spark import registry
+
+    q = registry.all_queries()["diameter_double_sweep_copurchase"]
+    assert rdds_left_by(lambda: q.fn(spark, sf_dir).collect()) == []

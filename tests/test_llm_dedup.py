@@ -320,51 +320,29 @@ def test_minhash_bands_match_python_reference(spark, bands):
     ]
 
 
-def test_minhash_bands_connect_fallback_width_probe(spark, sf_dir):
-    """ADVICE r16 (low): the Spark Connect fallback (no sparkContext /
-    .rdd) must not force a full corpus shuffle when the file-backed
-    scan is already at least session-parallelism wide — inputFiles()
-    is the Connect-safe width probe. Narrow or non-file inputs still
-    repartition (the k-hash signature map needs the parallelism)."""
+def test_minhash_bands_spreads_only_a_narrow_scan(spark, sf_dir):
+    """The signature map spreads its input to the session's parallelism
+    only when the scan is narrower (catalog.spread_scan): a file listing
+    that estimates at least as many splits as the parallelism is not
+    repartitioned, a narrower one is, and the signatures are identical
+    either way."""
     from spark_lever_spark.catalog import load_table
     from spark_lever_spark.llm.dedup import minhash_bands
+    from tests.plans import exchange_count
 
-    real = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # r19: the probe lives in catalog.spread_scan now; it resolves the
-    # parallelism target from sparkContext (reachable through this
-    # proxy — only .rdd is hidden), so the fake listing must be that
-    # wide for the "already wide" branch to engage.
-    par = spark.sparkContext.defaultParallelism
-
-    class ConnectLike:
-        """Delegating proxy that hides the classic introspection
-        surface (.rdd), driving minhash_bands into its fallback."""
-
-        def __init__(self, df, files):
-            self._df, self._files = df, files
-            self.repartition_calls = 0
-
-        def __getattr__(self, name):
-            if name == "rdd":
-                raise AttributeError("DataFrame.rdd unavailable (Connect)")
-            return getattr(self._df, name)
-
-        def inputFiles(self):
-            return self._files
-
-        def repartition(self, *a, **kw):
-            self.repartition_calls += 1
-            return self._df.repartition(*a, **kw)
-
-    # Wide file-backed scan: probe says >= par files -> NO shuffle.
-    wide = ConnectLike(real, [f"f{i}.parquet" for i in range(par)])
-    sig, _ = minhash_bands(wide, k=16, bands=4)
-    assert wide.repartition_calls == 0
-    # Narrow / non-file input (inputFiles empty): shuffle engages.
-    narrow = ConnectLike(real, [])
-    sig_n, _ = minhash_bands(narrow, k=16, bands=4)
-    assert narrow.repartition_calls == 1
-    # Fallback is a pure physical choice: identical signatures.
-    a = sorted((r.doc_id, tuple(r.sig)) for r in sig.collect())
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # one small file: it estimates one split, narrower than the session
+    sig_n, _ = minhash_bands(docs, k=16, bands=4)
+    # at 1 KB per split the same listing estimates thousands of splits
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1k")
+    try:
+        sig_w, _ = minhash_bands(docs, k=16, bands=4)
+    finally:
+        spark.conf.set(conf, old)
+    assert exchange_count(sig_n) == 1
+    assert exchange_count(sig_w) == 0
+    a = sorted((r.doc_id, tuple(r.sig)) for r in sig_w.collect())
     b = sorted((r.doc_id, tuple(r.sig)) for r in sig_n.collect())
     assert a == b

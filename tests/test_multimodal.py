@@ -153,3 +153,34 @@ def test_au_decoder_fails_loud_and_big_endian():
     # a little-endian misread of 0xFC8C != -884
     out = decode_au_batch(pd.Series([good]))
     assert int(out["n_samples"][0]) == 9 % 50 + 10
+
+
+def test_every_netpbm_and_wav_reader_validates_its_input():
+    """Every batch reader of NetPBM or WAV payloads parses through the
+    one strict parser: a wrong maxval, a truncated raster or a
+    truncated sample block raises in each of them."""
+    import pandas as pd
+    import pytest
+
+    from spark_lever_spark.llm import multimodal as mm
+
+    pgm, ppm, wav = mm.encode_pgm(37), mm.encode_ppm(37), mm.encode_wav(91)
+    bad_images = {
+        b"P5": [pgm.replace(b"\n255\n", b"\n254\n", 1), pgm[:-5]],
+        b"P6": [ppm.replace(b"\n255\n", b"\n254\n", 1), ppm[:-5]],
+    }
+    readers = {
+        b"P5": [mm.decode_pgm_batch, mm.mean_pool_2x_batch, mm.pgm_histogram_batch],
+        b"P6": [mm.decode_ppm_batch],
+    }
+    for magic, fns in readers.items():
+        for fn in fns:
+            fn(pd.Series([pgm if magic == b"P5" else ppm]))
+            for bad in bad_images[magic]:
+                with pytest.raises(ValueError):
+                    fn(pd.Series([bad]))
+    for fn in (mm.decode_wav_batch, mm.silence_runs_batch, mm.wav_energy_batch):
+        fn(pd.Series([wav]))
+        for bad in (wav[:-3], wav[:22] + b"\x02" + wav[23:]):  # 2 channels
+            with pytest.raises(ValueError):
+                fn(pd.Series([bad]))

@@ -11,7 +11,7 @@ import re
 from pyspark.sql import functions as F
 
 from spark_lever_spark import registry
-from spark_lever_spark.plans import (
+from tests.plans import (
     broadcast_join_count,
     exchange_count,
     nested_loop_join_count,
@@ -123,14 +123,14 @@ def test_asof_join_pays_one_data_shuffle(spark, sf_dir):
     df = ALL["asof_purchase_last_view"].fn(spark, sf_dir)
     assert exchange_count(df) <= 2
     assert shuffle_join_count(df) == 0
-    from spark_lever_spark.plans import nested_loop_join_count
+    from tests.plans import nested_loop_join_count
     assert nested_loop_join_count(df) == 0
 
 
 def test_range_join_bucketed_avoids_nested_loop(spark, sf_dir):
     # the bucketed rewrite must turn the interval predicate into a
     # hash-joinable equi-key: zero BNL/cartesian operators allowed
-    from spark_lever_spark.plans import nested_loop_join_count
+    from tests.plans import nested_loop_join_count
     df = ALL["range_join_views_before_purchase"].fn(spark, sf_dir)
     assert nested_loop_join_count(df) == 0
     assert broadcast_join_count(df) + shuffle_join_count(df) >= 1
@@ -142,7 +142,7 @@ def test_q20_co_partitioned_agg_join(spark, sf_dir):
     # 1 presentation sort, nothing for the join itself
     df = ALL["q20_potential_promotion"].fn(spark, sf_dir)
     assert exchange_count(df) <= 3
-    from spark_lever_spark.plans import nested_loop_join_count
+    from tests.plans import nested_loop_join_count
     assert nested_loop_join_count(df) == 0
 
 
@@ -162,7 +162,7 @@ def test_minhash_lsh_band_join_is_equi_hash(spark, sf_dir):
     # property that makes minhash dedup 100 TB-viable.
     from spark_lever_spark.catalog import load_table
     from spark_lever_spark.llm.dedup import lsh_candidate_pairs
-    from spark_lever_spark.plans import nested_loop_join_count
+    from tests.plans import nested_loop_join_count
 
     # r19: the registered query pins its result eagerly (lineage
     # truncated) so the LSH signature persist can be released before
@@ -184,7 +184,7 @@ def test_cc_half_rounds_are_single_window_shuffles(spark, sf_dir):
     # grouping node (window min) + a distinct — if a refactor introduces
     # a join or extra exchanges, the O(log n)-round cost model breaks
     from spark_lever_spark.llm.graph import _large_star, _small_star
-    from spark_lever_spark.plans import nested_loop_join_count
+    from tests.plans import nested_loop_join_count
 
     edges = spark.range(0, 200).selectExpr("id AS u", "id + 1 AS v")
     for half in (_large_star(edges), _small_star(edges)):
@@ -200,7 +200,7 @@ def test_llm_blocked_joins_never_cartesian(spark, sf_dir):
     # with the similarity predicate as residual filter — a refactor
     # that degrades any of them to BroadcastNestedLoop/Cartesian would
     # be quadratic at 100 TB
-    from spark_lever_spark.plans import nested_loop_join_count
+    from tests.plans import nested_loop_join_count
     for name in (
         "dedup_ngram_jaccard",
         "dedup_embedding_cosine",
@@ -300,7 +300,7 @@ def test_reservoir_per_key_prunes_before_shuffle(spark, sf_dir):
     """rank<=k must be pushed into a WindowGroupLimit below the
     exchange so each map task ships only k rows per group — the
     difference between shuffling O(k x groups) and the whole table."""
-    from spark_lever_spark.plans import formatted_plan
+    from tests.plans import formatted_plan
 
     df = ALL["reservoir_per_key"].fn(spark, sf_dir)
     plan = formatted_plan(df)
@@ -320,7 +320,7 @@ def test_mergeable_rollup_reuses_partials(spark, sf_dir):
     """Daily stats must derive from the hourly layer: two aggregation
     exchanges (hour grain, day grain) + presentation sort; the raw
     events scan happens exactly once."""
-    from spark_lever_spark.plans import formatted_plan
+    from tests.plans import formatted_plan
 
     import re
 
@@ -487,7 +487,7 @@ def test_concat_pack_data_shuffles_bounded(spark, sf_dir):
     # the per-source cumsum window must be bucketed, never source-only
     import re
 
-    from spark_lever_spark.plans import formatted_plan
+    from tests.plans import formatted_plan
 
     specs = re.findall(r"windowspecdefinition\(([^)]*)", formatted_plan(df))
     big = [s for s in specs if "doc_id" in s]
@@ -512,7 +512,7 @@ def test_global_rank_windows_partitioned_by_bin(spark, sf_dir):
     attach."""
     import re
 
-    from spark_lever_spark.plans import formatted_plan
+    from tests.plans import formatted_plan
 
     for name in (
         "window_ntile_quartiles",
@@ -577,7 +577,7 @@ def test_peak_concurrency_window_is_day_bucketed(spark, sf_dir):
     event_type."""
     import re
 
-    from spark_lever_spark.plans import formatted_plan
+    from tests.plans import formatted_plan
 
     df = ALL["peak_concurrency_by_type"].fn(spark, sf_dir)
     specs = re.findall(r"windowspecdefinition\(([^)]*)", formatted_plan(df))
@@ -653,7 +653,7 @@ def test_round17_blocking_audit_sample_pairs_via_lang_hash_join(
     the five scalar metric attaches are aggregate-derived broadcast
     crosses, which are the only nested loops in the plan."""
     from spark_lever_spark.llm.dedup import _er_lsh_blocking_audit_plan
-    from spark_lever_spark.plans import formatted_plan
+    from tests.plans import formatted_plan
 
     # r19: the registered query pins its 1-row result eagerly; the
     # join shapes are pinned on the extracted lazy builder (the kmeans
@@ -677,7 +677,7 @@ def test_round17_kmeans_refine_broadcasts_centroids(spark, sf_dir):
     eagerly checkpointed k-row result with truncated lineage, so its
     caches can be unpersisted before return — ADVICE r17)."""
     from spark_lever_spark.llm.similarity import _kmeans_lloyd_refine_plan
-    from spark_lever_spark.plans import formatted_plan
+    from tests.plans import formatted_plan
 
     df, q, a1 = _kmeans_lloyd_refine_plan(spark, sf_dir)
     try:
@@ -717,7 +717,7 @@ def test_round18_bloom_audit_probe_is_broadcast_only(spark, sf_dir):
     side is the small side by construction) — no corpus-grain shuffle
     join anywhere; the 1-row filter-size attach and the final metric
     assembly are the only nested loops."""
-    from spark_lever_spark.plans import formatted_plan
+    from tests.plans import formatted_plan
 
     df = ALL["decontaminate_bloom_ngram_audit"].fn(spark, sf_dir)
     assert shuffle_join_count(df) == 0
@@ -730,7 +730,7 @@ def test_round18_ivf_recall_curve_broadcasts_panel(spark, sf_dir):
     """IVF recall curve: the fixed query panel and the centroid table
     ride broadcasts; per-query top-k is a WindowGroupLimit (k rows per
     query reach the shuffle, not the Q x N cross)."""
-    from spark_lever_spark.plans import formatted_plan
+    from tests.plans import formatted_plan
 
     df = ALL["ann_ivf_nprobe_recall_curve"].fn(spark, sf_dir)
     plan = formatted_plan(df)

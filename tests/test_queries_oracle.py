@@ -8,7 +8,7 @@ The frame each test builds is also audited:
 - every query leaves no new entry in the temp directory and no active
   streaming query, and a streaming query leaves no new temp view;
 - every batch query's plan (streaming queries run a drain to build
-  theirs) is checked for the scale hazards in ``plans.inspect``: no
+  theirs) is checked for the scale hazards in ``tests/plans.py``: no
   single-partition funnel over raw rows, no nested-loop join over raw
   rows unless whitelisted below, and a file scan unless the query is
   declared pinned below.
@@ -23,7 +23,7 @@ from contextlib import contextmanager
 import pytest
 
 from spark_lever_spark import registry
-from spark_lever_spark.plans.inspect import (
+from tests.plans import (
     has_file_scan,
     nested_loop_hazards,
     single_partition_scale_hazards,
