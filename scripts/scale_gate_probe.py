@@ -10,7 +10,7 @@ The synthetic graph is a deterministic path-with-chords: edge i joins
 parts (i, i+1) (a 2.5M-node path, worst case for contraction depth)
 plus every 1000th node gets a chord to node 0 (so the component is
 re-joined fast and the star loop has real work). Every edge appears
-in exactly two distinct orders, passing the min_support=2 filter.
+in exactly two distinct orders, passing the support >= 2 filter.
 
 Usage: python scripts/scale_gate_probe.py [n_edges]   (default 2.5M)
 Writes timings to stdout.
@@ -30,6 +30,7 @@ WORKDIR = "/tmp/scale_gate_probe"
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from spark_lever_spark.catalog import checkpoint
     from spark_lever_spark.session import get_session
     from spark_lever_spark.llm import graph
 
@@ -98,7 +99,7 @@ def main() -> None:
     # natural path (contraction + star loop / kernel finisher on the
     # contracted graph), then the kernel forced DIRECTLY on the raw
     # edges (no contraction) for the timing comparison.
-    pairs = und.localCheckpoint(eager=True)
+    pairs = checkpoint(und)
     cc_nat, t_nat = timed(
         "connected_components natural (contract gate decides)",
         lambda: sorted(

@@ -8,6 +8,10 @@ get_session's 8 GB driver but OOMed a vanilla session's codegen; only
 this sweep exposed it (fixed by reformulating relationally). Run it
 before trusting a query that only the tuned test session has run.
 
+A query is also RED when it leaves a pin behind that its returned
+frame does not read (``tests.plans.PinAudit``: a cached or checkpointed
+RDD, or a CacheManager entry).
+
 Usage: python scripts/vanilla_sweep.py [sf_dir]   (default sf0.01)
 """
 
@@ -26,6 +30,7 @@ def main() -> None:
 
     import __spark_entry__ as e
     from tests.oracle import compare, duckdb_con
+    from tests.plans import PinAudit
 
     spark = SparkSession.builder.master("local[8]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -34,8 +39,12 @@ def main() -> None:
     bad: list[tuple[str, str]] = []
     t0 = time.time()
     for name, fn in qs.items():
+        pins = PinAudit(spark)
         try:
-            compare(fn(spark, sf_dir), con.execute(osql[name]).df(), name)
+            df = fn(spark, sf_dir)
+            compare(df, con.execute(osql[name]).df(), name)
+            stray = pins.stray(df)
+            assert not stray, f"left {stray} pinned that its frame does not read"
         except Exception as exc:  # noqa: BLE001 — report every red
             bad.append((name, f"{type(exc).__name__}: {str(exc)[:200]}"))
             print("RED", name, bad[-1][1], flush=True)

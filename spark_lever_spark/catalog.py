@@ -5,12 +5,25 @@ Mirrors the reference's data-source layer conceptually
 scans are ``spark.read.parquet`` so Catalyst gets filter pushdown,
 column pruning and partition discovery for free; the schema comes
 from a parquet footer, so building a scan runs no Spark job.
+
+The catalog also owns every pin a query makes on what it scans:
+``pin`` (a persist), ``checkpoint`` (a ``localCheckpoint``) and
+``release``. A pin is recorded in the pin scope open in the calling
+context, which the registry opens around each query (``pin_scope``);
+when the query returns or raises, the scope releases every persist and
+every checkpoint the returned frame does not read, so no query body
+frees anything at its end. Outside a scope pins are not recorded and
+last until released or garbage-collected.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from contextvars import ContextVar
+from typing import TypeVar
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -254,3 +267,102 @@ def spread_scan(df: DataFrame, key: str | None = None) -> DataFrame:
     if _scan_width_estimate(df) >= par:
         return df
     return df.repartition(par, key) if key else df.repartition(par)
+
+
+# The pins of the scope open in this context, as (frame, is a
+# checkpoint) pairs; None outside a scope. A context variable, not a
+# global, because queries run on parallel threads (each thread starts
+# with an empty context) and no scope may see another's pins.
+_PINS: ContextVar[list[tuple[DataFrame, bool]] | None] = ContextVar(
+    "pins", default=None
+)
+
+
+def _record(df: DataFrame, checkpointed: bool) -> DataFrame:
+    pins = _PINS.get()
+    if pins is not None:
+        pins.append((df, checkpointed))
+    return df
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (``MEMORY_AND_DISK``: a pin spills rather than
+    recomputes) until ``release`` or the end of the pin scope."""
+    return _record(df.persist(StorageLevel.MEMORY_AND_DISK), False)
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``: the returned frame reads the blocks
+    of one RDD, so lineage is truncated. Its blocks are the only copy of
+    the data; the pin scope keeps them past its end only when the
+    returned frame reads them. A lazy checkpoint the returned frame
+    reads must not read another checkpoint of the scope, which is freed
+    before it is computed."""
+    return _record(df.localCheckpoint(eager=eager), True)
+
+
+def _checkpoint_rdd(df: DataFrame):
+    # a checkpoint's blocks belong to the RDD behind its LogicalRDD
+    # plan, not to the cache: ``unpersist`` is a no-op for it
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
+def _free(df: DataFrame, checkpointed: bool) -> None:
+    if checkpointed:
+        _checkpoint_rdd(df).unpersist(False)
+    else:
+        df.unpersist()
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks of the pin or checkpoint ``df`` now — for the
+    per-round frees of an iterative loop; the pin scope frees the rest.
+    Neither ``df`` nor a frame derived from it may run again after a
+    checkpoint is released: nothing can recompute its blocks."""
+    pins = _PINS.get()
+    kinds = {c for d, c in pins or () if d is df} or {not df.is_cached}
+    if pins:
+        pins[:] = [p for p in pins if p[0] is not df]
+    for checkpointed in kinds:
+        _free(df, checkpointed)
+
+
+def _rdds_read_by(df: DataFrame) -> set[int]:
+    """The ids of the RDDs the LogicalRDD leaves of ``df``'s analyzed
+    plan read."""
+    it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    ids = set()
+    while it.hasNext():
+        leaf = it.next()
+        if leaf.nodeName() == "LogicalRDD":
+            ids.add(leaf.rdd().id())
+    return ids
+
+
+T = TypeVar("T")
+
+
+def pin_scope(fn: Callable[..., T], *args) -> T:
+    """Call ``fn(*args)`` in a new pin scope. When it returns or raises,
+    release every pin made in the scope, and every checkpoint but those
+    that a LogicalRDD leaf of the returned frame reads."""
+    pins: list[tuple[DataFrame, bool]] = []
+    token = _PINS.set(pins)
+    out = None
+    try:
+        out = fn(*args)
+        return out
+    finally:
+        _PINS.reset(token)
+        read = (
+            _rdds_read_by(out)
+            if isinstance(out, DataFrame) and any(c for _, c in pins)
+            else set()
+        )
+        for df, checkpointed in pins:
+            if not checkpointed:
+                df.unpersist()
+                continue
+            rdd = _checkpoint_rdd(df)
+            if rdd.id() not in read:
+                rdd.unpersist(False)

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_lever_spark.catalog import load_table
+from spark_lever_spark.catalog import checkpoint, load_table, pin
 from spark_lever_spark.registry import register
 
 # Benchmark membership and sampling use the same engine-portable affine
@@ -1286,18 +1286,15 @@ def grouped_split_no_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "split",
         F.when(b < 8, "train").when(b == 8, "val").otherwise("test"),
     )
-    ua = (
-        assigned.groupBy("user_id", "split")
-        .agg(F.count("*").alias("n_events"))
-        .persist()
-    )
+    ua = pin(assigned.groupBy("user_id", "split").agg(F.count("*").alias("n_events")))
     leak = (
         ua.groupBy("user_id")
         .agg(F.count("*").alias("ns"))
         .filter(F.col("ns") > 1)
         .agg(F.count("*").alias("n_leaky_users"))
     )
-    out = (
+    # eager pin (3 rows)
+    return checkpoint(
         ua.groupBy("split")
         .agg(
             F.count("*").alias("n_users"),
@@ -1306,12 +1303,7 @@ def grouped_split_no_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(leak))
         .select("split", "n_users", "n_events", "n_leaky_users")
         .orderBy("split")
-        # eager pin (3 rows), then release the (user, split) persist
-        # (r19 cache-leak audit)
-        .localCheckpoint(eager=True)
     )
-    ua.unpersist()
-    return out
 
 
 @register(
@@ -2084,21 +2076,18 @@ def greedy_coverage_doc_selection(
     <= K docs' shingles) covered set — broadcast-sized by construction
     — plus one count aggregation; the per-round argmax is a 1-row
     TakeOrdered. Driver materializes exactly K result rows."""
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
     # Bound the cached partition count to the session's real
     # parallelism: a 200-partition vanilla-session distinct otherwise
     # caches 200 slivers and every one of the K rounds' stages pays a
     # 200-task scheduling storm (measured 65 s -> ~15 s at sf0.01).
     par = spark.sparkContext.defaultParallelism
-    doc_sh = (
+    doc_sh = pin(
         docs.select(
             "doc_id", F.explode(_shingles3(F.col("text"))).alias("shingle")
         )
         .distinct()
         .coalesce(par)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     selected: list[int] = []
     rows = []
@@ -2142,7 +2131,6 @@ def greedy_coverage_doc_selection(
         # count action per round
         cum += gain
         rows.append((r, doc_id, gain, cum))
-    doc_sh.unpersist()
     return spark.createDataFrame(
         rows,
         "selection_rank int, doc_id long, gain long, covered_cum long",

@@ -49,7 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_lever_spark.catalog import load_table, spread_scan
+from spark_lever_spark.catalog import checkpoint, load_table, pin, spread_scan
 from spark_lever_spark.llm.curation import _SH3_CTE, _shingles3
 from spark_lever_spark.registry import register
 
@@ -528,25 +528,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     that matters and its keys are uniformly-distributed digests.
     """
     docs = load_table(spark, sf_dir, "documents")
-    rel: list = []
-    out = (
-        lsh_candidate_pairs(docs, k=32, bands=8, releases=rel)
-        .orderBy("id_a", "id_b")
-        # eager pin, then release the signature persist (r19: no
-        # persisted relation may survive a query's return)
-        .localCheckpoint(eager=True)
+    return checkpoint(
+        lsh_candidate_pairs(docs, k=32, bands=8).orderBy("id_a", "id_b")
     )
-    for cached in rel:
-        cached.unpersist()
-    return out
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame,
-    k: int = 32,
-    bands: int = 8,
-    releases: list | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame, k: int = 32, bands: int = 8) -> DataFrame:
     """Distinct LSH candidate pairs ``(id_a, id_b, est_jaccard)`` for
     any ``(bands, k // bands)`` banding — the shared core of the fixed
     and tuned registry queries.
@@ -563,17 +550,9 @@ def lsh_candidate_pairs(
     # re-attach sides), so without a persist the k-hash signature map
     # — the pipeline's expensive stage — runs three times (the r16
     # containment-fix recompute class). Corpus-linear, spills to disk.
-    # Release contract (without it the signature persist outlived
-    # every query that built it): the returned frame is lazy, so there is no
-    # post-action point inside this helper to unpersist from. Callers
-    # pass ``releases`` and unpersist its entries once their own
-    # result is pinned (eager localCheckpoint or a CC pass that
-    # materializes the pairs); every in-repo consumer now does.
-    from pyspark import StorageLevel
-
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    if releases is not None:
-        releases.append(sig)
+    # The returned frame is lazy: the pin lasts until the caller's pin
+    # scope ends, after the caller has pinned or collected its result.
+    sig = pin(sig)
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
@@ -705,9 +684,8 @@ def dedup_minhash_lsh_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     b, r = tune_lsh_banding(
         docs, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=150
     )
-    rel: list = []
-    out = (
-        lsh_candidate_pairs(docs, k=32, bands=b, releases=rel)
+    return checkpoint(
+        lsh_candidate_pairs(docs, k=32, bands=b)
         .select(
             F.lit(b).alias("bands"),
             F.lit(r).alias("rows_per_band"),
@@ -716,12 +694,7 @@ def dedup_minhash_lsh_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
             "est_jaccard",
         )
         .orderBy("id_a", "id_b")
-        # eager pin, then release the signature persist (r19)
-        .localCheckpoint(eager=True)
     )
-    for cached in rel:
-        cached.unpersist()
-    return out
 
 
 @register(
@@ -1235,15 +1208,13 @@ def dedup_shingle_containment(
     # candidate index) — without materialization the shingle explode
     # re-runs per consumer (r16 A/B: 8.6 -> 2.5 s warm at sf0.1,
     # identical output). Both tables are corpus-linear;
-    # MEMORY_AND_DISK spills rather than OOMs at cluster scale.
-    from pyspark import StorageLevel
-
-    base = docs.select("doc_id", "lang", shingles.alias("sh")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # a pin spills rather than OOMs at cluster scale.
+    base = pin(docs.select("doc_id", "lang", shingles.alias("sh")))
+    tok = pin(
+        base.select(
+            "doc_id", "lang", F.size("sh").alias("n_sh"), F.explode("sh").alias("s")
+        )
     )
-    tok = base.select(
-        "doc_id", "lang", F.size("sh").alias("n_sh"), F.explode("sh").alias("s")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
     dfreq = tok.groupBy("s").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "s")
     pref = (
@@ -1283,7 +1254,10 @@ def dedup_shingle_containment(
     )
     n_common = F.size(F.array_intersect("sha", "shb"))
     n_a = F.size("sha")
-    out = (
+    # result is true-duplicate-pair-sized: pin it eagerly so the
+    # corpus-table pins release before the caller collects (the
+    # dbscan/personalized-pagerank pattern)
+    return checkpoint(
         cand.join(sa, "id_contained")
         .join(sb, "id_container")
         .where(F.lit(t_den) * n_common >= F.lit(t_num) * n_a)
@@ -1301,13 +1275,6 @@ def dedup_shingle_containment(
         )
         .orderBy("id_contained", "id_container")
     )
-    # result is true-duplicate-pair-sized: pin it eagerly so the
-    # persisted corpus tables release before the caller collects
-    # (the dbscan/personalized-pagerank pattern)
-    out = out.localCheckpoint(eager=True)
-    base.unpersist()
-    tok.unpersist()
-    return out
 
 
 @register(
@@ -2084,10 +2051,8 @@ def lincoln_petersen_dedup_estimate(
     # corpus-wide md5 shingle explode runs twice per detector
     # (optimization r18, guide §5 recompute elimination). Fingerprint
     # grain, spills to disk at scale.
-    from pyspark import StorageLevel
-
-    paras = paras.persist(StorageLevel.MEMORY_AND_DISK)
-    shing = shing.persist(StorageLevel.MEMORY_AND_DISK)
+    paras = pin(paras)
+    shing = pin(shing)
 
     def flagged(fps: DataFrame) -> DataFrame:
         dup_fp = (
@@ -2132,11 +2097,7 @@ def lincoln_petersen_dedup_estimate(
             " - union_flagged, 0) AS BIGINT)"
         ).alias("est_missed"),
     )
-    # 1-row result: pin eagerly, release the fingerprint caches.
-    out = out.localCheckpoint(eager=True)
-    paras.unpersist()
-    shing.unpersist()
-    return out
+    return checkpoint(out)  # 1 row: pin eagerly
 
 
 @register(
@@ -2271,8 +2232,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     b, _r = tune_lsh_banding(
         docs, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=150
     )
-    rel: list = []
-    pairs = lsh_candidate_pairs(docs, k=32, bands=b, releases=rel)
+    pairs = lsh_candidate_pairs(docs, k=32, bands=b)
     th = spark.range(5).selectExpr(
         "CAST(500 + id * 100 AS BIGINT) AS t_milli"
     )
@@ -2287,7 +2247,8 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t_milli")
         .agg(F.countDistinct("d").alias("n_docs"))
     )
-    out = (
+    # eager pin (5 rows)
+    return checkpoint(
         th.join(pairs_ct, "t_milli", "left")
         .join(docs_ct, "t_milli", "left")
         .selectExpr(
@@ -2296,12 +2257,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "COALESCE(n_docs, 0) AS n_docs",
         )
         .orderBy("threshold_milli")
-        # eager pin (5 rows), then release the LSH signature persist (r19)
-        .localCheckpoint(eager=True)
     )
-    for cached in rel:
-        cached.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2464,16 +2420,12 @@ def er_cross_source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     PairRDDFunctions.scala:491-649."""
     from spark_lever_spark.llm.graph import connected_components
 
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
-    rel: list = []
     # Bare distinct band pairs — signatures deliberately NOT attached
-    # yet (the whole point of the r19 reorder); the sig persist joins
-    # the release list exactly as in lsh_candidate_pairs.
+    # yet (the whole point of the r19 reorder); sig is pinned exactly
+    # as in lsh_candidate_pairs.
     sig, banded = minhash_bands(docs, k=32, bands=8)
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    rel.append(sig)
+    sig = pin(sig)
     ba, bb = banded.alias("a"), banded.alias("b")
     pairs = (
         ba.join(
@@ -2491,12 +2443,14 @@ def er_cross_source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tokenize the corpus ONCE and cache it: the tokenized base feeds
     # the metadata screen sides AND both token-array attach sides
     # (optimization r18, guide §5).
-    base = docs.select(
-        "doc_id",
-        "source",
-        "lang",
-        tokens_distinct(F.col("text")).alias("toks"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = pin(
+        docs.select(
+            "doc_id",
+            "source",
+            "lang",
+            tokens_distinct(F.col("text")).alias("toks"),
+        )
+    )
     # Metadata pre-filter BEFORE the token arrays attach (optimization
     # r18, guide §2.3 shuffle fewer bytes / §1.2 per-task work): the
     # old plan attached two ~100-token arrays to every screened pair
@@ -2563,12 +2517,6 @@ def er_cross_source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
     )
     comp = connected_components(edges, src="id_a", dst="id_b")
-    # connected_components eagerly materializes its edge input, so the
-    # tokenized corpus cache AND the LSH signature persist are
-    # released here (r19: no persisted relation survives the return).
-    base.unpersist()
-    for cached in rel:
-        cached.unpersist()
     meta = docs.select(F.col("doc_id").alias("node"), "source")
     return (
         comp.join(meta, "node")
@@ -2623,19 +2571,12 @@ def cross_source_duplication_matrix(
     LSH band equi-join + signature screen; the rollup is two keyed
     aggregations over a 20x20 source domain (a query constant at any
     corpus size)."""
-    rel: list = []
-    out = _cross_source_duplication_matrix_plan(
-        spark, sf_dir, rel
-    ).localCheckpoint(
-        eager=True  # eager pin (<= source-domain² rows), then release
-    )
-    for cached in rel:
-        cached.unpersist()
-    return out
+    # eager pin (<= source-domain² rows)
+    return checkpoint(_cross_source_duplication_matrix_plan(spark, sf_dir))
 
 
 def _cross_source_duplication_matrix_plan(
-    spark: SparkSession, sf_dir: str, releases: list
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Lazy pre-checkpoint matrix pipeline — extracted so the
     plan-contract suite can pin the join shapes (kmeans-builder
@@ -2643,7 +2584,7 @@ def _cross_source_duplication_matrix_plan(
     docs = load_table(spark, sf_dir, "documents")
     meta = docs.select("doc_id", "source")
     pairs = (
-        lsh_candidate_pairs(docs, releases=releases)
+        lsh_candidate_pairs(docs)
         .filter(F.col("est_jaccard") >= 0.8)
         .join(
             meta.select(
@@ -2743,24 +2684,20 @@ def er_lsh_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     10,000x the truth-side work — while hash-ordered top-K keeps the
     audit O(K^2) at any scale (the K-row selection is a TakeOrdered,
     never a global sort materialization)."""
-    rel: list = []
-    out = _er_lsh_blocking_audit_plan(spark, sf_dir, rel).localCheckpoint(
-        eager=True  # eager pin (1 row), then release the LSH sig persist
-    )
-    for cached in rel:
-        cached.unpersist()
-    return out
+    # eager pin (1 row)
+    return checkpoint(_er_lsh_blocking_audit_plan(spark, sf_dir))
 
 
-def _er_lsh_blocking_audit_plan(
-    spark: SparkSession, sf_dir: str, releases: list
-) -> DataFrame:
+def _er_lsh_blocking_audit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy pre-checkpoint audit pipeline — extracted so the
     plan-contract suite can pin the join shapes (the registered query
     returns an eagerly pinned 1-row result with truncated lineage —
     the kmeans-builder precedent, r19)."""
     docs = load_table(spark, sf_dir, "documents")
-    samp = (
+    # K rows feed five consumers (both pair sides, the semi-join
+    # filters, the count) — eager-materialize so the corpus-wide
+    # TakeOrdered runs once, not per consumer.
+    samp = checkpoint(
         docs.select(
             "doc_id",
             "source",
@@ -2769,10 +2706,6 @@ def _er_lsh_blocking_audit_plan(
         )
         .orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
         .limit(40)
-        # K rows feed five consumers (both pair sides, the semi-join
-        # filters, the count) — eager-materialize so the corpus-wide
-        # TakeOrdered runs once, not per consumer.
-        .localCheckpoint(eager=True)
     )
     a = samp.select(
         F.col("doc_id").alias("id_a"),
@@ -2795,7 +2728,7 @@ def _er_lsh_blocking_audit_plan(
     truth = allp.filter(8 * c >= 7 * union_n).select("id_a", "id_b")
     samp_ids = samp.select("doc_id")
     blocked = (
-        lsh_candidate_pairs(docs, releases=releases)
+        lsh_candidate_pairs(docs)
         .filter(F.col("est_jaccard") >= 0.75)
         .join(samp_ids.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi")
         .join(samp_ids.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi")

@@ -26,7 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_lever_spark.catalog import default_parallelism, load_table, spread_scan
+from spark_lever_spark.catalog import (
+    checkpoint,
+    default_parallelism,
+    load_table,
+    pin,
+    spread_scan,
+)
 from spark_lever_spark.functions.exact import DEC38
 from spark_lever_spark.llm.similarity import as_double, cosine
 from spark_lever_spark.registry import register
@@ -1010,7 +1016,6 @@ def mutual_nn_int8_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell id, and top-1 / mutuality are keyed windows and an equi
     self-join. All distances are exact int64 squared-L2 on the shared
     grid; ties break to the lower vec_id in both engines."""
-    from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1019,7 +1024,6 @@ def mutual_nn_int8_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe assignment, and both verify sides) — without the persist
     # each one replays the scan+quantize as its own serialized job
     # (optimization r18, guide §2.4/§5 recompute elimination).
-    # Released below once the top-1 neighbor table is pinned.
     b = spread_scan(
         emb.select("vec_id", as_double(F.col("embedding")).alias("l"))
     )
@@ -1033,7 +1037,7 @@ def mutual_nn_int8_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l", lambda v: F.floor(v / F.col("s") + 0.5).cast("long")
         ).alias("qv"),
     )
-    q = q.persist(StorageLevel.MEMORY_AND_DISK)
+    q = pin(q)
     kdf = q.agg(
         F.greatest(F.lit(16), F.floor(F.sqrt(F.count("*"))))
         .cast("long")
@@ -1094,10 +1098,9 @@ def mutual_nn_int8_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("va", "vb", "dist")
     )
     # Pin the N-row top-1 table once: the mutuality check consumes it
-    # TWICE (both sides of the reciprocal join) and the pin lets q's
-    # cache be released deterministically.
-    nn = nn.localCheckpoint(eager=True)
-    q.unpersist()
+    # TWICE (both sides of the reciprocal join), and the returned frame
+    # reads the pin instead of q.
+    nn = checkpoint(nn)
     m2 = nn.select(
         F.col("va").alias("va2"), F.col("vb").alias("vb2")
     )
@@ -1369,7 +1372,7 @@ def embedding_top_pc_power_iteration(
     # 5.17 s (2.08x gate) against 0.9 s once spread. No-op when the
     # input already scans at session parallelism (cluster scale).
     q = spread_scan(q)
-    g = (
+    g = checkpoint(
         q.select(
             F.explode(
                 F.flatten(
@@ -1390,7 +1393,6 @@ def embedding_top_pc_power_iteration(
         .select("e.i", "e.j", "e.p")
         .groupBy("i", "j")
         .agg(F.sum("p").alias("g"))
-        .localCheckpoint()
     )
     v = g.select("i").distinct().select(
         "i", F.lit(1000000).cast("long").alias("val")
@@ -1407,7 +1409,7 @@ def embedding_top_pc_power_iteration(
             )
         )
         m = u.agg(F.max(F.abs(F.col("u"))).alias("m"))
-        v = (
+        v = checkpoint(
             u.crossJoin(F.broadcast(m))
             .filter(F.col("m") > 0)
             .select(
@@ -1421,7 +1423,6 @@ def embedding_top_pc_power_iteration(
                 )
                 .alias("val"),
             )
-            .localCheckpoint()
         )
     va = v.select(F.col("i").alias("ai"), F.col("val").alias("aval"))
     vb = v.select(F.col("i").alias("bi"), F.col("val").alias("bval"))
@@ -1729,14 +1730,13 @@ def lof_outliers_int8_cells(
     centroid assignment is N·kc through a broadcast join, then one
     cell-keyed self-join for distances, two keyed windows/rollups,
     one neighbor re-join — √N cells keep both stages O(N^1.5)."""
-    from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     # Spread the single-partition scan and persist the quantized table
     # (FOUR consumers: the k count, centroid prefix, the N·kc probe
     # stage, and the cell re-join) — the mutual_nn_int8_ivf treatment
-    # (optimization r18, guide §2.4/§5). Released once knn is pinned.
+    # (optimization r18, guide §2.4/§5).
     b = spread_scan(
         emb.select("vec_id", as_double(F.col("embedding")).alias("l"))
     )
@@ -1750,11 +1750,7 @@ def lof_outliers_int8_cells(
             "l", lambda v: F.floor(v / F.col("s") + 0.5).cast("long")
         ).alias("qv"),
     )
-    q = q.persist(StorageLevel.MEMORY_AND_DISK)
-    # keep the persisted handle: `q` is rebound to the labeled join
-    # below, so unpersisting through `q` would release the wrong frame
-    # (the r19 cache-leak audit caught exactly that)
-    q_cached = q
+    q = pin(q)
     kdf = q.agg(
         F.greatest(F.lit(16), F.floor(F.sqrt(F.count("*"))))
         .cast("long")
@@ -1810,13 +1806,11 @@ def lof_outliers_int8_cells(
         .select("i", "j", "cell", dist.alias("dist"))
     )
     w = Window.partitionBy("i").orderBy("dist", "j")
-    knn = (
+    knn = checkpoint(
         pd_.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
         .select("i", "j", "cell", "dist")
-        .localCheckpoint()
     )
-    q_cached.unpersist()  # knn is pinned; nothing re-reads the quantized table
     kd = knn.groupBy(F.col("i").alias("node")).agg(
         F.max("dist").alias("kdist"), F.count("*").alias("cnt")
     )

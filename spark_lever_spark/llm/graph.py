@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import hashlib
 import heapq
-import logging
 from collections.abc import Callable
 from functools import partial, reduce
 
@@ -44,48 +43,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_lever_spark.catalog import load_table, spread_scan
+from spark_lever_spark.catalog import checkpoint, load_table, pin, release, spread_scan
 from spark_lever_spark.functions.exact import spark_sql
 from spark_lever_spark.registry import register
 
 
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Free a ``localCheckpoint``-ed DataFrame's cached blocks NOW.
-
-    ``df.unpersist()`` is a no-op for checkpoints (the blocks belong to
-    the internal RDD behind the LogicalRDD plan node, not the
-    cache-manager), and GC-driven cleanup can lag a whole registry
-    sweep — in a long one-session run the per-query blocks accumulate.
-    Reaches the internal RDD handle; degrades to the GC path if the
-    internals move.
-
-    CONTRACT (ADVICE r7): the released DataFrame must NEVER be
-    referenced again. A localCheckpoint truncates lineage, so the
-    released blocks are the ONLY copy of the data — any later action on
-    ``df`` (or a frame derived from it) fails with missing-block
-    errors. Callers release a frame only after every downstream
-    consumer has materialized (the per-round iteration pattern in this
-    module: checkpoint round N+1, then release round N)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception as exc:  # pragma: no cover - internals moved
-        # Degrade to the GC path, but LOUDLY at debug level so a real
-        # py4j/JVM failure is visible instead of silently swallowed
-        # (ADVICE r7). AttributeError / Py4JError both mean "the
-        # internal handle moved"; anything else still only costs
-        # delayed block cleanup, never correctness.
-        logging.getLogger(__name__).debug(
-            "release_local_checkpoint: falling back to GC cleanup: %r", exc
-        )
-
-
-def copurchase_edges(
-    spark: SparkSession, sf_dir: str, min_support: int = 2,
-    pinned: bool = False,
-) -> DataFrame:
+def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical support-thresholded co-purchase edge table
-    ``(pa, pb)`` with pa < pb and >= ``min_support`` co-orders — the
-    shared input of every graph-family query.
+    ``(pa, pb)`` with pa < pb and >= 2 co-orders — the shared input of
+    every graph-family query.
+
+    Multi-consumer queries (triangle family: 4-7 plan branches each
+    replaying the build) ``checkpoint`` it: the edge table is
+    graph-sized, orders of magnitude smaller than lineitem, so the pin
+    is cheap at any scale and each branch reads a LogicalRDD instead of
+    re-running the basket aggregation (guide §5 recompute elimination;
+    measured in a same-session A/B).
 
     Optimization r18 (guide §2.4 remove shuffles): built shuffle-lean
     as ONE orderkey aggregation collecting each order's distinct part
@@ -127,22 +100,12 @@ def copurchase_edges(
             )
         ).alias("e")
     ).select("e.pa", "e.pb")
-    out = (
+    return (
         pairs.groupBy("pa", "pb")
         .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= min_support)
+        .filter(F.col("c") >= 2)
         .select("pa", "pb")
     )
-    if pinned:
-        # Multi-consumer queries (triangle family: 4-7 plan branches
-        # each replaying the build) materialize the support-pruned
-        # edge table ONCE — it is graph-sized, orders of magnitude
-        # smaller than lineitem, so the checkpoint is cheap at any
-        # scale and each branch reads a LogicalRDD instead of
-        # re-running the basket aggregation (guide §5 recompute
-        # elimination; measured in a same-session A/B).
-        out = out.localCheckpoint(eager=True)
-    return out
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -315,13 +278,12 @@ def connected_components(
     # both sides of the check are distinct sets. _CONTRACT_MIN_EDGES
     # now gates on the RAW edge count — same order of magnitude for
     # every in-repo caller (their inputs are pre-deduplicated).
-    e0 = (
+    e0 = checkpoint(
         edges.select(
             F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
         )
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .filter(F.col("u") != F.col("v"))
-        .localCheckpoint()
     )
     n_edges = e0.count()
     # Hash-to-min pre-contraction (round 17; made conditional round 18).
@@ -347,24 +309,22 @@ def connected_components(
     contracted = n_edges >= _CONTRACT_MIN_EDGES
     if contracted:
         sym0 = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        lab = (
+        lab = checkpoint(
             sym0.groupBy("u")
             .agg(F.min("v").alias("mv"))
             .select("u", F.least("mv", F.col("u")).alias("m"))
-            .localCheckpoint()
         )
         la = lab.select(F.col("u").alias("ua"), F.col("m").alias("ma"))
         lb = lab.select(F.col("u").alias("ub"), F.col("m").alias("mb"))
-        e = (
+        e = checkpoint(
             e0.join(la, e0.u == F.col("ua"))
             .join(lb, e0.v == F.col("ub"))
             .select(F.col("ma").alias("u"), F.col("mb").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
         )
         n_edges = e.count()
-        release_local_checkpoint(e0)  # lab + contracted edges materialized
+        release(e0)  # lab + contracted edges materialized
     else:
         lab = None
         e = e0
@@ -373,17 +333,17 @@ def connected_components(
         # kernel replaces ~5 star rounds of 3 shuffles + 2 jobs each.
         # Eagerly pinned so the edge blocks release now and consumers
         # never replay the Python stage.
-        comp_c = _single_task(
-            e, ("u", "v"), "cnode long, component long", _cc_kernel
-        ).localCheckpoint()
-        release_local_checkpoint(e)
+        comp_c = checkpoint(
+            _single_task(e, ("u", "v"), "cnode long, component long", _cc_kernel)
+        )
+        release(e)
     else:
         # max_iter + 1 passes: detecting the fixpoint costs one
         # comparison round beyond the round that PRODUCES it, so a
         # graph converging exactly at the budget must not be reported
         # as divergent
         for _ in range(max_iter + 1):
-            e_next = _small_star(_large_star(e)).localCheckpoint()
+            e_next = checkpoint(_small_star(_large_star(e)))
             # Both sides are distinct sets, so equal cardinality plus
             # one-direction containment proves set equality — one
             # count (cheap agg) replaces one of the two exceptAll
@@ -391,7 +351,7 @@ def connected_components(
             # already differ.
             n_next = e_next.count()
             changed = n_next != n_edges or not e_next.exceptAll(e).isEmpty()
-            release_local_checkpoint(e)  # predecessor blocks free NOW
+            release(e)  # predecessor blocks free NOW
             e, n_edges = e_next, n_next
             if not changed:
                 break
@@ -563,7 +523,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins on vertex keys. The support threshold keeps the edge set
     sparse at every SF (the a-priori pruning a real co-purchase graph
     applies anyway)."""
-    e = copurchase_edges(spark, sf_dir, pinned=True)
+    e = checkpoint(copurchase_edges(spark, sf_dir))
     verts = (
         e.select(F.col("pa").alias("v"))
         .unionByName(e.select(F.col("pb").alias("v")))
@@ -651,24 +611,21 @@ def lpa_communities_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm/graph.py's CC. The oracle unrolls the identical 5 rounds.
     Below _LOCAL_GRAPH_MAX_EDGES the recursion runs in the single-task
     vectorized kernel (forced-path-pinned to the loop)."""
-    und = copurchase_edges(spark, sf_dir, pinned=True)
+    und = checkpoint(copurchase_edges(spark, sf_dir))
     if und.count() <= _LOCAL_GRAPH_MAX_EDGES:
-        out = (
+        return checkpoint(
             _single_task(
                 und,
                 ("pa", "pb"),
                 "community long, size long",
                 partial(_lpa_kernel, rounds=_LPA_ROUNDS),
-            )
-            .orderBy(F.desc("size"), "community")
-            .localCheckpoint(eager=True)
+            ).orderBy(F.desc("size"), "community")
         )
-        release_local_checkpoint(und)
-        return out
-    edges = und.select(
-        F.col("pa").alias("v"), F.col("pb").alias("u")
-    ).unionByName(und.select(F.col("pb").alias("v"), F.col("pa").alias("u")))
-    edges = edges.persist()
+    edges = pin(
+        und.select(F.col("pa").alias("v"), F.col("pb").alias("u")).unionByName(
+            und.select(F.col("pb").alias("v"), F.col("pa").alias("u"))
+        )
+    )
     # Materialize the edge cache once before the loop — the
     # pagerank_copurchase treatment (optimization r18, guide §2.4/§5):
     # per-round broadcast subqueries compile their own plans, so a lazy
@@ -692,25 +649,17 @@ def lpa_communities_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # pin each round's node-grain label vector, free its
         # predecessor (CC lineage doctrine)
-        labels = labels.localCheckpoint(eager=True)
+        labels = checkpoint(labels)
         if prev is not None:
-            release_local_checkpoint(prev)
+            release(prev)
         prev = labels
-    out = (
+    # Materialize the community-grain result (small), so the result
+    # reads none of the loop's pins
+    return checkpoint(
         labels.groupBy(F.col("lbl").alias("community"))
         .agg(F.count("*").alias("size"))
         .orderBy(F.desc("size"), "community")
     )
-    # Materialize the community-grain result (small) so the edge cache
-    # can be released NOW rather than at executor GC time — in a long
-    # one-session sweep over the whole registry the per-query edge
-    # blocks would otherwise accumulate.
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    release_local_checkpoint(und)  # ADVICE r18: at-scale branch leaked it
-    if prev is not None:
-        release_local_checkpoint(prev)
-    return out
 
 
 _KCORE_ROUNDS = 5
@@ -795,29 +744,21 @@ def kcore_peel_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     peeling TRAJECTORY (vertices/edges after each round), which pins
     both the algorithm and its convergence behavior. Below
     _LOCAL_GRAPH_MAX_EDGES the peel runs in the single-task kernel."""
-    e = copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    e = checkpoint(copurchase_edges(spark, sf_dir))
     if e.count() <= _LOCAL_GRAPH_MAX_EDGES:
-        out = (
+        return checkpoint(
             _single_task(
                 e,
                 ("pa", "pb"),
                 "round int, n_vertices long, n_edges long",
                 partial(_kcore_kernel, rounds=_KCORE_ROUNDS, k=_KCORE_K),
-            )
-            .orderBy("round")
-            .localCheckpoint(eager=True)
+            ).orderBy("round")
         )
-        release_local_checkpoint(e)
-        return out
-    # localCheckpoint (not bare persist) is load-bearing here: each
-    # round references its parent ~5x (degree union + two semi-joins),
-    # so without lineage truncation the plan tree grows 5^rounds and
-    # AQE's plan-string rendering alone OOMs the driver. The checkpoint
-    # blocks are released EXPLICITLY as soon as each round's successor
-    # is materialized (and all of them before return — the trajectory
-    # is already collected), so nothing lingers until executor GC in a
-    # long one-session sweep.
-    handles = [e]
+    # checkpoint (not pin) is load-bearing here: each round references
+    # its parent ~5x (degree union + two semi-joins), so without
+    # lineage truncation the plan tree grows 5^rounds and AQE's
+    # plan-string rendering alone OOMs the driver. Each round's blocks
+    # are released as soon as its successor is materialized.
     spark_rounds = []
     for i in range(1, _KCORE_ROUNDS + 1):
         deg = (
@@ -827,13 +768,12 @@ def kcore_peel_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= _KCORE_K).select("v")
-        e = (
+        prev, e = e, checkpoint(
             e.join(keep.select(F.col("v").alias("pa")), "pa", "left_semi")
             .join(keep.select(F.col("v").alias("pb")), "pb", "left_semi")
             .select("pa", "pb")
-            .localCheckpoint(eager=True)
         )
-        handles.append(e)
+        release(prev)
         verts = (
             e.select(F.col("pa").alias("v"))
             .unionByName(e.select(F.col("pb").alias("v")))
@@ -841,9 +781,6 @@ def kcore_peel_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             .count()
         )
         spark_rounds.append((i, verts, e.count()))
-        release_local_checkpoint(handles.pop(0))
-    for h in handles:
-        release_local_checkpoint(h)
     return spark.createDataFrame(
         spark_rounds, "round int, n_vertices long, n_edges long"
     ).orderBy("round")
@@ -1108,7 +1045,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task vectorized kernel (same integer arithmetic, pinned to
     the loop by a forced-path test); the distributed loop is the
     at-scale path."""
-    return _pagerank(copurchase_edges(spark, sf_dir, pinned=True))
+    return _pagerank(checkpoint(copurchase_edges(spark, sf_dir)))
 
 
 def _pagerank(und: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
@@ -1126,39 +1063,36 @@ def _pagerank(und: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
                     F.lit(-1).cast("long").alias("pb"),
                 )
             )
-        out = (
+        return checkpoint(
             _single_task(
                 inp,
                 ("pa", "pb"),
                 "part long, rank_units long",
                 partial(_pagerank_kernel, personalized=seeds is not None),
-            )
-            .orderBy(F.desc("rank_units"), "part")
-            .localCheckpoint(eager=True)
+            ).orderBy(F.desc("rank_units"), "part")
         )
-        release_local_checkpoint(und)
-        return out
-    edges = und.select(
-        F.col("pa").alias("v"), F.col("pb").alias("u")
-    ).unionByName(und.select(F.col("pb").alias("v"), F.col("pa").alias("u")))
-    edges = edges.persist()
-    deg = edges.groupBy("v").agg(F.count("*").cast("long").alias("d")).persist()
+    edges = pin(
+        und.select(F.col("pa").alias("v"), F.col("pb").alias("u")).unionByName(
+            und.select(F.col("pb").alias("v"), F.col("pa").alias("u"))
+        )
+    )
+    deg = pin(edges.groupBy("v").agg(F.count("*").cast("long").alias("d")))
     if seeds is None:
         marked, is_seed = deg, F.lit(True)
     else:
         # the seed restriction is one broadcast-sized dimension join
-        marked = (
-            deg.join(F.broadcast(seeds), deg.v == F.col("sv"), "left")
-            .select("v", "d", F.col("sv").isNotNull().alias("seed"))
-            .persist()
+        marked = pin(
+            deg.join(F.broadcast(seeds), deg.v == F.col("sv"), "left").select(
+                "v", "d", F.col("sv").isNotNull().alias("seed")
+            )
         )
         is_seed = F.col("seed")
     # static degree-annotated edge list: src degree rides the edge so
     # each round joins ONLY the rank vector
-    e_src = (
-        edges.join(deg.select(F.col("v").alias("u"), "d"), "u")
-        .select("v", "u", "d")
-        .persist()
+    e_src = pin(
+        edges.join(deg.select(F.col("v").alias("u"), "d"), "u").select(
+            "v", "u", "d"
+        )
     )
     # Materialize the static tables ONCE before the loop (optimization
     # r18, guide §2.4/§5 recompute elimination): the rounds' joins pick
@@ -1188,21 +1122,15 @@ def _pagerank(und: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
         # predecessor: round N+1's broadcast subquery then reads a
         # materialized LogicalRDD instead of replaying rounds 1..N
         # (the CC-loop lineage doctrine applied to the rank recursion).
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = checkpoint(ranks)
         if prev is not None:
-            release_local_checkpoint(prev)
+            release(prev)
         prev = ranks
-    out = (
+    return checkpoint(
         ranks.filter(F.col("r") > 0)
         .select(F.col("v").alias("part"), F.col("r").alias("rank_units"))
         .orderBy(F.desc("rank_units"), "part")
     )
-    out = out.localCheckpoint(eager=True)
-    for cached in (edges, deg, marked, e_src):
-        cached.unpersist()
-    release_local_checkpoint(und)  # ADVICE r18: at-scale branch leaked it
-    release_local_checkpoint(prev)
-    return out
 
 
 @register(
@@ -1269,52 +1197,21 @@ def dedup_cluster_quality_election(
     candidacy for mid-band pairs is LSH-governed by design (the whole
     point of banding selectivity). The oracle replays the ENTIRE tuning
     decision + banding + CC + election in SQL, so the hash certifies the
-    tuned pipeline end-to-end.
-
-    Candidate generation and election are separate helpers
-    (`_election_candidate_pairs` / `_election_from_components`) so the
-    LSH signature persist taken during candidate generation can be
-    released between the phases, once `connected_components` has
-    materialized its edge input."""
-    rel: list = []
-    pairs = _election_candidate_pairs(spark, sf_dir, releases=rel)
-    comp = connected_components(pairs, src="id_a", dst="id_b")
-    # connected_components eagerly materializes its edge input, so the
-    # LSH signature persist is released here (r19: no persisted
-    # relation survives the query's return).
-    for cached in rel:
-        cached.unpersist()
-    return _election_from_components(spark, sf_dir, comp)
-
-
-def _election_candidate_pairs(
-    spark: SparkSession, sf_dir: str, releases: list | None = None
-) -> DataFrame:
-    """Candidate-gen phase: tuner decision + banded LSH self-join +
-    est >= 0.5 filter (the dominant cost — ~3.7M surviving pairs at
-    sf0.1, a density property of the synthetic corpus)."""
-    from spark_lever_spark.llm.dedup import (
-        lsh_candidate_pairs,
-        tune_lsh_banding,
-    )
+    tuned pipeline end-to-end."""
+    from spark_lever_spark.llm.dedup import lsh_candidate_pairs, tune_lsh_banding
+    from spark_lever_spark.llm.textstats import token_count
 
     docs = load_table(spark, sf_dir, "documents")
     b, _r = tune_lsh_banding(
         docs, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=150
     )
-    return lsh_candidate_pairs(docs, k=32, bands=b, releases=releases).filter(
+    # the candidate pairs are the dominant cost: ~3.7M surviving pairs
+    # at sf0.1, a density property of the synthetic corpus
+    pairs = lsh_candidate_pairs(docs, k=32, bands=b).filter(
         F.col("est_jaccard") >= 0.5
     )
-
-
-def _election_from_components(
-    spark: SparkSession, sf_dir: str, comp: DataFrame
-) -> DataFrame:
-    """Election phase: one equi-join to the token counts + per-cluster
-    top-1 window (cluster-keyed, parallel across clusters)."""
-    from spark_lever_spark.llm.textstats import token_count
-
-    toks = load_table(spark, sf_dir, "documents").select(
+    comp = connected_components(pairs, src="id_a", dst="id_b")
+    toks = docs.select(
         "doc_id", token_count(F.col("text")).cast("long").alias("n_tok")
     )
     labeled = comp.join(toks, comp["node"] == toks["doc_id"]).select(
@@ -1386,20 +1283,16 @@ def bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION-dedup bounds states at |V| x hops, then takes min(hop) per
     vertex. Below _LOCAL_GRAPH_MAX_EDGES the frontier relaxation runs
     in the single-task vectorized kernel (forced-path-pinned)."""
-    e = copurchase_edges(spark, sf_dir, pinned=True)
+    e = checkpoint(copurchase_edges(spark, sf_dir))
     if e.count() <= _LOCAL_GRAPH_MAX_EDGES:
-        out = (
+        return checkpoint(
             _single_task(
                 e,
                 ("pa", "pb"),
                 "hop int, n_vertices long",
                 partial(_bfs_hops_kernel, max_hop=4),
-            )
-            .orderBy("hop")
-            .localCheckpoint(eager=True)
+            ).orderBy("hop")
         )
-        release_local_checkpoint(e)
-        return out
     dist, verts = _bfs_layers(e, lambda v: v.agg(F.min("v").alias("v")), 4)
     reached = dist.groupBy("hop").agg(F.count("*").alias("n_vertices"))
     n_verts = verts.agg(F.count("*").alias("nv"))
@@ -1422,41 +1315,38 @@ def _bfs_layers(
     e: DataFrame, pick_seeds: Callable[[DataFrame], DataFrame], max_hop: int
 ) -> tuple[DataFrame, DataFrame]:
     """Distributed multi-source BFS over the pinned ``(pa, pb)`` edge
-    frame ``e`` (consumed: its blocks are released). ``pick_seeds`` maps
+    frame ``e``. ``pick_seeds`` maps
     the ``(v)`` vertex frame to the ``(v)`` sources. Returns ``dist`` —
     ``(s, v, hop)`` for every vertex v within ``max_hop`` of source s —
     and the vertex frame. Synchronous frontier relaxation: each round
     is ONE frontier-to-adjacency equi-join plus an anti-join against
     the visited set, on the (source, vertex) state key; the number of
     rounds is the hop budget, a query constant, never a data size."""
-    # localCheckpoint per round: BFS is iterative, and without eager
+    # checkpoint per round: BFS is iterative, and without eager
     # lineage truncation round N re-executes rounds 1..N-1 (measured
     # 35s -> ~8s at sf0.001); same doctrine as connected_components.
-    sym = e.unionByName(
-        e.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
-    ).localCheckpoint()
-    release_local_checkpoint(e)  # ADVICE r18: sym is pinned; e is consumed
-    verts = sym.select(F.col("pa").alias("v")).distinct().localCheckpoint()
-    layer = (
-        pick_seeds(verts)
-        .select(F.col("v").alias("s"), F.col("v"), F.lit(0).alias("hop"))
-        .localCheckpoint()
+    sym = checkpoint(
+        e.unionByName(e.select(F.col("pb").alias("pa"), F.col("pa").alias("pb")))
+    )
+    verts = checkpoint(sym.select(F.col("pa").alias("v")).distinct())
+    layer = checkpoint(
+        pick_seeds(verts).select(
+            F.col("v").alias("s"), F.col("v"), F.lit(0).alias("hop")
+        )
     )
     layers = [layer]
     visited = frontier = layer.select("s", "v")
     for h in range(1, max_hop + 1):
-        nxt = (
+        nxt = checkpoint(
             frontier.join(sym, frontier["v"] == sym["pa"])
             .select("s", F.col("pb").alias("v"))
             .distinct()
             .join(visited, ["s", "v"], "left_anti")
             .select("s", "v", F.lit(h).alias("hop"))
-            .localCheckpoint()
         )
         layers.append(nxt)
         visited = visited.unionByName(nxt.select("s", "v"))
         frontier = nxt.select("s", "v")
-    release_local_checkpoint(sym)  # every layer is pinned eagerly
     return reduce(DataFrame.unionByName, layers), verts
 
 
@@ -1883,7 +1773,7 @@ def link_prediction_common_neighbors(
     exact integers). Top-20 via TakeOrdered. Scale: hub-bounded wedge
     work — cap degree (or sample neighborhoods) per the LSH-tuner
     doctrine if a 100 TB catalog has whale parts."""
-    pairs = copurchase_edges(spark, sf_dir, pinned=True)
+    pairs = checkpoint(copurchase_edges(spark, sf_dir))
     adj = pairs.select(
         F.col("pa").alias("u"), F.col("pb").alias("v")
     ).union(pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
@@ -2029,15 +1919,12 @@ def dbscan_box_clusters_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The pair table is consumed THREE times (density count, core-edge
     # build, border attach) — without materialization each consumer
     # re-runs the 9-cell grid join (r16 adjudication measured the
-    # recompute at ~1.2x e2e). MEMORY_AND_DISK: the (ia, ib) pair table
-    # is density-bounded (<= minPts-free box occupancy per point), so
-    # it spills rather than OOMs at cluster scale.
-    from pyspark import StorageLevel
-
-    nb = nb.persist(StorageLevel.MEMORY_AND_DISK)
+    # recompute at ~1.2x e2e). The (ia, ib) pair table is
+    # density-bounded (<= minPts-free box occupancy per point), and a
+    # pin spills rather than OOMs at cluster scale.
+    nb = pin(nb)
     cnt = nb.groupBy("ia").agg(F.count("*").alias("n_in"))
-    core = cnt.filter(F.col("n_in") >= 4).select(F.col("ia").alias("id"))
-    core = core.persist(StorageLevel.MEMORY_AND_DISK)
+    core = pin(cnt.filter(F.col("n_in") >= 4).select(F.col("ia").alias("id")))
     c1 = core.select(F.col("id").alias("u_ok"))
     c2 = core.select(F.col("id").alias("v_ok"))
     # Canonical orientation only (optimization r18, guide §2.4): the
@@ -2067,7 +1954,10 @@ def dbscan_box_clusters_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = comp.select(
         "id", "cluster_id", F.lit(0).alias("kind")
     ).union(border.select("id", "cluster_id", F.lit(1).alias("kind")))
-    out = (
+    # cluster-count-sized result: pin it eagerly so the pair table's
+    # pin is released before the caller collects (same pattern as
+    # personalized_pagerank_copurchase)
+    return checkpoint(
         members.groupBy("cluster_id")
         .agg(
             F.sum(F.when(F.col("kind") == 0, 1).otherwise(0)).alias(
@@ -2079,13 +1969,6 @@ def dbscan_box_clusters_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cluster_id")
     )
-    # cluster-count-sized result: pin it eagerly so the persisted pair
-    # table can be released before the caller collects (same pattern as
-    # personalized_pagerank_copurchase)
-    out = out.localCheckpoint(eager=True)
-    nb.unpersist()
-    core.unpersist()
-    return out
 
 
 @register(
@@ -2134,7 +2017,7 @@ def edge_triangle_support_copurchase(
     triangle back to its 3 canonical edges and counts per edge; the
     unmatched LEFT side marks the bridges. Everything shuffles on
     vertex/edge keys only; the triangle fan-out is 3x, a constant."""
-    e = copurchase_edges(spark, sf_dir, pinned=True)
+    e = checkpoint(copurchase_edges(spark, sf_dir))
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.pa") == F.col("e1.pb"))
@@ -2334,7 +2217,7 @@ def link_prediction_resource_allocation(
     center's degree joined IN the wedge pass, existing edges removed
     by anti-join, deterministic top-20 by (ra, cn, pair). Hub caps
     per the LSH-tuner doctrine apply at whale-catalog scale."""
-    pairs = copurchase_edges(spark, sf_dir, pinned=True)
+    pairs = checkpoint(copurchase_edges(spark, sf_dir))
     adj = pairs.select(
         F.col("pa").alias("u"), F.col("pb").alias("v")
     ).union(pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
@@ -2425,20 +2308,16 @@ def harmonic_closeness_sampled_bfs(
     relaxation runs in the single-task vectorized kernel (the md5
     seed order is replayed exactly — lowercase-hex lexicographic;
     forced-path-pinned)."""
-    e = copurchase_edges(spark, sf_dir, pinned=True)
+    e = checkpoint(copurchase_edges(spark, sf_dir))
     if e.count() <= _LOCAL_GRAPH_MAX_EDGES:
-        out = (
+        return checkpoint(
             _single_task(
                 e,
                 ("pa", "pb"),
                 "seed long, n_reached long, harmonic_micro long",
                 partial(_harmonic_kernel, n_seeds=8, max_hop=4),
-            )
-            .orderBy("seed")
-            .localCheckpoint(eager=True)
+            ).orderBy("seed")
         )
-        release_local_checkpoint(e)
-        return out
     md5_order = F.md5(F.col("v").cast("string"))
     dist, _ = _bfs_layers(e, lambda v: v.orderBy(md5_order, "v").limit(8), 4)
     # aggregate over ALL dist rows (the hop-0 self row keeps an
@@ -2546,7 +2425,7 @@ def personalized_pagerank_copurchase(
         .filter(F.col("p_brand") == "Brand#11")
         .select(F.col("p_partkey").alias("sv"))
     )
-    return _pagerank(copurchase_edges(spark, sf_dir, pinned=True), seeds)
+    return _pagerank(checkpoint(copurchase_edges(spark, sf_dir)), seeds)
 
 
 def _hits_oracle(rounds: int = 3) -> str:
@@ -2621,11 +2500,10 @@ def hits_hubs_authorities_purchases(
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    e = (
+    e = pin(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
-        .persist()
     )
     # Materialize the edge cache once before the loop — the
     # pagerank_copurchase treatment (optimization r18, guide §2.4/§5):
@@ -2633,24 +2511,20 @@ def hits_hubs_authorities_purchases(
     # a lazy cache lets the overlapping round-1 broadcast jobs each
     # replay the join+distinct edge construction from parquet.
     if e.count() <= _LOCAL_GRAPH_MAX_EDGES:
-        out = (
+        return checkpoint(
             _single_task(
                 e,
                 ("c", "p"),
                 "kind string, node long, score_micro long",
                 partial(_hits_kernel, rounds=3),
-            )
-            .orderBy("kind", F.desc("score_micro"), "node")
-            .localCheckpoint(eager=True)
+            ).orderBy("kind", F.desc("score_micro"), "node")
         )
-        e.unpersist()
-        return out
     auth = e.select("p").distinct().select(
         "p", F.lit(1000000).cast("long").alias("a")
     )
     dec = "decimal(38,0)"
     hubs = None
-    # localCheckpoint per half-round: the max-normalization references
+    # checkpoint per half-round: the max-normalization references
     # its un-materialized input TWICE (sum frame + its own max), so
     # without eager truncation the plan doubles every half-round —
     # 2^6 subplan copies by round 3, which exploded codegen and OOMed
@@ -2665,35 +2539,31 @@ def hits_hubs_authorities_purchases(
         # because the previous vector is already a checkpointed
         # LogicalRDD, so the doubled subplan is one join+agg deep
         # (optimization r18, guide §1.4 job-count latency).
-        hu = (
+        hu = pin(
             e.join(auth.select(F.col("p").alias("ap"), "a"), e.p == F.col("ap"))
             .groupBy("c")
             .agg(F.sum(F.col("a").cast(dec)).alias("h"))
-            .persist()
         )
         hm = hu.agg(F.max("h").alias("m"))
-        hubs = (
+        hubs = checkpoint(
             hu.crossJoin(F.broadcast(hm))
             .filter(F.col("m") > 0)
             .select("c", F.expr("CAST(h * 1000000 div m AS BIGINT)").alias("h"))
-            .localCheckpoint()
         )
-        hu.unpersist()  # hubs is pinned; the sum vector is done
-        au = (
+        release(hu)  # hubs is pinned; the sum vector is done
+        au = pin(
             e.join(hubs.select(F.col("c").alias("hc"), "h"), e.c == F.col("hc"))
             .groupBy("p")
             .agg(F.sum(F.col("h").cast(dec)).alias("a"))
-            .persist()
         )
         am = au.agg(F.max("a").alias("m"))
-        auth = (
+        auth = checkpoint(
             au.crossJoin(F.broadcast(am))
             .filter(F.col("m") > 0)
             .select("p", F.expr("CAST(a * 1000000 div m AS BIGINT)").alias("a"))
-            .localCheckpoint()
         )
-        au.unpersist()  # auth is pinned; the sum vector is done
-    out = (
+        release(au)  # auth is pinned; the sum vector is done
+    return checkpoint(
         auth.select(
             F.lit("authority").alias("kind"),
             F.col("p").alias("node"),
@@ -2708,9 +2578,6 @@ def hits_hubs_authorities_purchases(
         )
         .orderBy("kind", F.desc("score_micro"), "node")
     )
-    out = out.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2768,7 +2635,7 @@ def clustering_coefficient_copurchase(
     Deterministic top-20 (cc desc, degree desc, part). Scale: the
     same support-≥ 2 pruned edge set as every copurchase query; no
     step exceeds the wedge bound."""
-    pairs = copurchase_edges(spark, sf_dir, pinned=True)
+    pairs = checkpoint(copurchase_edges(spark, sf_dir))
     adj = pairs.select(
         F.col("pa").alias("u"), F.col("pb").alias("v")
     ).union(pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
@@ -2824,10 +2691,6 @@ pairs AS (
 """
 
 
-def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return copurchase_edges(spark, sf_dir, pinned=True)
-
-
 @register(
     "rich_club_coefficient_copurchase",
     oracle="""
@@ -2874,7 +2737,7 @@ def rich_club_coefficient_copurchase(
     with the full k-profile the assortativity coefficient
     averages away. Scale: one edge rollup + a degree join + a 5-row
     broadcast threshold table; no wedge work at all."""
-    pairs = _copurchase_pairs(spark, sf_dir)
+    pairs = checkpoint(copurchase_edges(spark, sf_dir))
     adj = pairs.select(F.col("pa").alias("u")).union(
         pairs.select(F.col("pb").alias("u"))
     )
@@ -2967,9 +2830,7 @@ def ktruss_3_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round i re-evaluates the whole peel lineage of rounds 0..i-1
     # (O(rounds²) wedge joins) — the iterative-algorithm caching
     # doctrine (same as lpa_communities / pagerank rounds).
-    pairs = _copurchase_pairs(spark, sf_dir)
-    e = pairs.persist()
-    cached = [e]
+    e = pin(checkpoint(copurchase_edges(spark, sf_dir)))
     counts = [("0", e.count())]
     for i in range(3):
         adj = e.select(F.col("pa").alias("u"), F.col("pb").alias("v")).union(
@@ -2982,12 +2843,9 @@ def ktruss_3_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("xa").alias("pa"), F.col("yb").alias("pb"))
             .distinct()
         )
-        e = e.join(tri_edges, ["pa", "pb"], "left_semi").persist()
-        cached.append(e)
+        e = pin(e.join(tri_edges, ["pa", "pb"], "left_semi"))
         counts.append((str(i + 1), e.count()))
     rows = [(int(r), int(c)) for r, c in counts]
-    for df in cached:
-        df.unpersist()
     return spark.createDataFrame(
         rows, "round INT, edges_remaining BIGINT"
     ).orderBy("round")
@@ -3036,7 +2894,7 @@ def link_prediction_pref_attachment(
     anti-join; the score is one exact int64 product, top-20 by
     (score, pair) deterministic order. Scale: hub-bounded wedge
     work, same as the CN predictor."""
-    pairs = _copurchase_pairs(spark, sf_dir)
+    pairs = checkpoint(copurchase_edges(spark, sf_dir))
     adj = pairs.select(
         F.col("pa").alias("u"), F.col("pb").alias("v")
     ).union(pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
@@ -3127,12 +2985,12 @@ def diameter_double_sweep_copurchase(
     algorithm caching doctrine), the turn vertex picked by the
     deterministic (hop DESC, vertex) order. Scale: 2 × 4 bounded
     rounds of Σdeg-work joins."""
-    pairs = _copurchase_pairs(spark, sf_dir)
-    sym = pairs.select(
-        F.col("pa").alias("u"), F.col("pb").alias("v")
-    ).union(
-        pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    ).persist()
+    pairs = checkpoint(copurchase_edges(spark, sf_dir))
+    sym = pin(
+        pairs.select(F.col("pa").alias("u"), F.col("pb").alias("v")).union(
+            pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
+        )
+    )
 
     def sweep(seed_df):
         # seed_df: single row (v) — frontier relaxation, 4 bounded
@@ -3140,10 +2998,9 @@ def diameter_double_sweep_copurchase(
         # driver action — one collect at the end materializes the
         # whole sweep (per-round isEmpty/count actions measured ~3s
         # of job overhead each on a graph this small)
-        dist = seed_df.select(
-            F.col("v"), F.lit(0).cast("long").alias("hop")
-        ).localCheckpoint()
-        pins = [dist]
+        dist = checkpoint(
+            seed_df.select(F.col("v"), F.lit(0).cast("long").alias("hop"))
+        )
         frontier = dist
         for hop in range(1, 5):
             fr = frontier.select(F.col("v").alias("fv"))
@@ -3161,19 +3018,14 @@ def diameter_double_sweep_copurchase(
                     F.lit(hop).cast("long").alias("hop"),
                 )
             )
-            # localCheckpoint truncates the per-round lineage: the
-            # lazy 4-round DAG otherwise compounds to ~200 stages of
+            # a checkpoint truncates the per-round lineage: the lazy
+            # 4-round DAG otherwise compounds to ~200 stages of
             # shuffle bookkeeping on a graph this small
-            dist = dist.unionByName(nxt).localCheckpoint(eager=False)
-            pins.append(dist)
+            dist = checkpoint(dist.unionByName(nxt), eager=False)
         far_rows = (
             dist.orderBy(F.desc("hop"), "v").limit(1).collect()
         )
-        n_reached = dist.count()
-        # the result is built from driver values: no pin outlives them
-        for pinned in pins:
-            release_local_checkpoint(pinned)
-        return far_rows[0], n_reached
+        return far_rows[0], dist.count()
 
     start = sym.agg(F.min("u").alias("v"))
     far1, _ = sweep(start)
@@ -3181,8 +3033,7 @@ def diameter_double_sweep_copurchase(
         sym.sparkSession.createDataFrame([(far1["v"],)], "v bigint")
     )
     start_v = start.collect()[0]["v"]
-    sym.unpersist()
-    release_local_checkpoint(pairs)
+    # the result is built from driver values: it reads no pin
     return spark.createDataFrame(
         [
             (

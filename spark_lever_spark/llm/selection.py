@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spark_lever_spark.catalog import load_table, spread_scan
+from spark_lever_spark.catalog import checkpoint, load_table, pin, spread_scan
 from spark_lever_spark.llm.dedup import _PARA_N
 from spark_lever_spark.llm.similarity import as_double, cosine
 from spark_lever_spark.registry import register
@@ -434,7 +434,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair counting is one (a, b) aggregation per round, the elected
     pair is a 1-row scalar (driver-collected like the LSH plane
     literals, keeping lineage linear), and the rewrite is map-side.
-    Per-round persist + deterministic release (the k-core doctrine)."""
+    Per-round persist (the k-core doctrine)."""
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.filter(F.col("text").isNotNull())
@@ -443,19 +443,12 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    cur = words.select(
-        F.array_join(F.split("w", ""), " ").alias("sym"), "n"
-    ).persist()
+    cur = pin(words.select(F.array_join(F.split("w", ""), " ").alias("sym"), "n"))
     if cur.count() <= _LOCAL_BPE_MAX_WORDS:
         # vocabulary-grain single-task kernel (see _LOCAL_BPE_MAX_WORDS;
         # forced-path-pinned to the distributed loop in
         # tests/test_llm_curation.py::test_bpe_kernel_matches_distributed_loop)
-        out = _bpe_local(cur, _BPE_ROUNDS).orderBy("round").localCheckpoint(
-            eager=True
-        )
-        cur.unpersist()
-        return out
-    handles = [cur]
+        return checkpoint(_bpe_local(cur, _BPE_ROUNDS).orderBy("round"))
     merges = []
     for r in range(1, _BPE_ROUNDS + 1):
         with_s = cur.withColumn("s", F.split("sym", " "))
@@ -479,19 +472,18 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
         merges.append((r, a, b, cnt))
-        cur = cur.select(
-            F.btrim(
-                F.expr(
-                    "replace(concat(' ', sym, ' '),"
-                    f" concat(' ', {_sql_str(a)}, ' ', {_sql_str(b)}, ' '),"
-                    f" concat(' ', {_sql_str(a)}, {_sql_str(b)}, ' '))"
-                )
-            ).alias("sym"),
-            "n",
-        ).persist()
-        handles.append(cur)
-    for h in handles:
-        h.unpersist()
+        cur = pin(
+            cur.select(
+                F.btrim(
+                    F.expr(
+                        "replace(concat(' ', sym, ' '),"
+                        f" concat(' ', {_sql_str(a)}, ' ', {_sql_str(b)}, ' '),"
+                        f" concat(' ', {_sql_str(a)}, {_sql_str(b)}, ' '))"
+                    )
+                ).alias("sym"),
+                "n",
+            )
+        )
     return spark.createDataFrame(
         merges, "round int, left_sym string, right_sym string, cnt long"
     ).orderBy("round")
@@ -644,10 +636,7 @@ def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    cur = words.select(
-        "w", F.array_join(F.split("w", ""), " ").alias("sym"), "n"
-    ).persist()
-    handles = [cur]
+    cur = pin(words.select("w", F.array_join(F.split("w", ""), " ").alias("sym"), "n"))
     for _ in range(_BPE_ROUNDS):
         with_s = cur.withColumn("s", F.split("sym", " "))
         pairs = with_s.select(
@@ -669,18 +658,19 @@ def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not top:
             break
         a, b = top[0]["a"], top[0]["b"]
-        cur = cur.select(
-            "w",
-            F.btrim(
-                F.expr(
-                    "replace(concat(' ', sym, ' '),"
-                    f" concat(' ', {_sql_str(a)}, ' ', {_sql_str(b)}, ' '),"
-                    f" concat(' ', {_sql_str(a)}, {_sql_str(b)}, ' '))"
-                )
-            ).alias("sym"),
-            "n",
-        ).persist()
-        handles.append(cur)
+        cur = pin(
+            cur.select(
+                "w",
+                F.btrim(
+                    F.expr(
+                        "replace(concat(' ', sym, ' '),"
+                        f" concat(' ', {_sql_str(a)}, ' ', {_sql_str(b)}, ' '),"
+                        f" concat(' ', {_sql_str(a)}, {_sql_str(b)}, ' '))"
+                    )
+                ).alias("sym"),
+                "n",
+            )
+        )
     wmap = cur.select(
         "w", F.size(F.split("sym", " ")).cast("long").alias("n_sym")
     )
@@ -715,8 +705,6 @@ def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the per-round persists only served the iterative election
     # collects; the elected merges are baked into the plan as string
-    # LITERALS, so releasing the handles leaves a fully deterministic
-    # vocabulary-grain lineage the final action simply recomputes
-    for h in handles:
-        h.unpersist()
+    # LITERALS, so once the pin scope releases them the final action
+    # recomputes a fully deterministic vocabulary-grain lineage
     return out

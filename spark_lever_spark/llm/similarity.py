@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_lever_spark.catalog import load_table
+from spark_lever_spark.catalog import checkpoint, load_table, pin
 from spark_lever_spark.registry import register
 
 
@@ -556,24 +556,16 @@ def kmeans_lloyd_refine_embeddings(
     is one posexplode + (cid, dim)-keyed sum — dimension-parallel,
     exactly how a 1000-executor Lloyd step shuffles. Per-iteration
     cost is O(N k d) map-side + O(k d) shuffle rows."""
-    out, q, a1 = _kmeans_lloyd_refine_plan(spark, sf_dir)
-    # k rows: eager-materialize so both caches can be released before
-    # return (ADVICE r17 — un-unpersisted q/a1 otherwise accumulate
-    # cached corpus-grain tables across a long session).
-    out = out.localCheckpoint(eager=True)
-    a1.unpersist()
-    q.unpersist()
-    return out
+    # k rows: eager-materialized, so the query's two pins outlive no
+    # consumer
+    return checkpoint(_kmeans_lloyd_refine_plan(spark, sf_dir))
 
 
-def _kmeans_lloyd_refine_plan(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Build the (lazy) Lloyd-refinement plan; returns ``(out, q, a1)``
-    with ``q``/``a1`` persisted — callers materialize ``out`` and then
-    unpersist both. Split out so plan-shape tests can pin the
-    pre-checkpoint plan (the registered query returns an eagerly
-    checkpointed k-row result whose lineage is truncated)."""
+def _kmeans_lloyd_refine_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Build the (lazy) Lloyd-refinement plan over two pins. Split out
+    so plan-shape tests can read the pre-checkpoint plan (the registered
+    query returns an eagerly checkpointed k-row result whose lineage is
+    truncated)."""
 
     emb = load_table(spark, sf_dir, "embeddings")
 
@@ -588,7 +580,7 @@ def _kmeans_lloyd_refine_plan(
             "l", lambda v: F.floor(v / F.col("s") + 0.5).cast("long")
         ).alias("qv"),
     )
-    q = q.persist()
+    q = pin(q)
     c0 = q.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
     )
@@ -616,12 +608,11 @@ def _kmeans_lloyd_refine_plan(
     # comparison) — persist it or the broadcast probe + argmin re-run
     # per consumer (the r16 recompute-elimination class; the un-persisted
     # plan re-expanded this subtree 33x).
-    a1 = (
+    a1 = pin(
         q.crossJoin(F.broadcast(c0))
         .select("vec_id", "cid", sq_l2("qv", "cv").alias("dist"))
         .groupBy("vec_id")
         .agg(F.min_by("cid", F.struct("dist", "cid")).alias("cid"))
-        .persist()
     )
     memb = a1.join(q, "vec_id")
     sums = (
@@ -678,7 +669,7 @@ def _kmeans_lloyd_refine_plan(
         )
         .orderBy("cid")
     )
-    return out, q, a1
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_lever_spark.catalog import load_table
+from spark_lever_spark.catalog import checkpoint, load_table, pin
 from spark_lever_spark.functions.exact import cents
 from spark_lever_spark.registry import register
 
@@ -667,38 +667,33 @@ def recursive_cte_dup_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("fp").orderBy("doc_id")
     chain = fp.withColumn("prev_id", F.lag("doc_id").over(w))
-    edges = (
+    edges = pin(
         chain.filter(F.col("prev_id").isNotNull())
         .select(F.col("prev_id").alias("src"), F.col("doc_id").alias("dst"))
-        .persist()
     )
     edges.count()  # materialize before the iterative consumer
-    roots = (
+    roots = pin(
         chain.filter(F.col("prev_id").isNull())
         .join(edges, chain.doc_id == edges.src, "left_semi")
         .select("doc_id")
-        .persist()
     )
     roots.count()
     edges.createOrReplaceTempView("dup_edges_v")
     roots.createOrReplaceTempView("dup_roots_v")
-    out = spark.sql(
-        """
-        WITH RECURSIVE closure(root_id, member_id) AS (
-          SELECT doc_id, doc_id FROM dup_roots_v
-          UNION ALL
-          SELECT c.root_id, e.dst FROM closure c JOIN dup_edges_v e
-            ON e.src = c.member_id
+    return checkpoint(
+        spark.sql(
+            """
+            WITH RECURSIVE closure(root_id, member_id) AS (
+              SELECT doc_id, doc_id FROM dup_roots_v
+              UNION ALL
+              SELECT c.root_id, e.dst FROM closure c JOIN dup_edges_v e
+                ON e.src = c.member_id
+            )
+            SELECT root_id, member_id FROM closure
+            ORDER BY root_id, member_id
+            """
         )
-        SELECT root_id, member_id FROM closure
-        ORDER BY root_id, member_id
-        """
-    ).localCheckpoint(eager=True)
-    # result pinned; release the recursion inputs (r19 cache-leak
-    # audit: these persists used to outlive the query's return)
-    edges.unpersist()
-    roots.unpersist()
-    return out
+    )
 
 
 @register(

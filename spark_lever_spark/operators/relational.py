@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_lever_spark.catalog import load_table
+from spark_lever_spark.catalog import checkpoint, load_table, pin
 from spark_lever_spark.functions.exact import (
     DEC38,
     cents,
@@ -2790,11 +2790,11 @@ def mad_outlier_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 2-pass grank machinery: no global sort, per-task memory flat;
     the MAD pass re-ranks the deviation column the same way. Three
     aggregate-domain shuffles total at any scale."""
-    from pyspark import StorageLevel
-
-    v = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", cents(F.col("o_totalprice")).alias("c")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    v = pin(
+        load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", cents(F.col("o_totalprice")).alias("c")
+        )
+    )
     r1 = with_global_rank(v, F.col("c"), ["o_orderkey"])
     # the .agg() wrapper marks the 1-row broadcast side as
     # aggregate-derived for the registry-wide nested-loop sweep (the
@@ -2806,18 +2806,18 @@ def mad_outlier_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final aggregate — without a persist each replays the first
     # median's full rank machinery (its broadcast subtree), measured
     # as the query's dominant cost (optimization r18, guide §2.4/§5).
-    # v likewise feeds both passes of rank #1 and dev. Both released
-    # after the 1-row result is pinned.
-    dev = v.crossJoin(F.broadcast(med)).select(
-        "o_orderkey", "c", "m", F.abs(F.col("c") - F.col("m")).alias("ad")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # v likewise feeds both passes of rank #1 and dev.
+    dev = pin(
+        v.crossJoin(F.broadcast(med)).select(
+            "o_orderkey", "c", "m", F.abs(F.col("c") - F.col("m")).alias("ad")
+        )
+    )
     r2 = with_global_rank(dev, F.col("ad"), ["o_orderkey"])
     mad = r2.filter(F.expr("_rk = (_n_tot + 1) div 2")).agg(
         F.max("ad").alias("md")
     )
-    out = (
-        dev.crossJoin(F.broadcast(mad))
-        .agg(
+    return checkpoint(
+        dev.crossJoin(F.broadcast(mad)).agg(
             F.max("m").alias("median_cents"),
             F.max("md").alias("mad_cents"),
             F.count("*").alias("n_orders"),
@@ -2829,10 +2829,6 @@ def mad_outlier_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("worst_deviation_cents"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    v.unpersist()
-    dev.unpersist()
-    return out
 
 
 @register(
@@ -3007,9 +3003,9 @@ def bitmap_rollup_daily_to_monthly(
     ).agg(
         F.bitmap_construct_agg(F.bitmap_bit_position("user_id")).alias("bm")
     )
-    monthly_bkt = daily.groupBy("month", "bkt").agg(
-        F.bitmap_or_agg("bm").alias("bm")
-    ).persist()
+    monthly_bkt = pin(
+        daily.groupBy("month", "bkt").agg(F.bitmap_or_agg("bm").alias("bm"))
+    )
     per_month = monthly_bkt.groupBy("month").agg(
         F.sum(F.bitmap_count("bm")).alias("distinct_users")
     )
@@ -3022,15 +3018,8 @@ def bitmap_rollup_daily_to_monthly(
             "distinct_users",
         )
     )
-    out = (
-        per_month.unionByName(total)
-        .orderBy("month")
-        # eager pin (month-domain rows), then release the bucketed
-        # bitmap persist (r19 cache-leak audit)
-        .localCheckpoint(eager=True)
-    )
-    monthly_bkt.unpersist()
-    return out
+    # eager pin of the month-domain rows
+    return checkpoint(per_month.unionByName(total).orderBy("month"))
 
 
 @register(
@@ -9085,13 +9074,10 @@ def decision_stump_returns(
     # quantile-bounds pass, its main pass AND the totals aggregate —
     # three replays of the fact-fact join + two rollups without a
     # persist (optimization r18, guide §2.4/§5). Value-grain, so it
-    # spills rather than OOMs at scale; released after the 1-row
-    # result is pinned below.
-    from pyspark import StorageLevel
-
-    pts = lab.groupBy("x").agg(
-        F.count("*").alias("cnt"), F.sum("y").alias("pos")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # spills rather than OOMs at scale.
+    pts = pin(
+        lab.groupBy("x").agg(F.count("*").alias("cnt"), F.sum("y").alias("pos"))
+    )
     cum = with_grouped_cumsum(
         pts, [], F.col("x"), ["x"], ["cnt", "pos"]
     ).select(
@@ -9125,16 +9111,16 @@ def decision_stump_returns(
     )
     # sc is consumed three times (argmax aggregate, min-split pick,
     # final row) — persist so the split scoring runs once, and pin the
-    # 1-row result eagerly so both caches release before return
-    # (optimization r18; the dbscan/ppr eager-pin pattern).
-    sc = sc.persist(StorageLevel.MEMORY_AND_DISK)
+    # 1-row result eagerly (optimization r18; the dbscan/ppr eager-pin
+    # pattern).
+    sc = pin(sc)
     m = sc.agg(F.max("neg_obj_milli").alias("mm"))
     best = (
         sc.crossJoin(F.broadcast(m))
         .filter(F.col("neg_obj_milli") == F.col("mm"))
         .agg(F.min("x").alias("split_x"))
     )
-    out = (
+    return checkpoint(
         sc.join(F.broadcast(best), sc.x == F.col("split_x"))
         .crossJoin(F.broadcast(tot))
         .select(
@@ -9157,10 +9143,6 @@ def decision_stump_returns(
             ).alias("gini_root_ppm"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    pts.unpersist()
-    sc.unpersist()
-    return out
 
 
 @register(
@@ -9264,11 +9246,8 @@ def isotonic_return_rate_by_price(
     # lab feeds the rank helper's quantile-bounds pass AND its main
     # pass — without a persist the fact-fact join + per-order rollup
     # runs twice (optimization r18, guide §2.4/§5: the recompute-
-    # elimination class). Released below once the 20-row grid is
-    # pinned.
-    from pyspark import StorageLevel
-
-    lab = lab.persist(StorageLevel.MEMORY_AND_DISK)
+    # elimination class).
+    lab = pin(lab)
     ranked = with_global_rank(
         lab.select(F.col("x").alias("v"), "o_orderkey", "y"),
         F.col("v"),
@@ -9298,8 +9277,7 @@ def isotonic_return_rate_by_price(
         F.sum("nb").over(wcum).alias("cn"),
         F.sum("pb").over(wcum).alias("cp"),
     )
-    cum = cum.localCheckpoint(eager=True)
-    lab.unpersist()
+    cum = checkpoint(cum)
     j = cum.select(
         F.col("b").alias("j"),
         F.col("nb").alias("jnb"),

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_lever_spark.catalog import load_table
+from spark_lever_spark.catalog import checkpoint, load_table, pin
 from spark_lever_spark.functions.exact import (
     DEC38,
     duck_sql,
@@ -4008,16 +4008,14 @@ def hodges_lehmann_daily_value(
     # as the relational rolling-distinct precedent) so grank's rank and
     # quantile-bound passes over the 3.4M-pair self-join re-derive it
     # from memory instead of rescanning the fact table per pass.
-    daily = (
+    daily = pin(
         o.groupBy(
             F.datediff(
                 F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date")
             )
             .cast("long")
             .alias("d")
-        )
-        .agg(F.sum(cents(F.col("o_totalprice"))).alias("x"))
-        .persist()
+        ).agg(F.sum(cents(F.col("o_totalprice"))).alias("x"))
     )
     a = daily.select(F.col("d").alias("d1"), F.col("x").alias("x1"))
     b = daily.select(F.col("d").alias("d2"), F.col("x").alias("x2"))
@@ -4056,7 +4054,8 @@ def hodges_lehmann_daily_value(
         .select(F.col("_b").alias("tb"), "before", "m", "tr")
     )
     w_loc = Window.partitionBy("_b").orderBy("w", "d1", "d2")
-    out = (
+    # eager pin (1 row)
+    return checkpoint(
         binned.join(F.broadcast(tgt), F.col("_b") == F.col("tb"))
         .withColumn("_lrk", F.row_number().over(w_loc).cast("long"))
         .filter(F.col("before") + F.col("_lrk") == F.col("tr"))
@@ -4067,12 +4066,7 @@ def hodges_lehmann_daily_value(
             F.col("w").alias("hl_doubled_cents"),
             F.expr("w div 2").alias("hl_cents"),
         )
-        # eager pin (1 row), then release the daily-aggregate persist
-        # (r19 cache-leak audit)
-        .localCheckpoint(eager=True)
     )
-    daily.unpersist()
-    return out
 
 
 @register(

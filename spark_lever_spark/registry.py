@@ -8,6 +8,12 @@ result (same column names — the correctness check hashes values after
 sorting columns by name). A query's domain is the module that defines
 it.
 
+The registered callable runs the query in a pin scope
+(``catalog.pin_scope``): the persists and checkpoints it makes are
+released when it returns, except the checkpoints its frame reads. The
+module-level function stays unwrapped, so a query or helper that calls
+another query's function pins into its caller's scope.
+
 The registry is what ``__spark_entry__.queries()`` / ``oracle_sql()``
 expose to the correctness driver, and what ``perfbench``'s query mix
 draws its queries from (by name).
@@ -15,10 +21,13 @@ draws its queries from (by name).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from spark_lever_spark.catalog import pin_scope
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -39,9 +48,14 @@ def register(name: str, oracle: str | None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
+
+        @functools.wraps(fn)
+        def scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return pin_scope(fn, spark, sf_dir)
+
         _REGISTRY[name] = Query(
             name=name,
-            fn=fn,
+            fn=scoped,
             oracle=oracle.strip() if oracle else None,
         )
         return fn

@@ -72,6 +72,12 @@ def get_session(
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    # The Python workers import this package (the graph kernels and the
+    # multimodal decoders are package functions): put its root on their
+    # path, so they find it whatever directory the driver started in.
+    conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    )
     if master.startswith("local"):
         # local mode: the driver JVM IS the executor; Spark's 1g default
         # heap OOMs on wide-shuffle workloads long before the machine

@@ -21,6 +21,7 @@ from pyspark.sql.types import StructType
 
 from spark_lever_spark.catalog import (
     _ensure_parity_confs,
+    checkpoint,
     data_files,
     normalize_timestamps,
     parquet_schema,
@@ -49,7 +50,7 @@ class StreamDrain:
     inputs (``table``, ``batches``), whatever a foreachBatch sink writes
     under ``dir``, and the checkpoint. ``run`` drains a plan to
     exhaustion. On exit the directory is deleted, so a result that reads
-    from it must be pinned first (``localCheckpoint(eager=True)``);
+    from it must be pinned first (``catalog.checkpoint``);
     ``run``'s memory-sink result already is, and its temp view is gone.
     """
 
@@ -142,7 +143,7 @@ class StreamDrain:
             writer.start().awaitTermination()
             if sink is not None:
                 return None
-            return spark.table(view).localCheckpoint(eager=True)
+            return checkpoint(spark.table(view))
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
             spark.catalog.dropTempView(view)

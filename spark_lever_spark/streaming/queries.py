@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_lever_spark.catalog import load_table
+from spark_lever_spark.catalog import checkpoint, load_table, pin, release
 from spark_lever_spark.llm.dedup import _MINHASH_BAND_CTES, minhash_bands
 from spark_lever_spark.registry import register
 from spark_lever_spark.streaming.harness import BatchCollector, StreamDrain
@@ -341,12 +341,10 @@ def stream_foreachbatch_upsert_users(
             target_holder["path"] = out
 
         drain.run(sdf, "update", upsert)
-        final = (
-            spark.read.parquet(target_holder["path"])
-            .select(
+        final = checkpoint(
+            spark.read.parquet(target_holder["path"]).select(
                 "user_id", "n_events", F.col("last.event_type").alias("last_event_type")
             )
-            .localCheckpoint(eager=True)
         )
     return final.orderBy("user_id")
 
@@ -789,7 +787,8 @@ def stream_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         def on_batch(batch_df: DataFrame, batch_id: int) -> None:
             s = batch_df.sparkSession
             _, bands = minhash_bands(batch_df)
-            bands = bands.persist()
+            # the callback runs outside the query's pin scope
+            bands = pin(bands)
             try:
                 bl = bands.alias("b")
                 within = bl.join(
@@ -817,7 +816,7 @@ def stream_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 new_pairs.distinct().write.mode("append").parquet(pairs_dir)
                 bands.write.mode("append").parquet(index_dir)
             finally:
-                bands.unpersist()
+                release(bands)
 
         drain.run(sdf, "update", on_batch)
         # distinct at read: foreachBatch is at-least-once, so a replayed
@@ -829,12 +828,10 @@ def stream_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).unionByName(
             pairs.select(F.col("id_b").alias("d"), F.col("id_a").alias("o"))
         )
-        out = (
-            bi.groupBy(F.col("d").alias("doc_id"))
-            .agg(
+        out = checkpoint(
+            bi.groupBy(F.col("d").alias("doc_id")).agg(
                 F.count("*").alias("n_dup_partners"),
                 F.min("o").alias("min_partner"),
             )
-            .localCheckpoint(eager=True)
         )
     return out.orderBy("doc_id")

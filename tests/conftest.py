@@ -81,22 +81,6 @@ def jobs_run_by(spark):
     return jobs
 
 
-@pytest.fixture
-def rdds_left_by(spark):
-    """``rdds_left_by(fn)`` calls ``fn()`` and returns the ids of the
-    RDDs it added to the context's persistent set: the cached and
-    ``localCheckpoint``-ed blocks it left behind. It compares the set
-    before and after the call and runs no GC."""
-    jsc = spark.sparkContext._jsc
-
-    def left(fn):
-        before = set(jsc.getPersistentRDDs())
-        fn()
-        return sorted(set(jsc.getPersistentRDDs()) - before)
-
-    return left
-
-
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMOKE)

@@ -16,6 +16,9 @@ GeneratedAggregate.scala codegen):
 - how many shuffles does the plan pay? (`exchange_count`)
 - broadcast vs shuffle join? (`broadcast_join_count` / `shuffle_join_count`)
 - how much of the plan runs in whole-stage codegen?
+
+``PinAudit`` answers one more: what did a block of code leave pinned
+that the frame it returned does not read?
 """
 
 from __future__ import annotations
@@ -239,3 +242,42 @@ def nested_loop_hazards(df: DataFrame) -> list[str]:
 
     walk(plan)
     return out
+
+
+def rdds_read_by(df: DataFrame) -> set[int]:
+    """The ids of the RDDs that ``LogicalRDD`` nodes of ``df``'s
+    analyzed plan read, subquery plans included: a walk over every
+    node, written apart from the engine's own leaf read."""
+    ids: set[int] = set()
+    todo = [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if _simple(node) == "LogicalRDD":
+            ids.add(node.rdd().id())
+        for seq in (node.children(), node.subqueries()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return ids
+
+
+class PinAudit:
+    """What a block of code leaves pinned: make one before the block,
+    call ``stray(*frames)`` after it. Runs no GC."""
+
+    def __init__(self, spark) -> None:
+        self._jsc = spark.sparkContext._jsc
+        self._cache = spark._jsparkSession.sharedState().cacheManager()
+        self._rdds = set(self._jsc.getPersistentRDDs())
+        self._entries = self._cache.numCachedEntries()
+
+    def stray(self, *frames: DataFrame) -> list[str]:
+        """The RDDs the block added to the context's persistent set
+        (caches and checkpoints) that no ``frames`` plan reads, and the
+        entries it added to the CacheManager."""
+        left = set(self._jsc.getPersistentRDDs()) - self._rdds
+        if left:
+            left -= set().union(*(rdds_read_by(f) for f in frames))
+        out = [f"rdd {i}" for i in sorted(left)]
+        gained = self._cache.numCachedEntries() - self._entries
+        if gained > 0:
+            out.append(f"{gained} cache entries")
+        return out

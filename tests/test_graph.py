@@ -9,7 +9,9 @@ import random
 
 import pytest
 
+from spark_lever_spark import registry
 from spark_lever_spark.llm.graph import connected_components
+from tests.plans import PinAudit
 
 
 def _union_find_components(n_nodes, edges):
@@ -136,6 +138,17 @@ def test_cc_contracted_path_matches_union_find(spark, monkeypatch):
     assert _cc_spark(spark, edges) == _union_find_components(n, edges)
 
 
+def _rows_leaving_no_stray_pins(spark, sf_dir, name):
+    """Run the registered query ``name`` and collect its rows; fail if it
+    leaves a pin behind that its returned frame does not read."""
+    pins = PinAudit(spark)
+    df = registry.all_queries()[name].fn(spark, sf_dir)
+    rows = df.collect()
+    stray = pins.stray(df)
+    assert not stray, f"{name} left {stray} pinned that its frame does not read"
+    return rows
+
+
 def test_iterative_graph_kernels_match_distributed_loops(
     spark, sf_dir, monkeypatch
 ):
@@ -144,11 +157,10 @@ def test_iterative_graph_kernels_match_distributed_loops(
     harmonic closeness) finish in a single-task vectorized kernel.
     The distributed per-round join loop must stay pinned to IDENTICAL
     rows on the smoke corpus — every recursion is integer-exact, so
-    the two paths may not differ by even one unit."""
-    from spark_lever_spark import registry
+    the two paths may not differ by even one unit. Neither path may
+    leave a pin its returned frame does not read."""
     from spark_lever_spark.llm import graph
 
-    ALL = registry.all_queries()
     names = [
         "pagerank_copurchase",
         "personalized_pagerank_copurchase",
@@ -159,19 +171,18 @@ def test_iterative_graph_kernels_match_distributed_loops(
         "kcore_peel_copurchase",  # r19: same kernel doctrine
     ]
     for name in names:
-        fast = ALL[name].fn(spark, sf_dir).collect()
+        fast = _rows_leaving_no_stray_pins(spark, sf_dir, name)
         monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", -1)
-        slow = ALL[name].fn(spark, sf_dir).collect()
+        slow = _rows_leaving_no_stray_pins(spark, sf_dir, name)
         monkeypatch.undo()
         assert fast == slow, name
         assert len(fast) > 0, name
 
 
-def test_diameter_releases_its_pins(spark, sf_dir, rdds_left_by):
+def test_diameter_releases_its_pins(spark, sf_dir):
     """The double-sweep diameter builds its one result row from driver
     values, so no cached or checkpointed RDD of its sweeps may outlive
     the call."""
-    from spark_lever_spark import registry
-
-    q = registry.all_queries()["diameter_double_sweep_copurchase"]
-    assert rdds_left_by(lambda: q.fn(spark, sf_dir).collect()) == []
+    assert _rows_leaving_no_stray_pins(
+        spark, sf_dir, "diameter_double_sweep_copurchase"
+    )

@@ -160,23 +160,19 @@ def test_minhash_lsh_band_join_is_equi_hash(spark, sf_dir):
     # band_digest) — uniformly distributed keys, bucketed by hash — and
     # NEVER a nested-loop/cartesian all-pairs scan. This is the single
     # property that makes minhash dedup 100 TB-viable.
-    from spark_lever_spark.catalog import load_table
+    from spark_lever_spark.catalog import load_table, pin_scope
     from spark_lever_spark.llm.dedup import lsh_candidate_pairs
     from tests.plans import nested_loop_join_count
 
-    # r19: the registered query pins its result eagerly (lineage
-    # truncated) so the LSH signature persist can be released before
-    # return — pin the plan on the shared lazy helper instead.
-    rel: list = []
-    df = lsh_candidate_pairs(
-        load_table(spark, sf_dir, "documents"), releases=rel
-    )
-    try:
+    # The registered query pins its result eagerly (lineage truncated),
+    # so the plan is read on the shared lazy helper instead, in a pin
+    # scope that releases the helper's signature pin.
+    def check():
+        df = lsh_candidate_pairs(load_table(spark, sf_dir, "documents"))
         assert nested_loop_join_count(df) == 0
         assert broadcast_join_count(df) + shuffle_join_count(df) >= 1
-    finally:
-        for cached in rel:
-            cached.unpersist()
+
+    pin_scope(check)
 
 
 def test_cc_half_rounds_are_single_window_shuffles(spark, sf_dir):
@@ -652,21 +648,20 @@ def test_round17_blocking_audit_sample_pairs_via_lang_hash_join(
     lang HASH equi-join (inequality + source filters as residuals);
     the five scalar metric attaches are aggregate-derived broadcast
     crosses, which are the only nested loops in the plan."""
+    from spark_lever_spark.catalog import pin_scope
     from spark_lever_spark.llm.dedup import _er_lsh_blocking_audit_plan
     from tests.plans import formatted_plan
 
-    # r19: the registered query pins its 1-row result eagerly; the
-    # join shapes are pinned on the extracted lazy builder (the kmeans
-    # builder precedent).
-    rel: list = []
-    df = _er_lsh_blocking_audit_plan(spark, sf_dir, rel)
-    try:
+    # The registered query pins its 1-row result eagerly; the join
+    # shapes are read on the extracted lazy builder (the kmeans
+    # builder precedent), in a pin scope that releases its pins.
+    def check():
+        df = _er_lsh_blocking_audit_plan(spark, sf_dir)
         plan = formatted_plan(df)
         assert "CartesianProduct" not in plan
         assert shuffle_join_count(df) + broadcast_join_count(df) >= 5
-    finally:
-        for cached in rel:
-            cached.unpersist()
+
+    pin_scope(check)
 
 
 def test_round17_kmeans_refine_broadcasts_centroids(spark, sf_dir):
@@ -674,13 +669,14 @@ def test_round17_kmeans_refine_broadcasts_centroids(spark, sf_dir):
     centroid tables; the only data-grain shuffles are the (cid, dim)
     update aggregation and the keyed argmin aggs. Pins the PRE-checkpoint
     plan via the extracted builder (the registered query returns an
-    eagerly checkpointed k-row result with truncated lineage, so its
-    caches can be unpersisted before return — ADVICE r17)."""
+    eagerly checkpointed k-row result with truncated lineage), in a pin
+    scope that releases the builder's two pins."""
+    from spark_lever_spark.catalog import pin_scope
     from spark_lever_spark.llm.similarity import _kmeans_lloyd_refine_plan
     from tests.plans import formatted_plan
 
-    df, q, a1 = _kmeans_lloyd_refine_plan(spark, sf_dir)
-    try:
+    def check():
+        df = _kmeans_lloyd_refine_plan(spark, sf_dir)
         plan = formatted_plan(df)
         assert "CartesianProduct" not in plan
         # iteration-1 assignments are persisted: every one of their five
@@ -690,25 +686,24 @@ def test_round17_kmeans_refine_broadcasts_centroids(spark, sf_dir):
         # cache IS there and no data-grain shuffle cross exists)
         assert "InMemoryTableScan" in plan
         assert shuffle_join_count(df) <= 5
-    finally:
-        a1.unpersist()
-        q.unpersist()
+
+    pin_scope(check)
 
 
 def test_round17_duplication_matrix_equi_only(spark, sf_dir):
     """Source x source matrix: pair grain from the band equi-join,
     meta attaches keyed, rollups keyed — zero nested loops."""
+    from spark_lever_spark.catalog import pin_scope
     from spark_lever_spark.llm.dedup import _cross_source_duplication_matrix_plan
 
-    # r19: plan pinned on the extracted lazy builder (the registered
-    # query returns an eagerly pinned result with truncated lineage).
-    rel: list = []
-    df = _cross_source_duplication_matrix_plan(spark, sf_dir, rel)
-    try:
+    # Plan read on the extracted lazy builder (the registered query
+    # returns an eagerly pinned result with truncated lineage), in a
+    # pin scope that releases its signature pin.
+    def check():
+        df = _cross_source_duplication_matrix_plan(spark, sf_dir)
         assert nested_loop_join_count(df) == 0
-    finally:
-        for cached in rel:
-            cached.unpersist()
+
+    pin_scope(check)
 
 
 def test_round18_bloom_audit_probe_is_broadcast_only(spark, sf_dir):

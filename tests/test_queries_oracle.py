@@ -7,6 +7,9 @@ The frame each test builds is also audited:
 
 - every query leaves no new entry in the temp directory and no active
   streaming query, and a streaming query leaves no new temp view;
+- every query leaves no pin its returned frame does not read: no RDD
+  it added to the context's persistent set that no ``LogicalRDD`` of
+  the frame's plan reads, and no CacheManager entry;
 - every batch query's plan (streaming queries run a drain to build
   theirs) is checked for the scale hazards in ``tests/plans.py``: no
   single-partition funnel over raw rows, no nested-loop join over raw
@@ -24,6 +27,7 @@ import pytest
 
 from spark_lever_spark import registry
 from tests.plans import (
+    PinAudit,
     has_file_scan,
     nested_loop_hazards,
     single_partition_scale_hazards,
@@ -124,7 +128,7 @@ PINNED_PLANS = {
         "the single-task merge kernel's output is eagerly localCheckpointed"
         " (the distributed loop returns its merges via createDataFrame)"
     ),
-    "clustering_coefficient_copurchase": "reads copurchase_edges(pinned=True)",
+    "clustering_coefficient_copurchase": "reads the checkpointed copurchase_edges",
     "cross_source_duplication_matrix": (
         "eager pin (<= source-domain² rows), then the LSH signature persist"
         " is released"
@@ -157,7 +161,7 @@ PINNED_PLANS = {
         "two BFS sweeps driven from the driver; the result row comes back "
         "via createDataFrame"
     ),
-    "edge_triangle_support_copurchase": "reads copurchase_edges(pinned=True)",
+    "edge_triangle_support_copurchase": "reads the checkpointed copurchase_edges",
     "embedding_top_pc_power_iteration": (
         "power-iteration vector is localCheckpointed each round"
     ),
@@ -205,10 +209,10 @@ PINNED_PLANS = {
     "lincoln_petersen_dedup_estimate": (
         "eager pin, then the paragraph and shingle persists are released"
     ),
-    "link_prediction_common_neighbors": "reads copurchase_edges(pinned=True)",
-    "link_prediction_pref_attachment": "reads copurchase_edges(pinned=True)",
+    "link_prediction_common_neighbors": "reads the checkpointed copurchase_edges",
+    "link_prediction_pref_attachment": "reads the checkpointed copurchase_edges",
     "link_prediction_resource_allocation": (
-        "reads copurchase_edges(pinned=True)"
+        "reads the checkpointed copurchase_edges"
     ),
     "lof_outliers_int8_cells": (
         "kNN table is localCheckpointed, then the quantized-table persist "
@@ -231,8 +235,8 @@ PINNED_PLANS = {
     "recursive_cte_dup_chains": (
         "recursive chain expansion, eagerly localCheckpointed"
     ),
-    "rich_club_coefficient_copurchase": "reads copurchase_edges(pinned=True)",
-    "triangle_count_copurchase": "reads copurchase_edges(pinned=True)",
+    "rich_club_coefficient_copurchase": "reads the checkpointed copurchase_edges",
+    "triangle_count_copurchase": "reads the checkpointed copurchase_edges",
 }
 
 # Files the JVM extracts once per process, whichever query first needs them.
@@ -253,12 +257,23 @@ def _temp_views(spark) -> set[str]:
 
 @contextmanager
 def _leaves_nothing(spark, name):
-    """Fail if the block leaves a temp-directory entry or an active
-    streaming query behind, or, for a streaming query, a temp view."""
+    """Fail if the block leaves a temp-directory entry, an active
+    streaming query or a pin its frame does not read behind, or, for a
+    streaming query, a temp view. The block passes the frame it built
+    through the callable it is given."""
     streaming = name in STREAMING
     entries = _temp_entries()
     views = _temp_views(spark) if streaming else set()
-    yield
+    pins = PinAudit(spark)
+    frames = []
+
+    def returned(df):
+        frames.append(df)
+        return df
+
+    yield returned
+    stray = pins.stray(*frames)
+    assert not stray, f"{name} left {stray} pinned that its frame does not read"
     left = _temp_entries() - entries
     assert not left, f"{name} left {sorted(left)} in the temp directory"
     assert not spark.streams.active, f"{name} left a streaming query running"
@@ -291,16 +306,16 @@ def test_plan_exemptions_name_batch_queries():
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_parity(spark, sf_dir, oracle_con, name):
-    with _leaves_nothing(spark, name):
-        df = ALL[name].fn(spark, sf_dir)
+    with _leaves_nothing(spark, name) as returned:
+        df = returned(ALL[name].fn(spark, sf_dir))
         _check_plan(name, df)
         compare(df, oracle_con.execute(ALL[name].oracle).df(), name)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_runs(spark, sf_dir, name):
-    with _leaves_nothing(spark, name):
-        df = ALL[name].fn(spark, sf_dir)
+    with _leaves_nothing(spark, name) as returned:
+        df = returned(ALL[name].fn(spark, sf_dir))
         _check_plan(name, df)
         rows = df.collect()
     assert rows is not None

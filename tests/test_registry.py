@@ -67,6 +67,24 @@ def test_no_round_named_modules():
     assert not files, files
 
 
+def test_pins_only_through_catalog():
+    """One pin discipline: the package persists, checkpoints and frees
+    frames only through catalog.pin / checkpoint / release, so every pin
+    a query makes is recorded in its pin scope."""
+    import re
+
+    pin_call = re.compile(r"\.(persist|localCheckpoint|unpersist)\(|StorageLevel")
+    pkg = Path(registry.__file__).parent
+    hits = [
+        f"{p.relative_to(pkg)}:{i}: {line.strip()}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p.name != "catalog.py" or p.parent != pkg
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if pin_call.search(line)
+    ]
+    assert not hits, hits
+
+
 # Definitions kept although no root reaches them, each for its reason.
 # A key is "<path under spark_lever_spark/>:<name>", a directory
 # ("<dir>/") or a bare name (any module).
