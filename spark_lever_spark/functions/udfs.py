@@ -117,13 +117,13 @@ def sql_registered_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return int(math.floor(x + 0.5)) if x >= 0 else -int(math.floor(-x + 0.5))
 
     spark.udf.register("to_cents", to_cents, "long")
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_udf_v")
     return spark.sql(
         """
         SELECT event_type, SUM(to_cents(value)) AS value_cents
-        FROM events_udf_v WHERE event_type IN ('click', 'view')
+        FROM {events} WHERE event_type IN ('click', 'view')
         GROUP BY event_type ORDER BY event_type
-        """
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -172,13 +172,13 @@ def udtf_word_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("word_offsets", WordOffsets)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
-    docs.createOrReplaceTempView("docs_udtf_v")
     return spark.sql(
         """
         SELECT d.doc_id, t.pos, t.word, t.start_off
-        FROM docs_udtf_v d, LATERAL word_offsets(d.text) t
+        FROM {docs} d, LATERAL word_offsets(d.text) t
         ORDER BY d.doc_id, t.pos
-        """
+        """,
+        docs=docs,
     )
 
 

@@ -165,11 +165,16 @@ def minhash_bands(
     # array in its OWN projection makes the per-token md5 run once per
     # doc (CollapseProject keeps the boundary: the producer is non-
     # cheap and consumed k times). Warm A/B at sf0.1: 1.07 -> 0.67 s
-    # for the bare signature map, identical rows.
+    # for the bare signature map, identical rows. The projection is
+    # tokens_distinct, then token_hash per token, written as ONE SQL
+    # expression like minhash_signature (the Column API spent about
+    # 129 py4j round trips building its two lambdas).
     hashed = docs.select(
         "doc_id",
-        F.transform(tokens_distinct(F.col("text")), lambda t: token_hash(t)).alias(
-            "_th"
+        F.expr(
+            r"transform(array_distinct(filter(split(text, '\\s+'), t -> t != '')),"
+            r" t -> CAST(conv(substring(md5(encode(t, 'UTF-8')), 1, 10), 16, 10)"
+            r" AS BIGINT)) AS _th"
         ),
     )
     sig = hashed.select(

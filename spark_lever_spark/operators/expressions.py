@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_lever_spark.catalog import checkpoint, load_table, pin
+from spark_lever_spark.catalog import checkpoint, load_table
 from spark_lever_spark.functions.exact import cents
 from spark_lever_spark.registry import register
 
@@ -575,25 +575,21 @@ def lateral_topk_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical plan as window_topk_per_group — the test is that the SQL
     surface exists and plans without a per-customer re-execution.
     The reference's 1.3 parser had no LATERAL at all."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "customer_lat_v"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "orders_lat_v"
-    )
     return spark.sql(
         """
         SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        FROM customer_lat_v c, LATERAL (
+        FROM {customer} c, LATERAL (
           SELECT o_orderkey, round(o_totalprice * 100) / 100 AS o_totalprice
-          FROM orders_lat_v
+          FROM {orders}
           WHERE o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey
           LIMIT 2
         ) o
         WHERE c.c_custkey < 300
         ORDER BY c_custkey, o_totalprice DESC, o_orderkey
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -645,13 +641,15 @@ def recursive_cte_dup_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm/graph.py. Depth is bounded by the largest bucket (single-digit
     here; the recursion budget mirrors graph.py's iteration budget).
 
-    The edge and root sets are MATERIALIZED (persist + count) before
-    the recursion: Spark re-executes the recursive step's inputs every
-    iteration, so an unmaterialized edge view would re-run the full
+    The edge and root sets are MATERIALIZED (eager localCheckpoint)
+    before the recursion: Spark re-executes the recursive step's inputs
+    every iteration, so an unmaterialized edge set would re-run the full
     gram-hashing scan per level (measured 5s -> ~1s at sf0.01; at
     corpus scale it is the difference between one pass and depth
     passes over the corpus). Same discipline as llm/graph.py's
-    per-round persist."""
+    per-round checkpoint. A persist would not do: ``spark.sql`` drops
+    the views of its frame arguments right after analysis, and
+    dropping a view uncaches the frame behind it."""
     from pyspark.sql.window import Window
 
     from spark_lever_spark.llm.curation import _md5_long, _token_ngrams
@@ -667,31 +665,29 @@ def recursive_cte_dup_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("fp").orderBy("doc_id")
     chain = fp.withColumn("prev_id", F.lag("doc_id").over(w))
-    edges = pin(
+    edges = checkpoint(
         chain.filter(F.col("prev_id").isNotNull())
         .select(F.col("prev_id").alias("src"), F.col("doc_id").alias("dst"))
     )
-    edges.count()  # materialize before the iterative consumer
-    roots = pin(
+    roots = checkpoint(
         chain.filter(F.col("prev_id").isNull())
         .join(edges, chain.doc_id == edges.src, "left_semi")
         .select("doc_id")
     )
-    roots.count()
-    edges.createOrReplaceTempView("dup_edges_v")
-    roots.createOrReplaceTempView("dup_roots_v")
     return checkpoint(
         spark.sql(
             """
             WITH RECURSIVE closure(root_id, member_id) AS (
-              SELECT doc_id, doc_id FROM dup_roots_v
+              SELECT doc_id, doc_id FROM {roots}
               UNION ALL
-              SELECT c.root_id, e.dst FROM closure c JOIN dup_edges_v e
+              SELECT c.root_id, e.dst FROM closure c JOIN {edges} e
                 ON e.src = c.member_id
             )
             SELECT root_id, member_id FROM closure
             ORDER BY root_id, member_id
-            """
+            """,
+            roots=roots,
+            edges=edges,
         )
     )
 

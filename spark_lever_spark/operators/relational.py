@@ -3169,25 +3169,25 @@ def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-aware anti join — one extra null-check branch, same equi
     shuffle). The probe set deliberately injects one NULL; at 100 TB
     both forms are the same anti-join shape."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("_niv_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("_niv_c")
     return spark.sql(
         """
 WITH probe AS (
-  SELECT o_custkey AS k FROM _niv_o WHERE o_totalprice > 400000
+  SELECT o_custkey AS k FROM {orders} WHERE o_totalprice > 400000
   UNION ALL SELECT NULL
 ),
 ni AS (
-  SELECT count(*) AS n_not_in FROM _niv_c
+  SELECT count(*) AS n_not_in FROM {customer}
   WHERE c_custkey NOT IN (SELECT k FROM probe)
 ),
 ne AS (
-  SELECT count(*) AS n_not_exists FROM _niv_c c
+  SELECT count(*) AS n_not_exists FROM {customer} c
   WHERE NOT EXISTS (SELECT 1 FROM probe p WHERE p.k = c.c_custkey)
 ),
-base AS (SELECT count(*) AS n_customers FROM _niv_c)
+base AS (SELECT count(*) AS n_customers FROM {customer})
 SELECT base.n_customers, ni.n_not_in, ne.n_not_exists FROM base, ni, ne
-"""
+""",
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

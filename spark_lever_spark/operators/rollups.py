@@ -93,16 +93,16 @@ ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
 )
 def grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (reference GroupingSets logical node,
-    HiveQl.scala:729) via spark.sql on a registered view."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    HiveQl.scala:729) via spark.sql over the orders frame."""
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
                round(sum(o_totalprice), 2) AS total
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -299,7 +299,6 @@ def window_range_interval_trailing(spark: SparkSession, sf_dir: str) -> DataFram
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
     # RANGE-with-interval frames are SQL-only surface in Spark (the
     # PySpark Window API takes long offsets); express the frame in SQL.
-    ev.createOrReplaceTempView("events_rangewin_v")
     return spark.sql(
         """
         SELECT user_id, ts, event_id,
@@ -311,9 +310,10 @@ def window_range_interval_trailing(spark: SparkSession, sf_dir: str) -> DataFram
                  PARTITION BY user_id ORDER BY ts
                  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW
                ) AS trailing_1h_events
-        FROM events_rangewin_v
+        FROM {ev}
         ORDER BY user_id, ts, event_id
-        """
+        """,
+        ev=ev,
     )
 
 

@@ -17,6 +17,10 @@ gracefully to local[k] test runs:
 - shuffle partitions default to a small multiple of local cores for
   tests; on a real cluster you'd set ``spark_lever.shuffle.partitions``
   to ~2-3x total executor cores and let AQE coalesce.
+- the generated-class cache sized to the engine's working set, and
+  class names free of stage ids: a recurring query mix reuses its
+  compiled whole-stage-codegen classes instead of recompiling them
+  with Janino on every pass.
 """
 
 from __future__ import annotations
@@ -47,6 +51,19 @@ _DEFAULTS: dict[str, str] = {
     # catalog (catalog.load_table) — DuckDB truncates nanos->micros the
     # same way.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Compiled whole-stage-codegen classes live in an LRU cache of
+    # 100 entries by default (static conf). One pass of perfbench's
+    # 16-query mix generates 272-285 distinct classes, so every pass
+    # evicted and recompiled all of them (about 280 Janino compiles,
+    # a third of the pass). 2000 holds that working set several times
+    # over.
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    # The cache is keyed by source text, and by default the class name
+    # embeds the codegen stage id. AQE numbers stages in the order
+    # their shuffle inputs finish, so a query with two independent
+    # branches (pack_documents_2048) generated a new class name, and
+    # recompiled, on a pass where the other branch finished first.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

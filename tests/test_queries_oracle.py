@@ -258,12 +258,11 @@ def _temp_views(spark) -> set[str]:
 @contextmanager
 def _leaves_nothing(spark, name):
     """Fail if the block leaves a temp-directory entry, an active
-    streaming query or a pin its frame does not read behind, or, for a
-    streaming query, a temp view. The block passes the frame it built
-    through the callable it is given."""
-    streaming = name in STREAMING
+    streaming query, a temp view or a pin its frame does not read
+    behind. The block passes the frame it built through the callable it
+    is given."""
     entries = _temp_entries()
-    views = _temp_views(spark) if streaming else set()
+    views = _temp_views(spark)
     pins = PinAudit(spark)
     frames = []
 
@@ -277,9 +276,8 @@ def _leaves_nothing(spark, name):
     left = _temp_entries() - entries
     assert not left, f"{name} left {sorted(left)} in the temp directory"
     assert not spark.streams.active, f"{name} left a streaming query running"
-    if streaming:
-        left = _temp_views(spark) - views
-        assert not left, f"{name} left temp views {sorted(left)}"
+    left = _temp_views(spark) - views
+    assert not left, f"{name} left temp views {sorted(left)}"
 
 
 def _check_plan(name, df):
