@@ -15,9 +15,4 @@ LLM-data-pipeline operators (dedup / similarity / text analysis /
 multimodal plumbing).
 """
 
-from spark_lever_spark.session import get_session, stop_session
-from spark_lever_spark.catalog import load_tables, register_views
-
-__all__ = ["get_session", "stop_session", "load_tables", "register_views"]
-
 __version__ = "0.1.0"

@@ -151,37 +151,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table that exists under ``sf_dir``."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            # via load_table so the events nanos->micros normalization
-            # applies on the view/SQL path too (same data both entry points)
-            out[name] = load_table(spark, sf_dir, name)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view so ``spark.sql`` works on the
-    same names the DuckDB oracle uses."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
-def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
-    """SQL entry point (reference SQLContext.sql, SQLContext.scala:913):
-    registers the driver tables as views and delegates to spark.sql —
-    the reference's whole parser/analyzer/optimizer pipeline (SURVEY.md
-    §3.2) IS Catalyst here; the dialect is a strict superset of the
-    reference's SqlParser (§2.F)."""
-    register_views(spark, sf_dir)
-    return spark.sql(query)
-
-
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
     """Parse a Spark byte-size conf value ("134217728b", "128m", plain
     int) — best-effort, falling back to ``default``."""

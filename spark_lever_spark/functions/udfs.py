@@ -117,14 +117,19 @@ def sql_registered_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return int(math.floor(x + 0.5)) if x >= 0 else -int(math.floor(-x + 0.5))
 
     spark.udf.register("to_cents", to_cents, "long")
-    return spark.sql(
-        """
-        SELECT event_type, SUM(to_cents(value)) AS value_cents
-        FROM {events} WHERE event_type IN ('click', 'view')
-        GROUP BY event_type ORDER BY event_type
-        """,
-        events=load_table(spark, sf_dir, "events"),
-    )
+    try:
+        return spark.sql(
+            """
+            SELECT event_type, SUM(to_cents(value)) AS value_cents
+            FROM {events} WHERE event_type IN ('click', 'view')
+            GROUP BY event_type ORDER BY event_type
+            """,
+            events=load_table(spark, sf_dir, "events"),
+        )
+    finally:
+        # the analysed plan holds the UDF itself, so its session-wide
+        # name can go as soon as spark.sql returns
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS to_cents")
 
 
 @register(
@@ -170,16 +175,20 @@ def udtf_word_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (pos, w, off)
                 off += len(w) + 1
 
-    spark.udtf.register("word_offsets", WordOffsets)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
-    return spark.sql(
-        """
-        SELECT d.doc_id, t.pos, t.word, t.start_off
-        FROM {docs} d, LATERAL word_offsets(d.text) t
-        ORDER BY d.doc_id, t.pos
-        """,
-        docs=docs,
-    )
+    spark.udtf.register("word_offsets", WordOffsets)
+    try:
+        return spark.sql(
+            """
+            SELECT d.doc_id, t.pos, t.word, t.start_off
+            FROM {docs} d, LATERAL word_offsets(d.text) t
+            ORDER BY d.doc_id, t.pos
+            """,
+            docs=docs,
+        )
+    finally:
+        # the analysed plan holds the UDTF itself (as in sql_registered_udf)
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS word_offsets")
 
 
 # ---------------------------------------------------------------------------

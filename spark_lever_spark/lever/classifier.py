@@ -41,7 +41,7 @@ class Classification:
 
 
 def classify_quartiles(
-    runtimes: dict[str, float], helper_margin_ms: float = 600.0
+    runtimes: dict[str, float], helper_margin_ms: float
 ) -> Classification:
     """Stage-1 quartile classification (TaskSetManager.scala:787-819)."""
     out = Classification()
@@ -67,7 +67,7 @@ def confirm_with_rates(
     potential: Classification,
     old_rates: dict[str, float],
     new_rates: dict[str, float],
-    last_final_helper: set[str] | None = None,
+    last_final_helper: set[str],
 ) -> Classification:
     """Stage-2 confirmation against input-rate drift
     (JobMonitor.scala:204-297, decidestragglerfrom{helpee,median,helper}).
@@ -81,7 +81,6 @@ def confirm_with_rates(
     - potential median: r < 1/a -> helper; <= b -> median; else helpee.
     - potential helper: r < a -> helper; <= a*b -> median; else helpee.
     """
-    last_final_helper = last_final_helper or set()
     a = potential.a_median_to_helper
     b = potential.b_helpee_to_median
     final = Classification(

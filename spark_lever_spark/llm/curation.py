@@ -2015,7 +2015,7 @@ def source_doc_cap_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GREEDY_K = 6
 
 
-def _greedy_cover_oracle(k: int = _GREEDY_K) -> str:
+def _greedy_cover_oracle() -> str:
     """Unrolled greedy set-cover oracle: round r picks the not-yet-
     selected doc with the maximum count of 3-shingles not covered by
     rounds 1..r-1 (ties -> min doc_id; docs whose shingles are all
@@ -2031,7 +2031,7 @@ p1 AS (SELECT doc_id, g FROM g1 ORDER BY g DESC, doc_id LIMIT 1),
 c1 AS (SELECT DISTINCT shingle FROM sh
        WHERE doc_id IN (SELECT doc_id FROM p1))"""
     ]
-    for r in range(2, k + 1):
+    for r in range(2, _GREEDY_K + 1):
         prev_sel = " UNION ALL ".join(
             f"SELECT doc_id FROM p{i}" for i in range(1, r)
         )
@@ -2052,7 +2052,7 @@ c{r} AS (SELECT shingle FROM c{r - 1}
         f"SELECT CAST({r} AS INT) AS selection_rank, doc_id, g AS gain,"
         f" (SELECT CAST(count(*) AS BIGINT) FROM c{r}) AS covered_cum"
         f" FROM p{r}"
-        for r in range(1, k + 1)
+        for r in range(1, _GREEDY_K + 1)
     )
     return ",\n".join(ctes) + f"\n{finals}\nORDER BY selection_rank"
 

@@ -75,22 +75,19 @@ def tokens_distinct(col: Column) -> Column:
     )
 
 
-def token_hash(col: Column, bits: int = 40) -> Column:
-    """Deterministic integer hash of a token via md5 (endianness- and
-    engine-independent, unlike Spark's murmur `hash`).
-
-    40 bits is plenty of collision headroom for token vocabularies
-    (2^-40 per pair); minhash_signature reduces mod its own prime
-    before multiplying, so the width is independent of the affine
-    family's overflow budget.
+def token_hash(col: Column) -> Column:
+    """Deterministic 60-bit integer hash of a token via md5 (endianness-
+    and engine-independent, unlike Spark's murmur `hash`): the first 15
+    hex digits, so it is a non-negative BIGINT in Spark and DuckDB. Its
+    callers are SimHash fingerprints, which read bits 0-59.
     """
-    nhex = bits // 4
-    return F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, nhex), 16, 10).cast(
+    return F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10).cast(
         "long"
     )
 
 
 _MINHASH_P = (1 << 31) - 1  # Mersenne prime 2147483647
+_MINHASH_K = 32  # signature length: every LSH banding splits these
 
 
 def _mh_coeff(tag: str, i: int, lo: int) -> int:
@@ -133,10 +130,9 @@ def minhash_signature(tokens_hashed: str, k: int) -> Column:
     return F.expr(f"array({terms})")
 
 
-def minhash_bands(
-    docs: DataFrame, k: int = 32, bands: int = 8
-) -> tuple[DataFrame, DataFrame]:
-    """(signatures, band table) for LSH over a ``doc_id, text`` frame.
+def minhash_bands(docs: DataFrame, bands: int = 8) -> tuple[DataFrame, DataFrame]:
+    """(signatures, band table) for LSH over a ``doc_id, text`` frame:
+    ``_MINHASH_K``-long signatures cut into ``bands`` bands.
 
     Returns ``sig`` = (doc_id, sig array<long>) and ``banded`` =
     (doc_id, band_idx, band_digest) — the long-format band table every
@@ -144,7 +140,7 @@ def minhash_bands(
     (dedup_minhash_lsh) and incremental delta dedup
     (dedup_incremental_minhash); the digests are md5-affine so DuckDB
     replays them exactly (_MINHASH_BAND_CTES)."""
-    rows_per_band = k // bands
+    rows_per_band = _MINHASH_K // bands
     # Parallelize the signature map: a single small parquet file scans
     # as ONE partition, serializing the k-hash minhash stage (measured
     # 7.4 s of the election query's candidate phase at sf0.1; the r12
@@ -179,7 +175,7 @@ def minhash_bands(
     )
     sig = hashed.select(
         "doc_id",
-        minhash_signature("_th", k).alias("sig"),
+        minhash_signature("_th", _MINHASH_K).alias("sig"),
     )
     # the band digests as one SQL expression too (minhash_signature)
     digests = ", ".join(
@@ -198,21 +194,24 @@ def minhash_bands(
     return sig, banded
 
 
-def sample_pair_jaccards(
-    docs: DataFrame, max_docs: int = 150, modulus: int | None = None
-) -> list[float]:
+# tune_lsh_banding's contract: sample at most this many docs, and keep
+# recall >= _LSH_MIN_RECALL on pairs at Jaccard _LSH_DUP_THRESHOLD
+_LSH_SAMPLE_DOCS = 150
+_LSH_DUP_THRESHOLD = 0.95
+_LSH_MIN_RECALL = 0.9
+
+
+def sample_pair_jaccards(docs: DataFrame) -> list[float]:
     """Deterministic sample of pairwise token-set Jaccard similarities.
 
     Docs are sampled by md5 hash-bucket on doc_id (row-property
     membership — no RNG, stable across runs/partitionings, the
-    curation.py sampling doctrine), capped at ``max_docs``; exact
-    Jaccard is computed for all sampled pairs in one bounded self-join
-    (≤ max_docs²/2 pairs — a few thousand rows, the one place a
+    curation.py sampling doctrine), capped at ``_LSH_SAMPLE_DOCS``;
+    exact Jaccard is computed for all sampled pairs on the driver
+    (≤ _LSH_SAMPLE_DOCS²/2 pairs — a few thousand, the one place a
     driver collect is legitimate, same as the LSH plane literals).
     """
-    if modulus is None:
-        n = docs.count()
-        modulus = max(1, n // max_docs)
+    modulus = max(1, docs.count() // _LSH_SAMPLE_DOCS)
     sample = (
         docs.select(F.col("doc_id"), tokens_distinct(F.col("text")).alias("ts"))
         .filter(
@@ -225,13 +224,13 @@ def sample_pair_jaccards(
         # ordered limit: a bare limit() picks partition-order-dependent
         # rows — the tuned (bands, rows) must not vary across runs
         .orderBy("doc_id")
-        .limit(max_docs)
+        .limit(_LSH_SAMPLE_DOCS)
     )
     # Pair enumeration runs on the DRIVER over the collected sample
     # (optimization r18, guide §1.2: the old broadcast self-join
     # materialized the filter+sort+limit subtree once per join side —
     # two extra full corpus scans plus two job round-trips for a
-    # ≤ max_docs² pair grid that fits in microseconds of Python).
+    # ≤ _LSH_SAMPLE_DOCS² pair grid that fits in microseconds of Python).
     # Tokenization stays IN Spark (the collected `ts` is
     # tokens_distinct's output), so only exact integer set arithmetic
     # happens here; len(A∩B)/|A∪B| over ints divides to the identical
@@ -251,13 +250,7 @@ def sample_pair_jaccards(
     return out
 
 
-def tune_lsh_banding(
-    docs: DataFrame,
-    k: int = 32,
-    dup_threshold: float = 0.95,
-    min_recall: float = 0.9,
-    max_docs: int = 150,
-) -> tuple[int, int]:
+def tune_lsh_banding(docs: DataFrame) -> tuple[int, int]:
     """Choose LSH ``(bands, rows)`` from the corpus's sampled
     similarity histogram instead of a fixed (8, 4).
 
@@ -265,14 +258,16 @@ def tune_lsh_banding(
     sparse web corpus but floods a high-background-similarity corpus
     with candidates (the documented density caveat: the synthetic
     31-word vocabulary gives ordinary pairs J ≈ 0.5-0.8). This helper
-    picks, among all (b, r) with b·r = k, the banding that MINIMIZES
-    the expected candidate-pair count over the sampled background
-    histogram — Σ_pairs P(candidate | J) with P = 1 − (1 − J^r)^b —
-    subject to P(candidate | dup_threshold) ≥ min_recall. Pure
+    picks, among all (b, r) with b·r = _MINHASH_K, the banding that
+    MINIMIZES the expected candidate-pair count over the sampled
+    background histogram — Σ_pairs P(candidate | J) with
+    P = 1 − (1 − J^r)^b — subject to
+    P(candidate | _LSH_DUP_THRESHOLD) ≥ _LSH_MIN_RECALL. Pure
     driver-side arithmetic over a bounded sample; the fixed form
     remains the registry/oracle parity path.
     """
-    sims = sample_pair_jaccards(docs, max_docs=max_docs)
+    sims = sample_pair_jaccards(docs)
+    k, dup_threshold = _MINHASH_K, _LSH_DUP_THRESHOLD
     # descending r: on an all-zero background (sparse corpus) every
     # option ties at expected 0 — prefer the most selective banding
     options = [(k // r, r) for r in range(k, 0, -1) if k % r == 0]
@@ -287,7 +282,7 @@ def tune_lsh_banding(
         # explicit form sidesteps both; ADVICE round 8 +
         # functions/exact.py doctrine).
         recall = math.floor((1.0 - (1.0 - dup_threshold**r) ** b) * 1e6 + 0.5) / 1e6
-        if recall < min_recall:
+        if recall < _LSH_MIN_RECALL:
             continue
         expected = (
             math.floor(sum(1.0 - (1.0 - s**r) ** b for s in sims) * 1e6 + 0.5)
@@ -301,12 +296,12 @@ def tune_lsh_banding(
     return best[1], best[2]
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact dedup: keep the min-id representative per content digest."""
     return (
-        df.withColumn("fp", content_fingerprint(F.col(text_col)))
+        docs.withColumn("fp", content_fingerprint(F.col("text")))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
     )
 
 
@@ -526,7 +521,7 @@ SELECT id_a, id_b, est_jaccard FROM est ORDER BY id_a, id_b
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(k=32) + LSH banding (8 bands x 4 rows) candidate pairs.
 
-    Pipeline: tokens → 60-bit md5 hashes → k-permutation signature →
+    Pipeline: tokens → 40-bit md5 hashes → k-permutation signature →
     band digests → self-join on (band_idx, band_digest) → distinct
     candidate pairs with estimated similarity = fraction of matching
     signature positions. At scale the band join is the only shuffle
@@ -534,14 +529,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     return checkpoint(
-        lsh_candidate_pairs(docs, k=32, bands=8).orderBy("id_a", "id_b")
+        lsh_candidate_pairs(docs).orderBy("id_a", "id_b")
     )
 
 
-def lsh_candidate_pairs(docs: DataFrame, k: int = 32, bands: int = 8) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame, bands: int = 8) -> DataFrame:
     """Distinct LSH candidate pairs ``(id_a, id_b, est_jaccard)`` for
-    any ``(bands, k // bands)`` banding — the shared core of the fixed
-    and tuned registry queries.
+    any ``(bands, _MINHASH_K // bands)`` banding — the shared core of
+    the fixed and tuned registry queries.
 
     The band self-join carries ONLY (doc_id, band digest): duplicate
     docs share all bands, so routing the k-long signatures through the
@@ -550,7 +545,7 @@ def lsh_candidate_pairs(docs: DataFrame, k: int = 32, bands: int = 8) -> DataFra
     and a shuffle explosion at scale. Pairs are deduplicated down to
     bare id pairs first; signatures re-attach afterwards, once per
     distinct pair."""
-    sig, banded = minhash_bands(docs, k=k, bands=bands)
+    sig, banded = minhash_bands(docs, bands=bands)
     # sig feeds THREE consumers (the band table and both signature
     # re-attach sides), so without a persist the k-hash signature map
     # — the pipeline's expensive stage — runs three times (the r16
@@ -580,7 +575,7 @@ def lsh_candidate_pairs(docs: DataFrame, k: int = 32, bands: int = 8) -> DataFra
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m
         )
-    ).cast("double") / F.lit(float(k))
+    ).cast("double") / F.lit(float(_MINHASH_K))
     return cand.select("id_a", "id_b", F.round(est, 4).alias("est_jaccard"))
 
 
@@ -686,11 +681,9 @@ def dedup_minhash_lsh_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns) and the resulting pair set. The fixed 8x4 form
     (dedup_minhash_lsh) remains the parity path."""
     docs = load_table(spark, sf_dir, "documents")
-    b, r = tune_lsh_banding(
-        docs, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=150
-    )
+    b, r = tune_lsh_banding(docs)
     return checkpoint(
-        lsh_candidate_pairs(docs, k=32, bands=b)
+        lsh_candidate_pairs(docs, bands=b)
         .select(
             F.lit(b).alias("bands"),
             F.lit(r).alias("rows_per_band"),
@@ -754,7 +747,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(tokens_distinct(F.col("text"))).alias("word")
-    ).withColumn("h", token_hash(F.col("word"), bits=60))
+    ).withColumn("h", token_hash(F.col("word")))
     bit = toks.select(
         "doc_id",
         F.explode(F.sequence(F.lit(0), F.lit(59))).alias("j"),
@@ -2234,10 +2227,8 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain; per-threshold rollups are a 5x fan-out of it, all
     equi-keyed."""
     docs = load_table(spark, sf_dir, "documents")
-    b, _r = tune_lsh_banding(
-        docs, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=150
-    )
-    pairs = lsh_candidate_pairs(docs, k=32, bands=b)
+    b, _r = tune_lsh_banding(docs)
+    pairs = lsh_candidate_pairs(docs, bands=b)
     th = spark.range(5).selectExpr(
         "CAST(500 + id * 100 AS BIGINT) AS t_milli"
     )
@@ -2314,7 +2305,7 @@ def simhash_bit_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(tokens_distinct(F.col("text"))).alias("word")
-    ).withColumn("h", token_hash(F.col("word"), bits=60))
+    ).withColumn("h", token_hash(F.col("word")))
     bit = toks.select(
         "doc_id",
         F.explode(F.sequence(F.lit(0), F.lit(59))).alias("j"),
@@ -2429,7 +2420,7 @@ def er_cross_source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bare distinct band pairs — signatures deliberately NOT attached
     # yet (the whole point of the r19 reorder); sig is pinned exactly
     # as in lsh_candidate_pairs.
-    sig, banded = minhash_bands(docs, k=32, bands=8)
+    sig, banded = minhash_bands(docs)
     sig = pin(sig)
     ba, bb = banded.alias("a"), banded.alias("b")
     pairs = (

@@ -74,13 +74,14 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cell_centroids(emb: DataFrame, cell_col: str = "label") -> DataFrame:
-    """Per-cell centroid, computed distributively: posexplode the
+def cell_centroids(emb: DataFrame) -> DataFrame:
+    """Per-cell centroid (a cell is a ``label``), computed
+    distributively: posexplode the
     vectors, average per (cell, dimension), reassemble ordered arrays.
     Two narrow shuffles on small keys; no vector ever collects to the
     driver."""
     by_dim = emb.select(
-        F.col(cell_col).alias("cell"),
+        F.col("label").alias("cell"),
         F.posexplode(as_double(F.col("embedding"))).alias("pos", "x"),
     ).groupBy("cell", "pos").agg(F.avg("x").alias("m"))
     return by_dim.groupBy("cell").agg(

@@ -180,6 +180,8 @@ _CONTRACT_MIN_EDGES = 1_000_000
 # ~32 MB of Arrow payload — bounded by construction, same class as a
 # broadcast side.
 _LOCAL_GRAPH_MAX_EDGES = 2_000_000
+# the distributed star loop's round budget; O(log n) rounds suffice
+_CC_MAX_ITER = 25
 
 
 def _single_task(
@@ -257,7 +259,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Return ``(node, component)`` where component is the minimum node
     id in each connected component. Nodes that appear in no edge are
@@ -338,11 +339,11 @@ def connected_components(
         )
         release(e)
     else:
-        # max_iter + 1 passes: detecting the fixpoint costs one
+        # _CC_MAX_ITER + 1 passes: detecting the fixpoint costs one
         # comparison round beyond the round that PRODUCES it, so a
         # graph converging exactly at the budget must not be reported
         # as divergent
-        for _ in range(max_iter + 1):
+        for _ in range(_CC_MAX_ITER + 1):
             e_next = checkpoint(_small_star(_large_star(e)))
             # Both sides are distinct sets, so equal cardinality plus
             # one-direction containment proves set equality — one
@@ -357,7 +358,7 @@ def connected_components(
                 break
         else:
             raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds"
+                f"connected_components did not converge in {_CC_MAX_ITER} rounds"
             )
         # Fixpoint is a star forest oriented node -> root (= component
         # min) over the (possibly contracted) node set; when the
@@ -551,7 +552,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LPA_ROUNDS = 5
 
 
-def _lpa_oracle(rounds: int = _LPA_ROUNDS) -> str:
+def _lpa_oracle() -> str:
     """Unrolled sync-LPA oracle: DuckDB can't express the per-round
     mode-with-tie-break inside a recursive CTE (aggregates are barred
     from the recursive term), so the fixed round count is unrolled
@@ -571,7 +572,7 @@ edges AS (
 ),
 l0 AS (SELECT DISTINCT v, v AS lbl FROM edges)"""
     ]
-    for k in range(1, rounds + 1):
+    for k in range(1, _LPA_ROUNDS + 1):
         ctes.append(f"""v{k} AS (
   SELECT e.v, l.lbl, CAST(count(*) AS BIGINT) AS c
   FROM edges e JOIN l{k - 1} l ON l.v = e.u
@@ -589,7 +590,7 @@ l{k} AS (
         + ",\n".join(ctes)
         + f"""
 SELECT lbl AS community, CAST(count(*) AS BIGINT) AS size
-FROM l{rounds}
+FROM l{_LPA_ROUNDS}
 GROUP BY lbl ORDER BY size DESC, community
 """
     )
@@ -666,7 +667,7 @@ _KCORE_ROUNDS = 5
 _KCORE_K = 2
 
 
-def _kcore_oracle(rounds: int = _KCORE_ROUNDS, k: int = _KCORE_K) -> str:
+def _kcore_oracle() -> str:
     """Unrolled k-core peel oracle (aggregates are barred from
     recursive CTE terms — same mechanical unroll as the LPA oracle)."""
     ctes = [
@@ -680,13 +681,13 @@ e0 AS MATERIALIZED (
   GROUP BY 1, 2 HAVING count(*) >= 2
 )"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, _KCORE_ROUNDS + 1):
         ctes.append(f"""d{i} AS MATERIALIZED (
   SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
     SELECT pa AS v FROM e{i - 1} UNION ALL SELECT pb FROM e{i - 1}
   ) GROUP BY v
 ),
-keep{i} AS MATERIALIZED (SELECT v FROM d{i} WHERE deg >= {k}),
+keep{i} AS MATERIALIZED (SELECT v FROM d{i} WHERE deg >= {_KCORE_K}),
 e{i} AS MATERIALIZED (
   SELECT e.pa, e.pb FROM e{i - 1} e
   JOIN keep{i} ka ON ka.v = e.pa
@@ -699,7 +700,7 @@ e{i} AS MATERIALIZED (
                                   UNION ALL SELECT pb FROM e{i})))
          AS n_vertices,
        (SELECT CAST(count(*) AS BIGINT) FROM e{i}) AS n_edges"""
-        for i in range(1, rounds + 1)
+        for i in range(1, _KCORE_ROUNDS + 1)
     )
     return "WITH " + ",\n".join(ctes) + "\n" + stats + "\nORDER BY round"
 
@@ -975,7 +976,7 @@ def _harmonic_kernel(
     )
 
 
-def _pagerank_oracle(rounds: int = _PR_ROUNDS) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled integer-exact PageRank oracle (aggregates are barred
     from recursive CTE terms — the LPA/k-core mechanical unroll)."""
     ctes = [
@@ -1000,7 +1001,7 @@ r0 AS MATERIALIZED (
   SELECT v, CAST({_PR_R0} AS BIGINT) AS r FROM deg
 )"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, _PR_ROUNDS + 1):
         ctes.append(f"""r{i} AS MATERIALIZED (
   SELECT dg.v,
          CAST({_PR_TELEPORT} + COALESCE(SUM((r.r * 17) // (20 * sd.d)), 0)
@@ -1014,7 +1015,7 @@ r0 AS MATERIALIZED (
     return (
         "WITH "
         + ",\n".join(ctes)
-        + f"\nSELECT v AS part, r AS rank_units FROM r{rounds}"
+        + f"\nSELECT v AS part, r AS rank_units FROM r{_PR_ROUNDS}"
         + "\nORDER BY rank_units DESC, part"
     )
 
@@ -1202,12 +1203,10 @@ def dedup_cluster_quality_election(
     from spark_lever_spark.llm.textstats import token_count
 
     docs = load_table(spark, sf_dir, "documents")
-    b, _r = tune_lsh_banding(
-        docs, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=150
-    )
+    b, _r = tune_lsh_banding(docs)
     # the candidate pairs are the dominant cost: ~3.7M surviving pairs
     # at sf0.1, a density property of the synthetic corpus
-    pairs = lsh_candidate_pairs(docs, k=32, bands=b).filter(
+    pairs = lsh_candidate_pairs(docs, bands=b).filter(
         F.col("est_jaccard") >= 0.5
     )
     comp = connected_components(pairs, src="id_a", dst="id_b")
@@ -2342,7 +2341,7 @@ def harmonic_closeness_sampled_bfs(
     )
 
 
-def _ppr_oracle(rounds: int = _PR_ROUNDS) -> str:
+def _ppr_oracle() -> str:
     """Unrolled integer-exact PERSONALIZED PageRank oracle — the
     _pagerank_oracle mechanical unroll with teleport mass restricted
     to the seed set (parts of one brand)."""
@@ -2376,7 +2375,7 @@ r0 AS MATERIALIZED (
   FROM deg dg LEFT JOIN seeds s ON s.v = dg.v
 )"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, _PR_ROUNDS + 1):
         ctes.append(f"""r{i} AS MATERIALIZED (
   SELECT dg.v,
          CAST(CASE WHEN s.v IS NOT NULL THEN {_PR_TELEPORT} ELSE 0 END
@@ -2392,7 +2391,7 @@ r0 AS MATERIALIZED (
     return (
         "WITH "
         + ",\n".join(ctes)
-        + f"\nSELECT v AS part, r AS rank_units FROM r{rounds}"
+        + f"\nSELECT v AS part, r AS rank_units FROM r{_PR_ROUNDS}"
         + "\nWHERE r > 0"
         + "\nORDER BY rank_units DESC, part"
     )
@@ -2428,7 +2427,10 @@ def personalized_pagerank_copurchase(
     return _pagerank(checkpoint(copurchase_edges(spark, sf_dir)), seeds)
 
 
-def _hits_oracle(rounds: int = 3) -> str:
+_HITS_ROUNDS = 3
+
+
+def _hits_oracle() -> str:
     """Unrolled integer-exact HITS oracle over the customer→part
     purchase bipartite graph, with the power-iteration sign-free
     max-normalization (all scores non-negative: floors are exact and
@@ -2442,7 +2444,7 @@ a0 AS MATERIALIZED (
   SELECT DISTINCT p, CAST(1000000 AS BIGINT) AS a FROM e
 )"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, _HITS_ROUNDS + 1):
         ctes.append(f"""hu{i} AS MATERIALIZED (
   SELECT e.c, SUM(CAST(a.a AS HUGEINT)) AS h
   FROM e JOIN a{i - 1} a ON a.p = e.p GROUP BY e.c
@@ -2465,9 +2467,9 @@ a{i} AS MATERIALIZED (
         "WITH "
         + ",\n".join(ctes)
         + f"""
-SELECT 'authority' AS kind, p AS node, a AS score_micro FROM a{rounds}
+SELECT 'authority' AS kind, p AS node, a AS score_micro FROM a{_HITS_ROUNDS}
 UNION ALL
-SELECT 'hub', c, h FROM h{rounds}
+SELECT 'hub', c, h FROM h{_HITS_ROUNDS}
 ORDER BY kind, score_micro DESC, node"""
     )
 
@@ -2516,7 +2518,7 @@ def hits_hubs_authorities_purchases(
                 e,
                 ("c", "p"),
                 "kind string, node long, score_micro long",
-                partial(_hits_kernel, rounds=3),
+                partial(_hits_kernel, rounds=_HITS_ROUNDS),
             ).orderBy("kind", F.desc("score_micro"), "node")
         )
     auth = e.select("p").distinct().select(
@@ -2531,7 +2533,7 @@ def hits_hubs_authorities_purchases(
     # a 1 GB vanilla driver heap (the BFS/CC lineage doctrine, plus a
     # plan-growth reason specific to the normalize-by-own-aggregate
     # shape; the vectors themselves are node-count-sized and tiny).
-    for _ in range(3):
+    for _ in range(_HITS_ROUNDS):
         # The un-normalized sum vector is referenced twice (its own max
         # + the normalize select); a lazy persist gives the reuse
         # without an extra eager job per half-round — the plan growth

@@ -82,9 +82,9 @@ def decode_image_batch(payloads: pd.Series) -> pd.DataFrame:
 def decode_media(
     df: DataFrame,
     decoder: Callable[[pd.Series], pd.DataFrame] = decode_image_batch,
-    schema: T.StructType = DECODED_SCHEMA,
 ) -> DataFrame:
-    """mapInPandas decode: one Arrow batch of payloads per Python call.
+    """mapInPandas decode: one Arrow batch of payloads per Python call,
+    to ``DECODED_SCHEMA`` rows.
 
     ``decoder`` is injectable: a production deployment passes its real
     codec (e.g. a PIL/av-backed batch function returning the same
@@ -99,7 +99,7 @@ def decode_media(
             out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out
 
-    return df.mapInPandas(run, schema)
+    return df.mapInPandas(run, DECODED_SCHEMA)
 
 
 @register(

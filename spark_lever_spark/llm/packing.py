@@ -17,12 +17,11 @@ Memory contract (the 100 TB concern): the packer streams Arrow batches
 through the first-fit loop — Python holds one batch plus a per-bin fill
 counter, never the whole partition. The required ascending-id order
 comes from a Spark-side ``sortWithinPartitions`` (external, spillable
-sort — the JVM absorbs the partition, not Python). Callers with skewed
-or unbounded partitions pass ``max_partition_tokens`` to get a
-token-budgeted hash repartition first, so per-partition work is bounded
-by design rather than by luck. ``bin_fill`` is derived downstream by a
-window over ``bin_id`` — a ~24-byte/row shuffle, the price of not
-buffering the partition in Python.
+sort — the JVM absorbs the partition, not Python). Per-partition work
+follows the input's partitioning: the packer adds no repartition, so
+a skewed input packs its largest partition in one task. ``bin_fill``
+is derived downstream by a window over ``bin_id`` — a ~24-byte/row
+shuffle, the price of not buffering the partition in Python.
 """
 
 from __future__ import annotations
@@ -95,7 +94,6 @@ def pack_documents(
     id_col: str,
     n_tokens_col: str,
     capacity: int,
-    max_partition_tokens: int | None = None,
 ) -> DataFrame:
     """Greedy first-fit sequence packing: assign each document to a
     bin so no bin exceeds ``capacity`` tokens (documents larger than
@@ -105,18 +103,8 @@ def pack_documents(
     partitioning: docs are processed in ascending id order within each
     partition (Spark-side sortWithinPartitions, so ordering costs JVM
     spillable-sort memory, not Python memory).
-
-    ``max_partition_tokens`` bounds per-partition work: one cheap agg
-    measures the corpus token total, then a hash repartition sizes
-    partitions so the expected token load per partition stays under the
-    budget — the memory contract for skewed or unbounded inputs.
     """
-    src = df.select(id_col, n_tokens_col)
-    if max_partition_tokens is not None:
-        total = src.agg(F.sum(n_tokens_col)).first()[0] or 0
-        n_parts = max(1, -(-int(total) // int(max_partition_tokens)))
-        src = src.repartition(n_parts, id_col)
-    src = src.sortWithinPartitions(id_col)
+    src = df.select(id_col, n_tokens_col).sortWithinPartitions(id_col)
 
     out_schema = f"{id_col} long, {n_tokens_col} long, bin_id long"
 

@@ -374,7 +374,7 @@ def _bpe_local(cur: DataFrame, rounds: int) -> DataFrame:
     )
 
 
-def _bpe_oracle(rounds: int = _BPE_ROUNDS) -> str:
+def _bpe_oracle() -> str:
     """Unrolled BPE-merge oracle (each round's top pair feeds the next
     round's corpus rewrite — the LPA/k-core mechanical unroll)."""
     ctes = [
@@ -389,7 +389,7 @@ s0 AS MATERIALIZED (
   FROM words
 )"""
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _BPE_ROUNDS + 1):
         ctes.append(f"""p{r} AS MATERIALIZED (
   SELECT sy[CAST(t.i AS INT)] AS a, sy[CAST(t.i AS INT) + 1] AS b,
          CAST(SUM(n) AS BIGINT) AS cnt
@@ -409,7 +409,7 @@ s{r} AS MATERIALIZED (
     finals = "\nUNION ALL\n".join(
         f"SELECT CAST({r} AS INT) AS round, a AS left_sym, b AS right_sym,"
         f" cnt FROM t{r}"
-        for r in range(1, rounds + 1)
+        for r in range(1, _BPE_ROUNDS + 1)
     )
     return "WITH " + ",\n".join(ctes) + "\n" + finals + "\nORDER BY round"
 
@@ -550,7 +550,7 @@ def text_boolean_and_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_apply_oracle(rounds: int = _BPE_ROUNDS) -> str:
+def _bpe_apply_oracle() -> str:
     """Unrolled oracle for bpe_apply_encode: the SAME per-round pair
     election as _bpe_oracle, but the word string ``w`` rides through
     every rewrite so the final symbol counts can join back onto the
@@ -567,7 +567,7 @@ a0 AS MATERIALIZED (
   FROM words
 )"""
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _BPE_ROUNDS + 1):
         ctes.append(f"""p{r} AS MATERIALIZED (
   SELECT sy[CAST(t.i AS INT)] AS a, sy[CAST(t.i AS INT) + 1] AS b,
          CAST(SUM(n) AS BIGINT) AS cnt
@@ -591,7 +591,7 @@ a{r} AS MATERIALIZED (
         + f""",
 wmap AS MATERIALIZED (
   SELECT w, CAST(len(string_split(sym, ' ')) AS BIGINT) AS n_sym
-  FROM a{rounds}
+  FROM a{_BPE_ROUNDS}
 ),
 doc_tok AS (
   SELECT doc_id, tok FROM (

@@ -8,7 +8,7 @@ and drop non-matching rows map-side so the shuffle (or broadcast-join
 probe) only sees survivors. Spark's own optimizer does this internally
 (`spark.sql.optimizer.runtime.bloomFilter.enabled`); this module
 implements the pattern explicitly as a reusable operator so the plan
-shape is visible, pinned, and tunable (bits/hashes per use-site).
+shape is visible and pinned.
 
 Design (all JVM-side, zero Python in the row path):
 - the bitmap is built distributively: explode each key into k=3
@@ -39,17 +39,16 @@ from spark_lever_spark.functions.exact import cents
 from spark_lever_spark.registry import register
 
 _SEEDS = (0x5EED1, 0x5EED2, 0x5EED3)
+_NBITS = 1 << 17
 
 
-def bloom_bitmap(
-    keys: DataFrame, key_col: str, nbits: int = 1 << 17
-) -> DataFrame:
+def bloom_bitmap(keys: DataFrame, key_col: str) -> DataFrame:
     """One-row DataFrame ``bf: map<long,long>`` — a Bloom bitmap over
-    ``keys[key_col]`` (k=3 xxhash64 probes), built with distributed
-    aggregation (never collected to the driver)."""
+    ``keys[key_col]`` (``_NBITS`` bits, k=3 xxhash64 probes), built
+    with distributed aggregation (never collected to the driver)."""
     positions = F.array(
         *[
-            F.pmod(F.xxhash64(F.col(key_col), F.lit(s)), F.lit(nbits))
+            F.pmod(F.xxhash64(F.col(key_col), F.lit(s)), F.lit(_NBITS))
             for s in _SEEDS
         ]
     )
@@ -69,9 +68,7 @@ def bloom_bitmap(
     )
 
 
-def bloom_prune(
-    fact: DataFrame, key_col: str, bitmap: DataFrame, nbits: int = 1 << 17
-) -> DataFrame:
+def bloom_prune(fact: DataFrame, key_col: str, bitmap: DataFrame) -> DataFrame:
     """Filter ``fact`` to rows whose ``key_col`` MAY be in the bitmap
     (no false negatives). Map-side only: the 1-row bitmap arrives by
     broadcast, each row pays 3 hash+lookup ops, and the plan contains
@@ -81,7 +78,7 @@ def bloom_prune(
     for i, s in enumerate(_SEEDS):
         probed = probed.withColumn(
             f"_bp{i}",
-            F.pmod(F.xxhash64(F.col(key_col), F.lit(s)), F.lit(nbits)),
+            F.pmod(F.xxhash64(F.col(key_col), F.lit(s)), F.lit(_NBITS)),
         )
         checks.append(
             f"(shiftright(coalesce(element_at(bf, shiftright(_bp{i}, 6)),"

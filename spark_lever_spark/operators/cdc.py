@@ -28,9 +28,7 @@ from spark_lever_spark.registry import register
 _INSERT_OFFSET = 10_000_000
 
 
-def merge_apply(
-    base: DataFrame, batch: DataFrame, key: str, op_col: str = "op"
-) -> DataFrame:
+def merge_apply(base: DataFrame, batch: DataFrame, key: str) -> DataFrame:
     """MERGE INTO semantics via one keyed full outer join.
 
     ``batch`` rows carry ``op`` in {'U','D'}: U upserts the batch row's
@@ -39,7 +37,7 @@ def merge_apply(
     shuffle on the key (or zero with co-bucketed inputs —
     tests/test_bucketing.py's contract).
     """
-    payload = [c for c in batch.columns if c not in (key, op_col)]
+    payload = [c for c in batch.columns if c not in (key, "op")]
     b = base.alias("t")
     c = batch.alias("s")
     j = b.join(c, F.col(f"t.{key}") == F.col(f"s.{key}"), "full")
@@ -52,18 +50,18 @@ def merge_apply(
         ],
     ]
     return j.filter(
-        F.col(f"s.{op_col}").isNull() | (F.col(f"s.{op_col}") != F.lit("D"))
+        F.col("s.op").isNull() | (F.col("s.op") != F.lit("D"))
     ).select(*cols)
 
 
-def compact_cdc(batches: DataFrame, key: str, seq_col: str = "seq") -> DataFrame:
+def compact_cdc(batches: DataFrame, key: str) -> DataFrame:
     """Collapse an ordered change feed to the latest op per key
     (row_number over seq desc — one window shuffle on the key)."""
-    w = Window.partitionBy(key).orderBy(F.col(seq_col).desc())
+    w = Window.partitionBy(key).orderBy(F.col("seq").desc())
     return (
         batches.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", seq_col)
+        .drop("_rn", "seq")
     )
 
 

@@ -23,7 +23,7 @@ ranking engine:
 The result is bit-identical to the single-task form: ranks are exact
 integers and running sums add the same longs in the same order. Only the
 physical plan changes — no task ever sees more than ~1/num_bins of the
-data, so the shape survives a 100×/1000× scale-up (raise ``num_bins``
+data, so the shape survives a 100×/1000× scale-up (raise ``_NUM_BINS``
 toward the cluster's core count). Degenerate input (all keys equal)
 collapses to one bin and degrades gracefully to the single-task form.
 """
@@ -33,12 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = [
-    "with_global_rank",
-    "ntile_from_rank",
-    "with_grouped_cumsum",
-    "with_grouped_prefix_max",
-]
+_NUM_BINS = 64
 
 
 def with_global_rank(
@@ -46,7 +41,7 @@ def with_global_rank(
     key: Column,
     tiebreaks: list[str],
     value: str | None = None,
-    num_bins: int = 64,
+    num_bins: int = _NUM_BINS,
 ) -> DataFrame:
     """Attach exact global-order columns to ``df`` without a global sort.
 
@@ -147,7 +142,6 @@ def with_grouped_cumsum(
     bin_key: Column,
     order_cols: list[str],
     value: str | list[str],
-    num_bins: int = 64,
 ) -> DataFrame:
     """Running sum of ``value`` within each ``part_cols`` group,
     ordered by ``order_cols`` — 2-passed so a LOW-cardinality group key
@@ -166,7 +160,7 @@ def with_grouped_cumsum(
     cumulative sum); ``value`` may be a list, yielding one
     ``_cum_<name>`` column per entry instead of ``_cum``.
     """
-    binned = _quantile_binned(df, bin_key, num_bins)
+    binned = _quantile_binned(df, bin_key)
     single = isinstance(value, str)
     values = [value] if single else list(value)
     w_loc = (
@@ -247,13 +241,12 @@ def _bin_expr(d: DataFrame, keycol: str, num_bins: int) -> Column:
     return F.size(F.filter(lit_bounds, lambda b: F.col(keycol) > b))
 
 
-def _quantile_binned(
-    df: DataFrame, bin_key: Column, num_bins: int
-) -> DataFrame:
-    """Attach ``_cbin``: a literal-quantile-bounds bucket of
-    ``bin_key`` — monotone in the key, balanced by construction."""
+def _quantile_binned(df: DataFrame, bin_key: Column) -> DataFrame:
+    """Attach ``_cbin``: one of ``_NUM_BINS`` literal-quantile-bounds
+    buckets of ``bin_key`` — monotone in the key, balanced by
+    construction."""
     d = df.withColumn("_ckey", bin_key)
-    return d.withColumn("_cbin", _bin_expr(d, "_ckey", num_bins)).drop("_ckey")
+    return d.withColumn("_cbin", _bin_expr(d, "_ckey", _NUM_BINS)).drop("_ckey")
 
 
 def with_grouped_prefix_max(
@@ -262,7 +255,6 @@ def with_grouped_prefix_max(
     bin_key: Column,
     order_cols: list[str],
     value: str,
-    num_bins: int = 64,
 ) -> DataFrame:
     """EXCLUSIVE running max of ``value`` within each ``part_cols``
     group ordered by ``order_cols`` — the prefix-max companion to
@@ -272,7 +264,7 @@ def with_grouped_prefix_max(
     single-task ``rowsBetween(unboundedPreceding, -1)`` window
     exactly). Same binning/broadcast-offset shape; parallel across
     buckets."""
-    binned = _quantile_binned(df, bin_key, num_bins)
+    binned = _quantile_binned(df, bin_key)
     w_loc = (
         Window.partitionBy(*part_cols, "_cbin")
         .orderBy(*order_cols)

@@ -739,27 +739,30 @@ def skyline_parts_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def fuzzy_candidate_pairs(
-    names: DataFrame, max_edit: int = 3, cell: int = 4
-) -> DataFrame:
+# fuzzy_candidate_pairs keeps every pair within _FUZZY_MAX_EDIT edits;
+# a length cell wider than that lets the +/-1 cells cover the band
+_FUZZY_MAX_EDIT = 3
+_FUZZY_CELL = 4
+
+
+def fuzzy_candidate_pairs(names: DataFrame) -> DataFrame:
     """Equi-only candidate enumeration for a blocked edit-distance
     self-join over DISTINCT names (columns: p_name, n_parts, noun).
 
-    Two blocking keys, both implied by ``levenshtein <= max_edit``:
-    the head noun, AND a length band — edit distance d means
-    ``|len(a) - len(b)| <= d``, so bucketing length into cells of
-    ``cell`` chars and probing only cells c-1..c+1 (each side-B name
+    Two blocking keys, both implied by
+    ``levenshtein <= _FUZZY_MAX_EDIT``: the head noun, AND a length
+    band — edit distance d means ``|len(a) - len(b)| <= d``, so
+    bucketing length into cells of ``_FUZZY_CELL`` chars and probing
+    only cells c-1..c+1 (each side-B name
     lives in exactly ONE cell, so the 3-cell explode on side A can
     never duplicate a pair) keeps every true pair while capping a
     skewed block: a high-frequency noun ("inc", "llc" on a real
     entity corpus) no longer forms one O(block^2) monolith — per-cell
     work is O(names-per-(noun,cell) ^ 2), quadratic only in names that
     genuinely collide on BOTH keys (same doctrine as the 2D grid
-    join). Requires ``cell > max_edit`` so +/-1 cells cover the band."""
-    if cell <= max_edit:
-        raise ValueError(f"cell ({cell}) must exceed max_edit ({max_edit})")
+    join)."""
     base = names.withColumn("_len", F.length("p_name")).withColumn(
-        "_cell", F.expr(f"length(p_name) div {cell}")
+        "_cell", F.expr(f"length(p_name) div {_FUZZY_CELL}")
     )
     a = base.select(
         F.col("p_name").alias("name_a"),
@@ -782,7 +785,7 @@ def fuzzy_candidate_pairs(
         (F.col("_na") == F.col("_nb"))
         & (F.col("_probe") == F.col("_cb"))
         & (F.col("name_a") < F.col("name_b")),
-    ).filter(F.abs(F.col("_la") - F.col("_lb")) <= max_edit)
+    ).filter(F.abs(F.col("_la") - F.col("_lb")) <= _FUZZY_MAX_EDIT)
 
 
 
@@ -826,8 +829,8 @@ def fuzzy_join_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("noun", F.element_at(F.split("p_name", " "), -1))
     )
     return (
-        fuzzy_candidate_pairs(names, max_edit=3)
-        .filter(F.levenshtein("name_a", "name_b") <= 3)
+        fuzzy_candidate_pairs(names)
+        .filter(F.levenshtein("name_a", "name_b") <= _FUZZY_MAX_EDIT)
         .select(
             "name_a",
             "name_b",

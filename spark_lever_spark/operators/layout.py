@@ -22,10 +22,11 @@ from spark_lever_spark.catalog import load_table
 from spark_lever_spark.registry import register
 
 
-def zorder_expr(x_expr: str, y_expr: str, bits: int = 16) -> str:
-    """SQL expression interleaving the low ``bits`` of two integer
+def zorder_expr(x_expr: str, y_expr: str) -> str:
+    """SQL expression interleaving the low 16 bits of two integer
     expressions (Morton order). Operands are masked and cast to BIGINT
-    so shifts up to 2*bits-1 never overflow 32-bit ints."""
+    so shifts up to 31 never overflow 32-bit ints."""
+    bits = 16
     mask = (1 << bits) - 1
     x = f"(CAST({x_expr} AS BIGINT) & {mask})"
     y = f"(CAST({y_expr} AS BIGINT) & {mask})"
@@ -36,7 +37,7 @@ def zorder_expr(x_expr: str, y_expr: str, bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-_Z_EVENTS = zorder_expr("user_id", "dayofyear(ts)", bits=16)
+_Z_EVENTS = zorder_expr("user_id", "dayofyear(ts)")
 
 
 @register(

@@ -615,13 +615,11 @@ def map_in_pandas_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def pipe_partitions(
-    df: DataFrame, command: list[str], input_col: str, output_col: str = "value"
-) -> DataFrame:
+def pipe_partitions(df: DataFrame, command: list[str], input_col: str) -> DataFrame:
     """RDD.pipe parity (reference core/src/main/scala/.../RDD.scala:
     596-623): fork one external process per partition, stream the
     partition's values to its stdin as lines, and emit its stdout lines
-    as the output rows — the classic escape hatch for legacy CLI
+    as the output rows (one string column, ``value``) — the classic escape hatch for legacy CLI
     transforms (tokenizers, scorers) in a distributed scan.
 
     Shape notes for scale: the subprocess is per-PARTITION (fork cost
@@ -657,16 +655,16 @@ def pipe_partitions(
         for line in proc.stdout:
             chunk.append(line.rstrip("\n"))
             if len(chunk) >= 10_000:
-                yield pd.DataFrame({output_col: chunk})
+                yield pd.DataFrame({"value": chunk})
                 chunk = []
         if chunk:
-            yield pd.DataFrame({output_col: chunk})
+            yield pd.DataFrame({"value": chunk})
         writer.join()
         rc = proc.wait()
         if rc != 0:
             raise RuntimeError(f"pipe command {command!r} exited with {rc}")
 
-    return df.select(input_col).mapInPandas(run, f"{output_col} string")
+    return df.select(input_col).mapInPandas(run, "value string")
 
 
 @register(

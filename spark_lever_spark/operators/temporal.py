@@ -58,24 +58,21 @@ def asof_join(
     by: list[str],
     left_on: str,
     right_on: str,
-    value_cols: list[str] | None = None,
-    allow_exact_matches: bool = True,
+    value_cols: list[str],
 ) -> DataFrame:
     """For each left row, attach the right row with the greatest
-    ``right_on`` <= ``left_on`` (< when ``allow_exact_matches=False``)
-    within the same ``by`` group; nulls when no such row (left-join
-    semantics, matching DuckDB ``ASOF LEFT JOIN``).
+    ``right_on`` <= ``left_on`` within the same ``by`` group; nulls
+    when no such row (left-join semantics, matching DuckDB
+    ``ASOF LEFT JOIN``).
 
-    ``value_cols`` are the right columns carried over (default: all
-    non-key, non-time columns; include ``right_on`` itself to get the
-    matched timestamp). The matched columns come atomically from ONE
-    right row via a struct, so a null value inside a right row never
-    bleeds an older row's value through ``ignorenulls``. Right rows
+    ``value_cols`` are the right columns carried over (include
+    ``right_on`` itself to get the matched timestamp). The matched
+    columns come atomically from ONE right row via a struct, so a null
+    value inside a right row never bleeds an older row's value through
+    ``ignorenulls``. Right rows
     must be unique per (by, right_on) for a deterministic result —
     the same precondition DuckDB's ASOF JOIN has.
     """
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (*by, right_on)]
     struct_fields = list(dict.fromkeys([right_on, *value_cols]))
     left_payload = [c for c in left.columns if c not in (*by, left_on)]
 
@@ -94,12 +91,11 @@ def asof_join(
         *left_payload,
         F.lit(None).cast(rtype).alias("__r"),
     )
-    # At equal timestamps the right row sorts before the left iff exact
-    # matches count (window frame is "rows up to current").
-    side_order = F.col("__side").asc() if allow_exact_matches else F.col("__side").desc()
+    # At equal timestamps the right row sorts first, so an exact match
+    # counts (the window frame is "rows up to current").
     w = (
         Window.partitionBy(*by)
-        .orderBy(F.col("__t").asc(), side_order)
+        .orderBy(F.col("__t").asc(), F.col("__side").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     matched = lrows.unionByName(rrows).withColumn(
@@ -121,13 +117,11 @@ def range_join_bucketed(
     hi: str,
     right_on: str,
     bucket_width: int,
-    lo_inclusive: bool = True,
-    hi_inclusive: bool = True,
 ) -> DataFrame:
     """Inner-join left rows to right rows with ``right_on`` inside
-    [lo, hi] (bounds configurable), accelerated by equi-joining on
-    fixed-width buckets of the time axis (``bucket_width`` in the
-    units of ``cast(col as double)`` — seconds for timestamps).
+    [lo, hi), accelerated by equi-joining on fixed-width buckets of the
+    time axis (``bucket_width`` in the units of ``cast(col as double)``
+    — seconds for timestamps).
 
     Each right row lands in exactly one bucket, each left interval
     explodes onto the buckets it overlaps, so every qualifying pair
@@ -159,9 +153,8 @@ def range_join_bucketed(
     rb = right.withColumn(
         "__bucket", F.floor(_axis(right, right_on) / bucket_width)
     )
-    lo_ok = F.col(right_on) >= F.col(lo) if lo_inclusive else F.col(right_on) > F.col(lo)
-    hi_ok = F.col(right_on) <= F.col(hi) if hi_inclusive else F.col(right_on) < F.col(hi)
-    return lb.join(rb, [*by, "__bucket"]).filter(lo_ok & hi_ok).drop("__bucket")
+    in_range = (F.col(right_on) >= F.col(lo)) & (F.col(right_on) < F.col(hi))
+    return lb.join(rb, [*by, "__bucket"]).filter(in_range).drop("__bucket")
 
 
 @register(
@@ -248,8 +241,6 @@ def range_join_views_before_purchase(spark: SparkSession, sf_dir: str) -> DataFr
         hi="hi",
         right_on="view_ts",
         bucket_width=3600,
-        lo_inclusive=True,
-        hi_inclusive=False,
     )
     counts = pairs.groupBy("purchase_id").agg(
         F.count("*").alias("n_views_24h")
@@ -271,11 +262,9 @@ def resample_ffill(
     by: list[str],
     ts_col: str,
     value_cols: list[str],
-    step: str = "INTERVAL 1 HOUR",
-    unit: str = "hour",
 ) -> DataFrame:
-    """Per-key fixed-step resampling with forward fill: build each
-    key's grid from its own [trunc(min ts), trunc(max ts)] span via
+    """Per-key hourly resampling with forward fill: build each key's
+    grid from its own [trunc(min ts), trunc(max ts)] hour span via
     ``sequence`` + explode (no driver loop, no cross join against a
     global calendar), then as-of join the original rows onto the grid.
     Two hash shuffles on the key total — the bounds aggregation and the
@@ -283,13 +272,13 @@ def resample_ffill(
     points before a key's first event carry nulls (nothing to fill
     from)."""
     bounds = df.groupBy(*by).agg(
-        F.date_trunc(unit, F.min(ts_col)).alias("__h0"),
-        F.date_trunc(unit, F.max(ts_col)).alias("__h1"),
+        F.date_trunc("hour", F.min(ts_col)).alias("__h0"),
+        F.date_trunc("hour", F.max(ts_col)).alias("__h1"),
     )
     grid = bounds.select(
         *by,
         F.explode(
-            F.sequence("__h0", "__h1", F.expr(step))
+            F.sequence("__h0", "__h1", F.expr("INTERVAL 1 HOUR"))
         ).alias("grid_ts"),
     )
     return asof_join(
@@ -1301,11 +1290,9 @@ def asof_nearest_event_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("purchase_id")
 
 
-def fifo_match(
-    buys: DataFrame, sells: DataFrame, key: str = "user_id"
-) -> DataFrame:
+def fifo_match(buys: DataFrame, sells: DataFrame) -> DataFrame:
     """Distributed FIFO matching core: ``buys``/``sells`` carry
-    (key, id, ts, qty) with qty > 0; returns one row per
+    (user_id, id, ts, qty) with qty > 0; returns one row per
     (buy_id, sell_id) consumption with its exact matched quantity.
 
     Cumulative quantities turn every lot and sell into a half-open
@@ -1332,18 +1319,18 @@ def fifo_match(
 
     def legs(df: DataFrame, id_alias: str):
         return df.select(
-            key,
+            "user_id",
             F.col("id").alias(id_alias),
             "ts",
             "qty",
         ).select(
-            key,
+            "user_id",
             id_alias,
             (F.sum("qty").over(
-                Window.partitionBy(key).orderBy("ts", id_alias)
+                Window.partitionBy("user_id").orderBy("ts", id_alias)
             ) - F.col("qty")).alias("lo"),
             F.sum("qty").over(
-                Window.partitionBy(key).orderBy("ts", id_alias)
+                Window.partitionBy("user_id").orderBy("ts", id_alias)
             ).alias("hi"),
         )
 
@@ -1351,23 +1338,23 @@ def fifo_match(
     s2 = (
         legs(sells, "sell_id")
         .withColumnsRenamed({"lo": "s_lo", "hi": "s_hi"})
-        .withColumnRenamed(key, "_s_key")
+        .withColumnRenamed("user_id", "_s_key")
     )
     # per-key grid stats: matched region _m = min(total bought, total
     # sold); cell width _c = average interval length over both sides
     # (>= 1). All long arithmetic, `div` not float floor (exact for
     # the full int64 range).
     stats = (
-        b.groupBy(key)
+        b.groupBy("user_id")
         .agg(F.max("b_hi").alias("_tb"), F.count("*").alias("_nb"))
         .join(
             s2.groupBy("_s_key").agg(
                 F.max("s_hi").alias("_ts"), F.count("*").alias("_ns")
             ),
-            F.col("_s_key") == F.col(key),
+            F.col("_s_key") == F.col("user_id"),
         )
         .select(
-            key,
+            "user_id",
             F.least("_tb", "_ts").alias("_m"),
             F.greatest(
                 F.lit(1).cast("long"),
@@ -1377,8 +1364,8 @@ def fifo_match(
     )
 
     def gridded(df: DataFrame, join_key: str, lo: str, hi: str) -> DataFrame:
-        st = stats if join_key == key else stats.withColumnRenamed(
-            key, join_key
+        st = stats if join_key == "user_id" else stats.withColumnRenamed(
+            "user_id", join_key
         )
         return (
             df.join(st, join_key)
@@ -1397,12 +1384,12 @@ def fifo_match(
             .drop("_hic", "_m")
         )
 
-    bg = gridded(b, key, "b_lo", "b_hi")
+    bg = gridded(b, "user_id", "b_lo", "b_hi")
     sg = gridded(s2, "_s_key", "s_lo", "s_hi").drop("_c")
     return (
         bg.join(
             sg,
-            (F.col("_s_key") == F.col(key))
+            (F.col("_s_key") == F.col("user_id"))
             & (sg["_cell"] == bg["_cell"])
             & (F.col("s_lo") < F.col("b_hi"))
             & (F.col("b_lo") < F.col("s_hi"))
@@ -1411,7 +1398,7 @@ def fifo_match(
             & (bg["_cell"] == F.expr("greatest(b_lo, s_lo) div _c")),
         )
         .select(
-            key,
+            "user_id",
             "buy_id",
             "sell_id",
             (F.least("b_hi", "s_hi") - F.greatest("b_lo", "s_lo")).alias(

@@ -107,9 +107,3 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return spark
-
-
-def stop_session() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -40,8 +40,8 @@ def tumbling_window_agg(
     df: DataFrame,
     ts_col: str,
     window_duration: str,
-    keys: Sequence[str] = (),
-    aggs: Sequence[Column] = (),
+    keys: Sequence[str],
+    aggs: Sequence[Column],
     watermark: str | None = None,
 ) -> DataFrame:
     """DStream.window(winDur) with slide == winDur (DStream.scala:640):
@@ -50,8 +50,7 @@ def tumbling_window_agg(
     if watermark:
         df = df.withWatermark(ts_col, watermark)
     group = [F.window(F.col(ts_col), window_duration), *[F.col(k) for k in keys]]
-    agg_cols = list(aggs) or [F.count("*").alias("count")]
-    return df.groupBy(*group).agg(*agg_cols)
+    return df.groupBy(*group).agg(*aggs)
 
 
 def sliding_window_agg(
@@ -59,8 +58,8 @@ def sliding_window_agg(
     ts_col: str,
     window_duration: str,
     slide_duration: str,
-    keys: Sequence[str] = (),
-    aggs: Sequence[Column] = (),
+    keys: Sequence[str],
+    aggs: Sequence[Column],
 ) -> DataFrame:
     """DStream.window(winDur, slideDur) (DStream.scala:651) /
     reduceByKeyAndWindow (PairDStreamFunctions.scala:198-347). The
@@ -72,5 +71,4 @@ def sliding_window_agg(
         F.window(F.col(ts_col), window_duration, slide_duration),
         *[F.col(k) for k in keys],
     ]
-    agg_cols = list(aggs) or [F.count("*").alias("count")]
-    return df.groupBy(*group).agg(*agg_cols)
+    return df.groupBy(*group).agg(*aggs)

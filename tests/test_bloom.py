@@ -65,9 +65,7 @@ def test_bloom_never_false_negative_property(spark):
         pdf = spark.createDataFrame([(p,) for p in probes], "k long")
         survivors = {
             r.k
-            for r in bloom_prune(
-                pdf, "k", bloom_bitmap(kdf, "k", nbits=1 << 12), nbits=1 << 12
-            ).collect()
+            for r in bloom_prune(pdf, "k", bloom_bitmap(kdf, "k")).collect()
         }
         assert (set(probes) & set(keys)) <= survivors
 

@@ -54,8 +54,8 @@ def test_pipe_partitions_roundtrip(spark):
     from spark_lever_spark.operators.relational import pipe_partitions
 
     df = spark.range(0, 5000).selectExpr("CAST(id AS STRING) AS s").repartition(4)
-    out = pipe_partitions(df, ["cat"], input_col="s", output_col="v")
-    got = sorted(int(r.v) for r in out.collect())
+    out = pipe_partitions(df, ["cat"], input_col="s")
+    got = sorted(int(r.value) for r in out.collect())
     assert got == list(range(5000))
 
 
@@ -77,24 +77,19 @@ def test_pipe_partitions_failure_is_loud(spark):
         out.collect()
 
 
-def test_udtf_word_offsets_null_text_yields_no_rows(spark, sf_correct):
+def test_udtf_word_offsets_null_text_yields_no_rows(spark, tmp_path):
     """NULL text must produce ZERO output rows — matching the DuckDB
     oracle's string_split(NULL) → generate_series(1, NULL) → empty —
     not one (1, '', 0) row (ADVICE r5: latent hash mismatch if the
     driver ever regenerates documents with a NULL text)."""
+    import pandas as pd
+
     from spark_lever_spark.functions.udfs import udtf_word_offsets
 
-    udtf_word_offsets(spark, sf_correct)  # registers word_offsets
-    spark.createDataFrame(
-        [(1, None), (2, "a b")], "doc_id int, text string"
-    ).createOrReplaceTempView("udtf_null_text_v")
-    rows = spark.sql(
-        """
-        SELECT d.doc_id, t.pos, t.word, t.start_off
-        FROM udtf_null_text_v d, LATERAL word_offsets(d.text) t
-        ORDER BY d.doc_id, t.pos
-        """
-    ).collect()
+    pd.DataFrame({"doc_id": [1, 2], "text": [None, "a b"]}).to_parquet(
+        tmp_path / "documents.parquet", index=False
+    )
+    rows = udtf_word_offsets(spark, str(tmp_path)).collect()
     assert [(r.doc_id, r.pos, r.word, r.start_off) for r in rows] == [
         (2, 1, "a", 0),
         (2, 2, "b", 2),

@@ -32,9 +32,9 @@ def _union_find_components(n_nodes, edges):
     return {x: find(x) for x in sorted(seen)}
 
 
-def _cc_spark(spark, edges, **kw):
+def _cc_spark(spark, edges):
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = connected_components(df, **kw).collect()
+    got = connected_components(df).collect()
     return {r.node: r.component for r in got}
 
 
@@ -48,11 +48,15 @@ def test_cc_matches_union_find_on_random_graph(spark):
     assert _cc_spark(spark, edges) == _union_find_components(n, edges)
 
 
-def test_cc_path_graph_converges_logarithmically(spark):
-    # a single 64-node path: diameter 63, but star-contraction must
-    # finish in far fewer than diameter rounds (max_iter=10 ~ O(log n))
+def test_cc_path_graph_converges_logarithmically(spark, monkeypatch):
+    # a single 64-node path: diameter 63, but the star loop must finish
+    # in far fewer than diameter rounds (a budget of 10 ~ O(log n))
+    from spark_lever_spark.llm import graph
+
+    monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "_CC_MAX_ITER", 10)
     edges = [(i, i + 1) for i in range(63)]
-    got = _cc_spark(spark, edges, max_iter=10)
+    got = _cc_spark(spark, edges)
     assert got == {i: 0 for i in range(64)}
 
 
@@ -69,9 +73,10 @@ def test_cc_raises_when_iteration_budget_exhausted(spark, monkeypatch):
     from spark_lever_spark.llm import graph
 
     monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "_CC_MAX_ITER", 1)
     df = spark.createDataFrame([(i, i + 1) for i in range(40)], ["src", "dst"])
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(df, max_iter=1)
+        connected_components(df)
 
 
 def test_cc_star_loop_matches_local_kernel(spark, monkeypatch):
@@ -99,10 +104,14 @@ def test_cc_empty_edges(spark):
     assert connected_components(df).count() == 0
 
 
-def test_cc_converges_exactly_at_budget(spark):
+def test_cc_converges_exactly_at_budget(spark, monkeypatch):
     # a single edge's star forms in round 1; detection costs one more
     # comparison pass, which must not count against the budget
-    got = _cc_spark(spark, [(0, 1)], max_iter=1)
+    from spark_lever_spark.llm import graph
+
+    monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "_CC_MAX_ITER", 1)
+    got = _cc_spark(spark, [(0, 1)])
     assert got == {0: 0, 1: 0}
 
 
@@ -120,6 +129,7 @@ def test_cc_contracted_path_matches_union_find(spark, monkeypatch):
 
     monkeypatch.setattr(graph, "_CONTRACT_MIN_EDGES", 0)
     monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "_CC_MAX_ITER", 10)
     rng = random.Random(43)
     n = 200
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(150)]
@@ -130,11 +140,11 @@ def test_cc_contracted_path_matches_union_find(spark, monkeypatch):
     assert _cc_spark(spark, edges2) == {3: 3, 5: 3, 9: 3, 11: 11, 20: 11}
     # a path graph: the contraction halves it, the star loop finishes
     edges3 = [(i, i + 1) for i in range(63)]
-    assert _cc_spark(spark, edges3, max_iter=10) == {i: 0 for i in range(64)}
+    assert _cc_spark(spark, edges3) == {i: 0 for i in range(64)}
     # contract-then-kernel: threshold between the contracted size and
     # the input size, so the contraction fires AND the kernel finishes
     monkeypatch.setattr(graph, "_LOCAL_GRAPH_MAX_EDGES", 40)
-    assert _cc_spark(spark, edges3, max_iter=10) == {i: 0 for i in range(64)}
+    assert _cc_spark(spark, edges3) == {i: 0 for i in range(64)}
     assert _cc_spark(spark, edges) == _union_find_components(n, edges)
 
 

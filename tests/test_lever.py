@@ -53,7 +53,7 @@ def test_quartile_classification_sets():
     runtimes = {f"h{i}": 1000.0 + i * 10 for i in range(6)}
     runtimes["slow"] = 2500.0
     runtimes["fast"] = 300.0
-    c = classify_quartiles(runtimes)
+    c = classify_quartiles(runtimes, 600.0)
     assert "slow" in c.helpee
     assert "fast" in c.helper
     # drift ratios follow the quartile definition
@@ -75,30 +75,36 @@ def test_quartile_margin_promotes_midband_to_helper():
 
 def test_rate_confirmation_flips_recovered_host():
     runtimes = {"s": 2000.0, "m1": 1000.0, "m2": 1010.0, "f": 500.0}
-    pot = classify_quartiles(runtimes)
+    pot = classify_quartiles(runtimes, 600.0)
     assert "s" in pot.helpee
     # s's input rate collapsed (Lever already cut its share) -> not a
     # confirmed straggler anymore; with r < 1/(a*b) it becomes a helper
     a, b = pot.a_median_to_helper, pot.b_helpee_to_median
     tiny = 0.5 / (a * b)
     final = confirm_with_rates(
-        pot, old_rates={"s": 100.0}, new_rates={"s": 100.0 * tiny}
+        pot,
+        old_rates={"s": 100.0},
+        new_rates={"s": 100.0 * tiny},
+        last_final_helper=set(),
     )
     assert "s" in final.helper and "s" not in final.helpee
 
 
 def test_rate_confirmation_keeps_true_straggler():
     runtimes = {"s": 2000.0, "m1": 1000.0, "m2": 1010.0, "f": 500.0}
-    pot = classify_quartiles(runtimes)
+    pot = classify_quartiles(runtimes, 600.0)
     final = confirm_with_rates(
-        pot, old_rates={"s": 100.0}, new_rates={"s": 100.0}
+        pot,
+        old_rates={"s": 100.0},
+        new_rates={"s": 100.0},
+        last_final_helper=set(),
     )
     assert "s" in final.helpee
 
 
 def test_last_round_helper_never_becomes_helpee():
     runtimes = {"s": 2000.0, "m1": 1000.0, "m2": 1010.0, "f": 500.0}
-    pot = classify_quartiles(runtimes)
+    pot = classify_quartiles(runtimes, 600.0)
     final = confirm_with_rates(
         pot,
         old_rates={"s": 100.0},

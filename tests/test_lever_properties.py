@@ -61,7 +61,7 @@ def test_partition_tokens_map_bucket_j_to_partition_j(P):
 @settings(max_examples=60, deadline=None)
 def test_classifier_partitions_all_hosts(hs, data):
     runtimes = {h: data.draw(pos) for h in hs}
-    c = classify_quartiles(runtimes)
+    c = classify_quartiles(runtimes, 600.0)
     assert c.helpee | c.median | c.helper == set(hs)
     # ordering guarantees only hold for a non-degenerate spread — the
     # balancer never classifies below its 300 ms trigger anyway

@@ -160,7 +160,7 @@ def _cand_pairs(spark, docs, bands: int) -> set[tuple[int, int]]:
 
     from spark_lever_spark.llm.dedup import minhash_bands
 
-    _, banded = minhash_bands(docs, k=32, bands=bands)
+    _, banded = minhash_bands(docs, bands=bands)
     a, bb = banded.alias("a"), banded.alias("b")
     return {
         (x.ia, x.ib)
@@ -188,9 +188,7 @@ def test_tuned_banding_cuts_candidates_at_equal_recall(spark, dense_corpus_dir):
     from spark_lever_spark.llm.dedup import tune_lsh_banding
 
     docs = load_table(spark, dense_corpus_dir, "documents")
-    b, r = tune_lsh_banding(
-        docs, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=160
-    )
+    b, r = tune_lsh_banding(docs)
     assert b * r == 32
     assert r > 4, (b, r)  # dense background -> more selective than 8x4
 
@@ -213,7 +211,7 @@ def test_tuned_banding_reduces_sf_corpus_candidates(spark, sf_dir):
     from spark_lever_spark.llm.dedup import tokens_distinct, tune_lsh_banding
 
     docs = load_table(spark, sf_dir, "documents")
-    b, r = tune_lsh_banding(docs, k=32, dup_threshold=0.95, min_recall=0.9)
+    b, r = tune_lsh_banding(docs)
     assert b * r == 32 and r > 4, (b, r)
 
     keyed = docs.select(
@@ -254,8 +252,8 @@ def test_minhash_bands_partitioning_invariant(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    sig1, band1 = minhash_bands(docs.coalesce(1), k=32, bands=4)
-    sig8, band8 = minhash_bands(docs.repartition(8), k=32, bands=4)
+    sig1, band1 = minhash_bands(docs.coalesce(1), bands=4)
+    sig8, band8 = minhash_bands(docs.repartition(8), bands=4)
     assert sig1.rdd.getNumPartitions() > 1  # repartition engaged
     a = sorted(
         (r.doc_id, tuple(r.sig)) for r in sig1.collect()
@@ -310,7 +308,7 @@ def test_minhash_bands_match_python_reference(spark, bands):
         5: "tab\tseparated\nand newline separated words",
     }
     docs = spark.createDataFrame(list(texts.items()), "doc_id bigint, text string")
-    sig, banded = minhash_bands(docs, k=32, bands=bands)
+    sig, banded = minhash_bands(docs, bands=bands)
     want = {d: _minhash_reference(t, 32, bands) for d, t in texts.items()}
     assert {r.doc_id: list(r.sig) for r in sig.collect()} == {
         d: s for d, (s, _) in want.items()
@@ -332,13 +330,13 @@ def test_minhash_bands_spreads_only_a_narrow_scan(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # one small file: it estimates one split, narrower than the session
-    sig_n, _ = minhash_bands(docs, k=16, bands=4)
+    sig_n, _ = minhash_bands(docs, bands=4)
     # at 1 KB per split the same listing estimates thousands of splits
     conf = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(conf)
     spark.conf.set(conf, "1k")
     try:
-        sig_w, _ = minhash_bands(docs, k=16, bands=4)
+        sig_w, _ = minhash_bands(docs, bands=4)
     finally:
         spark.conf.set(conf, old)
     assert exchange_count(sig_n) == 1

@@ -40,30 +40,6 @@ def test_packing_empty_partitions(spark):
     assert {r.doc_id for r in rows} == {1, 2, 3}
 
 
-def test_packing_max_partition_tokens_contract(spark):
-    # skewed corpus: 50k tokens total, all initially in ONE partition.
-    # with a 10k-token budget the packer must spread the load over >=5
-    # hash partitions before packing, and every invariant still holds.
-    docs = spark.range(0, 500).select(
-        F.col("id").alias("doc_id"), F.lit(100).alias("n_tokens")
-    ).coalesce(1)
-    packed = pack_documents(
-        docs, "doc_id", "n_tokens", capacity=1000, max_partition_tokens=10_000
-    )
-    rows = packed.collect()
-    assert sorted(r.doc_id for r in rows) == list(range(500))
-    by_bin = {}
-    for r in rows:
-        by_bin.setdefault(r.bin_id, []).append(r)
-    for b, members in by_bin.items():
-        fill = sum(m.n_tokens for m in members)
-        assert fill <= 1000, (b, fill)
-        assert all(m.bin_fill == fill for m in members)
-    # bin ids from >=5 distinct partitions (base = pid * 10_000_000)
-    pids = {r.bin_id // 10_000_000 for r in rows}
-    assert len(pids) >= 5, pids
-
-
 def test_packing_oversized_doc_gets_own_bin(spark):
     docs = spark.createDataFrame(
         [(1, 5000), (2, 10), (3, 20)], ["doc_id", "n_tokens"]

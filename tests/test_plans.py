@@ -362,7 +362,7 @@ def test_fuzzy_length_band_blocking_exact_and_skew_capped(spark):
         rows, "p_name string, n_parts long, noun string"
     )
     blocked = (
-        fuzzy_candidate_pairs(names, max_edit=3)
+        fuzzy_candidate_pairs(names)
         .filter(F.levenshtein("name_a", "name_b") <= 3)
         .select("name_a", "name_b")
     )
@@ -383,7 +383,7 @@ def test_fuzzy_length_band_blocking_exact_and_skew_capped(spark):
         [("x" * (i % 200) + f" v{i} corp", 1, "corp") for i in range(n)],
         "p_name string, n_parts long, noun string",
     )
-    cand = fuzzy_candidate_pairs(big, max_edit=3).count()
+    cand = fuzzy_candidate_pairs(big).count()
     assert 0 < cand < n * n // 10, cand
 
 

@@ -255,14 +255,19 @@ def _temp_views(spark) -> set[str]:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
+def _user_functions(spark) -> set[str]:
+    return {r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect()}
+
+
 @contextmanager
 def _leaves_nothing(spark, name):
     """Fail if the block leaves a temp-directory entry, an active
-    streaming query, a temp view or a pin its frame does not read
-    behind. The block passes the frame it built through the callable it
-    is given."""
+    streaming query, a temp view, a user function or a pin its frame
+    does not read behind. The block passes the frame it built through
+    the callable it is given."""
     entries = _temp_entries()
     views = _temp_views(spark)
+    functions = _user_functions(spark)
     pins = PinAudit(spark)
     frames = []
 
@@ -278,6 +283,8 @@ def _leaves_nothing(spark, name):
     assert not spark.streams.active, f"{name} left a streaming query running"
     left = _temp_views(spark) - views
     assert not left, f"{name} left temp views {sorted(left)}"
+    left = _user_functions(spark) - functions
+    assert not left, f"{name} left user functions {sorted(left)}"
 
 
 def _check_plan(name, df):

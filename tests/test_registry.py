@@ -9,7 +9,6 @@ from pathlib import Path
 
 import pytest
 
-import spark_lever_spark
 from spark_lever_spark import registry
 
 
@@ -85,14 +84,6 @@ def test_pins_only_through_catalog():
     assert not hits, hits
 
 
-# Definitions kept although no root reaches them, each for its reason.
-# A key is "<path under spark_lever_spark/>:<name>", a directory
-# ("<dir>/") or a bare name (any module).
-REACH_ALLOWLIST = {
-    "__all__": "export lists are read by name strings, not by references",
-}
-
-
 def _names_used(nodes) -> set[str]:
     """Every identifier the code loads or looks up as an attribute; an
     import alone names nothing."""
@@ -117,9 +108,9 @@ def test_every_package_definition_is_reached():
     """No top-level function, class or constant in spark_lever_spark/
     exists that only tests reach. The roots are the @register queries,
     perfbench/ (its tests aside), scripts/, __spark_entry__.py and the
-    package __init__ with its __all__. Reachability is by name over the
-    AST: a definition is reached when reached code names it, and its
-    body then reaches further. Module-level statements other than
+    package __init__. Reachability is by name over the AST: a
+    definition is reached when reached code names it, and its body
+    then reaches further. Module-level statements other than
     definitions run on import and count as roots."""
     repo = Path(__file__).resolve().parents[1]
     pkg = repo / "spark_lever_spark"
@@ -128,9 +119,7 @@ def test_every_package_definition_is_reached():
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg).as_posix()
         tree = ast.parse(path.read_text())
-        whole_root = rel == "__init__.py" or any(
-            rel.startswith(k) for k in REACH_ALLOWLIST if k.endswith("/")
-        )
+        whole_root = rel == "__init__.py"
         for stmt in tree.body:
             if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
                 named = [stmt.name]
@@ -148,19 +137,16 @@ def test_every_package_definition_is_reached():
                 roots.append(stmt)
                 continue
             for name in named:
-                key = f"{rel}:{name}"
-                if whole_root or rooted or key in REACH_ALLOWLIST or (
-                    name in REACH_ALLOWLIST
-                ):
+                if whole_root or rooted:
                     roots.append(stmt)
                 else:
-                    defs[key] = (name, stmt)
+                    defs[f"{rel}:{name}"] = (name, stmt)
     for d in ("perfbench", "scripts"):
         for path in sorted((repo / d).rglob("*.py")):
             if "tests" not in path.relative_to(repo / d).parts:
                 roots.append(ast.parse(path.read_text()))
     roots.append(ast.parse((repo / "__spark_entry__.py").read_text()))
-    frontier = _names_used(roots) | set(spark_lever_spark.__all__)
+    frontier = _names_used(roots)
     by_name: dict[str, list[str]] = {}
     for key, (name, _) in defs.items():
         by_name.setdefault(name, []).append(key)
@@ -176,3 +162,130 @@ def test_every_package_definition_is_reached():
             frontier |= _names_used([defs[key][1]])
     unreached = sorted(set(defs) - reached)
     assert not unreached, f"only tests reach these definitions: {unreached}"
+
+
+# Defaulted parameters kept although the code outside the tests sets
+# them only one way, each for its reason. A key is
+# "<path under spark_lever_spark/>:<function>.<parameter>"; a method's
+# function is "<Class>.<method>".
+OPTION_EXEMPT = {
+    "session.py:get_session.app_name": "a deployment setting",
+    "session.py:get_session.master": "a deployment setting",
+    "session.py:get_session.shuffle_partitions": "a deployment setting",
+    "llm/multimodal.py:decode_media.decoder": (
+        "lets a test substitute a fake decoder for the image library"
+    ),
+    "streaming/core.py:file_stream.fmt": (
+        "its one caller is the benchmark, whose calls change only with it"
+    ),
+}
+
+_DEFAULT = object()
+_VARYING = object()
+
+
+def _defaulted_options(pkg: Path):
+    """Every defaulted parameter of a package function or method, keyed
+    by the name a call uses: (key, positional parameter names, {name:
+    default source text}). ``Class(...)`` calls ``__init__``, and a
+    method's positions skip ``self`` / ``cls``."""
+    by_name: dict[str, list] = {}
+
+    def add(rel, fn, call_name, qual, skip):
+        a = fn.args
+        params = a.posonlyargs + a.args
+        defaults = {
+            p.arg: ast.unparse(d)
+            for p, d in zip(params[len(params) - len(a.defaults):], a.defaults)
+        } | {
+            p.arg: ast.unparse(d)
+            for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        }
+        if defaults:
+            by_name.setdefault(call_name, []).append(
+                (f"{rel}:{qual}", [p.arg for p in params[skip:]], defaults)
+            )
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for stmt in ast.parse(path.read_text()).body:
+            if isinstance(stmt, ast.FunctionDef):
+                add(rel, stmt, stmt.name, stmt.name, 0)
+            elif isinstance(stmt, ast.ClassDef):
+                for m in stmt.body:
+                    if isinstance(m, ast.FunctionDef):
+                        static = any(
+                            getattr(d, "id", None) == "staticmethod"
+                            for d in m.decorator_list
+                        )
+                        add(
+                            rel, m,
+                            stmt.name if m.name == "__init__" else m.name,
+                            f"{stmt.name}.{m.name}", 0 if static else 1,
+                        )
+    return by_name
+
+
+def _called_name(node) -> str | None:
+    return getattr(node, "id", None) or getattr(node, "attr", None)
+
+
+def test_every_option_is_set_two_ways():
+    """An option exists only where two callers set it differently: every
+    defaulted parameter of a package function or method gets at least
+    two distinct values from the call sites outside the tests (the
+    package, perfbench/ and scripts/ with their tests aside, and
+    __spark_entry__.py), and at least one of them relies on the
+    default. Calls match definitions by name over the AST;
+    ``functools.partial(f, ...)`` counts as a call of ``f``; an argument
+    whose source text equals the default counts as the default, and a
+    call with ``*args`` or ``**kwargs`` counts as setting it both ways."""
+    repo = Path(__file__).resolve().parents[1]
+    options = _defaulted_options(repo / "spark_lever_spark")
+    sources = sorted((repo / "spark_lever_spark").rglob("*.py"))
+    for d in ("perfbench", "scripts"):
+        sources += [
+            p for p in sorted((repo / d).rglob("*.py"))
+            if "tests" not in p.relative_to(repo / d).parts
+        ]
+    sources.append(repo / "__spark_entry__.py")
+    values: dict[str, set] = {
+        f"{key}.{param}": set()
+        for entries in options.values()
+        for key, _, defaults in entries
+        for param in defaults
+    }
+    assert set(OPTION_EXEMPT) <= set(values), "exempted options no longer exist"
+    for path in sources:
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            name, args = _called_name(call.func), call.args
+            if name == "partial" and args:
+                name, args = _called_name(args[0]), args[1:]
+            starred = any(isinstance(a, ast.Starred) for a in args) or any(
+                k.arg is None for k in call.keywords
+            )
+            keywords = {k.arg: k.value for k in call.keywords}
+            for key, pos, defaults in options.get(name, ()):
+                for param, default in defaults.items():
+                    seen = values[f"{key}.{param}"]
+                    i = pos.index(param) if param in pos else len(args)
+                    arg = args[i] if i < len(args) else keywords.get(param)
+                    if starred:
+                        seen.add(_VARYING)
+                    elif arg is None or ast.unparse(arg) == default:
+                        seen.add(_DEFAULT)
+                    else:
+                        seen.add(ast.unparse(arg))
+    single = sorted(
+        option
+        for option, seen in values.items()
+        if option not in OPTION_EXEMPT
+        and _VARYING not in seen
+        and (len(seen) < 2 or _DEFAULT not in seen)
+    )
+    assert not single, (
+        f"{len(single)} options are set only one way outside the tests "
+        f"(fold each into its function, or exempt it with a reason): {single}"
+    )

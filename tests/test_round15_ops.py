@@ -269,10 +269,8 @@ def test_dedup_threshold_sweep_monotone(spark):
     from spark_lever_spark.catalog import load_table
 
     docs_df = load_table(spark, SF, "documents")
-    b, _r = tune_lsh_banding(
-        docs_df, k=32, dup_threshold=0.95, min_recall=0.9, max_docs=150
-    )
-    base = lsh_candidate_pairs(docs_df, k=32, bands=b).filter(
+    b, _r = tune_lsh_banding(docs_df)
+    base = lsh_candidate_pairs(docs_df, bands=b).filter(
         "est_jaccard >= 0.5"
     )
     assert pairs[0] == base.count()

@@ -95,26 +95,27 @@ def test_max_records_per_file(spark, tmp_path):
 
 
 def test_sql_entry_point(spark, sf_dir):
-    """engine.sql() passthrough: the reference SQL dialect's core
-    clauses in one statement (SELECT/JOIN/WHERE/GROUP BY/HAVING/
-    ORDER BY/LIMIT/CASE/BETWEEN/IN/LIKE)."""
-    from spark_lever_spark.catalog import sql
+    """SQL over catalog tables: the reference SQL dialect's core clauses
+    in one statement (SELECT/JOIN/WHERE/GROUP BY/HAVING/ORDER BY/LIMIT/
+    CASE/BETWEEN/IN/LIKE), with the tables passed to ``spark.sql`` as
+    DataFrame arguments, so no temp view outlives the call."""
+    from spark_lever_spark.catalog import load_table
 
-    out = sql(
-        spark,
-        os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"),
+    out = spark.sql(
         """
         SELECT n_name,
                COUNT(*) AS suppliers,
                SUM(CASE WHEN s_acctbal BETWEEN 0 AND 5000 THEN 1 ELSE 0 END)
                  AS mid_bal
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        FROM {supplier} JOIN {nation} ON s_nationkey = n_nationkey
         WHERE n_name LIKE 'NATION%' AND n_nationkey IN (0, 1, 2, 3, 4)
         GROUP BY n_name
         HAVING COUNT(*) >= 0
         ORDER BY n_name
         LIMIT 10
         """,
+        supplier=load_table(spark, sf_dir, "supplier"),
+        nation=load_table(spark, sf_dir, "nation"),
     )
     rows = out.collect()
     assert len(rows) <= 10

@@ -175,7 +175,7 @@ def test_tumbling_window_counts(spark):
         batches,
         SCHEMA_TS,
         transform=lambda df: tumbling_window_agg(
-            df, "ts", "10 seconds", keys=["k"]
+            df, "ts", "10 seconds", keys=["k"], aggs=[F.count("*").alias("count")]
         ).select(
             F.col("window.start").cast("string").alias("ws"),
             "k",
@@ -198,7 +198,12 @@ def test_sliding_window_counts(spark):
         batches,
         SCHEMA_TS,
         transform=lambda df: sliding_window_agg(
-            df, "ts", "10 seconds", "5 seconds", keys=["k"]
+            df,
+            "ts",
+            "10 seconds",
+            "5 seconds",
+            keys=["k"],
+            aggs=[F.count("*").alias("count")],
         ).select(F.col("window.start").cast("string").alias("ws"), "k", "count"),
         output_mode="update",
     )

@@ -23,7 +23,7 @@ def _random_frames(seed):
     return left, right
 
 
-def _pandas_asof(left, right, allow_exact):
+def _pandas_asof(left, right):
     lpd = pd.DataFrame(left, columns=["k", "t", "lid"]).sort_values("t", kind="stable")
     rpd = pd.DataFrame(right, columns=["k", "rt", "rid"]).sort_values("rt", kind="stable")
     merged = pd.merge_asof(
@@ -33,7 +33,6 @@ def _pandas_asof(left, right, allow_exact):
         right_on="rt",
         by="k",
         direction="backward",
-        allow_exact_matches=allow_exact,
     )
     return {
         int(r.lid): (None if pd.isna(r.rid) else int(r.rid))
@@ -45,18 +44,10 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     left, right = _random_frames(7)
     ldf = spark.createDataFrame(left, ["k", "t", "lid"])
     rdf = spark.createDataFrame(right, ["k", "rt", "rid"])
-    for allow_exact in (True, False):
-        got = asof_join(
-            ldf,
-            rdf,
-            by=["k"],
-            left_on="t",
-            right_on="rt",
-            value_cols=["rt", "rid"],
-            allow_exact_matches=allow_exact,
-        ).collect()
-        want = _pandas_asof(left, right, allow_exact)
-        assert {r.lid: r.rid for r in got} == want, f"allow_exact={allow_exact}"
+    got = asof_join(
+        ldf, rdf, by=["k"], left_on="t", right_on="rt", value_cols=["rt", "rid"]
+    ).collect()
+    assert {r.lid: r.rid for r in got} == _pandas_asof(left, right)
 
 
 def test_asof_join_null_right_value_does_not_bleed_older_row(spark):
@@ -87,7 +78,7 @@ def test_range_join_bucketed_matches_naive(spark):
         (r.lid, r.rid)
         for r in range_join_bucketed(
             ldf, rdf, by=["k"], lo="lo", hi="hi", right_on="rt",
-            bucket_width=int(width), lo_inclusive=True, hi_inclusive=False,
+            bucket_width=int(width),
         ).collect()
     }
     want = {
